@@ -12,7 +12,7 @@ ANSI (SURVEY.md §4.3):
 This is a pure query-rewrite/function-choice layer — no Catalyst rule.
 `apply_session_mode` flips ANSI off for the closest whole-session match
 (permissive casts, NULL on div-by-zero); `rewrite` handles the
-keyword-level substitutions for SQL text, skipping string literals so
+keyword-level substitutions for SQL text, skipping quoted tokens so
 data inside quotes is never touched.
 
 Function-call translations (paren-aware, nested args supported):
@@ -72,106 +72,90 @@ _GLOB_RE = re.compile(r"(?i)(?<![a-z0-9_])glob(?![a-z0-9_])\s*$")
 _IIF_RE = re.compile(r"(?i)(?<![a-z0-9_])iif\s*\(")
 _IFNULL_RE = re.compile(r"(?i)(?<![a-z0-9_])ifnull\s*\(")
 
-# Split into alternating [code, literal, code, literal, ...] segments.
-# A SQLite string literal is '...' with '' as the escaped quote.
-_LITERAL_RE = re.compile(r"('(?:[^']|'')*')")
-
 _STRFTIME_MAP = (("%Y", "yyyy"), ("%m", "MM"), ("%d", "dd"),
                  ("%H", "HH"), ("%M", "mm"), ("%S", "ss"), ("%j", "DDD"),
                  ("%e", "d"), ("%F", "yyyy-MM-dd"), ("%T", "HH:mm:ss"),
                  ("%R", "HH:mm"))
 
 # ---------------------------------------------------------------------------
-# paren-aware call scanning
+# SQL text scanning: quoted tokens and paren depth
+
+# One quoted token, by Spark's lexer (Spark executes the text): '…', "…"
+# and `…`; a doubled quote character continues the token; inside '…' and
+# "…" a backslash escapes the next character; an unterminated token runs
+# to the end of the text.
+_QUOTED_RE = re.compile(r"""('(?:[^'\\]|\\.?|'')*(?:'|\Z)"""
+                        r"""|"(?:[^"\\]|\\.?|"")*(?:"|\Z)"""
+                        r"""|`(?:[^`]|``)*(?:`|\Z))""", re.S)
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    return [m.span() for m in _LITERAL_RE.finditer(sql)]
+def split_quoted(sql: str) -> list[str]:
+    """Split SQL text into [code, quoted, code, …, code] parts: even
+    indices are outside quoted tokens, odd indices are whole quoted
+    tokens, and ``"".join(parts) == sql``. The one place that decides
+    which characters are inside a quoted token."""
+    return _QUOTED_RE.split(sql)
 
 
-def _in_literal(spans: list[tuple[int, int]], pos: int) -> bool:
-    return any(a <= pos < b for a, b in spans)
+def paren_depths(sql: str) -> dict[int, int]:
+    """Paren depth of every position outside quoted tokens (positions
+    inside them are absent). A paren sits at the depth of the text
+    around it, so a '(' and its matching ')' share a depth."""
+    depths, pos, depth = {}, 0, 0
+    for k, part in enumerate(split_quoted(sql)):
+        if k % 2 == 0:
+            for i, ch in enumerate(part, pos):
+                if ch == ")":
+                    depth -= 1
+                depths[i] = depth
+                if ch == "(":
+                    depth += 1
+        pos += len(part)
+    return depths
 
 
-def _matching_paren(sql: str, open_pos: int) -> int:
-    """Index of the ')' closing the '(' at open_pos, honoring nested
-    parens and string literals; -1 if unbalanced."""
-    depth, i, n = 0, open_pos, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":                      # skip literal ('' = escaped quote)
-            i += 1
-            while i < n:
-                if sql[i] == "'":
-                    if i + 1 < n and sql[i + 1] == "'":
-                        i += 1
-                    else:
-                        break
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
+def find_top_level(sql: str, pattern: re.Pattern) -> int:
+    """Start of the first match of `pattern` at paren depth 0 outside
+    quoted tokens, or -1."""
+    depths = paren_depths(sql)
+    return next((m.start() for m in pattern.finditer(sql)
+                 if depths.get(m.start()) == 0), -1)
 
 
-def _split_args(text: str) -> list[str]:
-    """Split a call's argument text on top-level commas."""
-    parts, depth, i, start, n = [], 0, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        i += 1
-                    else:
-                        break
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts]
+def split_top_level(sql: str, sep: str = ",") -> list[str]:
+    """Split on `sep` at paren depth 0 outside quoted tokens; parts are
+    stripped."""
+    depths = paren_depths(sql)
+    cuts = [i for i, d in depths.items() if d == 0 and sql[i] == sep]
+    return [sql[a + 1:b].strip()
+            for a, b in zip([-1] + cuts, cuts + [len(sql)])]
 
 
 def _rewrite_calls(sql: str, fname: str,
                    xlat: Callable[[list[str]], str | None]) -> str:
-    """Replace every top-level-visible call `fname(args…)` outside string
-    literals with xlat(args); xlat returning None leaves that call
-    untouched (loud-not-wrong for untranslatable forms). Calls are
-    processed right-to-left so earlier spans stay valid; nested calls of
-    the same function are handled by the recursive rescan below."""
+    """Replace every call `fname(args…)` outside quoted tokens with
+    xlat(args); xlat returning None leaves that call untouched
+    (loud-not-wrong for untranslatable forms). Calls are processed
+    right-to-left, one per rescan, so nested calls of the same function
+    are translated too."""
     pat = re.compile(rf"(?i)(?<![a-z0-9_]){re.escape(fname)}\s*\(")
     while True:
-        spans = _literal_spans(sql)
-        changed = False
+        depths = paren_depths(sql)
         for m in reversed(list(pat.finditer(sql))):
-            if _in_literal(spans, m.start()):
+            if m.start() not in depths:
                 continue
             open_pos = m.end() - 1
-            close = _matching_paren(sql, open_pos)
+            close = next((i for i in range(open_pos + 1, len(sql))
+                          if sql[i] == ")"
+                          and depths.get(i) == depths[open_pos]), -1)
             if close == -1:
                 continue
             inner = sql[open_pos + 1:close]
-            args = _split_args(inner) if inner.strip() else []
-            # translate inner same-name calls first (rare, but correct)
-            out = xlat(args)
-            if out is None:
-                continue
-            sql = sql[:m.start()] + out + sql[close + 1:]
-            changed = True
-            break                          # re-scan: spans moved
-        if not changed:
+            out = xlat(split_top_level(inner) if inner.strip() else [])
+            if out is not None:
+                sql = sql[:m.start()] + out + sql[close + 1:]
+                break                      # re-scan: positions moved
+        else:
             return sql
 
 
@@ -451,26 +435,26 @@ def _glob_pattern_to_regex(lit: str) -> str | None:
 def rewrite(sql: str, *, sqlite_compat: bool = True) -> str:
     """Best-effort textual rewrite of a SQLite-dialect query into Spark
     SQL with matching semantics. Intentionally conservative: only the
-    unambiguous substitutions, applied outside string literals; anything
+    unambiguous substitutions, applied outside quoted tokens; anything
     untranslatable is left untouched so Spark errors loudly. Everything
     else is already shared syntax and goes straight to `spark.sql`
     (Catalyst is the SQLite VDBE of this engine)."""
     if not sqlite_compat:
         return sql
     # Call-level translations span code AND argument literals, so they
-    # run on the whole text first with their own literal awareness.
+    # run on the whole text first.
     for fname, xlat in _CALL_XLATS:
         sql = _rewrite_calls(sql, fname, xlat)
-    parts = _LITERAL_RE.split(sql)
-    for i in range(0, len(parts), 2):  # even indices = non-literal code
+    parts = split_quoted(sql)
+    for i in range(0, len(parts), 2):  # even indices = code
         parts[i] = _CAST_RE.sub("TRY_CAST(", _LIKE_RE.sub("ILIKE", parts[i]))
         parts[i] = _IIF_RE.sub("IF(", parts[i])  # SQLite iif == Spark if
         parts[i] = _IFNULL_RE.sub("nvl(", parts[i])
         # GLOB: case-SENSITIVE wildcard match. `x GLOB 'a*'` becomes
         # `x LIKE 'a%' ESCAPE '\'`; patterns with [...] classes become
         # an anchored RLIKE regex instead (LIKE can't express classes).
-        if _GLOB_RE.search(parts[i]) and i + 1 < len(parts):
-            lit = parts[i + 1]
+        lit = parts[i + 1] if i + 1 < len(parts) else ""
+        if _GLOB_RE.search(parts[i]) and _strip_quotes(lit) is not None:
             if "[" in lit:
                 rx = _glob_pattern_to_regex(lit)
                 if rx is not None:

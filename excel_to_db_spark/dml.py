@@ -29,6 +29,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compat.sqlite_dialect import find_top_level, split_top_level
+
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 _INSERT_RE = re.compile(
@@ -62,69 +64,7 @@ _TYPE_MAP = {
 }
 _TABLE_CONSTRAINT = re.compile(
     r"(?is)^\s*(primary\s+key|unique|check|foreign\s+key|constraint)\b")
-
-
-def _split_top_level(text: str, sep: str = ",") -> list[str]:
-    """Split on `sep` outside parentheses and quoted tokens (SET
-    assignments and column defs may nest commas in calls/literals).
-    Tracks single-quoted literals AND double-quoted tokens — SQLite
-    falls back to treating "x" as a string literal, so a sep inside
-    either quoting style must not split."""
-    parts, depth, quote, start = [], 0, None, 0
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                if i + 1 < len(text) and text[i + 1] == quote:
-                    i += 1          # doubled quote = escape
-                else:
-                    quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(text[start:i])
-            start = i + 1
-        i += 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _find_top_level_kw(text: str, word: str) -> int:
-    """Index of the first occurrence of `word` (case-insensitive, word-
-    bounded) at paren depth 0 and outside quoted tokens, or -1.
-    The same scanner state machine as _split_top_level — a WHERE inside
-    `SET note = 'a where b'` (or SQLite's double-quoted fallback
-    `SET note = "a where b"`) must not split the statement."""
-    depth, quote = 0, None
-    low, n, wn = text.lower(), len(text), len(word)
-    i = 0
-    while i < n:
-        ch = text[i]
-        if quote:
-            if ch == quote:
-                if i + 1 < n and text[i + 1] == quote:
-                    i += 1
-                else:
-                    quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and low.startswith(word, i) \
-                and (i == 0 or not (text[i - 1].isalnum()
-                                    or text[i - 1] == "_")) \
-                and (i + wn == n or not (text[i + wn].isalnum()
-                                         or text[i + wn] == "_")):
-            return i
-        i += 1
-    return -1
+_WHERE_RE = re.compile(r"(?i)\bwhere\b")
 
 
 def _view_exists(spark: SparkSession, name: str) -> bool:
@@ -176,9 +116,8 @@ def _insert(spark: SparkSession, name: str, col_list: str | None,
 
 
 def _update(spark: SparkSession, name: str, tail: str) -> str:
-    # Locate the top-level WHERE with the literal/paren-aware scanner:
-    # a 'where' inside a string literal or function call is data.
-    w = _find_top_level_kw(tail, "where")
+    # A 'where' inside a quoted token or a function call is data.
+    w = find_top_level(tail, _WHERE_RE)
     if w >= 0:
         set_clause, where = tail[:w], tail[w + len("where"):].strip()
     else:
@@ -189,7 +128,7 @@ def _update(spark: SparkSession, name: str, tail: str) -> str:
     # are) and accepts `x` / "x" quoted identifiers.
     by_lower = {c.lower(): c for c in dtypes}
     assigns: dict[str, str] = {}
-    for a in _split_top_level(set_clause):
+    for a in filter(None, split_top_level(set_clause)):
         col, eq, expr = a.partition("=")
         col = col.strip().strip('`"')
         resolved = by_lower.get(col.lower())
@@ -240,7 +179,7 @@ def _create_cols(spark: SparkSession, if_not_exists: bool, name: str,
     if if_not_exists and _view_exists(spark, name):
         return f"-- table {name} already exists (skipped)"
     fields = []
-    for defn in _split_top_level(body):
+    for defn in filter(None, split_top_level(body)):
         if _TABLE_CONSTRAINT.match(defn):
             continue                      # PRIMARY KEY(...) etc: metadata only
         toks = defn.split()

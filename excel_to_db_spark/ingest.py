@@ -58,8 +58,6 @@ class DuplicateKeyError(ValueError):
 class IngestOptions:
     mode: str = "PERMISSIVE"          # or "FAILFAST" (reference panics)
     null_preserving: bool = False     # True = serde-path semantics (NULLs)
-    enforce_unique: bool = True
-    skip_header: bool = True
 
 
 def _coerce_f64(v: Any) -> float | None:
@@ -116,8 +114,7 @@ def rows_to_dataframe(spark: SparkSession, sheet_rows: Iterable[list[Any]],
                       opts: IngestOptions | None = None) -> DataFrame:
     opts = opts or IngestOptions()
     it = iter(sheet_rows)
-    if opts.skip_header:
-        next(it, None)
+    next(it, None)  # header skipped unconditionally (src/main.rs:67)
     data = [r for r in (coerce_row(row, opts) for row in it) if r is not None]
     schema = EXCEL_ROWS_SCHEMA_NULLABLE if opts.null_preserving else EXCEL_ROWS_SCHEMA
     # Arrow-batched driver->JVM transfer; the distributed analogue of the
@@ -147,8 +144,7 @@ def load_excel_table(spark: SparkSession, path: str, sheet: str | None = None,
     opts = opts or IngestOptions()
     df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts)
     df = df.cache()
-    if opts.enforce_unique:
-        check_unique_key(df)
+    check_unique_key(df)
     df.createOrReplaceTempView(view_name)
     return df
 

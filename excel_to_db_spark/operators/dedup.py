@@ -389,6 +389,10 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
     exact-Jaccard verification erases the difference — so the kernel
     folds each slice with a polynomial hash in NumPy and emits 4x fewer
     bytes with zero post-kernel HOF work."""
+    if n_hashes != bands * rows:
+        raise ValueError(
+            f"minhash_banded_arrow: n_hashes={n_hashes} must equal "
+            f"bands={bands} * rows={rows}")
     import numpy as np
     import pandas as pd
     import zlib
@@ -430,30 +434,6 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
 
     return (fan_out(df.select(id_col, text_col))
             .mapInPandas(kernel, "did bigint, band int, bucket bigint"))
-
-
-def lsh_pairs_grouped(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
-    """LSH banding WITHOUT a self-join: explode band buckets (HOF
-    transform — constant-size plan), group by (band, bucket), and emit
-    the pairs inside each bucket from the collected doc list. The
-    signature pipeline is traversed ONCE (the self-join formulation in
-    :func:`minhash_lsh_candidates` computes it twice when exchange
-    reuse doesn't fire, which AQE does not guarantee). Bucket sizes are
-    O(dup-cluster size), so the per-bucket pair explosion is the same
-    O(n·dups) candidate volume as the join formulation."""
-    banded = sigs.select("did", F.explode(F.expr(
-        f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
-        f"xxhash64(array_join(transform(slice(sig, b*{rows}+1, {rows}), "
-        f"x -> cast(x AS string)), ',')) AS bucket))")).alias("bb"))
-    banded = banded.select("did", "bb.band", "bb.bucket")
-    grp = (banded.groupBy("band", "bucket")
-           .agg(F.sort_array(F.collect_list("did")).alias("dids"))
-           .filter(F.size("dids") >= 2))
-    return (grp.select(F.explode(F.expr(
-        "flatten(transform(sequence(0, size(dids)-2), i -> "
-        "transform(slice(dids, i+2, size(dids)-i-1), y -> "
-        "struct(dids[i] AS d1, y AS d2))))")).alias("p"))
-        .select("p.d1", "p.d2").distinct())
 
 
 def minhash_dedup_pairs(df: DataFrame, threshold: float, n_hashes: int = 64,

@@ -424,7 +424,8 @@ def str_fuzzy_match(spark, sf_dir):
     # pinned cell-identical to F.levenshtein by
     # tests/test_plans_r3.py::test_fuzzy_match_cascade_off_identical_pairs
     # (full sf0.01 corpus vs the exhaustive JVM formulation) and the
-    # adversarial cases in tests/test_relational3.py.
+    # adversarial vocabulary of
+    # tests/test_plans_r3.py::test_fuzzy_arrow_kernel_matches_jvm_levenshtein.
     rows = sorted(((r["rid"], r["v"])
                    for r in names.select("rid", "v").collect()))
     vocab = [v for _, v in rows]

@@ -19,18 +19,20 @@ with the *intended* semantics (SURVEY.md §2.A defects 1-2):
 from __future__ import annotations
 
 import argparse
+import re
 import sys
 import time
 
 from pyspark.sql import SparkSession
 
-from .compat.sqlite_dialect import apply_session_mode, rewrite
+from .compat.sqlite_dialect import apply_session_mode, paren_depths, rewrite
 from .dml import try_dml
 from .ingest import IngestOptions, load_excel_table
 from .sinks.csv_sink import export_csv
 from .sinks.display import show
 
 PROMPT = "[SQL] >> "
+_OUT_RE = re.compile(r"\|out=")
 
 
 def parse_out_suffix(line: str) -> tuple[str, str | None]:
@@ -38,32 +40,11 @@ def parse_out_suffix(line: str) -> tuple[str, str | None]:
 
     Intended semantics of reference src/main.rs:148-159: the suffix is
     optional; without it no file is written. The marker is honored only
-    OUTSIDE string literals — ``... WHERE note = 'a|out=b'`` is a query
-    about that literal, not an export (the same literal-aware scanning
-    rule as dml._split_top_level)."""
-    cut = -1
-    quote: str | None = None
-    i = 0
-    while i < len(line):
-        ch = line[i]
-        if quote:
-            if ch == "\\":
-                # Spark SQL (escapedStringLiterals=false, the default)
-                # accepts backslash escapes inside literals ('it\'s');
-                # skip the escaped character so the scanner doesn't
-                # close the literal early and eat a trailing |out=.
-                i += 1
-            elif ch == quote:
-                # SQL doubles quotes to escape them inside a literal.
-                if i + 1 < len(line) and line[i + 1] == quote:
-                    i += 1
-                else:
-                    quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "|" and line.startswith("|out=", i):
-            cut = i  # keep scanning: the LAST top-level marker wins
-        i += 1
+    OUTSIDE quoted tokens — ``... WHERE note = 'a|out=b'`` is a query
+    about that literal, not an export — and the last such marker wins."""
+    depths = paren_depths(line)
+    cut = max((m.start() for m in _OUT_RE.finditer(line)
+               if m.start() in depths), default=-1)
     if cut < 0:
         return line, None
     sql, path = line[:cut], line[cut + len("|out="):]

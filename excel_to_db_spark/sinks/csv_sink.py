@@ -8,8 +8,8 @@ corrupts commas inside text (SURVEY.md §2.A defect 4).
 Two modes:
 
 - intended (default): values written from the DataFrame, proper CSV
-  quoting, distributed `df.write.csv` for scale or a driver-side single
-  file for small results (matching the reference's single-file output).
+  quoting, one driver-side file (matching the reference's single-file
+  output).
 - bug_compat: reproduce the rendered-table path, thousands separators
   stripped by comma-removal, exactly like the reference.
 """
@@ -23,22 +23,16 @@ from pyspark.sql import DataFrame
 from .display import collect_formatted
 
 
-def export_csv(df: DataFrame, path: str, *, bug_compat: bool = False,
-               row_cap: int | None = None, distributed: bool = False) -> None:
-    if distributed:
-        # Scale path: one file per partition, header in each; use for big
-        # results where a single driver-side file is not feasible.
-        df.write.option("header", True).mode("overwrite").csv(path)
-        return
+def export_csv(df: DataFrame, path: str, *, bug_compat: bool = False) -> None:
     if bug_compat:
-        header, rows, _ = collect_formatted(df, row_cap or 10**9)
+        header, rows, _ = collect_formatted(df, 10**9)
         with open(path, "w", newline="") as fh:
             w = csv.writer(fh)
             w.writerow([h.replace(",", "") for h in header])
             for row in rows:
                 w.writerow([c.replace(",", "") for c in row])
         return
-    rows = df.limit(row_cap).collect() if row_cap else df.collect()
+    rows = df.collect()
     with open(path, "w", newline="") as fh:
         w = csv.writer(fh)
         w.writerow(df.columns)

@@ -88,7 +88,6 @@ class XlsxReader(DataSourceReader):
             mode=options.get("mode", "PERMISSIVE").upper(),
             null_preserving=str(options.get("null_preserving", "false")).lower()
             == "true",
-            enforce_unique=False,  # cross-partition constraint; check post-load
         )
 
     def partitions(self) -> list[SheetPartition]:

@@ -68,3 +68,15 @@ def _release_spark_blocks(request):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def demo_xlsx():
+    """The reference's demo workbook when it is present, else
+    tests/fixtures/demo.xlsx: the same two golden rows, written with
+    sources/xlsx_writer.write_xlsx."""
+    from excel_to_db_spark.queries.parity import DEMO_XLSX
+
+    if os.path.exists(DEMO_XLSX):
+        return DEMO_XLSX
+    return os.path.join(os.path.dirname(__file__), "fixtures", "demo.xlsx")

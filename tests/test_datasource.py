@@ -12,12 +12,11 @@ def register(spark):
     spark.dataSource.register(XlsxDataSource)
 
 
-def test_reads_demo_like_driver_path(spark):
+def test_reads_demo_like_driver_path(spark, demo_xlsx):
     from excel_to_db_spark.ingest import load_excel_table
 
-    via_ds = (spark.read.format("xlsx")
-              .option("path", "/root/reference/demo.xlsx").load())
-    via_driver = load_excel_table(spark, "/root/reference/demo.xlsx")
+    via_ds = spark.read.format("xlsx").option("path", demo_xlsx).load()
+    via_driver = load_excel_table(spark, demo_xlsx)
     assert sorted(map(tuple, via_ds.collect())) == \
         sorted(map(tuple, via_driver.collect()))
 

@@ -9,12 +9,10 @@ import pytest
 from excel_to_db_spark.ingest import load_excel_table
 from excel_to_db_spark.sinks.db import write_sqlite
 
-DEMO = "/root/reference/demo.xlsx"
 
-
-def test_write_sqlite_golden(spark, tmp_path):
+def test_write_sqlite_golden(spark, tmp_path, demo_xlsx):
     db = str(tmp_path / "demo.db")
-    df = load_excel_table(spark, DEMO)
+    df = load_excel_table(spark, demo_xlsx)
     assert write_sqlite(df, db, unique_key="service_name") == 2
     con = sqlite3.connect(db)
     rows = con.execute(

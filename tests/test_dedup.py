@@ -114,6 +114,13 @@ def test_minhash_arrow_kernel_drops_null_text_like_sql(spark):
            {(r[0], r[1]) for r in pairs_sql} == {(1, 3)}
 
 
+def test_minhash_banded_arrow_rejects_band_shape_mismatch(docs):
+    """n_hashes must split into bands x rows; a mismatch is a named
+    error at the call, not a reshape failure inside the Arrow kernel."""
+    with pytest.raises(ValueError, match=r"n_hashes=64.*bands=16.*rows=5"):
+        D.minhash_banded_arrow(docs, n_hashes=64, bands=16, rows=5)
+
+
 def test_prefix_filter_equals_full_join(spark, sf_dir):
     """Forced-path equivalence (the r10 _lof_top3 pattern): the
     positional-prefix candidate path must produce BIT-IDENTICAL

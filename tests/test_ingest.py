@@ -15,15 +15,12 @@ from excel_to_db_spark.ingest import (
 from excel_to_db_spark.sources.xlsx import read_xlsx_rows, sheet_names
 from excel_to_db_spark.sources.xlsx_writer import write_xlsx
 
-DEMO = "/root/reference/demo.xlsx"
+def test_demo_sheet_names(demo_xlsx):
+    assert sheet_names(demo_xlsx)  # at least one sheet
 
 
-def test_demo_sheet_names():
-    assert sheet_names(DEMO)  # at least one sheet
-
-
-def test_demo_golden_rows(spark):
-    df = load_excel_table(spark, DEMO)
+def test_demo_golden_rows(spark, demo_xlsx):
+    df = load_excel_table(spark, demo_xlsx)
     rows = {r.service_name: r for r in df.collect()}
     assert set(rows) == {"ent_XXX_V2", "ent_XXX_YYY_V2"}
     r1 = rows["ent_XXX_V2"]

@@ -158,12 +158,17 @@ def test_update_where_inside_double_quoted_token(spark):
     not split the UPDATE (mirrors the single-quote guarantee)."""
     import sqlite3
 
-    from excel_to_db_spark.dml import _find_top_level_kw, _split_top_level
+    from excel_to_db_spark.compat.sqlite_dialect import (
+        find_top_level, rewrite, split_top_level)
+    from excel_to_db_spark.dml import _WHERE_RE
 
     stmt = 'note = "a where b", k = 2'
-    assert _split_top_level(stmt) == ['note = "a where b"', "k = 2"]
+    assert split_top_level(stmt) == ['note = "a where b"', "k = 2"]
+    # a backslash-escaped quote does not close the literal (Spark's rule)
+    assert split_top_level(r"note = 'it\'s, fine', k = 2") == [
+        r"note = 'it\'s, fine'", "k = 2"]
     s = 'SET note = "x where y" WHERE k = 1'
-    idx = _find_top_level_kw(s, "where")
+    idx = find_top_level(s, _WHERE_RE)
     assert s[idx:idx + 5].lower() == "where" and idx > s.index('"x')
     # pin against real sqlite3: the statement is legal and targeted
     con = sqlite3.connect(":memory:")
@@ -172,3 +177,21 @@ def test_update_where_inside_double_quoted_token(spark):
     con.execute('UPDATE t SET note = "x where y" WHERE k = 1')
     assert sorted(con.execute("SELECT k, note FROM t").fetchall()) == [
         (1, "x where y"), (2, "old")]
+    # the same statement through the REPL's compat path: the dialect
+    # rewrite must not touch the text inside "..." (LIKE -> ILIKE)
+    stmt = 'UPDATE t_dq SET note = "I like cats" WHERE k = 1'
+    con.execute(stmt.replace("t_dq", "t"))
+    spark.createDataFrame([(1, "old"), (2, "old")], "k bigint, note string") \
+         .createOrReplaceTempView("t_dq")
+    try:
+        assert "1 row(s) updated" in try_dml(spark, rewrite(stmt))
+        got = sorted(map(tuple, spark.table("t_dq").collect()))
+        assert got == sorted(con.execute("SELECT k, note FROM t").fetchall())
+        assert got == [(1, "I like cats"), (2, "old")]
+        # a backslash-escaped quote before a comma: one assignment, not two
+        assert "1 row(s) updated" in try_dml(
+            spark, r"UPDATE t_dq SET note = 'it\'s, fine' WHERE k = 2")
+        assert spark.table("t_dq").filter("k = 2").first().note == \
+            "it's, fine"
+    finally:
+        spark.catalog.dropTempView("t_dq")

@@ -49,6 +49,12 @@ def test_sqlite_dialect_rewrite_preserves_literals():
     out2 = rewrite("SELECT CAST(x AS INT), 'cast( not this' FROM t")
     assert "TRY_CAST" in out2.upper()
     assert "'cast( not this'" in out2
+    # every quoted token is opaque: "...", `...` and backslash escapes
+    for sql in ('UPDATE t SET note = "I like cats" WHERE k = 1',
+                "SELECT note AS `like` FROM t",
+                r"SELECT 'it\'s like x'",
+                'SELECT "total(x)"'):
+        assert rewrite(sql) == sql
 
 
 def test_glob_rewrite(spark):
