@@ -28,8 +28,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .compat.sqlite_dialect import find_top_level, split_top_level
+from .ingest import arrow_frame
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
@@ -188,7 +190,7 @@ def _create_cols(spark: SparkSession, if_not_exists: bool, name: str,
         fields.append(f"`{col}` {_TYPE_MAP.get(declared, 'string')}")
     if not fields:
         raise ValueError(f"CREATE TABLE {name}: no column definitions")
-    empty = spark.createDataFrame([], ", ".join(fields))
+    empty = arrow_frame(spark, [], StructType.fromDDL(", ".join(fields)))
     empty.createOrReplaceTempView(name)
     return f"-- table {name} created ({len(fields)} columns)"
 

@@ -11,8 +11,9 @@ Reference behavior being reproduced (SURVEY.md §1):
   offered as an option (the reference's dead serde path,
   src/main.rs:37-47, would have done this)
 - service_name must be unique (intended unique index,
-  src/main.rs:189-190); enforced here as a load-time aggregate check
-  since Spark has no index/constraint system
+  src/main.rs:189-190); enforced here on the driver over the coerced
+  rows, before any DataFrame exists, since Spark has no index or
+  constraint system
 - reference PANICS on a short row or non-string first cell
   (src/main.rs:69-75); we default to PERMISSIVE (per-row repair) with a
   FAILFAST option, mirroring Spark reader mode semantics
@@ -21,11 +22,13 @@ Reference behavior being reproduced (SURVEY.md §1):
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
@@ -110,41 +113,80 @@ def coerce_row(cells: list[Any], opts: IngestOptions) -> tuple | None:
     return (name, avg, cnt, mx, mn)
 
 
+def arrow_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType) -> DataFrame:
+    """Typed driver-side rows -> a DataFrame over one pyarrow Table.
+
+    PySpark hands the table to the JVM as a LocalRelation: building the
+    frame submits no job, and scanning or caching it runs in the JVM
+    only, with no Python worker. The schema, non-null fields included,
+    comes through as given. A value that does not fit its column type
+    (a bigint past 2^63, say) raises ValueError naming the column and
+    the value. For sheets too big for the driver, use
+    sources.datasource.XlsxDataSource (partitioned reads) or stage to
+    parquet first."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = [_arrow_column(values, field, arrow_field.type)
+              for values, field, arrow_field
+              in zip(columns, schema.fields, arrow_schema)]
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_column(values: tuple, field: StructField,
+                  arrow_type: pa.DataType) -> pa.Array:
+    try:
+        return pa.array(values, arrow_type)
+    except (OverflowError, pa.ArrowException) as exc:
+        for v in values:
+            try:
+                pa.scalar(v, arrow_type)
+            except (OverflowError, pa.ArrowException):
+                raise ValueError(
+                    f"value {v!r} does not fit column {field.name} "
+                    f"({field.dataType.simpleString()})") from exc
+        raise
+
+
 def rows_to_dataframe(spark: SparkSession, sheet_rows: Iterable[list[Any]],
                       opts: IngestOptions | None = None) -> DataFrame:
+    """Sheet rows (header first) -> the excel_rows DataFrame: header
+    skipped, each row coerced, service_name checked unique, all on the
+    driver; then one Arrow hand-off, the distributed analogue of the
+    reference's FFI hop into SQLite."""
     opts = opts or IngestOptions()
     it = iter(sheet_rows)
     next(it, None)  # header skipped unconditionally (src/main.rs:67)
     data = [r for r in (coerce_row(row, opts) for row in it) if r is not None]
+    check_unique_key(data)
     schema = EXCEL_ROWS_SCHEMA_NULLABLE if opts.null_preserving else EXCEL_ROWS_SCHEMA
-    # Arrow-batched driver->JVM transfer; the distributed analogue of the
-    # reference's FFI hop into SQLite. For sheets too big for the driver,
-    # use sources.datasource.XlsxDataSource (partitioned reads) or stage
-    # to parquet first.
-    return spark.createDataFrame(data, schema)
+    return arrow_frame(spark, data, schema)
 
 
-def check_unique_key(df: DataFrame, key: str = "service_name") -> None:
-    dupes = (df.groupBy(key).count().filter(F.col("count") > 1).limit(20).collect())
+def check_unique_key(rows: list[tuple], key: str = "service_name") -> None:
+    """Raise DuplicateKeyError when ``key`` repeats among coerced
+    excel_rows tuples (up to 20 repeated values, in sheet order)."""
+    i = EXCEL_ROWS_SCHEMA.fieldNames().index(key)
+    dupes = [k for k, n in Counter(r[i] for r in rows).items() if n > 1]
     if dupes:
         raise DuplicateKeyError(
-            f"duplicate {key} values at load: {[r[0] for r in dupes]}")
+            f"duplicate {key} values at load: {dupes[:20]}")
 
 
 def load_excel_table(spark: SparkSession, path: str, sheet: str | None = None,
                      view_name: str = "excel_rows",
                      opts: IngestOptions | None = None) -> DataFrame:
-    """Full ingest pipeline: parse -> coerce -> DataFrame -> uniqueness
-    check -> temp view (+cache, mirroring the in-memory SQLite db).
+    """Full ingest pipeline: parse -> coerce -> uniqueness check ->
+    DataFrame -> temp view (+cache, mirroring the in-memory SQLite db).
+    A rejected sheet raises before anything is cached.
 
     This is the reference-semantics path (fixed positional 5-column
     schema, header names ignored). For arbitrary sheets, the optional
     inference path is :func:`load_excel_table_inferred` — kept separate
     and OFF by default so reference parity stays byte-exact."""
     opts = opts or IngestOptions()
-    df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts)
-    df = df.cache()
-    check_unique_key(df)
+    df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts).cache()
     df.createOrReplaceTempView(view_name)
     return df
 
@@ -279,6 +321,6 @@ def load_excel_table_inferred(spark: SparkSession, path: str,
               for i in range(width))
         for r in body
     ]
-    df = spark.createDataFrame(data, schema)
+    df = arrow_frame(spark, data, schema)
     df.createOrReplaceTempView(view_name)
     return df

@@ -94,6 +94,74 @@ def test_rows_to_dataframe_schema(spark):
         ["string", "double", "bigint", "double", "double"]
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of every job outside a job group, once the listener bus has
+    delivered all events so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_load_submits_no_job_and_caches_a_local_scan(spark, tmp_path):
+    """The sheet reaches Spark as one Arrow table (a LocalRelation) and
+    the key check runs on the driver: loading submits no job, and the
+    cache fills from a JVM-only LocalTableScan, not from a Python RDD."""
+    p = str(tmp_path / "local.xlsx")
+    write_xlsx(p, [["h"] * 5] + [[f"s{i}", i * 1.5, i, 2.0, 1.0]
+                                 for i in range(200)])
+    before = _job_ids(spark)
+    df = load_excel_table(spark, p, view_name="local_rows")
+    assert _job_ids(spark) == before
+    plan = _executed_plan(df)
+    assert "InMemoryRelation" in plan and "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert df.count() == 200
+    spark.catalog.dropTempView("local_rows")
+
+
+def test_duplicate_key_rejected_before_cache(spark, tmp_path):
+    p = str(tmp_path / "dup_cache.xlsx")
+    write_xlsx(p, [["h"] * 5, ["a", 1, 2, 3, 4], ["b", 1, 2, 3, 4],
+                   ["a", 5, 6, 7, 8], ["b", 5, 6, 7, 8]])
+    spark.catalog.clearCache()
+    before = _job_ids(spark)
+    with pytest.raises(DuplicateKeyError, match=r"\['a', 'b'\]"):
+        load_excel_table(spark, p, view_name="dup_rows")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _job_ids(spark) == before
+    assert not spark.catalog.tableExists("dup_rows")
+
+
+def test_null_preserving_keeps_nullable_schema_and_nulls(spark, tmp_path):
+    from excel_to_db_spark.ingest import EXCEL_ROWS_SCHEMA_NULLABLE
+
+    p = str(tmp_path / "nulls.xlsx")
+    write_xlsx(p, [["h"] * 5, ["a", 1.5, None, "x", 4.0], ["b", None, 7]])
+    df = load_excel_table(spark, p, view_name="null_rows",
+                          opts=IngestOptions(null_preserving=True))
+    assert df.schema == EXCEL_ROWS_SCHEMA_NULLABLE
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("a", 1.5, None, None, 4.0), ("b", None, 7, None, None)]
+    spark.catalog.dropTempView("null_rows")
+
+
+@pytest.mark.parametrize("cell", ["99999999999999999999", 2 ** 63, -2 ** 63 - 1,
+                                  1e20])
+def test_count_out_of_range_is_a_named_error(spark, tmp_path, cell):
+    """A count past the bigint range ends in a ValueError that names the
+    column and the value, not an OverflowError from the Arrow build."""
+    p = str(tmp_path / "overflow.xlsx")
+    write_xlsx(p, [["h"] * 5, ["ok", 1, 2 ** 63 - 1, 3, 4],
+                   ["big", 1, cell, 3, 4]])
+    with pytest.raises(ValueError, match=r"count \(bigint\)") as err:
+        load_excel_table(spark, p, view_name="overflow_rows")
+    assert str(int(cell)) in str(err.value) and err.type is ValueError
+    assert not spark.catalog.tableExists("overflow_rows")
+
+
 # ---------------------------------------------------------------------------
 # Optional schema inference (round 7; OFF by default — reference parity
 # keeps the fixed positional 5-column schema)
@@ -198,3 +266,30 @@ def test_ingest_100k_rows_under_baseline_target(spark, tmp_path):
     assert n == 100_000
     assert dt < 60.0, f"100k-row ingest took {dt:.1f}s (target < 60s)"
     spark.catalog.dropTempView("big_rows")
+
+
+def test_inferred_load_is_a_local_scan_with_named_overflow(spark, tmp_path):
+    """The inferred loader shares the Arrow builder: no job to build
+    the frame, a LocalTableScan plan, nullable inferred columns, and a
+    named error for a bigint past 2^63."""
+    from excel_to_db_spark.ingest import load_excel_table_inferred
+
+    p = str(tmp_path / "inf_local.xlsx")
+    write_xlsx(p, [["k", "n", "x", "b"], ["a", 1, 1.5, True],
+                   ["b", None, 2, None]])
+    before = _job_ids(spark)
+    df = load_excel_table_inferred(spark, p, view_name="inf_local")
+    assert _job_ids(spark) == before
+    assert "LocalTableScan" in _executed_plan(df)
+    assert [(f.dataType.simpleString(), f.nullable)
+            for f in df.schema.fields] == [
+        ("string", True), ("bigint", True), ("double", True),
+        ("boolean", True)]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("a", 1, 1.5, True), ("b", None, 2.0, None)]
+    spark.catalog.dropTempView("inf_local")
+
+    big = str(tmp_path / "inf_big.xlsx")
+    write_xlsx(big, [["k", "n"], ["a", 1], ["b", 2 ** 63]])
+    with pytest.raises(ValueError, match=r"9223372036854775808 .*n \(bigint\)"):
+        load_excel_table_inferred(spark, big, view_name="inf_big")

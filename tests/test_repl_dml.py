@@ -106,6 +106,9 @@ def test_create_table_columns_sqlite_types(spark):
     assert "3 columns" in msg
     assert dict(spark.table("t_ddl").dtypes) == {
         "service_name": "string", "avg_ms": "double", "count": "bigint"}
+    # an empty Arrow table: its scan runs in the JVM, no Python worker
+    plan = spark.table("t_ddl")._jdf.queryExecution().executedPlan()
+    assert "LocalTableScan" in plan.toString()
     try_dml(spark, "INSERT INTO t_ddl VALUES ('a', 1.0, 2)")
     assert spark.table("t_ddl").count() == 1
     try_dml(spark, "DROP TABLE t_ddl")
