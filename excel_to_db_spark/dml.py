@@ -12,8 +12,20 @@ Scale posture: this is REPL-session parity, not a storage engine. Each
 mutation composes a lazy plan (union / filter / projection) that
 Catalyst collapses at execution; state lives in the session catalog
 exactly as the reference's state lives in its in-memory SQLite — both
-die with the process. Durable, cluster-scale mutation goes through real
-sinks (`sinks/` parquet/JDBC/SQLite), not this path.
+die with the process. A table built on the driver (the loaded sheet, a
+column-list CREATE TABLE) is one partition; UPDATE and DELETE keep
+that, and INSERT coalesces its union back to one partition. So a
+statement over such a table plans no Exchange and runs as one Spark
+job, like the reference's one pass over its one table. Durable,
+cluster-scale mutation goes through real sinks (`sinks/`
+parquet/JDBC/SQLite), not this path.
+
+INSERT stores what it inserted: the source rows are collected once, as
+SQLite evaluates them once, so `current_timestamp()` in an INSERT reads
+back the same on every later query. UPDATE does not: its SET expression
+is part of the view's plan and re-evaluates on every read, so `SET x =
+current_timestamp()` drifts. DDL looks one name up in the catalog and
+runs no job.
 
 Statement grammar is intentionally the reference's subset: one target
 table, no joins in UPDATE/DELETE, standard INSERT forms. Anything that
@@ -69,11 +81,6 @@ _TABLE_CONSTRAINT = re.compile(
 _WHERE_RE = re.compile(r"(?i)\bwhere\b")
 
 
-def _view_exists(spark: SparkSession, name: str) -> bool:
-    return any(t.name.lower() == name.lower()
-               for t in spark.catalog.listTables())
-
-
 def _align_to(target: DataFrame, src: DataFrame) -> DataFrame:
     """Project `src` onto `target`'s schema: missing columns become NULL,
     every column cast to the target type, target column order."""
@@ -112,9 +119,11 @@ def _insert(spark: SparkSession, name: str, col_list: str | None,
                 f"{name} has {len(target.columns)}")
         src = src.toDF(*target.columns)
     src = _align_to(target, src)
-    n = src.count()
-    target.unionByName(src).createOrReplaceTempView(name)
-    return f"-- {n} row(s) inserted into {name}"
+    # Evaluate the source once and store the values, as SQLite does.
+    rows = src.toArrow()
+    (target.unionByName(arrow_frame(spark, rows, src.schema))
+     .coalesce(1).createOrReplaceTempView(name))
+    return f"-- {rows.num_rows} row(s) inserted into {name}"
 
 
 def _update(spark: SparkSession, name: str, tail: str) -> str:
@@ -169,7 +178,7 @@ def _delete(spark: SparkSession, name: str, where: str | None) -> str:
 
 def _create_as(spark: SparkSession, if_not_exists: bool, name: str,
                select: str) -> str:
-    if if_not_exists and _view_exists(spark, name):
+    if if_not_exists and spark.catalog.tableExists(name):
         return f"-- table {name} already exists (skipped)"
     df = spark.sql(select)
     df.createOrReplaceTempView(name)
@@ -178,7 +187,7 @@ def _create_as(spark: SparkSession, if_not_exists: bool, name: str,
 
 def _create_cols(spark: SparkSession, if_not_exists: bool, name: str,
                  body: str) -> str:
-    if if_not_exists and _view_exists(spark, name):
+    if if_not_exists and spark.catalog.tableExists(name):
         return f"-- table {name} already exists (skipped)"
     fields = []
     for defn in filter(None, split_top_level(body)):
@@ -196,7 +205,7 @@ def _create_cols(spark: SparkSession, if_not_exists: bool, name: str,
 
 
 def _drop(spark: SparkSession, if_exists: bool, name: str) -> str:
-    if not _view_exists(spark, name):
+    if not spark.catalog.tableExists(name):
         if if_exists:
             return f"-- table {name} does not exist (skipped)"
         raise ValueError(f"DROP TABLE: no such table {name}")

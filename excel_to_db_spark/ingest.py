@@ -113,25 +113,38 @@ def coerce_row(cells: list[Any], opts: IngestOptions) -> tuple | None:
     return (name, avg, cnt, mx, mn)
 
 
-def arrow_frame(spark: SparkSession, rows: list[tuple],
+def arrow_frame(spark: SparkSession, rows: list[tuple] | pa.Table,
                 schema: StructType) -> DataFrame:
-    """Typed driver-side rows -> a DataFrame over one pyarrow Table.
+    """Driver-held rows -> a one-partition DataFrame over one pyarrow
+    Table. ``rows`` is typed tuples, or a Table already in ``schema``'s
+    Arrow shape (``DataFrame.toArrow()``).
 
     PySpark hands the table to the JVM as a LocalRelation: building the
     frame submits no job, and scanning or caching it runs in the JVM
     only, with no Python worker. The schema, non-null fields included,
     comes through as given. A value that does not fit its column type
     (a bigint past 2^63, say) raises ValueError naming the column and
-    the value. For sheets too big for the driver, use
-    sources.datasource.XlsxDataSource (partitioned reads) or stage to
-    parquet first."""
+    the value.
+
+    The frame is one partition (a narrow coalesce, no shuffle): its
+    SinglePartition output already meets what aggregates, windows,
+    sorts and count() require, so a REPL statement over it plans no
+    Exchange and runs as one job, not a map stage plus a result stage.
+    Splitting the table buys nothing: it is held whole on the driver
+    anyway, and an xlsx sheet has at most 1,048,576 rows. For sheets
+    too big for the driver, use sources.datasource.XlsxDataSource
+    (partitioned reads) or stage to parquet first."""
+    table = rows if isinstance(rows, pa.Table) else _arrow_table(rows, schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
+def _arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
     arrays = [_arrow_column(values, field, arrow_field.type)
               for values, field, arrow_field
               in zip(columns, schema.fields, arrow_schema)]
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
 def _arrow_column(values: tuple, field: StructField,

@@ -69,6 +69,10 @@ def run_line(spark: SparkSession, line: str, *, sqlite_compat: bool = False,
         print(f"-- {time.perf_counter() - t0:.3f}s")
         return
     df = spark.sql(rewritten)
+    if out_path:
+        # Run the query once: display and export both read this driver
+        # copy, a LocalRelation that collects without a job.
+        df = spark.createDataFrame(df.toArrow(), df.schema)
     show(df, row_cap=row_cap)
     if out_path:
         export_csv(df, out_path)

@@ -85,7 +85,9 @@ def write_sqlite(df: DataFrame, path: str, table: str = "excel_rows", *,
         n = 0
         batch: list[tuple] = []
         # toLocalIterator: one partition in driver memory at a time —
-        # bounded memory however big the table is.
+        # bounded memory however big the table is. A driver-built table
+        # (ingest.arrow_frame) is one partition, so that is the whole
+        # table, which the driver already holds.
         for row in df.toLocalIterator():
             batch.append(tuple(_to_sqlite_value(v) for v in row))
             if len(batch) >= batch_size:

@@ -7,7 +7,8 @@ keeps that driver-side shape; this DataSource is the scale path: each
 (file, sheet) pair becomes an input partition, so a directory of
 workbooks (the realistic "100 GB of Excel" situation — xlsx files are
 individually small, there are just many of them) parses in parallel on
-executors, feeding Arrow batches straight into the plan. For a single
+executors: each partition's Python reader yields typed row tuples, which
+PySpark batches to Arrow and hands to the JVM. For a single
 giant sheet, pre-convert to Parquet (xlsx XML is inherently sequential —
 a row-range split would still decompress the whole stream per split).
 

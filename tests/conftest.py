@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -63,6 +64,25 @@ def _release_spark_blocks(request):
                 jrdd.unpersist(False)
         except Exception:
             pass
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> ``(fn(), number of Spark jobs fn submitted)``,
+    counted through the status tracker under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -4,10 +4,14 @@ our REPL re-expresses them as temp-view re-registration (dml.py)."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from excel_to_db_spark.dml import try_dml
+from excel_to_db_spark.ingest import load_excel_table
 from excel_to_db_spark.repl import run_line
+from excel_to_db_spark.sources.xlsx_writer import write_xlsx
 
 
 @pytest.fixture()
@@ -90,7 +94,7 @@ def test_create_table_as_and_drop(spark, excel_rows):
     msg = try_dml(spark, "CREATE TABLE IF NOT EXISTS fast_svcs AS SELECT 1 AS x")
     assert "already exists" in msg
     assert try_dml(spark, "DROP TABLE fast_svcs") == "-- table fast_svcs dropped"
-    assert "fast_svcs" not in [t.name for t in spark.catalog.listTables()]
+    assert not spark.catalog.tableExists("fast_svcs")
     assert "skipped" in try_dml(spark, "DROP TABLE IF EXISTS fast_svcs")
     with pytest.raises(ValueError):
         try_dml(spark, "DROP TABLE fast_svcs")
@@ -198,3 +202,98 @@ def test_update_where_inside_double_quoted_token(spark):
             "it's, fine"
     finally:
         spark.catalog.dropTempView("t_dq")
+
+
+# --- Job budget: a REPL statement over the driver-built excel_rows ------
+# (one partition, so no Exchange, so one Spark job per statement)
+
+@pytest.fixture()
+def loaded_rows(spark, tmp_path):
+    """excel_rows loaded from a 60-row sheet, its cache filled."""
+    book = str(tmp_path / "book.xlsx")
+    write_xlsx(book, [["name", "avg", "count", "max", "min"]] + [
+        [f"svc_{i:02d}", 10.0 + i, i % 7, 20.0 + i, float(i)]
+        for i in range(60)])
+    df = load_excel_table(spark, book)
+    df.count()
+    yield df
+    spark.catalog.dropTempView("excel_rows")
+
+
+def _partitions(spark, name="excel_rows"):
+    return spark.table(name).rdd.getNumPartitions()
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_excel_rows_stays_one_partition(spark, loaded_rows):
+    assert _partitions(spark) == 1
+    try_dml(spark, "INSERT INTO excel_rows VALUES ('svc_new', 1.0, 2, 3.0, 0.5)")
+    assert _partitions(spark) == 1
+    try_dml(spark, "UPDATE excel_rows SET count = count + 1 WHERE count > 3")
+    assert _partitions(spark) == 1
+    try_dml(spark, "DELETE FROM excel_rows WHERE count = 1")
+    assert _partitions(spark) == 1
+    assert spark.table("excel_rows").count() == 61 - 9
+
+
+def test_statements_over_excel_rows_plan_no_exchange(spark, loaded_rows):
+    for sql in ("SELECT count, avg(max_response_time_95_ms) FROM excel_rows "
+                "GROUP BY count",
+                "SELECT service_name, rank() OVER (PARTITION BY count "
+                "ORDER BY min_response_time_95_ms DESC) AS r FROM excel_rows",
+                "SELECT count, sum(count) OVER (ORDER BY service_name) AS s "
+                "FROM excel_rows ORDER BY s DESC"):
+        assert "Exchange" not in _executed_plan(spark.sql(sql)), sql
+
+
+def test_repl_statement_runs_one_job(spark, loaded_rows, jobs_of, capsys):
+    for sql in ("SELECT * FROM excel_rows WHERE service_name = 'svc_07'",
+                "SELECT count, count(*) AS n FROM excel_rows GROUP BY count",
+                "SELECT service_name, row_number() OVER "
+                "(ORDER BY average_response_time_95_ms DESC) AS r "
+                "FROM excel_rows"):
+        _, jobs = jobs_of(lambda: run_line(spark, sql))
+        assert jobs == 1, sql
+    out = capsys.readouterr().out
+    assert "svc_07" in out and "ERROR" not in out
+
+
+def test_ddl_looks_the_name_up_without_a_job(spark, loaded_rows, jobs_of):
+    msg, jobs = jobs_of(lambda: try_dml(
+        spark, "CREATE TABLE IF NOT EXISTS excel_rows (x INTEGER)"))
+    assert "already exists" in msg and jobs == 0
+    spark.sql("SELECT 1 AS x").createOrReplaceTempView("scratch_v")
+    msg, jobs = jobs_of(lambda: try_dml(spark, "DROP TABLE scratch_v"))
+    assert msg == "-- table scratch_v dropped" and jobs == 0
+    assert not spark.catalog.tableExists("scratch_v")
+
+
+def test_drop_permanent_table_raises_named_error(spark):
+    spark.sql("CREATE TABLE perm_t (x INT) USING parquet")
+    try:
+        with pytest.raises(ValueError, match="permanent catalog table"):
+            try_dml(spark, "DROP TABLE perm_t")
+        assert spark.catalog.tableExists("perm_t")
+    finally:
+        spark.sql("DROP TABLE perm_t")
+
+
+def test_insert_stores_what_it_inserted(spark):
+    """SQLite evaluates an INSERT's values once and stores them; a later
+    read must not re-evaluate current_timestamp()."""
+    try_dml(spark, "CREATE TABLE t_stamp (k TEXT, stamp TEXT)")
+    try:
+        try_dml(spark, "INSERT INTO t_stamp VALUES "
+                       "('a', CAST(current_timestamp() AS STRING))")
+        try_dml(spark, "INSERT INTO t_stamp "
+                       "SELECT 'b', CAST(current_timestamp() AS STRING)")
+        first = sorted(spark.table("t_stamp").collect())
+        time.sleep(0.2)
+        assert sorted(spark.table("t_stamp").collect()) == first
+        assert [r.k for r in first] == ["a", "b"]
+        assert _partitions(spark, "t_stamp") == 1
+    finally:
+        spark.catalog.dropTempView("t_stamp")

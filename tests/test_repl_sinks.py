@@ -5,9 +5,10 @@ from __future__ import annotations
 import os
 
 from excel_to_db_spark.compat.sqlite_dialect import rewrite
-from excel_to_db_spark.repl import parse_out_suffix
+from excel_to_db_spark.ingest import EXCEL_ROWS_SCHEMA, arrow_frame
+from excel_to_db_spark.repl import parse_out_suffix, run_line
 from excel_to_db_spark.sinks.csv_sink import export_csv
-from excel_to_db_spark.sinks.display import format_cell
+from excel_to_db_spark.sinks.display import format_cell, show
 
 
 def test_parse_out_suffix_intended_semantics():
@@ -104,7 +105,7 @@ def test_repl_ddl_dml_passthrough(spark, capsys):
     out = capsys.readouterr().out
     assert "42" in out
     run_line(spark, "DROP VIEW repl_tv")
-    assert "repl_tv" not in [t.name for t in spark.catalog.listTables()]
+    assert not spark.catalog.tableExists("repl_tv")
 
 
 def test_strftime_rewrite():
@@ -133,3 +134,34 @@ def test_parse_out_suffix_backslash_escaped_quote():
     # trailing backslash at end-of-line must not crash the scanner
     sql, out = parse_out_suffix("SELECT '\\")
     assert out is None
+
+
+def test_out_runs_the_query_once(spark, tmp_path, capsys, jobs_of):
+    """An |out= statement runs one job; the display and the CSV it writes
+    match what the query itself shows and exports, for decimal, date,
+    timestamp and NULL values."""
+    rows = [(f"svc_{i}", 12001.125 + i, i, 2.0, 0.5) for i in range(30)]
+    arrow_frame(spark, rows, EXCEL_ROWS_SCHEMA).cache() \
+        .createOrReplaceTempView("excel_rows")
+    sql = ("SELECT service_name, "
+           "CAST(average_response_time_95_ms AS DECIMAL(12, 2)) AS d, "
+           "date_add(DATE'2024-01-02', CAST(count AS INT)) AS dt, "
+           "TIMESTAMP'2024-01-02 03:04:05' + make_dt_interval(0, count) AS ts, "
+           "CASE WHEN count % 3 = 0 THEN NULL ELSE count END AS n "
+           "FROM excel_rows WHERE count < 12 ORDER BY service_name")
+    try:
+        spark.table("excel_rows").count()          # fill the cache
+        direct = str(tmp_path / "direct.csv")
+        export_csv(spark.sql(sql), direct)
+        expected = show(spark.sql(sql))
+        capsys.readouterr()
+        out = str(tmp_path / "out.csv")
+        _, jobs = jobs_of(lambda: run_line(spark, f"{sql} |out={out}"))
+        assert jobs == 1
+        assert capsys.readouterr().out.startswith(expected + "\n")
+        body = open(out).read()
+        assert body == open(direct).read()
+        assert "svc_1,12002.13,2024-01-03,2024-01-02 04:04:05,1\n" in body
+        assert "svc_0,12001.13,2024-01-02,2024-01-02 03:04:05,\n" in body
+    finally:
+        spark.catalog.dropTempView("excel_rows")
