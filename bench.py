@@ -13,9 +13,15 @@ and the 2x-of-BASELINE gate went unmeasured. Therefore:
   * the LAST stdout line is a COMPACT summary that always fits:
       {"metric": "headline_suite_seconds", "value": <total>,
        "unit": "sec", "sf": <sf>, "n_queries": <n>}
-  * the full per-query map goes to BENCH_DETAIL.json next to this
-    file (committed per round), which the regression check below also
-    reads for round-over-round comparisons.
+  * the full record goes to BENCH_DETAIL.json next to this file
+    ($SPARK_GRAFT_BENCH_DETAIL overrides the path): the summary fields
+    plus "sf_dir", "cpus", "runs", "queries" (per-key min over the
+    passes) and "queries_all_runs" (every pass).
+
+The harness compares nothing: two commits are compared by a same-host
+A/B that runs this file in both checkouts (same SPARK_GRAFT_BENCH_KEYS,
+one SPARK_GRAFT_BENCH_DETAIL each, alternating which side runs first)
+and compares the per-key "queries_all_runs".
 
 Each query is forced with a count() action rather than collect() so the
 measurement is the distributed execution, not driver materialization —
@@ -27,6 +33,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -277,120 +284,11 @@ HEADLINE = [
 ]
 
 
-def _current_round(repo_dir: str) -> int:
-    """Infer the in-progress round number: 1 + the highest N among
-    committed BENCH_r{N}.json files (the driver writes round N's file
-    AFTER the round's last commit, so during round N only rounds < N
-    exist)."""
-    import glob
-    import re
-
-    rounds = [0]
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
-def _previous_times(
-        repo_dir: str, sf: float
-) -> tuple[str, dict[str, float], float | None, int]:
-    """Per-query times from the newest recorded run AT THE SAME SF, for
-    round-over-round regression flagging. Prefers the newest
-    BENCH_DETAIL*.json whose recorded "sf" matches (ADVICE r7: a detail
-    file written at a different SF must never seed the baseline); falls
-    back to the newest parseable BENCH_r{N}.json. Returns
-    (name, {query: sec}, probe_sec-or-None, baseline_runs);
-    ("", {}, None, 1) if none. baseline_runs is the record's "runs"
-    count (1 for legacy single-pass records and the BENCH_r fallback) —
-    the caller widens the regression test when comparing a min-of-N
-    current run against a single-run baseline (ADVICE r9: that pairing
-    is not like-for-like; the min side is biased low)."""
-    import glob
-    import re
-
-    # (is_solo, mtime) ordering: a solo-tagged record always beats a
-    # contended one as the baseline, newest-first within each class —
-    # like-for-like comparison (VERDICT r8 #3). Legacy files without a
-    # run_condition tag rank as solo (every pre-r9 committed detail was
-    # a solo run).
-    candidates: list[
-        tuple[bool, float, str, dict[str, float], float | None, int]] = []
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_DETAIL*.json")):
-        try:
-            doc = json.load(open(path))
-            queries = doc.get("queries") or {}
-            rec_sf = float(doc.get("sf", -1))
-            if queries and abs(rec_sf - sf) < 1e-9:
-                probe = doc.get("probe_sec")
-                is_solo = doc.get("run_condition", "solo") == "solo"
-                candidates.append(
-                    (is_solo, os.path.getmtime(path), os.path.basename(path),
-                     {k: float(v) for k, v in queries.items()},
-                     float(probe) if probe is not None else None,
-                     int(doc.get("runs", 1))))
-        except (OSError, json.JSONDecodeError, TypeError, ValueError):
-            continue
-    if candidates:
-        _, _, name, queries, probe, runs = max(candidates)
-        return (name, queries, probe, runs)
-
-    best: tuple[int, str, dict[str, float]] | None = None
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            doc = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        parsed = doc.get("parsed") if isinstance(doc, dict) else None
-        queries = (parsed or {}).get("queries") or {}
-        if queries and (best is None or int(m.group(1)) > best[0]):
-            best = (int(m.group(1)), os.path.basename(path),
-                    {k: float(v) for k, v in queries.items()})
-    return (best[1], best[2], None, 1) if best else ("", {}, None, 1)
-
-
-def _contention_probe(spark) -> float:
-    """A fixed CPU-bound micro-workload (best of 3) whose runtime scales
-    with machine contention: when the driver runs bench concurrently
-    with its correctness checker, this probe slows by roughly the same
-    factor as the real queries. The regression check scales its
-    threshold by probe_now / probe_then, so a contended run compared
-    against a solo baseline does not emit false REGRESSION lines
-    (VERDICT r7 #3: r7's driver run flagged two untouched keys at
-    1.5x purely from contention)."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id * 3 + (id % 7)) AS s").collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def _best_known_probe(repo_dir: str, sf: float) -> float | None:
-    """Fastest probe_sec recorded in any same-SF detail file — the best
-    observed proxy for this host running SOLO. A run whose own probe is
-    within 10% of it gets tagged run_condition=solo; anything slower is
-    tagged contended (VERDICT r8 #3: records must carry their run
-    condition so comparisons stay like-for-like)."""
-    import glob
-
-    best: float | None = None
-    for path in glob.glob(os.path.join(repo_dir, "BENCH_DETAIL*.json")):
-        try:
-            doc = json.load(open(path))
-            if abs(float(doc.get("sf", -1)) - sf) > 1e-9:
-                continue
-            probe = float(doc.get("probe_sec") or 0)
-            if probe > 0 and (best is None or probe < best):
-                best = probe
-        except (OSError, json.JSONDecodeError, TypeError, ValueError):
-            continue
-    return best
+def _scale_factor(sf_dir: str) -> float:
+    """The leading number of the fixture directory's name: sf0.1 -> 0.1,
+    sf1j (the jittered sf1 fixture) -> 1.0; 0.1 for a name without one."""
+    m = re.search(r"\d+(?:\.\d+)?", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group()) if m else 0.1
 
 
 def main() -> int:
@@ -399,21 +297,13 @@ def main() -> int:
         "--repeat", type=int,
         default=int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")),
         help="full suite passes; per-key time recorded is the MIN across "
-             "passes (VERDICT r8 #3: single-run records on this host "
-             "carry 2-5x scheduling jitter — group_quantile_normalize "
-             "measured 10.12s in one committed run and 2.45s in another "
-             "the same round with zero code diff)")
+             "passes (a single pass carries 2-5x scheduling jitter)")
     args, _ = ap.parse_known_args()
     repeat = max(1, args.repeat)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    # sf from the dir name (sf0.1 -> 0.1); fall back to 0.1
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        sf = float(base.replace("sf", ""))
-    except ValueError:
-        sf = 0.1
+    sf = _scale_factor(sf_dir)
 
     from pyspark.sql import SparkSession
 
@@ -459,15 +349,11 @@ def main() -> int:
     except Exception:
         pass
 
-    # Bisect hook (VERDICT r4 #3): SPARK_GRAFT_BENCH_KEYS="a,b,c" runs
-    # only those keys, so a historical round's exact list can be timed
-    # alone on HEAD to separate suite-level contention (new heavy
-    # queries sharing the JVM) from true per-query regressions.
+    # SPARK_GRAFT_BENCH_KEYS="a,b,c" runs only those keys (bisects and
+    # same-host A/Bs of a few keys).
     only = os.environ.get("SPARK_GRAFT_BENCH_KEYS")
     selected = [k.strip() for k in only.split(",") if k.strip()] \
         if only else HEADLINE
-
-    probe_sec = _contention_probe(spark)
 
     # N full suite passes; the canonical per-key number is the MIN
     # across passes (min, not median: scheduling noise on this host is
@@ -497,93 +383,27 @@ def main() -> int:
     times = {name: min(runs) for name, runs in all_runs.items()}
     total = round(sum(times.values()), 3)
 
-    # Round-over-round comparability: flag queries >1.5x their
-    # contention-normalized time in the newest recorded detail at the
-    # SAME sf (stderr only — stdout stays the one-line JSON contract).
-    # The threshold is scaled by probe_now / probe_then so a contended
-    # driver run compared against a solo baseline stays quiet.
-    # Sub-second timings are skipped: at that scale local[32]
-    # scheduling noise swamps real regressions.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev_name, prev, prev_probe, prev_runs = _previous_times(repo_dir, sf)
-    contention = 1.0
-    if prev_probe and prev_probe > 0:
-        contention = max(1.0, probe_sec / prev_probe)
-    # Min-of-N vs single-run asymmetry (ADVICE r9 + r10): this run's
-    # canonical time is min across `repeat` passes, which strips
-    # additive scheduling noise; a single-run measurement still
-    # carries it. Threshold per comparison class (host noise measured
-    # <=15% at the >=1s keys the check covers):
-    #   min-of-N vs min-of-N . 1.5  (like-for-like)
-    #   single  vs single .... 1.5  (like-for-like, both noisy)
-    #   min-of-N vs single ... 1.3  (clean current vs noisy baseline:
-    #                                tighten, else under-flags)
-    #   single vs min-of-N ... 1.65 (noisy current vs noise-stripped
-    #                                baseline: widen, else the noise
-    #                                band alone can false-flag)
-    if repeat == 1 and prev_runs > 1:
-        threshold = 1.65
-    elif repeat > 1 and prev_runs == 1:
-        threshold = 1.3
-    else:
-        threshold = 1.5
-    pairing = ("min-of-%d vs min-of-%d" % (repeat, prev_runs)
-               if prev_runs > 1 else f"min-of-{repeat} vs single-run")
-    for name, dt in times.items():
-        p = prev.get(name)
-        if p and p >= 1.0 and dt > threshold * p * contention:
-            print(f"bench: REGRESSION {name}: {dt:.3f}s vs {p:.3f}s "
-                  f"in {prev_name} (contention x{contention:.2f}, "
-                  f"{pairing}, threshold x{threshold})",
-                  file=sys.stderr)
-
-    # Full per-query map to a committed file (not stdout — the driver
-    # keeps only a ~2,000-char stdout tail, see module docstring).
-    # The default path is ROUND-STAMPED (BENCH_DETAIL_r{N}.json) so the
-    # driver's contended per-round run never clobbers a committed solo
-    # record (VERDICT r7 #3); SPARK_GRAFT_BENCH_DETAIL overrides. A
-    # bisect/subset run (SPARK_GRAFT_BENCH_KEYS set) writes no detail
-    # at all unless an explicit override path is given — a partial map
-    # must never seed the regression baseline (ADVICE r7).
+    # Full record to a file (not stdout — only a ~2,000-char stdout
+    # tail is read, see module docstring). A subset run
+    # (SPARK_GRAFT_BENCH_KEYS set) writes only to an explicit
+    # SPARK_GRAFT_BENCH_DETAIL, so a partial map never replaces a full one.
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
     if detail_path is None and not only:
         detail_path = os.path.join(
-            repo_dir, f"BENCH_DETAIL_r{_current_round(repo_dir):02d}.json")
-    best_probe = _best_known_probe(repo_dir, sf)
-    run_condition = "solo"
-    if best_probe is not None and probe_sec > 1.10 * best_probe:
-        run_condition = "contended"
-    detail = {
-        "metric": "headline_suite_seconds",
-        "value": round(total, 3),
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(times),
-        "probe_sec": probe_sec,
-        "runs": repeat,
-        "run_condition": run_condition,
-        "queries": times,
-        "queries_all_runs": all_runs,
-    }
-    # Refuse to clobber an existing record from materially different
-    # run conditions (VERDICT r8 #4: the driver's contended run
-    # overwrote the committed solo r8 record at probe ratio 1.14, under
-    # the old 1.3 threshold): if the target file's probe differs >10%
-    # in EITHER direction, divert this run to a suffixed file —
-    # slower-probe runs are contended, faster-probe runs would make
-    # the committed baseline incomparable the other way.
-    if detail_path is not None and os.path.exists(detail_path):
-        try:
-            old = json.load(open(detail_path))
-            old_probe = float(old.get("probe_sec") or 0)
-            if old_probe > 0 and (probe_sec > 1.10 * old_probe
-                                  or probe_sec < old_probe / 1.10):
-                suffix = (".contended.json"
-                          if probe_sec > old_probe else ".fastprobe.json")
-                detail_path = detail_path.replace(".json", suffix)
-        except (OSError, json.JSONDecodeError, TypeError, ValueError):
-            pass
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     if detail_path is not None:
+        detail = {
+            "metric": "headline_suite_seconds",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "sf_dir": os.path.basename(sf_dir.rstrip("/")),
+            "n_queries": len(times),
+            "cpus": int(cpus),
+            "runs": repeat,
+            "queries": times,
+            "queries_all_runs": all_runs,
+        }
         try:
             with open(detail_path, "w") as f:
                 json.dump(detail, f, indent=1, sort_keys=True)

@@ -13,6 +13,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def plan_text(df) -> str:
+    """The executed physical plan of ``df``, as plan-shape tests assert on it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
@@ -88,6 +93,12 @@ def jobs_of(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry():
+    from excel_to_db_spark.queries import REGISTRY
+    return REGISTRY
 
 
 @pytest.fixture(scope="session")

@@ -15,6 +15,9 @@ from excel_to_db_spark.ingest import (
 from excel_to_db_spark.sources.xlsx import read_xlsx_rows, sheet_names
 from excel_to_db_spark.sources.xlsx_writer import write_xlsx
 
+from conftest import plan_text
+
+
 def test_demo_sheet_names(demo_xlsx):
     assert sheet_names(demo_xlsx)  # at least one sheet
 
@@ -101,10 +104,6 @@ def _job_ids(spark) -> set[int]:
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_load_submits_no_job_and_caches_a_local_scan(spark, tmp_path):
     """The sheet reaches Spark as one Arrow table (a LocalRelation) and
     the key check runs on the driver: loading submits no job, and the
@@ -115,7 +114,7 @@ def test_load_submits_no_job_and_caches_a_local_scan(spark, tmp_path):
     before = _job_ids(spark)
     df = load_excel_table(spark, p, view_name="local_rows")
     assert _job_ids(spark) == before
-    plan = _executed_plan(df)
+    plan = plan_text(df)
     assert "InMemoryRelation" in plan and "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert df.count() == 200
@@ -280,7 +279,7 @@ def test_inferred_load_is_a_local_scan_with_named_overflow(spark, tmp_path):
     before = _job_ids(spark)
     df = load_excel_table_inferred(spark, p, view_name="inf_local")
     assert _job_ids(spark) == before
-    assert "LocalTableScan" in _executed_plan(df)
+    assert "LocalTableScan" in plan_text(df)
     assert [(f.dataType.simpleString(), f.nullable)
             for f in df.schema.fields] == [
         ("string", True), ("bigint", True), ("double", True),

@@ -14,15 +14,13 @@ from excel_to_db_spark.queries.curation2 import (
 )
 from excel_to_db_spark.queries.similarity2 import similarity_pq
 
-
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import plan_text
 
 
 def test_split_census_prunes_text_column(spark, sf_dir):
     """The census never reads document text: ReadSchema must project
     only (doc_id, lang, n_chars)."""
-    plan = _plan(pipeline_train_val_split(spark, sf_dir))
+    plan = plan_text(pipeline_train_val_split(spark, sf_dir))
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan and all("text" not in ln for ln in scan)
     assert "HashAggregate" in plan
@@ -36,7 +34,7 @@ def test_winnowing_is_shuffle_free(spark, sf_dir):
     the md5-transform must sit ABOVE it — a size(hs)-style filter
     pushed below would re-run the HOF at scan width (the jaccard_pairs
     trap, 17.4s -> 5.2s here at jittered sf1)."""
-    plan = _plan(text_winnowing(spark, sf_dir))
+    plan = plan_text(text_winnowing(spark, sf_dir))
     assert "Exchange hashpartitioning" not in plan
     assert "CartesianProduct" not in plan
     rr = [ln for ln in plan.splitlines()
@@ -53,7 +51,7 @@ def test_cdc_chunks_shuffle_only_fingerprints(spark, sf_dir):
     """Chunk splitting is executor-side; the only shuffles key on the
     (source, sig) fingerprint aggregate — chunk text appears in no
     Exchange expression."""
-    plan = _plan(text_cdc_chunks(spark, sf_dir))
+    plan = plan_text(text_cdc_chunks(spark, sf_dir))
     assert "CartesianProduct" not in plan
     ex = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
     assert ex and all("sig" in ln or "source" in ln for ln in ex)
@@ -64,12 +62,12 @@ def test_feature_hashing_is_shuffle_free(spark, sf_dir):
     (the groupBy formulation it replaced had two)."""
     from excel_to_db_spark.queries.curation2 import text_feature_hashing
 
-    plan = _plan(text_feature_hashing(spark, sf_dir))
+    plan = plan_text(text_feature_hashing(spark, sf_dir))
     assert "Exchange" not in plan
 
 
 def test_source_matrix_is_sig_equi_join(spark, sf_dir):
-    plan = _plan(dedup_source_matrix(spark, sf_dir))
+    plan = plan_text(dedup_source_matrix(spark, sf_dir))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "sig" in plan
 
@@ -77,6 +75,6 @@ def test_source_matrix_is_sig_equi_join(spark, sf_dir):
 def test_pq_codebook_joins_are_broadcast(spark, sf_dir):
     """Encode and ADC both join a 128-row broadcast side; the vector
     side must never shuffle for the join itself."""
-    plan = _plan(similarity_pq(spark, sf_dir))
+    plan = plan_text(similarity_pq(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan

@@ -17,11 +17,7 @@ bought. Pins (VERDICT r11 #6 + the r12 rewrites):
 
 from __future__ import annotations
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import SF_DIR, plan_text
 
 
 def _no_checkpoint(monkeypatch):
@@ -44,7 +40,7 @@ def _no_checkpoint(monkeypatch):
 def test_stateful_timeout_is_one_pass_batch_window(spark, registry=None):
     from excel_to_db_spark.queries.curation2 import stream_stateful_timeout
 
-    plan = _plan(stream_stateful_timeout(spark, SF_DIR))
+    plan = plan_text(stream_stateful_timeout(spark, SF_DIR))
     assert "FlatMapGroups" not in plan and "EvalPython" not in plan \
         and "MapInArrow" not in plan, "no Python boundary in the plan"
     assert plan.count("Exchange hashpartitioning") == 1, \
@@ -60,7 +56,7 @@ def test_wedge_keys_share_one_checkpointed_edge_set(spark):
 
     for fn in (graph_jaccard_neighbors, graph_link_prediction_panel,
                graph_lp_holdout_eval):
-        plan = _plan(fn(spark, SF_DIR))
+        plan = plan_text(fn(spark, SF_DIR))
         assert "Scan parquet" not in plan, \
             f"{fn.__name__}: every subtree must read the ONE " \
             "checkpointed edge projection (r11 re-scanned lineitem 6x)"
@@ -76,7 +72,7 @@ def test_kcore_rounds_are_delta_degree_updates(spark, monkeypatch):
     _no_checkpoint(monkeypatch)
     from excel_to_db_spark.queries.estimation import graph_kcore
 
-    plan = _plan(graph_kcore(spark, SF_DIR))
+    plan = plan_text(graph_kcore(spark, SF_DIR))
     assert "LeftSemi" not in plan, \
         "r11 re-materialized the edge set per round via two LeftSemi " \
         "joins; r12 rounds update the degree vector only"
@@ -86,7 +82,7 @@ def test_lpa_rounds_broadcast_the_label_side(spark, monkeypatch):
     _no_checkpoint(monkeypatch)
     from excel_to_db_spark.queries.graphcomm import graph_label_propagation
 
-    plan = _plan(graph_label_propagation(spark, SF_DIR))
+    plan = plan_text(graph_label_propagation(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, \
         "each LPA round must broadcast the node-sized label frame"
 
@@ -94,7 +90,7 @@ def test_lpa_rounds_broadcast_the_label_side(spark, monkeypatch):
 def test_fellegi_pair_stage_is_regex_split_free(spark):
     from excel_to_db_spark.queries.linkage import linkage_fellegi_sunter
 
-    plan = _plan(linkage_fellegi_sunter(spark, SF_DIR))
+    plan = plan_text(linkage_fellegi_sunter(spark, SF_DIR))
     assert "substring_index" in plan
     import re
 
@@ -115,7 +111,7 @@ def test_dq_census_keys_are_one_aggregating_plan(spark):
     for fn, min_aggs in ((dq_inclusion_census, 5),
                          (dq_key_discovery, 5),
                          (dq_orphan_audit, 4)):
-        plan = _plan(fn(spark, SF_DIR))
+        plan = plan_text(fn(spark, SF_DIR))
         assert plan.count("HashAggregate") >= min_aggs, \
             f"{fn.__name__}: branch aggregates missing from the plan"
         assert "LocalTableScan" not in plan, \

@@ -10,23 +10,13 @@ lost map-side prune) fails here before any benchmark notices.
 
 from __future__ import annotations
 
-import pytest
+from conftest import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def registry():
-    from excel_to_db_spark.queries import REGISTRY
-    return REGISTRY
-
-
 def test_null_safe_join_stays_hashable(spark, registry):
-    plan = _plan(registry["join_null_safe"].fn(spark, SF_DIR))
+    plan = plan_text(registry["join_null_safe"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, \
         "eqNullSafe must hash-join (EqualNullSafe is a valid hash key)"
     assert "BroadcastNestedLoopJoin" not in plan, \
@@ -34,13 +24,13 @@ def test_null_safe_join_stays_hashable(spark, registry):
 
 
 def test_relational_division_broadcasts_universe(spark, registry):
-    plan = _plan(registry["relational_division"].fn(spark, SF_DIR))
+    plan = plan_text(registry["relational_division"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_sequence_gaps_bucketed_window(spark, registry):
-    plan = _plan(registry["sequence_gaps"].fn(spark, SF_DIR))
+    plan = plan_text(registry["sequence_gaps"].fn(spark, SF_DIR))
     assert "hashpartitioning(bucket" in plan, \
         "full-sequence lead() must run inside hash-partitioned buckets"
     # exactly one single-partition exchange: the per-bucket min/max
@@ -49,13 +39,13 @@ def test_sequence_gaps_bucketed_window(spark, registry):
 
 
 def test_window_exclude_single_shuffle(spark, registry):
-    plan = _plan(registry["window_exclude"].fn(spark, SF_DIR))
+    plan = plan_text(registry["window_exclude"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") == 1, \
         "count guard and sum must share one window shuffle"
 
 
 def test_window_groups_frame_single_shuffle(spark, registry):
-    plan = _plan(registry["window_groups_frame"].fn(spark, SF_DIR))
+    plan = plan_text(registry["window_groups_frame"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") == 1, \
         "dense_rank and RANGE frame share the partition key -> one shuffle"
 
@@ -66,7 +56,7 @@ def test_fuzzy_match_blocks_before_metric(spark, registry):
     bit_count long ops) BEFORE the bounded levenshtein — codegen
     short-circuits conjunctions left-to-right, so the order IS the
     filter cascade."""
-    plan = _plan(registry["str_fuzzy_match"].fn(spark, SF_DIR))
+    plan = plan_text(registry["str_fuzzy_match"].fn(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan  # theta join by design
     cond = plan.split("BroadcastNestedLoopJoin")[1].split("\n")[0]
     assert "bit_count" in cond, "signature cascade must stay in the join"
@@ -81,18 +71,18 @@ def test_fuzzy_match_blocks_before_metric(spark, registry):
 
 
 def test_agg_mode_broadcasts_max_counts(spark, registry):
-    plan = _plan(registry["agg_mode"].fn(spark, SF_DIR))
+    plan = plan_text(registry["agg_mode"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
 
 
 def test_pii_scrub_is_pure_map(spark, registry):
-    plan = _plan(registry["text_pii_scrub"].fn(spark, SF_DIR))
+    plan = plan_text(registry["text_pii_scrub"].fn(spark, SF_DIR))
     assert "Exchange" not in plan, \
         "regex scrub is scan->project; any shuffle is a regression"
 
 
 def test_entropy_two_shuffles_max(spark, registry):
-    plan = _plan(registry["text_entropy"].fn(spark, SF_DIR))
+    plan = plan_text(registry["text_entropy"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning") <= 2, \
         "(doc,token) freq + per-doc reduce; more means a lost combine"
 

@@ -7,23 +7,13 @@ the plan property that makes the operator survive a 100x scale-up.
 
 from __future__ import annotations
 
-import pytest
+from conftest import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def registry():
-    from excel_to_db_spark.queries import REGISTRY
-    return REGISTRY
-
-
 def test_basket_affinity_no_self_join_one_fact_shuffle_per_branch(spark, registry):
-    plan = _plan(registry["basket_affinity"].fn(spark, SF_DIR))
+    plan = plan_text(registry["basket_affinity"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, \
         "part dim and brand-count sides must broadcast onto the fact/pairs"
     assert "SortMergeJoin" not in plan, \
@@ -42,7 +32,7 @@ def test_basket_affinity_no_self_join_one_fact_shuffle_per_branch(spark, registr
 
 
 def test_events_markov_single_user_shuffle(spark, registry):
-    plan = _plan(registry["events_markov"].fn(spark, SF_DIR))
+    plan = plan_text(registry["events_markov"].fn(spark, SF_DIR))
     # lead() shuffles once on user_id; the pair groupBy and the
     # per-src normalization window operate on the tiny aggregate.
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \
@@ -50,14 +40,14 @@ def test_events_markov_single_user_shuffle(spark, registry):
 
 
 def test_ts_interpolate_pushes_priority_filter(spark, registry):
-    plan = _plan(registry["ts_interpolate"].fn(spark, SF_DIR))
+    plan = plan_text(registry["ts_interpolate"].fn(spark, SF_DIR))
     assert "PushedFilters: [IsNotNull(o_orderpriority), " \
            "EqualTo(o_orderpriority,1-URGENT)]" in plan, \
         "the priority predicate must reach the parquet scan"
 
 
 def test_pareto_share_partial_aggregation(spark, registry):
-    plan = _plan(registry["pareto_share"].fn(spark, SF_DIR))
+    plan = plan_text(registry["pareto_share"].fn(spark, SF_DIR))
     # map-side partial agg: only |suppliers| keys cross the wire, then
     # the cumulative window runs single-partition on the aggregate.
     assert plan.count("HashAggregate") >= 2, \
@@ -67,7 +57,7 @@ def test_pareto_share_partial_aggregation(spark, registry):
 
 
 def test_rolling_anomaly_one_stream_shuffle_no_python(spark, registry):
-    plan = _plan(registry["events_rolling_anomaly"].fn(spark, SF_DIR))
+    plan = plan_text(registry["events_rolling_anomaly"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \
         "all three window aggregates share one user_id shuffle"
     assert "EvalPython" not in plan, \
@@ -75,7 +65,7 @@ def test_rolling_anomaly_one_stream_shuffle_no_python(spark, registry):
 
 
 def test_inter_arrival_two_shuffles_exact_micros(spark, registry):
-    plan = _plan(registry["events_inter_arrival"].fn(spark, SF_DIR))
+    plan = plan_text(registry["events_inter_arrival"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1
     assert "unix_micros" in plan, \
         "deltas must subtract integer microseconds, not float seconds"
@@ -84,7 +74,7 @@ def test_inter_arrival_two_shuffles_exact_micros(spark, registry):
 def test_pagerank_scans_fact_once_at_runtime(spark, registry):
     df = registry["graph_pagerank3"].fn(spark, SF_DIR)
     df.collect()  # finalize the adaptive plan
-    plan = _plan(df)
+    plan = plan_text(df)
     # the three unrolled iterations inline the edge subtree statically,
     # but AQE must collapse them: the edge shuffle executes once and the
     # later iterations read it back as ReusedExchange.
@@ -95,7 +85,7 @@ def test_pagerank_scans_fact_once_at_runtime(spark, registry):
 
 
 def test_window_ewma_one_shuffle_no_python(spark, registry):
-    plan = _plan(registry["window_ewma"].fn(spark, SF_DIR))
+    plan = plan_text(registry["window_ewma"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \
         "frame collection and head-row pick share one user_id shuffle"
     assert "EvalPython" not in plan, \
@@ -103,14 +93,14 @@ def test_window_ewma_one_shuffle_no_python(spark, registry):
 
 
 def test_agg_decimal_exact_partial_aggregation(spark, registry):
-    plan = _plan(registry["agg_decimal_exact"].fn(spark, SF_DIR))
+    plan = plan_text(registry["agg_decimal_exact"].fn(spark, SF_DIR))
     assert plan.count("HashAggregate") >= 2, \
         "decimal sums must partial-aggregate map-side like any sum"
     assert "sum_price" in plan
 
 
 def test_mom_growth_broadcast_dim_single_fact_shuffle(spark, registry):
-    plan = _plan(registry["mom_growth"].fn(spark, SF_DIR))
+    plan = plan_text(registry["mom_growth"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, "customer dim must broadcast"
     assert "SortMergeJoin" not in plan
     # one fact shuffle (monthly agg); the lag window runs on the aggregate
@@ -118,13 +108,13 @@ def test_mom_growth_broadcast_dim_single_fact_shuffle(spark, registry):
 
 
 def test_rolling_median_single_user_shuffle(spark, registry):
-    plan = _plan(registry["window_rolling_median"].fn(spark, SF_DIR))
+    plan = plan_text(registry["window_rolling_median"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \
         "frame median and head-row pick share one user_id shuffle"
 
 
 def test_rolling_wau_explode_not_range_join(spark, registry):
-    plan = _plan(registry["rolling_wau"].fn(spark, SF_DIR))
+    plan = plan_text(registry["rolling_wau"].fn(spark, SF_DIR))
     assert "Generate explode" in plan, \
         "WAU must explode bounded 7-day contributions, not range-join"
     # the only nested-loop join allowed is the 1-row max_day clip
@@ -132,14 +122,14 @@ def test_rolling_wau_explode_not_range_join(spark, registry):
 
 
 def test_attribution_single_window_no_self_join(spark, registry):
-    plan = _plan(registry["attribution_last_touch"].fn(spark, SF_DIR))
+    plan = plan_text(registry["attribution_last_touch"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \
         "carry-forward click runs in one user_id window shuffle"
     assert "Join" not in plan, "no purchase x click self-join"
 
 
 def test_group_mad_outliers_broadcasts_stats(spark, registry):
-    plan = _plan(registry["group_mad_outliers"].fn(spark, SF_DIR))
+    plan = plan_text(registry["group_mad_outliers"].fn(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, \
         "per-group median/MAD must broadcast back onto the fact rows"
     assert "SortMergeJoin" not in plan, \

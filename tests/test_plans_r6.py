@@ -6,11 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import SF_DIR as SF, plan_text
 
 
 def test_simhash_votes_partial_aggregate_single_exchange(spark):
@@ -28,7 +24,7 @@ def test_simhash_votes_partial_aggregate_single_exchange(spark):
          .cast("bigint").alias("hi"))
     votes = base.groupBy("did").agg(
         F.sum(F.shiftright("hi", 1).bitwiseAND(F.lit(1))).alias("v"))
-    plan = _plan(votes)
+    plan = plan_text(votes)
     assert plan.count("HashAggregate") == 2  # partial + final
     assert plan.count("Exchange hashpartitioning(did") == 1
 
@@ -36,7 +32,7 @@ def test_simhash_votes_partial_aggregate_single_exchange(spark):
 def test_minhash_est_joins_are_broadcast(spark):
     from excel_to_db_spark.queries import REGISTRY
 
-    plan = _plan(REGISTRY["dedup_minhash_est"].fn(spark, SF))
+    plan = plan_text(REGISTRY["dedup_minhash_est"].fn(spark, SF))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 3  # df-prune + 2 sig joins
 
@@ -50,14 +46,14 @@ def test_binaryfile_metadata_read_prunes_content(spark, tmp_path):
     (p / "x.bin").write_bytes(b"abc")
     bf = (spark.read.format("binaryFile").load(str(p))
           .select("path", "length"))
-    plan = _plan(bf)
+    plan = plan_text(bf)
     assert "content" not in plan.split("ReadSchema")[-1]
 
 
 def test_similarity_recall_no_cartesian(spark):
     from excel_to_db_spark.queries import REGISTRY
 
-    plan = _plan(REGISTRY["similarity_recall"].fn(spark, SF))
+    plan = plan_text(REGISTRY["similarity_recall"].fn(spark, SF))
     # the only nested-loop is the broadcast query set (the intended
     # brute-force ground-truth scan); never a CartesianProduct
     assert "CartesianProduct" not in plan

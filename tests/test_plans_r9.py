@@ -15,16 +15,14 @@ from excel_to_db_spark.queries.stats_tests import (
     window_rolling_corr,
 )
 
-
-def _plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import plan_text
 
 
 def test_skyline_two_phase_window(spark, sf_dir):
     """Two Window nodes: the hash-partitioned local prune, then the
     global pass over the survivors. The global single-partition sort is
     fed by the pruned set, never by the raw scan."""
-    plan = _plan(skyline_pareto_front(spark, sf_dir))
+    plan = plan_text(skyline_pareto_front(spark, sf_dir))
     assert plan.count("Window") >= 2
     assert "CartesianProduct" not in plan
 
@@ -58,7 +56,7 @@ def test_cuped_broadcasts_theta_state(spark, sf_dir):
     """The 1-row moment aggregate must reach the variant rows via a
     broadcast, and the per-customer table is built by a single
     custkey-keyed aggregation."""
-    plan = _plan(stats_cuped(spark, sf_dir))
+    plan = plan_text(stats_cuped(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
@@ -66,14 +64,14 @@ def test_rolling_corr_single_window_pass(spark, sf_dir):
     """All six moment sums must come from one Window node over the
     daily table — adding moments widens the state, it must not add
     passes."""
-    plan = _plan(window_rolling_corr(spark, sf_dir))
+    plan = plan_text(window_rolling_corr(spark, sf_dir))
     assert plan.count("Window") == 1
 
 
 def test_sparse_cosine_no_cartesian(spark, sf_dir):
     """The pair generation must be an equi-join on the gram key
     (inverted index), never a cartesian/BNLJ over documents."""
-    plan = _plan(text_sparse_cosine(spark, sf_dir))
+    plan = plan_text(text_sparse_cosine(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -7,9 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import plan_text
 
 
 def test_dq_expectations_all_pass_and_single_scan(spark, sf_dir):
@@ -23,7 +21,7 @@ def test_dq_expectations_all_pass_and_single_scan(spark, sf_dir):
     assert rows["null_frac_orderstatus"].metric == 0.0
     assert rows["unique_frac_orderkey"].metric == 1.0
     # one orders scan feeds the metric agg, one the anti join: exactly 2
-    plan = _plan(dq_expectations(spark, sf_dir))
+    plan = plan_text(dq_expectations(spark, sf_dir))
     assert plan.count("orders.parquet") == 2
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
@@ -34,7 +32,7 @@ def test_sample_reservoir_pushes_rank_limit(spark, sf_dir):
     from excel_to_db_spark.queries.quality import sample_reservoir
 
     df = sample_reservoir(spark, sf_dir)
-    assert "WindowGroupLimit" in _plan(df)
+    assert "WindowGroupLimit" in plan_text(df)
     out = df.collect()
     per = {}
     for r in out:
@@ -74,7 +72,7 @@ def test_graph_triangles_counts_each_once(spark, sf_dir):
     # the edge list feeds three self-join references plus the 3-way
     # node union — the expensive fact-side derivation must be computed
     # once and reused, not replayed per reference
-    assert "ReusedExchange" in _plan(df)
+    assert "ReusedExchange" in plan_text(df)
 
 
 def test_decontam_is_directional(spark, sf_dir):

@@ -13,6 +13,8 @@ from excel_to_db_spark.ingest import load_excel_table
 from excel_to_db_spark.repl import run_line
 from excel_to_db_spark.sources.xlsx_writer import write_xlsx
 
+from conftest import plan_text
+
 
 @pytest.fixture()
 def excel_rows(spark):
@@ -224,10 +226,6 @@ def _partitions(spark, name="excel_rows"):
     return spark.table(name).rdd.getNumPartitions()
 
 
-def _executed_plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_excel_rows_stays_one_partition(spark, loaded_rows):
     assert _partitions(spark) == 1
     try_dml(spark, "INSERT INTO excel_rows VALUES ('svc_new', 1.0, 2, 3.0, 0.5)")
@@ -246,7 +244,7 @@ def test_statements_over_excel_rows_plan_no_exchange(spark, loaded_rows):
                 "ORDER BY min_response_time_95_ms DESC) AS r FROM excel_rows",
                 "SELECT count, sum(count) OVER (ORDER BY service_name) AS s "
                 "FROM excel_rows ORDER BY s DESC"):
-        assert "Exchange" not in _executed_plan(spark.sql(sql)), sql
+        assert "Exchange" not in plan_text(spark.sql(sql)), sql
 
 
 def test_repl_statement_runs_one_job(spark, loaded_rows, jobs_of, capsys):

@@ -8,24 +8,14 @@ global sort, passes the oracle but destroys scale behavior.
 
 from __future__ import annotations
 
-import pytest
+from conftest import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def registry():
-    from excel_to_db_spark.queries import REGISTRY
-    return REGISTRY
-
-
 def test_q3_topk_and_broadcast(spark, registry):
     df = registry["tpch_q3"].fn(spark, SF_DIR)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "TakeOrderedAndProject" in plan, "top-10 must not be a global sort"
     assert "BroadcastHashJoin" in plan, "customer dim must broadcast"
     assert df.count() <= 10
@@ -33,12 +23,12 @@ def test_q3_topk_and_broadcast(spark, registry):
 
 def test_q4_semi_join(spark, registry):
     df = registry["tpch_q4"].fn(spark, SF_DIR)
-    assert "LeftSemi" in _plan(df), "EXISTS must lower to a semi join"
+    assert "LeftSemi" in plan_text(df), "EXISTS must lower to a semi join"
     assert df.count() > 0
 
 
 def test_q5_single_shuffle_for_facts(spark, registry):
-    plan = _plan(registry["tpch_q5"].fn(spark, SF_DIR))
+    plan = plan_text(registry["tpch_q5"].fn(spark, SF_DIR))
     # orders⋈lineitem is the only allowed non-broadcast join.
     n_smj_shj = plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin")
     assert n_smj_shj <= 1, f"dims must broadcast, got:\n{plan}"
@@ -46,7 +36,7 @@ def test_q5_single_shuffle_for_facts(spark, registry):
 
 
 def test_q19_stays_equi_join(spark, registry):
-    plan = _plan(registry["tpch_q19"].fn(spark, SF_DIR))
+    plan = plan_text(registry["tpch_q19"].fn(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan, (
         "OR'd predicate groups must not defeat the equi-join extraction")
     assert "BroadcastHashJoin" in plan
@@ -54,12 +44,12 @@ def test_q19_stays_equi_join(spark, registry):
 
 def test_q22_anti_join(spark, registry):
     df = registry["tpch_q22"].fn(spark, SF_DIR)
-    assert "LeftAnti" in _plan(df), "NOT EXISTS must lower to an anti join"
+    assert "LeftAnti" in plan_text(df), "NOT EXISTS must lower to an anti join"
     assert df.count() > 0
 
 
 def test_q15_single_lineitem_scan(spark, registry):
-    plan = _plan(registry["tpch_q15"].fn(spark, SF_DIR))
+    plan = plan_text(registry["tpch_q15"].fn(spark, SF_DIR))
     # The max-revenue comparison must ride on the aggregated revenue
     # relation (window max), not re-scan lineitem for a scalar subquery.
     assert plan.count("lineitem.parquet") == 1, plan
