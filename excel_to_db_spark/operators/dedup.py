@@ -317,64 +317,6 @@ def py_norm_tokens(text: str) -> set:
     return set(text.split(" "))
 
 
-def minhash_signatures_arrow(df: DataFrame, n_hashes: int = 128,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             py_keyset=py_shingles) -> DataFrame:
-    """MinHash signatures as ONE Arrow-vectorized mapInPandas pass —
-    zero shuffle (vs. the explode+groupBy shuffle of
-    :func:`minhash_signatures`) and a constant-size plan (vs. 128
-    unrolled min-agg expressions whose Catalyst analysis + Janino
-    compile alone cost seconds per fresh plan: measured 10.1s -> 5.7s
-    single-shot, 5.3s -> 2.0s steady at sf0.1/local[32]).
-
-    The base hash is crc32 (any 32-bit base works: the universal family
-    (uh_a(i)*h + uh_c(i)) mod 2^32 on top provides the n_hashes
-    independent permutations, and downstream candidates are verified
-    with EXACT Jaccard, so the choice of base never reaches the output
-    contract). Docs with an empty keyset produce no row, matching the
-    explode-based path. At 100 TB this is the production shape:
-    signatures are computed where the documents already live, and the
-    only shuffle in the whole dedup is the tiny banded-bucket exchange."""
-    import numpy as np
-    import pandas as pd
-    import zlib
-
-    A = np.array([uh_a(i) for i in range(n_hashes)], dtype=np.uint64)[:, None]
-    C = np.array([uh_c(i) for i in range(n_hashes)], dtype=np.uint64)[:, None]
-    M = np.uint64((1 << 32) - 1)
-
-    def kernel(batches):
-        for pdf in batches:
-            dids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                # NULL/NaN text: drop the row, matching the SQL engine
-                # (split(NULL) -> NULL -> explode emits nothing) — the
-                # kernel must not crash where engine="sql" succeeds
-                if text is None or (isinstance(text, float)):
-                    continue
-                keys = py_keyset(text)
-                if not keys:
-                    continue
-                hb = np.fromiter((zlib.crc32(s.encode()) for s in keys),
-                                 dtype=np.uint64, count=len(keys))[None, :]
-                sig = ((A * hb + C) & M).min(axis=1)
-                dids.append(did)
-                sigs.append(sig.astype("int64").tolist())
-            # explicit object dtype: an ALL-dropped batch would default
-            # the empty sig column to float64, which Arrow cannot cast
-            # to list<int64> (ArrowNotImplementedError)
-            yield pd.DataFrame({"did": pd.array(dids, dtype="Int64"),
-                                "sig": pd.Series(sigs, dtype="object")})
-
-    # fan_out before the kernel (r11): mapInPandas inherits its input's
-    # partitioning, so on a narrow local scan the ENTIRE Python
-    # signature pass ran in 1-2 Arrow tasks. "Zero shuffle" above
-    # refers to the cluster-scale plan, where the gated fan_out is a
-    # structural no-op.
-    return (fan_out(df.select(id_col, text_col))
-            .mapInPandas(kernel, "did bigint, sig array<bigint>"))
-
-
 def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
                          rows: int, text_col: str = "text",
                          id_col: str = "doc_id",
@@ -406,11 +348,16 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
         for pdf in batches:
             dids, sigs = [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
+                # NULL/NaN text drops the row, as split(NULL) does on
+                # the SQL engine path
                 if text is None or (isinstance(text, float)):
                     continue
                 keys = py_keyset(text)
                 if not keys:
                     continue
+                # any 32-bit base hash works: the universal family on
+                # top gives the n_hashes permutations, and candidates
+                # are verified with exact Jaccard downstream
                 hb = np.fromiter((zlib.crc32(s.encode()) for s in keys),
                                  dtype=np.uint64, count=len(keys))[None, :]
                 dids.append(did)
@@ -494,50 +441,6 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float, n_hashes: int = 64,
             .filter(F.col("jaccard") >= threshold))
 
 
-def hash_bits64(token: Column) -> Column:
-    """Per-token 64-bit hash as a 64-char '0'/'1' string, MSB first (bit
-    i = char 64-i): the first 16 hex chars of md5 via conv(hex,16,2).
-    md5 (unlike xxhash64) exists in every engine, which makes the whole
-    simhash pipeline SQL-expressible — the DuckDB oracle recomputes
-    identical fingerprints (queries/extensions.py dedup_simhash), and
-    tools/simhash_oracle.py is the independent hashlib witness."""
-    return F.lpad(F.conv(F.substring(F.md5(token), 1, 16), 16, 2), 64, "0")
-
-
-def simhash_from_bits(hashes: Column) -> Column:
-    """Fold an array of hash_bits64 strings into the signed-bigint SimHash
-    fingerprint: bit i = sign of the sum over tokens of +-1 votes.
-
-    Keep `hashes` a MATERIALIZED column (not an inline expression): the
-    64 bit-vote aggregates each embed a copy of their input, and
-    CollapseProject leaves an expensive multiply-referenced alias in its
-    own projection — one md5 pass per row instead of 64 (measured 8x)."""
-    def bit_vote(i: int) -> Column:
-        # sum over token hashes of +-1 for bit i; the merge lambda must be
-        # exactly 2-arg (acc, element) for pyspark's higher-order aggregate.
-        def step(acc: Column, h: Column) -> Column:
-            return acc + F.when(F.substring(h, 64 - i, 1) == "1",
-                                F.lit(1)).otherwise(F.lit(-1))
-
-        return F.aggregate(hashes, F.lit(0), step)
-
-    out = F.lit(0).cast("bigint")
-    for i in range(64):
-        out = out + F.when(bit_vote(i) > 0,
-                           F.lit(1).cast("bigint") * (2 ** i if i < 63
-                                                      else -(2 ** 63))
-                           ).otherwise(F.lit(0))
-    return out
-
-
-def simhash64(text: Column, keyset=norm_tokens) -> Column:
-    """Single-expression 64-bit SimHash of the token set (see
-    hash_bits64/simhash_from_bits; prefer the two-stage form in plans —
-    this inline form recomputes the hash array per bit vote)."""
-    return simhash_from_bits(F.transform(keyset(text),
-                                         lambda t: hash_bits64(t)))
-
-
 def simhash_pairs(df: DataFrame, max_hamming: int = 8,
                   text_col: str = "text", id_col: str = "doc_id",
                   n_blocks: int = 4, keyset=norm_tokens) -> DataFrame:
@@ -553,12 +456,12 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     set (queries/extensions.py dedup_simhash)."""
     bits_per = 64 // n_blocks
     # Explode + 64 partial-agg vote sums (the minhash shape): one shuffle
-    # carrying a 64-wide row per doc per partition. The single-expression
-    # HOF form (simhash64) is semantically identical but its 64 nested
-    # array-aggregates cost ~15s of analysis/codegen alone — the explode
-    # form plans in well under a second and map-side combines at scale.
-    # explode_outer keeps empty-shingle docs (fingerprint 0), matching
-    # the HOF form and both oracles. fan_out first (r11): the keyset
+    # carrying a 64-wide row per doc per partition. A single-expression
+    # higher-order-function form is semantically identical but its 64
+    # nested array-aggregates cost ~15s of analysis/codegen alone — the
+    # explode form plans in well under a second and map-side combines at
+    # scale. explode_outer keeps empty-shingle docs (fingerprint 0),
+    # matching both oracles. fan_out first (r11): the keyset
     # HOF + md5 explode otherwise run at the local fixture's 1-2 split
     # width — measured 15.1s for a 1-2s stage at jittered sf1.
     toks = fan_out(df).select(F.col(id_col).alias("did"),

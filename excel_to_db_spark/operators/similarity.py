@@ -448,62 +448,3 @@ def pca_power_squared(vectors: DataFrame, vec_col: str = "embedding",
     data = [(d, round(sgn * v[d] / nrm, 6), share) for d in range(dim)]
     return spark.createDataFrame(data, "dim int, loading double, "
                                        "eigval_share double")
-
-
-def pca_power(vectors: DataFrame, vec_col: str = "embedding",
-              dim: int = 64, iters: int = 2000,
-              fixed_iters: int | None = None) -> DataFrame:
-    """First principal direction of the (uncentered) embedding cloud by
-    power iteration on the exact integer Gramian — distributed PCA in
-    the lloyd_kmeans mold: the cluster computes the d^2 sufficient
-    statistic in one pass; the driver iterates only on that tiny
-    state (64x64 matvecs), never on data. Uncentered PCA is the
-    norm for embedding spaces (direction of maximal second moment);
-    centering would subtract the broadcastable mean vector first —
-    same shape, one more tiny aggregate.
-
-    Determinism: the Gramian is exact int64, its float64 image is a
-    deterministic conversion, and numpy's fixed-iteration matvec is
-    bit-stable, so loadings are engine-independent; the sign is
-    canonicalized (largest-|loading| component positive). Returns
-    (dim, loading, eigval_share) with loadings rounded to 6 dp."""
-    import numpy as np
-
-    rows = gramian_int(vectors, vec_col, dim).collect()
-    G = np.zeros((dim, dim), dtype=np.float64)
-    for r in rows:
-        G[r["i"], r["j"]] = float(r["g"])
-    v = np.ones(dim) / np.sqrt(dim)
-    if fixed_iters is not None:
-        # Fixed-STEP mode (cross-engine contract): exactly fixed_iters
-        # normalized matvecs, no convergence break. The k-step iterate
-        # is a well-defined engine-independent statistic even when the
-        # eigengap is too tight for full convergence (the sf testdata's
-        # synthetic embeddings have lambda2/lambda1 = 0.984, needing
-        # ~1800 steps to 1e-13) — arithmetic-order noise between numpy
-        # and a SQL recursion is damped by the normalization and stays
-        # ~1e-13 after 64 steps, far inside the 6-dp rounding.
-        for _ in range(fixed_iters):
-            w = G @ v
-            v = w / np.linalg.norm(w)
-    else:
-        for _ in range(iters):
-            w = G @ v
-            w = w / np.linalg.norm(w)
-            # Fixed-point check: convergence rate is (lambda2/lambda1)^k,
-            # so a tight eigengap needs hundreds of 64x64 matvecs — still
-            # microseconds of driver time, bit-deterministic.
-            if np.max(np.abs(w - v)) < 1e-13:
-                v = w
-                break
-            v = w
-    lam = float(v @ (G @ v))
-    share = lam / float(np.trace(G))
-    k = int(np.argmax(np.abs(v)))
-    if v[k] < 0:
-        v = -v
-    spark = vectors.sparkSession
-    data = [(d, round(float(v[d]), 6), round(share, 6))
-            for d in range(dim)]
-    return spark.createDataFrame(data, "dim int, loading double, "
-                                       "eigval_share double")

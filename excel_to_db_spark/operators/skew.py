@@ -13,6 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Row bound below which a frame is safe to broadcast or collect to the
+# driver: bounded_broadcast's gate, and the keys that size their own
+# broadcast or driver-side paths from parquet footers.
+BROADCAST_ROW_LIMIT = 8_000_000
+
 
 def salted_join(big: DataFrame, small: DataFrame, big_key: str,
                 small_key: str, n_salts: int = 8, how: str = "inner"
@@ -40,8 +45,8 @@ def salted_join(big: DataFrame, small: DataFrame, big_key: str,
     return out.drop("_salt")
 
 
-def bounded_broadcast(df: DataFrame, sf_dir: str, tables: tuple[str, ...],
-                      limit_rows: int = 8_000_000) -> DataFrame:
+def bounded_broadcast(df: DataFrame, sf_dir: str,
+                      tables: tuple[str, ...]) -> DataFrame:
     """Broadcast hint GATED on the frame's proven row bound (r11).
 
     CALLER CONTRACT (ADVICE r11): nothing here validates that `tables`
@@ -59,15 +64,14 @@ def bounded_broadcast(df: DataFrame, sf_dir: str, tables: tuple[str, ...],
     unconditionally — would hard-fail (8 GB broadcast cap / driver
     OOM) at a scale factor where the bounding DIMENSION has grown
     data-sized, exactly the graceful-degradation the plain join kept.
-    This gate reads the bounding tables' parquet footers (no job, the
-    _sessionizer_state_partitions pattern): the frame is provably no
-    larger than the sum of its bounding dimensions' row counts, so
-    below `limit_rows` the hint is safe; above it — or whenever the
-    bound can't be established (non-file source, missing table) — the
-    frame is returned unhinted and the join degrades to sort-merge,
-    the scale-correct default."""
+    This gate reads the bounding tables' parquet footers (footer_rows,
+    no job): the frame is provably no larger than the sum of its
+    bounding dimensions' row counts, so below BROADCAST_ROW_LIMIT the
+    hint is safe; above it — or whenever the bound can't be established
+    (non-file source, missing table) — the frame is returned unhinted
+    and the join degrades to sort-merge, the scale-correct default."""
     total = footer_rows(sf_dir, tables)
-    if total is None or total > limit_rows:
+    if total is None or total > BROADCAST_ROW_LIMIT:
         return df
     return F.broadcast(df)
 
@@ -97,7 +101,7 @@ def footer_rows(sf_dir: str, tables: tuple[str, ...]) -> int | None:
     return total
 
 
-def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Explicit-N repartition, GATED on the input scan actually being
     narrow — the round-9 generalization of the round-8 parallelism-
     collapse fixes (ml_knn_classify, dedup_embedding, str_fuzzy_match).
@@ -120,12 +124,8 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     repartition the r8 fixes used would instead round-robin the whole
     table through one extra exchange for nothing. Non-local storage
     schemes (s3/hdfs/...) skip the repartition for the same reason:
-    unknown split counts at that scale mean wide scans.
-
-    ``factor`` multiplies the target partition count for pipelines
-    whose per-row compute is extreme (quadratic probe sides may want
-    factor=2 for scheduler headroom); the default matches the
-    session's shuffle parallelism."""
+    unknown split counts at that scale mean wide scans. The target
+    partition count is the session's shuffle parallelism."""
     import os
     from urllib.parse import urlparse
 
@@ -155,7 +155,7 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
         return df                  # can't estimate -> don't reshuffle
     if est_splits >= max(2, n_parts // 2):
         return df
-    return df.repartition(n_parts * max(1, factor))
+    return df.repartition(n_parts)
 
 
 _BYTE_SUFFIX = {"": 1, "b": 1,

@@ -6,7 +6,7 @@ with :func:`excel_to_db_spark.queries.registry.query`. ``__spark_entry__``
 exposes the result via ``queries()`` / ``oracle_sql()``.
 """
 
-from .registry import REGISTRY, QuerySpec, oracle_sqls, query, spark_queries
+from .registry import REGISTRY, QuerySpec, oracle_sqls, query
 
 # Registration side effects — each import adds its operators to REGISTRY.
 from . import relational  # noqa: E402,F401  Tier B: scans/joins/aggs/windows/setops
@@ -203,7 +203,6 @@ __all__ = [
     "REGISTRY",
     "QuerySpec",
     "query",
-    "spark_queries",
     "oracle_sqls",
     "relational",
 ]

@@ -1432,8 +1432,8 @@ def embedding_pca_power(spark, sf_dir):
     truncate-toward-zero rescale), so the oracle's 11 chained CTEs
     reproduce the iterate bit-for-bit; only the final normalization
     and the Rayleigh share divide exact integers as doubles. The
-    converged float path keeps its independent numpy.linalg.eigh
-    witness in tests/test_pca_power.py."""
+    iterate's direction keeps an independent numpy.linalg.eigh witness
+    in tests/test_pca_power.py."""
     from ..operators.similarity import pca_power_squared
 
     return pca_power_squared(T(spark, sf_dir, "embeddings"))

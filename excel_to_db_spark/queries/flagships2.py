@@ -42,7 +42,6 @@ from .registry import query
 from .relational import T
 from ..numerics import h32
 
-_HLL_P = 6
 _HLL_M = 64
 _W_BITS = 26                       # 32 - p
 _POW_W = 1 << _W_BITS              # 2^26

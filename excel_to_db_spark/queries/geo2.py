@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.skew import BROADCAST_ROW_LIMIT
 from .registry import query
 from .relational import T
 from .geo import _LAT_SPAN, _LON_SPAN, _TX8, _TY8, _pts, _pts_sql
@@ -43,7 +44,7 @@ _SUPP_SQL = _pts_sql("supplier", "s_suppkey", "s_nationkey", "s")
 # AND by a size/mtime fingerprint of the two parquet tables so a fixture
 # rebuilt in place at a different scale (tools/make_scale.py) while the
 # application stays alive can't serve a stale g / n_cust — a stale
-# n_cust below _BCAST_ROW_CAP would keep the broadcast hint on a
+# n_cust below BROADCAST_ROW_LIMIT would keep the broadcast hint on a
 # now-fact-sized frame (ADVICE r9).
 _NEAREST_CACHE: dict[tuple[str, str, tuple], tuple[int, int]] = {}
 
@@ -75,14 +76,6 @@ def _fixture_fingerprint(sf_dir: str, *tables: str) -> tuple:
         except OSError:
             sig.append((t, -1, -1))
     return tuple(sig)
-
-# Above this row count the per-customer intermediates (certified,
-# best_b) stop being broadcast-safe (driver memory) and the
-# re-derivation joins fall back to shuffle joins on cust_id — they
-# carry ~14 rows/customer either way, so the shuffle is proportional
-# to the candidate mass, not to N*M (ADVICE r8: the hints must not be
-# unconditional).
-_BCAST_ROW_CAP = 8_000_000
 
 
 _NEAREST_SQL = f"""
@@ -144,7 +137,7 @@ def _nearest(spark, sf_dir, _g_override=None):
     codegen and ran 20-70x slower (r6 note). The probe side keeps its
     explicit-N repartition (single parquet split otherwise feeds the
     pipeline through one task), and the per-customer minima carry the
-    broadcast hint only below ``_BCAST_ROW_CAP`` customers — past
+    broadcast hint only below ``BROADCAST_ROW_LIMIT`` customers — past
     that the re-derivation joins shuffle on cust_id instead (they
     carry ~14 rows/customer, not M, so the shuffle is candidate-mass
     proportional). g and the customer count are derived once per
@@ -173,7 +166,8 @@ def _nearest(spark, sf_dir, _g_override=None):
     # count (one row per certified/escalated customer) — broadcast only
     # while that bound fits in driver memory, else let the planner
     # shuffle-join on cust_id.
-    hint_small = F.broadcast if n_cust <= _BCAST_ROW_CAP else (lambda df: df)
+    hint_small = (F.broadcast if n_cust <= BROADCAST_ROW_LIMIT
+                  else (lambda df: df))
     d2 = ((F.col("latp") - F.col("slat")) * (F.col("latp") - F.col("slat"))
           + (F.col("lonp") - F.col("slon"))
           * (F.col("lonp") - F.col("slon")))

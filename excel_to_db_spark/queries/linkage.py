@@ -486,7 +486,7 @@ def linkage_transitive_merge(spark, sf_dir):
     # stats made every round sort-merge both sides; broadcasting the
     # labels makes each round one map pass over the checkpointed edge
     # list plus the min-label groupBy shuffle (guide §3). ADVICE r11:
-    # the gate names the part table TWICE so limit_rows matches the
+    # the gate names the part table TWICE so the bound it checks is the
     # documented 2x bound.
     from ..operators.skew import bounded_broadcast
 

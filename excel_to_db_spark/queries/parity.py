@@ -25,6 +25,12 @@ from ..numerics import cents_sum as _cents_sum
 from .registry import query
 
 DEMO_XLSX = "/root/reference/demo.xlsx"
+if not os.path.exists(DEMO_XLSX):
+    # No reference checkout: the committed copy of the same two golden
+    # rows, written with sources/xlsx_writer.write_xlsx.
+    DEMO_XLSX = os.path.normpath(os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), os.pardir, os.pardir,
+        "tests", "fixtures", "demo.xlsx"))
 
 
 @query("excel_scan", oracle="""

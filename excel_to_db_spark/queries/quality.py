@@ -670,34 +670,6 @@ def observed_metrics(spark, sf_dir):
         "n_rows long, n_big long, sum_price double")
 
 
-def zlib_compression_sizes(spark, sf_dir):
-    """Real-compressor quality signal: per-doc zlib(level 6) byte counts
-    via a mapInPandas batch kernel — compression is genuinely
-    Python-side work (zlib, stdlib), the same boundary shape as the
-    multimodal codecs, with only (doc_id, sizes) crossing back. zlib's
-    EXACT byte counts are implementation-defined (they vary across zlib
-    builds/levels), so this is the production filter, witnessed by
-    direct-zlib recomputation in tests/test_compression_quality.py —
-    while the registered `text_compression_quality` key uses the
-    engine-checkable LZ-complexity contract below."""
-    import pandas as pd
-
-    def kernel(batches):
-        import zlib
-
-        for pdf in batches:
-            comp = [len(zlib.compress(t.encode("utf-8"), 6))
-                    for t in pdf["text"]]
-            raw = [len(t.encode("utf-8")) for t in pdf["text"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "raw_bytes": pd.array(raw, dtype="int64"),
-                                "zlib_bytes": pd.array(comp, dtype="int64")})
-
-    docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        kernel, "doc_id bigint, raw_bytes bigint, zlib_bytes bigint")
-
-
 @query("text_compression_quality", oracle="""
     WITH g AS (
         SELECT doc_id, length(text) AS raw_chars,
@@ -725,9 +697,7 @@ def text_compression_quality(spark, sf_dir):
     total-8-grams — integer-exact on both engines, the dictionary-size
     measure an LZ compressor's output tracks — because zlib's exact
     byte counts are implementation-defined and DuckDB has no zlib, so a
-    real-DEFLATE key could never be hash-checked cross-engine. The
-    real-zlib production kernel remains available as
-    :func:`zlib_compression_sizes` with its direct-zlib pytest witness.
+    real-DEFLATE key could never be hash-checked cross-engine.
     Character 8-grams catch sub-word degeneracy ('aaaa…') that the
     word-gram `text_repetition` filter misses. Pure per-row array
     arithmetic + a 20-row top-k: zero shuffles before the final

@@ -15,7 +15,7 @@ vs Spark INT).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,14 +28,12 @@ class QuerySpec:
     name: str
     fn: SparkQuery
     oracle: str | None = None     # None => driver does a rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def query(name: str, oracle: str | None = None):
     """Decorator: register a Spark query under `name`."""
     def deco(fn: SparkQuery) -> SparkQuery:
         # A duplicate name would SILENTLY shadow the earlier key (plain
@@ -45,14 +43,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
             raise ValueError(
                 f"query key {name!r} already registered "
                 f"(by {REGISTRY[name].fn.__module__}); rename one")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle,
-                                   tags=tags, doc=(fn.__doc__ or "").strip())
+        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle)
         return fn
     return deco
-
-
-def spark_queries() -> dict[str, SparkQuery]:
-    return {k: v.fn for k, v in REGISTRY.items()}
 
 
 def oracle_sqls() -> dict[str, str]:

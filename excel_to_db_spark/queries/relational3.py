@@ -397,10 +397,10 @@ def str_fuzzy_match(spark, sf_dir):
                & (sig_l1 <= 6)
                & (bg_l1 <= 12))
 
-    from ..operators.skew import footer_rows
+    from ..operators.skew import BROADCAST_ROW_LIMIT, footer_rows
 
     dim_rows = footer_rows(sf_dir, ("part",))
-    if dim_rows is None or dim_rows > 8_000_000:
+    if dim_rows is None or dim_rows > BROADCAST_ROW_LIMIT:
         # Scale-out path: the verify dictionary (like the broadcast
         # build side above it) is bounded by the distinct-name
         # dimension; past the broadcast class, keep the whole cascade +

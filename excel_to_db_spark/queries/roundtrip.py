@@ -43,7 +43,7 @@ def sqlite_roundtrip(spark, sf_dir):
     aggregate is computed in integer cents so the value that crosses the
     SQLite REAL hop is a short exact decimal. At 100 TB the sink input
     is an aggregate by construction (toLocalIterator streams it); the
-    full-fact path is write_jdbc's executor-parallel write."""
+    full-fact path is Spark's executor-parallel `df.write.jdbc`."""
     from ..sinks.db import write_sqlite
 
     agg = (T(spark, sf_dir, "orders")

@@ -156,11 +156,6 @@ def stats_sprt(spark, sf_dir):
 
 # --------------------------------- AdaBoost, 2 rounds over histograms
 
-_ADA_H = ("CAST(('0x' || substr(md5('cv:' || CAST(l_orderkey AS "
-          "VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)), 1, 8))"
-          "::UBIGINT AS BIGINT) % 5")
-
-
 @query("ml_adaboost", oracle="""
     WITH rows_ AS (
         SELECT CAST(l_quantity AS BIGINT) AS q,

@@ -2,23 +2,21 @@
 
 The reference's sink is an in-process SQLite database built with a
 per-row prepared-INSERT loop (reference src/main.rs:87-128, one
-autocommit per row — the classic slow path). Two sinks here:
+autocommit per row — the classic slow path).
 
-- `write_sqlite`: single-node parity with the reference (its DB is
-  in-process anyway). Streams `toLocalIterator` partition batches into
-  executemany inside ONE transaction — the driver never materializes
-  the full table, and the transaction batching alone is orders of
-  magnitude faster than the reference's per-row autocommit.
-- `write_jdbc`: the cluster path — executors write partitions in
-  parallel through `df.write.jdbc` (requires the target's JDBC driver
-  jar on the classpath; not bundled in this environment, so the call is
-  a thin documented wrapper).
+`write_sqlite` is single-node parity with the reference (its DB is
+in-process anyway). It streams `toLocalIterator` partition batches into
+executemany inside ONE transaction — the driver never materializes the
+full table, and the transaction batching alone is orders of magnitude
+faster than the reference's per-row autocommit. The cluster path is
+Spark's own `df.write.jdbc(url, table, ...)`: executors write their
+partitions in parallel, given the target's JDBC driver jar on the
+classpath.
 """
 
 from __future__ import annotations
 
 import sqlite3
-from typing import Iterable
 
 from pyspark.sql import DataFrame
 
@@ -101,13 +99,3 @@ def write_sqlite(df: DataFrame, path: str, table: str = "excel_rows", *,
         return n
     finally:
         con.close()
-
-
-def write_jdbc(df: DataFrame, url: str, table: str,
-               properties: dict | None = None, mode: str = "overwrite",
-               num_partitions: int | None = None) -> None:
-    """Cluster-parallel DB write: each executor partition opens its own
-    connection and writes its slice (`numPartitions` caps concurrent
-    connections). Requires the target database's JDBC driver jar."""
-    out = df.repartition(num_partitions) if num_partitions else df
-    out.write.jdbc(url, table, mode=mode, properties=properties or {})

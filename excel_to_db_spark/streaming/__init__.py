@@ -9,11 +9,8 @@ paths agree on finite input).
 """
 
 from .stateful import (  # noqa: F401
-    run_stateful_max,
     run_stateful_totals,
-    stateful_user_max,
     stateful_user_totals,
-    transform_with_state_available,
 )
 from .windows import (  # noqa: F401
     events_stream_reader,

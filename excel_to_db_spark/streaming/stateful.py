@@ -16,9 +16,8 @@ emits on every update.
 
 from __future__ import annotations
 
-import os
 import uuid
-from typing import Any, Iterable, Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -56,140 +55,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
                                     stateStructType=STATE_SCHEMA,
                                     outputMode="update",
                                     timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-TWS_OUT_SCHEMA = "user_id bigint, n_events bigint, max_value double"
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class UserMaxProcessor(StatefulProcessor):
-    """transformWithState processor (the Spark 4 stateful API that
-    supersedes applyInPandasWithState): per-user event count + running
-    max value held in a typed ValueState. Unlike the GroupState API,
-    state here is composable (value/list/map states per key), timers are
-    first-class, and the state store is RocksDB — the production-scale
-    backend where per-key state spills to disk instead of executor heap."""
-
-    def init(self, handle) -> None:
-        self._agg = handle.getValueState("agg", "n bigint, mx double")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as _pd
-
-        prev = self._agg.get() if self._agg.exists() else None
-        n, mx = prev if prev is not None else (0, float("-inf"))
-        for pdf in rows:
-            n += len(pdf)
-            mx = max(mx, float(pdf["value"].max()))
-        self._agg.update((n, mx))
-        yield _pd.DataFrame({"user_id": [key[0]],
-                             "n_events": [n],
-                             "max_value": [round(mx, 2)]})
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_user_max(events: DataFrame) -> DataFrame:
-    """The transformWithState transform (composable / testable)."""
-    return (events.groupBy("user_id")
-            .transformWithStateInPandas(UserMaxProcessor(),
-                                        outputStructType=TWS_OUT_SCHEMA,
-                                        outputMode="Update",
-                                        timeMode="None"))
-
-
-def transform_with_state_available() -> bool:
-    """transformWithState's state-server protocol needs a working
-    protobuf runtime (google.protobuf.descriptor); absent/broken
-    protobuf crashes the Python driver worker at query start. The dep
-    is pinned in pyproject.toml (`protobuf>=4`), but an environment
-    installed without it (or with a broken runtime) falls back to the
-    applyInPandasWithState twin below — same per-key contract, older
-    state API."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _update_user_max(key: tuple, pdfs: Iterator[pd.DataFrame],
-                     state: GroupState) -> Iterable[pd.DataFrame]:
-    """applyInPandasWithState twin of UserMaxProcessor: per-user event
-    count + running max, state = (n, mx). Byte-identical output contract
-    to the transformWithState path (same schema, same rounding), so
-    `run_stateful_max` can serve either engine path."""
-    (user_id,) = key
-    n, mx = state.get if state.exists else (0, float("-inf"))
-    for pdf in pdfs:
-        n += len(pdf)
-        mx = max(mx, float(pdf["value"].max()))
-    state.update((n, mx))
-    yield pd.DataFrame({"user_id": [user_id],
-                        "n_events": [n],
-                        "max_value": [round(mx, 2)]})
-
-
-def stateful_user_max_fallback(events: DataFrame) -> DataFrame:
-    """The protobuf-free fallback transform: identical per-user
-    count+max semantics through the GroupState API (which speaks Arrow
-    directly to the JVM — no state-server protocol, no protobuf)."""
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(_update_user_max,
-                                    outputStructType=TWS_OUT_SCHEMA,
-                                    stateStructType="n bigint, mx double",
-                                    outputMode="update",
-                                    timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def run_stateful_max(spark: SparkSession, sf_dir: str,
-                     force_fallback: bool = False) -> DataFrame:
-    """Replay events through the per-user count+max stateful operator:
-    the transformWithState path where the protobuf runtime its state
-    server needs is importable, else the applyInPandasWithState twin
-    (`stateful_user_max_fallback`) with the identical output contract —
-    so the operator works (and stays tested) in protobuf-less
-    environments instead of skipping. RocksDB is the required state
-    store provider for the TWS path; the conf is set for the query
-    start and restored after (other queries keep the default
-    provider)."""
-    if force_fallback or not transform_with_state_available():
-        name = f"twsfb_{uuid.uuid4().hex[:8]}"
-        from .windows import run_scoped
-
-        q = (stateful_user_max_fallback(events_stream_reader(spark, sf_dir))
-             .writeStream.outputMode("update")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True))
-        run_scoped(spark, q)
-        return spark.table(name)
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, rocks)
-    try:
-        from .windows import run_scoped
-
-        q = (stateful_user_max(events_stream_reader(spark, sf_dir))
-             .writeStream.outputMode("update")
-             .format("memory").queryName(name)
-             .trigger(availableNow=True)
-             )
-        run_scoped(spark, q)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return spark.table(name)
 
 
 def run_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,16 +188,10 @@ def _sessionizer_state_partitions(sf_dir: str, cores: int) -> int:
     the full core count, production sizes to rate x watermark /
     target as the run_scoped docstring prescribes. Row counts come
     from parquet footers — no job, no scan."""
-    try:
-        import pyarrow.parquet as pq
+    from ..operators.skew import footer_rows
 
-        path = os.path.join(sf_dir, "events.parquet")
-        if os.path.isdir(path):
-            rows = sum(pq.read_metadata(os.path.join(path, f)).num_rows
-                       for f in os.listdir(path) if f.endswith(".parquet"))
-        else:
-            rows = pq.read_metadata(path).num_rows
-    except Exception:
+    rows = footer_rows(sf_dir, ("events",))
+    if rows is None:
         return 8
     return max(8, min(cores, rows // 32_000))
 

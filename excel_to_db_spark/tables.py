@@ -63,11 +63,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_ts(df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register each table as a temp view so `spark.sql` sees the same
-    names the DuckDB oracle does."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

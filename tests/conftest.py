@@ -103,11 +103,8 @@ def registry():
 
 @pytest.fixture(scope="session")
 def demo_xlsx():
-    """The reference's demo workbook when it is present, else
-    tests/fixtures/demo.xlsx: the same two golden rows, written with
-    sources/xlsx_writer.write_xlsx."""
+    """The demo workbook the paper-surface keys read (see
+    ``queries.parity.DEMO_XLSX``)."""
     from excel_to_db_spark.queries.parity import DEMO_XLSX
 
-    if os.path.exists(DEMO_XLSX):
-        return DEMO_XLSX
-    return os.path.join(os.path.dirname(__file__), "fixtures", "demo.xlsx")
+    return DEMO_XLSX

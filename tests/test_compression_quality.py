@@ -1,29 +1,10 @@
-"""Witnesses for the compression-quality family: the zlib kernel's
-sizes must equal direct zlib calls on the same parquet, and the
-registered key's LZ-complexity contract must match a pure-Python
-recomputation (the oracle gate covers DuckDB equality)."""
+"""Witness for the compression-quality key: its LZ-complexity contract
+must match a pure-Python recomputation (the oracle gate covers DuckDB
+equality)."""
 
 from __future__ import annotations
 
-import zlib
-
 import pyarrow.parquet as pq
-
-
-def test_zlib_kernel_sizes_exact(spark, sf_dir):
-    from excel_to_db_spark.queries.quality import zlib_compression_sizes
-
-    tb = pq.read_table(f"{sf_dir}/documents.parquet",
-                       columns=["doc_id", "text"])
-    expect = {}
-    for did, text in zip(tb.column("doc_id").to_pylist(),
-                         tb.column("text").to_pylist()):
-        raw = len(text.encode("utf-8"))
-        if raw > 0:
-            expect[did] = (raw, len(zlib.compress(text.encode("utf-8"), 6)))
-    got = {r["doc_id"]: (r["raw_bytes"], r["zlib_bytes"])
-           for r in zlib_compression_sizes(spark, sf_dir).collect()}
-    assert got == expect
 
 
 def test_compression_key_matches_python_lz_proxy(spark, sf_dir):

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo/tools")
 
-from simhash_oracle import expected_pairs, h64, simhash64_py  # noqa: E402
+from simhash_oracle import expected_pairs, h64  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,7 +24,7 @@ SF = "/root/testdata/sf0.001"
     "x" * 31, "y" * 32, "z" * 100, "unicode: café ☃",
 ])
 def test_h64_matches_spark_and_duckdb(spark, s):
-    # Spark: the same expression simhash64() applies per shingle.
+    # Spark: the 64-bit md5 prefix simhash_pairs() votes with, as bits.
     [(b,)] = (spark.createDataFrame([(s,)], ["s"])
               .select(F.lpad(F.conv(F.substring(F.md5("s"), 1, 16), 16, 2),
                              64, "0")).collect())
@@ -34,17 +34,6 @@ def test_h64_matches_spark_and_duckdb(spark, s):
         "SELECT ('0x' || substr(md5(?), 1, 16))::UBIGINT", params=[s]
     ).fetchall()
     assert u == h64(s)
-
-
-def test_simhash_fingerprint_matches_spark(spark):
-    from excel_to_db_spark.operators import dedup as D
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(20)
-    rows = docs.select("doc_id",
-                       D.simhash64(F.col("text"), D.shingles).alias("sh"),
-                       "text").collect()
-    for r in rows:
-        assert simhash64_py(r.text) == r.sh & ((1 << 64) - 1), r.doc_id
 
 
 def test_candidate_set_equality(spark):

@@ -100,7 +100,7 @@ def test_fan_out_no_op_on_memory_leaf(spark):
     from excel_to_db_spark.operators.skew import fan_out
 
     df = spark.range(1000).selectExpr("id", "id * 2 AS v")
-    out = fan_out(df, factor=4)
+    out = fan_out(df)
     assert out is df
 
 

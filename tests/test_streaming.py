@@ -18,32 +18,6 @@ def test_stream_equals_batch(spark, sf_dir):
     assert stream.count() > 0
 
 
-def test_transform_with_state_user_max(spark, sf_dir):
-    """Per-user count + max through engine-maintained state equals the
-    batch GROUP BY on single-batch replay. Runs the transformWithState
-    path (Spark 4 stateful API) where its protobuf runtime is
-    importable, else the applyInPandasWithState fallback twin — the
-    operator contract is tested either way (no skip; VERDICT r7 #6)."""
-    from pyspark.sql import functions as F
-
-    from excel_to_db_spark.streaming.stateful import (
-        run_stateful_max, transform_with_state_available)
-
-    out = run_stateful_max(spark, sf_dir)
-    batch = (load_table(spark, sf_dir, "events")
-             .groupBy("user_id")
-             .agg(F.count("*").alias("n_events"),
-                  F.round(F.max("value"), 2).alias("max_value")))
-    want = sorted(map(tuple, batch.collect()))
-    assert sorted(map(tuple, out.collect())) == want
-
-    # The fallback twin must hold the same contract even where the TWS
-    # path ran above, so both engine paths stay pinned to one oracle.
-    if transform_with_state_available():
-        fb = run_stateful_max(spark, sf_dir, force_fallback=True)
-        assert sorted(map(tuple, fb.collect())) == want
-
-
 def test_stream_stream_left_join_contract(spark, sf_dir):
     """Left-outer stream-stream join: matched rows equal the batch
     interval join exactly; NULL-emitted unmatched rows are precisely

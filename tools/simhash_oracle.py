@@ -15,7 +15,7 @@ cosine, and ~40-shingle docs give each bit vote high variance), so that
 containment is NOT a sound contract and is not used.
 
 Mirrors `excel_to_db_spark/operators/dedup.py` (`shingles`,
-`simhash64`, `simhash_pairs`) and the registry call
+`simhash_pairs`) and the registry call
 `simhash_pairs(docs, max_hamming=3, keyset=shingles)`.
 """
 
@@ -43,7 +43,8 @@ def shingles(text: str, k: int = 3) -> list[str]:
 
 def simhash64_py(text: str) -> int:
     """Unsigned 64-bit SimHash, bit i = sign of the per-bit +-1 vote sum
-    over h64(shingle) — mirrors operators/dedup.py simhash64()."""
+    over h64(shingle) — mirrors the vote sums in operators/dedup.py
+    simhash_pairs()."""
     votes = [0] * 64
     for s in shingles(text):
         h = h64(s)
