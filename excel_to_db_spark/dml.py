@@ -3,29 +3,17 @@
 The reference prepares and executes ANY statement against its embedded
 SQLite (reference src/main.rs:220), so `INSERT` / `UPDATE` / `DELETE` /
 `CREATE TABLE` / `DROP TABLE` typed at its REPL just work. Spark temp
-views are read-only relations, so this module re-expresses each mutating
-statement as *view re-registration*: the view's current DataFrame (a
-captured, already-analyzed logical plan) is combined with the new rows /
-filter / column replacement and re-registered under the same name.
+views are read-only relations, so this module evaluates the table a
+mutating statement leaves, once, and re-registers it under the same
+name (`_store`).
 
-Scale posture: this is REPL-session parity, not a storage engine. Each
-mutation composes a lazy plan (union / filter / projection) that
-Catalyst collapses at execution; state lives in the session catalog
-exactly as the reference's state lives in its in-memory SQLite — both
-die with the process. A table built on the driver (the loaded sheet, a
-column-list CREATE TABLE) is one partition; UPDATE and DELETE keep
-that, and INSERT coalesces its union back to one partition. So a
-statement over such a table plans no Exchange and runs as one Spark
-job, like the reference's one pass over its one table. Durable,
-cluster-scale mutation goes through real sinks (`sinks/`
-parquet/JDBC/SQLite), not this path.
-
-INSERT stores what it inserted: the source rows are collected once, as
-SQLite evaluates them once, so `current_timestamp()` in an INSERT reads
-back the same on every later query. UPDATE does not: its SET expression
-is part of the view's plan and re-evaluates on every read, so `SET x =
-current_timestamp()` drifts. DDL looks one name up in the catalog and
-runs no job.
+REPL tables live on the driver, as the reference's rows live in its
+in-memory SQLite: each is one pyarrow Table of stored values behind a
+one-partition `ingest.arrow_frame`. A write is one Spark job, and no
+later read re-runs it (`current_timestamp()` reads back the same).
+`CREATE TEMP VIEW … AS` passes through to `spark.sql` and stays lazy,
+for results too big for the driver; durable mutation goes through
+`sinks/`. DDL looks one name up and runs no job.
 
 Statement grammar is intentionally the reference's subset: one target
 table, no joins in UPDATE/DELETE, standard INSERT forms. Anything that
@@ -38,6 +26,7 @@ from __future__ import annotations
 
 import re
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -79,30 +68,51 @@ _TYPE_MAP = {
 _TABLE_CONSTRAINT = re.compile(
     r"(?is)^\s*(primary\s+key|unique|check|foreign\s+key|constraint)\b")
 _WHERE_RE = re.compile(r"(?i)\bwhere\b")
+_FLAG = "__dml_flag__"
+
+
+def _store(spark: SparkSession, name: str, df: DataFrame,
+           flag: str | None = None, delete: bool = False) -> int:
+    """Evaluate `df` in one Spark job and register its values as table
+    `name`, as SQLite stores what a statement wrote. Return the number
+    of rows the boolean column `flag` marks (every row without one);
+    `flag` is dropped, and with `delete` so are the rows it marks."""
+    table, schema = df.toArrow(), df.schema
+    n = table.num_rows
+    if flag is not None:
+        marks = table.column(flag)
+        n = pc.sum(marks).as_py() or 0
+        if delete:
+            table = table.filter(pc.invert(marks))
+        table = table.drop_columns(flag)
+        schema = StructType([f for f in schema if f.name != flag])
+    arrow_frame(spark, table, schema).createOrReplaceTempView(name)
+    return n
+
+
+def _flagged(target: DataFrame, where: str | None) -> DataFrame:
+    """`target` plus the `_FLAG` column: true where `where` holds (NULL
+    counts as false, as in SQL), true everywhere without a WHERE."""
+    hit = f"coalesce(({where}), false)" if where else "true"
+    return target.selectExpr("*", f"{hit} AS {_FLAG}")
 
 
 def _align_to(target: DataFrame, src: DataFrame) -> DataFrame:
     """Project `src` onto `target`'s schema: missing columns become NULL,
     every column cast to the target type, target column order."""
-    cols = []
-    src_lower = {c.lower(): c for c in src.columns}
-    for name, dtype in target.dtypes:
-        c = src_lower.get(name.lower())
-        cols.append((F.col(c) if c is not None else F.lit(None))
-                    .cast(dtype).alias(name))
-    return src.select(*cols)
+    by_lower = {c.lower(): F.col(c) for c in src.columns}
+    return src.select(*[by_lower.get(name.lower(), F.lit(None))
+                        .cast(dtype).alias(name)
+                        for name, dtype in target.dtypes])
 
 
 def _insert(spark: SparkSession, name: str, col_list: str | None,
             tail: str) -> str:
     target = spark.table(name)
     src = spark.sql(tail)  # `VALUES (...)` and `SELECT ...` both parse
+    names = target.columns
     if col_list:
         names = [c.strip() for c in col_list.split(",")]
-        if len(names) != len(src.columns):
-            raise ValueError(
-                f"INSERT column list has {len(names)} names but the "
-                f"source produces {len(src.columns)} columns")
         # SQLite errors on unknown INSERT columns; silently NULL-filling
         # a typo'd column list would corrupt instead of failing loudly.
         known = {c.lower() for c in target.columns}
@@ -111,28 +121,20 @@ def _insert(spark: SparkSession, name: str, col_list: str | None,
             raise ValueError(
                 f"INSERT: table {name} has no column(s) {bad} "
                 f"(columns: {target.columns})")
-        src = src.toDF(*names)
-    else:
-        if len(src.columns) != len(target.columns):
-            raise ValueError(
-                f"INSERT source has {len(src.columns)} columns; "
-                f"{name} has {len(target.columns)}")
-        src = src.toDF(*target.columns)
-    src = _align_to(target, src)
-    # Evaluate the source once and store the values, as SQLite does.
-    rows = src.toArrow()
-    (target.unionByName(arrow_frame(spark, rows, src.schema))
-     .coalesce(1).createOrReplaceTempView(name))
-    return f"-- {rows.num_rows} row(s) inserted into {name}"
+    if len(names) != len(src.columns):
+        raise ValueError(f"INSERT into {name} names {len(names)} columns "
+                         f"but the source produces {len(src.columns)}")
+    src = _align_to(target, src.toDF(*names))
+    n = _store(spark, name, target.withColumn(_FLAG, F.lit(False))
+               .union(src.withColumn(_FLAG, F.lit(True))), _FLAG)
+    return f"-- {n} row(s) inserted into {name}"
 
 
 def _update(spark: SparkSession, name: str, tail: str) -> str:
     # A 'where' inside a quoted token or a function call is data.
     w = find_top_level(tail, _WHERE_RE)
-    if w >= 0:
-        set_clause, where = tail[:w], tail[w + len("where"):].strip()
-    else:
-        set_clause, where = tail, None
+    set_clause, where = ((tail[:w], tail[w + len("where"):].strip())
+                         if w >= 0 else (tail, None))
     target = spark.table(name)
     dtypes = dict(target.dtypes)
     # Column resolution is case-insensitive (Spark SQL and SQLite both
@@ -147,32 +149,20 @@ def _update(spark: SparkSession, name: str, tail: str) -> str:
             raise ValueError(f"UPDATE: bad assignment {a!r} "
                              f"(columns: {list(dtypes)})")
         assigns[resolved] = expr.strip()
-    n = target.filter(F.expr(where)).count() if where else target.count()
-    exprs = []
-    for c in target.columns:
-        if c in assigns:
-            # keep the column's declared type stable across the rewrite
-            new = f"CAST(({assigns[c]}) AS {dtypes[c]})"
-            exprs.append(
-                f"CASE WHEN ({where}) THEN {new} ELSE `{c}` END AS `{c}`"
-                if where else f"{new} AS `{c}`")
-        else:
-            exprs.append(f"`{c}`")
-    target.selectExpr(*exprs).createOrReplaceTempView(name)
+    # The flag is computed once, below the projection that reads it, so
+    # a nondeterministic WHERE counts the rows it updates.
+    exprs = [f"CASE WHEN {_FLAG} THEN CAST(({assigns[c]}) AS {dtypes[c]}) "
+             f"ELSE `{c}` END AS `{c}`"  # the column keeps its type
+             if c in assigns else f"`{c}`" for c in target.columns]
+    n = _store(spark, name,
+               _flagged(target, where).selectExpr(*exprs, _FLAG), _FLAG)
     return f"-- {n} row(s) updated in {name}"
 
 
 def _delete(spark: SparkSession, name: str, where: str | None) -> str:
-    target = spark.table(name)
-    if where is None:
-        n = target.count()
-        kept = target.limit(0)
-    else:
-        pred = F.expr(where)
-        n = target.filter(pred).count()
-        # SQL DELETE removes rows where pred IS TRUE; NULL/false survive.
-        kept = target.filter(~F.coalesce(pred, F.lit(False)))
-    kept.createOrReplaceTempView(name)
+    # SQL DELETE removes rows where the WHERE IS TRUE; NULL/false survive.
+    n = _store(spark, name, _flagged(spark.table(name), where), _FLAG,
+               delete=True)
     return f"-- {n} row(s) deleted from {name}"
 
 
@@ -181,7 +171,7 @@ def _create_as(spark: SparkSession, if_not_exists: bool, name: str,
     if if_not_exists and spark.catalog.tableExists(name):
         return f"-- table {name} already exists (skipped)"
     df = spark.sql(select)
-    df.createOrReplaceTempView(name)
+    _store(spark, name, df)
     return f"-- table {name} created ({len(df.columns)} columns)"
 
 

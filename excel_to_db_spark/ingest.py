@@ -29,8 +29,8 @@ from typing import Any, Iterable
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (ArrayType, DataType, DoubleType, LongType,
+                               MapType, StringType, StructField, StructType)
 
 from .sources.xlsx import iter_xlsx_rows
 
@@ -43,13 +43,8 @@ EXCEL_ROWS_SCHEMA = StructType([
 ])
 
 # Null-preserving variant (optional mode): numeric columns nullable.
-EXCEL_ROWS_SCHEMA_NULLABLE = StructType([
-    StructField("service_name", StringType(), False),
-    StructField("average_response_time_95_ms", DoubleType(), True),
-    StructField("count", LongType(), True),
-    StructField("max_response_time_95_ms", DoubleType(), True),
-    StructField("min_response_time_95_ms", DoubleType(), True),
-])
+EXCEL_ROWS_SCHEMA_NULLABLE = StructType(EXCEL_ROWS_SCHEMA[:1].fields + [
+    StructField(f.name, f.dataType, True) for f in EXCEL_ROWS_SCHEMA[1:]])
 
 
 class DuplicateKeyError(ValueError):
@@ -116,26 +111,40 @@ def coerce_row(cells: list[Any], opts: IngestOptions) -> tuple | None:
 def arrow_frame(spark: SparkSession, rows: list[tuple] | pa.Table,
                 schema: StructType) -> DataFrame:
     """Driver-held rows -> a one-partition DataFrame over one pyarrow
-    Table. ``rows`` is typed tuples, or a Table already in ``schema``'s
-    Arrow shape (``DataFrame.toArrow()``).
+    Table (:func:`from_arrow`). ``rows`` is typed tuples, or a Table in
+    ``schema``'s Arrow shape (``DataFrame.toArrow()``). A value that does
+    not fit its column type (a bigint past 2^63) raises ValueError.
 
-    PySpark hands the table to the JVM as a LocalRelation: building the
-    frame submits no job, and scanning or caching it runs in the JVM
-    only, with no Python worker. The schema, non-null fields included,
-    comes through as given. A value that does not fit its column type
-    (a bigint past 2^63, say) raises ValueError naming the column and
-    the value.
-
-    The frame is one partition (a narrow coalesce, no shuffle): its
-    SinglePartition output already meets what aggregates, windows,
-    sorts and count() require, so a REPL statement over it plans no
-    Exchange and runs as one job, not a map stage plus a result stage.
-    Splitting the table buys nothing: it is held whole on the driver
-    anyway, and an xlsx sheet has at most 1,048,576 rows. For sheets
-    too big for the driver, use sources.datasource.XlsxDataSource
-    (partitioned reads) or stage to parquet first."""
+    One partition (a narrow coalesce, no shuffle) meets what aggregates,
+    windows, sorts and count() require, so a statement over the frame
+    plans no Exchange and runs as one job. An xlsx sheet has at most
+    1,048,576 rows; for sheets too big for the driver, use
+    sources.datasource.XlsxDataSource or stage to parquet first."""
     table = rows if isinstance(rows, pa.Table) else _arrow_table(rows, schema)
-    return spark.createDataFrame(table, schema).coalesce(1)
+    return from_arrow(spark, table, schema).coalesce(1)
+
+
+def from_arrow(spark: SparkSession, table: pa.Table,
+               schema: StructType) -> DataFrame:
+    """A pyarrow Table in ``schema``'s Arrow shape -> a DataFrame over a
+    LocalRelation: building it submits no job, and scanning it runs in
+    the JVM only. Fields nested in a struct, array or map value become
+    nullable (top-level ones keep theirs): PySpark rebuilds nested Arrow
+    arrays as nullable, which pyarrow 16 will not cast to non-null."""
+    schema = StructType([StructField(f.name, _nested_nullable(f.dataType),
+                                     f.nullable, f.metadata) for f in schema])
+    return spark.createDataFrame(table.cast(to_arrow_schema(schema)), schema)
+
+
+def _nested_nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nested_nullable(f.dataType))
+                           for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nested_nullable(dt.elementType))
+    if isinstance(dt, MapType):  # Arrow map keys are never null
+        return MapType(dt.keyType, _nested_nullable(dt.valueType))
+    return dt
 
 
 def _arrow_table(rows: list[tuple], schema: StructType) -> pa.Table:
@@ -191,15 +200,16 @@ def load_excel_table(spark: SparkSession, path: str, sheet: str | None = None,
                      view_name: str = "excel_rows",
                      opts: IngestOptions | None = None) -> DataFrame:
     """Full ingest pipeline: parse -> coerce -> uniqueness check ->
-    DataFrame -> temp view (+cache, mirroring the in-memory SQLite db).
-    A rejected sheet raises before anything is cached.
+    DataFrame -> temp view over the driver-held rows, uncached (the
+    reference's in-memory SQLite db). A rejected sheet raises before
+    any view exists.
 
     This is the reference-semantics path (fixed positional 5-column
     schema, header names ignored). For arbitrary sheets, the optional
     inference path is :func:`load_excel_table_inferred` — kept separate
     and OFF by default so reference parity stays byte-exact."""
     opts = opts or IngestOptions()
-    df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts).cache()
+    df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts)
     df.createOrReplaceTempView(view_name)
     return df
 

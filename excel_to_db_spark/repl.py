@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 
 from .compat.sqlite_dialect import apply_session_mode, paren_depths, rewrite
 from .dml import try_dml
-from .ingest import IngestOptions, load_excel_table
+from .ingest import IngestOptions, from_arrow, load_excel_table
 from .sinks.csv_sink import export_csv
 from .sinks.display import show
 
@@ -59,8 +59,8 @@ def run_line(spark: SparkSession, line: str, *, sqlite_compat: bool = False,
         return
     t0 = time.perf_counter()
     # DML/DDL first: the reference's passthrough executes INSERT/UPDATE/
-    # DELETE/CREATE/DROP against SQLite (src/main.rs:220); we re-express
-    # them as temp-view re-registration (see dml.py). Non-matching
+    # DELETE/CREATE/DROP against SQLite (src/main.rs:220); we store each
+    # result as a driver-held temp view (see dml.py). Non-matching
     # statements fall through to the plain spark.sql passthrough.
     rewritten = rewrite(sql, sqlite_compat=sqlite_compat)  # pure; compute once
     msg = try_dml(spark, rewritten)
@@ -72,7 +72,7 @@ def run_line(spark: SparkSession, line: str, *, sqlite_compat: bool = False,
     if out_path:
         # Run the query once: display and export both read this driver
         # copy, a LocalRelation that collects without a job.
-        df = spark.createDataFrame(df.toArrow(), df.schema)
+        df = from_arrow(spark, df.toArrow(), df.schema)
     show(df, row_cap=row_cap)
     if out_path:
         export_csv(df, out_path)

@@ -104,19 +104,20 @@ def _job_ids(spark) -> set[int]:
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
 
 
-def test_load_submits_no_job_and_caches_a_local_scan(spark, tmp_path):
+def test_load_submits_no_job_and_plans_an_uncached_local_scan(spark, tmp_path):
     """The sheet reaches Spark as one Arrow table (a LocalRelation) and
     the key check runs on the driver: loading submits no job, and the
-    cache fills from a JVM-only LocalTableScan, not from a Python RDD."""
+    view scans that JVM-only LocalTableScan directly, with no cache
+    over it and no Python RDD under it."""
     p = str(tmp_path / "local.xlsx")
     write_xlsx(p, [["h"] * 5] + [[f"s{i}", i * 1.5, i, 2.0, 1.0]
                                  for i in range(200)])
     before = _job_ids(spark)
     df = load_excel_table(spark, p, view_name="local_rows")
     assert _job_ids(spark) == before
-    plan = plan_text(df)
-    assert "InMemoryRelation" in plan and "LocalTableScan" in plan
-    assert "ExistingRDD" not in plan
+    plan = plan_text(spark.table("local_rows"))
+    assert "LocalTableScan" in plan
+    assert "InMemoryRelation" not in plan and "ExistingRDD" not in plan
     assert df.count() == 200
     spark.catalog.dropTempView("local_rows")
 

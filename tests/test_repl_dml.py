@@ -295,3 +295,128 @@ def test_insert_stores_what_it_inserted(spark):
         assert _partitions(spark, "t_stamp") == 1
     finally:
         spark.catalog.dropTempView("t_stamp")
+
+
+def test_update_and_ctas_store_what_they_wrote(spark):
+    """SQLite evaluates an UPDATE's SET and a CREATE TABLE ... AS query
+    once; two later reads must see the same current_timestamp()."""
+    try_dml(spark, "CREATE TABLE t_upd (k TEXT, stamp TEXT)")
+    try:
+        try_dml(spark, "INSERT INTO t_upd VALUES ('a', NULL), ('b', NULL)")
+        try_dml(spark, "UPDATE t_upd "
+                       "SET stamp = CAST(current_timestamp() AS STRING) "
+                       "WHERE k = 'a'")
+        try_dml(spark, "CREATE TABLE t_ctas AS "
+                       "SELECT k, current_timestamp() AS stamp FROM t_upd")
+        for name in ("t_upd", "t_ctas"):
+            first = sorted(spark.table(name).collect())
+            time.sleep(0.2)
+            assert sorted(spark.table(name).collect()) == first, name
+        assert [r.stamp is None for r in sorted(
+            spark.table("t_upd").collect())] == [False, True]
+    finally:
+        spark.catalog.dropTempView("t_upd")
+        spark.catalog.dropTempView("t_ctas")
+
+
+_WRITES = (
+    "INSERT INTO excel_rows VALUES ('svc_new', 1.0, 2, 3.0, 0.5)",
+    "INSERT INTO excel_rows SELECT concat(service_name, '_c'), "
+    "average_response_time_95_ms, count, max_response_time_95_ms, "
+    "min_response_time_95_ms FROM excel_rows WHERE count = 3",
+    "UPDATE excel_rows SET count = count + 1 WHERE count > 3",
+    "UPDATE excel_rows SET min_response_time_95_ms = 0.0",
+    "DELETE FROM excel_rows WHERE count = 1",
+)
+
+
+def test_each_write_runs_one_job(spark, loaded_rows, jobs_of):
+    ctas = ("CREATE TABLE t_budget AS SELECT count, count(*) AS n "
+            "FROM excel_rows GROUP BY count")
+    try:
+        for sql in _WRITES + (ctas,):
+            msg, jobs = jobs_of(lambda: try_dml(spark, sql))
+            assert jobs == 1, (sql, msg)
+    finally:
+        spark.catalog.dropTempView("t_budget")
+
+
+def test_writes_do_not_grow_the_plan(spark, loaded_rows):
+    """Each write stores its result, so the plan of excel_rows after
+    any number of writes is the plan it had right after load."""
+    def nodes():
+        plan = spark.table("excel_rows")._jdf.queryExecution().optimizedPlan()
+        return len(plan.treeString().splitlines())
+    loaded = nodes()
+    for sql in _WRITES * 2:
+        try_dml(spark, sql)
+    assert nodes() == loaded
+
+
+_NESTED = ("SELECT named_struct('a', 1, 'b', array('x')) AS s, "
+           "map('k', named_struct('a', 2, 'b', array('y', 'z'))) AS m")
+
+
+def test_ctas_and_insert_keep_nested_values(spark):
+    """Struct, array and map values survive being stored on the driver."""
+    try:
+        try_dml(spark, f"CREATE TABLE t_nest AS {_NESTED}")
+        try_dml(spark, "INSERT INTO t_nest SELECT "
+                       "named_struct('a', 3, 'b', array('w', NULL)), "
+                       "map('j', named_struct('a', NULL, 'b', array()))")
+        got = spark.table("t_nest").collect()
+        assert got[0] == spark.sql(_NESTED).first()
+        assert got[1].s.b == ["w", None]
+        assert got[1].m["j"].a is None and got[1].m["j"].b == []
+        # top-level nullability is kept: the literal columns stay NOT NULL
+        assert [f.nullable for f in spark.table("t_nest").schema] == \
+            [f.nullable for f in spark.sql(_NESTED).schema]
+    finally:
+        spark.catalog.dropTempView("t_nest")
+
+
+def test_mixed_write_script_matches_sqlite(spark, capsys):
+    """A write script run through the REPL leaves the tables SQLite
+    leaves, and each status line reports SQLite's row count."""
+    import re
+    import sqlite3
+
+    script = [
+        "CREATE TABLE t (k TEXT, v INTEGER, w REAL)",
+        "INSERT INTO t VALUES ('a', 1, 1.5), ('b', 2, NULL), ('c', NULL, 3.5)",
+        "INSERT INTO t (k, v) VALUES ('d', 4)",
+        "INSERT INTO t SELECT k || '2', v * 10, w FROM t WHERE v > 1",
+        "UPDATE t SET w = coalesce(w, 0) + 1 WHERE v >= 2",
+        "UPDATE t SET v = coalesce(v, 0)",
+        "DELETE FROM t WHERE w > 3",
+        "CREATE TABLE u AS SELECT k, v FROM t WHERE v > 1",
+        "INSERT INTO u VALUES ('z', 99)",
+        "UPDATE u SET v = v - 1 WHERE k = 'z'",
+        "DELETE FROM u WHERE v < 20",
+        "DROP TABLE t",
+    ]
+    con = sqlite3.connect(":memory:")
+    try:
+        for sql in script:
+            n = con.execute(sql).rowcount
+            capsys.readouterr()
+            run_line(spark, sql)
+            status = capsys.readouterr().out.splitlines()[0]
+            m = re.match(r"-- (\d+) row\(s\)", status)
+            assert (int(m.group(1)) if m else -1) == n, (sql, status)
+        assert not spark.catalog.tableExists("t")
+        want = sorted(con.execute("SELECT * FROM u").fetchall())
+        assert sorted(map(tuple, spark.table("u").collect())) == want
+        assert want == [("b2", 20), ("d2", 40), ("z", 98)]
+    finally:
+        con.close()
+        spark.catalog.dropTempView("t")
+        spark.catalog.dropTempView("u")
+
+
+def test_update_with_random_where_reports_the_rows_it_changed(spark,
+                                                             loaded_rows):
+    msg = try_dml(spark, "UPDATE excel_rows SET count = -1 "
+                         "WHERE rand() < 0.5")
+    n = int(msg.split()[1])
+    assert spark.table("excel_rows").filter("count = -1").count() == n

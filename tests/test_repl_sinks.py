@@ -165,3 +165,18 @@ def test_out_runs_the_query_once(spark, tmp_path, capsys, jobs_of):
         assert "svc_0,12001.13,2024-01-02,2024-01-02 03:04:05,\n" in body
     finally:
         spark.catalog.dropTempView("excel_rows")
+
+
+def test_out_exports_nested_values(spark, tmp_path, capsys):
+    """A struct with an array field, and a map of such structs, survive
+    the |out= Arrow round trip: display and file match the query's own."""
+    sql = ("SELECT named_struct('a', 1, 'b', array('x')) AS s, "
+           "map('k', named_struct('a', 2, 'b', array('y', 'z'))) AS m")
+    direct = str(tmp_path / "direct.csv")
+    export_csv(spark.sql(sql), direct)
+    expected = show(spark.sql(sql))
+    capsys.readouterr()
+    out = str(tmp_path / "out.csv")
+    run_line(spark, f"{sql} |out={out}")
+    assert capsys.readouterr().out.startswith(expected + "\n")
+    assert open(out).read() == open(direct).read()
