@@ -39,23 +39,22 @@ def _sqlite_type(spark_type: str) -> str:
     return _SQLITE_TYPES.get(spark_type, "TEXT")  # dates/timestamps -> TEXT
 
 
-def _to_sqlite_value(v):
-    import datetime
-    import decimal
-
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if isinstance(v, datetime.datetime) else v.isoformat()
-    if isinstance(v, datetime.time):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
+def _converter(spark_type: str):
+    """A column's Python value -> the value SQLite binds, or None when the
+    value binds as it is (strings, numbers, binary)."""
+    if spark_type == "boolean":
+        return int
+    if spark_type.startswith("timestamp"):
+        return lambda v: v.isoformat(sep=" ")
+    if spark_type == "date" or spark_type.startswith("time"):
+        return lambda v: v.isoformat()
+    if spark_type.startswith("decimal"):
         # sqlite3 refuses to bind Decimal; REAL is its numeric storage
         # class, so the float image is what the column would hold anyway.
-        return float(v)
-    if isinstance(v, (list, dict)):
-        return str(v)
-    return v
+        return float
+    if spark_type.startswith(("array", "map")):
+        return str
+    return None
 
 
 def write_sqlite(df: DataFrame, path: str, table: str = "excel_rows", *,
@@ -67,8 +66,8 @@ def write_sqlite(df: DataFrame, path: str, table: str = "excel_rows", *,
     (reference src/main.rs:189-190 — which its own multi-statement
     execute likely never created; see SURVEY.md §1.1). SQLite enforces
     it during the load exactly as the reference intended."""
-    cols = df.columns
-    decls = ", ".join(f'"{c}" {_sqlite_type(t)}' for c, t in df.dtypes)
+    dtypes = df.dtypes
+    decls = ", ".join(f'"{c}" {_sqlite_type(t)}' for c, t in dtypes)
     con = sqlite3.connect(path)
     try:
         cur = con.cursor()
@@ -78,16 +77,23 @@ def write_sqlite(df: DataFrame, path: str, table: str = "excel_rows", *,
         if unique_key:
             cur.execute(f'CREATE UNIQUE INDEX IF NOT EXISTS '
                         f'"idx_{table}_{unique_key}" ON "{table}" ("{unique_key}")')
-        placeholders = ", ".join("?" for _ in cols)
+        placeholders = ", ".join("?" for _ in dtypes)
         ins = f'INSERT INTO "{table}" VALUES ({placeholders})'
         n = 0
-        batch: list[tuple] = []
+        batch: list = []
         # toLocalIterator: one partition in driver memory at a time —
         # bounded memory however big the table is. A driver-built table
         # (ingest.arrow_frame) is one partition, so that is the whole
         # table, which the driver already holds.
+        converters = [(i, f) for i, (_, t) in enumerate(dtypes)
+                      if (f := _converter(t)) is not None]
         for row in df.toLocalIterator():
-            batch.append(tuple(_to_sqlite_value(v) for v in row))
+            if converters:
+                row = list(row)
+                for i, f in converters:
+                    if row[i] is not None:
+                        row[i] = f(row[i])
+            batch.append(row)
             if len(batch) >= batch_size:
                 cur.executemany(ins, batch)
                 n += len(batch)

@@ -51,3 +51,20 @@ def test_bench_contract(tmp_path, sf_dir):
     assert "probe_sec" not in record
     assert "run_condition" not in record
     assert "REGRESSION" not in proc.stderr
+
+
+def test_perfbench_xlsx_trace_contract():
+    """A traced xlsx_ingest run completes, checks out, and times the
+    parse through the names its tracer wraps (``ingest.iter_xlsx_rows``
+    and friends): a reader that routed around them would read 0 here."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "perfbench", "run.py"),
+         "--workload", "xlsx_ingest", "--seed", "1", "--seconds", "1",
+         "--trace", "1", "--smoke"],
+        cwd=REPO, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert line["correct"] is True, proc.stderr[-3000:]
+    metrics = line["metrics"]
+    assert metrics["xlsx_parse_s"]["value"] > 0
+    assert metrics["rows_dropped"]["value"] >= 0

@@ -3,6 +3,8 @@ demo.xlsx values (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from excel_to_db_spark.ingest import (
@@ -22,8 +24,13 @@ def test_demo_sheet_names(demo_xlsx):
     assert sheet_names(demo_xlsx)  # at least one sheet
 
 
-def test_demo_golden_rows(spark, demo_xlsx):
-    df = load_excel_table(spark, demo_xlsx)
+@pytest.mark.parametrize("fixture", ["demo", "demo_shared"])
+def test_demo_golden_rows(spark, demo_xlsx, fixture):
+    """The demo's golden rows, from the inline-string fixture and from
+    the same rows in Excel's shared-strings layout."""
+    path = demo_xlsx if fixture == "demo" else os.path.join(
+        os.path.dirname(__file__), "fixtures", "demo_shared.xlsx")
+    df = load_excel_table(spark, path)
     rows = {r.service_name: r for r in df.collect()}
     assert set(rows) == {"ent_XXX_V2", "ent_XXX_YYY_V2"}
     r1 = rows["ent_XXX_V2"]
