@@ -27,8 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .skew import fan_out
-
+from . import physical
 
 def norm_tokens(text: Column) -> Column:
     """Distinct, sorted token set of a whitespace-tokenized document."""
@@ -136,9 +135,10 @@ def jaccard_pairs(df: DataFrame, threshold: float, text_col: str = "text",
     # result — and empty-key docs are harmless anyway, since explode()
     # emits no index rows for them and candidates alone reach the
     # verify join.
-    docs = (fan_out(df).select(F.col(id_col).alias("did"),
-                               keyset(F.col(text_col)).alias("ks"))
-            .localCheckpoint(eager=False))
+    docs = (physical.fan_out(df)
+            .select(F.col(id_col).alias("did"),
+                    keyset(F.col(text_col)).alias("ks"))
+            .transform(physical.cut))
     cand = _prefix_candidates(docs, threshold)
     k1 = docs.select(F.col("did").alias("d1"), F.col("ks").alias("ks1"))
     k2 = docs.select(F.col("did").alias("d2"), F.col("ks").alias("ks2"))
@@ -172,7 +172,7 @@ def _prefix_candidates(docs: DataFrame, threshold: float) -> DataFrame:
             .select("did", "n", "tok", F.row_number().over(w).alias("pos"))
             .filter(F.col("pos") <= p)
             .select("did", "n", "tok")
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     a, b = pref.alias("a"), pref.alias("b")
     eps = F.lit(1e-9)
     return (a.join(b, (F.col("a.tok") == F.col("b.tok"))
@@ -195,12 +195,12 @@ def _intersection_counts(df: DataFrame, text_col: str, id_col: str,
     df^2 pair rows inside the stage), so on a narrow local fixture it
     otherwise inherits the scan's 1-2 parquet splits and runs the
     entire candidate generation on 2 cores (measured 56s -> ~6s at
-    jittered sf1 for dedup_containment; fan_out is a structural no-op
-    on wide cluster scans)."""
-    toks = _token_index(fan_out(df), text_col, id_col, max_df, keyset)
+    jittered sf1 for dedup_containment)."""
+    toks = _token_index(physical.fan_out(df), text_col, id_col, max_df,
+                        keyset)
     # Three consumers (sizes, join side a, join side b) read the index;
     # materialize it once instead of re-exploding the corpus per branch.
-    toks = toks.localCheckpoint(eager=False)
+    toks = toks.transform(physical.cut)
     sizes = toks.groupBy("did").agg(F.count("*").alias("n_tok"))
     a = toks.alias("a")
     b = toks.alias("b")
@@ -249,9 +249,10 @@ def minhash_signatures(df: DataFrame, n_hashes: int = 64,
     per partition — the standard distributed MinHash shape at 100 TB.
     The scan is fanned out first: the keyset HOF + explode otherwise
     run at the local fixture's 1-2 split width (r11, same fix as
-    jaccard_pairs; structural no-op on wide cluster scans)."""
-    toks = fan_out(df).select(F.col(id_col).alias("did"),
-                              F.explode(keyset(F.col(text_col))).alias("tok"))
+    jaccard_pairs)."""
+    toks = physical.fan_out(df).select(
+        F.col(id_col).alias("did"),
+        F.explode(keyset(F.col(text_col))).alias("tok"))
     # Universal-hash family over ONE base hash per key: h_i = (a_i*b + c_i)
     # mod 2^32, with b < 2^32 and odd a_i < 2^20, so every product stays
     # under 2^52 — exact in long arithmetic, no ANSI overflow. 128 integer
@@ -379,7 +380,7 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
                                  len(dids)),
                  "bucket": bucket.reshape(-1)})
 
-    return (fan_out(df.select(id_col, text_col))
+    return (physical.fan_out(df.select(id_col, text_col))
             .mapInPandas(kernel, "did bigint, band int, bucket bigint"))
 
 
@@ -426,12 +427,12 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float, n_hashes: int = 64,
     # projection, and without the widening exchange the keyset HOF for
     # every doc runs at the local scan's 1-2 split width inside the
     # broadcast job (measured ~10s of dedup_minhash's 17s at sf1j).
-    # (r12 note: a localCheckpoint here to fold the two broadcast
+    # (r12 note: a lineage cut here to fold the two broadcast
     # builds into one keyset pass measured SLOWER at jittered sf1 —
     # the token arrays are ~500 MB on disk, and writing them costs
     # more than the second in-memory HOF pass. Kept recomputed.)
-    docs = fan_out(df).select(F.col(id_col).alias("did"),
-                              keyset(F.col(text_col)).alias("toks"))
+    docs = physical.fan_out(df).select(F.col(id_col).alias("did"),
+                                       keyset(F.col(text_col)).alias("toks"))
     d1 = docs.select(F.col("did").alias("d1"), F.col("toks").alias("t1"))
     d2 = docs.select(F.col("did").alias("d2"), F.col("toks").alias("t2"))
     inter = F.size(F.array_intersect("t1", "t2"))
@@ -464,8 +465,9 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     # matching both oracles. fan_out first (r11): the keyset
     # HOF + md5 explode otherwise run at the local fixture's 1-2 split
     # width — measured 15.1s for a 1-2s stage at jittered sf1.
-    toks = fan_out(df).select(F.col(id_col).alias("did"),
-                              F.explode_outer(keyset(F.col(text_col))).alias("tok"))
+    toks = physical.fan_out(df).select(
+        F.col(id_col).alias("did"),
+        F.explode_outer(keyset(F.col(text_col))).alias("tok"))
     # Two 32-bit halves of the md5-derived hash as bigints: integer
     # shiftright/AND per vote beats per-bit string substring ~2x.
     base = toks.select(
@@ -541,7 +543,7 @@ def dedup_clusters(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     # round while only the labels were persisted).
     edges = (pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
              .union(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     labels = ids.select(F.col("did"), F.col("did").alias("lbl"))
     lblsum = F.sum(F.col("lbl").cast("decimal(38,0)"))
     prev_sum = labels.agg(lblsum).collect()[0][0]

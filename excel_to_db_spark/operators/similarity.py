@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import physical
+
 # Deterministic "random" hyperplanes: h_j[i] = ((i*31 + j*17) % 7) - 3.
 # Small integers => every dot product is exact integer-scaled arithmetic
 # in double; sign() is then unambiguous and engine-independent.
@@ -72,16 +74,13 @@ def topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int,
     input is already reduced to |Q|·|C| scored pairs; at scale, pre-reduce
     with a per-partition top-k (see `topk_bruteforce_partitioned`).
 
-    The corpus probe side is fan_out-gated (r9 skew audit: on a narrow
+    The corpus probe side is fanned out (r9 skew audit: on a narrow
     local scan the whole |Q|x|C| cosine compute inherited 1-2 parquet
-    splits — similarity_topk ran 81 s with no stage over 3 tasks; a
-    wide cluster scan leaves the gate a no-op)."""
-    from .skew import fan_out
-
+    splits — similarity_topk ran 81 s with no stage over 3 tasks)."""
     q = queries.select(F.col(id_col).alias("q_id"),
                        as_double(F.col(vec_col)).alias("q_vec"))
-    c = fan_out(corpus).select(F.col(id_col).alias("n_id"),
-                               as_double(F.col(vec_col)).alias("n_vec"))
+    c = physical.fan_out(corpus).select(
+        F.col(id_col).alias("n_id"), as_double(F.col(vec_col)).alias("n_vec"))
     scored = (c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
               .select("q_id", "n_id",
                       cosine(F.col("q_vec"), F.col("n_vec")).alias("cos_sim")))
@@ -178,8 +177,7 @@ def cosine_near_dup_pairs(vectors: DataFrame, threshold: float, dim: int,
     hot-bucket mass at jittered sf1 (two SRP buckets hold ~16% of
     vectors each), salt=48 levels what salt=16 left 2.6x skewed;
     together 37.5 -> ~6s."""
-    n_parts = int(vectors.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"))
+    n_parts = physical.parallelism(vectors.sparkSession)
     v = vectors.select(F.col(id_col).alias("vid"),
                        as_double(F.col(vec_col)).alias("vec"))
     v = (v.withColumn("bucket", srp_bucket(F.col("vec"), dim))

@@ -32,6 +32,7 @@ import datetime as _dt
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -107,7 +108,7 @@ def _dev_triangle(spark, sf_dir):
             .withColumn("cum", F.coalesce(F.sum("c").over(wc), F.lit(0))
                         .cast("bigint"))
             .select("om", "dev", "cum")
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     prv = cumt.select(F.col("om").alias("pom"),
                       (F.col("dev") + 1).alias("pdev"),
                       F.col("cum").alias("prev_cum"))
@@ -135,7 +136,7 @@ def _dev_triangle(spark, sf_dir):
                        F.expr("CAST((CAST(sum_next AS DECIMAL(38,0))"
                               " * 1000000) div sum_prev AS BIGINT)")
                        .alias("f_micro"))
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
     return cumt, factors, m
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from ..numerics import h32
 from .registry import query
 from .relational import T
@@ -161,9 +162,7 @@ def text_winnowing(spark, sf_dir):
     # size(hs) = size(words) - 4 whenever words >= 5, so hs >= 4 is
     # exactly words >= 8, and the md5 HOF appears only in the fanned-
     # out projection. sf1j: 17.4s -> ~3s, identical rows.)
-    from ..operators.skew import fan_out
-
-    d = fan_out(T(spark, sf_dir, "documents"))
+    d = physical.fan_out(T(spark, sf_dir, "documents"))
     words = F.split(F.col("text"), " ")
     base = d.select("doc_id", words.alias("words")).filter(
         F.size("words") >= 8)
@@ -736,14 +735,14 @@ def stats_theil_sen(spark, sf_dir):
     o = T(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01")
         & (F.col("o_orderdate") < "1996-01-01"))
-    # persisted: the day series feeds THREE subtrees (join left, join
-    # right, n_days) — without it each re-scans and re-aggregates the
-    # fact table
+    # cut: the day series feeds THREE subtrees (join left, join right,
+    # n_days) — without it each re-scans and re-aggregates the fact
+    # table
     d = (o.groupBy(F.datediff(F.col("o_orderdate").cast("date"),
                               F.lit("1995-01-01").cast("date")).alias("x"))
          .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
               .alias("y"))
-         .persist())
+         .transform(physical.cut))
     a = d.select(F.col("x").alias("ax"), F.col("y").alias("ay"))
     b = d.select(F.col("x").alias("bx"), F.col("y").alias("by"))
     p = (a.join(F.broadcast(b), F.col("bx") > F.col("ax"))

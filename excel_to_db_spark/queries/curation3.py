@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from ..operators import text as X
 from ..numerics import h32
 from .registry import query
@@ -213,9 +214,7 @@ def pipeline_dsir_weights(spark, sf_dir):
     token stream, and the per-doc reduce is the only corpus-wide
     shuffle. This is the production DSIR shape: the model is tiny and
     broadcastable no matter how large the corpus."""
-    from ..operators.skew import fan_out
-
-    d = fan_out(T(spark, sf_dir, "documents"))
+    d = physical.fan_out(T(spark, sf_dir, "documents"))
     ht = (d.select("doc_id", "lang",
                    F.explode(X.tokens(F.col("text"))).alias("tok"))
           .select("doc_id", "lang",

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -64,11 +65,7 @@ def _knn_blocks(spark) -> int:
     ACTUAL batch sizes at execution time — any density, zero extra
     Spark jobs, bit-identical output (forced-parameter tests in
     tests/test_curation4.py)."""
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        n_parts = 32
-    return max(1, -(-4 * n_parts // _K))
+    return max(1, -(-4 * physical.parallelism(spark) // _K))
 
 
 def _knn_chunk_rows(n_cand: int, cells: int = _KNN_BLOCK_CELLS) -> int:
@@ -114,13 +111,10 @@ def _assigned(spark, sf_dir):
     """(vec_id, label, qv, cid): every vector assigned to its nearest
     of the 8 pinned centroid vectors (ties -> smaller cid). Exact
     Spark twin of `_ASSIGN_SQL`."""
-    from ..operators.skew import fan_out
-
     # fan_out (r10 broadcast-probe sweep): the centroid crossJoin's
     # probe side otherwise inherits the 1-2 local parquet splits and
-    # runs the 8x 64-dim HOF d2 per vector on as many cores; gated, so
-    # a wide cluster scan is untouched.
-    e = fan_out(T(spark, sf_dir, "embeddings"))
+    # runs the 8x 64-dim HOF d2 per vector on as many cores.
+    e = physical.fan_out(T(spark, sf_dir, "embeddings"))
     qv = F.transform(F.col("embedding").cast("array<double>"),
                      lambda x: F.round(x * 1000000).cast("bigint"))
     v = e.select("vec_id", "label", qv.alias("qv"))
@@ -167,7 +161,7 @@ def curation_semdedup(spark, sf_dir):
     n_c^2, never n^2 — at corpus scale the clusters come from the
     same k-means the retrieval index already maintains. Per-cluster
     keep-rate census out."""
-    a = _assigned(spark, sf_dir).localCheckpoint(eager=False)
+    a = _assigned(spark, sf_dir).transform(physical.cut)
     b = a.select(F.col("vec_id").alias("b_id"), F.col("cid").alias("b_cid"),
                  F.col("qv").alias("b_qv"))
     d2 = F.expr("aggregate(zip_with(qv, b_qv, (x, y) -> (x-y)*(x-y)),"
@@ -216,7 +210,7 @@ def curation_cluster_balance(spark, sf_dir):
     bought. Aggregates over the k-row cluster table."""
     a = _assigned(spark, sf_dir)
     sizes = (a.groupBy("cid").agg(F.count("*").alias("n"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     nt = sizes.agg(F.sum("n").cast("bigint").alias("nt")) \
         .collect()[0]["nt"]
     weighted = sizes.select(
@@ -302,7 +296,7 @@ def curation_knn_density(spark, sf_dir, _nb_override=None,
     import numpy as np
     import pandas as pd
 
-    a = _assigned(spark, sf_dir).localCheckpoint(eager=False)
+    a = _assigned(spark, sf_dir).transform(physical.cut)
     nb = _nb_override if _nb_override is not None else _knn_blocks(spark)
     cells = _cells_override if _cells_override is not None \
         else _KNN_BLOCK_CELLS
@@ -366,7 +360,7 @@ def curation_knn_density(spark, sf_dir, _nb_override=None,
     score = (probes.groupBy("cid", "blk")
              .cogroup(cands.groupBy("c_cid", "c_blk"))
              .applyInPandas(_knn_block, "vec_id long, density_d2 long")
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     # Exact-rank decile census via distributed_rank (r10): the direct
     # Window.orderBy here was the last DATA-SIZED single-partition
     # window in the key — one row per scored vector, i.e. N rows

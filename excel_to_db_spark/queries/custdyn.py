@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -87,7 +88,7 @@ def customer_segment_migration(spark, sf_dir):
                                              "ck")
     wp = Window.partitionBy("period")
     # the segment table feeds both sides of the full join below;
-    # localCheckpoint pins it so the orders scan + rank run ONCE,
+    # the cut pins it so the orders scan + rank run ONCE,
     # not once per period branch (r5 plan-growth rule — the
     # unpinned plan scanned orders twice).
     seg = spend.select(
@@ -96,7 +97,7 @@ def customer_segment_migration(spark, sf_dir):
         .cast("bigint").alias("r3"),
         F.count("*").over(wp).alias("np")) \
         .select("ck", "period", F.expr("r3 div np").alias("seg")) \
-        .localCheckpoint(eager=False)
+        .transform(physical.cut)
     a = seg.where(F.col("period") == 0).select("ck", F.col("seg")
                                                .alias("sa"))
     b = seg.where(F.col("period") == 1).select("ck", F.col("seg")

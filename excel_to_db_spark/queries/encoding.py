@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -149,7 +150,7 @@ def _blocks(spark, sf_dir):
         F.max_by("sd", pos).alias("last_sd"),
         F.min("l_orderkey").alias("first_key"),
         F.max("l_orderkey").alias("last_key"))
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
 
 
 def _stitched_runs(blocks):
@@ -313,7 +314,7 @@ def enc_delta_bitwidth(spark, sf_dir):
             .select(F.when(F.col("d") == 0, 0)
                     .otherwise(F.length(F.bin(F.col("d")))
                                .cast("bigint")).alias("nbits"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     avg = (bits.agg(F.expr("sum(nbits) * 1000 div count(*)")
                     .cast("bigint").alias("a")).collect()[0]["a"])
     return (bits.groupBy("nbits").agg(F.count("*").alias("n_values"))

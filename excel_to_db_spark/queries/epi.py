@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from .forecast import _SPLIT
@@ -71,7 +72,7 @@ def _base(spark, sf_dir):
             .agg(F.count("*").alias("n"),
                  F.sum(F.when(F.col("l_returnflag") == "R", 1)
                        .otherwise(0)).cast("bigint").alias("cases"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
 
 @query("epi_standardized_rates", oracle=f"""

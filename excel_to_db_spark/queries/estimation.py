@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from ..numerics import cents_sum, h32
 from .registry import REGISTRY, query
 from .relational import T
@@ -498,23 +499,20 @@ def graph_kcore(spark, sf_dir):
     converged when two consecutive rounds agree. The oracle unrolls
     the same 4 rounds as chained MATERIALIZED CTEs.
 
-    Plan hygiene: each round's node/edge set is cut with a LAZY
-    localCheckpoint (eager=False — nothing runs at build time), not
-    .persist(): every round references the previous one four times
-    (degree, two semi-joins, stats row) and embeds the k-scalar
-    subtree, so an uncut logical plan grows ~4x per round and the
-    4-round union OOMs the driver just STRINGIFYING the tree
-    (measured at sf0.001). Checkpointing makes each round a plan
-    leaf: constant-size tree, one short job per round."""
-    from ..operators.skew import bounded_broadcast
-
+    Plan hygiene: each round's node/edge set is cut. Every round
+    references the previous one four times (degree, two semi-joins,
+    stats row) and embeds the k-scalar subtree, so an uncut logical
+    plan grows ~4x per round and the 4-round union OOMs the driver
+    just STRINGIFYING the tree (measured at sf0.001). The cut makes
+    each round a plan leaf: constant-size tree, one short job per
+    round."""
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     x, y = li.alias("x"), li.alias("y")
     e0 = (x.join(y, (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
                  & (F.col("x.l_partkey") < F.col("y.l_partkey")))
           .select(F.col("x.l_partkey").alias("a"),
                   F.col("y.l_partkey").alias("b"))
-          .distinct().localCheckpoint(eager=False))
+          .distinct().transform(physical.cut))
 
     bi = e0.unionAll(e0.select(F.col("b").alias("a"),
                                F.col("a").alias("b")))
@@ -524,14 +522,14 @@ def graph_kcore(spark, sf_dir):
             .withColumn("k", F.expr("(2 * en0 + v0 - 1) DIV v0"))
             # 1-row leaf: every round embeds k twice; uncut, each embed
             # re-aggregates the 2x-edge-sized degree frame
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
     stats = [scal.select(F.lit(0).alias("peel_round"),
                          F.col("v0").alias("n_nodes"),
                          F.col("en0").alias("n_edges"), "k")]
     # r12 DELTA PEELING (guide §2.4, VERDICT r11 #4): the r11 rounds
     # re-materialized the surviving EDGE set (two broadcast semi joins
-    # + an edge-sized localCheckpoint write) and re-counted degrees
+    # + an edge-sized cut write) and re-counted degrees
     # from it every round. Peeling only ever needs the DEGREE vector:
     # d_r(v) = d_{r-1}(v) - #neighbors removed this round, so each
     # round is one map pass over the immutable checkpointed edge list
@@ -542,23 +540,24 @@ def graph_kcore(spark, sf_dir):
     # (x in R_r was alive, v in keep_r is alive, e0 is distinct), and
     # zero-degree survivors self-evict next round because k >= 1
     # whenever any edge exists.
-    cur = d0.localCheckpoint(eager=False)       # (node, d) — alive set
+    cur = d0.transform(physical.cut)       # (node, d) — alive set
     for r in range(1, _KCORE_ROUNDS + 1):
         withk = cur.crossJoin(F.broadcast(scal.select("k")))
         keep = withk.filter(F.col("d") >= F.col("k")).select("node", "d")
         removed = (withk.filter(F.col("d") < F.col("k"))
                    .select(F.col("node").alias("x")))
         # removed is alive-node-sized, bounded by the part dimension
-        dec = (bi.join(bounded_broadcast(removed, sf_dir, ("part",)),
+        dec = (bi.join(physical.bounded_broadcast(removed, sf_dir,
+                                                  ("part",)),
                        F.col("a") == F.col("x"))
                .groupBy(F.col("b").alias("node"))
                .agg(F.count("*").alias("dec")))
-        nxt = (keep.join(bounded_broadcast(dec, sf_dir, ("part",)),
+        nxt = (keep.join(physical.bounded_broadcast(dec, sf_dir, ("part",)),
                          "node", "left")
                .select("node",
                        (F.col("d") - F.coalesce(F.col("dec"), F.lit(0)))
                        .alias("d"))
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
         stats.append(
             keep.agg(F.count("*").alias("n_nodes"))
             .crossJoin(nxt.agg(
@@ -1412,7 +1411,7 @@ def graph_sssp_bellman(spark, sf_dir):
     the running labels — the same iterate-join-aggregate skeleton as
     graph_pagerank3/graph_bfs_levels, with min-plus instead of
     sum-times. Rounds reference the previous label set twice (union +
-    join), so each round is cut with a lazy localCheckpoint (the
+    join), so each round is cut (physical.cut; the
     graph_kcore plan-growth lesson). Four rounds bound path length at
     4 hops; on this dense 25-node trade graph that reaches every
     node, which the convergence test asserts (round 4 == round 3).
@@ -1438,7 +1437,7 @@ def graph_sssp_bellman(spark, sf_dir):
                      w.alias("w"))
          .unionAll(half.select(F.col("b").alias("u"),
                                F.col("a").alias("v"), w.alias("w")))
-         .localCheckpoint(eager=False))
+         .transform(physical.cut))
 
     d = spark.createDataFrame([(0, 0)], "node int, dist bigint").select(
         F.col("node").cast("int").alias("node"),
@@ -1449,7 +1448,7 @@ def graph_sssp_bellman(spark, sf_dir):
                         (F.col("dist") + F.col("w")).alias("dist")))
         d = (d.unionByName(cand)
              .groupBy("node").agg(F.min("dist").alias("dist"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     return d
 
 
@@ -2143,7 +2142,7 @@ def privacy_cell_suppression(spark, sf_dir):
     Distributed shape: ONE count aggregate over the fact table; every
     suppression round is window work over the released table itself
     (#cells rows, bounded by the release schema, not the corpus),
-    cut per round with the usual lazy localCheckpoint. Completes the
+    cut per round with the usual physical.cut. Completes the
     disclosure-control set: k-anonymity (identity), l-diversity
     (attribute), t-closeness (distribution), DP (noise) — and now
     safe TABULAR release."""
@@ -2156,7 +2155,7 @@ def privacy_cell_suppression(spark, sf_dir):
          .withColumn("sup", F.when(F.col("n") < _SUPP_K, 1).otherwise(0))
          .withColumn("rsup", F.when(F.col("n") < _SUPP_K, 0)
                      .otherwise(F.lit(None).cast("int")))
-         .localCheckpoint(eager=False))
+         .transform(physical.cut))
     for r in range(1, _SUPP_ROUNDS + 1):
         wr = Window.partitionBy("nat")
         wc = Window.partitionBy("seg")
@@ -2181,7 +2180,7 @@ def privacy_cell_suppression(spark, sf_dir):
             F.when((F.col("sup") == 0)
                    & ((F.col("rpick") == 1) | (F.col("cpick") == 1)),
                    F.lit(r)).otherwise(F.col("rsup")).alias("rsup"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     return s.select(F.col("nat").alias("c_nationkey"),
                     F.col("seg").alias("c_mktsegment"),
                     F.col("n").alias("n_customers"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -194,9 +195,8 @@ def graph_hits(spark, sf_dir):
     BIGINT floor-division by the broadcast 1-row max — the fixpoint
     stays hash-exact across engines with no float anywhere (the
     attribution_markov_removal protocol). Round outputs cut lineage
-    with lazy localCheckpoint (PLANS.md rule: iterative keys
-    referenced across rounds MUST checkpoint or the plan tree grows
-    geometrically).
+    (PLANS.md rule: iterative keys referenced across rounds MUST cut
+    or the plan tree grows geometrically).
 
     Scale shape: the graph is a DISTINCT-pair aggregate of the fact
     join (bounded by |customers| x avg distinct suppliers, not order
@@ -208,40 +208,34 @@ def graph_hits(spark, sf_dir):
              .select(F.col("o_custkey").alias("c"),
                      F.col("l_suppkey").alias("s"))
              .distinct()
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
 
     def norm(df, key, raw):
         mx = df.agg(F.max(raw).alias("mx"))
         return (df.crossJoin(F.broadcast(mx))
                 .select(key, F.expr(f"{raw} * 1000000 div mx")
                         .alias("v"))
-                .localCheckpoint(eager=False))
+                .transform(physical.cut))
 
-    # r11: every score frame is DIMENSION-sized (suppliers / customers
-    # — the same bound that broadcasts those dim tables elsewhere) but
-    # checkpointed, so its stats are unknown and each half-round
-    # sort-merged, shuffling the full edge list. Broadcasting the
-    # score side makes each half-round one map pass over the
-    # checkpointed edges + its groupBy shuffle (guide §3);
-    # bounded_broadcast gates on the bounding dimension's footer row
-    # count so data-sized dims degrade to sort-merge, not a broadcast
-    # failure.
-    from ..operators.skew import bounded_broadcast
-
-    def bb(df, tables):
-        return bounded_broadcast(df, sf_dir, tables)
-
+    # r11: every score frame is DIMENSION-sized (one row per supplier
+    # or customer) but cut, so its stats are unknown and each
+    # half-round sort-merged, shuffling the full edge list.
+    # Broadcasting the score side makes each half-round one map pass
+    # over the cut edges + its groupBy shuffle (guide §3).
     a1 = edges.groupBy("s").agg(
         (F.count("*") * 1000000).alias("a_raw"))
     a1n = norm(a1, "s", "a_raw").withColumnRenamed("v", "a")
-    h1 = (edges.join(bb(a1n, ("supplier",)), "s").groupBy("c")
-          .agg(F.sum("a").alias("h_raw")))
+    h1 = (edges.join(physical.bounded_broadcast(a1n, sf_dir, ("supplier",)),
+                     "s")
+          .groupBy("c").agg(F.sum("a").alias("h_raw")))
     h1n = norm(h1, "c", "h_raw").withColumnRenamed("v", "h")
-    a2 = (edges.join(bb(h1n, ("customer",)), "c").groupBy("s")
-          .agg(F.sum("h").alias("a_raw")))
+    a2 = (edges.join(physical.bounded_broadcast(h1n, sf_dir, ("customer",)),
+                     "c")
+          .groupBy("s").agg(F.sum("h").alias("a_raw")))
     a2n = norm(a2, "s", "a_raw").withColumnRenamed("v", "a")
     deg = edges.groupBy("s").agg(F.count("*").alias("in_deg"))
-    return (a2n.join(bb(deg, ("supplier",)), "s")
+    return (a2n.join(physical.bounded_broadcast(deg, sf_dir, ("supplier",)),
+                     "s")
             .select(F.col("s").alias("s_suppkey"),
                     F.col("a").alias("authority_micro"), "in_deg")
             .orderBy(F.col("authority_micro").desc(), "s_suppkey")

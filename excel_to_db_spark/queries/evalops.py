@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -350,7 +351,7 @@ def stats_bradley_terry(spark, sf_dir):
     Every round reads ONLY the previous round's snapped micro
     strengths, so the fixpoint trajectory is hash-exact across
     engines (the graph_hits/attribution_markov protocol); rounds cut
-    lineage with lazy localCheckpoint (PLANS.md rule).
+    lineage with physical.cut (PLANS.md rule).
 
     Scale shape: the corpus collapses to the (day, item) cell grid
     first; duels aggregate that bounded grid (k^2 pairs); each MM
@@ -371,12 +372,12 @@ def stats_bradley_terry(spark, sf_dir):
                       F.col("b.item").alias("j"))
              .agg(F.sum(F.when(F.col("a.mm") > F.col("b.mm"), 1)
                         .otherwise(0)).alias("w"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     rev = duels.select(F.col("j").alias("i"), F.col("i").alias("j"),
                        F.col("w").alias("w2"))
     nmat = (duels.join(rev, ["i", "j"])
             .select("i", "j", (F.col("w") + F.col("w2")).alias("n_ij"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     wins = duels.groupBy("i").agg(F.sum("w").alias("wi"))
     items = cell.select("item").distinct()
     p = items.select("item", F.lit(1000000).cast("bigint").alias("p"))
@@ -400,7 +401,7 @@ def stats_bradley_terry(spark, sf_dir):
         mx = upd.agg(F.max("p").alias("mx"))
         return (upd.crossJoin(F.broadcast(mx))
                 .select("item", F.expr("p * 1000000 div mx").alias("p"))
-                .localCheckpoint(eager=False))
+                .transform(physical.cut))
 
     for _ in range(3):
         p = mm_round(p)

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from ..numerics import h32
@@ -268,7 +269,7 @@ def exp_sequential_obf(spark, sf_dir):
     wr = Window.orderBy("hr")
     nh = hrs.count()
     hrs = (hrs.withColumn("rk", F.row_number().over(wr))
-           .localCheckpoint(eager=False))
+           .transform(physical.cut))
     looks = spark.range(1, 6).select(F.col("id").cast("int")
                                      .alias("look"))
     cum = (looks.join(hrs, hrs["rk"] * 5 <= F.lit(nh) * F.col("look"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..operators import multimodal as M
+from ..operators import physical
 from ..operators import similarity as S
 from ..operators import text as X
 from ..streaming import run_tumbling_stream, session_agg, tumbling_agg
@@ -450,12 +451,10 @@ def text_langid(spark, sf_dir):
     """Stopword-vote language ID: argmax of per-language stopword hits,
     ties broken by language code ascending — the same strictly-greater
     fold rule the CASE ladder expresses, so both engines agree exactly.
-    The scan is fan_out-gated: five per-language stopword scans per row
+    The scan is fanned out: five per-language stopword scans per row
     serialize on a narrow local scan (r9 skew audit flagged the
     downstream text_langid_eval with no stage over 3 tasks)."""
-    from ..operators.skew import fan_out
-
-    return X.langid(fan_out(T(spark, sf_dir, "documents")))
+    return X.langid(physical.fan_out(T(spark, sf_dir, "documents")))
 
 
 @query("text_fingerprint", oracle="""
@@ -752,16 +751,14 @@ def similarity_ivf(spark, sf_dir):
     GROUP BY s.s_nationkey
 """)
 def join_salted(spark, sf_dir):
-    """Salted equi-join (operators/skew.py): hot fact keys split across
-    n_salts shuffle partitions, dim side replicated n_salts x. The
+    """Salted equi-join (operators/physical.py): hot fact keys split
+    across n_salts shuffle partitions, dim side replicated n_salts x. The
     oracle is the PLAIN join — salting must be invisible in the result.
     (AQE skew-split handles most cases automatically; explicit salting
     is the tool when a single key overwhelms even a split task.)"""
-    from ..operators.skew import salted_join
-
     le = T(spark, sf_dir, "lineitem")
     su = T(spark, sf_dir, "supplier")
-    j = salted_join(le, su, "l_suppkey", "s_suppkey", n_salts=8)
+    j = physical.salted_join(le, su, "l_suppkey", "s_suppkey", n_salts=8)
     return (j.groupBy("s_nationkey")
             .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
                  F.count("*").alias("n_items")))
@@ -1586,7 +1583,7 @@ def dedup_cluster_eval(spark, sf_dir):
                    D.content_fingerprint(F.col("text")).alias("fp"))
           .select("doc_id", F.min("doc_id").over(wfp).alias("cb")))
     # Three consumers (cell/sa/sb) read j; materialize it once.
-    j = ca.join(cb, "doc_id").select("ca", "cb").localCheckpoint(eager=False)
+    j = ca.join(cb, "doc_id").select("ca", "cb").transform(physical.cut)
     cell = j.groupBy("ca", "cb").agg(F.count("*").alias("nij"))
     s = cell.agg(F.sum("nij").alias("n"),
                  F.sum(F.expr("(nij * (nij - 1)) DIV 2")).alias("tp"))

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -77,7 +78,7 @@ def _pit(spark, sf_dir):
         & (F.col("cts") < labels["lts"]), "left")
         .groupBy("lid", "user_id", "lts")
         .agg(F.count(F.col("cts")).cast("bigint").alias("f7"))
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
 
 
 @query("fs_point_in_time_join", oracle=f"""
@@ -230,7 +231,7 @@ def fs_training_skew(spark, sf_dir):
                    .cast("bigint").alias("n_train"),
                    F.sum(F.when(F.col("lts") >= mid, 1).otherwise(0))
                    .cast("bigint").alias("n_serve"))
-              .localCheckpoint(eager=False))
+              .transform(physical.cut))
     tots = shares.agg(F.sum("n_train").cast("bigint").alias("tt"),
                       F.sum("n_serve").cast("bigint").alias("ts")) \
         .collect()[0]

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from ..numerics import h32
@@ -211,7 +212,7 @@ def causal_cem_att(spark, sf_dir):
                   .cast("bigint").alias("nc"),
                   F.sum(F.when(~F.col("treated"), F.col("y")).otherwise(0))
                   .cast("bigint").alias("yc"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     n_treated_total = (cells.agg(F.sum("nt").cast("bigint").alias("s"))
                        .collect()[0]["s"])
     matched = cells.where((F.col("nt") > 0) & (F.col("nc") > 0))
@@ -284,14 +285,14 @@ def eval_bleu_counts(spark, sf_dir):
     # n-gram explosion + map-side count below runs on one core (r10
     # broadcast-probe sweep; 6.0 s of sf1j wall). Data-sized rows, so
     # the exchange is trivial next to the gram explode.
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = physical.parallelism(spark)
     pairs = (docs.select(
         F.col("doc_id").alias("pid"),
         F.split("text", " ").alias("ct"),
         F.split(F.lead("text", 1).over(w), " ").alias("rt"))
         .where(F.col("rt").isNotNull())
         .repartition(n_parts)
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
     ns = spark.range(1, 5).select(F.col("id").cast("int").alias("n"))
 
     def grams(col):
@@ -380,11 +381,9 @@ def eval_err_rank(spark, sf_dir):
                       F.col("qv").alias("q_qv")))
     d2 = F.expr("aggregate(zip_with(q_qv, qv, (a, b) -> (a-b)*(a-b)),"
                 " 0L, (s, x) -> s + x)")
-    # broadcast-kNN probe side: fan_out-gated explicit repartition (r9
-    # skew audit — 51 s with no stage over 3 tasks on the narrow scan).
-    from ..operators.skew import fan_out
-
-    scored = (fan_out(v).crossJoin(F.broadcast(probes))
+    # broadcast-kNN probe side: fanned out (r9 skew audit — 51 s with
+    # no stage over 3 tasks on the narrow scan).
+    scored = (physical.fan_out(v).crossJoin(F.broadcast(probes))
               .where(F.col("vec_id") != F.col("q_id"))
               .select("q_id",
                       (F.col("label") == F.col("q_label")).alias("rel"),
@@ -392,7 +391,7 @@ def eval_err_rank(spark, sf_dir):
     wk = Window.partitionBy("q_id").orderBy("d2", "n_id")
     top = (scored.withColumn("j", F.row_number().over(wk))
            .where(F.col("j") <= 10)
-           .localCheckpoint(eager=False))
+           .transform(physical.cut))
     wp = (Window.partitionBy("q_id").orderBy("j")
           .rowsBetween(Window.unboundedPreceding, -1))
     nm1 = F.when(F.col("rel"), 1).otherwise(8)

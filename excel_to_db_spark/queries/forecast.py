@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -228,7 +229,7 @@ def ts_pinball_eval(spark, sf_dir):
     w = Window.orderBy("q", "day")
     tr = (dt.where(F.col("day") < _SPLIT)
           .select("q", F.row_number().over(w).alias("rn"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     n = tr.count()
     qps = spark.range(1).select(
         F.explode(F.array(*[F.lit(v) for v in (10, 50, 90)])).alias("qp"))

@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -693,10 +694,7 @@ def cogroup_asof_pandas(spark, sf_dir):
     # tasks at sf1j (r9 audit: 81% of a 31 s wall). A user-numbered
     # hash repartition satisfies the cogroup's required distribution
     # (no second exchange) and AQE never coalesces it.
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        n_parts = 32
+    n_parts = physical.parallelism(spark)
     clicks = (e.filter(F.col("event_type") == "click")
               .select("user_id", "ts")
               .repartition(n_parts, "user_id"))

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -362,7 +363,7 @@ def geo_dbscan_census(spark, sf_dir):
         F.expr(f"latp div {sub_side}").alias("sy"),
         F.expr(f"lonp div {sub_side}").alias("sx"))
         .withColumn("sc", F.count("*").over(w_sub))
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
     sparse = sub.where(F.col("sc") < _MINPTS)
     off = F.array([F.lit(v) for v in (-2, -1, 0, 1, 2)])
     probes = (sparse
@@ -378,13 +379,13 @@ def geo_dbscan_census(spark, sf_dir):
     pairs = (probes.join(q, ["sy", "sx"])
              .where(d2 <= F.lit(_EPS * _EPS))
              .select(F.col("id").alias("a"), F.col("qid").alias("b"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     # Exact eps-neighbor count for every sparse point (self-pair always
     # present, exactly as in the oracle's pair list).
     ncnt = (pairs.groupBy(F.col("a").alias("nid"))
             .agg(F.count("*").alias("n_nbr"))
             .withColumn("ncore", F.col("n_nbr") >= _MINPTS)
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     core_ids = (sub.where(F.col("sc") >= _MINPTS).select(F.col("id"))
                 .unionByName(ncnt.where("ncore").select(
                     F.col("nid").alias("id")))

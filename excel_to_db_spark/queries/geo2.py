@@ -28,55 +28,13 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..operators.skew import BROADCAST_ROW_LIMIT
+from ..operators import physical
 from .registry import query
 from .relational import T
 from .geo import _LAT_SPAN, _LON_SPAN, _TX8, _TY8, _pts, _pts_sql
 
 _CUST_SQL = _pts_sql("customer", "c_custkey", "c_nationkey", "")
 _SUPP_SQL = _pts_sql("supplier", "s_suppkey", "s_nationkey", "s")
-
-# Cell size g and the customer row count, derived once per
-# (application, sf_dir, fixture fingerprint): supp.count()/cust.count()
-# are eager Spark jobs and _nearest is called by two registered keys in
-# the same session (ADVICE r8: don't re-run them per call). Keyed by
-# applicationId so a stopped/recreated session can't serve stale counts,
-# AND by a size/mtime fingerprint of the two parquet tables so a fixture
-# rebuilt in place at a different scale (tools/make_scale.py) while the
-# application stays alive can't serve a stale g / n_cust — a stale
-# n_cust below BROADCAST_ROW_LIMIT would keep the broadcast hint on a
-# now-fact-sized frame (ADVICE r9).
-_NEAREST_CACHE: dict[tuple[str, str, tuple], tuple[int, int]] = {}
-
-
-def _fixture_fingerprint(sf_dir: str, *tables: str) -> tuple:
-    """Cheap driver-side change detector: (name, size, mtime_ns) of every
-    file under each table's parquet path. No Spark job, no file reads."""
-    import os
-
-    sig = []
-    for t in tables:
-        root = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            if os.path.isdir(root):
-                # Walk RECURSIVELY (ADVICE r10): a partitioned layout
-                # nests data files under key=... subdirectories, and a
-                # top-level listing would fingerprint the directory
-                # entries instead of the files the staleness check
-                # exists to watch.
-                paths = []
-                for d, _dirs, files in sorted(os.walk(root)):
-                    paths.extend(os.path.join(d, n) for n in sorted(files))
-            else:
-                paths = [root]
-            for p in paths:
-                st = os.stat(p)
-                sig.append((os.path.relpath(p, sf_dir), st.st_size,
-                            st.st_mtime_ns))
-        except OSError:
-            sig.append((t, -1, -1))
-    return tuple(sig)
-
 
 _NEAREST_SQL = f"""
     cust AS MATERIALIZED ({_CUST_SQL}),
@@ -137,12 +95,11 @@ def _nearest(spark, sf_dir, _g_override=None):
     codegen and ran 20-70x slower (r6 note). The probe side keeps its
     explicit-N repartition (single parquet split otherwise feeds the
     pipeline through one task), and the per-customer minima carry the
-    broadcast hint only below ``BROADCAST_ROW_LIMIT`` customers — past
+    broadcast hint only while the customer count is broadcastable — past
     that the re-derivation joins shuffle on cust_id instead (they
     carry ~14 rows/customer, not M, so the shuffle is candidate-mass
-    proportional). g and the customer count are derived once per
-    (application, sf_dir) via ``_NEAREST_CACHE``, not re-counted on
-    every call."""
+    proportional). M and the customer count are parquet-footer row
+    counts (``physical.footer_rows``): no Spark job."""
     import math
 
     cust = _pts(spark, sf_dir, "customer", "c_custkey", "c_nationkey", "")
@@ -151,22 +108,16 @@ def _nearest(spark, sf_dir, _g_override=None):
             .select(F.col("id").alias("supp_id"),
                     F.col("latp").alias("slat"),
                     F.col("lonp").alias("slon")))
-    cache_key = (spark.sparkContext.applicationId, sf_dir,
-                 _fixture_fingerprint(sf_dir, "customer", "supplier"))
-    if cache_key in _NEAREST_CACHE:
-        g_cached, n_cust = _NEAREST_CACHE[cache_key]
-    else:
-        m = max(supp.count(), 1)
-        area = _LAT_SPAN * _LON_SPAN
-        g_cached = max(1, math.isqrt(int(5 * area / (math.pi * m))))
-        n_cust = cust.count()
-        _NEAREST_CACHE[cache_key] = (g_cached, n_cust)
-    g = int(_g_override) if _g_override is not None else g_cached
-    # Size-gated hint: hint_small marks frames bounded by the CUSTOMER
-    # count (one row per certified/escalated customer) — broadcast only
-    # while that bound fits in driver memory, else let the planner
-    # shuffle-join on cust_id.
-    hint_small = (F.broadcast if n_cust <= BROADCAST_ROW_LIMIT
+    m = physical.footer_rows(sf_dir, ("supplier",))
+    if m is None:
+        m = supp.count()
+    area = _LAT_SPAN * _LON_SPAN
+    g = (int(_g_override) if _g_override is not None
+         else max(1, math.isqrt(int(5 * area / (math.pi * max(m, 1))))))
+    # hint_small marks frames bounded by the CUSTOMER count (one row per
+    # certified/escalated customer).
+    n_cust = physical.footer_rows(sf_dir, ("customer",))
+    hint_small = (F.broadcast if physical.broadcastable(n_cust)
                   else (lambda df: df))
     d2 = ((F.col("latp") - F.col("slat")) * (F.col("latp") - F.col("slat"))
           + (F.col("lonp") - F.col("slon"))
@@ -201,7 +152,7 @@ def _nearest(spark, sf_dir, _g_override=None):
                  .agg(F.min("supp_id").alias("supp_id")))
     return (nearest_a.select("cust_id", "supp_id", "d2")
             .unionByName(nearest_b.select("cust_id", "supp_id", "d2"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
 
 @query("geo_od_matrix", oracle=f"""

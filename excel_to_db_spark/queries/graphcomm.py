@@ -22,7 +22,7 @@ keys with the community-detection layer:
   against the bipartite possible-pair denominators.
 
 Scale shapes: every round/metric is an equi-join + aggregate on the
-edge list; LPA rounds localCheckpoint (plan-growth rule) and the
+edge list; LPA rounds cut lineage (plan-growth rule) and the
 oracle MATERIALIZEs every level (DuckDB re-runs a CTE per downstream
 reference). The projection's cost is sum of squared customer degrees
 — DF-capped in production (drop hub customers, documented in
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -62,7 +63,7 @@ def _edges(spark, sf_dir):
 def _bi(edges):
     return (edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
 
 
 _LPA_ROUND = """
@@ -109,14 +110,12 @@ def graph_label_propagation(spark, sf_dir):
     on ties, exactly the row_number()=1 row (unique, hence
     order-independent), and both aggregations partial-aggregate
     map-side where the window forced a full sort per round."""
-    from ..operators.skew import bounded_broadcast
-
     bi = _bi(_edges(spark, sf_dir))
     lbl = bi.select("u").distinct().select("u", F.col("u").alias("lbl"))
     for _ in range(3):
-        lbl = (bi.join(bounded_broadcast(
-                           lbl.select(F.col("u").alias("v2"), "lbl"),
-                           sf_dir, ("customer", "supplier")),
+        lbl = (bi.join(physical.bounded_broadcast(
+                               lbl.select(F.col("u").alias("v2"), "lbl"),
+                               sf_dir, ("customer", "supplier")),
                        bi["v"] == F.col("v2"))
                .groupBy("u", "lbl").agg(F.count("*").alias("cnt"))
                .groupBy("u")
@@ -124,7 +123,7 @@ def graph_label_propagation(spark, sf_dir):
                                    (-F.col("lbl")).alias("neg")))
                     .alias("top"))
                .select("u", (-F.col("top.neg")).alias("lbl"))
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
     return (lbl.groupBy("lbl").agg(F.count("*").alias("csize"))
             .groupBy("csize").agg(F.count("*").alias("n_communities")))
 
@@ -174,7 +173,7 @@ def graph_conductance(spark, sf_dir):
            .join(F.broadcast(su), edges["v"] == su["s_suppkey"] * 2 + 1)
            .select(F.col("c_nationkey").alias("gu"),
                    F.col("s_nationkey").alias("gv"))
-           .localCheckpoint(eager=False))
+           .transform(physical.cut))
     m = lab.count()
     ein = F.when(F.col("gu") == F.col("gv"), 1).otherwise(0)
     cut = F.when(F.col("gu") != F.col("gv"), 1).otherwise(0)
@@ -219,7 +218,7 @@ def graph_bipartite_projection(spark, sf_dir):
     # jittered sf1) fed BOTH self-join sides and was computed twice;
     # one lazy checkpoint halves that, and the self-join sort-merges
     # two identical checkpoint scans (exchange reuse).
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = _edges(spark, sf_dir).transform(physical.cut)
     e2 = edges.select(F.col("u").alias("u2"), F.col("v").alias("v2"))
     proj = (edges.join(e2, (edges["u"] == F.col("u2"))
                        & (edges["v"] < F.col("v2")))
@@ -291,14 +290,14 @@ def graph_core_periphery(spark, sf_dir):
     Borgatti-Everett structure has dens_cc >> dens_cp >> dens_pp;
     node ranking is over #nodes rows, edge classification is two
     broadcast-able label joins."""
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = _edges(spark, sf_dir).transform(physical.cut)
     bi = _bi(edges)
     deg = bi.groupBy("u").agg(F.count("*").alias("d"))
     w = Window.orderBy(F.col("d").desc(), F.col("u"))
     n = deg.count()
     cls = (deg.select("u", F.row_number().over(w).alias("rn"))
            .select("u", (F.col("rn") <= (n + 9) // 10).alias("is_core"))
-           .localCheckpoint(eager=False))
+           .transform(physical.cut))
     sides = cls.agg(
         F.sum(F.when((F.col("u") % 2 == 0) & F.col("is_core"), 1)
               .otherwise(0)).cast("bigint").alias("nc_c"),

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -45,7 +46,7 @@ def _bipartite(spark, sf_dir):
     """Distinct supplier-part edges (ONE distinct projection of
     lineitem), per-part supplier degree, per-supplier part degree.
 
-    r12 (guide §2.4): the edge set is cut with a lazy localCheckpoint —
+    r12 (guide §2.4): the edge set is cut (physical.cut) —
     every wedge key derives at least three subtrees from it (per-part
     count, capped wedge input, supplier degree) and without the cut
     each subtree re-scanned lineitem and re-ran the distinct exchange
@@ -54,7 +55,7 @@ def _bipartite(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     sp = (li.select(F.col("l_suppkey").alias("s"),
                     F.col("l_partkey").alias("p")).distinct()
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     pc = sp.groupBy("p").agg(F.count("*").alias("c"))
     deg = sp.groupBy("s").agg(F.count("*").alias("d"))
     return sp, pc, deg
@@ -67,10 +68,8 @@ def _capped_edges(sp, pc, sf_dir):
     at 64). The per-part count prefilter joins map-side
     (bounded_broadcast on the part dimension), so a hub part never
     reaches the downstream per-part supplier list."""
-    from ..operators.skew import bounded_broadcast
-
     keep = pc.filter((F.col("c") >= 2) & (F.col("c") <= 64))
-    return sp.join(bounded_broadcast(keep, sf_dir, ("part",)), "p")
+    return sp.join(physical.bounded_broadcast(keep, sf_dir, ("part",)), "p")
 
 
 _SP_SQL = """

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from .forecast import _DAILY_PART_SQL, _DAILY_TOTAL_SQL, _SPLIT, \
@@ -71,7 +72,7 @@ def inventory_newsvendor(spark, sf_dir):
     the test window — the numbers that validate the fractile choice.
     One bounded rank window + one scalar broadcast over the test
     scan."""
-    dt = _daily_total(spark, sf_dir).localCheckpoint(eager=False)
+    dt = _daily_total(spark, sf_dir).transform(physical.cut)
     w = Window.orderBy("q", "day")
     tr = (dt.where(F.col("day") < _SPLIT)
           .select("q", F.row_number().over(w).alias("rn")))
@@ -272,7 +273,7 @@ def inventory_fill_rate(spark, sf_dir):
     `inventory_abc_xyz` cutoffs re-derived on quantity). Per-part
     order statistics are partitioned windows over the per-part daily
     aggregate; the report is three map-side-combinable sums."""
-    pd_ = _daily_part(spark, sf_dir).localCheckpoint(eager=False)
+    pd_ = _daily_part(spark, sf_dir).transform(physical.cut)
     wrev = Window.orderBy(F.col("tot").desc(), F.col("part"))
     rev = (pd_.groupBy("part").agg(F.sum("q").cast("bigint").alias("tot")))
     np_ = rev.count()

@@ -21,7 +21,7 @@ Scale shapes: raking runs entirely on the 125-cell margin table
 calendar; the truss wedge joins partition on edge endpoints (the
 degree-ordering refinement documented at graph_triangles applies
 unchanged). Pinned rounds keep plans finite; the Spark sides
-localCheckpoint between rounds (r5 plan-growth rule) and the oracles
+cut lineage between rounds (r5 plan-growth rule) and the oracles
 chain AS MATERIALIZED CTEs."""
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -167,7 +168,7 @@ def anomaly_gesd_rounds(spark, sf_dir):
     daily = (T(spark, sf_dir, "orders")
              .groupBy(F.col("o_orderdate").cast("date").alias("day"))
              .agg(F.count("*").alias("x"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
 
     out = []
     cur = daily
@@ -180,7 +181,7 @@ def anomaly_gesd_rounds(spark, sf_dir):
                                          - F.col("s")))
                 .orderBy(F.col("dev").desc(), "day")
                 .limit(1)
-                .localCheckpoint(eager=False))
+                .transform(physical.cut))
         out.append(pick.select(
             F.lit(rnd).cast("bigint").alias("round"), "day",
             F.col("x").alias("x_removed"),
@@ -191,7 +192,7 @@ def anomaly_gesd_rounds(spark, sf_dir):
                     * 1000).cast("bigint").alias("r2_milli")))
         cur = (cur.join(F.broadcast(pick.select("day")), "day",
                         "left_anti")
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
     return out[0].unionAll(out[1]).unionAll(out[2])
 
 
@@ -269,7 +270,7 @@ def graph_ktruss_peel(spark, sf_dir):
     surviving-edge censuses. The wedge joins partition on edge
     endpoints — at real graph scale the degree-ordering refinement
     (see graph_triangles) bounds fanout by arboricity, and peeling
-    runs until fixpoint with localCheckpoint per round."""
+    runs until fixpoint with a lineage cut per round."""
     le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -296,7 +297,7 @@ def graph_ktruss_peel(spark, sf_dir):
     edges = (und.crossJoin(F.broadcast(med))
              .where(F.col("w") > F.col("cut"))
              .select("a", "b")
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
 
     out = []
     for rnd in (1, 2):
@@ -309,7 +310,7 @@ def graph_ktruss_peel(spark, sf_dir):
                .join(e3, (F.col("a") == F.col("xa"))
                      & (F.col("c") == F.col("xc")))
                .select("a", "b", "c")
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
         sup = (tri.select("a", "b")
                .unionAll(tri.select(F.col("b").alias("a"),
                                     F.col("c").alias("b")))
@@ -317,7 +318,7 @@ def graph_ktruss_peel(spark, sf_dir):
                .groupBy("a", "b").agg(F.count("*").alias("support")))
         kept = (sup.where(F.col("support") >= 2)
                 .select("a", "b")
-                .localCheckpoint(eager=False))
+                .transform(physical.cut))
         n_tri = tri.count()
         n_kept = kept.count()
         out.append((rnd, n_tri, n_kept))

@@ -30,7 +30,7 @@ and position from `h32`, `numerics.py`). The hidden ground truth
 
 Scale shapes: blocking and SNM are equi-join / sort-merge shapes (no
 cross products); FS scoring is a projection over the bounded candidate
-set; label prop is 3 edge-join rounds with localCheckpoint between
+set; label prop is 3 edge-join rounds with a lineage cut between
 (plan-growth rule) and AS MATERIALIZED on the oracle side (DuckDB
 re-runs a CTE per downstream reference). Levenshtein is engine-native
 on BOTH sides (classic DP edit distance, verified identical)."""
@@ -42,6 +42,7 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from ..numerics import h32
@@ -170,10 +171,8 @@ def _block_pairs(clean, dirty):
     # The probe side of the (broadcast) block join otherwise inherits
     # the scan's 1-2 parquet splits: the r9 skew audit measured the
     # WHOLE 27.9M-pair generation in one 65.8 s task (9-task stage,
-    # max/median 76x) on sf1j. fan_out is a no-op on wide scans.
-    from ..operators.skew import fan_out
-
-    c = fan_out(clean).select(
+    # max/median 76x) on sf1j.
+    c = physical.fan_out(clean).select(
         F.col("id").alias("cid"), F.col("s").alias("cs"),
         _block_key(F.col("s")).alias("bk"))
     d = dirty.select(F.col("id").alias("did"), F.col("s").alias("ds"),
@@ -357,7 +356,7 @@ def _fs_scored(spark, sf_dir):
                 .unionByName(_snm_pairs(clean, dirty)
                              .select("cid", "did"))
                 .distinct()
-                .localCheckpoint(eager=False))
+                .transform(physical.cut))
 
     # The agreement FIELDS (last token, 2-char prefix) are per-RECORD
     # values, so they ride the broadcast sides and are computed 200k
@@ -374,13 +373,11 @@ def _fs_scored(spark, sf_dir):
                          F.substring(F.col("s"), 1, 2)
                          .alias(f"{sn}_pfx"))
 
-    from ..operators.skew import bounded_broadcast
-
     cand = (cand_ids
-            .join(bounded_broadcast(_side(clean, "cid", "cs"),
-                                    sf_dir, ("part",)), "cid")
-            .join(bounded_broadcast(_side(dirty, "did", "ds"),
-                                    sf_dir, ("part",)), "did"))
+            .join(physical.bounded_broadcast(_side(clean, "cid", "cs"),
+                                             sf_dir, ("part",)), "cid")
+            .join(physical.bounded_broadcast(_side(dirty, "did", "ds"),
+                                             sf_dir, ("part",)), "did"))
     lev = F.levenshtein("cs", "ds", 1)
     tok = F.col("cs_tok") == F.col("ds_tok")
     pfx = F.col("cs_pfx") == F.col("ds_pfx")
@@ -478,7 +475,7 @@ def linkage_transitive_merge(spark, sf_dir):
                      (F.col("did") * 2 + 1).alias("v")))
     bi = (edges.unionByName(edges.select(F.col("v").alias("u"),
                                          F.col("u").alias("v")))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     lbl = bi.select("u").distinct().select("u", F.col("u").alias("lbl"))
     # r11: the label frame is bounded by the MATCHED-id set (sparse by
     # construction, <= 2x the part dimension: clean node ids 2i plus
@@ -488,16 +485,14 @@ def linkage_transitive_merge(spark, sf_dir):
     # list plus the min-label groupBy shuffle (guide §3). ADVICE r11:
     # the gate names the part table TWICE so the bound it checks is the
     # documented 2x bound.
-    from ..operators.skew import bounded_broadcast
-
     for _ in range(3):
-        nbr = (bi.join(bounded_broadcast(
-                           lbl.select(F.col("u").alias("v2"), "lbl"),
-                           sf_dir, ("part", "part")),
+        nbr = (bi.join(physical.bounded_broadcast(
+                               lbl.select(F.col("u").alias("v2"), "lbl"),
+                               sf_dir, ("part", "part")),
                        bi["v"] == F.col("v2"))
                .select("u", "lbl"))
         lbl = (lbl.select("u", "lbl").unionByName(nbr)
                .groupBy("u").agg(F.min("lbl").alias("lbl"))
-               .localCheckpoint(eager=False))
+               .transform(physical.cut))
     return (lbl.groupBy("lbl").agg(F.count("*").alias("csize"))
             .groupBy("csize").agg(F.count("*").alias("n_clusters")))

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -62,7 +63,7 @@ def mkt_adstock_decay(spark, sf_dir):
     clicks = (ev.where(F.col("event_type") == "click")
               .select(F.expr("unix_timestamp(ts) div 86400").alias("day"))
               .groupBy("day").agg(F.count("*").alias("x"))
-              .localCheckpoint(eager=False))
+              .transform(physical.cut))
     b = clicks.select(F.col("day").alias("bday"), F.col("x").alias("bx"))
     return (clicks.join(b, (clicks["day"] - F.col("bday") >= 0)
                         & (clicks["day"] - F.col("bday") <= 7))
@@ -163,7 +164,7 @@ def mkt_reach_frequency(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
     uf = (ev.groupBy("event_type", "user_id")
           .agg(F.count("*").alias("n"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     hist = (uf.groupBy("event_type",
                        F.least(F.col("n"), F.lit(5)).cast("bigint")
                        .alias("freq_bucket"))

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 from ..numerics import h32
@@ -87,7 +88,7 @@ def ml_ransac_line(spark, sf_dir):
     the consensus count can never flip cross-engine. The winning model
     (max inliers, tie -> lowest candidate id) is reported with its
     milli-slope. Candidates broadcast; the series streams once."""
-    dt = _daily_total(spark, sf_dir).localCheckpoint(eager=False)
+    dt = _daily_total(spark, sf_dir).transform(physical.cut)
     n = dt.count()
     w = Window.orderBy("day")
     ranked = dt.select("day", "q",
@@ -197,7 +198,7 @@ def ml_knn_classify(spark, sf_dir, _nb_override=None):
     import numpy as np
     import pandas as pd
 
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_parts = physical.parallelism(spark)
     nb = (_nb_override if _nb_override is not None
           else max(1, 4 * n_parts))  # corpus blocks = 4x cores
     corpus = v.select(F.col("vec_id").alias("n_id"),
@@ -272,14 +273,7 @@ def ml_knn_classify(spark, sf_dir, _nb_override=None):
 _LCELL = 1_000_000
 _LRD_SCALE = 3_000_000_000_000_000     # 3e15: lrd = 3e15 // sum(reach)
 
-# Point count per (application, sf_dir, fixture fingerprint) — one
-# eager count job feeds the sub-grid factor choice; fingerprinted like
-# geo2._NEAREST_CACHE so an in-place fixture rebuild can't serve a
-# stale density (ADVICE r9 on the geo2 twin of this cache).
-_LOF_N_CACHE: dict = {}
-
-
-def _lof_subgrid_f(spark, sf_dir, pts) -> int:
+def _lof_subgrid_f(sf_dir, pts) -> int:
     """Sub-cells per _LCELL edge for the certificate pass, from the
     global point density: target ~64 expected candidates inside the
     R=1 explored square ((3s)^2 * rho = 64 => s = (8/3)/sqrt(rho)),
@@ -288,17 +282,13 @@ def _lof_subgrid_f(spark, sf_dir, pts) -> int:
     square inside the contract's 3x3 ring — see _lof_top3). f == 1
     means the fixture is too sparse for the sub-grid to prune anything
     (the explored square IS the ring); callers fall back to the plain
-    full-ring scan there."""
+    full-ring scan there. The point count is the customer table's
+    footer row count (no job); ``pts.count()`` when it can't be read."""
     import math
 
-    from .geo2 import _fixture_fingerprint
-
-    key = (spark.sparkContext.applicationId, sf_dir,
-           _fixture_fingerprint(sf_dir, "customer"))
-    n = _LOF_N_CACHE.get(key)
+    n = physical.footer_rows(sf_dir, ("customer",))
     if n is None:
         n = pts.count()
-        _LOF_N_CACHE[key] = n
     rho = n / float(_LAT_SPAN * _LON_SPAN)
     if rho <= 0:
         return 1
@@ -360,12 +350,12 @@ def _lof_top3(spark, sf_dir, pts, _f_override=None):
         "id", "latp", "lonp",
         F.expr(f"latp div {_LCELL}").alias("cy"),
         F.expr(f"lonp div {_LCELL}").alias("cx"))
-    f = (_lof_subgrid_f(spark, sf_dir, pts)
+    f = (_lof_subgrid_f(sf_dir, pts)
          if _f_override is None else int(_f_override))
     if f < 2:
         # Sub-grid == coarse grid: the certificate pass would rescan
         # the whole ring for nothing. One plan, one materialization.
-        return _lof_ring_top3(cells, cells).localCheckpoint(eager=False)
+        return _lof_ring_top3(cells, cells).transform(physical.cut)
     s = _LCELL // f
     sub = cells.select(
         "id", "latp", "lonp", "cy", "cx",
@@ -403,7 +393,7 @@ def _lof_top3(spark, sf_dir, pts, _f_override=None):
              .where(F.col("rn") <= 3)
              .select(F.col("id").alias("a"), F.col("qid").alias("b"),
                      "d2", "rn")
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     per_a = (top_a.groupBy("a")
              .agg(F.count("*").alias("nc"),
                   F.max(F.when(F.col("rn") == 3, F.col("d2"))).alias("d3")))
@@ -426,7 +416,7 @@ def _lof_top3(spark, sf_dir, pts, _f_override=None):
     top_esc = _lof_ring_top3(escal, cells)
     return (top_cert.select("a", "b", "d2", "rn")
             .unionByName(top_esc.select("a", "b", "d2", "rn"))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
 
 @query("ml_lof_grid", oracle=f"""
@@ -515,7 +505,7 @@ def ml_lof_grid(spark, sf_dir):
                 .alias("lrd"),
                 F.count("*").alias("nc"))
            .where(F.col("nc") == 3).drop("nc")
-           .localCheckpoint(eager=False))
+           .transform(physical.cut))
     lof = (nbr
            .join(lrd.select(F.col("a").alias("b3"),
                             F.col("lrd").alias("lrd_o")),
@@ -584,15 +574,12 @@ def ml_isolation_grid(spark, sf_dir):
     over trees (low score = isolated early = anomalous). One grouped
     count per (tree, level, cell) — the cheapest anomaly scorer here
     at any scale."""
-    from ..operators.skew import fan_out
-
     # fan_out (r10 broadcast-probe sweep): the 96-row (tree, level)
     # crossJoin's probe side otherwise inherits the narrow local scan
     # (1-2 splits) and generates all 96N bit rows + their shuffle
-    # write on as many cores (19.5 s of the sf1j wall); gated no-op
-    # on wide scans.
-    pts = fan_out(_pts(spark, sf_dir, "customer", "c_custkey",
-                       "c_nationkey", ""))
+    # write on as many cores (19.5 s of the sf1j wall).
+    pts = physical.fan_out(_pts(spark, sf_dir, "customer", "c_custkey",
+                                "c_nationkey", ""))
     tl = (spark.range(8).select(F.col("id").alias("t"))
           .crossJoin(spark.range(1, 13).select(F.col("id").alias("l"))))
     key = F.concat(F.col("t").cast("string"), F.lit(":"),
@@ -612,7 +599,7 @@ def ml_isolation_grid(spark, sf_dir):
     pfx = (bits.withColumn(
         "pfx", F.sum(F.col("bit")
                      * F.pow(F.lit(10), F.col("l")).cast("bigint"))
-        .over(wp)).localCheckpoint(eager=False))
+        .over(wp)).transform(physical.cut))
     cnt = (pfx.groupBy("t", "l", "pfx").agg(F.count("*").alias("c")))
     iso = (pfx.join(cnt, ["t", "l", "pfx"])
            .groupBy("id", "t")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -90,7 +91,7 @@ def _uv(spark, sf_dir):
                 .cast("bigint").alias(c)
                 for t, c in (("click", "x"), ("view", "y"),
                              ("purchase", "z"))])
-         .localCheckpoint(eager=False))
+         .transform(physical.cut))
     m = u.agg(
         F.count("*").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
@@ -199,7 +200,7 @@ def stats_empirical_copula(spark, sf_dir):
         F.expr(f"(rx - 1) * 5 div {n}").alias("i"),
         F.expr(f"(ry - 1) * 5 div {n}").alias("j"))
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
     dep = (cells.agg(F.expr(f"sum(abs(25 * c - {n})) * 1000"
                             f" div {50 * n}").cast("bigint")
                      .alias("d")).collect()[0]["d"])

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import physical
 from ..operators import text as X
 from ..numerics import fixed_sum
 from .registry import query
@@ -626,12 +627,10 @@ def text_bigram_lm(spark, sf_dir):
     scoring is broadcast-join + one doc-keyed reduce. Normalizing by the
     LEFT-unigram count (sum over w2 of c2 = c1) keeps p(.|w1) a proper
     distribution with no end-of-doc off-by-one. The scan is
-    fan_out-gated: the bigram explode is the compute-heavy map side
+    fanned out: the bigram explode is the compute-heavy map side
     and otherwise inherits the narrow local scan's 1-2 splits (r9
     skew audit class)."""
-    from ..operators.skew import fan_out
-
-    d = fan_out(T(spark, sf_dir, "documents"))
+    d = physical.fan_out(T(spark, sf_dir, "documents"))
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
     bg = (toks.select("doc_id", F.explode(F.expr(
               "transform(slice(t, 1, size(t)-1),"
@@ -813,16 +812,14 @@ def text_sparse_cosine(spark, sf_dir):
     # plan branches that otherwise each re-run the trigram explode +
     # groupBy from the fixture's 1-2 parquet splits (trap classes A/B,
     # PLANS.md round-11; measured 30.2s -> ~8s at jittered sf1).
-    from ..operators.skew import fan_out
-
-    tf = (fan_out(T(spark, sf_dir, "documents"))
+    tf = (physical.fan_out(T(spark, sf_dir, "documents"))
           .select("doc_id",
                   F.explode(X.word_ngrams(F.col("text"), 3)).alias("gram"))
           .groupBy("doc_id", "gram").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     kept = (tf.groupBy("gram").agg(F.count("*").alias("df"))
             .filter(F.col("df") <= 10).select("gram"))
-    ktf = tf.join(kept, "gram").localCheckpoint(eager=False)
+    ktf = tf.join(kept, "gram").transform(physical.cut)
     norms = ktf.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("n2"))
     a, b = ktf.alias("a"), ktf.alias("b")
@@ -1213,9 +1210,8 @@ def text_perplexity_buckets(spark, sf_dir):
     shuffle is the bigram groupBy the LM already pays; the count
     tables broadcast back onto the stream."""
     from ..operators.ranking import distributed_rank
-    from ..operators.skew import fan_out
 
-    d = fan_out(T(spark, sf_dir, "documents"))
+    d = physical.fan_out(T(spark, sf_dir, "documents"))
     toks = d.select("doc_id", "lang", F.split("text", " ").alias("t"))
     bg = (toks.select("doc_id", "lang", F.explode(F.expr(
               "transform(slice(t, 1, size(t)-1),"

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -72,7 +73,7 @@ def _sess(spark, sf_dir):
         .otherwise(0))
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (gapped.withColumn("sid", F.sum("brk").over(wc))
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
 
 @query("process_variants", oracle=f"""
@@ -240,7 +241,7 @@ def process_bottlenecks(spark, sf_dir):
         F.lag("et").over(w).alias("a"), F.col("et").alias("b"),
         (F.col("sec") - F.lag("sec").over(w)).alias("gap"))
         .where(F.col("a").isNotNull())
-        .localCheckpoint(eager=False))
+        .transform(physical.cut))
     wr = Window.partitionBy("a", "b").orderBy("gap")
     wn = Window.partitionBy("a", "b")
     ranked = trans.select(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators import physical
 from ..operators import text as X
 from ..numerics import cents_sum as _cents_sum
 from .registry import query
@@ -704,12 +705,9 @@ def text_compression_quality(spark, sf_dir):
     TakeOrderedAndProject, scales with corpus bytes. Ordering uses the
     exact integer-derived double ratio (IEEE division of identical
     ints is identical on both engines); ties break by doc_id."""
-    from ..operators.skew import fan_out
-
     # Per-row 8-gram HOFs are compute-heavy enough that the narrow
-    # local documents scan (1-2 splits) serializes them; fan_out is a
-    # structural no-op on a wide cluster scan (r9 skew audit).
-    d = fan_out(T(spark, sf_dir, "documents"))
+    # local documents scan (1-2 splits) serializes them (r9 skew audit).
+    d = physical.fan_out(T(spark, sf_dir, "documents"))
     grams = F.expr(
         "transform(sequence(1, length(text) - 7), i -> substring(text, i, 8))")
     g = (d.filter(F.length("text") >= 8)

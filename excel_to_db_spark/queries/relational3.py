@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -344,10 +345,7 @@ def str_fuzzy_match(spark, sf_dir):
     4-char inputs (per-call allocation, measured by truncating the
     operands), so the verify stage floors near ~45s here. The output
     itself is 63.8M true pairs — Omega(output) work."""
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:  # e.g. 'auto' on managed platforms (ADVICE r8)
-        n_parts = 32
+    n_parts = physical.parallelism(spark)
     # 2-level saturating char-count signature, built once per name.
     # m1: bucket has count>=1; m2: bucket has count>=2 (a char at
     # position i counts toward m2 iff it already occurred in v[1..i-1]).
@@ -386,7 +384,7 @@ def str_fuzzy_match(spark, sf_dir):
              # r12: FIVE consumers now traverse the name dimension (two
              # join sides, the kernel dictionary collect, two rid->name
              # join-backs); one lazy cut computes it once.
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     a, b = names.alias("a"), names.alias("b")
     lev3 = F.levenshtein(F.col("a.v"), F.col("b.v"), 3)
     sig_l1 = (F.bit_count(F.col("a.m1").bitwiseXOR(F.col("b.m1")))
@@ -397,10 +395,7 @@ def str_fuzzy_match(spark, sf_dir):
                & (sig_l1 <= 6)
                & (bg_l1 <= 12))
 
-    from ..operators.skew import BROADCAST_ROW_LIMIT, footer_rows
-
-    dim_rows = footer_rows(sf_dir, ("part",))
-    if dim_rows is None or dim_rows > BROADCAST_ROW_LIMIT:
+    if not physical.broadcastable(physical.footer_rows(sf_dir, ("part",))):
         # Scale-out path: the verify dictionary (like the broadcast
         # build side above it) is bounded by the distinct-name
         # dimension; past the broadcast class, keep the whole cascade +

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -89,7 +90,7 @@ def search_rocchio_prf(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     tf = (d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
           .groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     scored = (tf.where(F.col("tok").isin(*_QT))
               .groupBy("doc_id").agg(F.sum("tf").alias("score")))
     top5 = (scored.orderBy(F.col("score").desc(), F.col("doc_id"))
@@ -159,11 +160,11 @@ def search_phrase_minspan(spark, sf_dir):
            .select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok"))
     pa = (pos.where(F.col("tok") == _QT[0])
           .select("doc_id", F.col("pos").alias("pos_a"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     pb = (pos.where(F.col("tok") == _QT[1])
           .select(F.col("doc_id").alias("doc_b"),
                   F.col("pos").alias("pos_b"))
-          .localCheckpoint(eager=False))
+          .transform(physical.cut))
     spans = (pa.join(pb, pa["doc_id"] == F.col("doc_b"))
              .groupBy("doc_id")
              .agg(F.min(F.abs(F.col("pos_a") - F.col("pos_b")) + 1)
@@ -219,7 +220,7 @@ def search_spell_suggest(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     vocab = (d.select(F.explode(F.split("text", " ")).alias("tok"))
              .groupBy("tok").agg(F.count("*").alias("freq"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     probes = spark.createDataFrame([(p,) for p in _PROBES], ["probe"])
     cand = (vocab.crossJoin(F.broadcast(probes))
             .select("probe", "tok",

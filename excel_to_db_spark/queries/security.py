@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -145,7 +146,7 @@ def sec_bruteforce_window(spark, sf_dir):
     errs = (ev.where(F.col("event_type") == "error")
             .select("user_id", F.expr("unix_timestamp(ts)").alias("sec"),
                     "event_id")
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
     w = Window.partitionBy("user_id").orderBy("sec", "event_id")
     bursts = (errs.select(
         "user_id",

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -84,13 +85,10 @@ def similarity_pq(spark, sf_dir):
     FAISS uses. All arithmetic integer-exact (see module docstring);
     at production scale only the codebook (k-means over a sample,
     kmeans_lloyd's plan) and the code columns persist."""
-    from ..operators.skew import fan_out
-
     # fan_out (r10 broadcast-probe sweep): the 128-row codebook join's
     # probe side (vectors x 8 subspaces) otherwise inherits the 1-2
-    # local parquet splits for the 16x 8-dim HOF argmin; gated no-op
-    # on wide scans.
-    e = fan_out(T(spark, sf_dir, "embeddings")).select(
+    # local parquet splits for the 16x 8-dim HOF argmin.
+    e = physical.fan_out(T(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.expr("transform(CAST(embedding AS array<double>), "
                "x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))").alias("v"))
@@ -169,15 +167,15 @@ def embedding_mrl_eval(spark, sf_dir):
          .select(F.col("v").alias("qv")))
     dist = ("aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
             "0L, (acc, t) -> acc + t)")
-    # persisted: the distance table feeds FIVE subtrees (stats, two
-    # top-k's, overlap, min comparison) — without it each re-runs the
-    # corpus scan and the 64-dim distance arithmetic
+    # cut: the distance table feeds FIVE subtrees (stats, two top-k's,
+    # overlap, min comparison) — without it each re-runs the corpus
+    # scan and the 64-dim distance arithmetic
     d = (e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q))
          .select("vec_id",
                  F.expr(dist.format(a="v", b="qv")).alias("d_full"),
                  F.expr(dist.format(a="slice(v, 1, 16)",
                                     b="slice(qv, 1, 16)")).alias("d_16"))
-         .persist())
+         .transform(physical.cut))
     tf = d.orderBy("d_full", "vec_id").limit(10).select("vec_id")
     tt = d.orderBy("d_16", "vec_id").limit(10).select("vec_id")
     stats = d.agg(F.count("*").alias("n_vectors"))
@@ -227,13 +225,10 @@ def embedding_hard_negatives(spark, sf_dir):
     is label-partitioned ANN per similarity_ann/similarity_ivf, not
     this exact join), distances are exact BIGINTs on quantized
     vectors, and only 20 keys leave the aggregation."""
-    from ..operators.skew import fan_out
-
     # fan_out (r10 broadcast-probe sweep): the 20-anchor broadcast
     # NLJ's probe side otherwise inherits the 1-2 local parquet splits
-    # for 20x 64-dim HOF distances per vector; gated no-op on wide
-    # scans.
-    e = fan_out(T(spark, sf_dir, "embeddings")).select(
+    # for 20x 64-dim HOF distances per vector.
+    e = physical.fan_out(T(spark, sf_dir, "embeddings")).select(
         "vec_id", "label",
         F.expr("transform(CAST(embedding AS array<double>), "
                "x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))").alias("v"))
@@ -361,12 +356,10 @@ def similarity_ivfpq(spark, sf_dir):
     the property that lets a billion-vector index live in memory."""
     from pyspark.sql.window import Window
 
-    from ..operators.skew import fan_out
-
     # fan_out: assignment/encoding are broadcast joins whose per-row
     # distance arithmetic is the heavy part; a narrow local scan would
-    # serialize them (r9 skew audit class; no-op on wide scans).
-    e = fan_out(T(spark, sf_dir, "embeddings")).select(
+    # serialize them (r9 skew audit class).
+    e = physical.fan_out(T(spark, sf_dir, "embeddings")).select(
         "vec_id",
         F.expr("transform(CAST(embedding AS array<double>), "
                "x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))").alias("v"))
@@ -855,7 +848,7 @@ def similarity_mmr_diversify(spark, sf_dir):
     the 20-row candidate pool against the <=4 selected rows: the
     corpus-sized work is the ONE TakeOrdered(20) scan building the
     pool; the 5 rounds are constant-size plan stages (candidates
-    lazily localCheckpointed — same plan-growth hygiene as
+    cut lazily — same plan-growth hygiene as
     graph_kcore). The oracle replays the same greedy loop as chained
     MATERIALIZED CTEs. min_d2_sel is NULL for the first pick (pure
     relevance) and records each later pick's diversity margin."""
@@ -870,7 +863,7 @@ def similarity_mmr_diversify(spark, sf_dir):
                            "(x, y) -> (x-y)*(x-y)), 0L, "
                            "(acc, t) -> acc + t)").alias("d2q"))
             .orderBy("d2q", "vec_id").limit(20)
-            .localCheckpoint(eager=False))
+            .transform(physical.cut))
 
     sel = (cand.orderBy("d2q", "vec_id").limit(1)
            .select(F.lit(1).alias("pick_order"), "vec_id", "label", "v",
@@ -893,7 +886,7 @@ def similarity_mmr_diversify(spark, sf_dir):
                 .limit(1)
                 .select(F.lit(r).alias("pick_order"), "vec_id", "label",
                         "v", "d2q", "min_d2_sel"))
-        sel = sel.unionByName(pick).localCheckpoint(eager=False)
+        sel = sel.unionByName(pick).transform(physical.cut)
 
     return sel.select(F.col("pick_order").cast("int").alias("pick_order"),
                       "vec_id", "label", "d2q", "min_d2_sel")
@@ -1264,7 +1257,7 @@ def sample_kcenter_seeds(spark, sf_dir):
     update against the broadcast 1-row pick (the classic incremental
     trick — min-distance state rides WITH each point, so round r
     costs one projection + one TakeOrdered(1), never a pairwise
-    matrix), with lazy localCheckpoint cutting the per-round plan
+    matrix), with a lazy lineage cut of the per-round plan
     (graph_kcore lesson). All distances exact integer milli-L2: the
     greedy path and the final coverage radius (max-min distance of
     the unselected corpus, the quantity k-center minimizes) are
@@ -1282,12 +1275,12 @@ def sample_kcenter_seeds(spark, sf_dir):
     m = (e.filter(F.col("vec_id") != 0)
          .crossJoin(F.broadcast(seed.select(F.col("v").alias("cv"))))
          .select("vec_id", "label", "v", d2.alias("mind"))
-         .localCheckpoint(eager=False))
+         .transform(physical.cut))
     sel = seed.select(F.lit(1).alias("pick_order"), "vec_id", "label",
                       F.lit(None).cast("bigint").alias("sel_dist"))
     for r in range(2, 6):
         pick = m.orderBy(F.col("mind").desc(), "vec_id").limit(1) \
-                .localCheckpoint(eager=False)
+                .transform(physical.cut)
         sel = sel.unionByName(
             pick.select(F.lit(r).alias("pick_order"), "vec_id", "label",
                         F.col("mind").alias("sel_dist")))
@@ -1295,7 +1288,7 @@ def sample_kcenter_seeds(spark, sf_dir):
              .crossJoin(F.broadcast(pick.select(F.col("v").alias("cv"))))
              .select("vec_id", "label", "v",
                      F.least(F.col("mind"), d2).alias("mind"))
-             .localCheckpoint(eager=False))
+             .transform(physical.cut))
     cov = m.agg(F.max("mind").alias("coverage_d2"))
     return (sel.crossJoin(F.broadcast(cov))
             .select(F.col("pick_order").cast("int").alias("pick_order"),

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -152,11 +153,11 @@ def p_chart_report(daily):
     """Limits + flags over a (day, n_items, n_defect) census — the
     batch-side stage both the batch key and the streaming twin's
     final emission run. The census feeds TWO consumers (the p-bar
-    total and the per-day panel); localCheckpoint pins the 2,405-row
+    total and the per-day panel); a lineage cut pins the 2,405-row
     table so the fact scan behind it runs ONCE, not once per branch
     (the r5 plan-growth rule — without it the plan showed lineitem
     scanned twice)."""
-    daily = daily.localCheckpoint(eager=False)
+    daily = daily.transform(physical.cut)
     tot = daily.agg(
         F.expr("sum(n_defect) * 1000000 div sum(n_items)")
         .alias("pbar_micro"))

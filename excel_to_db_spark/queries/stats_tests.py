@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators import physical
 from ..numerics import fixed_sum, h32
 from .registry import query
 from .relational import T
@@ -1296,23 +1297,21 @@ def stats_conformal_coverage(spark, sf_dir):
     from ..numerics import h32
     from ..operators.ranking import distributed_rank
 
-    from ..operators.skew import fan_out
-
     # Materialized once (r10): the split projection costs one md5 per
     # row and feeds SIX downstream actions (train moments, calibration
     # residuals, distributed_rank's percentile + bucket passes, the
     # rank-count scalar, and the coverage scan) — without the
-    # checkpoint each re-ran the 6M-row hash scan. fan_out first so
-    # the one md5 pass runs at full width instead of the scan's 1-2
-    # local splits (gated: a wide cluster scan is untouched).
-    li = fan_out(T(spark, sf_dir, "lineitem")).select(
+    # cut each re-ran the 6M-row hash scan. fan_out first so the one
+    # md5 pass runs at full width instead of the scan's 1-2 local
+    # splits.
+    li = physical.fan_out(T(spark, sf_dir, "lineitem")).select(
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k"),
         F.col("l_quantity").cast("bigint").alias("x"),
         F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("y"),
         F.pmod(h32(F.concat(F.lit("conf:"),
                             (F.col("l_orderkey") * 8
                              + F.col("l_linenumber")).cast("string"))),
-               F.lit(10)).alias("sp")).localCheckpoint(eager=False)
+               F.lit(10)).alias("sp")).transform(physical.cut)
     m = (li.filter(F.col("sp") <= 5)
          .agg(F.count("*").alias("n"), F.sum("x").alias("sx"),
               F.sum("y").alias("sy"),

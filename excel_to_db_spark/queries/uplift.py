@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from ..operators.ranking import distributed_rank
 from .registry import query
 from .relational import T
@@ -81,7 +82,7 @@ def _decile_panel(spark, sf_dir):
     # distributed_rank traverses its input three times (percentile
     # boundaries, bucketing, bucket counts) and the panel takes two
     # actions (count + groupBy): without pinning, the 3-way join
-    # re-derived FIVE times (plan-audited). localCheckpoint both
+    # re-derived FIVE times (plan-audited). Cut both
     # seams per the r5 plan-growth rule; at 100 TB the same seams
     # checkpoint to parquet instead.
     scored = (o.join(c, "o_custkey")
@@ -90,9 +91,9 @@ def _decile_panel(spark, sf_dir):
                       F.coalesce("responded", F.lit(0))
                       .alias("responded"),
                       (-F.col("score")).alias("neg_s"))
-              .localCheckpoint(eager=False))
+              .transform(physical.cut))
     ranked = distributed_rank(scored, "neg_s", "ok", rank_col="rk") \
-        .localCheckpoint(eager=False)
+        .transform(physical.cut)
     n = ranked.count()
     return (ranked
             .groupBy(F.expr(f"(rk - 1) * 10 div {n}").alias("decile"))

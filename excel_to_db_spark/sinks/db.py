@@ -52,7 +52,7 @@ def _converter(spark_type: str):
         # sqlite3 refuses to bind Decimal; REAL is its numeric storage
         # class, so the float image is what the column would hold anyway.
         return float
-    if spark_type.startswith(("array", "map")):
+    if spark_type.startswith(("array", "map", "struct")):
         return str
     return None
 

@@ -27,6 +27,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 
 from ..numerics import cents_sum as _cents_sum
+from ..operators import physical
 
 EVENTS_DDL = ("event_id bigint, ts timestamp_ntz, user_id bigint, "
               "event_type string, value double, props string")
@@ -50,10 +51,10 @@ class EventsReplayStreamReader(DataSourceStreamReader):
         # partitions-per-batch is the multiplier to keep bounded
         self.part_rows = int(options.get("part_rows",
                                          max(4096, self.batch_rows // 4)))
-        import pyarrow.parquet as pq
-
         # footer metadata only — no row data touched on the driver
-        self.total = pq.ParquetFile(self.path).metadata.num_rows
+        self.total = physical.footer_rows(self.path)
+        if self.total is None:
+            raise ValueError(f"events_replay: no parquet at {self.path}")
         self._pos = 0
 
     def initialOffset(self) -> dict:
@@ -119,10 +120,9 @@ def run_replay_source_agg(spark, sf_dir: str, batch_rows: int | None = None,
     import time as _t
     import uuid
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    total = pq.ParquetFile(f"{sf_dir}/events.parquet").metadata.num_rows
+    total = physical.footer_rows(f"{sf_dir}/events.parquet")
     if batch_rows is None:
         # scale the micro-batch so replay stays ~4 batches at any SF:
         # still exercises incrementality, but the per-partition slice

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators import physical
 from .windows import events_stream_reader
 
 OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
@@ -188,9 +189,7 @@ def _sessionizer_state_partitions(sf_dir: str, cores: int) -> int:
     the full core count, production sizes to rate x watermark /
     target as the run_scoped docstring prescribes. Row counts come
     from parquet footers — no job, no scan."""
-    from ..operators.skew import footer_rows
-
-    rows = footer_rows(sf_dir, ("events",))
+    rows = physical.footer_rows(sf_dir, ("events",))
     if rows is None:
         return 8
     return max(8, min(cores, rows // 32_000))

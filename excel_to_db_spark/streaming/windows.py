@@ -24,6 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import physical
 
 # Exact money sum in integer cents, batch or micro-batch (single
 # definition: numerics.py).
@@ -820,41 +821,6 @@ def run_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(table)
 
 
-def _stream_fan_width(spark: SparkSession, sf_dir: str, table: str
-                      ) -> int | None:
-    """Per-micro-batch widening width for a compute-heavy predicate
-    over a table replay, or None when the scan is already wide — the
-    streaming twin of operators/skew.fan_out's gate (r12, guide §2.5
-    "input skew: one huge unsplittable file"). Each micro-batch scans
-    whole files, so a single-file local fixture runs the entire batch
-    on ceil(file/maxPartitionBytes) cores; estimate that split count
-    from the on-disk bytes and widen ONLY when it is under half the
-    session's shuffle parallelism (a cluster-scale multi-file stream
-    is left untouched)."""
-    import os
-
-    from ..operators.skew import _parse_bytes
-
-    try:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        n_parts = 32
-    try:
-        max_pb = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes",
-                           "134217728"))
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.isdir(path):
-            sizes = [os.path.getsize(os.path.join(path, f))
-                     for f in os.listdir(path) if f.endswith(".parquet")]
-        else:
-            sizes = [os.path.getsize(path)]
-        est = sum(max(1, -(-s // max_pb)) for s in sizes)
-    except Exception:
-        return None
-    return n_parts if est < max(2, n_parts // 2) else None
-
-
 def run_stream_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rule quality census executed by the Structured Streaming
     engine: the documents table replayed through the parquet file
@@ -877,10 +843,9 @@ def run_stream_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: the gopher predicates are the census' entire cost (HOF
     # regex/intersect/max-run per token) and a micro-batch scans whole
     # files — on the single-file local fixture that ran the whole
-    # census on 1-2 cores (29 s at jittered sf1). Gated hash
-    # repartition (doc_id — deterministic, no round-robin pre-sort)
-    # widens the predicate stage; no-op on wide cluster streams.
-    width = _stream_fan_width(spark, sf_dir, "documents")
+    # census on 1-2 cores (29 s at jittered sf1). Hash repartition
+    # (doc_id — deterministic, no round-robin pre-sort).
+    width = physical.fan_width(spark, [f"{sf_dir}/documents.parquet"])
     if width is not None:
         stream = stream.repartition(width, F.col("doc_id"))
     q = (gopher_census(stream)

@@ -32,10 +32,10 @@ def spark():
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .config("spark.ui.enabled", "false")
          # The full suite shares this one JVM for 650+ tests; the
-         # default 1g heap OOMs once enough localCheckpoint blocks
-         # accumulate (r10: java.lang.OutOfMemoryError in
-         # test_graphlp mid-suite, same failure class run_at_sf's
-         # _release_blocks docstring records for the sf1 sweeps).
+         # default 1g heap OOMs once enough cut blocks accumulate
+         # (r10: java.lang.OutOfMemoryError in test_graphlp mid-suite,
+         # the failure class physical.release records for the sf1
+         # sweeps).
          .config("spark.driver.memory", "6g")
          .getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
@@ -44,29 +44,24 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _release_spark_blocks(request):
-    """Deterministically free cached tables and localCheckpoint RDD
-    blocks after every test that touched the shared session — the
-    ContextCleaner's async sweep falls behind a 650-test run and the
-    heap fills with unreachable-but-unreleased blocks (the exact
-    failure mode tools/run_at_sf.py:_release_blocks documents for the
-    single-JVM sf1 sweeps).
+    """Deterministically free cached tables and cut RDD blocks after
+    every test that touched the shared session (``physical.release``):
+    the ContextCleaner's async sweep falls behind a 650-test run and
+    the heap fills with unreachable-but-unreleased blocks.
 
     INVARIANT this sweep imposes (ADVICE r10): no module- or
     session-scoped cache may hold a DataFrame across tests. The
-    unpersist covers localCheckpoint blocks, whose LINEAGE IS
-    TRUNCATED — a checkpointed frame retained by one test and reused
+    unpersist covers ``physical.cut`` blocks, whose LINEAGE IS
+    TRUNCATED — a cut frame retained by one test and reused
     by a later one would fail unrecoverably once its blocks are
-    freed here. Today's per-query caches (_LOF_N_CACHE,
-    geo2._NEAREST_CACHE, ...) hold only ints; keep it that way, or
-    scope any future DataFrame cache to a single test."""
+    freed here. Keep module-level caches to plain values, or scope a
+    DataFrame cache to a single test."""
     yield
     if "spark" in request.fixturenames:
-        s = request.getfixturevalue("spark")
+        from excel_to_db_spark.operators import physical
+
         try:
-            s.catalog.clearCache()
-            jmap = s.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in jmap.values():
-                jrdd.unpersist(False)
+            physical.release(request.getfixturevalue("spark"))
         except Exception:
             pass
 

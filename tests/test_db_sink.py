@@ -45,17 +45,18 @@ def test_write_sqlite_types_and_append(spark, tmp_path):
 
 def test_write_sqlite_converts_by_column_type(spark, tmp_path):
     """Booleans bind as 0/1, dates and timestamps as ISO text, decimals as
-    REAL, arrays and maps as their Python text; NULL stays NULL in every
-    column, and strings and numbers bind as they are."""
+    REAL, arrays, maps and structs as their Python text; NULL stays NULL
+    in every column, and strings and numbers bind as they are."""
     df = spark.sql("""
         SELECT true AS b, DATE'2024-01-31' AS d,
                TIMESTAMP_NTZ'2024-01-31 12:34:56.5' AS ntz,
                TIMESTAMP'2024-02-01 00:00:01' AS ts,
                CAST(12.50 AS DECIMAL(10, 2)) AS dec, array(1, 2) AS arr,
                map('a', DATE'2024-01-01') AS m, 'x' AS s, 7L AS i, 1.5D AS f,
-               X'0102' AS bin
+               X'0102' AS bin, named_struct('a', 1) AS st
         UNION ALL
-        SELECT NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL
+        SELECT NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
+               NULL
     """)
     ts = df.first().ts
     db = str(tmp_path / "types.db")
@@ -66,5 +67,6 @@ def test_write_sqlite_converts_by_column_type(spark, tmp_path):
     assert rows == [
         (1, "2024-01-31", "2024-01-31 12:34:56.500000",
          ts.isoformat(sep=" "), 12.5, "[1, 2]",
-         "{'a': datetime.date(2024, 1, 1)}", "x", 7, 1.5, b"\x01\x02"),
-        (None,) * 11]
+         "{'a': datetime.date(2024, 1, 1)}", "x", 7, 1.5, b"\x01\x02",
+         "Row(a=1)"),
+        (None,) * 12]

@@ -201,17 +201,12 @@ def test_lof_subgrid_f_scales_with_density(spark):
         def count(self):
             return self._n
 
-    M._LOF_N_CACHE.clear()
-    try:
-        sparse = M._lof_subgrid_f(spark, "/nonexistent-a", _FakePts(1_500))
-        mid = M._lof_subgrid_f(spark, "/nonexistent-b", _FakePts(150_000))
-        dense = M._lof_subgrid_f(spark, "/nonexistent-c",
-                                 _FakePts(15_000_000))
-        assert sparse == 1
-        assert 2 <= mid <= 5
-        assert mid * 5 <= dense <= mid * 20
-    finally:
-        M._LOF_N_CACHE.clear()
+    sparse = M._lof_subgrid_f("/nonexistent-a", _FakePts(1_500))
+    mid = M._lof_subgrid_f("/nonexistent-b", _FakePts(150_000))
+    dense = M._lof_subgrid_f("/nonexistent-c", _FakePts(15_000_000))
+    assert sparse == 1
+    assert 2 <= mid <= 5
+    assert mid * 5 <= dense <= mid * 20
 
 
 def test_knn_classify_forced_blocks_identical(spark, sf_dir):

@@ -21,20 +21,12 @@ from conftest import SF_DIR, plan_text
 
 
 def _no_checkpoint(monkeypatch):
-    """Make localCheckpoint a no-op so iterative keys' UNROLLED plans
-    (every round's joins) are assertable — measurement-only, the
-    tools/explain.py EXPLAIN_NO_CHECKPOINT trick."""
-    from pyspark.sql import DataFrame
+    """Swap every lineage cut for the identity so iterative keys'
+    UNROLLED plans (every round's joins) are assertable — the
+    tools/explain.py EXPLAIN_NO_CHECKPOINT swap."""
+    from excel_to_db_spark.operators import physical
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint",
-                        lambda self, eager=True: self, raising=True)
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-        monkeypatch.setattr(CDF, "localCheckpoint",
-                            lambda self, eager=True: self, raising=True)
-    except ImportError:
-        pass
+    monkeypatch.setattr(physical, "cut", lambda df: df)
 
 
 def test_stateful_timeout_is_one_pass_batch_window(spark, registry=None):

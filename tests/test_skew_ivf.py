@@ -1,23 +1,10 @@
-"""Salted join equivalence + IVF assignment sanity + stream dedup."""
+"""IVF assignment sanity, stream dedup, as-of join semantics and ANN
+recall floors."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, FloatType, LongType,
-                               StructField, StructType)
-
-from excel_to_db_spark.operators.skew import salted_join
-
-
-def test_salted_join_equals_plain_join(spark):
-    big = spark.createDataFrame(
-        [(i % 3, f"row{i}") for i in range(100)], ["k", "payload"])
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], ["sk", "tag"])
-    plain = big.join(small, big.k == small.sk).select("k", "payload", "tag")
-    salted = salted_join(big, small, "k", "sk", n_salts=4).select(
-        "k", "payload", "tag")
-    assert sorted(map(tuple, plain.collect())) == \
-        sorted(map(tuple, salted.collect()))
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
+                               StructType)
 
 
 def test_ivf_assign_nearest_centroid(spark):
@@ -75,45 +62,3 @@ def test_ann_recall_floors(spark, sf_dir):
     ivf = {(r.q_id, r.n_id) for r in qs["similarity_ivf"](spark, sf_dir).collect()}
     assert len(ann & exact) / len(exact) >= 0.1
     assert len(ivf & exact) / len(exact) >= 0.1
-
-
-def test_parse_bytes_spark_suffixes():
-    """ADVICE r9: '128m' must be 128 MiB, not 128 bytes — the strip-
-    non-digits parser silently disabled fan_out on narrow scans."""
-    from excel_to_db_spark.operators.skew import _parse_bytes
-
-    assert _parse_bytes("134217728") == 134217728
-    assert _parse_bytes("134217728b") == 134217728
-    assert _parse_bytes("128m") == 128 * 1024 ** 2
-    assert _parse_bytes("128MB") == 128 * 1024 ** 2
-    assert _parse_bytes("1g") == 1024 ** 3
-    assert _parse_bytes("64k") == 64 * 1024
-    # Unparseable -> Spark's documented default, never a garbage value.
-    assert _parse_bytes("watermelon") == 134217728
-    assert _parse_bytes("") == 134217728
-
-
-def test_fan_out_no_op_on_memory_leaf(spark):
-    """ADVICE r9: an in-memory leaf (inputFiles() == []) has unknown
-    width; fan_out must bail out unchanged like the other can't-estimate
-    paths, not unconditionally add an exchange."""
-    from excel_to_db_spark.operators.skew import fan_out
-
-    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
-    out = fan_out(df)
-    assert out is df
-
-
-def test_fan_out_widens_narrow_file_scan(spark, tmp_path):
-    """The positive case: a single-split local parquet scan feeding a
-    compute-heavy pipeline gets repartitioned to shuffle parallelism."""
-    from excel_to_db_spark.operators.skew import fan_out
-
-    p = str(tmp_path / "narrow.parquet")
-    spark.range(100).coalesce(1).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    out = fan_out(df)
-    assert out is not df
-    assert out.rdd.getNumPartitions() == n_parts
-    assert out.count() == 100

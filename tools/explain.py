@@ -2,6 +2,7 @@
 
 Usage:  python tools/explain.py agg_groupby [topk ...]
         EXPLAIN_SF_DIR=/root/testdata/sf0.1 python tools/explain.py topk
+        EXPLAIN_NO_CHECKPOINT=1 python tools/explain.py graph_kcore
 """
 
 from __future__ import annotations
@@ -18,21 +19,13 @@ def main(keys: list[str]) -> int:
     import __spark_entry__ as E
 
     if os.environ.get("EXPLAIN_NO_CHECKPOINT"):
-        # Iterative keys cut lineage with localCheckpoint per round, so
-        # their final explain shows only Scan ExistingRDD leaves — the
-        # per-round join strategy is invisible. This measurement-only
-        # switch makes checkpoint a no-op so the UNROLLED plan (every
-        # round's joins/exchanges) is dumpable. Never affects query
-        # execution — tools/ only.
-        from pyspark.sql import DataFrame
+        # Iterative keys cut lineage per round, so their final explain
+        # shows only Scan ExistingRDD leaves. With every cut swapped for
+        # the identity, the UNROLLED plan (every round's joins and
+        # exchanges) is dumped instead.
+        from excel_to_db_spark.operators import physical
 
-        DataFrame.localCheckpoint = lambda self, eager=True: self
-        try:  # Spark 4: the runtime class overrides the base method
-            from pyspark.sql.classic.dataframe import DataFrame as CDF
-
-            CDF.localCheckpoint = lambda self, eager=True: self
-        except ImportError:
-            pass
+        physical.cut = lambda df: df
 
     sf_dir = os.environ.get("EXPLAIN_SF_DIR", "/root/testdata/sf0.01")
     spark = (SparkSession.builder.master("local[4]")

@@ -32,25 +32,6 @@ def _new_session(cpus: str):
     return spark
 
 
-def _release_blocks(spark) -> None:
-    """Free storage between keys. clearCache drops catalog-cached
-    tables, but localCheckpoint RDD BLOCKS are released only when the
-    ContextCleaner notices the RDD is unreachable — in a long
-    single-JVM sweep at sf1 they pile up faster than the async cleaner
-    drains them and the JVM dies (measured twice: key ~450/674, then
-    again 15 keys after a heavy stretch even with System.gc nudges).
-    Unpersisting every live persistent RDD directly is deterministic."""
-    spark.catalog.clearCache()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in jmap.values():
-            jrdd.unpersist(False)
-    except Exception:
-        pass
-    import gc
-    gc.collect()
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--dir", default=os.path.join(
@@ -63,7 +44,10 @@ def main() -> int:
                          "hygiene for multi-hour sweeps)")
     a = ap.parse_args()
 
+    import gc
+
     import __spark_entry__ as E
+    from excel_to_db_spark.operators import physical
 
     spark = _new_session(a.cpus)
     qs = E.queries()
@@ -93,7 +77,8 @@ def main() -> int:
                 except Exception:
                     pass
                 spark = _new_session(a.cpus)
-        _release_blocks(spark)
+        physical.release(spark)
+        gc.collect()
     print(f"\n{len(keys) - len(failed)} ok, {len(failed)} fail "
           f"({time.perf_counter() - t_all:.0f}s total)")
     for k, msg in failed:
