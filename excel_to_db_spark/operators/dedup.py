@@ -550,13 +550,11 @@ def dedup_clusters(pairs: DataFrame, ids: DataFrame) -> DataFrame:
     while True:
         neighbor_min = (edges.join(labels, edges.b == labels.did)
                         .groupBy("a").agg(F.min("lbl").alias("nlbl")))
-        new_labels = (labels.join(neighbor_min, labels.did == neighbor_min.a, "left")
-                      .select("did", F.least("lbl", F.coalesce("nlbl", "lbl"))
-                              .alias("lbl")))
-        new_labels = new_labels.persist()
-        cur_sum = new_labels.agg(lblsum).collect()[0][0]
-        labels.unpersist()  # no-op on the initial unpersisted frame
-        labels = new_labels
+        labels = (labels.join(neighbor_min, labels.did == neighbor_min.a, "left")
+                  .select("did", F.least("lbl", F.coalesce("nlbl", "lbl"))
+                          .alias("lbl"))
+                  .transform(physical.cut))
+        cur_sum = labels.agg(lblsum).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -1096,24 +1096,20 @@ def stream_custom_sink(spark, sf_dir):
     the original parquet — proving the staged/committed output is
     complete and duplicate-free."""
     import tempfile
-    import uuid
 
     from ..sources.stream_sink import CsvCommitLogDataSource, read_committed
-    from ..streaming import events_stream_reader
-    from ..streaming.windows import run_scoped
+    from ..streaming import replay
 
     spark.dataSource.register(CsvCommitLogDataSource)
     out = tempfile.mkdtemp(prefix="e2db_csvlog_")
     ckpt = tempfile.mkdtemp(prefix="e2db_csvlog_ckpt_")
-    q = (events_stream_reader(spark, sf_dir)
-         .filter(F.col("value") > 5.0)
-         .select("event_id", "event_type", "value")
-         .writeStream.format("csv_commitlog")
-         .option("path", out)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
+    writer = (replay.events_stream_reader(spark, sf_dir)
+              .filter(F.col("value") > 5.0)
+              .select("event_id", "event_type", "value")
+              .writeStream.format("csv_commitlog")
+              .option("path", out)
+              .option("checkpointLocation", ckpt))
+    replay.run_scoped(spark, writer)
     back = read_committed(spark, out,
                           "event_id bigint, event_type string, value double")
     return (back.groupBy("event_type")

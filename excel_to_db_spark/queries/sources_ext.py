@@ -167,25 +167,15 @@ def stream_state_inspect(spark, sf_dir):
     drained finite replay, the flattened state rows ARE the batch
     aggregation, so the batch GROUP BY is an exact oracle for the
     state contents themselves."""
-    import uuid
-
-    from ..streaming import events_stream_reader
+    from ..streaming import replay
 
     ckpt = tempfile.mkdtemp(prefix="e2db_state_")
-    from ..streaming.windows import run_scoped
-
-    name = f"stinspect_{uuid.uuid4().hex[:8]}"
-    q = (events_stream_reader(spark, sf_dir)
-         .groupBy("event_type")
-         .agg(F.count("*").alias("n_events"),
-              F.sum(F.round(F.col("value") * 100).cast("bigint"))
-              .alias("cents"))
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
+    counts = (replay.events_stream_reader(spark, sf_dir)
+              .groupBy("event_type")
+              .agg(F.count("*").alias("n_events"),
+                   F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                   .alias("cents")))
+    replay.drain(spark, counts, "complete", checkpoint=ckpt)
     # State rows carry the AGGREGATION BUFFER per key (internal field
     # names `count`/`sum`): the exact integer-cents accumulator, not the
     # formatted output — finish the division here, as the operator's
@@ -253,7 +243,7 @@ def stream_foreachbatch(spark, sf_dir):
     targets. The replayed events stream is filtered and written per
     batch; the read-back union over all epochs must equal the batch
     query on the original parquet (the oracle)."""
-    from ..streaming import events_stream_reader
+    from ..streaming import replay
 
     out = tempfile.mkdtemp(prefix="e2db_feb_")
     ckpt = tempfile.mkdtemp(prefix="e2db_feb_ckpt_")
@@ -263,14 +253,10 @@ def stream_foreachbatch(spark, sf_dir):
            .select("event_id", "event_type", "value")
            .write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}"))
 
-    from ..streaming.windows import run_scoped
-
-    q = (events_stream_reader(spark, sf_dir)
-         .writeStream.foreachBatch(write_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
+    writer = (replay.events_stream_reader(spark, sf_dir)
+              .writeStream.foreachBatch(write_batch)
+              .option("checkpointLocation", ckpt))
+    replay.run_scoped(spark, writer)
     back = spark.read.parquet(out)  # partition discovery over epoch=N
     return (back.groupBy("event_type")
             .agg(F.count("*").alias("n_events"),

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators import physical
 from .registry import query
 from .relational import T
 
@@ -157,18 +158,17 @@ def _merge_expr(col, lft: str, rgt: str):
 def _train(spark, sf_dir):
     """Run N_MERGES rounds; returns (merges list, final reprs DF).
 
-    Only the round-0 word-frequency table is persisted: each later
-    round's representation is the cached base plus a chain of literal
-    replace() expressions (one per learned merge), so a round costs ONE
-    job (the pair-count argmax) instead of two — re-deriving the
-    rewrites from cache is a few string ops per vocabulary row, far
-    cheaper than a persist+materialize round trip was (measured: 4.3s
-    -> 2.6s for the 3-round train at sf0.1). At a real corpus's
-    million-row vocabulary the same trade holds; re-materialize every
-    ~32 rounds if the expression chain ever grows deep enough to tax
-    the analyzer."""
-    base = _word_reprs(spark, sf_dir).persist()
-    reprs = base
+    Only the round-0 word-frequency table is materialized (a lineage
+    cut): each later round's representation is the cut base plus a
+    chain of literal replace() expressions (one per learned merge), so
+    a round costs ONE job (the pair-count argmax) instead of two —
+    re-deriving the rewrites from the base is a few string ops per
+    vocabulary row, far cheaper than a materialize round trip per
+    round was (measured: 4.3s -> 2.6s for the 3-round train at sf0.1).
+    At a real corpus's million-row vocabulary the same trade holds;
+    re-materialize every ~32 rounds if the expression chain ever grows
+    deep enough to tax the analyzer."""
+    reprs = _word_reprs(spark, sf_dir).transform(physical.cut)
     merges = []
     for rank in range(1, N_MERGES + 1):
         best = (_pair_counts(reprs)
@@ -179,7 +179,7 @@ def _train(spark, sf_dir):
         reprs = reprs.select(
             _merge_expr(F.col("r"), best["lft"], best["rgt"]).alias("r"),
             "wc")
-    return merges, reprs, base
+    return merges, reprs
 
 
 @query("bpe_train_merges", oracle=_TRAIN_ORACLE)
@@ -191,8 +191,7 @@ def bpe_train_merges(spark, sf_dir):
     All counting is exact integer arithmetic (word counts x pair
     positions), so the cross-engine hash has no float hazard; the argmax
     tie-break (count DESC, lft, rgt) is pinned on both sides."""
-    merges, _reprs, base = _train(spark, sf_dir)
-    base.unpersist()
+    merges, _reprs = _train(spark, sf_dir)
     return spark.createDataFrame(
         merges, "merge_rank int, lft string, rgt string, pair_count bigint")
 
@@ -206,9 +205,9 @@ def bpe_tokenize_corpus(spark, sf_dir):
     table is tiny and enters as literals (a broadcast in spirit), the
     corpus-side work is split/filter/explode — all whole-stage codegen,
     no Python in the row path. Exact integer counts, order-insensitive.
-    The cached word-frequency base stays persisted so the caller's later
-    action reuses it (vocabulary-sized; evicted LRU like any cache)."""
-    _, reprs, _base = _train(spark, sf_dir)
+    The caller's action reads the word-frequency base from its lineage
+    cut, not from the session's cache."""
+    _, reprs = _train(spark, sf_dir)
     syms = F.filter(F.split("r", r"\|"), lambda x: x != "")
     out = (reprs
            .select(F.explode(syms).alias("token"), "wc")

@@ -85,14 +85,16 @@ def require_utc(spark: SparkSession) -> None:
     epochs by the tz offset and silently diverge. The conf is
     runtime-settable, so externally-created sessions (driver harness,
     bench) are healed rather than rejected; the raise only fires if the
-    set itself failed."""
-    tz = spark.conf.get("spark.sql.session.timeZone", "")
+    set itself failed. The conf is read with no default: Spark validates
+    a default as a time zone, so `get(key, "")` raises on a session that
+    never set it, while `get(key)` returns the effective zone."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
     if tz != "UTC":
         try:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         except Exception:
             pass
-        tz = spark.conf.get("spark.sql.session.timeZone", "")
+        tz = spark.conf.get("spark.sql.session.timeZone")
     if tz != "UTC":
         raise RuntimeError(
             f"spark.sql.session.timeZone must be UTC, got {tz!r}; "

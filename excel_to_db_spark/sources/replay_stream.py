@@ -116,7 +116,8 @@ def run_replay_source_agg(spark, sf_dir: str, batch_rows: int | None = None,
     processing-time trigger until the offset reaches EOF (the Python
     stream API has no availableNow), stop, and hand back the memory
     table. Complete mode on the fully-drained finite replay equals the
-    batch GROUP BY — the oracle."""
+    batch GROUP BY — the oracle. Like `streaming/replay.drain`, the
+    returned frame reads the sink and its temp view is dropped."""
     import time as _t
     import uuid
 
@@ -163,4 +164,6 @@ def run_replay_source_agg(spark, sf_dir: str, batch_rows: int | None = None,
     finally:
         q.stop()
         q.awaitTermination()
-    return spark.table(name)
+    frame = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return frame

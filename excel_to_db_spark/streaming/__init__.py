@@ -6,14 +6,21 @@ every streaming aggregation here is the SAME `pyspark.sql.functions`
 window expression as its batch twin in `queries/extensions.py`, so the
 batch oracle checks the streaming semantics (Spark guarantees the two
 paths agree on finite input).
+
+- `windows.py` and `stateful.py` hold the runners: each says what its
+  stream aggregates.
+- `replay.py` is the one module that stages, starts and drains a finite
+  stream: the memory sink, the availableNow trigger, the state-partition
+  scope, and the staging and checkpoint directories, which it removes
+  once the stream is drained.
 """
 
+from .replay import events_stream_reader  # noqa: F401
 from .stateful import (  # noqa: F401
     run_stateful_totals,
     stateful_user_totals,
 )
 from .windows import (  # noqa: F401
-    events_stream_reader,
     hopping_agg,
     run_hopping_stream,
     run_session_stream,

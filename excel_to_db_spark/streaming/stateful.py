@@ -16,7 +16,6 @@ emits on every update.
 
 from __future__ import annotations
 
-import uuid
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -25,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import physical
-from .windows import events_stream_reader
+from . import replay
+from .replay import events_stream_reader
 
 OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 STATE_SCHEMA = "n bigint, s bigint"
@@ -63,16 +63,8 @@ def run_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet source is one availableNow batch, so each key updates exactly
     once and the emitted totals equal the batch GROUP BY — which is the
     DuckDB oracle for the `stream_stateful` query key."""
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    from .windows import run_scoped
-
-    q = (stateful_user_totals(events_stream_reader(spark, sf_dir))
-         .writeStream.outputMode("update")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    totals = stateful_user_totals(events_stream_reader(spark, sf_dir))
+    return replay.drain(spark, totals, "update")[0]
 
 
 # ---------------------------------------- event-time-timeout sessions
@@ -180,7 +172,7 @@ def _sessionizer_state_partitions(sf_dir: str, cores: int) -> int:
     """State partitions for the sessionizer, derived from INPUT SIZE
     (guide §2: scale-adaptive partitioning, not a constant tuned to
     one SF). Unlike the built-in stateful operators (whose per-commit
-    store overhead dominates at test scale — run_scoped's measured
+    store overhead dominates at test scale — replay.run_scoped's measured
     8-partition default), the sessionizer's cost is per-key PYTHON
     work: every (user, micro-batch) pays an applyInPandasWithState
     group call, so parallelism should track event volume. Target
@@ -253,7 +245,7 @@ def sessionize_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the time-ordered 4-slice staging (windows.py:
-    _slice_events_for_replay) through the event-time-timeout
+    january_stream) through the event-time-timeout
     sessionizer. Deterministic emitted set (pinned empirically, same
     method as the outer-join contracts): every session closed by a
     LATER event of the same user ('gap'), plus open sessions whose
@@ -263,32 +255,19 @@ def run_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the real streaming execution (kept as the equivalence
     witness for :func:`sessionize_events_batch`, which the
     `stream_stateful_timeout` query key now serves — r12, guide §4)."""
-    from .windows import _slice_events_for_replay, run_scoped
+    from .windows import january_stream
 
-    staged = _slice_events_for_replay(spark, sf_dir)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    from ..tables import normalize_event_ts
-
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .option("pathGlobFilter", "*.parquet")
-              .load(staged))
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (normalize_event_ts(stream)
-         .withWatermark("ts", "10 minutes")
-         .groupBy("user_id")
-         .applyInPandasWithState(_update_sessions,
-                                 outputStructType=SESS_OUT_SCHEMA,
-                                 stateStructType=SESS_STATE_SCHEMA,
-                                 outputMode="append",
-                                 timeoutConf=GroupStateTimeout
-                                 .EventTimeTimeout)
-         .writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
     cores = spark.sparkContext.defaultParallelism
-    run_scoped(spark, q,
-               state_partitions=_sessionizer_state_partitions(sf_dir, cores))
-    return spark.table(name)
+    with replay.scratch("mbatch") as staged:
+        sessions = (january_stream(spark, sf_dir, staged)
+                    .withWatermark("ts", "10 minutes")
+                    .groupBy("user_id")
+                    .applyInPandasWithState(
+                        _update_sessions,
+                        outputStructType=SESS_OUT_SCHEMA,
+                        stateStructType=SESS_STATE_SCHEMA,
+                        outputMode="append",
+                        timeoutConf=GroupStateTimeout.EventTimeTimeout))
+        return replay.drain(
+            spark, sessions, "append",
+            state_partitions=_sessionizer_state_partitions(sf_dir, cores))[0]

@@ -4,57 +4,28 @@
 a batch DataFrame they are ordinary window aggregations (DuckDB-oracle
 checkable); applied to a streaming DataFrame they become stateful
 streaming aggregates. `run_tumbling_stream` replays the events parquet
-through a real file-source stream and returns the materialized result —
+through a real file-source stream and returns the drained result —
 proving the operator runs under the streaming engine, not just batch.
+Each runner here says what it aggregates; `replay.py` decides how the
+replay is staged, started and drained.
 
-Scale notes (streaming at production rates):
-
-- Tumbling windows with a watermark bound state: expired windows are
-  evicted once the watermark passes window.end + no late data can arrive.
-- `availableNow` trigger = incremental backfill of a parquet directory
-  with streaming semantics (the standard replay/bootstrap path).
-- The memory sink is test-only; production uses kafka/delta/parquet
-  sinks through the same writeStream call.
+Scale note: tumbling windows with a watermark bound state — expired
+windows are evicted once the watermark passes window.end, when no late
+data can arrive.
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import physical
+from . import replay
+from .replay import events_stream_reader, table_stream_reader
 
 # Exact money sum in integer cents, batch or micro-batch (single
 # definition: numerics.py).
 from ..numerics import cents_sum as _cents_sum  # noqa: E402
-
-
-def run_scoped(spark: SparkSession, writer, state_partitions: int = 8):
-    """Start a (finite-replay) streaming query with a state-sized
-    shuffle-partition scope and block until it drains.
-
-    The number of state-store instances a streaming query creates is
-    `spark.sql.shuffle.partitions` AT QUERY START (it is pinned in the
-    checkpoint afterwards), and every instance pays a fixed per-commit
-    cost (delta file + CRC + snapshot bookkeeping) regardless of how
-    little state it holds. State partitioning should therefore track
-    STATE SIZE, not CPU count: at the test corpus's ~1e5-row state, 32
-    partitions spend 4x longer committing empty stores than joining
-    (measured on stream_stream_join at sf0.1: 10.6s at 32 partitions,
-    2.8s at 4). Results are identical — only parallelism of the state
-    backend changes. At production rates, size this to
-    rate x (watermark + interval) / target-partition-bytes instead.
-    The session's conf is restored afterwards either way."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = writer.start()
-        q.awaitTermination()
-        return q                    # drained; callers may read progress
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def tumbling_agg(events: DataFrame, width: str = "10 minutes") -> DataFrame:
@@ -97,41 +68,6 @@ def session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
                     "n_events", "sum_value"))
 
 
-def table_stream_reader(spark: SparkSession, sf_dir: str, table: str,
-                        max_files_per_trigger: int | None = None
-                        ) -> DataFrame:
-    """readStream over one testdata table's parquet file. The file
-    source needs an explicit schema (taken from a batch read) and a
-    directory basePath — the sf dir holds every table, so the single
-    table file is selected with a glob filter. One definition for every
-    table-replay streaming key (events_stream_reader layers the events
-    ts normalization on top)."""
-    schema = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
-    reader = spark.readStream.schema(schema).format("parquet") \
-        .option("pathGlobFilter", f"{table}.parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.load(sf_dir)
-
-
-def events_stream_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (table_stream_reader plus the
-    events ts normalization).
-
-    The raw `ts` arrives as TIMESTAMP_NTZ (timestamp[us]-no-tz parquet)
-    or, under nanosAsLong, as a nanosecond long — neither is accepted by
-    `withWatermark` (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE for NTZ), so the
-    shared `tables.normalize_event_ts` converts to TimestampType exactly
-    as the batch loader does; batch and stream share one normalization."""
-    from ..session import require_utc
-    from ..tables import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    require_utc(spark)
-    return normalize_event_ts(table_stream_reader(spark, sf_dir, "events"))
-
-
 def run_tumbling_stream(spark: SparkSession, sf_dir: str,
                         width: str = "10 minutes",
                         watermark: str = "30 minutes") -> DataFrame:
@@ -143,15 +79,8 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str,
     streaming path value-for-value. (Append mode + watermark is the
     production configuration; complete mode keeps the contract exact —
     append would hold back windows newer than max(ts) - watermark.)"""
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
-    q = (tumbling_agg(stream, width)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, tumbling_agg(stream, width), "complete")[0]
 
 
 def run_hopping_stream(spark: SparkSession, sf_dir: str,
@@ -162,15 +91,9 @@ def run_hopping_stream(spark: SparkSession, sf_dir: str,
     complete mode on finite input == the batch aggregation (see
     run_tumbling_stream for the reasoning). State per overlapping window
     is still watermark-bounded: width/slide live windows per key."""
-    name = f"hopping_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
-    q = (hopping_agg(stream, width, slide)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, hopping_agg(stream, width, slide),
+                        "complete")[0]
 
 
 def run_session_stream(spark: SparkSession, sf_dir: str,
@@ -186,15 +109,8 @@ def run_session_stream(spark: SparkSession, sf_dir: str,
     verifies the streaming operator value-for-value (append mode would
     withhold sessions newer than max(ts) - watermark; see
     run_tumbling_stream for the same reasoning)."""
-    name = f"session_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
-    q = (session_agg(stream, gap)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, session_agg(stream, gap), "complete")[0]
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str,
@@ -205,19 +121,13 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str,
     The watermark bounds state: ids older than max(ts) - watermark are
     evicted, which is what makes dedup feasible on an unbounded stream.
     Finite replay => output equals DISTINCT event_id of the batch table."""
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
     a = events_stream_reader(spark, sf_dir)
     b = events_stream_reader(spark, sf_dir)
-    q = (a.union(b)
-         .withWatermark("ts", watermark)
-         .dropDuplicates(["event_id", "ts"])
-         .select("event_id")
-         .writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    deduped = (a.union(b)
+               .withWatermark("ts", watermark)
+               .dropDuplicates(["event_id", "ts"])
+               .select("event_id"))
+    return replay.drain(spark, deduped, "append")[0]
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str,
@@ -238,7 +148,6 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str,
     Inner join + finite replay => every matched pair is emitted exactly
     once regardless of watermark timing, so the batch self-join SQL is
     an exact oracle (append is the only supported mode here)."""
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
     clicks = (events_stream_reader(spark, sf_dir)
               .filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
@@ -260,12 +169,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str,
         .select(F.col("c_user").alias("user_id"), "click_id", "view_id",
                 (F.unix_micros(F.col("view_ts"))
                  - F.unix_micros(F.col("click_ts"))).alias("delay_us")))
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, joined, "append")[0]
 
 
 def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
@@ -288,7 +192,6 @@ def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
     pipeline would see emitted by the NEXT micro-batch. State on each
     side stays O(rate x (watermark + within)), identical to the inner
     join."""
-    name = f"lsj_{uuid.uuid4().hex[:8]}"
     clicks = (events_stream_reader(spark, sf_dir)
               .filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
@@ -308,12 +211,7 @@ def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
         & (F.col("view_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
         "left_outer")
         .select(F.col("c_user").alias("user_id"), "click_id", "view_id"))
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, joined, "append")[0]
 
 
 def run_stream_dedup_watermark(spark: SparkSession, sf_dir: str,
@@ -332,88 +230,40 @@ def run_stream_dedup_watermark(spark: SparkSession, sf_dir: str,
     the corpus (45 days vs the 30-day event range), so no duplicate is
     late-dropped instead of dedup-dropped — the output is exactly the
     original event set, which is what the DuckDB oracle checks."""
-    import os
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="e2db_ddw_")
-    src = os.path.join(sf_dir, "events.parquet")
-    for i in (0, 1):
-        dest = os.path.join(out, f"copy_{i}.parquet")
-        shutil.copyfile(src, dest)
-        os.utime(dest, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    schema = spark.read.parquet(src).schema
     from ..tables import normalize_event_ts
 
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .load(out))
-    name = f"ddw_{uuid.uuid4().hex[:8]}"
-    q = (normalize_event_ts(stream)
-         .withWatermark("ts", watermark)
-         .dropDuplicatesWithinWatermark(["event_id"])
-         .groupBy("event_type")
-         .agg(F.count("*").alias("n_events"),
-              _cents_sum(F.col("value")).alias("sum_value"))
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    src = f"{sf_dir}/events.parquet"
+    with replay.scratch("ddw") as staged:
+        replay.stage_copies(src, 2, staged)
+        stream = replay.staged_reader(
+            spark, staged, spark.read.parquet(src).schema)
+        counts = (normalize_event_ts(stream)
+                  .withWatermark("ts", watermark)
+                  .dropDuplicatesWithinWatermark(["event_id"])
+                  .groupBy("event_type")
+                  .agg(F.count("*").alias("n_events"),
+                       _cents_sum(F.col("value")).alias("sum_value")))
+        return replay.drain(spark, counts, "complete")[0]
 
 
-def _slice_events_for_replay(spark: SparkSession, sf_dir: str) -> str:
-    """Re-slice the events log into four time-ordered parquet files
-    (ascending names + mtimes, so the file source replays them in event
-    order) for multi-micro-batch replays. Fixed calendar slice points
-    (the corpus spans January): slices are time-ordered, so no
-    cross-batch late data is dropped and the final emitted set depends
-    only on the data, not the slicing.
+def january_stream(spark: SparkSession, sf_dir: str, staged: str
+                   ) -> DataFrame:
+    """The events log staged in ``staged`` as four time-ordered slices
+    and read back one slice per micro-batch, for multi-micro-batch
+    replays. Fixed calendar slice points (the corpus spans January):
+    slices are time-ordered, so no cross-batch late data is dropped and
+    the final emitted set depends only on the data, not the slicing."""
+    from ..tables import load_table, normalize_event_ts
 
-    r11 (guide §6): ONE scan writes all four slices — a slice-id
-    column from the cut points, hash-repartitioned so each slice lands
-    in exactly one task, written with partitionBy and renamed into the
-    flat ascending replay names. The previous shape ran four separate
-    filtered scans + coalesce(1) writes (4 jobs over the full log per
-    staging, x3 streaming keys). Slice membership is unchanged: the
-    when-chain reproduces the [lo, hi) filters, and the explicit
-    isNotNull guard reproduces their null-dropping. A slice with no
-    rows (never on this corpus's January span, but contractually four
-    files) falls back to an empty single-file write."""
-    import os
-    import tempfile
-
-    from ..tables import load_table
-
-    out = tempfile.mkdtemp(prefix="e2db_mbatch_")
-    batch = load_table(spark, sf_dir, "events")
-    cuts = ["2024-01-09", "2024-01-17", "2024-01-25"]
     ts = F.col("ts")
-    sl = (F.when(ts < F.lit(cuts[0]), 0)
-          .when(ts < F.lit(cuts[1]), 1)
-          .when(ts < F.lit(cuts[2]), 2).otherwise(3))
-    stage = os.path.join(out, "stage")
-    (batch.where(ts.isNotNull()).withColumn("sl", sl)
-     .repartition(4, F.col("sl"))
-     .write.partitionBy("sl").mode("overwrite").parquet(stage))
-    for i in range(4):
-        pdir = os.path.join(stage, f"sl={i}")
-        dest = os.path.join(out, f"slice_{i}.parquet")
-        if os.path.isdir(pdir):
-            fname = [f for f in os.listdir(pdir)
-                     if f.endswith(".parquet")][0]
-            os.rename(os.path.join(pdir, fname), dest)
-        else:  # empty slice: keep the 4-file replay contract
-            pd0 = os.path.join(out, f"empty_{i}.dir")
-            batch.limit(0).coalesce(1).write.mode("overwrite").parquet(pd0)
-            fname = [f for f in os.listdir(pd0)
-                     if f.endswith(".parquet")][0]
-            os.rename(os.path.join(pd0, fname), dest)
-        os.utime(dest, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-    return out
+    slice_id = (F.when(ts < F.lit("2024-01-09"), 0)
+                .when(ts < F.lit("2024-01-17"), 1)
+                .when(ts < F.lit("2024-01-25"), 2)
+                .when(ts.isNotNull(), 3))
+    replay.stage_slices(load_table(spark, sf_dir, "events"), slice_id, 4,
+                        staged)
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return normalize_event_ts(replay.staged_reader(spark, staged, schema))
 
 
 def run_tumbling_stream_multibatch(spark: SparkSession, sf_dir: str,
@@ -436,25 +286,10 @@ def run_tumbling_stream_multibatch(spark: SparkSession, sf_dir: str,
     append-mode state is evicted at emission, so memory holds only the
     open tail. This is the production shape for late-data-tolerant
     incremental materialization (emit-once, no updates downstream)."""
-    out = _slice_events_for_replay(spark, sf_dir)
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    from ..tables import normalize_event_ts
-
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .option("pathGlobFilter", "*.parquet")
-              .load(out))
-    agg = tumbling_agg(
-        normalize_event_ts(stream).withWatermark("ts", watermark), width)
-    name = f"mbt_{uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    with replay.scratch("mbatch") as staged:
+        stream = january_stream(spark, sf_dir, staged)
+        agg = tumbling_agg(stream.withWatermark("ts", watermark), width)
+        return replay.drain(spark, agg, "append")[0]
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str,
@@ -470,7 +305,6 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str,
     verifies the streaming execution value-for-value."""
     from ..tables import load_table
 
-    name = f"sjoin_{uuid.uuid4().hex[:8]}"
     customers = load_table(spark, sf_dir, "customer")
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
     joined = stream.join(customers,
@@ -478,12 +312,7 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str,
     agg = (joined.groupBy("c_mktsegment")
            .agg(F.count("*").alias("n_events"),
                 _cents_sum(F.col("value")).alias("sum_value")))
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, agg, "complete")[0]
 
 
 def run_stream_topk_trending(spark: SparkSession, sf_dir: str,
@@ -501,17 +330,11 @@ def run_stream_topk_trending(spark: SparkSession, sf_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    name = f"topk_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
     agg = (stream
            .groupBy(F.window("ts", width).alias("win"), "event_type")
            .agg(F.count("*").alias("n_events")))
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    state = spark.table(name)
+    state, _ = replay.drain(spark, agg, "complete")
     rnk = F.row_number().over(
         W.partitionBy("win").orderBy(F.col("n_events").desc(), "event_type"))
     return (state.withColumn("rnk", rnk).filter(F.col("rnk") <= k)
@@ -539,7 +362,6 @@ def run_stream_scd2_enrich(spark: SparkSession, sf_dir: str,
 
     from ..operators.temporal import scd2_customer_versions
 
-    name = f"scd2e_{uuid.uuid4().hex[:8]}"
     dim = scd2_customer_versions(load_table(spark, sf_dir, "customer"),
                                  F.lit("2024-01-15").cast("timestamp"))
     stream = events_stream_reader(spark, sf_dir).withWatermark("ts", watermark)
@@ -551,12 +373,7 @@ def run_stream_scd2_enrich(spark: SparkSession, sf_dir: str,
     agg = (joined.groupBy("c_mktsegment", "ver")
            .agg(F.count("*").alias("n_events"),
                 cents_sum(F.col("value")).alias("sum_value")))
-    q = (agg.writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return (spark.table(name)
+    return (replay.drain(spark, agg, "complete")[0]
             .select(F.col("c_mktsegment").alias("segment"),
                     F.col("ver").cast("int").alias("ver"),
                     "n_events", "sum_value"))
@@ -606,24 +423,10 @@ def run_stream_update_mode(spark: SparkSession, sf_dir: str,
     aggregation exactly (the oracle)."""
     from pyspark.sql.window import Window as _W
 
-    out = _slice_events_for_replay(spark, sf_dir)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    from ..tables import normalize_event_ts
-
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .option("pathGlobFilter", "*.parquet")
-              .load(out))
-    agg = tumbling_agg(
-        normalize_event_ts(stream).withWatermark("ts", watermark), width)
-    name = f"upd_{uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.outputMode("update")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    emitted = spark.table(name)
+    with replay.scratch("mbatch") as staged:
+        stream = january_stream(spark, sf_dir, staged)
+        agg = tumbling_agg(stream.withWatermark("ts", watermark), width)
+        emitted, _ = replay.drain(spark, agg, "update")
     rk = F.row_number().over(
         _W.partitionBy("win_start").orderBy(F.col("n_events").desc()))
     return (emitted.withColumn("rk", rk).filter(F.col("rk") == 1)
@@ -650,7 +453,6 @@ def run_stream_stream_full_join(spark: SparkSession, sf_dir: str,
     `within`. State stays O(rate x (watermark + within)) per side —
     the same budget as the inner join, which is the whole point: full
     outer costs no extra state, only the two expiry emission rules."""
-    name = f"fsj_{uuid.uuid4().hex[:8]}"
     clicks = (events_stream_reader(spark, sf_dir)
               .filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
@@ -672,12 +474,7 @@ def run_stream_stream_full_join(spark: SparkSession, sf_dir: str,
         "full_outer")
         .select(F.coalesce(F.col("c_user"), F.col("v_user"))
                 .alias("user_id"), "click_id", "view_id"))
-    q = (joined.writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, joined, "append")[0]
 
 
 def run_stream_late_audit(spark: SparkSession, sf_dir: str,
@@ -702,101 +499,25 @@ def run_stream_late_audit(spark: SparkSession, sf_dir: str,
     audit what out-of-order upstream delivery would cost it.
 
     Returns (result_df, dropped_rows_metric)."""
-    import os
-    import tempfile
-
     from ..tables import load_table
 
-    out = tempfile.mkdtemp(prefix="e2db_late_")
     batch = load_table(spark, sf_dir, "events")
-    mid = "2024-01-24"
-    parts = [batch.filter(F.col("ts") >= F.lit(mid)),       # newest first
-             batch.filter((F.col("ts") >= F.lit(split))
-                          & (F.col("ts") < F.lit(mid))),
-             batch.filter(F.col("ts") < F.lit(split))]      # arrives LAST
-    for i, part in enumerate(parts):
-        pdir = os.path.join(out, f"half_{i}.dir")
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        fname = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        dest = os.path.join(out, f"half_{i}.parquet")
-        os.rename(os.path.join(pdir, fname), dest)
-        os.utime(dest, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-
-    schema = spark.read.parquet(os.path.join(out, "half_0.parquet")).schema
-    stream = (spark.readStream.schema(schema).format("parquet")
-              .option("maxFilesPerTrigger", "1")
-              .option("latestFirst", "false")
-              .option("pathGlobFilter", "*.parquet")
-              .load(out))
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    q = (stream
-         .withWatermark("ts", watermark)
-         .groupBy(F.window("ts", "1 day").alias("win"))
-         .agg(F.count("*").alias("n_events"))
-         .select(F.col("win.start").alias("day"), "n_events")
-         .writeStream.outputMode("append")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    handle = run_scoped(spark, q)
-    dropped = 0
-    prog = handle.recentProgress or []
-    for p in prog:
-        for op in (p.get("stateOperators") or []):
-            dropped += int(op.get("numRowsDroppedByWatermark", 0))
-    return spark.table(name), dropped
-
-
-def staged_checkpoint_replay(spark: SparkSession, sf_dir: str, agg_fn,
-                             prefix: str = "ckptr"):
-    """Shared two-arrival checkpoint-restart choreography: stage the
-    events log as two dated halves, run one availableNow query per
-    arrival against a SHARED checkpoint (complete output mode), and
-    return both StreamingQuery handles plus the final memory-table name
-    and the staged halves — so the production key
-    (`run_stream_checkpoint_resume`) and the offset-log test
-    (tests/test_curation2.py) exercise the IDENTICAL file-move
-    protocol instead of two drift-prone copies.
-
-    `agg_fn` maps the raw streaming DataFrame to its aggregation (the
-    part that differs per caller)."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..tables import load_table
-
-    staged = tempfile.mkdtemp(prefix=f"e2db_{prefix}_src_")
-    ckpt = tempfile.mkdtemp(prefix=f"e2db_{prefix}_ck_")
-    batch = load_table(spark, sf_dir, "events")
-    halves = [batch.filter(F.col("ts") < F.lit("2024-01-16")),
-              batch.filter(F.col("ts") >= F.lit("2024-01-16"))]
-    paths = []
-    for i, part in enumerate(halves):
-        pdir = os.path.join(staged, f"h{i}.dir")
-        part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        fname = [f for f in os.listdir(pdir) if f.endswith(".parquet")][0]
-        paths.append((os.path.join(pdir, fname),
-                      os.path.join(staged, f"h{i}.parquet")))
-    schema = spark.read.parquet(paths[0][0]).schema
-
-    def one_run(qname: str):
-        stream = (spark.readStream.schema(schema).format("parquet")
-                  .option("pathGlobFilter", "*.parquet").load(staged))
-        q = (agg_fn(stream)
-             .writeStream.outputMode("complete")
-             .format("memory").queryName(qname)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             )
-        return run_scoped(spark, q)
-
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    shutil.move(*paths[0])                 # only the first half exists
-    q1 = one_run(name + "_a")
-    shutil.move(*paths[1])                 # second half "arrives" later
-    q2 = one_run(name + "_b")              # same checkpoint: resume
-    return q1, q2, name + "_b", halves
+    ts, mid, split = F.col("ts"), F.lit("2024-01-24"), F.lit(split)
+    newest_first = (F.when(ts >= mid, 0)
+                    .when(ts >= split, 1)
+                    .when(ts < split, 2))               # arrives LAST
+    with replay.scratch("late") as staged:
+        replay.stage_slices(batch, newest_first, 3, staged)
+        days = (replay.staged_reader(spark, staged, batch.schema)
+                .withWatermark("ts", watermark)
+                .groupBy(F.window("ts", "1 day").alias("win"))
+                .agg(F.count("*").alias("n_events"))
+                .select(F.col("win.start").alias("day"), "n_events"))
+        out, progress = replay.drain(spark, days, "append")
+    dropped = sum(int(op.get("numRowsDroppedByWatermark", 0))
+                  for p in progress
+                  for op in (p.get("stateOperators") or []))
+    return out, dropped
 
 
 def run_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,9 +537,7 @@ def run_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("n_events"),
                      _cents_sum(F.col("value")).alias("sum_value")))
 
-    _q1, _q2, table, _halves = staged_checkpoint_replay(
-        spark, sf_dir, agg, prefix="ckptr")
-    return spark.table(table)
+    return replay.staged_checkpoint_replay(spark, sf_dir, agg)[0]
 
 
 def run_stream_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,7 +556,6 @@ def run_stream_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile for an unbounded quality monitor."""
     from ..queries.curation3 import gopher_census
 
-    name = f"qcensus_{uuid.uuid4().hex[:8]}"
     stream = table_stream_reader(spark, sf_dir, "documents",
                                  max_files_per_trigger=1)
     # r12: the gopher predicates are the census' entire cost (HOF
@@ -848,13 +566,7 @@ def run_stream_quality_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = physical.fan_width(spark, [f"{sf_dir}/documents.parquet"])
     if width is not None:
         stream = stream.repartition(width, F.col("doc_id"))
-    q = (gopher_census(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return spark.table(name)
+    return replay.drain(spark, gopher_census(stream), "complete")[0]
 
 
 def run_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -874,16 +586,10 @@ def run_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor whose state CANNOT grow with the order history."""
     from ..queries.estimation import psi_bucket_counts, psi_from_counts
 
-    name = f"psicensus_{uuid.uuid4().hex[:8]}"
     stream = table_stream_reader(spark, sf_dir, "orders",
                                  max_files_per_trigger=1)
-    q = (psi_bucket_counts(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return psi_from_counts(spark, spark.table(name))
+    counts, _ = replay.drain(spark, psi_bucket_counts(stream), "complete")
+    return psi_from_counts(spark, counts)
 
 
 def ohlc_hourly_agg(df: DataFrame) -> DataFrame:
@@ -917,15 +623,8 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the hour column so closed candles finalize and their state is
     evicted (the events replay here is finite, so complete mode is the
     verifiable choice)."""
-    name = f"ohlc_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir)
-    q = (ohlc_hourly_agg(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return (spark.table(name)
+    return (replay.drain(spark, ohlc_hourly_agg(stream), "complete")[0]
             .select("hour_epoch", "n_trades", "open_cents",
                     "high_cents", "low_cents", "close_cents")
             .orderBy("hour_epoch"))
@@ -959,15 +658,8 @@ def run_stream_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production shape: window the counters per hour + watermark so old
     windows finalize; the finite replay makes complete mode the
     verifiable choice here."""
-    name = f"apdex_{uuid.uuid4().hex[:8]}"
     stream = events_stream_reader(spark, sf_dir)
-    q = (apdex_service_agg(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True)
-         )
-    run_scoped(spark, q)
-    return (spark.table(name)
+    return (replay.drain(spark, apdex_service_agg(stream), "complete")[0]
             .select("service", "n", "satisfied", "tolerating",
                     F.round((2 * F.col("satisfied")
                              + F.col("tolerating")).cast("double")
@@ -988,17 +680,12 @@ def run_stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic runs batch-side on the final emission."""
     from ..queries.flagships2 import hll_register_agg, hll_report
 
-    name = f"hllregs_{uuid.uuid4().hex[:8]}"
     stream = table_stream_reader(spark, sf_dir, "orders",
                                  max_files_per_trigger=1)
-    q = (hll_register_agg(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True))
-    run_scoped(spark, q)
+    registers, _ = replay.drain(spark, hll_register_agg(stream), "complete")
     n_true = (spark.read.parquet(f"{sf_dir}/orders.parquet")
               .select("o_custkey").distinct().count())
-    return hll_report(spark, spark.table(name), n_true)
+    return hll_report(spark, registers, n_true)
 
 
 def run_stream_skew_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1014,15 +701,9 @@ def run_stream_skew_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     it value-for-value."""
     from ..queries.dataops import skew_parts, skew_report
 
-    name = f"skewmon_{uuid.uuid4().hex[:8]}"
     stream = table_stream_reader(spark, sf_dir, "orders",
                                  max_files_per_trigger=1)
-    q = (skew_parts(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True))
-    run_scoped(spark, q)
-    return skew_report(spark.table(name))
+    return skew_report(replay.drain(spark, skew_parts(stream), "complete")[0])
 
 
 def run_stream_spc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1038,12 +719,7 @@ def run_stream_spc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     every day value-for-value."""
     from ..queries.spc import p_chart_daily, p_chart_report
 
-    name = f"spcmon_{uuid.uuid4().hex[:8]}"
     stream = table_stream_reader(spark, sf_dir, "lineitem",
                                  max_files_per_trigger=1)
-    q = (p_chart_daily(stream)
-         .writeStream.outputMode("complete")
-         .format("memory").queryName(name)
-         .trigger(availableNow=True))
-    run_scoped(spark, q)
-    return p_chart_report(spark.table(name))
+    return p_chart_report(
+        replay.drain(spark, p_chart_daily(stream), "complete")[0])

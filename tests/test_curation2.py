@@ -391,7 +391,7 @@ def test_checkpoint_resume_processes_only_new_data(spark, sf_dir):
     (state restore) — equality with batch alone cannot distinguish
     resume from silent reprocess-everything, the input-row counts can."""
     from excel_to_db_spark.numerics import cents_sum
-    from excel_to_db_spark.streaming.windows import staged_checkpoint_replay
+    from excel_to_db_spark.streaming.replay import staged_checkpoint_replay
     from excel_to_db_spark.tables import load_table
 
     def agg(stream):
@@ -399,15 +399,15 @@ def test_checkpoint_resume_processes_only_new_data(spark, sf_dir):
                 .agg(F.count("*").alias("n"),
                      cents_sum(F.col("value")).alias("sv")))
 
-    q1, q2, table, halves = staged_checkpoint_replay(
-        spark, sf_dir, agg, prefix="ckres")
+    out, progress1, progress2, halves = staged_checkpoint_replay(
+        spark, sf_dir, agg)
     batch = load_table(spark, sf_dir, "events")
-    r1 = sum(p["numInputRows"] for p in q1.recentProgress)
-    r2 = sum(p["numInputRows"] for p in q2.recentProgress)
+    r1 = sum(p["numInputRows"] for p in progress1)
+    r2 = sum(p["numInputRows"] for p in progress2)
     assert r1 == halves[0].count()
     assert r2 == halves[1].count()          # ONLY the new file
     got = {(r.event_type, r.n) for r in
-           spark.table(table).select("event_type", "n").collect()}
+           out.select("event_type", "n").collect()}
     want = {(r.event_type, r["count"]) for r in
             batch.groupBy("event_type").count().collect()}
     assert got == want

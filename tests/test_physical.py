@@ -76,7 +76,9 @@ def test_cut_swap_yields_the_unrolled_plan(spark, monkeypatch):
         "unrolled, each of the day series' three consumers scans orders"
 
 
-@pytest.mark.parametrize("key", ["stats_theil_sen", "embedding_mrl_eval"])
+@pytest.mark.parametrize("key", ["stats_theil_sen", "embedding_mrl_eval",
+                                 "dedup_clusters", "dedup_cluster_eval",
+                                 "bpe_tokenize_corpus"])
 def test_key_leaves_no_cached_plan(spark, key):
     """A key that caches a subtree and never uncaches it serves a later
     matching plan in the session from that cache, so the later timing

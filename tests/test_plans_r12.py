@@ -1,8 +1,6 @@
 """Round-12 plan guards: the shapes the optimization rounds bought stay
 bought. Pins (VERDICT r11 #6 + the r12 rewrites):
 
-- stream_stateful_timeout is the one-pass batch window emulation — no
-  per-group Python state protocol, one keyed exchange;
 - the wedge keys (jaccard / LP panel / holdout) read ONE checkpointed
   edge set (no parquet re-scan subtrees) and never nested-loop;
 - graph_kcore's unrolled rounds are delta-degree updates — no per-round
@@ -27,18 +25,6 @@ def _no_checkpoint(monkeypatch):
     from excel_to_db_spark.operators import physical
 
     monkeypatch.setattr(physical, "cut", lambda df: df)
-
-
-def test_stateful_timeout_is_one_pass_batch_window(spark, registry=None):
-    from excel_to_db_spark.queries.curation2 import stream_stateful_timeout
-
-    plan = plan_text(stream_stateful_timeout(spark, SF_DIR))
-    assert "FlatMapGroups" not in plan and "EvalPython" not in plan \
-        and "MapInArrow" not in plan, "no Python boundary in the plan"
-    assert plan.count("Exchange hashpartitioning") == 1, \
-        "one user_id exchange serves lag, running-sum, session agg " \
-        "and last-sid window"
-    assert plan.count("Window") >= 2
 
 
 def test_wedge_keys_share_one_checkpointed_edge_set(spark):

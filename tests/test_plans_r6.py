@@ -57,11 +57,3 @@ def test_similarity_recall_no_cartesian(spark):
     # the only nested-loop is the broadcast query set (the intended
     # brute-force ground-truth scan); never a CartesianProduct
     assert "CartesianProduct" not in plan
-
-
-def test_foreachbatch_readback_partition_discovery(spark):
-    from excel_to_db_spark.queries import REGISTRY
-
-    df = REGISTRY["stream_foreachbatch"].fn(spark, SF)
-    assert set(df.columns) == {"event_type", "n_events", "sum_value"}
-    assert df.count() > 0

@@ -2,8 +2,7 @@
 |out= marker is literal-aware, SQLite writes bind Decimal, UPDATE SET
 resolves case-insensitively, DROP refuses to lie about permanent
 tables, GLOB backslashes stay literal (verified against real sqlite3),
-xlsx sheet names survive double quotes, and a torn commit-log tmp file
-never breaks read_committed."""
+and xlsx sheet names survive double quotes."""
 
 from __future__ import annotations
 
@@ -73,24 +72,6 @@ def test_xlsx_sheet_name_with_quotes(spark):
     path = os.path.join(tempfile.mkdtemp(prefix="e2db_q_"), "q.xlsx")
     write_xlsx(path, [["a", 1]], sheet_name='My "Q1" Sheet')
     assert sheet_names(path) == ['My "Q1" Sheet']
-
-
-def test_read_committed_skips_torn_tmp(spark, tmp_path):
-    from excel_to_db_spark.sources.stream_sink import read_committed
-
-    out = str(tmp_path / "sink")
-    os.makedirs(os.path.join(out, "_commits"))
-    os.makedirs(os.path.join(out, "_data"))
-    data = os.path.join(out, "_data", "f.csv")
-    with open(data, "w") as fh:
-        fh.write("1,x\n")
-    with open(os.path.join(out, "_commits", "0"), "w") as fh:
-        fh.write('{"files": ["%s"], "rows": 1}' % data)
-    # A crashed commit leaves a torn tmp: must be ignored, not parsed.
-    with open(os.path.join(out, "_commits", "1.tmp-dead"), "w") as fh:
-        fh.write('{"files": [')
-    df = read_committed(spark, out, "id long, s string")
-    assert df.count() == 1
 
 
 def test_user_schema_with_default_names_is_honored(spark):
