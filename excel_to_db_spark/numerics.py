@@ -1,17 +1,33 @@
-"""Cross-engine-exact float aggregation (the SURVEY §4.3 rule, one
-definition for the whole tree).
+"""Cross-engine-exact numerics: one definition for the whole tree of
+each formula that Spark and the DuckDB oracles must evaluate alike.
 
-A `sum` of doubles depends on partial-aggregation order, so a rounded
-money/stat result can flip between Spark's parallel accumulation and an
-oracle's sequential one (observed: half-cent boundary flakes,
-CORRECTNESS r3 `jsonl_roundtrip`). The fix is structural: accumulate in
-integer fixed-point units (BIGINT — associative, order-free), divide
-and round ONCE at the end. Oracle twin for the default cents scale:
+Sums (the SURVEY §4.3 rule). A `sum` of doubles depends on
+partial-aggregation order, so a rounded money/stat result can flip
+between Spark's parallel accumulation and an oracle's sequential one
+(observed: half-cent boundary flakes, CORRECTNESS r3
+`jsonl_roundtrip`). The fix is structural: accumulate in integer
+fixed-point units (BIGINT — associative, order-free), divide and round
+ONCE at the end. Oracle twin for the default cents scale:
 
     round(sum(CAST(round(x * 100) AS BIGINT)) / 100.0, 2)
 
 Window RUNNING sums are exempt (their frame order is pinned by ORDER
 BY, so plain doubles are already deterministic).
+
+P-values. Every normal or chi-square tail in the catalog comes from
+`erfc`/`chi2_sf` on Spark and their `erfc_sql`/`chi2_sf_sql` twins in
+the oracles, and from nowhere else:
+- erfc is Abramowitz-Stegun 7.1.26 (|error| < 1.5e-7), written with
+  the same association on both engines so the two agree bit for bit;
+- the polynomial holds for x >= 0 only, so a negative argument takes
+  the reflection erfc(x) = 2 - erfc(-x), the same CASE on both sides;
+- a chi-square tail is 0.5 * erfc(z) with z Wilson-Hilferty's
+  cube-root normal over sqrt(2), z < 0 whenever the statistic is below
+  its mean;
+- snap, then consume: a key rounds its statistic before the tail reads
+  it and rounds the p-value after (8 dp), so a last-ulp difference in
+  either engine's exp/pow reaches the compared digits only on an exact
+  rounding boundary.
 """
 
 from __future__ import annotations
@@ -45,3 +61,46 @@ def h32(col: Column) -> Column:
     on this hash silently diverges cross-engine."""
     return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
             .cast("bigint"))
+
+
+def erfc(x: Column) -> Column:
+    """erfc(x) by Abramowitz-Stegun 7.1.26 (|error| < 1.5e-7), which
+    holds for x >= 0; a negative x takes the reflection
+    erfc(x) = 2 - erfc(-x). Oracle twin: `erfc_sql`. The association
+    of the polynomial is part of the contract: Spark and DuckDB agree
+    bit for bit only while both evaluate the same products in the same
+    order."""
+    z = F.abs(x)
+    t = 1.0 / (1.0 + 0.3275911 * z)
+    e = ((0.254829592 * t + (-0.284496736) * t * t
+          + 1.421413741 * t * t * t
+          + (-1.453152027) * t * t * t * t
+          + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
+    return F.when(x < 0, 2.0 - e).otherwise(e)
+
+
+def erfc_sql(x: str) -> str:
+    """DuckDB twin of `erfc`: one scalar subquery over the SQL
+    expression `x` (which may name columns of the enclosing query)."""
+    return ("(SELECT CASE WHEN s < 0 THEN 2.0 - e ELSE e END FROM"
+            " (SELECT (0.254829592 * t + -0.284496736 * t * t"
+            " + 1.421413741 * t * t * t + -1.453152027 * t * t * t * t"
+            " + 1.061405429 * t * t * t * t * t) * exp(-z * z) AS e, s"
+            " FROM (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z, s"
+            f" FROM (SELECT abs(s) AS z, s FROM (SELECT {x} AS s)))))")
+
+
+def chi2_sf(q: Column, df: Column) -> Column:
+    """Chi-square upper tail P(X >= q) at `df` degrees of freedom:
+    Wilson-Hilferty's cube-root normal, through `erfc`."""
+    z = ((F.pow(q / df, 1.0 / 3.0)
+          - (1.0 - 2.0 / (9.0 * df)))
+         / F.sqrt(2.0 / (9.0 * df)) / F.sqrt(F.lit(2.0)))
+    return 0.5 * erfc(z)
+
+
+def chi2_sf_sql(q: str, df: str) -> str:
+    """DuckDB twin of `chi2_sf`; `q` and `df` are SQL expressions."""
+    z = (f"(pow({q} / {df}, 1.0 / 3.0) - (1.0 - 2.0 / (9.0 * {df})))"
+         f" / sqrt(2.0 / (9.0 * {df})) / sqrt(2.0)")
+    return f"0.5 * {erfc_sql(z)}"

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..numerics import h32
 from . import physical
 
 def norm_tokens(text: Column) -> Column:
@@ -261,7 +262,7 @@ def minhash_signatures(df: DataFrame, n_hashes: int = 64,
     # instead — slower, but reproducible in ANY engine (the DuckDB
     # oracle of dedup_minhash_est recomputes identical signatures).
     if base == "md5":
-        hb = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
+        hb = h32(F.col("tok"))
     else:
         hb = F.xxhash64("tok").bitwiseAND(F.lit((1 << 32) - 1))
     base = toks.select("did", hb.alias("hb"))
@@ -472,8 +473,7 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 8,
     # shiftright/AND per vote beats per-bit string substring ~2x.
     base = toks.select(
         "did",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10)
-         .cast("bigint").alias("hi"),
+        h32(F.col("tok")).alias("hi"),
         F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10)
          .cast("bigint").alias("lo"))
 

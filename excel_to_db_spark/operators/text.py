@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..numerics import h32
+
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deterministic and oracle-expressible; real corpora would use
 # fastText-style models (not available in this env — the heuristic IS the
@@ -130,9 +132,7 @@ def rolling_fingerprint(text: Column) -> Column:
     intermediate < 2^40, far from int64 overflow, so the arithmetic is
     exact in any engine and the DuckDB twin states the same fold.
     Distinguishes reordered docs that `fingerprint` collides."""
-    tok_h = F.transform(
-        tokens(text), lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10)
-                                 .cast("bigint"))
+    tok_h = F.transform(tokens(text), h32)
     m = F.lit((1 << 31) - 1)
     return F.aggregate(tok_h, F.lit(0).cast("bigint"),
                        lambda acc, h: (acc * 131 + h) % m)

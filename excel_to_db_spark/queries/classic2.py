@@ -30,22 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
-
-def _as_erfc(z):
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    return ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
 
 
 # ------------------------------------------------------ ANCOVA
@@ -224,9 +211,7 @@ def stats_ancova(spark, sf_dir):
         FROM st
     )
     SELECT n, lm_stat,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT sqrt(lm_stat / 2.0) AS z2))), 8)
+           round({erfc_sql('sqrt(lm_stat / 2.0)')}, 8)
                AS p_value
     FROM lm
 """)
@@ -283,7 +268,7 @@ def ts_arch_lm(spark, sf_dir):
                    .cast("double")), 4).alias("lm_stat"))
     return lm.select(
         "n", "lm_stat",
-        F.round(_as_erfc(F.sqrt(F.col("lm_stat") / 2.0)), 8)
+        F.round(erfc(F.sqrt(F.col("lm_stat") / 2.0)), 8)
         .alias("p_value"))
 
 
@@ -412,12 +397,7 @@ def stats_split_half_reliability(spark, sf_dir):
         FROM cells, tot GROUP BY tot.k
     )
     SELECT k AS k_groups, chi2,
-           round(0.5 * (SELECT {_AS_ERFC_SQL} FROM
-                 (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                  (SELECT (pow(chi2 / (k - 1), 1.0 / 3.0)
-                           - (1.0 - 2.0 / (9.0 * (k - 1))))
-                          / sqrt(2.0 / (9.0 * (k - 1))) / sqrt(2.0)
-                       AS z))), 8) AS p_value
+           round({chi2_sf_sql('chi2', '(k - 1)')}, 8) AS p_value
     FROM chi
 """)
 def stats_mood_median(spark, sf_dir):
@@ -472,14 +452,7 @@ def stats_mood_median(spark, sf_dir):
         .cast("bigint")
     chi = j.groupBy("k").agg(
         F.round(F.sum(term) / 1e8, 4).alias("chi2"))
-    f = (F.col("k") - 1).cast("double")
-    z = ((F.pow(F.col("chi2") / f, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * f)))
-         / F.sqrt(2.0 / (9.0 * f)) / F.sqrt(F.lit(2.0)))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return chi.select(F.col("k").alias("k_groups"), "chi2",
-                      F.round(0.5 * erfc, 8).alias("p_value"))
+                      F.round(chi2_sf(F.col("chi2"),
+                                      (F.col("k") - 1).cast("double")), 8)
+                      .alias("p_value"))

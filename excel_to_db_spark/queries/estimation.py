@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import physical
-from ..numerics import cents_sum, h32
+from ..numerics import cents_sum, erfc, erfc_sql, h32
 from .registry import REGISTRY, query
 from .relational import T
 
@@ -180,12 +180,6 @@ def join_skew_salted(spark, sf_dir):
 
 # -------------------------------------- Benjamini-Hochberg FDR control
 
-_BH_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
 
 @query("stats_fdr_bh", oracle=f"""
     WITH cnt AS (
@@ -214,9 +208,7 @@ _BH_ERFC = """
     ),
     pv AS (
         SELECT s_nationkey, a, b, chi2,
-               round((SELECT {_BH_ERFC} FROM
-                      (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                       (SELECT sqrt(chi2 / 2.0) AS z))), 8) AS p_value
+               round({erfc_sql('sqrt(chi2 / 2.0)')}, 8) AS p_value
         FROM chi
     ),
     ranked AS (
@@ -281,13 +273,8 @@ def stats_fdr_bh(spark, sf_dir):
            .select("s_nationkey", "a", "b", chi2.alias("chi2")))
 
     z = F.sqrt(F.col("chi2") / 2.0)
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     pv = chi.select("s_nationkey", "a", "b", "chi2",
-                    F.round(erfc, 8).alias("p_value"))
+                    F.round(erfc(z), 8).alias("p_value"))
 
     from pyspark.sql import Window
     w_rank = Window.orderBy("p_value", "s_nationkey")

@@ -28,14 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 
 # ------------------------------- isotonic calibration (minimax PAV)
@@ -187,9 +182,7 @@ def eval_isotonic_calibration(spark, sf_dir):
         FROM terms
     )
     SELECT o1 AS observed_g1, e1 AS expected_g1, v AS variance, chi2,
-           round((SELECT {_AS_ERFC} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                   (SELECT sqrt(chi2 / 2.0) AS z))), 8) AS p_value
+           round({erfc_sql('sqrt(chi2 / 2.0)')}, 8) AS p_value
     FROM stat
 """)
 def stats_log_rank(spark, sf_dir):
@@ -257,15 +250,10 @@ def stats_log_rank(spark, sf_dir):
         F.round(F.col("v_u") / 1e6, 6).alias("v"),
         F.round(dev * dev / (F.col("v_u") / 1e6), 6).alias("chi2"))
     z = F.sqrt(F.col("chi2") / 2.0)
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return stat.select(F.col("o1").alias("observed_g1"),
                        F.col("e1").alias("expected_g1"),
                        F.col("v").alias("variance"), "chi2",
-                       F.round(erfc, 8).alias("p_value"))
+                       F.round(erfc(z), 8).alias("p_value"))
 
 
 # --------------------------------------------------- max drawdown

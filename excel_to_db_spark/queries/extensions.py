@@ -26,7 +26,7 @@ from ..operators import similarity as S
 from ..operators import text as X
 from ..streaming import run_tumbling_stream, session_agg, tumbling_agg
 from ..numerics import cents_sum as _cents_sum
-from .registry import REGISTRY, query
+from .registry import REGISTRY, query, scratch_dir
 from .relational import T
 
 EMB_DIM = 64  # embeddings.embedding is list<float>[64] (TESTDATA.md)
@@ -1095,14 +1095,13 @@ def stream_custom_sink(spark, sf_dir):
     aggregated. The round trip through the sink must equal DuckDB over
     the original parquet — proving the staged/committed output is
     complete and duplicate-free."""
-    import tempfile
 
     from ..sources.stream_sink import CsvCommitLogDataSource, read_committed
     from ..streaming import replay
 
     spark.dataSource.register(CsvCommitLogDataSource)
-    out = tempfile.mkdtemp(prefix="e2db_csvlog_")
-    ckpt = tempfile.mkdtemp(prefix="e2db_csvlog_ckpt_")
+    out = scratch_dir("csvlog")
+    ckpt = scratch_dir("csvlog_ckpt")
     writer = (replay.events_stream_reader(spark, sf_dir)
               .filter(F.col("value") > 5.0)
               .select("event_id", "event_type", "value")

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
 
@@ -340,12 +341,6 @@ def price_index_fisher(spark, sf_dir):
 
 # --------------------------------------------------- Yuen trimmed t
 
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
 
 def _yuen_side_sql(grp: str) -> str:
     """Per-group trimmed mean + winsorized SS from the value
@@ -440,9 +435,7 @@ def _yuen_side_sql(grp: str) -> str:
         FROM aw, bw
     )
     SELECT n1, n2, tmean1, tmean2, t,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(tt.t) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(tt.t) / sqrt(2.0)')}, 8)
                AS p_approx
     FROM tt
 """)
@@ -527,10 +520,5 @@ def stats_yuen_t(spark, sf_dir):
         "n1", "n2", tm1.alias("tmean1"), tm2.alias("tmean2"),
         F.round((tm1 - tm2) / F.sqrt(d1 + d2), 5).alias("t"))
     z = F.abs(F.col("t")) / F.sqrt(F.lit(2.0))
-    t_ = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t_ + (-0.284496736) * t_ * t_
-             + 1.421413741 * t_ * t_ * t_
-             + (-1.453152027) * t_ * t_ * t_ * t_
-             + 1.061405429 * t_ * t_ * t_ * t_ * t_) * F.exp(-z * z))
     return tt.select("n1", "n2", "tmean1", "tmean2", "t",
-                     F.round(erfc, 8).alias("p_approx"))
+                     F.round(erfc(z), 8).alias("p_approx"))

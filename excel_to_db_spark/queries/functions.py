@@ -431,11 +431,11 @@ def filter_glob(spark, sf_dir):
     gate. DuckDB has GLOB natively, so the oracle states both spellings."""
     from ..compat.sqlite_dialect import rewrite
 
-    T(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(rewrite(
-        "SELECT p_partkey, p_name FROM part "
+        "SELECT p_partkey, p_name FROM {part} "
         "WHERE p_name LIKE '%bolt%' AND p_name GLOB 'blue*'",
-        sqlite_compat=True).replace("ILIKE", "LIKE"))
+        sqlite_compat=True).replace("ILIKE", "LIKE"),
+        part=T(spark, sf_dir, "part"))
 
 
 @query("json_kv_explode", oracle="""
@@ -504,14 +504,13 @@ def date_strftime_compat(spark, sf_dir):
     same values directly — three engines, one answer."""
     from ..compat.sqlite_dialect import rewrite
 
-    T(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(rewrite(
         "SELECT o_orderkey, "
         "strftime('%Y-%m', o_orderdate) AS ym, "
         "strftime('%j', o_orderdate) AS doy, "
         "strftime('%s', o_orderdate) AS epoch_s "
-        "FROM orders WHERE o_orderkey < 1000",
-        sqlite_compat=True))
+        "FROM {orders} WHERE o_orderkey < 1000",
+        sqlite_compat=True), orders=T(spark, sf_dir, "orders"))
 
 
 @query("udtf_chunks", oracle="""
@@ -588,12 +587,10 @@ def udtf_lateral(spark, sf_dir):
                        hashlib.md5(" ".join(chunk).encode()).hexdigest())
 
     spark.udtf.register("chunk_doc", ChunkDoc)
-    (T(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
-     .createOrReplaceTempView("documents_u"))
     return spark.sql("""
         SELECT d.doc_id, c.chunk_id, c.n_tok, c.chunk_md5
-        FROM documents_u d, LATERAL chunk_doc(d.text) c
-    """)
+        FROM {docs} d, LATERAL chunk_doc(d.text) c
+    """, docs=T(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50))
 
 
 @query("map_in_arrow", oracle="""
@@ -837,12 +834,10 @@ def udtf_arrow(spark, sf_dir):
                        hashlib.md5(" ".join(chunk).encode()).hexdigest())
 
     spark.udtf.register("chunk_doc_arrow", ChunkDocArrow)
-    (T(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
-     .createOrReplaceTempView("documents_ua"))
     return spark.sql("""
         SELECT d.doc_id, c.chunk_id, c.n_tok, c.chunk_md5
-        FROM documents_ua d, LATERAL chunk_doc_arrow(d.text) c
-    """)
+        FROM {docs} d, LATERAL chunk_doc_arrow(d.text) c
+    """, docs=T(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50))
 
 
 # ------------------------------------------------ map-column HOFs

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import h32
+from ..numerics import erfc, erfc_sql, h32
 from .registry import query
 from .relational import T
 
@@ -374,12 +374,6 @@ def eval_avg_precision(spark, sf_dir):
 
 # ------------------------------------------------ McNemar paired test
 
-_MCN_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
 
 @query("stats_mcnemar", oracle=f"""
     WITH rated AS (
@@ -412,9 +406,7 @@ _MCN_ERFC = """
            round(correct_a * 1.0 / n, 6) AS acc_a,
            round(correct_b * 1.0 / n, 6) AS acc_b,
            chi2,
-           round((SELECT {_MCN_ERFC} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                   (SELECT sqrt(chi2 / 2.0) AS z))), 8) AS p_value
+           round({erfc_sql('sqrt(chi2 / 2.0)')}, 8) AS p_value
     FROM stat
 """)
 def stats_mcnemar(spark, sf_dir):
@@ -458,14 +450,9 @@ def stats_mcnemar(spark, sf_dir):
         "chi2", F.round((dd - 1.0) * (dd - 1.0)
                         / (F.col("b01") + F.col("b10")), 6))
     z = F.sqrt(F.col("chi2") / 2.0)
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return stat.select(
         "n", "correct_a", "correct_b", "b01", "b10",
         F.round(F.col("correct_a") * 1.0 / F.col("n"), 6).alias("acc_a"),
         F.round(F.col("correct_b") * 1.0 / F.col("n"), 6).alias("acc_b"),
         "chi2",
-        F.round(erfc, 8).alias("p_value"))
+        F.round(erfc(z), 8).alias("p_value"))

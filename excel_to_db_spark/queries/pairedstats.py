@@ -32,14 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
 from .registry import query
 from .relational import T
 
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 # Paired daily series: click-vs-view revenue cents per day, pairs kept
 # only when BOTH arms traded that day (classic matched-pairs framing).
@@ -90,9 +86,7 @@ def _pairs(spark, sf_dir):
         FROM st
     )
     SELECT n_pairs, n_pos, n_neg, z,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT z / sqrt(2.0) AS z2))), 8) AS p_value
+           round({erfc_sql('z / sqrt(2.0)')}, 8) AS p_value
     FROM zz
 """)
 def stats_sign_test(spark, sf_dir):
@@ -121,13 +115,8 @@ def stats_sign_test(spark, sf_dir):
                 / F.sqrt((F.col("n_pos") + F.col("n_neg"))
                          .cast("double")), 5).alias("z"))
     z = F.col("z") / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return zz.select("n_pairs", "n_pos", "n_neg", "z",
-                     F.round(erfc, 8).alias("p_value"))
+                     F.round(erfc(z), 8).alias("p_value"))
 
 
 # ---------------------------------------- Wilcoxon signed-rank test
@@ -165,9 +154,7 @@ def stats_sign_test(spark, sf_dir):
         FROM st
     )
     SELECT n, w_plus, z,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(z) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(z) / sqrt(2.0)')}, 8)
                AS p_value
     FROM zz
 """)
@@ -213,13 +200,8 @@ def stats_wilcoxon_signed_rank(spark, sf_dir):
                                  * (2 * F.col("n") + 1))
                           - F.col("tsum")) / 12.0), 5).alias("z"))
     z = F.abs(F.col("z")) / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return zz.select("n", "w_plus", "z",
-                     F.round(erfc, 8).alias("p_value"))
+                     F.round(erfc(z), 8).alias("p_value"))
 
 
 # --------------------------------------------------- Cochran's Q
@@ -262,12 +244,7 @@ def stats_wilcoxon_signed_rank(spark, sf_dir):
         FROM st
     )
     SELECT n_blocks, k, q_stat,
-           round(0.5 * (SELECT {_AS_ERFC_SQL} FROM
-                 (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                  (SELECT (pow(q_stat / (k - 1), 1.0 / 3.0)
-                           - (1.0 - 2.0 / (9.0 * (k - 1))))
-                          / sqrt(2.0 / (9.0 * (k - 1))) / sqrt(2.0)
-                       AS z))), 8) AS p_value
+           round({chi2_sf_sql('q_stat', '(k - 1)')}, 8) AS p_value
     FROM qq
 """)
 def stats_cochran_q(spark, sf_dir):
@@ -315,17 +292,10 @@ def stats_cochran_q(spark, sf_dir):
                    - F.col("nn") * F.col("nn")).cast("double")
                 / (F.col("k") * F.col("nn")
                    - F.col("sr2")).cast("double"), 5).alias("q_stat"))
-    f = (F.col("k") - 1).cast("double")
-    z = ((F.pow(F.col("q_stat") / f, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * f)))
-         / F.sqrt(2.0 / (9.0 * f)) / F.sqrt(F.lit(2.0)))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return qq.select("n_blocks", "k", "q_stat",
-                     F.round(0.5 * erfc, 8).alias("p_value"))
+                     F.round(chi2_sf(F.col("q_stat"),
+                                     (F.col("k") - 1).cast("double")), 8)
+                     .alias("p_value"))
 
 
 # --------------------------------------------------- Fleiss' kappa

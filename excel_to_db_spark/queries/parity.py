@@ -13,7 +13,6 @@ output IS a fixed golden table.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField, StructType)
@@ -22,7 +21,7 @@ from ..ingest import load_excel_table
 from ..sinks.csv_sink import export_csv
 from ..sinks.display import collect_formatted
 from ..numerics import cents_sum as _cents_sum
-from .registry import query
+from .registry import query, scratch_dir
 
 DEMO_XLSX = "/root/reference/demo.xlsx"
 if not os.path.exists(DEMO_XLSX):
@@ -90,7 +89,7 @@ def csv_export(spark, sf_dir):
     df = (load_excel_table(spark, DEMO_XLSX)
           .orderBy("service_name")
           .select("service_name", "count"))
-    path = os.path.join(tempfile.mkdtemp(prefix="e2db_csv_"), "out.csv")
+    path = os.path.join(scratch_dir("csv"), "out.csv")
     export_csv(df, path)
     with open(path) as fh:
         lines = [ln.rstrip("\n") for ln in fh]
@@ -136,11 +135,10 @@ def sink_parquet_partitioned(spark, sf_dir):
     PartitionFilters level — no row of the other types is decoded
     (asserted in tests/test_repl_sinks.py::test_partitioned_sink_prunes)."""
     import shutil
-    import tempfile
 
     from ..tables import load_table
 
-    out = tempfile.mkdtemp(prefix="e2db_part_")
+    out = scratch_dir("part")
     shutil.rmtree(out)
     (load_table(spark, sf_dir, "events")
      .write.mode("overwrite").partitionBy("event_type").parquet(out))

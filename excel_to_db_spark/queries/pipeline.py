@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import fixed_sum
+from ..numerics import fixed_sum, h32
 from .registry import query
 from .relational import T
 
@@ -290,8 +290,7 @@ def sample_stratified(spark, sf_dir):
     training-data pipeline needs for resumable, auditable subsampling.
     Per-source counts make it a stratification report."""
     d = T(spark, sf_dir, "documents")
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                     16, 10).cast("bigint") % 10)
+    bucket = h32(F.col("doc_id").cast("string")) % 10
     return (d.filter(bucket < 3)
             .groupBy("source")
             .agg(F.count("*").alias("n_sampled"),
@@ -390,8 +389,7 @@ def sample_rebalance(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     rate10 = (F.when(F.col("lang") == "en", 3)
                .when(F.col("lang") == "zh", 10).otherwise(8))
-    bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                     16, 10).cast("bigint") % 10)
+    bucket = h32(F.col("doc_id").cast("string")) % 10
     return (d.filter(bucket < rate10)
             .groupBy("lang")
             .agg(F.count("*").alias("n_kept"),

@@ -32,22 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
-
-def _as_erfc(z):
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    return ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
 
 
 # ---------------------------------------------- Dunn pairwise post-hoc
@@ -92,10 +79,7 @@ def _as_erfc(z):
     ),
     withp AS (
         SELECT grp_a, grp_b, z,
-               round((SELECT {_AS_ERFC_SQL} FROM
-                      (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t,
-                              z2 AS z
-                       FROM (SELECT abs(z) / sqrt(2.0) AS z2))), 8)
+               round({erfc_sql('abs(z) / sqrt(2.0)')}, 8)
                    AS p_value
         FROM pairs
     )
@@ -150,7 +134,7 @@ def stats_dunn_posthoc(spark, sf_dir):
                   / (12.0 * (F.col("n") - 1)))
                  * (1.0 / F.col("na") + 1.0 / F.col("nb"))), 5)
     zz = pairs.select("grp_a", "grp_b", z.alias("z"))
-    p = F.round(_as_erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
+    p = F.round(erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
     return zz.select(
         "grp_a", "grp_b", "z", p.alias("p_value"),
         F.least(F.lit(1.0), F.round(10.0 * p, 8)).alias("p_bonferroni"))
@@ -312,10 +296,8 @@ def stats_nelson_aalen(spark, sf_dir):
         FROM fit
     )
     SELECT n, f_stat,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT sqrt(greatest(f_stat, 0.0) / 2.0)
-                         AS z2))), 8) AS p_approx
+           round({erfc_sql('sqrt(greatest(f_stat, 0.0) / 2.0)')}, 8)
+               AS p_approx
     FROM ff
 """)
 def ts_granger_causality(spark, sf_dir):
@@ -391,8 +373,8 @@ def ts_granger_causality(spark, sf_dir):
         .alias("f_stat"))
     return ff.select(
         "n", "f_stat",
-        F.round(_as_erfc(F.sqrt(F.greatest(F.col("f_stat"),
-                                           F.lit(0.0)) / 2.0)), 8)
+        F.round(erfc(F.sqrt(F.greatest(F.col("f_stat"),
+                                       F.lit(0.0)) / 2.0)), 8)
         .alias("p_approx"))
 
 

@@ -30,22 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
-
-def _as_erfc(z):
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    return ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
 
 
 # ------------------------------------------ Cochran-Armitage trend
@@ -99,9 +86,7 @@ def _as_erfc(z):
         FROM st
     )
     SELECT nn AS n, z,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(zz.z) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(zz.z) / sqrt(2.0)')}, 8)
                AS p_value
     FROM zz
 """)
@@ -169,7 +154,7 @@ def stats_cochran_armitage(spark, sf_dir):
     zz = st.select(F.col("nn").alias("n"), z.alias("z"))
     return zz.select(
         "n", "z",
-        F.round(_as_erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
+        F.round(erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
         .alias("p_value"))
 
 

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window as W
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum as _cents_sum, h32
 from .registry import query
 from .relational import T
 
@@ -533,8 +533,7 @@ def sketch_count_min(spark, sf_dir):
     e = T(spark, sf_dir, "events")
 
     def hb(col):
-        return (F.conv(F.substring(F.md5(F.col(col).cast("string")),
-                                   1, 8), 16, 10).cast("bigint"))
+        return h32(F.col(col).cast("string"))
 
     def cells(hcol):
         return F.posexplode(F.array(*[

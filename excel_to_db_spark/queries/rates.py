@@ -30,22 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
-
-
-def _as_erfc(z):
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    return ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
 
 
 # ------------------------------------------ Poisson two-rate test
@@ -71,9 +58,7 @@ def _as_erfc(z):
                AS rr_lo,
            round(exp(ln(CAST(c1 AS DOUBLE) / c2) + 1.96 * se), 6)
                AS rr_hi,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(z) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(z) / sqrt(2.0)')}, 8)
                AS p_value
     FROM zz
 """)
@@ -110,7 +95,7 @@ def stats_poisson_two_rate(spark, sf_dir):
         "c1", "c2", "rate_ratio", "z",
         F.round(F.exp(F.col("lo_ln")), 6).alias("rr_lo"),
         F.round(F.exp(F.col("hi_ln")), 6).alias("rr_hi"),
-        F.round(_as_erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
+        F.round(erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
         .alias("p_value"))
 
 
@@ -155,9 +140,7 @@ _CONV_SQL = """
            round((p1 - p2)
                  + 1.96 * sqrt(p1 * (1.0 - p1) / n1
                                + p2 * (1.0 - p2) / n2), 6) AS diff_hi,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(z) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(z) / sqrt(2.0)')}, 8)
                AS p_value
     FROM zz
 """)
@@ -215,7 +198,7 @@ def stats_two_prop_z(spark, sf_dir):
         .alias("diff_lo"),
         F.round((F.col("p1") - F.col("p2")) + 1.96 * sediff, 6)
         .alias("diff_hi"),
-        F.round(_as_erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
+        F.round(erfc(F.abs(F.col("z")) / F.sqrt(F.lit(2.0))), 8)
         .alias("p_value"))
 
 

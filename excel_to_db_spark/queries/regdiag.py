@@ -32,14 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
 
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 # Daily order revenue (cents) with a 0-based day index off the
 # calendar-bounded spine — the shared base for the OLS diagnostics.
@@ -431,9 +427,7 @@ def ml_ridge_path(spark, sf_dir):
         FROM am
     )
     SELECT n, lm_stat,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT sqrt(lm_stat / 2.0) AS z2))), 8)
+           round({erfc_sql('sqrt(lm_stat / 2.0)')}, 8)
                AS p_value
     FROM lm
 """)
@@ -494,10 +488,5 @@ def stats_breusch_pagan(spark, sf_dir):
                       - F.col("sv").cast(d38) * F.col("sv"))
                    .cast("double")), 4).alias("lm_stat"))
     z = F.sqrt(F.col("lm_stat") / 2.0)
-    t_ = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t_ + (-0.284496736) * t_ * t_
-             + 1.421413741 * t_ * t_ * t_
-             + (-1.453152027) * t_ * t_ * t_ * t_
-             + 1.061405429 * t_ * t_ * t_ * t_ * t_) * F.exp(-z * z))
     return lm.select("n", "lm_stat",
-                     F.round(erfc, 8).alias("p_value"))
+                     F.round(erfc(z), 8).alias("p_value"))

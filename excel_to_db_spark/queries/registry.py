@@ -15,6 +15,10 @@ vs Spark INT).
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -50,3 +54,18 @@ def query(name: str, oracle: str | None = None):
 
 def oracle_sqls() -> dict[str, str]:
     return {k: v.oracle for k, v in REGISTRY.items() if v.oracle is not None}
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="e2db_run_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory ``e2db_<prefix>_*`` for the files a key writes
+    and reads back. The returned frames read these files lazily, so no
+    directory goes while the process runs: all of them live under one
+    per-process root, made on first use and removed at exit."""
+    return tempfile.mkdtemp(prefix=f"e2db_{prefix}_", dir=_scratch_root())

@@ -514,19 +514,18 @@ def cte_query(spark, sf_dir):
     pipeline as integer cents end to end (SURVEY §4.3): the per-customer
     totals AND the segment average are exact until the final 4dp round,
     so no summation order on either engine can flip the hash."""
-    for t in ("orders", "customer"):
-        T(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql("""
         WITH cust_orders AS (
             SELECT o_custkey, count(*) AS n_orders,
                    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS spent_cents
-            FROM orders GROUP BY o_custkey
+            FROM {orders} GROUP BY o_custkey
         )
         SELECT c.c_mktsegment, count(*) AS n_cust,
                round(sum(co.spent_cents) / count(*) / 100.0, 4) AS avg_spent
-        FROM customer c JOIN cust_orders co ON c.c_custkey = co.o_custkey
+        FROM {customer} c JOIN cust_orders co ON c.c_custkey = co.o_custkey
         GROUP BY c.c_mktsegment
-    """)
+    """, orders=T(spark, sf_dir, "orders"),
+        customer=T(spark, sf_dir, "customer"))
 
 
 @query("cte_recursive", oracle="""
@@ -553,11 +552,10 @@ def cte_recursive(spark, sf_dir):
 """)
 def subquery_scalar(spark, sf_dir):
     """Uncorrelated scalar subquery as a filter bound (one extra job)."""
-    T(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql("""
-        SELECT count(*) AS n_above FROM orders
-        WHERE o_totalprice > (SELECT avg(o_totalprice) * 1.5 FROM orders)
-    """)
+        SELECT count(*) AS n_above FROM {orders}
+        WHERE o_totalprice > (SELECT avg(o_totalprice) * 1.5 FROM {orders})
+    """, orders=T(spark, sf_dir, "orders"))
 
 
 @query("subquery_correlated", oracle="""
@@ -568,12 +566,11 @@ def subquery_scalar(spark, sf_dir):
 def subquery_correlated(spark, sf_dir):
     """Correlated scalar subquery; Catalyst decorrelates it into an
     aggregate + join (SQLite re-executes per row — O(n^2))."""
-    T(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql("""
-        SELECT c_custkey FROM customer c
-        WHERE c_acctbal > (SELECT 2 * avg(c2.c_acctbal) FROM customer c2
+        SELECT c_custkey FROM {customer} c
+        WHERE c_acctbal > (SELECT 2 * avg(c2.c_acctbal) FROM {customer} c2
                            WHERE c2.c_nationkey = c.c_nationkey)
-    """)
+    """, customer=T(spark, sf_dir, "customer"))
 
 
 @query("window_frame_range", oracle="""
@@ -696,15 +693,14 @@ def agg_grouping_sets(spark, sf_dir):
     """Explicit GROUPING SETS with grouping() markers (the only way to
     tell a real NULL group key from a rollup placeholder). Expressed via
     the SQL passthrough — the DataFrame API exposes only cube/rollup."""
-    T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
     return spark.sql("""
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2) AS sum_qty,
                CAST(grouping(l_returnflag) AS INT) AS g_flag,
                CAST(grouping(l_linestatus) AS INT) AS g_status
-        FROM lineitem_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """)
+    """, lineitem=T(spark, sf_dir, "lineitem"))
 
 
 @query("window_cume", oracle="""

@@ -183,18 +183,17 @@ def lateral_topn(spark, sf_dir):
     same plan the explicit window rewrite produces, so the nested-loop
     the SQL text implies never executes. Tie-break on l_linenumber makes
     the 2-row cut deterministic."""
-    T(spark, sf_dir, "orders").createOrReplaceTempView("orders_lv")
-    T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_lv")
     return spark.sql("""
         SELECT o.o_orderkey, l.l_linenumber, l.l_extendedprice
-        FROM orders_lv o,
+        FROM {orders} o,
              LATERAL (SELECT l_linenumber, l_extendedprice
-                      FROM lineitem_lv
+                      FROM {lineitem}
                       WHERE l_orderkey = o.o_orderkey
                       ORDER BY l_extendedprice DESC, l_linenumber
                       LIMIT 2) l
         WHERE o.o_totalprice > 450000
-    """)
+    """, orders=T(spark, sf_dir, "orders"),
+        lineitem=T(spark, sf_dir, "lineitem"))
 
 
 # --------------------------------------------------------------- map columns

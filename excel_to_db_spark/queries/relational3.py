@@ -49,17 +49,16 @@ def anti_join_nulls(spark, sf_dir):
     variant is the one to avoid unless the probe is provably NOT NULL.
     SQLite passthrough (reference src/main.rs:220) follows the same
     standard semantics."""
-    for t in ("orders", "customer"):
-        T(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql("""
-        WITH probe AS (SELECT nullif(o_custkey % 97, 7) AS k FROM orders)
+        WITH probe AS (SELECT nullif(o_custkey % 97, 7) AS k FROM {orders})
         SELECT
-          (SELECT count(*) FROM customer
+          (SELECT count(*) FROM {customer}
             WHERE c_custkey NOT IN (SELECT k FROM probe))  AS not_in_cnt,
-          (SELECT count(*) FROM customer c
+          (SELECT count(*) FROM {customer} c
             WHERE NOT EXISTS (SELECT 1 FROM probe p
                               WHERE p.k = c.c_custkey))    AS not_exists_cnt
-    """)
+    """, orders=T(spark, sf_dir, "orders"),
+        customer=T(spark, sf_dir, "customer"))
 
 
 @query("join_null_safe", oracle="""

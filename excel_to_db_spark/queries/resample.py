@@ -36,15 +36,10 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import erfc, erfc_sql, h32
 
 _H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
 
-_AS_ERFC_SQL = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 _BB_L = 30          # block length (days)
 _BB_B = 99          # bootstrap replicates
@@ -235,9 +230,7 @@ def ts_block_bootstrap(spark, sf_dir):
         FROM zz
     )
     SELECT n1, n2, r1, r2, z,
-           round((SELECT {_AS_ERFC_SQL} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z2) AS t, z2 AS z
-                   FROM (SELECT abs(tt.z) / sqrt(2.0) AS z2))), 8)
+           round({erfc_sql('abs(tt.z) / sqrt(2.0)')}, 8)
                AS p_value
     FROM tt
 """)
@@ -298,13 +291,8 @@ def stats_fisher_z_test(spark, sf_dir):
                 / F.sqrt(1.0 / (F.col("n1") - 3)
                          + 1.0 / (F.col("n2") - 3)), 5).alias("z"))
     z = F.abs(F.col("z")) / F.sqrt(F.lit(2.0))
-    t_ = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t_ + (-0.284496736) * t_ * t_
-             + 1.421413741 * t_ * t_ * t_
-             + (-1.453152027) * t_ * t_ * t_ * t_
-             + 1.061405429 * t_ * t_ * t_ * t_ * t_) * F.exp(-z * z))
     return tt.select("n1", "n2", "r1", "r2", "z",
-                     F.round(erfc, 8).alias("p_value"))
+                     F.round(erfc(z), 8).alias("p_value"))
 
 
 # --------------------------------------------- post-stratification

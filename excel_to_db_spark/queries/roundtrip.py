@@ -19,13 +19,13 @@ that it ran:
 
 from __future__ import annotations
 
+import os
 import sqlite3
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from .registry import query
+from .registry import query, scratch_dir
 from .relational import T
 
 
@@ -52,7 +52,7 @@ def sqlite_roundtrip(spark, sf_dir):
                 F.round(F.sum(F.expr(
                     "CAST(round(o_totalprice * 100) AS BIGINT)")) / 100.0, 2)
                 .alias("revenue")))
-    path = tempfile.mktemp(prefix="e2db_sqlite_", suffix=".db")
+    path = os.path.join(scratch_dir("sqlite"), "sqlite.db")
     write_sqlite(agg, path, table="order_revenue",
                  unique_key="o_orderpriority")
     con = sqlite3.connect(path)
@@ -84,7 +84,7 @@ def csv_roundtrip(spark, sf_dir):
     cross the text hop via Spark's default ISO instant format; doubles
     via shortest-round-trip rendering, pre-rounded to 2dp so the text is
     a short exact decimal on both engines."""
-    out = tempfile.mkdtemp(prefix="e2db_csvrt_")
+    out = scratch_dir("csvrt")
     (T(spark, sf_dir, "orders")
      .filter(F.col("o_orderkey") % 250 == 0)
      .select("o_orderkey", "o_orderstatus",
@@ -116,7 +116,7 @@ def jsonl_roundtrip(spark, sf_dir):
     The double sum accumulates in integer cents (SURVEY §4.3) so the
     result does not depend on partial-aggregation order — JSON renders
     doubles shortest-round-trip, so cents survive the text hop exactly."""
-    out = tempfile.mkdtemp(prefix="e2db_jsonrt_")
+    out = scratch_dir("jsonrt")
     (T(spark, sf_dir, "events")
      .select("event_id", "user_id", "event_type", "value", "props")
      .write.mode("overwrite").json(out))

@@ -29,14 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import erfc, erfc_sql
 from .registry import query
 from .relational import T
-
-_AS_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 
 # ------------------------------------------------------ Wald SPRT
@@ -460,22 +455,10 @@ def ts_bollinger(spark, sf_dir):
     ),
     pv AS (
         SELECT n1, n2, diff, se, t_lower, t_upper,
-               -- A-S 7.1.26 is valid for z >= 0 only: evaluate on
-               -- |z| and reflect (Q(z) = 1 - Q(-z)) for negative z
-               round(CASE WHEN t_lower >= 0 THEN 0.5 * (SELECT {_AS_ERFC}
-                     FROM (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z
-                           FROM (SELECT t_lower / sqrt(2.0) AS z)))
-                     ELSE 1.0 - 0.5 * (SELECT {_AS_ERFC}
-                     FROM (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z
-                           FROM (SELECT -t_lower / sqrt(2.0) AS z)))
-                     END, 8) AS p_lower,
-               round(CASE WHEN t_upper <= 0 THEN 0.5 * (SELECT {_AS_ERFC}
-                     FROM (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z
-                           FROM (SELECT -t_upper / sqrt(2.0) AS z)))
-                     ELSE 1.0 - 0.5 * (SELECT {_AS_ERFC}
-                     FROM (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z
-                           FROM (SELECT t_upper / sqrt(2.0) AS z)))
-                     END, 8) AS p_upper
+               round(0.5 * {erfc_sql('t_lower / sqrt(2.0)')}, 8)
+                   AS p_lower,
+               round(0.5 * {erfc_sql('-t_upper / sqrt(2.0)')}, 8)
+                   AS p_upper
         FROM ts
     )
     SELECT n1, n2, diff, se, t_lower, t_upper, p_lower, p_upper,
@@ -533,16 +516,8 @@ def stats_tost(spark, sf_dir):
          .alias("t_upper"))
 
     def upper_tail(tstat):
-        # Q(t) = P(Z >= t); A-S 7.1.26 needs z >= 0, so evaluate on
-        # |t|/sqrt(2) and reflect for negative t (matches the oracle)
-        z = F.abs(tstat) / F.sqrt(F.lit(2.0))
-        t = 1.0 / (1.0 + 0.3275911 * z)
-        erfc = ((0.254829592 * t + (-0.284496736) * t * t
-                 + 1.421413741 * t * t * t
-                 + (-1.453152027) * t * t * t * t
-                 + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
-        return F.round(F.when(tstat >= 0, 0.5 * erfc)
-                       .otherwise(1.0 - 0.5 * erfc), 8)
+        # Q(t) = P(Z >= t) = erfc(t / sqrt(2)) / 2
+        return F.round(0.5 * erfc(tstat / F.sqrt(F.lit(2.0))), 8)
 
     pv = ts.select(
         "n1", "n2", "diff", "se", "t_lower", "t_upper",

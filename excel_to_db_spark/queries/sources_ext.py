@@ -26,13 +26,12 @@ ORIGINAL parquet, proving the hop lossless — not just that it ran.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
 from ..numerics import cents_sum as _cents_sum
-from .registry import query
+from .registry import query, scratch_dir
 from .relational import T
 
 
@@ -49,7 +48,7 @@ def xml_roundtrip(spark, sf_dir):
     streaming StAX on executors, so a directory of feeds scales like any
     other splittable-by-file source. Doubles are pre-rounded to 2dp so
     the text hop carries short exact decimals."""
-    out = tempfile.mkdtemp(prefix="e2db_xmlrt_")
+    out = scratch_dir("xmlrt")
     (T(spark, sf_dir, "orders")
      .filter(F.col("o_orderkey") % 250 == 0)
      .select("o_orderkey", "o_orderstatus",
@@ -81,7 +80,7 @@ def multimodal_binary_ingest(spark, sf_dir):
     filesystem hop intact. Metadata-only reads of a binaryFile table
     prune the content column entirely (same column-pruning contract as
     operators/multimodal.py)."""
-    out = tempfile.mkdtemp(prefix="e2db_bin_")
+    out = scratch_dir("bin")
 
     def write_part(rows):
         for r in rows:
@@ -112,7 +111,7 @@ def text_source_lines(spark, sf_dir):
     split explicitly (limit=2 so tabs in the payload would stay intact),
     and reduced to token counts + checksum the oracle recomputes from
     the original parquet. No schema inference anywhere on the hop."""
-    out = tempfile.mkdtemp(prefix="e2db_txt_")
+    out = scratch_dir("txt")
     (T(spark, sf_dir, "documents")
      .select(F.concat_ws("\t", F.col("doc_id"), F.col("text"))
              .alias("value"))
@@ -169,7 +168,7 @@ def stream_state_inspect(spark, sf_dir):
     state contents themselves."""
     from ..streaming import replay
 
-    ckpt = tempfile.mkdtemp(prefix="e2db_state_")
+    ckpt = scratch_dir("state")
     counts = (replay.events_stream_reader(spark, sf_dir)
               .groupBy("event_type")
               .agg(F.count("*").alias("n_events"),
@@ -205,7 +204,7 @@ def json_malformed_handling(spark, sf_dir):
     counts and the cents-exact good-rows sum from the original parquet.
     (DROPMALFORMED/FAILFAST are the same scan with a different policy
     knob.)"""
-    out = tempfile.mkdtemp(prefix="e2db_badjson_")
+    out = scratch_dir("badjson")
     ev = (T(spark, sf_dir, "events")
           .select("event_id",
                   F.to_json(F.struct("event_id", "event_type", "value"))
@@ -245,8 +244,8 @@ def stream_foreachbatch(spark, sf_dir):
     query on the original parquet (the oracle)."""
     from ..streaming import replay
 
-    out = tempfile.mkdtemp(prefix="e2db_feb_")
-    ckpt = tempfile.mkdtemp(prefix="e2db_feb_ckpt_")
+    out = scratch_dir("feb")
+    ckpt = scratch_dir("feb_ckpt")
 
     def write_batch(df, epoch_id: int) -> None:
         (df.filter(F.col("value") > 2.0)
@@ -284,7 +283,7 @@ def csv_malformed_handling(spark, sf_dir):
     same vectorized scan — no extra pass, no driver involvement, and
     the corrupt-rows side can be routed to a quarantine sink with one
     filter."""
-    out = tempfile.mkdtemp(prefix="e2db_badcsv_")
+    out = scratch_dir("badcsv")
     ev = (T(spark, sf_dir, "events")
           .select("event_id", "event_type",
                   F.when(F.col("event_id") % 10 == 0, F.lit("oops"))

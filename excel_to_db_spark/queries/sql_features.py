@@ -14,12 +14,11 @@ DuckDB oracle: the FEATURE is Spark-side, the ANSWER is engine-neutral.
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
 
-from .registry import query
+from .registry import query, scratch_dir
 from .relational import T
 
 
@@ -37,20 +36,19 @@ def sql_parameterized(spark, sf_dir):
     the plan, so constant folding and parquet filter pushdown see the
     VALUE (the pushed filter is identical to a hand-inlined literal);
     the plan is cacheable by parameter shape."""
-    name = f"orders_{uuid.uuid4().hex[:8]}"
-    T(spark, sf_dir, "orders").createOrReplaceTempView(name)
     return spark.sql(
-        f"""
+        """
         SELECT o_orderstatus, count(*) AS n,
                -- 100.0 parses as DECIMAL(3,1) in Spark SQL, so the
                -- division result is DECIMAL; CAST back to the DOUBLE
                -- type class the driver's DuckDB fetch produces.
                CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                           / 100.0, 2) AS DOUBLE) AS sum_price
-        FROM {name} WHERE o_totalprice > :thr AND o_orderpriority = :pri
+        FROM {orders} WHERE o_totalprice > :thr AND o_orderpriority = :pri
         GROUP BY o_orderstatus
         """,
-        args={"thr": 200000.0, "pri": "1-URGENT"})
+        args={"thr": 200000.0, "pri": "1-URGENT"},
+        orders=T(spark, sf_dir, "orders"))
 
 
 @query("sql_scripting", oracle="""
@@ -79,12 +77,7 @@ def sql_scripting(spark, sf_dir):
     zero data movement beyond a count,
     driver holds two BIGINTs. Bisection over integers is exact, so both
     engines name the identical cent value."""
-    name = f"oc_{uuid.uuid4().hex[:8]}"
-    (T(spark, sf_dir, "orders")
-     .select(F.round(F.col("o_totalprice") * 100).cast("bigint")
-             .alias("c"))
-     .createOrReplaceTempView(name))
-    return spark.sql(f"""
+    return spark.sql("""
         BEGIN
           DECLARE lo BIGINT DEFAULT 0;
           DECLARE hi BIGINT DEFAULT 0;
@@ -96,13 +89,13 @@ def sql_scripting(spark, sf_dir):
           -- median at ANY scale and bisection needs ~log2(bracket)
           -- scans instead of log2(max_cents).
           SET lo = (SELECT approx_percentile(c, 0.495, 10000)
-                    FROM {name});
+                    FROM {t});
           SET hi = (SELECT approx_percentile(c, 0.505, 10000)
-                    FROM {name});
-          SET need = (SELECT (count(*) + 1) DIV 2 FROM {name});
+                    FROM {t});
+          SET need = (SELECT (count(*) + 1) DIV 2 FROM {t});
           WHILE lo < hi DO
             SET mid = (lo + hi) DIV 2;
-            IF (SELECT count(*) FROM {name} WHERE c <= mid) >= need THEN
+            IF (SELECT count(*) FROM {t} WHERE c <= mid) >= need THEN
               SET hi = mid;
             ELSE
               SET lo = mid + 1;
@@ -112,7 +105,8 @@ def sql_scripting(spark, sf_dir):
           -- context, so cast: the driver hash-compares column types.
           SELECT CAST(round(lo / 100.0, 2) AS DOUBLE) AS median_price;
         END
-    """)
+    """, t=T(spark, sf_dir, "orders").select(
+        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")))
 
 
 @query("pandas_on_spark_agg", oracle="""
@@ -168,7 +162,7 @@ def join_dpp_pruned(spark, sf_dir):
     partition filters. The write-once partitioned layout is the same
     one sink_parquet_partitioned exercises; here it feeds the pruned
     read."""
-    out = tempfile.mkdtemp(prefix="e2db_dpp_")
+    out = scratch_dir("dpp")
     (T(spark, sf_dir, "orders")
      .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out))
     fact = spark.read.parquet(out)
@@ -233,20 +227,18 @@ def sql_declared_udf(spark, sf_dir):
     reference's engine has no CREATE FUNCTION at all."""
     cents_fn = f"cents_{uuid.uuid4().hex[:8]}"
     urg_fn = f"urg_{uuid.uuid4().hex[:8]}"
-    name = f"ord_{uuid.uuid4().hex[:8]}"
     spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {cents_fn}(x DOUBLE) "
               f"RETURNS BIGINT RETURN CAST(round(x * 100) AS BIGINT)")
     spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {urg_fn}(p STRING) "
               f"RETURNS INT RETURN CAST(substr(p, 1, 1) AS INT)")
-    T(spark, sf_dir, "orders").createOrReplaceTempView(name)
     return spark.sql(f"""
         SELECT {urg_fn}(o_orderpriority) AS urgency, count(*) AS n,
                -- CAST: bigint / DECIMAL-literal 100.0 is DECIMAL in
                -- Spark SQL; the oracle side fetches DOUBLE.
                CAST(round(sum({cents_fn}(o_totalprice)) / 100.0, 2)
                     AS DOUBLE) AS sum_price
-        FROM {name} GROUP BY {urg_fn}(o_orderpriority)
-    """)
+        FROM {{orders}} GROUP BY {urg_fn}(o_orderpriority)
+    """, orders=T(spark, sf_dir, "orders"))
 
 
 @query("string_collation_group", oracle="""
@@ -267,21 +259,19 @@ def string_collation_group(spark, sf_dir):
     the oracle expresses the same semantics with lower() since DuckDB's
     collation names differ. Output canonicalizes to lowercase so both
     engines name groups identically."""
-    name = f"mixed_{uuid.uuid4().hex[:8]}"
-    (T(spark, sf_dir, "orders")
-     .select(F.when(F.col("o_orderkey") % 2 == 0,
-                    F.upper("o_orderpriority"))
-             .otherwise(F.lower("o_orderpriority"))
-             .alias("o_orderpriority"))
-     .createOrReplaceTempView(name))
+    mixed = (T(spark, sf_dir, "orders")
+             .select(F.when(F.col("o_orderkey") % 2 == 0,
+                            F.upper("o_orderpriority"))
+                     .otherwise(F.lower("o_orderpriority"))
+                     .alias("o_orderpriority")))
     # Collation propagates through lower(): without the cast the output
     # column is typed string COLLATE UTF8_LCASE, a type the external
     # driver's canonicalizer may not normalize.
-    return spark.sql(f"""
+    return spark.sql("""
         SELECT CAST(lower(pri) AS STRING) AS pri_ci, count(*) AS n FROM (
-            SELECT o_orderpriority COLLATE UTF8_LCASE AS pri FROM {name}
+            SELECT o_orderpriority COLLATE UTF8_LCASE AS pri FROM {mixed}
         ) GROUP BY pri
-    """).select("pri_ci", "n")
+    """, mixed=mixed).select("pri_ci", "n")
 
 
 @query("sql_identifier_clause", oracle="""
@@ -304,7 +294,7 @@ def sql_identifier_clause(spark, sf_dir):
     display contract."""
     name = f"ident_{uuid.uuid4().hex[:8]}"
     T(spark, sf_dir, "orders").createOrReplaceTempView(name)
-    return spark.sql(
+    df = spark.sql(
         """
         SELECT o_orderpriority, count(*) AS n,
                round(max(IDENTIFIER(:metric)), 2) AS max_price
@@ -312,6 +302,8 @@ def sql_identifier_clause(spark, sf_dir):
         GROUP BY o_orderpriority
         """,
         args={"tbl": name, "metric": "o_totalprice"})
+    spark.catalog.dropTempView(name)  # the frame is already analysed
+    return df
 
 
 @query("ansi_try_funcs", oracle="""
@@ -372,15 +364,13 @@ def sql_pipe_syntax(spark, sf_dir):
     parser lowers pipes to the SAME logical plan as the classic form
     (filter pushdown, partial aggregation all unchanged); the oracle is
     that classic form on DuckDB."""
-    name = f"pipe_{uuid.uuid4().hex[:8]}"
-    T(spark, sf_dir, "orders").createOrReplaceTempView(name)
-    return spark.sql(f"""
-        FROM {name}
+    return spark.sql("""
+        FROM {orders}
         |> WHERE o_orderdate >= '1995-01-01'
         |> EXTEND CAST(round(o_totalprice * 100) AS BIGINT) AS cents1
         |> AGGREGATE count(*) AS n, sum(cents1) AS cents
            GROUP BY o_orderpriority
-    """)
+    """, orders=T(spark, sf_dir, "orders"))
 
 
 @query("sql_session_variables", oracle="""
@@ -408,7 +398,9 @@ def sql_session_variables(spark, sf_dir):
                 round(max(o_totalprice), 2) AS max_price
          FROM {name} WHERE o_totalprice > price_thr
          GROUP BY o_orderstatus'""")
-    return spark.sql("EXECUTE IMMEDIATE stmt")
+    df = spark.sql("EXECUTE IMMEDIATE stmt")
+    spark.catalog.dropTempView(name)  # the frame is already analysed
+    return df
 
 
 @query("sql_group_by_all", oracle="""
@@ -427,15 +419,13 @@ def sql_group_by_all(spark, sf_dir):
     byte-identical to the explicit GROUP BY, so partial aggregation
     and pushdown are unaffected. The oracle runs the same GROUP BY ALL
     on DuckDB — both dialects must infer the same keys."""
-    name = f"gba_{uuid.uuid4().hex[:8]}"
-    T(spark, sf_dir, "orders").createOrReplaceTempView(name)
-    return spark.sql(f"""
+    return spark.sql("""
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        FROM {name} WHERE o_orderdate < '1994-01-01'
+        FROM {orders} WHERE o_orderdate < '1994-01-01'
         GROUP BY ALL
-    """)
+    """, orders=T(spark, sf_dir, "orders"))
 
 
 @query("sql_group_order_all", oracle="""
@@ -460,16 +450,14 @@ def sql_group_order_all(spark, sf_dir):
     unique. Money stays in integer cents (SURVEY §4.3); the division
     result is CAST back to DOUBLE because Spark types 100.0 as
     DECIMAL(4,1) (same note as sql_parameterized)."""
-    name = f"orders_{uuid.uuid4().hex[:8]}"
-    T(spark, sf_dir, "orders").createOrReplaceTempView(name)
-    return spark.sql(f"""
+    return spark.sql("""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                           / 100.0, 2) AS DOUBLE) AS sum_price
-        FROM {name}
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-    """)
+    """, orders=T(spark, sf_dir, "orders"))
 
 
 @query("union_by_name_missing", oracle="""

@@ -30,15 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import fixed_sum, h32
+from ..numerics import chi2_sf, chi2_sf_sql, fixed_sum, h32
 from .registry import query
 from .relational import T
-
-_AS_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 
 # ------------------------------------------------------- Cramér's V
@@ -310,12 +304,7 @@ def privacy_randomized_response(spark, sf_dir):
         FROM stat
     )
     SELECT n AS n_blocks, k AS k_treatments, chi2_raw, tie_c, chi2,
-           round(0.5 * (SELECT {_AS_ERFC} FROM
-                 (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                  (SELECT (pow(chi2 / (k - 1), 1.0 / 3.0)
-                           - (1.0 - 2.0 / (9.0 * (k - 1))))
-                          / sqrt(2.0 / (9.0 * (k - 1))) / sqrt(2.0)
-                       AS z))), 8) AS p_value
+           round({chi2_sf_sql('chi2', '(k - 1)')}, 8) AS p_value
     FROM corr
 """)
 def stats_friedman(spark, sf_dir):
@@ -373,17 +362,9 @@ def stats_friedman(spark, sf_dir):
                  .alias("tie_c")))
     corr = stat.withColumn(
         "chi2", F.round(F.col("chi2_raw") / F.col("tie_c"), 6))
-    f = (F.col("k") - 1).cast("double")
-    z = ((F.pow(F.col("chi2") / f, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * f)))
-         / F.sqrt(2.0 / (9.0 * f)) / F.sqrt(F.lit(2.0)))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return corr.select(
         F.col("n").alias("n_blocks"),
         F.col("k").alias("k_treatments"),
         "chi2_raw", "tie_c", "chi2",
-        F.round(0.5 * erfc, 8).alias("p_value"))
+        F.round(chi2_sf(F.col("chi2"), (F.col("k") - 1).cast("double")), 8)
+        .alias("p_value"))

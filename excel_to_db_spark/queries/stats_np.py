@@ -28,14 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
 from .registry import REGISTRY, query
 from .relational import T
-
-_AS_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 
 # ------------------------------------------------ Kruskal-Wallis H
@@ -91,12 +86,7 @@ _AS_ERFC = """
         FROM stat
     )
     SELECT k AS k_groups, n, h_raw, tie_c, h_stat,
-           round(0.5 * (SELECT {_AS_ERFC} FROM
-                 (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                  (SELECT (pow(h_stat / (k - 1), 1.0 / 3.0)
-                           - (1.0 - 2.0 / (9.0 * (k - 1))))
-                          / sqrt(2.0 / (9.0 * (k - 1))) / sqrt(2.0)
-                       AS z))), 8) AS p_value
+           round({chi2_sf_sql('h_stat', '(k - 1)')}, 8) AS p_value
     FROM corr
 """)
 def stats_kruskal_wallis(spark, sf_dir):
@@ -153,18 +143,11 @@ def stats_kruskal_wallis(spark, sf_dir):
                            - F.col("n")), 6).alias("tie_c")))
     corr = stat.withColumn(
         "h_stat", F.round(F.col("h_raw") / F.col("tie_c"), 6))
-    f = (F.col("k") - 1).cast("double")
-    z = ((F.pow(F.col("h_stat") / f, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * f)))
-         / F.sqrt(2.0 / (9.0 * f)) / F.sqrt(F.lit(2.0)))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return corr.select(F.col("k").alias("k_groups"), "n",
                        "h_raw", "tie_c", "h_stat",
-                       F.round(0.5 * erfc, 8).alias("p_value"))
+                       F.round(chi2_sf(F.col("h_stat"),
+                                       (F.col("k") - 1).cast("double")), 8)
+                       .alias("p_value"))
 
 
 # ---------------------------------- Cochran-Mantel-Haenszel + MH OR
@@ -217,9 +200,7 @@ def stats_kruskal_wallis(spark, sf_dir):
         FROM pooled
     )
     SELECT n_strata, sum_a, e_sum, v_sum, cmh_chi2, or_mh,
-           round((SELECT {_AS_ERFC} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                   (SELECT sqrt(cmh_chi2 / 2.0) AS z))), 8) AS p_value
+           round({erfc_sql('sqrt(cmh_chi2 / 2.0)')}, 8) AS p_value
     FROM stat
 """)
 def stats_cmh_test(spark, sf_dir):
@@ -285,14 +266,9 @@ def stats_cmh_test(spark, sf_dir):
         F.round(F.col("ad_sum_u") * 1.0 / F.col("bc_sum_u"), 6)
          .alias("or_mh"))
     z = F.sqrt(F.col("cmh_chi2") / 2.0)
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return stat.select("n_strata", "sum_a", "e_sum", "v_sum",
                        "cmh_chi2", "or_mh",
-                       F.round(erfc, 8).alias("p_value"))
+                       F.round(erfc(z), 8).alias("p_value"))
 
 
 # -------------------------------------------- Youden-J ROC threshold

@@ -13,14 +13,14 @@ the layout hop, not just that it ran.
 
 from __future__ import annotations
 
-import tempfile
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from .registry import query
+from .registry import query, scratch_dir
 from .relational import T, _cents_sum
 
 
@@ -37,7 +37,7 @@ def write_bucketed(df: DataFrame, name: str, key: str, buckets: int = 8,
     join would pay per query is paid once at layout time. At 100 TB the
     same pattern is the difference between re-shuffling the fact table
     on every join and never shuffling it again."""
-    path = path or tempfile.mkdtemp(prefix=f"e2db_bkt_{name}_")
+    path = path or scratch_dir(f"bkt_{name}")
     (df.repartition(buckets, F.col(key))
        .write.mode("overwrite")
        .bucketBy(buckets, key).sortBy(key)
@@ -97,7 +97,7 @@ def orc_roundtrip(spark, sf_dir):
     to the ORC scan (ORC keeps min/max stripe stats just like parquet
     row groups, so the pushed filter skips stripes). Aggregation over
     the round-tripped copy must equal DuckDB over the original parquet."""
-    out = tempfile.mkdtemp(prefix="e2db_orcrt_")
+    out = scratch_dir("orcrt")
     (T(spark, sf_dir, "lineitem")
      .select("l_returnflag", "l_extendedprice", "l_quantity", "l_discount")
      .write.mode("overwrite").orc(out))
@@ -124,12 +124,11 @@ def excel_sink_partitioned(spark, sf_dir):
     format, not the reference's single-threaded driver parse
     (src/main.rs:49-85). Aggregation over the round trip must equal
     DuckDB over the original parquet."""
-    import tempfile as _tf
 
     from ..sources.datasource import XlsxDataSource
 
     spark.dataSource.register(XlsxDataSource)
-    out = _tf.mkdtemp(prefix="e2db_xlsx_sink_")
+    out = scratch_dir("xlsx_sink")
     (T(spark, sf_dir, "orders")
      .filter(F.col("o_orderkey") % 100 == 0)
      .select("o_orderkey", "o_orderstatus",
@@ -165,7 +164,7 @@ def excel_roundtrip(spark, sf_dir):
             .select("o_orderkey", "o_orderstatus",
                     F.round("o_totalprice", 2).alias("price"))
             .toLocalIterator())
-    path = tempfile.mktemp(prefix="e2db_xlsxrt_", suffix=".xlsx")
+    path = os.path.join(scratch_dir("xlsxrt"), "xlsxrt.xlsx")
     header = ["o_orderkey", "o_orderstatus", "price"]
     write_xlsx(path, [header] + [list(r) for r in rows])
     back = read_xlsx_rows(path)[1:]  # skip header
@@ -200,7 +199,7 @@ def dynamic_partition_overwrite(spark, sf_dir):
     full-table rewrite, and the option keeps it transactional per
     partition (Spark stages to _temporary and commits per-partition
     directories)."""
-    out = tempfile.mkdtemp(prefix="e2db_dpo_")
+    out = scratch_dir("dpo")
     base = (T(spark, sf_dir, "events")
             .select("event_id", "user_id", "value", "event_type"))
     base.write.partitionBy("event_type").mode("overwrite").parquet(out)
@@ -237,7 +236,7 @@ def federated_union(spark, sf_dir):
     per-format scans federates them without a rewrite; each branch
     keeps its own pushdown (column pruning works in all three readers,
     predicate pushdown in the columnar two)."""
-    out = tempfile.mkdtemp(prefix="e2db_fed_")
+    out = scratch_dir("fed")
     base = (T(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderstatus",
                     F.round("o_totalprice", 2).alias("o_totalprice")))
@@ -339,7 +338,7 @@ def parquet_schema_evolution(spark, sf_dir):
     a byte (same machinery as dynamic_partition_overwrite). The
     oracle recomputes the census from the ORIGINAL table — the
     round trip must be invisible."""
-    out = tempfile.mkdtemp(prefix="e2db_schevo_")
+    out = scratch_dir("schevo")
     o = T(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority",
         F.round(F.col("o_totalprice") * 100).cast("bigint")

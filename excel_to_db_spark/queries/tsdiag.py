@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import chi2_sf, chi2_sf_sql
 from .registry import query
 from .relational import T
 
@@ -331,7 +332,7 @@ def ts_ljung_box(spark, sf_dir):
 
 # ------------------------------------- likelihood-ratio G-test
 
-@query("stats_g_test", oracle="""
+@query("stats_g_test", oracle=f"""
     WITH rows_ AS (
         SELECT event_type AS et,
                CAST(((date_diff('day', DATE '1995-01-02',
@@ -361,17 +362,7 @@ def ts_ljung_box(spark, sf_dir):
         FROM marg
     )
     SELECT n, df, g_stat,
-           round(0.5 * (SELECT
-                 (0.254829592 * t + -0.284496736 * t * t
-                  + 1.421413741 * t * t * t
-                  + -1.453152027 * t * t * t * t
-                  + 1.061405429 * t * t * t * t * t) * exp(-z * z)
-                 FROM
-                 (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                  (SELECT (pow(g_stat / df, 1.0 / 3.0)
-                           - (1.0 - 2.0 / (9.0 * df)))
-                          / sqrt(2.0 / (9.0 * df)) / sqrt(2.0)
-                       AS z))), 8) AS p_value
+           round({chi2_sf_sql('g_stat', 'df')}, 8) AS p_value
     FROM gsum
 """)
 def stats_g_test(spark, sf_dir):
@@ -416,14 +407,7 @@ def stats_g_test(spark, sf_dir):
         ((F.countDistinct("et") - 1) * (F.countDistinct("dow") - 1))
         .cast("bigint").alias("df"),
         F.round(2.0 * F.sum(term) / 1e6, 5).alias("g_stat"))
-    f = F.col("df").cast("double")
-    z = ((F.pow(F.col("g_stat") / f, 1.0 / 3.0)
-          - (1.0 - 2.0 / (9.0 * f)))
-         / F.sqrt(2.0 / (9.0 * f)) / F.sqrt(F.lit(2.0)))
-    t = 1.0 / (1.0 + 0.3275911 * z)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-z * z))
     return gsum.select("n", "df", "g_stat",
-                       F.round(0.5 * erfc, 8).alias("p_value"))
+                       F.round(chi2_sf(F.col("g_stat"),
+                                       F.col("df").cast("double")), 8)
+                       .alias("p_value"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .registry import query
+from .registry import query, scratch_dir
 from .relational import T, _cents_sum
 from .operational import cdc_merge_upsert
 
@@ -358,10 +358,9 @@ def schema_evolution_read(spark, sf_dir):
     reads only its own columns (no data rewrite, no cast pass). The
     v2 batch derives deterministically from region so the oracle can
     replay both batches as a UNION."""
-    import tempfile
 
     r = T(spark, sf_dir, "region")
-    out = tempfile.mkdtemp(prefix="e2db_schevo_")
+    out = scratch_dir("schevo")
     r.select("r_regionkey", "r_name").write.mode("overwrite").parquet(
         f"{out}/v1")
     (r.select((F.col("r_regionkey") + 100).alias("r_regionkey"),

@@ -28,15 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import h32
+from ..numerics import erfc, erfc_sql, h32
 from .registry import query
 from .relational import T
-
-_AS_ERFC = """
-    (0.254829592 * t + -0.284496736 * t * t + 1.421413741 * t * t * t
-     + -1.453152027 * t * t * t * t + 1.061405429 * t * t * t * t * t)
-    * exp(-z * z)
-"""
 
 
 # ------------------------------------------------- hourly OHLC candles
@@ -144,9 +138,7 @@ def ts_ohlc_candles(spark, sf_dir):
         FROM stat
     )
     SELECT n, n1, n2, r AS n_runs, e_r, v_r, z,
-           round((SELECT {_AS_ERFC} FROM
-                  (SELECT 1.0 / (1.0 + 0.3275911 * z) AS t, z FROM
-                   (SELECT abs(zed.z) / sqrt(2.0) AS z))), 8) AS p_value
+           round({erfc_sql('abs(zed.z) / sqrt(2.0)')}, 8) AS p_value
     FROM zed
 """)
 def stats_runs_test(spark, sf_dir):
@@ -193,13 +185,8 @@ def stats_runs_test(spark, sf_dir):
         "z", F.round((F.col("n_runs") - F.col("e_r"))
                      / F.sqrt(F.col("v_r")), 6) + 0.0)
     za = F.abs(F.col("z")) / F.sqrt(F.lit(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * za)
-    erfc = ((0.254829592 * t + (-0.284496736) * t * t
-             + 1.421413741 * t * t * t
-             + (-1.453152027) * t * t * t * t
-             + 1.061405429 * t * t * t * t * t) * F.exp(-za * za))
     return zed.select("n", "n1", "n2", "n_runs", "e_r", "v_r", "z",
-                      F.round(erfc, 8).alias("p_value"))
+                      F.round(erfc(za), 8).alias("p_value"))
 
 
 # ------------------------------------------------ Newman modularity

@@ -1,0 +1,92 @@
+"""numerics.py: the one place that turns a test statistic into a
+p-value (and hashes a value to 32 bits), on Spark and in the DuckDB
+oracles alike."""
+
+from __future__ import annotations
+
+import math
+import pathlib
+import re
+
+import duckdb
+import pytest
+
+from conftest import SF_DIR
+from excel_to_db_spark.numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_db_spark"
+
+# Each of these outside numerics.py is a hand copy of a shared formula.
+_OUTSIDE_NUMERICS = {
+    "A-S 7.1.26 erfc": re.compile(r"0\.3275911|0\.254829592"),
+    "Wilson-Hilferty": re.compile(r"2\.0 / \(9\.0 \*"),
+    "h32": re.compile(
+        r"conv\(\s*F\.substring\(\s*F\.md5\(.{0,80}?\),\s*1,\s*8\)", re.S),
+}
+
+# z from -4 to 4: the reflection branch, zero, and both tails.
+_GRID = [i / 8 for i in range(-32, 33)] + [-1e-9, 1e-9, 6.0, -6.0]
+
+
+def test_p_value_formulas_live_in_numerics():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.relative_to(PKG).as_posix() == "numerics.py":
+            continue
+        text = path.read_text()
+        for what, pat in _OUTSIDE_NUMERICS.items():
+            for m in pat.finditer(text):
+                line = text.count("\n", 0, m.start()) + 1
+                found.append(f"{path.relative_to(PKG)}:{line}: {what}")
+    assert not found, "\n".join(found)
+
+
+def test_erfc_twins_agree_on_both_engines(spark):
+    df = spark.createDataFrame([(x,) for x in _GRID], "x double")
+    got = dict(df.select("x", erfc(df.x).alias("e")).collect())
+    rows = ", ".join(f"({x!r})" for x in _GRID)
+    duck = dict(duckdb.sql(
+        f"SELECT x, {erfc_sql('x')} AS e FROM (VALUES {rows}) v(x)"
+    ).fetchall())
+    for x in _GRID:
+        assert abs(got[x] - duck[x]) <= 1e-12, x
+        assert abs(got[x] - math.erfc(x)) <= 1.5e-7, x
+
+
+def test_chi2_sf_twins_agree(spark):
+    cases = [(0.1, 4.0), (2.16, 4.0), (20.94, 24.0), (9.49, 4.0),
+             (40.0, 3.0)]
+    df = spark.createDataFrame(cases, "q double, f double")
+    got = [r.p for r in df.select(chi2_sf(df.q, df.f).alias("p"))
+           .collect()]
+    rows = ", ".join(f"({q!r}, {f!r})" for q, f in cases)
+    duck = [r[0] for r in duckdb.sql(
+        f"SELECT {chi2_sf_sql('q', 'f')} FROM (VALUES {rows}) v(q, f)"
+    ).fetchall()]
+    for (q, f), p, d in zip(cases, got, duck):
+        assert 0.0 <= p <= 1.0, (q, f, p)
+        assert abs(p - d) <= 1e-12, (q, f)
+
+
+# key -> (statistic column, degrees-of-freedom column, df offset)
+_WH_KEYS = {
+    "stats_kruskal_wallis": ("h_stat", "k_groups", 1),
+    "stats_friedman": ("chi2", "k_treatments", 1),
+    "stats_mood_median": ("chi2", "k_groups", 1),
+    "stats_cochran_q": ("q_stat", "k", 1),
+    "stats_g_test": ("g_stat", "df", 0),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_WH_KEYS))
+def test_wilson_hilferty_keys_match_the_exact_erfc(spark, key):
+    """Below its mean a chi-square statistic has z < 0, where the
+    polynomial alone overshoots (p > 1 at df 4, q <= 0.4)."""
+    from excel_to_db_spark.queries import REGISTRY
+
+    stat, df_col, off = _WH_KEYS[key]
+    row = REGISTRY[key].fn(spark, SF_DIR).collect()[0]
+    f = row[df_col] - off
+    z = ((row[stat] / f) ** (1 / 3) - (1 - 2 / (9 * f))) \
+        / math.sqrt(2 / (9 * f)) / math.sqrt(2)
+    assert abs(row.p_value - 0.5 * math.erfc(z)) <= 1e-7, (z, row)

@@ -108,13 +108,17 @@ def test_friedman_matches_midrank_replay(spark, sf_dir):
     assert row.chi2_raw == chi2_raw
     assert row.tie_c == tie_c
     assert row.chi2 == _r(chi2_raw / tie_c, 6)
-    # Wilson-Hilferty + A-S erfc replay
+    # Wilson-Hilferty + A-S erfc replay, reflected for z < 0 (the
+    # polynomial holds for z >= 0 only)
     f = k - 1
     z = (((row.chi2 / f) ** (1.0 / 3.0) - (1.0 - 2.0 / (9.0 * f)))
          / math.sqrt(2.0 / (9.0 * f)) / math.sqrt(2.0))
-    t = 1.0 / (1.0 + 0.3275911 * z)
+    a = abs(z)
+    t = 1.0 / (1.0 + 0.3275911 * a)
     erfc = ((0.254829592 * t - 0.284496736 * t**2 + 1.421413741 * t**3
              - 1.453152027 * t**4 + 1.061405429 * t**5)
-            * math.exp(-z * z))
+            * math.exp(-a * a))
+    if z < 0:
+        erfc = 2.0 - erfc
     assert row.p_value == _r(0.5 * erfc, 8)
     assert 0.0 <= row.p_value <= 1.0
