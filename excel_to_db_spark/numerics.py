@@ -28,6 +28,15 @@ the oracles, and from nowhere else:
   it and rounds the p-value after (8 dp), so a last-ulp difference in
   either engine's exp/pow reaches the compared digits only on an exact
   rounding boundary.
+
+Hashes. Every sampling, split, sketch and synthetic-coordinate key
+draws its uniform hash from `h32` on Spark and `h32_sql` in the
+oracles: the first 32 bits of md5 as a non-negative BIGINT (NULL in,
+NULL out). `u01`/`u01_sql` map it to the open interval,
+(h32 + 0.5) / 2^32, never 0 or 1, so ln(u) and ln(1 - u) are finite.
+No other module spells out either one in any engine's syntax; Spark
+SQL text that needs the hash is written as a Column with a Python
+lambda (`F.transform(words, h32)`), not as `conv(substring(md5(...`.
 """
 
 from __future__ import annotations
@@ -52,15 +61,27 @@ def cents_sum(col: Column) -> Column:
 def h32(col: Column) -> Column:
     """First 32 bits of md5(col) as a non-negative BIGINT — the
     engine-portable uniform hash the governance/selection keys share.
-    Oracle twin (DuckDB):
-
-        CAST(('0x' || substr(md5(x), 1, 8))::UBIGINT AS BIGINT)
-
-    One definition for the whole tree: the Spark conv(...,16,10) and
-    the DuckDB UBIGINT parse MUST stay in lockstep or every key built
-    on this hash silently diverges cross-engine."""
+    Oracle twin: `h32_sql`. The Spark conv(...,16,10) and the DuckDB
+    UBIGINT parse must stay in lockstep or every key built on this
+    hash silently diverges cross-engine."""
     return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
             .cast("bigint"))
+
+
+def h32_sql(x: str) -> str:
+    """DuckDB twin of `h32`; `x` is a VARCHAR SQL expression."""
+    return f"CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
+
+
+def u01(col: Column) -> Column:
+    """The hash uniform (h32(col) + 0.5) / 2^32, in the open interval
+    (0, 1). Oracle twin: `u01_sql`."""
+    return (h32(col) + 0.5) / 4294967296.0
+
+
+def u01_sql(x: str) -> str:
+    """DuckDB twin of `u01`."""
+    return f"({h32_sql(x)} + 0.5) / 4294967296.0"
 
 
 def erfc(x: Column) -> Column:

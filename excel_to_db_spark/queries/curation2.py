@@ -9,29 +9,27 @@ these extend the Tier-C mission set.
 
 Determinism contract (SURVEY §4.3): every derived key is integer-exact —
 md5 hex is byte-identical on Spark and DuckDB, the first 8 hex chars
-parse to the same 32-bit integer (Spark `conv(...,16,10)`, DuckDB
-`('0x'||...)::UBIGINT`), and all downstream arithmetic stays in BIGINT.
-No floats anywhere, so no rounding contract is needed.
+parse to the same 32-bit integer (`numerics.h32` and its `h32_sql`
+twin), and all downstream arithmetic stays in BIGINT. No floats
+anywhere, so no rounding contract is needed.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..numerics import h32, h32_sql, u01, u01_sql
 from ..operators import physical
-from ..numerics import h32
 from .registry import query
 from .relational import T
 
 
-
 # --------------------------------------------- leakage-free corpus split
 
-@query("pipeline_train_val_split", oracle="""
+@query("pipeline_train_val_split", oracle=f"""
     WITH h AS (
         SELECT lang, n_chars,
-               CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)),
-                                    1, 8))::UBIGINT AS BIGINT) % 100 AS b
+               {h32_sql("'split:' || CAST(doc_id AS VARCHAR)")} % 100 AS b
         FROM documents
     )
     SELECT CASE WHEN b < 90 THEN 'train'
@@ -112,14 +110,13 @@ def dedup_source_matrix(spark, sf_dir):
 
 # ---------------------------------------------- winnowing fingerprints
 
-@query("text_winnowing", oracle="""
+@query("text_winnowing", oracle=f"""
     WITH w AS (
         SELECT doc_id, string_split(text, ' ') AS words FROM documents
     ),
     g AS (
         SELECT doc_id,
-               [CAST(('0x' || substr(md5(array_to_string(
-                        words[i : i + 4], ' ')), 1, 8))::UBIGINT AS BIGINT)
+               [{h32_sql("array_to_string(words[i : i + 4], ' ')")}
                 for i in range(1, len(words) - 3)] AS hs
         FROM w WHERE len(words) >= 5
     ),
@@ -167,10 +164,8 @@ def text_winnowing(spark, sf_dir):
     base = d.select("doc_id", words.alias("words")).filter(
         F.size("words") >= 8)
     # shingle hashes: h(i) = first 32 md5 bits of words[i..i+4] joined
-    hs = F.expr(
-        "transform(sequence(1, size(words) - 4), i -> "
-        "cast(conv(substring(md5(array_join(slice(words, i, 5), ' ')), "
-        "1, 8), 16, 10) as bigint))")
+    hs = F.transform(F.sequence(F.lit(1), F.size("words") - 4),
+                     lambda i: h32(F.array_join(F.slice("words", i, 5), " ")))
     g = base.select("doc_id", hs.alias("hs"))
     mins = F.expr(
         "array_distinct(transform(sequence(1, size(hs) - 3), j -> "
@@ -185,7 +180,7 @@ def text_winnowing(spark, sf_dir):
 
 # --------------------------------------- content-defined chunking dedup
 
-@query("text_cdc_chunks", oracle="""
+@query("text_cdc_chunks", oracle=f"""
     WITH w AS (
         SELECT doc_id, source, string_split(text, ' ') AS words
         FROM documents
@@ -193,8 +188,7 @@ def text_winnowing(spark, sf_dir):
     e AS (
         SELECT doc_id, source, words,
                [0] || [i for i in range(1, len(words))
-                       if CAST(('0x' || substr(md5(words[i]), 1, 8))
-                               ::UBIGINT AS BIGINT) % 8 = 0]
+                       if {h32_sql('words[i]')} % 8 = 0]
                    || [len(words)] AS edges
         FROM w
     ),
@@ -241,11 +235,13 @@ def text_cdc_chunks(spark, sf_dir):
     # single-word document Spark evaluates sequence(1, 0) as the
     # DESCENDING [1, 0] and the lambda would hit element_at(words, 0)
     # (INVALID_INDEX_OF_ZERO crash); DuckDB's range(1, 1) is just empty.
-    edges = F.expr(
-        "concat(array(0), filter(sequence(1, size(words)), i -> "
-        "i < size(words) AND "
-        "cast(conv(substring(md5(element_at(words, i)), 1, 8), 16, 10) "
-        "as bigint) % 8 = 0), array(size(words)))")
+    n = F.size("words")
+    edges = F.concat(
+        F.array(F.lit(0)),
+        F.filter(F.sequence(F.lit(1), n),
+                 lambda i: (i < n)
+                 & (h32(F.element_at("words", i)) % 8 == 0)),
+        F.array(n))
     e = w.select("doc_id", "source", "words", edges.alias("edges"))
     chunks = F.expr(
         "transform(sequence(1, size(edges) - 1), j -> "
@@ -266,13 +262,12 @@ def text_cdc_chunks(spark, sf_dir):
 
 # ------------------------------------------- deterministic bootstrap CI
 
-@query("stats_bootstrap_ci", oracle="""
+@query("stats_bootstrap_ci", oracle=f"""
     WITH w AS (
         SELECT b.b,
                CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-               CAST(('0x' || substr(md5('boot' || CAST(b.b AS VARCHAR)
-                                        || ':' || CAST(o_orderkey AS VARCHAR)),
-                                    1, 8))::UBIGINT AS BIGINT) % 1000 AS h
+               {h32_sql("'boot' || CAST(b.b AS VARCHAR) || ':'"
+                        " || CAST(o_orderkey AS VARCHAR)")} % 1000 AS h
         FROM orders, (SELECT unnest(range(0, 32)) AS b) b
     ),
     r AS (
@@ -342,17 +337,15 @@ def stats_bootstrap_ci(spark, sf_dir):
 
 # ----------------------------------------------- hashing-trick features
 
-@query("text_feature_hashing", oracle="""
+@query("text_feature_hashing", oracle=f"""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS t
         FROM documents
     ),
     h AS (
         SELECT doc_id,
-               CAST(('0x' || substr(md5('fh:' || t), 1, 8))
-                    ::UBIGINT AS BIGINT) % 32 AS idx,
-               CASE WHEN CAST(('0x' || substr(md5('sg:' || t), 1, 8))
-                         ::UBIGINT AS BIGINT) % 2 = 0
+               {h32_sql("'fh:' || t")} % 32 AS idx,
+               CASE WHEN {h32_sql("'sg:' || t")} % 2 = 0
                     THEN 1 ELSE -1 END AS s
         FROM tok
     ),
@@ -385,12 +378,11 @@ def text_feature_hashing(spark, sf_dir):
     treat HashPartitioning(doc_id, idx) as satisfying a doc_id-only
     distribution, so the rollup re-shuffled — plan-verified.)"""
     d = T(spark, sf_dir, "documents")
-    pairs = F.expr(
-        "transform(split(text, ' '), t -> struct("
-        "cast(conv(substring(md5(concat('fh:', t)), 1, 8), 16, 10) "
-        "as bigint) % 32 AS idx, "
-        "CASE WHEN cast(conv(substring(md5(concat('sg:', t)), 1, 8), 16, "
-        "10) as bigint) % 2 = 0 THEN 1L ELSE -1L END AS s))")
+    pairs = F.transform(F.split("text", " "), lambda t: F.struct(
+        (h32(F.concat(F.lit("fh:"), t)) % 32).alias("idx"),
+        F.when(h32(F.concat(F.lit("sg:"), t)) % 2 == 0,
+               F.lit(1).cast("bigint"))
+        .otherwise(F.lit(-1).cast("bigint")).alias("s")))
     vec = F.expr(
         "transform(sequence(0, 31), k -> aggregate(pairs, 0L, "
         "(acc, p) -> acc + CASE WHEN p.idx = k THEN p.s ELSE 0L END))")
@@ -1055,7 +1047,7 @@ def dedup_url_canonical(spark, sf_dir):
 
 # --------------------------------------- DP noisy-histogram mechanism
 
-@query("privacy_dp_histogram", oracle="""
+@query("privacy_dp_histogram", oracle=f"""
     WITH c AS (
         SELECT c_nationkey,
                CAST(count(*) AS BIGINT) AS n
@@ -1063,9 +1055,7 @@ def dedup_url_canonical(spark, sf_dir):
     ),
     u AS (
         SELECT c_nationkey, n,
-               (CAST(('0x' || substr(md5('dp:' ||
-                        CAST(c_nationkey AS VARCHAR)), 1, 8))::UBIGINT
-                     AS BIGINT) + 0.5) / 4294967296.0 - 0.5 AS uu
+               {u01_sql("'dp:' || CAST(c_nationkey AS VARCHAR)")} - 0.5 AS uu
         FROM c
     )
     SELECT c_nationkey, n,
@@ -1097,8 +1087,7 @@ def privacy_dp_histogram(spark, sf_dir):
     mechanism costs nothing at any scale."""
     c = (T(spark, sf_dir, "customer")
          .groupBy("c_nationkey").agg(F.count("*").alias("n")))
-    uu = ((h32(F.concat(F.lit("dp:"), F.col("c_nationkey").cast("string")))
-           + 0.5) / 4294967296.0 - 0.5)
+    uu = u01(F.concat(F.lit("dp:"), F.col("c_nationkey").cast("string"))) - 0.5
     noise = F.round(-F.signum(uu) * F.log(1 - 2 * F.abs(uu)) * 1000000) \
         .cast("bigint")
     return c.select("c_nationkey", "n",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import h32
+from ..numerics import h32, h32_sql, u01, u01_sql
 from .registry import query
 from .relational import T
 
@@ -146,11 +146,10 @@ def text_gopher_rules(spark, sf_dir):
 
 # ----------------------------------- DSIR importance-weighted selection
 
-@query("pipeline_dsir_weights", oracle="""
+@query("pipeline_dsir_weights", oracle=f"""
     WITH ht AS (
         SELECT doc_id, lang,
-               CAST(('0x' || substr(md5('dsir:' || tok), 1, 8))::UBIGINT
-                    AS BIGINT) % 1024 AS b
+               {h32_sql("'dsir:' || tok")} % 1024 AS b
         FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
               FROM documents)
     ),
@@ -562,8 +561,7 @@ def dedup_quality_keep_best(spark, sf_dir):
     ),
     ht AS (
         SELECT doc_id, lang,
-               CAST(('0x' || substr(md5('dsir:' || tok), 1, 8))::UBIGINT
-                    AS BIGINT) % 1024 AS b
+               {h32_sql("'dsir:' || tok")} % 1024 AS b
         FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
               FROM documents)
     ),
@@ -751,21 +749,18 @@ def stream_quality_census(spark, sf_dir):
 
 # ---------------------------------- rendezvous-hash shard stability
 
-@query("shard_rendezvous_stability", oracle="""
+@query("shard_rendezvous_stability", oracle=f"""
     WITH d AS (SELECT doc_id FROM documents),
     a AS (
         SELECT doc_id,
-               CAST(('0x' || substr(md5('mod:' ||
-                        CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-                    AS BIGINT) AS h
+               {h32_sql("'mod:' || CAST(doc_id AS VARCHAR)")} AS h
         FROM d
     ),
     hrw AS (
         SELECT doc_id, n_shards,
-               max(CAST(('0x' || substr(md5('hrw:' ||
-                            CAST(doc_id AS VARCHAR) || ':' ||
-                            CAST(s.s AS VARCHAR)), 1, 8))::UBIGINT
-                        AS BIGINT) * 16 + s.s) % 16 AS shard
+               max({h32_sql("'hrw:' || CAST(doc_id AS VARCHAR) || ':'"
+                            " || CAST(s.s AS VARCHAR)")} * 16 + s.s) % 16
+                   AS shard
         FROM d, (SELECT unnest(range(0, 9)) AS s) s,
              (SELECT unnest([8, 9]) AS n_shards) ns
         WHERE s.s < n_shards
@@ -905,12 +900,10 @@ def pipeline_curriculum_order(spark, sf_dir):
 
 # --------------------------- weighted sampling without replacement
 
-@query("sample_weighted_es", oracle="""
+@query("sample_weighted_es", oracle=f"""
     WITH u AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-               (CAST(('0x' || substr(md5('es:' ||
-                        CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT
-                     AS BIGINT) + 0.5) / 4294967296.0 AS uu
+               {u01_sql("'es:' || CAST(doc_id AS VARCHAR)")} AS uu
         FROM documents WHERE n_chars > 0
     ),
     k AS (
@@ -941,8 +934,7 @@ def sample_weighted_es(spark, sf_dir):
     shuffle at all (per-partition top-20 merge on the driver), the
     cheapest possible distributed weighted sampler."""
     d = T(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    uu = ((h32(F.concat(F.lit("es:"), F.col("doc_id").cast("string")))
-           + 0.5) / 4294967296.0)
+    uu = u01(F.concat(F.lit("es:"), F.col("doc_id").cast("string")))
     k = d.select(
         "doc_id", F.col("n_chars").cast("bigint").alias("w"),
         F.round(F.log(uu) / F.col("n_chars") * 1000000000)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import physical
-from ..numerics import cents_sum, erfc, erfc_sql, h32
+from ..numerics import cents_sum, erfc, erfc_sql, h32, h32_sql, u01, u01_sql
 from .registry import REGISTRY, query
 from .relational import T
 
@@ -35,13 +35,12 @@ from .relational import T
 # ------------------------------------------- KMV distinct sketch (merge)
 
 _KMV_K = 64
-_KMV_H_SQL = ("CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 8))"
-              "::UBIGINT AS BIGINT)")
 
 
 @query("sketch_kmv_distinct", oracle=f"""
     WITH h AS (
-        SELECT DISTINCT {_KMV_H_SQL} AS h, l_orderkey % 8 AS shard
+        SELECT DISTINCT {h32_sql("CAST(l_partkey AS VARCHAR)")} AS h,
+                        l_orderkey % 8 AS shard
         FROM lineitem
     ),
     exact AS (
@@ -564,8 +563,6 @@ def graph_kcore(spark, sf_dir):
 # ----------------------------------------------- AMS (tug-of-war) F2
 
 _AMS_R = 16
-_AMS_SIGN_SQL = ("(1 - 2 * (CAST(('0x' || substr(md5(l_partkey || ':' || "
-                 "est_id), 1, 8))::UBIGINT AS BIGINT) % 2))")
 
 
 @query("sketch_ams_f2", oracle=f"""
@@ -577,7 +574,9 @@ _AMS_SIGN_SQL = ("(1 - 2 * (CAST(('0x' || substr(md5(l_partkey || ':' || "
         SELECT CAST(sum(f * f) AS BIGINT) AS exact_f2 FROM f
     ),
     est AS (
-        SELECT est_id, CAST(sum({_AMS_SIGN_SQL} * f) AS BIGINT)
+        SELECT est_id,
+               CAST(sum((1 - 2 * ({h32_sql("l_partkey || ':' || est_id")}
+                                  % 2)) * f) AS BIGINT)
                    AS signed_sum
         FROM f CROSS JOIN (SELECT range AS est_id FROM range({_AMS_R}))
         GROUP BY est_id
@@ -641,8 +640,6 @@ def sketch_ams_f2(spark, sf_dir):
 # ------------------------------------------- randomization (perm) test
 
 _PERM_B = 99
-_PERM_LAB_SQL = ("(CAST(('0x' || substr(md5(o_orderkey || ':' || p), 1, 8))"
-                 "::UBIGINT AS BIGINT) % 2)")
 
 
 @query("stats_permutation_test", oracle=f"""
@@ -662,7 +659,7 @@ _PERM_LAB_SQL = ("(CAST(('0x' || substr(md5(o_orderkey || ':' || p), 1, 8))"
         FROM base
     ),
     labeled AS (
-        SELECT p, v, {_PERM_LAB_SQL} AS lab
+        SELECT p, v, ({h32_sql("o_orderkey || ':' || p")} % 2) AS lab
         FROM base CROSS JOIN (SELECT range AS p FROM range(1, {_PERM_B + 1}))
     ),
     perm AS (
@@ -1507,7 +1504,7 @@ def dedup_soft_weights(spark, sf_dir):
 
 # ------------------------------------ DP median (exponential mechanism)
 
-@query("privacy_dp_median", oracle="""
+@query("privacy_dp_median", oracle=f"""
     WITH c AS (
         SELECT CAST(l_quantity AS INTEGER) AS qty,
                CAST(count(*) AS BIGINT) AS c
@@ -1528,9 +1525,8 @@ def dedup_soft_weights(spark, sf_dir):
     noisy AS (
         SELECT qty, c, u, cum, n,
                CAST(round((u / 2.0
-                   - ln(-ln((CAST(('0x' || substr(md5('dpmed:' ||
-                         CAST(qty AS VARCHAR)), 1, 8))::UBIGINT AS BIGINT)
-                         + 0.5) / 4294967296.0))) * 1000000000)
+                   - ln(-ln({u01_sql("'dpmed:' || CAST(qty AS VARCHAR)")})))
+                   * 1000000000)
                     AS BIGINT) AS score_nano
         FROM util
     ),
@@ -1573,9 +1569,8 @@ def privacy_dp_median(spark, sf_dir):
     cum = (c.withColumn("cum", F.sum("c").over(w))
            .withColumn("n", F.sum("c").over(Window.partitionBy())))
     u = -F.abs((F.col("cum") - F.col("c")) - (F.col("n") - F.col("cum")))
-    u01 = (h32(F.concat(F.lit("dpmed:"), F.col("qty").cast("string")))
-           + 0.5) / 4294967296.0
-    score = F.round((u / 2.0 - F.log(-F.log(u01))) * 1000000000) \
+    draw = u01(F.concat(F.lit("dpmed:"), F.col("qty").cast("string")))
+    score = F.round((u / 2.0 - F.log(-F.log(draw))) * 1000000000) \
         .cast("bigint")
     noisy = cum.select("qty", "c", u.cast("bigint").alias("u"),
                        score.alias("score_nano"))

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -200,16 +200,15 @@ def eval_calibration_ece(spark, sf_dir):
 
 # --------------------------------------- capture-recapture (Chapman)
 
-_CR_H_SQL = ("CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))"
-             "::UBIGINT AS BIGINT)")
-
 
 @query("stats_capture_recapture", oracle=f"""
     WITH flagged AS (
         SELECT user_id,
-               max(CASE WHEN {_CR_H_SQL} % 4 = 0 THEN 1 ELSE 0 END)
+               max(CASE WHEN {h32_sql("CAST(event_id AS VARCHAR)")} % 4 = 0
+                        THEN 1 ELSE 0 END)
                    AS in_c1,
-               max(CASE WHEN {_CR_H_SQL} % 4 = 1 THEN 1 ELSE 0 END)
+               max(CASE WHEN {h32_sql("CAST(event_id AS VARCHAR)")} % 4 = 1
+                        THEN 1 ELSE 0 END)
                    AS in_c2
         FROM events GROUP BY user_id
     ),

@@ -33,13 +33,13 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 
 # O'Brien-Fleming two-sided 0.05 boundaries at 5 equally spaced looks
 # (z = 4.877, 3.357, 2.680, 2.290, 2.031), squared, in millis.
 _OBF_Z2_MILLI = (23785, 11269, 7182, 5244, 4125)
 
-_HOURS_SQL = """
+_HOURS_SQL = f"""
     ev AS (
         SELECT CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
                CAST(floor(epoch(ts)) AS BIGINT) % 3600 AS sec_in_hr,
@@ -48,8 +48,7 @@ _HOURS_SQL = """
     ),
     assigned AS (
         SELECT hr, sec_in_hr, event_type,
-               CAST(('0x' || substr(md5('sb:' || CAST(hr AS VARCHAR)),
-                     1, 8))::UBIGINT AS BIGINT) % 2 AS arm
+               {h32_sql("'sb:' || CAST(hr AS VARCHAR)")} % 2 AS arm
         FROM ev
     )
 """
@@ -126,12 +125,10 @@ def exp_switchback_analysis(spark, sf_dir):
         .alias("naive_diff_micro"))
 
 
-@query("exp_cluster_randomized", oracle="""
+@query("exp_cluster_randomized", oracle=f"""
     WITH u AS (
         SELECT user_id,
-               CAST(('0x' || substr(md5('cr:'
-                    || CAST(user_id AS VARCHAR)), 1, 8))::UBIGINT
-                    AS BIGINT) % 2 AS arm,
+               {h32_sql("'cr:' || CAST(user_id AS VARCHAR)")} % 2 AS arm,
                CAST(count(*) AS BIGINT) AS n,
                CAST(count(*) FILTER (WHERE event_type = 'purchase')
                     AS BIGINT) AS c

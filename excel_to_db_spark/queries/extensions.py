@@ -25,7 +25,7 @@ from ..operators import physical
 from ..operators import similarity as S
 from ..operators import text as X
 from ..streaming import run_tumbling_stream, session_agg, tumbling_agg
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum as _cents_sum, h32_sql
 from .registry import REGISTRY, query, scratch_dir
 from .relational import T
 
@@ -195,7 +195,7 @@ _MINHASH_SIG_SQL = "[" + ", ".join(
                list_transform(
                    list_distinct([array_to_string(toks[i:i+2], ' ')
                                   for i in range(1, len(toks) - 1)]),
-                   x -> ('0x' || substr(md5(x), 1, 8))::UBIGINT) AS hs
+                   x -> {h32_sql('x')}) AS hs
         FROM t WHERE len(toks) >= 3
     ),
     sig AS (SELECT did, {_MINHASH_SIG_SQL} AS sg FROM hv)
@@ -457,14 +457,14 @@ def text_langid(spark, sf_dir):
     return X.langid(physical.fan_out(T(spark, sf_dir, "documents")))
 
 
-@query("text_fingerprint", oracle="""
+@query("text_fingerprint", oracle=f"""
     SELECT doc_id,
            md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))
                AS fp_set,
            list_reduce(
                list_prepend(CAST(0 AS BIGINT),
                             list_transform(string_split(text, ' '),
-                                           t -> CAST(concat('0x', substring(md5(t), 1, 8)) AS BIGINT))),
+                                           t -> {h32_sql('t')})),
                (acc, h) -> (acc * 131 + h) % 2147483647) AS fp_rolling
     FROM documents
 """)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 
 _HLL_M = 64
 _W_BITS = 26                       # 32 - p
@@ -52,9 +52,7 @@ _ERR_DENOM = 2520 * 8 ** 10        # lcm(1..10) * 8^10
 
 _HLL_ORACLE = f"""
     WITH h AS (
-        SELECT CAST(('0x' || substr(md5('hll:'
-                    || CAST(o_custkey AS VARCHAR)), 1, 8))::UBIGINT
-                    AS BIGINT) AS hv,
+        SELECT {h32_sql("'hll:' || CAST(o_custkey AS VARCHAR)")} AS hv,
                o_custkey
         FROM orders
     ),

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import h32, h32_sql
 from ..operators import physical
 from .registry import query
 from .relational import T
@@ -55,12 +56,12 @@ _LON_SPAN = 50_000_000
 
 
 def _pts_sql(table: str, key: str, nat: str, pfx: str) -> str:
-    h = ("CAST(('0x' || substr(md5('{p}{c}:' || CAST({k} AS VARCHAR)),"
-         " 1, 8))::UBIGINT AS BIGINT)")
+    def h(c):
+        return h32_sql(f"'{pfx}{c}:' || CAST({key} AS VARCHAR)")
     return f"""
         SELECT {key} AS id, {nat} AS nat,
-               {h.format(p=pfx, c='lat', k=key)} % {_LAT_SPAN} AS latp,
-               {h.format(p=pfx, c='lon', k=key)} % {_LON_SPAN} AS lonp
+               {h('lat')} % {_LAT_SPAN} AS latp,
+               {h('lon')} % {_LON_SPAN} AS lonp
         FROM {table}
     """
 
@@ -70,11 +71,7 @@ def _pts(spark, sf_dir, table, key, nat, pfx):
     coordinates, shared by all four keys (and exactly mirrored by
     `_pts_sql` on the oracle side)."""
     def h(c):
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{pfx}{c}:"),
-                               F.col(key).cast("string"))), 1, 8),
-            16, 10).cast("bigint")
+        return h32(F.concat(F.lit(f"{pfx}{c}:"), F.col(key).cast("string")))
     return (T(spark, sf_dir, table)
             .select(F.col(key).alias("id"), F.col(nat).alias("nat"),
                     (h("lat") % _LAT_SPAN).alias("latp"),

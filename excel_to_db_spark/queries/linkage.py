@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 
 # Fellegi-Sunter agreement weights, integer micro-bits. m = P(agree |
 # match), u = P(agree | unmatch) — pinned textbook-ish values; the
@@ -61,9 +61,6 @@ _W_PFX_NE = round(math.log2(0.05 / 0.95) * 1e6)
 _T_MATCH = 12_000_000                              # >= 12 bits: link
 _T_POSSIBLE = 0                                    # [0, 12): review
 
-
-_H32_SQL = ("CAST(('0x' || substr(md5('{p}' || CAST(id AS VARCHAR)),"
-            " 1, 8))::UBIGINT AS BIGINT)")
 
 _CORRUPT_SQL = """
     clean AS (
@@ -88,7 +85,8 @@ _CORRUPT_SQL = """
             ELSE s END AS s
         FROM seeded
     )
-""".format(hed=_H32_SQL.format(p="ed:"), hpos=_H32_SQL.format(p="pos:"))
+""".format(hed=h32_sql("'ed:' || CAST(id AS VARCHAR)"),
+           hpos=h32_sql("'pos:' || CAST(id AS VARCHAR)"))
 
 _EDIT_CASE = """CASE op
     WHEN 0 THEN substr(s, 1, pos - 1) || substr(s, pos + 1, ln)

@@ -34,20 +34,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, h32
+from ..numerics import erfc, erfc_sql, h32, h32_sql
 from .registry import query
 from .relational import T
 
 
 # ------------------------------------- multinomial naive Bayes (lang)
 
-_NB_H_SQL = ("CAST(('0x' || substr(md5('nb:' || CAST(doc_id AS VARCHAR)),"
-             " 1, 8))::UBIGINT AS BIGINT) % 5")
-
 
 @query("ml_naive_bayes", oracle=f"""
     WITH split AS (
-        SELECT doc_id, lang, text, {_NB_H_SQL} AS u FROM documents
+        SELECT doc_id, lang, text,
+               {h32_sql("'nb:' || CAST(doc_id AS VARCHAR)")} % 5 AS u
+        FROM documents
     ),
     train_tok AS (
         SELECT lang, unnest(string_split(text, ' ')) AS tok
@@ -292,15 +291,12 @@ def ml_split_info_gain(spark, sf_dir):
 
 # ----------------------------------- average precision (PR-curve area)
 
-_AP_H_SQL = ("CAST(('0x' || substr(md5('ap:' || CAST(doc_id AS VARCHAR)),"
-             " 1, 8))::UBIGINT AS BIGINT) % 1000")
-
 
 @query("eval_avg_precision", oracle=f"""
     WITH scored AS (
         SELECT doc_id,
                CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label,
-               {_AP_H_SQL}
+               {h32_sql("'ap:' || CAST(doc_id AS VARCHAR)")} % 1000
                + CASE WHEN lang = 'en' THEN 300 ELSE 0 END AS s
         FROM documents
     ),

@@ -37,12 +37,9 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 from .forecast import _DAILY_TOTAL_SQL, _daily_total
 from .geo import _LAT_SPAN, _LON_SPAN, _pts, _pts_sql
-
-_H32I = ("CAST(('0x' || substr(md5('{p}' || CAST({c} AS VARCHAR)),"
-         " 1, 8))::UBIGINT AS BIGINT)")
 
 _TOL = 50          # RANSAC inlier tolerance, quantity units
 
@@ -56,8 +53,8 @@ _TOL = 50          # RANSAC inlier tolerance, quantity units
     ),
     cand AS (
         SELECT i,
-               {_H32I.format(p='ra:', c='i')} % n AS i1,
-               {_H32I.format(p='rb:', c='i')} % n AS i2
+               {h32_sql("'ra:' || CAST(i AS VARCHAR)")} % n AS i1,
+               {h32_sql("'rb:' || CAST(i AS VARCHAR)")} % n AS i2
         FROM (SELECT unnest(range(32)) AS i)
         CROSS JOIN (SELECT max(n) AS n FROM ranked)
     ),
@@ -528,8 +525,10 @@ def ml_lof_grid(spark, sf_dir):
     WITH pts AS ({_pts_sql('customer', 'c_custkey', 'c_nationkey', '')}),
     tl AS (
         SELECT t, l,
-               {_H32I.format(p='d:', c="CAST(t AS VARCHAR) || ':' || CAST(l AS VARCHAR)")} % 2 AS dim,
-               {_H32I.format(p='t:', c="CAST(t AS VARCHAR) || ':' || CAST(l AS VARCHAR)")} AS thr_h
+               {h32_sql("'d:' || CAST(t AS VARCHAR) || ':'"
+                        " || CAST(l AS VARCHAR)")} % 2 AS dim,
+               {h32_sql("'t:' || CAST(t AS VARCHAR) || ':'"
+                        " || CAST(l AS VARCHAR)")} AS thr_h
         FROM (SELECT unnest(range(8)) AS t)
         CROSS JOIN (SELECT unnest(range(1, 13)) AS l)
     ),

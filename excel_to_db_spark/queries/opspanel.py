@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32
-
-_H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
+from ..numerics import h32, h32_sql
 
 
 # --------------------------------------------------- learning curve
@@ -43,7 +41,7 @@ _H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
         SELECT CAST(round(value * 100) AS BIGINT) // 1000 AS b,
                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                    AS y,
-               ({_H32_DUCK.format(x="CAST(event_id AS VARCHAR)")})
+               ({h32_sql("CAST(event_id AS VARCHAR)")})
                    % 100 AS h
         FROM events WHERE event_type IN ('purchase', 'view')
     ),

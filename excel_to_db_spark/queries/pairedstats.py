@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
+from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -81,7 +81,7 @@ def _pairs(spark, sf_dir):
     ),
     zz AS (
         SELECT n_pairs, n_pos, n_neg,
-               round((abs(n_pos - n_neg) - 1.0)
+               round(greatest(abs(n_pos - n_neg) - 1.0, 0.0)
                      / sqrt(CAST(n_pos + n_neg AS DOUBLE)), 5) AS z
         FROM st
     )
@@ -97,7 +97,8 @@ def stats_sign_test(spark, sf_dir):
 
     Ties (a = b, possible at cent granularity) are dropped per the
     classic treatment; z uses the continuity-corrected normal
-    approximation (|n+ - n-| - 1)/sqrt(m) and the two-sided p is
+    approximation max(|n+ - n-| - 1, 0)/sqrt(m) (the correction stops
+    at 0, so a tie reads z = 0 and p = 1) and the two-sided p is
     erfc(z/sqrt(2)) via the A-S polynomial on the SNAPPED z (snap,
     then consume).
 
@@ -111,7 +112,8 @@ def stats_sign_test(spark, sf_dir):
         .alias("n_neg"))
     zz = st.select(
         "n_pairs", "n_pos", "n_neg",
-        F.round((F.abs(F.col("n_pos") - F.col("n_neg")) - 1.0)
+        F.round(F.greatest(F.abs(F.col("n_pos") - F.col("n_neg")) - 1.0,
+                           F.lit(0.0))
                 / F.sqrt((F.col("n_pos") + F.col("n_neg"))
                          .cast("double")), 5).alias("z"))
     z = F.col("z") / F.sqrt(F.lit(2.0))
@@ -300,14 +302,13 @@ def stats_cochran_q(spark, sf_dir):
 
 # --------------------------------------------------- Fleiss' kappa
 
-@query("eval_fleiss_kappa", oracle="""
+@query("eval_fleiss_kappa", oracle=f"""
     WITH ratings AS (
         SELECT d.doc_id,
                CAST((least(3, d.n_chars // 150)
-                     + CASE WHEN CAST(('0x' || substr(md5(
-                            CAST(d.doc_id AS VARCHAR) || ':'
-                            || CAST(r.r AS VARCHAR)), 1, 8))::UBIGINT
-                            AS BIGINT) % 5 = 0
+                     + CASE WHEN {h32_sql(
+                            "CAST(d.doc_id AS VARCHAR) || ':'"
+                            " || CAST(r.r AS VARCHAR)")} % 5 = 0
                             THEN 1 ELSE 0 END) % 4 AS INTEGER) AS cat
         FROM documents d
         CROSS JOIN (SELECT unnest([0, 1, 2]) AS r) r
@@ -359,7 +360,6 @@ def eval_fleiss_kappa(spark, sf_dir):
     Scale shape: a 3x explode + one (doc, cat) count aggregate + two
     1-row reduces; the rater dimension is a constant."""
     docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    from ..numerics import h32
     ratings = (docs
                .select("doc_id", "n_chars",
                        F.explode(F.array(F.lit(0), F.lit(1), F.lit(2)))

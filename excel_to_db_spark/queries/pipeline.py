@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import fixed_sum, h32
+from ..numerics import fixed_sum, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -275,12 +275,11 @@ def text_repetition(spark, sf_dir):
                 / F.greatest(F.size(grams), F.lit(1)), 6).alias("rep_ratio"))
 
 
-@query("sample_stratified", oracle="""
+@query("sample_stratified", oracle=f"""
     SELECT source, count(*) AS n_sampled,
            CAST(sum(n_chars) AS BIGINT) AS chars_sampled
     FROM documents
-    WHERE CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-               AS BIGINT) % 10 < 3
+    WHERE {h32_sql("CAST(doc_id AS VARCHAR)")} % 10 < 3
     GROUP BY source
 """)
 def sample_stratified(spark, sf_dir):
@@ -364,12 +363,11 @@ def text_vocab_mask(spark, sf_dir):
         F.md5(F.regexp_replace("text", pat, "[MASK]")).alias("masked_md5"))
 
 
-@query("sample_rebalance", oracle="""
+@query("sample_rebalance", oracle=f"""
     WITH rated AS (
         SELECT lang, n_chars,
                CASE lang WHEN 'en' THEN 3 WHEN 'zh' THEN 10 ELSE 8 END AS rate10,
-               CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                    AS BIGINT) % 10 AS bucket
+               {h32_sql("CAST(doc_id AS VARCHAR)")} % 10 AS bucket
         FROM documents
     )
     SELECT lang,

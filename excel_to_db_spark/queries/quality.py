@@ -18,7 +18,7 @@ from pyspark.sql.window import Window as W
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import cents_sum as _cents_sum, h32
+from ..numerics import cents_sum as _cents_sum, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -485,8 +485,7 @@ _CMS_CELL_SQL = """
 @query("sketch_count_min", oracle=f"""
     WITH base AS (
         SELECT user_id,
-               CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                    ::UBIGINT AS BIGINT) AS hb
+               {h32_sql("CAST(user_id AS VARCHAR)")} AS hb
         FROM events
     ),
     cells AS (
@@ -499,8 +498,7 @@ _CMS_CELL_SQL = """
     ),
     cand AS (
         SELECT user_id, CAST(count(*) AS BIGINT) AS true_cnt,
-               CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                    ::UBIGINT AS BIGINT) AS hb
+               {h32_sql("CAST(user_id AS VARCHAR)")} AS hb
         FROM events GROUP BY 1
         ORDER BY true_cnt DESC, user_id LIMIT 10
     ),

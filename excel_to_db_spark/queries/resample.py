@@ -36,9 +36,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import erfc, erfc_sql, h32
-
-_H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
+from ..numerics import erfc, erfc_sql, h32, h32_sql
 
 
 _BB_L = 30          # block length (days)
@@ -72,9 +70,9 @@ _BB_DRAW = 80       # blocks drawn per replicate (~n/L)
     nvalid AS (SELECT CAST(count(*) AS BIGINT) AS nv FROM starts),
     grid AS (
         SELECT r.r, j.j,
-               ({_H32_DUCK.format(
-                   x="CAST(r.r AS VARCHAR) || ':' || CAST(j.j"
-                     " AS VARCHAR)")}) % (SELECT nv FROM nvalid)
+               ({h32_sql(
+                   "CAST(r.r AS VARCHAR) || ':' || CAST(j.j AS VARCHAR)")})
+                   % (SELECT nv FROM nvalid)
                    AS pick
         FROM (SELECT unnest(range(1, {_BB_B + 1})) AS r) r,
              (SELECT unnest(range({_BB_DRAW})) AS j) j
@@ -301,8 +299,7 @@ def stats_fisher_z_test(spark, sf_dir):
     WITH pop AS (
         SELECT event_type AS stratum,
                CAST(round(value * 100) AS BIGINT) AS c,
-               CASE WHEN ({_H32_DUCK.format(
-                   x="CAST(event_id AS VARCHAR)")}) % 10
+               CASE WHEN ({h32_sql("CAST(event_id AS VARCHAR)")}) % 10
                          < CASE WHEN event_type = 'click' THEN 8
                            ELSE 2 END
                     THEN 1 ELSE 0 END AS sampled

@@ -26,12 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import h32, h32_sql
 from ..operators import physical
 from .registry import query
 from .relational import T
-
-_H32E = ("CAST(('0x' || substr(md5('{p}' || CAST(event_id AS VARCHAR)),"
-         " 1, 8))::UBIGINT AS BIGINT)")
 
 # speed test: meters^2 = d2(microdeg^2) * 0.012364 ; impossible when
 # meters > 250 * dt  <=>  (d2 // 1000) * 12364 > 62500 * dt*dt * 1000
@@ -42,8 +40,10 @@ _DT_CAP = 14400
     WITH ev AS (
         SELECT user_id, event_id,
                CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-               {_H32E.format(p='el:')} % 30000000 AS latp,
-               {_H32E.format(p='eo:')} % 50000000 AS lonp
+               {h32_sql("'el:' || CAST(event_id AS VARCHAR)")} % 30000000
+                   AS latp,
+               {h32_sql("'eo:' || CAST(event_id AS VARCHAR)")} % 50000000
+                   AS lonp
         FROM events
     ),
     hops AS (
@@ -80,7 +80,6 @@ def sec_impossible_travel(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
 
     def h(p):
-        from ..numerics import h32
         return h32(F.concat(F.lit(p), F.col("event_id").cast("string")))
 
     base = ev.select("user_id", "event_id",

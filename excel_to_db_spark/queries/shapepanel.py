@@ -32,9 +32,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32
-
-_H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
+from ..numerics import h32, h32_sql
 
 
 # ------------------------------------------------ Lorenz deciles
@@ -119,8 +117,7 @@ _BBIT_K = 64
 def _bbit_minhash_sql() -> str:
     return f"""
         SELECT seeds.seed, sets.w, sets.in_a, sets.in_b,
-               {_H32_DUCK.format(
-                   x="CAST(seeds.seed AS VARCHAR) || '#' || sets.w")}
+               {h32_sql("CAST(seeds.seed AS VARCHAR) || '#' || sets.w")}
                    AS h
         FROM (
             SELECT t[i] || ' ' || t[i + 1] || ' ' || t[i + 2] AS w,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..numerics import h32, h32_sql
 from ..operators import physical
 from .registry import query
 from .relational import T
@@ -1010,9 +1011,7 @@ _NEG_THRESH = 200_000_000  # h32 threshold: ~4.7% of the 32-bit space
     ),
     cand AS (
         SELECT a.q_id, e.vec_id, e.label,
-               CAST(('0x' || substr(md5(a.q_id || ':' ||
-                        CAST(e.vec_id AS VARCHAR)), 1, 8))::UBIGINT
-                    AS BIGINT) AS h
+               {h32_sql("a.q_id || ':' || CAST(e.vec_id AS VARCHAR)")} AS h
         FROM anchors a, embeddings e
         WHERE e.vec_id <> a.q_id AND e.label <> a.qlbl
     ),
@@ -1054,7 +1053,6 @@ def sample_negatives_contrastive(spark, sf_dir):
     anchors = (e.filter(F.col("vec_id") < 10)
                .select(F.col("vec_id").alias("q_id"),
                        F.col("label").alias("qlbl")))
-    from ..numerics import h32
     cand = (e.crossJoin(F.broadcast(anchors))
             .filter((F.col("vec_id") != F.col("q_id"))
                     & (F.col("label") != F.col("qlbl")))

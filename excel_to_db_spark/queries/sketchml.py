@@ -34,9 +34,8 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 
-_H32_DUCK = "CAST(('0x' || substr(md5({x}), 1, 8))::UBIGINT AS BIGINT)"
 
 # Trigram sets of the even/odd document halves (the corpus-diff pair
 # the rank-turbulence key also uses; trigrams because the unigram
@@ -74,7 +73,7 @@ def _tri_halves(spark, sf_dir):
 @query("sketch_kmv_jaccard", oracle=f"""
     WITH sets AS ({_TRI_HALVES_SQL}),
     hashed AS (
-        SELECT {_H32_DUCK.format(x='w')} AS h, in_a, in_b FROM sets
+        SELECT {h32_sql('w')} AS h, in_a, in_b FROM sets
     ),
     umin AS (
         SELECT h, in_a, in_b FROM hashed ORDER BY h LIMIT 256
@@ -143,13 +142,13 @@ _BLOOM_M = 65536
     train AS (SELECT w FROM sets WHERE in_a = 1),
     probe AS (SELECT w FROM sets WHERE in_a = 0 AND in_b = 1),
     occupied AS (
-        SELECT DISTINCT ({_H32_DUCK.format(
-            x="CAST(seed AS VARCHAR) || ':' || w")}) % {_BLOOM_M} AS pos
+        SELECT DISTINCT ({h32_sql(
+            "CAST(seed AS VARCHAR) || ':' || w")}) % {_BLOOM_M} AS pos
         FROM train, (SELECT unnest([1, 2, 3]) AS seed)
     ),
     probe_pos AS (
-        SELECT w, ({_H32_DUCK.format(
-            x="CAST(seed AS VARCHAR) || ':' || w")}) % {_BLOOM_M} AS pos
+        SELECT w, ({h32_sql(
+            "CAST(seed AS VARCHAR) || ':' || w")}) % {_BLOOM_M} AS pos
         FROM probe, (SELECT unnest([1, 2, 3]) AS seed)
     ),
     verdict AS (
@@ -242,7 +241,7 @@ _LC_M = 16384
 @query("sketch_linear_counting", oracle=f"""
     WITH sets AS ({_TRI_HALVES_SQL}),
     occ AS (
-        SELECT CAST(count(DISTINCT ({_H32_DUCK.format(x='w')})
+        SELECT CAST(count(DISTINCT ({h32_sql('w')})
                     % {_LC_M}) AS BIGINT) AS n_set
         FROM sets
     ),

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, fixed_sum, h32
+from ..numerics import chi2_sf, chi2_sf_sql, fixed_sum, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -188,15 +188,13 @@ def agg_higher_moments(spark, sf_dir):
 
 # ------------------------------------- Warner randomized response
 
-_RR_H_SQL = ("CAST(('0x' || substr(md5('rr:' || CAST(event_id AS VARCHAR)),"
-             " 1, 8))::UBIGINT AS BIGINT)")
-
 
 @query("privacy_randomized_response", oracle=f"""
     WITH coin AS (
         SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS truth,
-               {_RR_H_SQL} % 2 AS b1,
-               ({_RR_H_SQL} // 2) % 2 AS b2
+               {h32_sql("'rr:' || CAST(event_id AS VARCHAR)")} % 2 AS b1,
+               ({h32_sql("'rr:' || CAST(event_id AS VARCHAR)")} // 2) % 2
+                   AS b2
         FROM events
     ),
     agg AS (

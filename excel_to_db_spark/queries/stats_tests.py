@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators import physical
-from ..numerics import fixed_sum, h32
+from ..numerics import fixed_sum, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -1221,14 +1221,13 @@ def stats_hill_tail_index(spark, sf_dir):
 
 # ------------------------------------------ split-conformal prediction
 
-@query("stats_conformal_coverage", oracle="""
+@query("stats_conformal_coverage", oracle=f"""
     WITH li AS (
         SELECT l_orderkey * 8 + l_linenumber AS k,
                CAST(l_quantity AS BIGINT) AS x,
                CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-               CAST(('0x' || substr(md5('conf:' ||
-                        CAST(l_orderkey * 8 + l_linenumber AS VARCHAR)),
-                        1, 8))::UBIGINT AS BIGINT) % 10 AS sp
+               {h32_sql("'conf:' || CAST(l_orderkey * 8 + l_linenumber"
+                        " AS VARCHAR)")} % 10 AS sp
         FROM lineitem
     ),
     m AS (
@@ -1294,7 +1293,6 @@ def stats_conformal_coverage(spark, sf_dir):
     bucketed parallel ranking — no single-partition window, no
     data-sized TakeOrdered); betas and q ride as 1-row broadcasts.
     The coverage check is one more projected scan."""
-    from ..numerics import h32
     from ..operators.ranking import distributed_rank
 
     # Materialized once (r10): the split projection costs one md5 per
@@ -1516,11 +1514,9 @@ def stats_spearman(spark, sf_dir):
 
 # ------------------------------------------- experimentation operations
 
-@query("stats_srm_check", oracle="""
+@query("stats_srm_check", oracle=f"""
     WITH a AS (
-        SELECT CAST(('0x' || substr(md5('ab:' ||
-                        CAST(o_custkey AS VARCHAR)), 1, 8))::UBIGINT
-                    AS BIGINT) % 2 AS arm,
+        SELECT {h32_sql("'ab:' || CAST(o_custkey AS VARCHAR)")} % 2 AS arm,
                o_custkey
         FROM orders
     ),

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32
+from ..numerics import h32, h32_sql
 
 
 # ----------------------------------------------- embedding isotropy
@@ -289,12 +289,10 @@ def ts_periodogram(spark, sf_dir):
 
 # ------------------------------------------------ multiclass MCC
 
-@query("eval_mcc_multiclass", oracle="""
+@query("eval_mcc_multiclass", oracle=f"""
     WITH labeled AS (
         SELECT event_type AS y,
-               CASE WHEN CAST(('0x' || substr(md5(
-                        CAST(event_id AS VARCHAR)), 1, 8))::UBIGINT
-                        AS BIGINT) % 10 < 7
+               CASE WHEN {h32_sql("CAST(event_id AS VARCHAR)")} % 10 < 7
                     THEN event_type
                     ELSE CASE event_type
                          WHEN 'click' THEN 'error'

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, h32
+from ..numerics import erfc, erfc_sql, h32, h32_sql
 from .registry import query
 from .relational import T
 
@@ -291,14 +291,12 @@ _CV_H = ("(CASE WHEN {p} = 0 OR {p} = {n} THEN 0.0 ELSE "
          "- (({n} - {p}) * 1.0 / {n}) * ln(({n} - {p}) * 1.0 / {n}) "
          "END)")
 
-_CV_ID_SQL = ("CAST(('0x' || substr(md5('cv:' || CAST(l_orderkey AS "
-              "VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)), 1, 8))"
-              "::UBIGINT AS BIGINT) % 5")
-
 
 @query("ml_cv_stump", oracle=f"""
     WITH hist AS (
-        SELECT {_CV_ID_SQL} AS fold, CAST(l_quantity AS BIGINT) AS q,
+        SELECT {h32_sql("'cv:' || CAST(l_orderkey AS VARCHAR) || '-'"
+                        " || CAST(l_linenumber AS VARCHAR)")} % 5 AS fold,
+               CAST(l_quantity AS BIGINT) AS q,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
                     AS BIGINT) AS pos

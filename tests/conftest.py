@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import uuid
@@ -11,6 +12,12 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def h32(s: str) -> int:
+    """First 32 bits of md5(s): the hashlib reference the engines'
+    `numerics.h32` and `h32_sql` are checked against."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def plan_text(df) -> str:

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from conftest import h32
+
 
 def test_train_val_split_is_disjoint_total_and_stable(spark, sf_dir):
     from excel_to_db_spark.queries.curation2 import pipeline_train_val_split
@@ -233,7 +235,6 @@ def test_bootstrap_ci_brackets_the_true_mean(spark, sf_dir):
 def test_feature_hashing_census_matches_direct_vectors(spark):
     import tempfile
     from collections import Counter
-    import hashlib
     from excel_to_db_spark.queries.curation2 import text_feature_hashing
 
     docs = [(1, "a b a c"), (2, "x x x"), (3, "p q r s t u v w")]
@@ -242,9 +243,6 @@ def test_feature_hashing_census_matches_direct_vectors(spark):
     (d.withColumn("lang", F.lit("en")).withColumn("source", F.lit("s"))
      .withColumn("n_chars", F.length("text"))
      .write.mode("overwrite").parquet(f"{tmp}/documents.parquet"))
-
-    def h32(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
     want = {}
     for doc_id, text in docs:

@@ -13,6 +13,8 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 
+from conftest import h32
+
 
 def test_kmv_merge_law_exact(spark, sf_dir):
     from excel_to_db_spark.queries.estimation import sketch_kmv_distinct
@@ -448,7 +450,6 @@ def test_union_by_name_no_positional_mixup(spark, sf_dir):
 
 
 def test_dp_median_mechanism_contract(spark, sf_dir):
-    import hashlib
     import math
     from excel_to_db_spark.queries.estimation import privacy_dp_median
     rows = sorted(privacy_dp_median(spark, sf_dir).collect(),
@@ -468,7 +469,7 @@ def test_dp_median_mechanism_contract(spark, sf_dir):
         less, greater = cum, n - cum - c
         cum += c
         assert r.utility == -abs(less - greater)
-        h = int(hashlib.md5(f"dpmed:{r.qty}".encode()).hexdigest()[:8], 16)
+        h = h32(f"dpmed:{r.qty}")
         u01 = (h + 0.5) / 2**32
         want = round((r.utility / 2.0 - math.log(-math.log(u01))) * 1e9)
         assert r.score_nano == want

@@ -8,6 +8,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 
 def _milli_vectors(sf_dir):
     df = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
@@ -232,7 +234,6 @@ def test_perplexity_buckets_tercile_accounting(spark, sf_dir):
 
 
 def test_negative_sampling_contract(spark, sf_dir):
-    import hashlib
     from excel_to_db_spark.queries.similarity2 import (
         sample_negatives_contrastive)
     rows = sample_negatives_contrastive(spark, sf_dir).collect()
@@ -246,8 +247,7 @@ def test_negative_sampling_contract(spark, sf_dir):
         assert r.label != label[r.q_id]      # negatives only
         assert r.vec_id != r.q_id
         assert r.h < 200_000_000
-        want_h = int(hashlib.md5(
-            f"{r.q_id}:{r.vec_id}".encode()).hexdigest()[:8], 16)
+        want_h = h32(f"{r.q_id}:{r.vec_id}")
         assert r.h == want_h                  # replayable draw
     for q, rs in per_q.items():
         rs.sort(key=lambda r: r.neg_rank)

@@ -6,10 +6,10 @@ toward the pooled mean harder than large ones."""
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
+
+from conftest import h32
 
 
 def _r(x, d):
@@ -62,15 +62,11 @@ def test_calibration_ece_accounting(spark, sf_dir):
     assert {r.ece for r in rows} == {want_ece}
 
 
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-
 def test_capture_recapture_replay(spark, sf_dir):
     from excel_to_db_spark.queries.evalml import stats_capture_recapture
     row = stats_capture_recapture(spark, sf_dir).collect()[0]
     ev = pd.read_parquet(f"{sf_dir}/events.parquet")
-    lane = ev["event_id"].map(lambda i: _h32(str(i)) % 4)
+    lane = ev["event_id"].map(lambda i: h32(str(i)) % 4)
     c1 = set(ev.loc[lane == 0, "user_id"])
     c2 = set(ev.loc[lane == 1, "user_id"])
     assert (row.n1, row.n2, row.m) == (len(c1), len(c2), len(c1 & c2))

@@ -4,15 +4,11 @@ OBF sequential looks at sf0.001."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 
+from conftest import h32
+
 OBF = (23785, 11269, 7182, 5244, 4125)
-
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def _events(sf_dir):
@@ -20,7 +16,7 @@ def _events(sf_dir):
                         columns=["ts", "user_id", "event_type"])
     e["sec"] = e.ts.values.astype("datetime64[s]").astype("int64")
     e["hr"] = e.sec // 3600
-    e["arm"] = [_h32(f"sb:{h}") % 2 for h in e.hr]
+    e["arm"] = [h32(f"sb:{h}") % 2 for h in e.hr]
     return e
 
 
@@ -52,7 +48,7 @@ def test_cluster_randomized(spark, sf_dir):
     e["pur"] = e.event_type == "purchase"
     per = {}
     for uid, g in e.groupby("user_id"):
-        arm = _h32(f"cr:{uid}") % 2
+        arm = h32(f"cr:{uid}") % 2
         n, c = len(g), int(g.pur.sum())
         per.setdefault(arm, []).append((n, c, c * 10 ** 6 // n))
     for arm, lst in per.items():

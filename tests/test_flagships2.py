@@ -5,23 +5,20 @@ cascade recomputation."""
 
 from __future__ import annotations
 
-import hashlib
 from collections import Counter
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 W_BITS = 26
-
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def _registers(keys):
     regs = {}
     for k in keys:
-        h = _h32(f"hll:{k}")
+        h = h32(f"hll:{k}")
         b, w = h >> W_BITS, h % (1 << W_BITS)
         r = (W_BITS + 1) if w == 0 else (W_BITS + 1 - w.bit_length())
         regs[b] = max(regs.get(b, 0), r)

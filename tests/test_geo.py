@@ -5,25 +5,22 @@ and the tile rollup against its own conservation laws."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 LAT_SPAN = 30_000_000
 LON_SPAN = 50_000_000
-
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def _points(sf_dir, table="customer", key="c_custkey", pfx=""):
     d = pd.read_parquet(f"{sf_dir}/{table}.parquet", columns=[key])
     ids = d[key].astype("int64").to_numpy()
-    lat = np.array([_h32(f"{pfx}lat:{i}") % LAT_SPAN for i in ids])
-    lon = np.array([_h32(f"{pfx}lon:{i}") % LON_SPAN for i in ids])
+    lat = np.array([h32(f"{pfx}lat:{i}") % LAT_SPAN for i in ids])
+    lon = np.array([h32(f"{pfx}lon:{i}") % LON_SPAN for i in ids])
     return ids, lat, lon
 
 

@@ -5,14 +5,11 @@ value, including ground-truth recovery rates."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import pandas as pd
 
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from conftest import h32
 
 
 def _lev(a: str, b: str) -> int:
@@ -32,8 +29,8 @@ def _corpus(sf_dir):
     for r in p.itertuples():
         s = f"{r.p_name} {r.p_brand} {r.p_type} sz{r.p_size}"
         clean[r.p_partkey] = s
-        op = _h32(f"ed:{r.p_partkey}") % 4
-        pos = 1 + _h32(f"pos:{r.p_partkey}") % (len(s) - 1)
+        op = h32(f"ed:{r.p_partkey}") % 4
+        pos = 1 + h32(f"pos:{r.p_partkey}") % (len(s) - 1)
         i = pos - 1                      # 0-based
         if op == 0:
             d = s[:i] + s[i + 1:]

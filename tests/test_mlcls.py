@@ -6,15 +6,12 @@ paired outcome cells."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from conftest import h32
 
 
 def _r(x, d):
@@ -27,7 +24,7 @@ def test_naive_bayes_matches_numpy_replay(spark, sf_dir):
     got = {(r.actual_lang, r.pred_lang): r.n_docs
            for r in ml_naive_bayes(spark, sf_dir).collect()}
     d = pd.read_parquet(f"{sf_dir}/documents.parquet")
-    d["u"] = d["doc_id"].map(lambda i: _h32(f"nb:{i}") % 5)
+    d["u"] = d["doc_id"].map(lambda i: h32(f"nb:{i}") % 5)
     train, test = d[d["u"] != 0], d[d["u"] == 0]
     classes = sorted(train["lang"].unique())
     vocab = sorted({t for s in train["text"] for t in s.split(" ")})
@@ -95,7 +92,7 @@ def test_avg_precision_matches_sweep(spark, sf_dir):
     row = eval_avg_precision(spark, sf_dir).collect()[0]
     d = pd.read_parquet(f"{sf_dir}/documents.parquet")
     lab = (d["lang"] == "en").astype(int).to_numpy()
-    s = (d["doc_id"].map(lambda i: _h32(f"ap:{i}") % 1000).to_numpy()
+    s = (d["doc_id"].map(lambda i: h32(f"ap:{i}") % 1000).to_numpy()
          + lab * 300)
     order = np.lexsort((d["doc_id"].to_numpy(), -s))
     lab_sorted = lab[order]

@@ -4,17 +4,14 @@ isolation grid at sf0.001."""
 
 from __future__ import annotations
 
-import hashlib
 from collections import Counter, defaultdict
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 LAT_SPAN, LON_SPAN = 30_000_000, 50_000_000
-
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def _daily(sf_dir):
@@ -32,7 +29,7 @@ def _daily(sf_dir):
 def _points(sf_dir):
     d = pd.read_parquet(f"{sf_dir}/customer.parquet", columns=["c_custkey"])
     ids = d.c_custkey.astype("int64").tolist()
-    return {i: (_h32(f"lat:{i}") % LAT_SPAN, _h32(f"lon:{i}") % LON_SPAN)
+    return {i: (h32(f"lat:{i}") % LAT_SPAN, h32(f"lon:{i}") % LON_SPAN)
             for i in ids}
 
 
@@ -43,7 +40,7 @@ def test_ransac_line(spark, sf_dir):
     n = len(pts)
     best = None
     for i in range(32):
-        i1, i2 = _h32(f"ra:{i}") % n, _h32(f"rb:{i}") % n
+        i1, i2 = h32(f"ra:{i}") % n, h32(f"rb:{i}") % n
         if i1 == i2:
             continue
         (x1, y1), (x2, y2) = pts[i1], pts[i2]
@@ -137,9 +134,9 @@ def test_isolation_grid(spark, sf_dir):
         for i, (la, lo) in pts.items():
             pfx, k = 0, []
             for l in range(1, 13):
-                dim = _h32(f"d:{t}:{l}") % 2
-                thr = (_h32(f"t:{t}:{l}") % LAT_SPAN if dim == 0
-                       else _h32(f"t:{t}:{l}") % LON_SPAN)
+                dim = h32(f"d:{t}:{l}") % 2
+                thr = (h32(f"t:{t}:{l}") % LAT_SPAN if dim == 0
+                       else h32(f"t:{t}:{l}") % LON_SPAN)
                 coord = la if dim == 0 else lo
                 pfx += (1 if coord < thr else 0) * 10 ** l
                 k.append(pfx)

@@ -1,6 +1,6 @@
 """numerics.py: the one place that turns a test statistic into a
-p-value (and hashes a value to 32 bits), on Spark and in the DuckDB
-oracles alike."""
+p-value and hashes a value to 32 bits or to a uniform, on Spark and in
+the DuckDB oracles alike."""
 
 from __future__ import annotations
 
@@ -11,17 +11,29 @@ import re
 import duckdb
 import pytest
 
-from conftest import SF_DIR
-from excel_to_db_spark.numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
+from conftest import SF_DIR, h32 as md5_h32
+from excel_to_db_spark.numerics import (
+    chi2_sf, chi2_sf_sql, erfc, erfc_sql, h32, h32_sql, u01, u01_sql)
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_db_spark"
+
+# The first 8 hex chars of one md5 call, the argument spanning lines
+# and Python string pieces; the 64-bit simhash (1, 16) and dedup's low
+# half (9, 8) are other hashes and do not match.
+_FIRST_8 = r"(?:(?!md5\().){0,200}?,[\s\"']*1,\s*8\)"
 
 # Each of these outside numerics.py is a hand copy of a shared formula.
 _OUTSIDE_NUMERICS = {
     "A-S 7.1.26 erfc": re.compile(r"0\.3275911|0\.254829592"),
     "Wilson-Hilferty": re.compile(r"2\.0 / \(9\.0 \*"),
-    "h32": re.compile(
-        r"conv\(\s*F\.substring\(\s*F\.md5\(.{0,80}?\),\s*1,\s*8\)", re.S),
+    "h32 (Spark Column)": re.compile(
+        r"conv\(\s*F\.substring\(\s*F\.md5\(" + _FIRST_8, re.S),
+    "h32 (Spark SQL)": re.compile(r"conv\(\s*substring\(\s*md5\("),
+    "h32 (DuckDB)": re.compile(
+        r"'0x'\s*\|\|\s*substr\(\s*md5\(" + _FIRST_8, re.S),
+    "h32 (DuckDB concat)": re.compile(
+        r"concat\(\s*'0x'\s*,\s*substring\(\s*md5\("),
+    "u01": re.compile(r"/\s*4294967296\.0"),
 }
 
 # z from -4 to 4: the reflection branch, zero, and both tails.
@@ -90,3 +102,37 @@ def test_wilson_hilferty_keys_match_the_exact_erfc(spark, key):
     z = ((row[stat] / f) ** (1 / 3) - (1 - 2 / (9 * f))) \
         / math.sqrt(2 / (9 * f)) / math.sqrt(2)
     assert abs(row.p_value - 0.5 * math.erfc(z)) <= 1e-7, (z, row)
+
+
+# '' and NULL, digits as strings, non-ASCII text and the key shapes.
+_STRINGS = ["", "0", "42", "-7", "007", "a", "split:12", "hll:3",
+            "héllo", "日本語", "naïve café", "x y z", None]
+
+
+def _twins(spark, col_fn, sql_fn):
+    """{string: (Spark value, DuckDB value)} over `_STRINGS`."""
+    rows = list(enumerate(_STRINGS))
+    df = spark.createDataFrame(rows, "i int, s string")
+    got = dict(df.select("i", col_fn(df.s).alias("h")).collect())
+    values = ", ".join(
+        f"({i}, {'NULL' if s is None else repr(s)}::VARCHAR)"
+        for i, s in rows)
+    duck = dict(duckdb.sql(
+        f"SELECT i, {sql_fn('s')} AS h FROM (VALUES {values}) v(i, s)"
+    ).fetchall())
+    return {s: (got[i], duck[i]) for i, s in rows}
+
+
+def test_h32_twins_agree_on_both_engines(spark):
+    for s, (got, duck) in _twins(spark, h32, h32_sql).items():
+        want = None if s is None else md5_h32(s)
+        assert got == duck == want, s
+
+
+def test_u01_twins_agree_on_both_engines(spark):
+    for s, (got, duck) in _twins(spark, u01, u01_sql).items():
+        if s is None:
+            assert got is None and duck is None
+            continue
+        assert got == duck == (md5_h32(s) + 0.5) / 2 ** 32, s
+        assert 0.0 < got < 1.0, s

@@ -5,21 +5,18 @@ scan."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import Counter
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 
 def _r(x, d):
     scale = 10 ** d
     return math.floor(abs(x) * scale + 0.5) / scale * (1 if x >= 0 else -1)
-
-
-def _h32(s):
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def test_learning_curve_hashlib_replay(spark, sf_dir):
@@ -32,7 +29,7 @@ def test_learning_curve_hashlib_replay(spark, sf_dir):
     ev["b"] = (np.floor(ev["value"] * 100 + 0.5).astype("int64")
                // 1000)
     ev["y"] = (ev["event_type"] == "purchase").astype(int)
-    ev["h"] = [(_h32(str(e)) % 100) for e in ev["event_id"]]
+    ev["h"] = [(h32(str(e)) % 100) for e in ev["event_id"]]
 
     def best_thr(sub):
         hist = (sub.groupby("b")["y"].agg(["size", "sum"])

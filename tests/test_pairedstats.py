@@ -5,11 +5,12 @@ rater replay."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
+
+from conftest import h32
 
 
 def _r(x, d):
@@ -35,9 +36,36 @@ def test_sign_test_counts(spark, sf_dir):
     a, b = _paired_daily(sf_dir)
     npos, nneg = int((a > b).sum()), int((a < b).sum())
     assert (row.n_pairs, row.n_pos, row.n_neg) == (len(a), npos, nneg)
-    z = (abs(npos - nneg) - 1.0) / math.sqrt(npos + nneg)
+    z = max(abs(npos - nneg) - 1.0, 0.0) / math.sqrt(npos + nneg)
     assert row.z == _r(z, 5)
     assert 0.0 <= row.p_value <= 1.0
+
+
+def test_sign_test_tie_reads_p_one(spark, monkeypatch):
+    """15 days ahead, 15 behind and 2 level: the continuity correction
+    stops at 0, so z = 0 and p = 1 on both engines (not p > 1)."""
+    import datetime
+
+    import duckdb
+
+    from excel_to_db_spark.queries import REGISTRY
+    from excel_to_db_spark.queries import pairedstats as P
+
+    days = [datetime.datetime(2024, 1, 1) + datetime.timedelta(days=i)
+            for i in range(32)]
+    rows = [(d, 2 if i < 15 else 1, 1 if i < 15 else 2 if i < 30 else 1)
+            for i, d in enumerate(days)]
+    monkeypatch.setattr(P, "_pairs", lambda spark, sf_dir: (
+        spark.createDataFrame(rows, "day timestamp, a bigint, b bigint")))
+    values = ", ".join(f"(TIMESTAMP '{d}', {a}, {b})" for d, a, b in rows)
+    oracle = REGISTRY["stats_sign_test"].oracle
+    assert P._PAIRS_SQL in oracle
+    duck = duckdb.sql(oracle.replace(
+        P._PAIRS_SQL, f"SELECT * FROM (VALUES {values}) v(day, a, b)"))
+    for row in (P.stats_sign_test(spark, "unused").collect()[0].asDict(),
+                dict(zip(duck.columns, duck.fetchone()))):
+        assert (row["n_pairs"], row["n_pos"], row["n_neg"]) == (32, 15, 15)
+        assert row["z"] == 0.0 and row["p_value"] == 1.0, row
 
 
 def test_wilcoxon_signed_rank_vs_pandas_ranks(spark, sf_dir):
@@ -89,8 +117,7 @@ def test_fleiss_kappa_hash_replay(spark, sf_dir):
     for doc, nch in zip(docs["doc_id"], docs["n_chars"]):
         base = min(3, int(nch) // 150)
         for rr in range(3):
-            h = int(hashlib.md5(f"{doc}:{rr}".encode()).hexdigest()[:8],
-                    16)
+            h = h32(f"{doc}:{rr}")
             cat = (base + (1 if h % 5 == 0 else 0)) % 4
             cells[(doc, cat)] = cells.get((doc, cat), 0) + 1
     n_items = len(docs)

@@ -4,20 +4,17 @@ stratification recovery, and WoE/IV vs a Counter replay."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 
 def _r(x, d):
     scale = 10 ** d
     return math.floor(abs(x) * scale + 0.5) / scale * (1 if x >= 0 else -1)
-
-
-def _h32(s):
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def test_block_bootstrap_hashlib_replay(spark, sf_dir):
@@ -35,7 +32,7 @@ def test_block_bootstrap_hashlib_replay(spark, sf_dir):
     nv = len(bs)
     means = []
     for rr in range(1, B + 1):
-        tot = sum(int(bs[_h32(f"{rr}:{j}") % nv]) for j in range(DRAW))
+        tot = sum(int(bs[h32(f"{rr}:{j}") % nv]) for j in range(DRAW))
         means.append(round(tot / (DRAW * L)))
     means = np.array(means, dtype="int64")
     assert (row.n_days, row.n_replicates) == (len(y), B)
@@ -76,7 +73,7 @@ def test_poststratify_recovers_truth(spark, sf_dir):
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["event_id", "event_type", "value"])
     ev["c"] = np.floor(ev["value"] * 100 + 0.5).astype("int64")
-    keep = [(8 if t == "click" else 2) > _h32(str(e)) % 10
+    keep = [(8 if t == "click" else 2) > h32(str(e)) % 10
             for e, t in zip(ev["event_id"], ev["event_type"])]
     ev["sampled"] = np.array(keep, dtype=int)
     g = ev.groupby("event_type").agg(

@@ -3,14 +3,11 @@ replay of the travel/burst/rare-combo detections at sf0.001."""
 
 from __future__ import annotations
 
-import hashlib
 from collections import Counter, defaultdict
 
 import pandas as pd
 
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from conftest import h32
 
 
 def _events(sf_dir):
@@ -32,8 +29,8 @@ def test_impossible_travel(spark, sf_dir):
         checked = imp = 0
         prev = None
         for sec, eid in seq:
-            lat = _h32(f"el:{eid}") % 30_000_000
-            lon = _h32(f"eo:{eid}") % 50_000_000
+            lat = h32(f"el:{eid}") % 30_000_000
+            lon = h32(f"eo:{eid}") % 50_000_000
             if prev is not None:
                 psec, plat, plon = prev
                 dt = sec - psec

@@ -5,20 +5,17 @@ order statistics."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
+from conftest import h32
+
 
 def _r(x, d):
     scale = 10 ** d
     return math.floor(abs(x) * scale + 0.5) / scale * (1 if x >= 0 else -1)
-
-
-def _h32(s):
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def test_lorenz_deciles_sorted_cumsum(spark, sf_dir):
@@ -55,8 +52,8 @@ def test_bbit_minhash_hashlib_replay(spark, sf_dir):
             tgt.add(f"{w[i]} {w[i+1]} {w[i+2]}")
     eq = 0
     for seed in range(64):
-        ba = min(_h32(f"{seed}#{w}") for w in a) % 2
-        bb = min(_h32(f"{seed}#{w}") for w in b) % 2
+        ba = min(h32(f"{seed}#{w}") for w in a) % 2
+        bb = min(h32(f"{seed}#{w}") for w in b) % 2
         eq += int(ba == bb)
     assert (row.k, row.eq) == (64, eq)
     assert row.jaccard_est_1bit == _r(2.0 * (eq / 64 - 0.5), 6)

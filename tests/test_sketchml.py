@@ -4,12 +4,13 @@ formula, and Newton logistic vs an explicit numpy IRLS."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import Counter
 
 import numpy as np
 import pandas as pd
+
+from conftest import h32
 
 _M_BLOOM = 65536
 _M_LC = 16384
@@ -18,10 +19,6 @@ _M_LC = 16384
 def _r(x, d):
     scale = 10 ** d
     return math.floor(abs(x) * scale + 0.5) / scale * (1 if x >= 0 else -1)
-
-
-def _h32(s):
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
 def _halves(sf_dir):
@@ -42,7 +39,7 @@ def test_kmv_jaccard_set_algebra(spark, sf_dir):
     a, b = _halves(sf_dir)
     uni = a | b
     inter = a & b
-    kmin = sorted(uni, key=_h32)[:256]
+    kmin = sorted(uni, key=h32)[:256]
     hits = sum(1 for w in kmin if w in a and w in b)
     assert (row.k, row.hits) == (min(256, len(uni)), hits)
     assert row.jaccard_est == _r(hits / row.k, 6)
@@ -57,9 +54,9 @@ def test_bloom_fpr_bitset_replay(spark, sf_dir):
     row = sketch_bloom_fpr(spark, sf_dir).collect()[0]
     a, b = _halves(sf_dir)
     probe = b - a
-    bits = {_h32(f"{s}:{w}") % _M_BLOOM for w in a for s in (1, 2, 3)}
+    bits = {h32(f"{s}:{w}") % _M_BLOOM for w in a for s in (1, 2, 3)}
     fp = sum(1 for w in probe
-             if all(_h32(f"{s}:{w}") % _M_BLOOM in bits
+             if all(h32(f"{s}:{w}") % _M_BLOOM in bits
                     for s in (1, 2, 3)))
     assert (row.n_train, row.n_bits_set) == (len(a), len(bits))
     assert (row.n_probes, row.n_false_pos) == (len(probe), fp)
@@ -75,7 +72,7 @@ def test_linear_counting_formula(spark, sf_dir):
     row = sketch_linear_counting(spark, sf_dir).collect()[0]
     a, b = _halves(sf_dir)
     uni = a | b
-    occ = {_h32(w) % _M_LC for w in uni}
+    occ = {h32(w) % _M_LC for w in uni}
     est = -_M_LC * math.log((_M_LC - len(occ)) / _M_LC)
     assert (row.n_set, row.ndv) == (len(occ), len(uni))
     assert row.ndv_est == _r(est, 2)

@@ -5,15 +5,12 @@ Friedman's statistic from an independent midrank recompute."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from conftest import h32
 
 
 def _r(x, d):
@@ -65,7 +62,7 @@ def test_randomized_response_replay(spark, sf_dir):
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["event_id", "event_type"])
     truth = (ev["event_type"] == "error").astype(int).to_numpy()
-    h = ev["event_id"].map(lambda i: _h32(f"rr:{i}")).to_numpy()
+    h = ev["event_id"].map(lambda i: h32(f"rr:{i}")).to_numpy()
     b1, b2 = h % 2, (h // 2) % 2
     reported = np.where(b1 == 1, truth, b2)
     assert (row.n, row.n_true) == (len(ev), int(truth.sum()))

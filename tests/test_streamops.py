@@ -5,9 +5,9 @@ and the HLL registers must equal a pure-Python register build."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
+
+from conftest import h32
 
 W_BITS = 26
 
@@ -23,7 +23,7 @@ def test_stream_hll_equals_batch(spark, sf_dir):
                            columns=["o_custkey"]).o_custkey.tolist()
     regs = {}
     for k in keys:
-        h = int(hashlib.md5(f"hll:{k}".encode()).hexdigest()[:8], 16)
+        h = h32(f"hll:{k}")
         b_, w = h >> W_BITS, h % (1 << W_BITS)
         r = (W_BITS + 1) if w == 0 else (W_BITS + 1 - w.bit_length())
         regs[b_] = max(regs.get(b_, 0), r)

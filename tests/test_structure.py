@@ -5,11 +5,12 @@ sklearn-free confusion replay."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
+
+from conftest import h32
 
 
 def _r(x, d):
@@ -80,7 +81,7 @@ def test_mcc_multiclass_confusion_replay(spark, sf_dir):
              "purchase": "signup", "signup": "view", "view": "click"}
 
     def pred(eid, et):
-        h = int(hashlib.md5(str(eid).encode()).hexdigest()[:8], 16)
+        h = h32(str(eid))
         return et if h % 10 < 7 else shift[et]
 
     yhat = [pred(e, t) for e, t in zip(ev["event_id"],

@@ -5,15 +5,12 @@ stump vs an independent per-fold train/test replay."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
 import pandas as pd
 
-
-def _h32(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+from conftest import h32
 
 
 def _r(x, d):
@@ -98,7 +95,7 @@ def test_cv_stump_per_fold_replay(spark, sf_dir):
         columns=["l_orderkey", "l_linenumber", "l_quantity",
                  "l_returnflag"])
     li["fold"] = [
-        _h32(f"cv:{o}-{ln}") % 5
+        h32(f"cv:{o}-{ln}") % 5
         for o, ln in zip(li["l_orderkey"], li["l_linenumber"])]
     li["q"] = li["l_quantity"].astype(int)
     li["pos"] = (li["l_returnflag"] == "R").astype(int)
