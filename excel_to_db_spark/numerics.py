@@ -7,10 +7,21 @@ between Spark's parallel accumulation and an oracle's sequential one
 (observed: half-cent boundary flakes, CORRECTNESS r3
 `jsonl_roundtrip`). The fix is structural: accumulate in integer
 fixed-point units (BIGINT — associative, order-free), divide and round
-ONCE at the end. Oracle twin for the default cents scale:
-
-    round(sum(CAST(round(x * 100) AS BIGINT)) / 100.0, 2)
-
+ONCE at the end. Six functions spell it, three per engine:
+- `units_sum(col, scale)` / `units_sum_sql(x, scale)`: the BIGINT sum
+  of round(x * scale), x as written at scale 1. The SQL twin casts the
+  sum back to BIGINT, so DuckDB (whose sum of BIGINT is HUGEINT) raises
+  on overflow past 2^63 as Spark's ANSI sum does;
+- `fixed_sum(col, scale, digits)` / `fixed_sum_sql(x, scale, digits)`:
+  those units divided by the scale and rounded to `digits`;
+- `cents_sum(col)` / `cents_sum_sql(x)`: the 2dp money default,
+  `round(<units at 100> / 100.0, 2)` in SQL.
+The SQL text is valid in DuckDB and in Spark SQL alike, and `where=`
+adds the aggregate's `FILTER (WHERE ...)` clause. A caller
+passes the scale as the Python number of the literal it means, and the
+SQL twins keep that literal's type: an int renders as itself (INTEGER;
+its divisor `100.0` is a DECIMAL literal), a float in exponent form
+(`1e6`, DOUBLE on both engines; `1000000.0` would be DECIMAL).
 Window RUNNING sums are exempt (their frame order is pinned by ORDER
 BY, so plain doubles are already deterministic).
 
@@ -41,21 +52,66 @@ lambda (`F.transform(words, h32)`), not as `conv(substring(md5(...`.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def units_sum(col: Column, scale: float = 1) -> Column:
+    """sum(col) accumulated in integer `scale`ths, as BIGINT units; at
+    scale 1 the column is rounded as it stands. `scale` must make
+    round(col * scale) fit in BIGINT for the corpus (cents: 100; stat
+    residuals: up to 1e9). SQL twin: `units_sum_sql`."""
+    units = col if scale == 1 else col * scale
+    return F.sum(F.round(units).cast("bigint"))
+
+
 def fixed_sum(col: Column, scale: float = 100.0, digits: int = 2) -> Column:
     """sum(col) accumulated in integer `scale`ths, rounded to `digits`.
-    `scale` must make round(col * scale) fit in BIGINT for the corpus
-    (cents: 100; stat residuals: up to 1e9)."""
-    return F.round(F.sum(F.round(col * scale).cast("bigint")) / scale,
-                   digits)
+    SQL twin: `fixed_sum_sql`."""
+    return F.round(units_sum(col, scale) / scale, digits)
 
 
 def cents_sum(col: Column) -> Column:
-    """The 2dp money default: sum in integer cents."""
+    """The 2dp money default: sum in integer cents. SQL twin:
+    `cents_sum_sql`."""
     return fixed_sum(col, 100.0, 2)
+
+
+def _sql_number(v: float) -> str:
+    """`v` as a SQL literal of its Python type: an int as itself, a
+    float in exponent form (1e6 -> `1e6`)."""
+    if isinstance(v, int):
+        return str(v)
+    _, digits, exp = Decimal(repr(v)).normalize().as_tuple()
+    return f"{''.join(map(str, digits))}e{exp}"
+
+
+def units_sum_sql(x: str, scale: float = 1,
+                  where: str | None = None) -> str:
+    """SQL twin of `units_sum`; `x` is a SQL expression. `where` adds
+    the aggregate's `FILTER (WHERE ...)` clause."""
+    units = x if scale == 1 else f"({x}) * {_sql_number(scale)}"
+    agg = f"sum(CAST(round({units}) AS BIGINT))"
+    if where is not None:
+        agg += f" FILTER (WHERE {where})"
+    return f"CAST({agg} AS BIGINT)"
+
+
+def fixed_sum_sql(x: str, scale: float = 100, digits: int = 2,
+                  where: str | None = None) -> str:
+    """SQL twin of `fixed_sum`: the units over `scale` (an int scale
+    divides by its DECIMAL literal, `100.0`), rounded to `digits`."""
+    divisor = (f"{scale}.0" if isinstance(scale, int)
+               else _sql_number(scale))
+    return (f"round({units_sum_sql(x, scale, where)} / {divisor},"
+            f" {digits})")
+
+
+def cents_sum_sql(x: str, where: str | None = None) -> str:
+    """SQL twin of `cents_sum`."""
+    return fixed_sum_sql(x, where=where)
 
 
 def h32(col: Column) -> Column:

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 _MAX_DEV = 4          # TPC-H ships within ~121 days => dev 0..4
 
@@ -223,13 +224,12 @@ def act_chain_ladder_ultimate(spark, sf_dir):
         .alias("reserve_cents"))
 
 
-@query("act_frequency_severity", oracle="""
+@query("act_frequency_severity", oracle=f"""
     WITH seg AS (
         SELECT c.c_mktsegment AS segment,
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_custs,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS tot_cents
+               {units_sum_sql('o.o_totalprice', 100)} AS tot_cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1
     )
@@ -252,8 +252,8 @@ def act_frequency_severity(spark, sf_dir):
            .agg(F.count("*").alias("n_orders"),
                 F.countDistinct("o_custkey").cast("bigint")
                 .alias("n_custs"),
-                F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).cast("bigint").alias("tot_cents")))
+                units_sum(F.col("o_totalprice"), 100).cast("bigint")
+                .alias("tot_cents")))
     return seg.select(
         "segment", "n_orders", "n_custs",
         F.expr("n_orders * 1000 div n_custs").alias("freq_milli"),

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 _SCORED_SQL = """
@@ -184,21 +185,14 @@ def eval_spiegelhalter_z(spark, sf_dir):
 
 # ------------------------------------- calibration slope/intercept
 
-_CAL_STEP_SQL = """
+_P = "1 / (1 + exp(-({a}) - ({b}) * x))"
+_CAL_STEP_SQL = f"""
     SELECT CAST(count(*) AS BIGINT) AS n,
-           sum(CAST(round((y - 1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * 1e6) AS BIGINT)) AS g_a,
-           sum(CAST(round((y - 1 / (1 + exp(-({a}) - ({b}) * x))) * x
-                          * 1e6) AS BIGINT)) AS g_b,
-           sum(CAST(round((1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * (1 - 1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * 1e6) AS BIGINT)) AS h_aa,
-           sum(CAST(round((1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * (1 - 1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * x * 1e6) AS BIGINT)) AS h_ab,
-           sum(CAST(round((1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * (1 - 1 / (1 + exp(-({a}) - ({b}) * x)))
-                          * x * x * 1e6) AS BIGINT)) AS h_bb
+           {units_sum_sql(f"y - {_P}", 1e6)} AS g_a,
+           {units_sum_sql(f"(y - {_P}) * x", 1e6)} AS g_b,
+           {units_sum_sql(f"({_P}) * (1 - {_P})", 1e6)} AS h_aa,
+           {units_sum_sql(f"({_P}) * (1 - {_P}) * x", 1e6)} AS h_ab,
+           {units_sum_sql(f"({_P}) * (1 - {_P}) * x * x", 1e6)} AS h_bb
     FROM lx
 """
 
@@ -265,15 +259,12 @@ def eval_calibration_slope(spark, sf_dir):
         w = pr * (1 - pr)
         m = df.agg(
             F.count("*").alias("n"),
-            F.sum(F.round((F.col("y") - pr) * 1e6).cast("bigint"))
-            .alias("g_a"),
-            F.sum(F.round((F.col("y") - pr) * F.col("x") * 1e6)
-                  .cast("bigint")).alias("g_b"),
-            F.sum(F.round(w * 1e6).cast("bigint")).alias("h_aa"),
-            F.sum(F.round(w * F.col("x") * 1e6).cast("bigint"))
-            .alias("h_ab"),
-            F.sum(F.round(w * F.col("x") * F.col("x") * 1e6)
-                  .cast("bigint")).alias("h_bb")).collect()[0]
+            units_sum(F.col("y") - pr, 1e6).alias("g_a"),
+            units_sum((F.col("y") - pr) * F.col("x"), 1e6).alias("g_b"),
+            units_sum(w, 1e6).alias("h_aa"),
+            units_sum(w * F.col("x"), 1e6).alias("h_ab"),
+            units_sum(w * F.col("x") * F.col("x"), 1e6).alias("h_bb")
+        ).collect()[0]
         ga, gb = m.g_a / 1e6, m.g_b / 1e6
         haa, hab, hbb = m.h_aa / 1e6, m.h_ab / 1e6, m.h_bb / 1e6
         det = haa * hbb - hab * hab

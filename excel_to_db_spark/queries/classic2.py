@@ -30,14 +30,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
+from ..numerics import (
+    chi2_sf, chi2_sf_sql, erfc, erfc_sql, fixed_sum_sql, units_sum,
+    units_sum_sql)
 from .registry import query
 from .relational import T
 
 
 # ------------------------------------------------------ ANCOVA
 
-@query("stats_ancova", oracle="""
+@query("stats_ancova", oracle=f"""
     WITH rows_ AS (
         SELECT CAST(((date_diff('day', DATE '1995-01-02',
                                 CAST(l.l_shipdate AS DATE)) % 7) + 7)
@@ -60,14 +62,14 @@ from .relational import T
         -- cents^2 units per group (finer scales overflow BIGINT)
         SELECT CAST(count(*) AS BIGINT) AS k,
                CAST(sum(n) AS BIGINT) AS nt,
-               sum(CAST(round(CAST(CAST(n AS HUGEINT) * sxx - sx * sx
-                                   AS DOUBLE) / n) AS BIGINT))
+               {units_sum_sql(
+                   'CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE) / n')}
                    * 1.0 AS wxx,
-               sum(CAST(round(CAST(CAST(n AS HUGEINT) * sxy - sx * sy
-                                   AS DOUBLE) / n) AS BIGINT))
+               {units_sum_sql(
+                   'CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE) / n')}
                    * 1.0 AS wxy,
-               sum(CAST(round(CAST(CAST(n AS HUGEINT) * syy - sy * sy
-                                   AS DOUBLE) / n) AS BIGINT))
+               {units_sum_sql(
+                   'CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DOUBLE) / n')}
                    * 1.0 AS wyy
         FROM grp
     ),
@@ -176,7 +178,7 @@ def stats_ancova(spark, sf_dir):
 @query("ts_arch_lm", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS y
         FROM events GROUP BY 1
     ),
@@ -234,7 +236,7 @@ def ts_arch_lm(spark, sf_dir):
     reduce."""
     day = (T(spark, sf_dir, "events")
            .groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-           .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+           .agg(units_sum(F.col("value"), 100)
                 .alias("y")))
     w = Window.orderBy("d")
     lr = (day.select(
@@ -385,15 +387,12 @@ def stats_split_half_reliability(spark, sf_dir):
     ),
     chi AS (
         SELECT tot.k,
-               round(sum(CAST(round(
-                   (pow(above - CAST(above + below AS DOUBLE) * ta
-                        / (ta + tb), 2)
-                    / (CAST(above + below AS DOUBLE) * ta / (ta + tb))
-                    + pow(below - CAST(above + below AS DOUBLE) * tb
-                          / (ta + tb), 2)
-                    / (CAST(above + below AS DOUBLE) * tb
-                       / (ta + tb)))
-                   * 1e8) AS BIGINT)) / 1e8, 4) AS chi2
+               {fixed_sum_sql(
+                   'pow(above - CAST(above + below AS DOUBLE) * ta / (ta'
+                   ' + tb), 2) / (CAST(above + below AS DOUBLE) * ta / (ta'
+                   ' + tb)) + pow(below - CAST(above + below AS DOUBLE) * tb'
+                   ' / (ta + tb), 2) / (CAST(above + below AS DOUBLE) * tb'
+                   ' / (ta + tb))', 1e8, 4)} AS chi2
         FROM cells, tot GROUP BY tot.k
     )
     SELECT k AS k_groups, chi2,

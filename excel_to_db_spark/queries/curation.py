@@ -19,6 +19,7 @@ from pyspark.sql.window import Window as W
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ------------------------------------------------ deterministic shuffle
@@ -206,10 +207,10 @@ def text_chunk_dedup(spark, sf_dir):
 
 # --------------------------------------------- runtime Bloom-pruned join
 
-@query("join_bloom_pruned", oracle="""
+@query("join_bloom_pruned", oracle=f"""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           {units_sum_sql('l_extendedprice', 100)}
                AS cents
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     WHERE o_totalprice > 450000.0 AND o_orderpriority = '1-URGENT'
@@ -234,5 +235,4 @@ def join_bloom_pruned(spark, sf_dir):
     return (le.join(o, le.l_orderkey == o.o_orderkey)
             .groupBy("o_orderpriority")
             .agg(F.count("*").alias("n_lines"),
-                 F.sum(F.round(F.col("l_extendedprice") * 100)
-                       .cast("bigint")).alias("cents")))
+                 units_sum(F.col("l_extendedprice"), 100).alias("cents")))

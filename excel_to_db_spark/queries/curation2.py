@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import h32, h32_sql, u01, u01_sql
+from ..numerics import (
+    cents_sum_sql, h32, h32_sql, u01, u01_sql, units_sum, units_sum_sql)
 from ..operators import physical
 from .registry import query
 from .relational import T
@@ -689,12 +690,11 @@ def tz_funcs(spark, sf_dir):
 
 # -------------------------------------------- Theil-Sen robust trend
 
-@query("stats_theil_sen", oracle="""
+@query("stats_theil_sen", oracle=f"""
     WITH d AS (
         SELECT date_diff('day', DATE '1995-01-01',
                          CAST(o_orderdate AS DATE)) AS x,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
+               {units_sum_sql('o_totalprice', 100)} AS y
         FROM orders
         WHERE o_orderdate >= '1995-01-01' AND o_orderdate < '1996-01-01'
         GROUP BY 1
@@ -732,7 +732,7 @@ def stats_theil_sen(spark, sf_dir):
     # table
     d = (o.groupBy(F.datediff(F.col("o_orderdate").cast("date"),
                               F.lit("1995-01-01").cast("date")).alias("x"))
-         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+         .agg(units_sum(F.col("o_totalprice"), 100)
               .alias("y"))
          .transform(physical.cut))
     a = d.select(F.col("x").alias("ax"), F.col("y").alias("ay"))
@@ -818,9 +818,9 @@ def stream_stateful_timeout(spark, sf_dir):
 
 # ------------------------------------------------ checkpoint resume
 
-@query("stream_checkpoint_resume", oracle="""
+@query("stream_checkpoint_resume", oracle=f"""
     SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
                AS sum_value
     FROM events GROUP BY event_type
 """)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ------------------------------------------------ source novelty
@@ -312,10 +313,10 @@ def ts_cross_correlation(spark, sf_dir):
 
 # ------------------------------------------- Hodges-Lehmann location
 
-@query("stats_hodges_lehmann", oracle="""
+@query("stats_hodges_lehmann", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS x
         FROM events GROUP BY 1
     ),
@@ -358,7 +359,7 @@ def stats_hodges_lehmann(spark, sf_dir):
     pass over the pair multiset."""
     day = (T(spark, sf_dir, "events")
            .groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-           .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+           .agg(units_sum(F.col("value"), 100)
                 .alias("x")))
     a = day.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = day.select(F.col("d").alias("db"), F.col("x").alias("xb"))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 _SPLIT = "1998-05-01"     # pinned half-way month boundary
 
@@ -38,8 +39,7 @@ _SPEND_SQL = f"""
         SELECT o_custkey AS ck,
                CASE WHEN o_orderdate < TIMESTAMP '{_SPLIT}'
                     THEN 0 ELSE 1 END AS period,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('o_totalprice', 100)} AS cents
         FROM orders GROUP BY 1, 2
     ),
     seg AS (
@@ -82,7 +82,7 @@ def customer_segment_migration(spark, sf_dir):
         F.col("o_custkey").alias("ck"),
         F.when(F.col("o_orderdate") < F.lit(_SPLIT).cast("timestamp"),
                0).otherwise(1).alias("period"))
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        .agg(units_sum(F.col("o_totalprice"), 100)
              .alias("cents")))
     w = Window.partitionBy("period").orderBy(F.col("cents").desc(),
                                              "ck")

@@ -27,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators import physical
-from ..numerics import cents_sum, erfc, erfc_sql, h32, h32_sql, u01, u01_sql
+from ..numerics import (
+    cents_sum, cents_sum_sql, erfc, erfc_sql, h32, h32_sql, u01, u01_sql,
+    units_sum_sql)
 from .registry import REGISTRY, query
 from .relational import T
 
@@ -135,10 +137,9 @@ def sketch_kmv_distinct(spark, sf_dir):
 _NSALT = 8
 
 
-@query("join_skew_salted", oracle="""
+@query("join_skew_salted", oracle=f"""
     SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_lines,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100)
-                          AS BIGINT)) / 100.0, 2) AS revenue
+           {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
     GROUP BY s_nationkey
 """)
@@ -781,8 +782,7 @@ _DID_SPLIT = "1995-06-17"
                CASE WHEN o_orderdate >= DATE '{_DID_SPLIT}' THEN 1
                     ELSE 0 END AS post,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS s
+               {units_sum_sql('o_totalprice', 100)} AS s
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY ALL
     ),

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import h32, h32_sql
+from ..numerics import h32, h32_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -266,7 +266,7 @@ def stats_capture_recapture(spark, sf_dir):
 
 # ------------------------------- empirical-Bayes rate shrinkage (MoM)
 
-@query("stats_eb_shrinkage", oracle="""
+@query("stats_eb_shrinkage", oracle=f"""
     WITH grp AS (
         SELECT l_suppkey,
                CAST(count(*) AS BIGINT) AS n_obs,
@@ -281,10 +281,9 @@ def stats_capture_recapture(spark, sf_dir):
         FROM grp
     ),
     varr AS (
-        SELECT round(CAST(sum(CAST(round(
-                     (x_ret * 1.0 / n_obs - m)
-                     * (x_ret * 1.0 / n_obs - m) * 1e12) AS BIGINT))
-                     AS BIGINT) / (1e12 * (g - 1)), 8) AS v
+        SELECT round({units_sum_sql(
+                         '(x_ret * 1.0 / n_obs - m) * (x_ret * 1.0 / n_obs'
+                         ' - m)', 1e12)} / (1e12 * (g - 1)), 8) AS v
         FROM grp, pooled GROUP BY g
     ),
     prior AS (
@@ -333,7 +332,7 @@ def stats_eb_shrinkage(spark, sf_dir):
     dev = (F.col("x_ret") * 1.0 / F.col("n_obs") - F.col("m"))
     varr = (grp.crossJoin(F.broadcast(pooled))
             .agg(F.round(
-                F.sum(F.round(dev * dev * 1e12).cast("bigint"))
+                units_sum(dev * dev, 1e12)
                 / (1e12 * (F.first("g") - 1)), 8).alias("v")))
     prior = (pooled.crossJoin(F.broadcast(varr))
              .select("m",

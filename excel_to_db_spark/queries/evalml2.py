@@ -34,11 +34,12 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ------------------------------------- simplified silhouette (centroid)
 
-@query("eval_silhouette", oracle="""
+@query("eval_silhouette", oracle=f"""
     WITH pt AS (
         SELECT vec_id, label AS own,
                CAST(round(unnest(embedding::DOUBLE[]) * 1000) AS BIGINT)
@@ -71,12 +72,12 @@ from .relational import T
     ),
     per AS (
         SELECT own AS label, CAST(count(*) AS BIGINT) AS n_points,
-               round(CAST(sum(CAST(round(s * 1e6) AS BIGINT)) AS BIGINT)
+               round({units_sum_sql('s', 1e6)}
                      / (1e6 * count(*)), 6) AS mean_s
         FROM s GROUP BY own
     ),
     ov AS (
-        SELECT round(CAST(sum(CAST(round(s * 1e6) AS BIGINT)) AS BIGINT)
+        SELECT round({units_sum_sql('s', 1e6)}
                      / (1e6 * count(*)), 6) AS overall_s
         FROM s
     )
@@ -125,10 +126,10 @@ def eval_silhouette(spark, sf_dir):
                 / F.greatest(F.sqrt("a2"), F.sqrt("b2")), 6).alias("s"))
     per = (s.groupBy(F.col("own").alias("label"))
            .agg(F.count("*").alias("n_points"),
-                F.round(F.sum(F.round(F.col("s") * 1e6).cast("bigint"))
+                F.round(units_sum(F.col("s"), 1e6)
                         / (1e6 * F.count("*")), 6).alias("mean_s")))
     ov = s.agg(
-        F.round(F.sum(F.round(F.col("s") * 1e6).cast("bigint"))
+        F.round(units_sum(F.col("s"), 1e6)
                 / (1e6 * F.count("*")), 6).alias("overall_s"))
     return (per.crossJoin(F.broadcast(ov))
             .select("label", "n_points", "mean_s", "overall_s")
@@ -353,7 +354,7 @@ def stats_cohens_d(spark, sf_dir):
 
 # ------------------------------------ Brier score, Murphy decomposition
 
-@query("eval_brier_decomposition", oracle="""
+@query("eval_brier_decomposition", oracle=f"""
     WITH mx AS (SELECT max(n_chars) AS maxc FROM documents),
     scored AS (
         SELECT round(n_chars * 1.0 / maxc, 6) AS conf,
@@ -379,13 +380,11 @@ def stats_cohens_d(spark, sf_dir):
         FROM binned GROUP BY bin
     ),
     parts AS (
-        SELECT CAST(sum(CAST(round(
-                   nb * pow(cu * 1.0 / nb - pb * 1e6 / nb, 2) / 1e6)
-                   AS BIGINT)) AS BIGINT) AS rel_u,
-               CAST(sum(CAST(round(
-                   nb * pow(pb * 1e6 / nb
-                            - (SELECT n_pos * 1e6 / n FROM brier), 2)
-                   / 1e6) AS BIGINT)) AS BIGINT) AS res_u
+        SELECT {units_sum_sql(
+                   'nb * pow(cu * 1.0 / nb - pb * 1e6 / nb, 2) / 1e6')} AS rel_u,
+               {units_sum_sql(
+                   'nb * pow(pb * 1e6 / nb - (SELECT n_pos * 1e6'
+                   ' / n FROM brier), 2) / 1e6')} AS res_u
         FROM bins
     )
     SELECT n, n_pos,
@@ -440,15 +439,13 @@ def eval_brier_decomposition(spark, sf_dir):
     base_u = F.col("n_pos") * 1e6 / F.col("n")
     parts = (bins.crossJoin(F.broadcast(brier.select("n", "n_pos")))
              .agg(
-                 F.sum(F.round(
-                     F.col("nb")
+                 units_sum(F.col("nb")
                      * F.pow(F.col("cu") * 1.0 / F.col("nb")
                              - F.col("pb") * 1e6 / F.col("nb"), 2)
-                     / 1e6).cast("bigint")).alias("rel_u"),
-                 F.sum(F.round(
-                     F.col("nb")
+                     / 1e6).alias("rel_u"),
+                 units_sum(F.col("nb")
                      * F.pow(F.col("pb") * 1e6 / F.col("nb") - base_u, 2)
-                     / 1e6).cast("bigint")).alias("res_u")))
+                     / 1e6).alias("res_u")))
     return (brier.crossJoin(F.broadcast(parts))
             .select(
                 "n", "n_pos",

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 def _falling(var: str, k: int) -> str:
@@ -46,11 +47,11 @@ def _falling(var: str, k: int) -> str:
 _PASS_KS = (1, 5, 10)
 _PASS_ARMS_SQL = "\n        UNION ALL\n".join(f"""
         SELECT {k} AS k, CAST(count(*) AS BIGINT) AS n_tasks,
-               round(CAST(sum(CAST(round(
-                   (CASE WHEN n - c < {k} THEN 1.0
-                         ELSE 1.0 - ({_falling('n - c', k)}) * 1.0
-                              / ({_falling('n', k)}) END) * 1e6)
-                   AS BIGINT)) AS BIGINT) / (1e6 * count(*)), 6)
+               round({units_sum_sql(
+                   f"CASE WHEN n - c < {k} THEN 1.0"
+                   f" ELSE 1.0 - ({_falling('n - c', k)}) * 1.0"
+                   f" / ({_falling('n', k)}) END", 1e6)}
+                     / (1e6 * count(*)), 6)
                    AS mean_pass
         FROM tasks WHERE n >= {k}""" for k in _PASS_KS)
 
@@ -109,7 +110,7 @@ def eval_pass_at_k(spark, sf_dir):
         arms.append(
             tasks.filter(F.col("n") >= k)
             .agg(F.count("*").alias("n_tasks"),
-                 F.round(F.sum(F.round(pass_expr * 1e6).cast("bigint"))
+                 F.round(units_sum(pass_expr, 1e6)
                          / (1e6 * F.count("*")), 6).alias("mean_pass"))
             .select(F.lit(k).alias("k"), "n_tasks", "mean_pass"))
     out = arms[0]
@@ -264,10 +265,10 @@ def ops_slo_burn(spark, sf_dir):
 
 # --------------------------------------- Bradley-Terry via MM rounds
 
-@query("stats_bradley_terry", oracle="""
+@query("stats_bradley_terry", oracle=f"""
     WITH cell AS (
         SELECT date_trunc('day', ts) AS d, event_type AS item,
-               CAST(round(sum(CAST(round(value * 100) AS BIGINT)) * 10.0
+               CAST(round({units_sum_sql('value', 100)} * 10.0
                           / count(*)) AS BIGINT) AS mm
         FROM events GROUP BY 1, 2
     ),
@@ -291,8 +292,7 @@ def ops_slo_burn(spark, sf_dir):
     r1 AS (
         SELECT w.i AS item,
                CAST(round(w.wi * 1e6
-                          / (sum(CAST(round(n.n_ij * 1e12
-                                            / (pi.p + pj.p)) AS BIGINT))
+                          / ({units_sum_sql('n.n_ij * 1e12 / (pi.p + pj.p)')}
                              / 1e12)) AS BIGINT) AS p
         FROM wins w
         JOIN nmat n ON n.i = w.i
@@ -306,8 +306,7 @@ def ops_slo_burn(spark, sf_dir):
     r2 AS (
         SELECT w.i AS item,
                CAST(round(w.wi * 1e6
-                          / (sum(CAST(round(n.n_ij * 1e12
-                                            / (pi.p + pj.p)) AS BIGINT))
+                          / ({units_sum_sql('n.n_ij * 1e12 / (pi.p + pj.p)')}
                              / 1e12)) AS BIGINT) AS p
         FROM wins w
         JOIN nmat n ON n.i = w.i
@@ -321,8 +320,7 @@ def ops_slo_burn(spark, sf_dir):
     r3 AS (
         SELECT w.i AS item,
                CAST(round(w.wi * 1e6
-                          / (sum(CAST(round(n.n_ij * 1e12
-                                            / (pi.p + pj.p)) AS BIGINT))
+                          / ({units_sum_sql('n.n_ij * 1e12 / (pi.p + pj.p)')}
                              / 1e12)) AS BIGINT) AS p
         FROM wins w
         JOIN nmat n ON n.i = w.i
@@ -390,9 +388,9 @@ def stats_bradley_terry(spark, sf_dir):
                .groupBy("i")
                # per-term snap to 1e-12 units BEFORE the sum: a 4-term
                # float sum's merge order is not contracted cross-engine
-               .agg(F.sum(F.round(F.col("n_ij") * 1e12
-                                  / (F.col("p_i") + F.col("p_j")))
-                          .cast("bigint")).alias("denom_u"))
+               .agg(units_sum(F.col("n_ij") * 1e12
+                              / (F.col("p_i") + F.col("p_j")))
+                    .alias("denom_u"))
                .join(wins, "i")
                .select(F.col("i").alias("item"),
                        F.round(F.col("wi") * 1e6

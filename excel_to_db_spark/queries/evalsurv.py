@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -165,8 +165,7 @@ def eval_isotonic_calibration(spark, sf_dir):
     ),
     terms AS (
         SELECT CAST(sum(d1) AS BIGINT) AS o1,
-               CAST(sum(CAST(round(d * 1.0 * n1 / n * 1e6) AS BIGINT))
-                    AS BIGINT) AS e1_u,
+               {units_sum_sql('d * 1.0 * n1 / n', 1e6)} AS e1_u,
                CAST(sum(CASE WHEN n > 1 THEN
                     CAST(round(d * 1.0 * (n1 * 1.0 / n)
                                * (1.0 - n1 * 1.0 / n)
@@ -258,10 +257,10 @@ def stats_log_rank(spark, sf_dir):
 
 # --------------------------------------------------- max drawdown
 
-@query("ts_max_drawdown", oracle="""
+@query("ts_max_drawdown", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS cents
         FROM events GROUP BY 1
     ),
@@ -300,7 +299,7 @@ def ts_max_drawdown(spark, sf_dir):
     TakeOrdered — nothing corpus-sized past the first aggregate."""
     ev = T(spark, sf_dir, "events").select("ts", "value")
     daily = (ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+             .agg(units_sum(F.col("value"), 100)
                   .alias("cents")))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding,
                                           Window.currentRow)

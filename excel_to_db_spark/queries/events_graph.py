@@ -15,6 +15,7 @@ from pyspark.sql.window import Window as W
 
 from .registry import query
 from .relational import T
+from ..numerics import cents_sum_sql, units_sum, units_sum_sql
 
 
 # ---------------------------------------------------- rolling anomaly
@@ -210,10 +211,10 @@ def graph_pagerank3(spark, sf_dir):
 
 # ------------------------------------------------------ streaming hop
 
-_HOPPING_ORACLE = """
+_HOPPING_ORACLE = f"""
     SELECT ws AS win_start, ws + INTERVAL '10 minutes' AS win_end,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+           {cents_sum_sql('value')} AS sum_value
     FROM (
         SELECT value,
                unnest([time_bucket(INTERVAL '5 minutes', ts),
@@ -324,7 +325,7 @@ def agg_decimal_exact(spark, sf_dir):
 
 # ----------------------------------------------------- BFS shortest hops
 
-_BFS_ORACLE = """
+_BFS_ORACLE = f"""
     WITH RECURSIVE edges AS (
         SELECT src, dst FROM (
             SELECT src, dst,
@@ -332,8 +333,8 @@ _BFS_ORACLE = """
                                       ORDER BY w DESC, dst) AS rn
             FROM (
                 SELECT cn.n_nationkey AS src, sn.n_nationkey AS dst,
-                       sum(CAST(round(l_extendedprice * (1 - l_discount)
-                                      * 100) AS BIGINT)) AS w
+                       {units_sum_sql(
+                           'l_extendedprice * (1 - l_discount)', 100)} AS w
                 FROM lineitem
                 JOIN orders   ON l_orderkey = o_orderkey
                 JOIN customer ON o_custkey  = c_custkey
@@ -384,9 +385,8 @@ def graph_bfs_levels(spark, sf_dir):
          .filter(F.col("c_nationkey") != F.col("s_nationkey"))
          .groupBy(F.col("c_nationkey").alias("src"),
                   F.col("s_nationkey").alias("dst"))
-         .agg(F.sum(F.round(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")) * 100)
-                    .cast("bigint")).alias("w")))
+         .agg(units_sum(F.col("l_extendedprice")
+                            * (1 - F.col("l_discount")), 100).alias("w")))
     rn = F.row_number().over(
         W.partitionBy("src").orderBy(F.col("w").desc(), "dst"))
     edges = (w.withColumn("rn", rn).filter(F.col("rn") <= 2)

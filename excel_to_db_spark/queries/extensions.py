@@ -25,7 +25,7 @@ from ..operators import physical
 from ..operators import similarity as S
 from ..operators import text as X
 from ..streaming import run_tumbling_stream, session_agg, tumbling_agg
-from ..numerics import cents_sum as _cents_sum, h32_sql
+from ..numerics import cents_sum, cents_sum_sql, h32_sql
 from .registry import REGISTRY, query, scratch_dir
 from .relational import T
 
@@ -525,11 +525,11 @@ def multimodal_frames(spark, sf_dir):
 
 # ------------------------------------------- event-time windows / streaming
 
-_TUMBLING_ORACLE = """
+_TUMBLING_ORACLE = f"""
     SELECT time_bucket(INTERVAL '10 minutes', ts) AS win_start,
            time_bucket(INTERVAL '10 minutes', ts) + INTERVAL '10 minutes' AS win_end,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+           {cents_sum_sql('value')} AS sum_value
     FROM events GROUP BY 1, 2
 """
 
@@ -542,7 +542,7 @@ def events_tumbling(spark, sf_dir):
     return tumbling_agg(T(spark, sf_dir, "events"))
 
 
-_SESSION_ORACLE = """
+_SESSION_ORACLE = f"""
     WITH o AS (
         SELECT user_id, ts, value,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -560,7 +560,7 @@ _SESSION_ORACLE = """
            min(ts) AS sess_start,
            max(ts) + INTERVAL '5 minutes' AS sess_end,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+           {cents_sum_sql('value')} AS sum_value
     FROM s GROUP BY user_id, sid
 """
 
@@ -630,9 +630,9 @@ def stream_tumbling(spark, sf_dir):
     return run_tumbling_stream(spark, sf_dir)
 
 
-@query("stream_dedup_watermark", oracle="""
+@query("stream_dedup_watermark", oracle=f"""
     SELECT event_type, count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
                AS sum_value
     FROM events GROUP BY event_type
 """)
@@ -648,13 +648,13 @@ def stream_dedup_watermark(spark, sf_dir):
     return run_stream_dedup_watermark(spark, sf_dir)
 
 
-@query("stream_tumbling_append", oracle="""
+@query("stream_tumbling_append", oracle=f"""
     WITH b AS (
         SELECT time_bucket(INTERVAL '10 minutes', ts) AS win_start,
                time_bucket(INTERVAL '10 minutes', ts)
                    + INTERVAL '10 minutes' AS win_end,
                count(*) AS n_events,
-               round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+               {cents_sum_sql('value')}
                    AS sum_value
         FROM events GROUP BY 1, 2
     ),
@@ -775,10 +775,10 @@ def stream_dedup(spark, sf_dir):
     return run_stream_dedup(spark, sf_dir)
 
 
-@query("events_hopping", oracle="""
+@query("events_hopping", oracle=f"""
     SELECT ws AS win_start, ws + INTERVAL '10 minutes' AS win_end,
            count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+           {cents_sum_sql('value')} AS sum_value
     FROM (
         SELECT value,
                unnest([time_bucket(INTERVAL '5 minutes', ts),
@@ -795,7 +795,7 @@ def events_hopping(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
     return (ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"))
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value"))
+                 cents_sum(F.col("value")).alias("sum_value"))
             .select(F.col("win.start").alias("win_start"),
                     F.col("win.end").alias("win_end"),
                     "n_events", "sum_value"))
@@ -840,8 +840,8 @@ def dedup_clusters(spark, sf_dir):
     return D.dedup_clusters(pairs, ids)
 
 
-@query("stream_stateful", oracle="""
-    SELECT user_id, count(*) AS n_events, round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+@query("stream_stateful", oracle=f"""
+    SELECT user_id, count(*) AS n_events, {cents_sum_sql('value')} AS sum_value
     FROM events GROUP BY user_id
 """)
 def stream_stateful(spark, sf_dir):
@@ -1011,10 +1011,10 @@ def join_range(spark, sf_dir):
             .select("o_orderkey", "o_totalprice", "band_id"))
 
 
-@query("stream_join_static", oracle="""
+@query("stream_join_static", oracle=f"""
     SELECT c_mktsegment,
            CAST(count(*) AS BIGINT)               AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)                   AS sum_value
+           {cents_sum_sql('value')}                   AS sum_value
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY c_mktsegment
 """)
@@ -1083,8 +1083,9 @@ def stream_stream_left(spark, sf_dir):
     return run_stream_stream_left_join(spark, sf_dir)
 
 
-@query("stream_custom_sink", oracle="""
-    SELECT event_type, count(*) AS n_events, round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+@query("stream_custom_sink", oracle=f"""
+    SELECT event_type, count(*) AS n_events,
+           {cents_sum_sql('value')} AS sum_value
     FROM events WHERE value > 5.0 GROUP BY event_type
 """)
 def stream_custom_sink(spark, sf_dir):
@@ -1113,11 +1114,12 @@ def stream_custom_sink(spark, sf_dir):
                           "event_id bigint, event_type string, value double")
     return (back.groupBy("event_type")
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value")))
+                 cents_sum(F.col("value")).alias("sum_value")))
 
 
-@query("stream_python_source", oracle="""
-    SELECT event_type, count(*) AS n_events, round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2) AS sum_value
+@query("stream_python_source", oracle=f"""
+    SELECT event_type, count(*) AS n_events,
+           {cents_sum_sql('value')} AS sum_value
     FROM events GROUP BY event_type
 """)
 def stream_python_source(spark, sf_dir):
@@ -1320,7 +1322,7 @@ def dedup_incremental(spark, sf_dir):
             .select("doc_id", "n_batch_dups"))
 
 
-@query("stream_scd2_enrich", oracle="""
+@query("stream_scd2_enrich", oracle=f"""
     WITH dim AS (
         SELECT c_custkey, c_mktsegment, round(c_acctbal, 2) AS acctbal,
                TIMESTAMP '1900-01-01' AS valid_from,
@@ -1333,7 +1335,7 @@ def dedup_incremental(spark, sf_dir):
     )
     SELECT c_mktsegment AS segment, CAST(ver AS INTEGER) AS ver,
            CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
                AS sum_value
     FROM events JOIN dim
       ON user_id = c_custkey AND ts >= valid_from AND ts < valid_to

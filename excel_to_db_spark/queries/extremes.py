@@ -35,16 +35,17 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
-_HOUR_SQL = """
+_HOUR_SQL = f"""
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hr,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+           {units_sum_sql('value', 100)} AS x
     FROM events GROUP BY 1
 """
 
-_DAY_SQL = """
+_DAY_SQL = f"""
     SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+           {units_sum_sql('value', 100)} AS x
     FROM events GROUP BY 1
 """
 
@@ -52,14 +53,14 @@ _DAY_SQL = """
 def _hourly(spark, sf_dir):
     return (T(spark, sf_dir, "events")
             .groupBy(F.date_trunc("hour", F.col("ts")).alias("hr"))
-            .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            .agg(units_sum(F.col("value"), 100)
                  .alias("x")))
 
 
 def _daily(spark, sf_dir):
     return (T(spark, sf_dir, "events")
             .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-            .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            .agg(units_sum(F.col("value"), 100)
                  .alias("x")))
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # --------------------------------------------------------- unicity
@@ -264,7 +265,7 @@ def events_dau_stickiness(spark, sf_dir):
 
 # ------------------------------------------- n-gram entropy curve
 
-@query("text_entropy_ngram_curve", oracle="""
+@query("text_entropy_ngram_curve", oracle=f"""
     WITH d AS (
         SELECT string_split(text, ' ') AS t FROM documents
         WHERE len(string_split(text, ' ')) >= 3
@@ -274,28 +275,22 @@ def events_dau_stickiness(spark, sf_dir):
         FROM d, unnest(range(1, len(t) - 1)) AS u(i)
     ),
     h1 AS (
-        SELECT CAST(sum(CAST(round(
-                   -(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE)
-                                                   / t) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS h_u
+        SELECT {units_sum_sql(
+                   '-(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE) / t)', 1e9)} AS h_u
         FROM (SELECT w1 AS w, CAST(count(*) AS BIGINT) AS c,
                      CAST(sum(count(*)) OVER () AS BIGINT) AS t
               FROM uni GROUP BY w1)
     ),
     h2pair AS (
-        SELECT CAST(sum(CAST(round(
-                   -(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE)
-                                                   / t) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS h_u
+        SELECT {units_sum_sql(
+                   '-(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE) / t)', 1e9)} AS h_u
         FROM (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c,
                      CAST(sum(count(*)) OVER () AS BIGINT) AS t
               FROM uni GROUP BY w1, w2)
     ),
     h3tri AS (
-        SELECT CAST(sum(CAST(round(
-                   -(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE)
-                                                   / t) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS h_u
+        SELECT {units_sum_sql(
+                   '-(CAST(c AS DOUBLE) / t) * log2(CAST(c AS DOUBLE) / t)', 1e9)} AS h_u
         FROM (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c,
                      CAST(sum(count(*)) OVER () AS BIGINT) AS t
               FROM uni GROUP BY w1, w2, w3)
@@ -342,7 +337,7 @@ def text_entropy_ngram_curve(spark, sf_dir):
             "c", F.sum("c").over(wall).alias("t"))
         p = F.col("c").cast("double") / F.col("t")
         return withtot.agg(
-            F.sum(F.round(-p * F.log2(p) * 1e9).cast("bigint"))
+            units_sum(-p * F.log2(p), 1e9)
             .alias("h_u"))
 
     h1 = plug_in(["w1"]).select(F.col("h_u").alias("u1"))

@@ -31,18 +31,17 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
 
 # ------------------------------------------------ e-process sign test
 
-@query("stats_e_process", oracle="""
+@query("stats_e_process", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
+               {units_sum_sql('o_totalprice', 100)} AS y
         FROM orders GROUP BY 1
     ),
     moves AS (
@@ -96,8 +95,7 @@ def stats_e_process(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("y")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("y")))
     w = Window.orderBy("d")
     moves = (day.select(
         "d",
@@ -128,10 +126,10 @@ def stats_e_process(spark, sf_dir):
 
 # ---------------------------------------- risk-adjusted return panel
 
-@query("ts_risk_adjusted_returns", oracle="""
+@query("ts_risk_adjusted_returns", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS y
         FROM events GROUP BY 1
     ),
@@ -195,7 +193,7 @@ def ts_risk_adjusted_returns(spark, sf_dir):
     window + two 1-row reduces."""
     day = (T(spark, sf_dir, "events")
            .groupBy(F.date_trunc("day", F.col("ts")).alias("d"))
-           .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+           .agg(units_sum(F.col("value"), 100)
                 .alias("y")))
     w = Window.orderBy("d")
     lr = (day.select(
@@ -235,25 +233,19 @@ def ts_risk_adjusted_returns(spark, sf_dir):
 
 # ------------------------------------------- Paasche + Fisher ideal
 
-@query("price_index_fisher", oracle="""
+_IN_1996 = ("l_shipdate >= TIMESTAMP '1996-01-01'"
+            " AND l_shipdate <  TIMESTAMP '1997-01-01'")
+_IN_1998 = ("l_shipdate >= TIMESTAMP '1998-01-01'"
+            " AND l_shipdate <  TIMESTAMP '1999-01-01'")
+
+
+@query("price_index_fisher", oracle=f"""
     WITH per AS (
         SELECT l_partkey,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                              AND l_shipdate <  TIMESTAMP '1997-01-01')
-                    AS BIGINT) AS c0,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                              AND l_shipdate <  TIMESTAMP '1997-01-01')
-                    AS BIGINT) AS q0,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-                              AND l_shipdate <  TIMESTAMP '1999-01-01')
-                    AS BIGINT) AS c1,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-                              AND l_shipdate <  TIMESTAMP '1999-01-01')
-                    AS BIGINT) AS q1
+               {units_sum_sql('l_extendedprice', 100, where=_IN_1996)} AS c0,
+               {units_sum_sql('l_quantity', where=_IN_1996)} AS q0,
+               {units_sum_sql('l_extendedprice', 100, where=_IN_1998)} AS c1,
+               {units_sum_sql('l_quantity', where=_IN_1998)} AS q1
         FROM lineitem GROUP BY 1
     ),
     basket AS (
@@ -264,10 +256,10 @@ def ts_risk_adjusted_returns(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n_parts,
-               sum(CAST(round(q0 * p1 * 1e4) AS BIGINT)) AS l_num,
-               sum(CAST(round(q0 * p0 * 1e4) AS BIGINT)) AS l_den,
-               sum(CAST(round(q1 * p1 * 1e4) AS BIGINT)) AS p_num,
-               sum(CAST(round(q1 * p0 * 1e4) AS BIGINT)) AS p_den
+               {units_sum_sql('q0 * p1', 1e4)} AS l_num,
+               {units_sum_sql('q0 * p0', 1e4)} AS l_den,
+               {units_sum_sql('q1 * p1', 1e4)} AS p_num,
+               {units_sum_sql('q1 * p0', 1e4)} AS p_den
         FROM basket
     )
     SELECT n_parts,
@@ -322,13 +314,13 @@ def price_index_fisher(spark, sf_dir):
                       .alias("p1")))
     st = basket.agg(
         F.count("*").alias("n_parts"),
-        F.sum(F.round(F.col("q0") * F.col("p1") * 1e4).cast("bigint"))
+        units_sum(F.col("q0") * F.col("p1"), 1e4)
         .alias("l_num"),
-        F.sum(F.round(F.col("q0") * F.col("p0") * 1e4).cast("bigint"))
+        units_sum(F.col("q0") * F.col("p0"), 1e4)
         .alias("l_den"),
-        F.sum(F.round(F.col("q1") * F.col("p1") * 1e4).cast("bigint"))
+        units_sum(F.col("q1") * F.col("p1"), 1e4)
         .alias("p_num"),
-        F.sum(F.round(F.col("q1") * F.col("p0") * 1e4).cast("bigint"))
+        units_sum(F.col("q1") * F.col("p0"), 1e4)
         .alias("p_den"))
     lasp = F.col("l_num").cast("double") / F.col("l_den")
     paas = F.col("p_num").cast("double") / F.col("p_den")

@@ -22,6 +22,7 @@ from pyspark.sql.types import LongType
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum_sql
 
 
 @query("str_funcs", oracle="""
@@ -755,10 +756,11 @@ def cogroup_asof_pandas(spark, sf_dir):
                            "n_click_preceded long"))
 
 
-@query("udaf_grouped_pandas", oracle="""
+@query("udaf_grouped_pandas", oracle=f"""
     SELECT l_returnflag,
-           round(CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * CAST(l_quantity AS BIGINT)) AS BIGINT)
+           round({units_sum_sql(
+               "CAST(round(l_extendedprice * 100) AS BIGINT)"
+               " * CAST(l_quantity AS BIGINT)")}
                  / CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT)
                  / 100.0, 4) AS wavg_price,
            CAST(count(*) AS BIGINT) AS n

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 # Directed nation trade edge: customer nation -> supplier nation.
 _RAW_EDGES_SQL = """
@@ -209,11 +210,10 @@ def graph_reciprocity(spark, sf_dir):
 
 # --------------------------------------------- Dickey-Fuller test
 
-@query("ts_adf_test", oracle="""
+@query("ts_adf_test", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS v
+               {units_sum_sql('o_totalprice', 100)} AS v
         FROM orders GROUP BY 1
     ),
     pairs AS (
@@ -269,8 +269,7 @@ def ts_adf_test(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("v")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("v")))
     w = Window.orderBy("d")
     pairs = (day.select(F.lag("v").over(w).alias("x"),
                         (F.col("v") - F.lag("v").over(w)).alias("y"))

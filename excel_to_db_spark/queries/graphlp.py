@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 def _bipartite(spark, sf_dir):
@@ -96,16 +97,15 @@ def _nation_edges(spark, sf_dir):
          .filter(F.col("c_nationkey") != F.col("s_nationkey"))
          .groupBy(F.col("c_nationkey").alias("src"),
                   F.col("s_nationkey").alias("dst"))
-         .agg(F.sum(F.round(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")) * 100)
-                    .cast("bigint")).alias("w")))
+         .agg(units_sum(F.col("l_extendedprice")
+                            * (1 - F.col("l_discount")), 100).alias("w")))
     rn = F.row_number().over(
         W.partitionBy("src").orderBy(F.col("w").desc(), "dst"))
     return (w.withColumn("rn", rn).filter(F.col("rn") <= 2)
             .select("src", "dst"))
 
 
-_NATION_EDGES_SQL = """
+_NATION_EDGES_SQL = f"""
     edges AS MATERIALIZED (
         SELECT src, dst FROM (
             SELECT src, dst,
@@ -113,8 +113,8 @@ _NATION_EDGES_SQL = """
                                       ORDER BY w DESC, dst) AS rn
             FROM (
                 SELECT c_nationkey AS src, s_nationkey AS dst,
-                       sum(CAST(round(l_extendedprice * (1 - l_discount)
-                                      * 100) AS BIGINT)) AS w
+                       {units_sum_sql(
+                           'l_extendedprice * (1 - l_discount)', 100)} AS w
                 FROM lineitem
                 JOIN orders   ON l_orderkey = o_orderkey
                 JOIN customer ON o_custkey  = c_custkey

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 def _trigrams(spark, sf_dir):
@@ -47,11 +48,10 @@ def _trigrams(spark, sf_dir):
 
 # -------------------------------------------- Theil T + MLD indices
 
-@query("stats_theil_index", oracle="""
+@query("stats_theil_index", oracle=f"""
     WITH spend AS (
         SELECT o_custkey,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
+               {units_sum_sql('o_totalprice', 100)} AS x
         FROM orders GROUP BY o_custkey
     ),
     tot AS (
@@ -60,13 +60,11 @@ def _trigrams(spark, sf_dir):
         FROM spend
     ),
     terms AS (
-        SELECT CAST(sum(CAST(round(
-                   (CAST(x AS DOUBLE) * n / s)
-                   * ln(CAST(x AS DOUBLE) * n / s) * 1e6)
-                   AS BIGINT)) AS BIGINT) AS t_u,
-               CAST(sum(CAST(round(
-                   ln(CAST(s AS DOUBLE) / (CAST(x AS DOUBLE) * n))
-                   * 1e6) AS BIGINT)) AS BIGINT) AS m_u
+        SELECT {units_sum_sql(
+                   '(CAST(x AS DOUBLE) * n / s) * ln(CAST(x AS DOUBLE) * n'
+                   ' / s)', 1e6)} AS t_u,
+               {units_sum_sql(
+                   'ln(CAST(s AS DOUBLE) / (CAST(x AS DOUBLE) * n))', 1e6)} AS m_u
         FROM spend, tot
     )
     SELECT n,
@@ -92,17 +90,14 @@ def stats_theil_index(spark, sf_dir):
     crossJoin (AQE reuses the exchange) + one 1-row reduce."""
     spend = (T(spark, sf_dir, "orders")
              .groupBy("o_custkey")
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("x")))
+             .agg(units_sum(F.col("o_totalprice"), 100).alias("x")))
     tot = spend.agg(F.count("*").alias("n"), F.sum("x").alias("s"))
     ratio = (F.col("x").cast("double") * F.col("n") / F.col("s"))
     terms = (spend.crossJoin(F.broadcast(tot))
-             .agg(F.sum(F.round(ratio * F.log(ratio) * 1e6)
-                        .cast("bigint")).alias("t_u"),
-                  F.sum(F.round(F.log(F.col("s").cast("double")
+             .agg(units_sum(ratio * F.log(ratio), 1e6).alias("t_u"),
+                  units_sum(F.log(F.col("s").cast("double")
                                       / (F.col("x").cast("double")
-                                         * F.col("n"))) * 1e6)
-                        .cast("bigint")).alias("m_u"),
+                                         * F.col("n"))), 1e6).alias("m_u"),
                   F.max("n").alias("n")))
     return terms.select(
         "n",
@@ -114,18 +109,16 @@ def stats_theil_index(spark, sf_dir):
 
 # ------------------------------------------- Atkinson index (eps=1)
 
-@query("stats_atkinson_index", oracle="""
+@query("stats_atkinson_index", oracle=f"""
     WITH spend AS (
         SELECT o_custkey,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
+               {units_sum_sql('o_totalprice', 100)} AS x
         FROM orders GROUP BY o_custkey
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS s,
-               CAST(sum(CAST(round(ln(CAST(x AS DOUBLE)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS l_u
+               {units_sum_sql('ln(CAST(x AS DOUBLE))', 1e6)} AS l_u
         FROM spend
     )
     SELECT n,
@@ -152,12 +145,10 @@ def stats_atkinson_index(spark, sf_dir):
     term)."""
     spend = (T(spark, sf_dir, "orders")
              .groupBy("o_custkey")
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("x")))
+             .agg(units_sum(F.col("o_totalprice"), 100).alias("x")))
     st = spend.agg(
         F.count("*").alias("n"), F.sum("x").alias("s"),
-        F.sum(F.round(F.log(F.col("x").cast("double")) * 1e6)
-              .cast("bigint")).alias("l_u"))
+        units_sum(F.log(F.col("x").cast("double")), 1e6).alias("l_u"))
     return st.select(
         "n",
         F.round(1.0 - F.exp(F.col("l_u")

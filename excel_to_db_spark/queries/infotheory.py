@@ -30,11 +30,12 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ------------------------------------------ Markov entropy rate
 
-@query("events_entropy_rate", oracle="""
+@query("events_entropy_rate", oracle=f"""
     WITH seq AS (
         SELECT event_type AS cur,
                lag(event_type) OVER (PARTITION BY user_id
@@ -50,16 +51,14 @@ from .relational import T
     ),
     tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM trans),
     rate AS (
-        SELECT CAST(sum(CAST(round(
-                   -(c * 1.0 / n) * ln(c * 1.0 / ci) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS h_rate_u,
+        SELECT {units_sum_sql(
+                   '-(c * 1.0 / n) * ln(c * 1.0 / ci)', 1e9)} AS h_rate_u,
                CAST(count(*) AS BIGINT) AS n_cells
         FROM trans JOIN marg USING (i) CROSS JOIN tot
     ),
     marg_h AS (
-        SELECT CAST(sum(CAST(round(
-                   -(ci * 1.0 / n) * ln(ci * 1.0 / n) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS h0_u,
+        SELECT {units_sum_sql(
+                   '-(ci * 1.0 / n) * ln(ci * 1.0 / n)', 1e9)} AS h0_u,
                CAST(count(*) AS BIGINT) AS n_states
         FROM marg CROSS JOIN tot
     )
@@ -99,16 +98,12 @@ def events_entropy_rate(spark, sf_dir):
     tot = trans.agg(F.sum("c").alias("n"))
     rate = (trans.join(F.broadcast(marg), "i")
             .crossJoin(F.broadcast(tot))
-            .agg(F.sum(F.round(
-                -(F.col("c") * 1.0 / F.col("n"))
-                * F.log(F.col("c") * 1.0 / F.col("ci")) * 1e9)
-                .cast("bigint")).alias("h_rate_u"),
+            .agg(units_sum(-(F.col("c") * 1.0 / F.col("n"))
+                * F.log(F.col("c") * 1.0 / F.col("ci")), 1e9).alias("h_rate_u"),
                 F.count("*").alias("n_cells")))
     marg_h = (marg.crossJoin(F.broadcast(tot))
-              .agg(F.sum(F.round(
-                  -(F.col("ci") * 1.0 / F.col("n"))
-                  * F.log(F.col("ci") * 1.0 / F.col("n")) * 1e9)
-                  .cast("bigint")).alias("h0_u"),
+              .agg(units_sum(-(F.col("ci") * 1.0 / F.col("n"))
+                  * F.log(F.col("ci") * 1.0 / F.col("n")), 1e9).alias("h0_u"),
                   F.count("*").alias("n_states")))
     return (tot.crossJoin(F.broadcast(rate))
             .crossJoin(F.broadcast(marg_h))
@@ -125,7 +120,7 @@ def events_entropy_rate(spark, sf_dir):
 
 # ------------------------------------------ per-source KL divergence
 
-@query("text_kl_matrix", oracle="""
+@query("text_kl_matrix", oracle=f"""
     WITH tok AS (
         SELECT source, unnest(string_split(text, ' ')) AS t
         FROM documents
@@ -154,16 +149,12 @@ def events_entropy_rate(spark, sf_dir):
     ),
     terms AS (
         SELECT source, ns,
-               CAST(sum(CAST(round(
-                   ((cs + 1.0) / (ns + v))
-                   * ln(((cs + 1.0) / (ns + v))
-                        / ((cc + 1.0) / (nc + v))) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS kl_fwd_u,
-               CAST(sum(CAST(round(
-                   ((cc + 1.0) / (nc + v))
-                   * ln(((cc + 1.0) / (nc + v))
-                        / ((cs + 1.0) / (ns + v))) * 1e9)
-                   AS BIGINT)) AS BIGINT) AS kl_rev_u
+               {units_sum_sql(
+                   '((cs + 1.0) / (ns + v)) * ln(((cs + 1.0) / (ns + v))'
+                   ' / ((cc + 1.0) / (nc + v)))', 1e9)} AS kl_fwd_u,
+               {units_sum_sql(
+                   '((cc + 1.0) / (nc + v)) * ln(((cc + 1.0) / (nc + v))'
+                   ' / ((cs + 1.0) / (ns + v)))', 1e9)} AS kl_rev_u
         FROM grid GROUP BY source, ns
     )
     SELECT source, ns AS n_tokens,
@@ -207,10 +198,8 @@ def text_kl_matrix(spark, sf_dir):
     ps = (F.col("cs") + 1.0) / (F.col("ns") + F.col("v"))
     pc = (F.col("cc") + 1.0) / (F.col("nc") + F.col("v"))
     terms = (grid.groupBy("source", "ns")
-             .agg(F.sum(F.round(ps * F.log(ps / pc) * 1e9)
-                        .cast("bigint")).alias("kl_fwd_u"),
-                  F.sum(F.round(pc * F.log(pc / ps) * 1e9)
-                        .cast("bigint")).alias("kl_rev_u")))
+             .agg(units_sum(ps * F.log(ps / pc), 1e9).alias("kl_fwd_u"),
+                  units_sum(pc * F.log(pc / ps), 1e9).alias("kl_rev_u")))
     return terms.select(
         "source", F.col("ns").alias("n_tokens"),
         F.round(F.col("kl_fwd_u") / 1e9, 6)
@@ -221,11 +210,10 @@ def text_kl_matrix(spark, sf_dir):
 
 # ------------------------------------------ rank-biased overlap
 
-@query("eval_rbo", oracle="""
+@query("eval_rbo", oracle=f"""
     WITH deg AS (
         SELECT l_partkey AS p, CAST(count(*) AS BIGINT) AS c,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS rev
+               {units_sum_sql('l_extendedprice', 100)} AS rev
         FROM lineitem GROUP BY l_partkey
     ),
     ra AS (
@@ -286,8 +274,7 @@ def eval_rbo(spark, sf_dir):
                                              "l_extendedprice")
     deg = (li.groupBy(F.col("l_partkey").alias("p"))
            .agg(F.count("*").alias("c"),
-                F.sum(F.round(F.col("l_extendedprice") * 100)
-                      .cast("bigint")).alias("rev")))
+                units_sum(F.col("l_extendedprice"), 100).alias("rev")))
     wa = Window.orderBy(F.col("c").desc(), F.col("p"))
     wb = Window.orderBy(F.col("rev").desc(), F.col("p"))
     ra = (deg.orderBy(F.col("c").desc(), "p").limit(20)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # --------------------------------------------- process capability
@@ -105,7 +106,7 @@ def ops_process_capability(spark, sf_dir):
 
 # ---------------------------------------- Benford second digit
 
-@query("stats_benford_second", oracle="""
+@query("stats_benford_second", oracle=f"""
     WITH digits AS (
         SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100)
                                      AS BIGINT) AS VARCHAR), 2, 1)
@@ -118,7 +119,7 @@ def ops_process_capability(spark, sf_dir):
         GROUP BY d2
     ),
     expect AS (
-        -- P(d2 = d) = sum_{f1=1..9} log10(1 + 1/(10*f1 + d))
+        -- P(d2 = d) = sum_{{f1=1..9}} log10(1 + 1/(10*f1 + d))
         SELECT ds.d2,
                sum(ln(1.0 + 1.0 / (10 * f1.f + ds.d2)) / ln(10.0))
                    AS p
@@ -128,10 +129,9 @@ def ops_process_capability(spark, sf_dir):
     ),
     tot AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM obs),
     chi AS (
-        SELECT CAST(sum(CAST(round(
-                   (obs.o - expect.p * tot.n)
-                   * (obs.o - expect.p * tot.n)
-                   / (expect.p * tot.n) * 1e8) AS BIGINT)) AS BIGINT)
+        SELECT {units_sum_sql(
+                   '(obs.o - expect.p * tot.n) * (obs.o - expect.p * tot.n)'
+                   ' / (expect.p * tot.n)', 1e8)}
                    AS chi_u,
                max(tot.n) AS n
         FROM obs JOIN expect ON obs.d2 = expect.d2 CROSS JOIN tot
@@ -174,8 +174,7 @@ def stats_benford_second(spark, sf_dir):
               .crossJoin(F.broadcast(tot)))
     dev = F.col("o") - F.col("p") * F.col("n")
     chi = joined.agg(
-        F.sum(F.round(dev * dev / (F.col("p") * F.col("n")) * 1e8)
-              .cast("bigint")).alias("chi_u"),
+        units_sum(dev * dev / (F.col("p") * F.col("n")), 1e8).alias("chi_u"),
         F.max("n").alias("n"))
     return chi.select("n",
                       F.round(F.col("chi_u") / 1e8, 4)
@@ -261,11 +260,10 @@ def events_return_gap_profile(spark, sf_dir):
 
 # --------------------------------------------- weight disparity
 
-@query("graph_weight_disparity", oracle="""
+@query("graph_weight_disparity", oracle=f"""
     WITH w AS (
         SELECT c.c_nationkey AS u, s.s_nationkey AS v,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('l.l_extendedprice', 100)} AS cents
         FROM lineitem l
         JOIN orders o   ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey  = c.c_custkey
@@ -280,10 +278,9 @@ def events_return_gap_profile(spark, sf_dir):
     ),
     disp AS (
         SELECT w.u, node.k,
-               CAST(sum(CAST(round(
-                   (CAST(w.cents AS DOUBLE) / node.strength)
-                   * (CAST(w.cents AS DOUBLE) / node.strength) * 1e6)
-                   AS BIGINT)) AS BIGINT) AS y_u
+               {units_sum_sql(
+                   '(CAST(w.cents AS DOUBLE) / node.strength)'
+                   ' * (CAST(w.cents AS DOUBLE) / node.strength)', 1e6)} AS y_u
         FROM w JOIN node ON w.u = node.u
         GROUP BY w.u, node.k
     )
@@ -320,14 +317,13 @@ def graph_weight_disparity(spark, sf_dir):
          .filter(F.col("c_nationkey") != F.col("s_nationkey"))
          .groupBy(F.col("c_nationkey").alias("u"),
                   F.col("s_nationkey").alias("v"))
-         .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                    .cast("bigint")).alias("cents")))
+         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
     node = w.groupBy("u").agg(F.count("*").alias("k"),
                               F.sum("cents").alias("strength"))
     share = F.col("cents").cast("double") / F.col("strength")
     disp = (w.join(node, "u")
             .groupBy("u", "k")
-            .agg(F.sum(F.round(share * share * 1e6).cast("bigint"))
+            .agg(units_sum(share * share, 1e6)
                  .alias("y_u")))
     return (disp.select(
         F.col("u").alias("nation"), F.col("k").alias("out_degree"),

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ---------------------------------------------- DL meta-analysis
@@ -150,11 +151,10 @@ def stats_meta_analysis(spark, sf_dir):
 
 # ------------------------------------------ Theil decomposition
 
-@query("stats_theil_decomposition", oracle="""
+@query("stats_theil_decomposition", oracle=f"""
     WITH spend AS (
         SELECT c.c_nationkey AS g,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
+               {units_sum_sql('o.o_totalprice', 100)} AS x
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY o.o_custkey, c.c_nationkey
     ),
@@ -170,23 +170,19 @@ def stats_meta_analysis(spark, sf_dir):
     ),
     within AS (
         SELECT sp.g,
-               CAST(sum(CAST(round(
-                   (CAST(sp.x AS DOUBLE) * gr.ng / gr.sg)
-                   * ln(CAST(sp.x AS DOUBLE) * gr.ng / gr.sg) * 1e6)
-                   AS BIGINT)) AS BIGINT) AS tw_u
+               {units_sum_sql(
+                   '(CAST(sp.x AS DOUBLE) * gr.ng / gr.sg)'
+                   ' * ln(CAST(sp.x AS DOUBLE) * gr.ng / gr.sg)', 1e6)} AS tw_u
         FROM spend sp JOIN grp gr ON sp.g = gr.g
         GROUP BY sp.g
     ),
     parts AS (
-        SELECT CAST(sum(CAST(round(
-                   (CAST(gr.sg AS DOUBLE) / t.s)
-                   * ln((CAST(gr.sg AS DOUBLE) * t.n)
-                        / (CAST(t.s AS DOUBLE) * gr.ng)) * 1e8)
-                   AS BIGINT)) AS BIGINT) AS tb_u,
-               CAST(sum(CAST(round(
-                   (CAST(gr.sg AS DOUBLE) / t.s)
-                   * (w.tw_u / (gr.ng * 1e6)) * 1e8) AS BIGINT))
-                   AS BIGINT) AS twsum_u
+        SELECT {units_sum_sql(
+                   '(CAST(gr.sg AS DOUBLE) / t.s)'
+                   ' * ln((CAST(gr.sg AS DOUBLE) * t.n)'
+                   ' / (CAST(t.s AS DOUBLE) * gr.ng))', 1e8)} AS tb_u,
+               {units_sum_sql(
+                   '(CAST(gr.sg AS DOUBLE) / t.s) * (w.tw_u / (gr.ng * 1e6))', 1e8)} AS twsum_u
         FROM grp gr JOIN within w ON gr.g = w.g CROSS JOIN tot t
     )
     SELECT round(tb_u / 1e8, 6) AS theil_between,
@@ -217,26 +213,22 @@ def stats_theil_decomposition(spark, sf_dir):
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     spend = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
              .groupBy("o_custkey", F.col("c_nationkey").alias("g"))
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("x")))
+             .agg(units_sum(F.col("o_totalprice"), 100).alias("x")))
     tot = spend.agg(F.count("*").alias("n"), F.sum("x").alias("s"))
     grp = spend.groupBy("g").agg(F.count("*").alias("ng"),
                                  F.sum("x").alias("sg"))
     ratio_w = (F.col("x").cast("double") * F.col("ng") / F.col("sg"))
     within = (spend.join(grp, "g")
               .groupBy("g")
-              .agg(F.sum(F.round(ratio_w * F.log(ratio_w) * 1e6)
-                         .cast("bigint")).alias("tw_u")))
+              .agg(units_sum(ratio_w * F.log(ratio_w), 1e6).alias("tw_u")))
     share = F.col("sg").cast("double") / F.col("s")
     parts = (grp.join(within, "g").crossJoin(F.broadcast(tot))
-             .agg(F.sum(F.round(
-                 share * F.log((F.col("sg").cast("double") * F.col("n"))
-                               / (F.col("s").cast("double")
-                                  * F.col("ng"))) * 1e8)
-                 .cast("bigint")).alias("tb_u"),
-                 F.sum(F.round(
-                     share * (F.col("tw_u") / (F.col("ng") * 1e6))
-                     * 1e8).cast("bigint")).alias("twsum_u")))
+             .agg(units_sum(share * F.log(
+                      (F.col("sg").cast("double") * F.col("n"))
+                      / (F.col("s").cast("double") * F.col("ng"))), 1e8)
+                  .alias("tb_u"),
+                  units_sum(share * (F.col("tw_u") / (F.col("ng") * 1e6)),
+                            1e8).alias("twsum_u")))
     return parts.select(
         F.round(F.col("tb_u") / 1e8, 6).alias("theil_between"),
         F.round(F.col("twsum_u") / 1e8, 6).alias("theil_within"),
@@ -318,7 +310,7 @@ def events_fano_curve(spark, sf_dir):
 
 # --------------------------------------------- Pythagorean means
 
-@query("agg_pythagorean_means", oracle="""
+@query("agg_pythagorean_means", oracle=f"""
     WITH v AS (
         SELECT c.c_nationkey AS nation,
                CAST(round(o.o_totalprice * 100) AS BIGINT) AS x
@@ -328,9 +320,8 @@ def events_fano_curve(spark, sf_dir):
         SELECT nation,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS s,
-               CAST(sum(CAST(round(ln(CAST(x AS DOUBLE)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS l_u,
-               CAST(sum(CAST(round(1e12 / x) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('ln(CAST(x AS DOUBLE))', 1e6)} AS l_u,
+               {units_sum_sql('1e12 / x')}
                    AS r_u
         FROM v GROUP BY nation
     )
@@ -367,9 +358,8 @@ def agg_pythagorean_means(spark, sf_dir):
     st = v.groupBy("nation").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("s"),
-        F.sum(F.round(F.log(F.col("x").cast("double")) * 1e6)
-              .cast("bigint")).alias("l_u"),
-        F.sum(F.round(1e12 / F.col("x")).cast("bigint")).alias("r_u"))
+        units_sum(F.log(F.col("x").cast("double")), 1e6).alias("l_u"),
+        units_sum(1e12 / F.col("x")).alias("r_u"))
     return (st.select(
         "nation", "n",
         F.round(F.col("s").cast("double") / F.col("n") / 100.0, 4)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 # Deterministic target policy: user segment -> intended action.
 _SEG_ACTION = ["click", "view", "purchase", "signup"]
@@ -63,13 +64,10 @@ _SEG_CASE_DUCK = ("CASE ((user_id % 4) + 4) % 4 "
     ),
     tot AS (SELECT CAST(sum(n_a) AS BIGINT) AS n FROM arms),
     terms AS (
-        SELECT CAST(sum(CAST(round(CAST(s_a AS DOUBLE) / n_a * 1e6)
-                             AS BIGINT)) AS BIGINT) AS ips_u,
-               CAST(sum(CAST(round(CAST(m_a AS DOUBLE) / n_a * 1e6)
-                             AS BIGINT)) AS BIGINT) AS w_u,
-               CAST(sum(CAST(round(CAST(m_a AS DOUBLE) / n_a
-                                   * (CAST(n AS DOUBLE) / n_a) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS w2_u
+        SELECT {units_sum_sql('CAST(s_a AS DOUBLE) / n_a', 1e6)} AS ips_u,
+               {units_sum_sql('CAST(m_a AS DOUBLE) / n_a', 1e6)} AS w_u,
+               {units_sum_sql(
+                   'CAST(m_a AS DOUBLE) / n_a * (CAST(n AS DOUBLE) / n_a)', 1e6)} AS w2_u
         FROM arms, tot
     )
     SELECT n,
@@ -110,17 +108,16 @@ def eval_ips_snips(spark, sf_dir):
         F.sum(F.col("hit") * F.col("r")).alias("s_a"))
     tot = arms.agg(F.sum("n_a").alias("n"))
     terms = (arms.crossJoin(F.broadcast(tot))
-             .agg(F.sum(F.round(F.col("s_a").cast("double")
-                                / F.col("n_a") * 1e6).cast("bigint"))
+             .agg(units_sum(F.col("s_a").cast("double")
+                                / F.col("n_a"), 1e6)
                   .alias("ips_u"),
-                  F.sum(F.round(F.col("m_a").cast("double")
-                                / F.col("n_a") * 1e6).cast("bigint"))
+                  units_sum(F.col("m_a").cast("double")
+                                / F.col("n_a"), 1e6)
                   .alias("w_u"),
-                  F.sum(F.round(F.col("m_a").cast("double")
+                  units_sum(F.col("m_a").cast("double")
                                 / F.col("n_a")
                                 * (F.col("n").cast("double")
-                                   / F.col("n_a")) * 1e6)
-                        .cast("bigint")).alias("w2_u"),
+                                   / F.col("n_a")), 1e6).alias("w2_u"),
                   F.max("n").alias("n")))
     wm = F.col("w_u").cast("double") / 1e6
     return terms.select(
@@ -213,11 +210,10 @@ def eval_bandit_replay(spark, sf_dir):
 
 # ------------------------------------- catalog coverage + novelty
 
-@query("recsys_catalog_coverage", oracle="""
+@query("recsys_catalog_coverage", oracle=f"""
     WITH spend AS (
         SELECT o.o_custkey AS cust, l.l_partkey AS part,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('l.l_extendedprice', 100)} AS cents
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         GROUP BY 1, 2
     ),
@@ -240,9 +236,8 @@ def eval_bandit_replay(spark, sf_dir):
         SELECT CAST(count(*) AS BIGINT) AS n_recs,
                CAST(count(DISTINCT recs.part) AS BIGINT) AS n_covered,
                CAST(count(DISTINCT recs.cust) AS BIGINT) AS n_users,
-               CAST(sum(CAST(round(-log2(CAST(pop2.cnt AS DOUBLE)
-                                         / tot.total) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS nov_u
+               {units_sum_sql(
+                   '-log2(CAST(pop2.cnt AS DOUBLE) / tot.total)', 1e6)} AS nov_u
         FROM recs JOIN pop2 ON recs.part = pop2.part CROSS JOIN tot
     )
     SELECT n_users, n_recs, n_covered,
@@ -275,8 +270,7 @@ def recsys_catalog_coverage(spark, sf_dir):
     spend = (li.join(o, li.l_orderkey == o.o_orderkey)
              .groupBy(F.col("o_custkey").alias("cust"),
                       F.col("l_partkey").alias("part"))
-             .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                        .cast("bigint")).alias("cents")))
+             .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
     recs = (spend.select(
         "cust", "part",
         F.row_number().over(Window.partitionBy("cust")
@@ -292,9 +286,8 @@ def recsys_catalog_coverage(spark, sf_dir):
            .agg(F.count("*").alias("n_recs"),
                 F.countDistinct("part").alias("n_covered"),
                 F.countDistinct("cust").alias("n_users"),
-                F.sum(F.round(-F.log2(F.col("cnt").cast("double")
-                                      / F.col("total")) * 1e6)
-                      .cast("bigint")).alias("nov_u")))
+                units_sum(-F.log2(F.col("cnt").cast("double")
+                                      / F.col("total")), 1e6).alias("nov_u")))
     return (nov.crossJoin(F.broadcast(catalog))
             .select("n_users", "n_recs", "n_covered",
                     F.round(F.col("n_covered").cast("double")

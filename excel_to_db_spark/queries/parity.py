@@ -20,7 +20,7 @@ from pyspark.sql.types import (LongType, StringType, StructField, StructType)
 from ..ingest import load_excel_table
 from ..sinks.csv_sink import export_csv
 from ..sinks.display import collect_formatted
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum, cents_sum_sql
 from .registry import query, scratch_dir
 
 DEMO_XLSX = "/root/reference/demo.xlsx"
@@ -119,9 +119,9 @@ def excel_datasource(spark, sf_dir):
             .option("path", DEMO_XLSX).load())
 
 
-@query("sink_parquet_partitioned", oracle="""
+@query("sink_parquet_partitioned", oracle=f"""
     SELECT event_type, count(*) AS n,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
              AS sum_value
     FROM events
     WHERE event_type IN ('click', 'purchase')
@@ -146,4 +146,4 @@ def sink_parquet_partitioned(spark, sf_dir):
     return (back.filter(F.col("event_type").isin("click", "purchase"))
             .groupBy("event_type")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("value")).alias("sum_value")))
+                 cents_sum(F.col("value")).alias("sum_value")))

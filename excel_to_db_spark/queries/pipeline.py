@@ -23,7 +23,8 @@ from pyspark.sql.window import Window
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import fixed_sum, h32, h32_sql
+from ..numerics import (
+    fixed_sum, fixed_sum_sql, h32, h32_sql, units_sum, units_sum_sql)
 from .registry import query
 from .relational import T
 
@@ -203,7 +204,7 @@ def embedding_centroids(spark, sf_dir):
                  F.count("*").alias("n")))
 
 
-@query("embedding_quantize", oracle="""
+@query("embedding_quantize", oracle=f"""
     WITH e AS (
         SELECT vec_id, unnest(embedding::DOUBLE[]) AS v,
                unnest(range(1, 65)) AS pos
@@ -218,7 +219,7 @@ def embedding_centroids(spark, sf_dir):
     )
     SELECT vec_id, CAST(sum(qv) AS BIGINT) AS q_sum,
            min(qv) AS q_min, max(qv) AS q_max,
-           round(sum(CAST(round(err * 1e9) AS BIGINT)) / 1e9, 6) AS abs_err
+           {fixed_sum_sql('err', 1e9, 6)} AS abs_err
     FROM q GROUP BY vec_id
 """)
 def embedding_quantize(spark, sf_dir):
@@ -727,7 +728,7 @@ def _km_mean(src_a: str) -> str:
     c2 AS ({_km_mean('a2')}),
     af AS ({_km_assign('v', 'c2')})
     SELECT cell AS cluster, count(*) AS n,
-           round(sum(CAST(round(d2 * 1e6) AS BIGINT)) / 1e6, 3) AS inertia
+           {fixed_sum_sql('d2', 1e6, 3)} AS inertia
     FROM af GROUP BY cell
 """)
 def kmeans_lloyd(spark, sf_dir):
@@ -950,7 +951,7 @@ def sample_pps_systematic(spark, sf_dir):
                     F.round(F.col("cents") / 100.0, 2).alias("price")))
 
 
-@query("pipeline_data_card", oracle="""
+@query("pipeline_data_card", oracle=f"""
     WITH base AS (
         SELECT doc_id, lang, n_chars,
                len(string_split(text, ' ')) AS n_tokens,
@@ -964,9 +965,8 @@ def sample_pps_systematic(spark, sf_dir):
         FROM base GROUP BY lang
     ),
     ent AS (
-        SELECT round(sum(CAST(round(-(c / CAST(tot AS DOUBLE))
-                                    * log2(c / CAST(tot AS DOUBLE))
-                                    * 1e8) AS BIGINT)) / 1e8, 4) AS h
+        SELECT {fixed_sum_sql(
+                   '-(c / CAST(tot AS DOUBLE)) * log2(c / CAST(tot AS DOUBLE))', 1e8, 4)} AS h
         FROM langs
     ),
     dups AS (
@@ -1007,8 +1007,7 @@ def pipeline_data_card(spark, sf_dir):
     tot = langs.agg(F.sum("c").alias("tot"))
     p = F.col("c") / F.col("tot").cast("double")
     ent = (langs.crossJoin(F.broadcast(tot))
-           .agg(F.round(F.sum(F.round(-p * F.log2(p) * 1e8)
-                              .cast("bigint")) / 1e8, 4).alias("h"),
+           .agg(fixed_sum(-p * F.log2(p), 1e8, 4).alias("h"),
                 F.count("*").alias("n_langs")))
     dups = base.agg(F.count("*").alias("n_docs"),
                     F.countDistinct("fp").alias("n_unique"),
@@ -1142,14 +1141,14 @@ def bm25_scores(d):
 
 # ------------------------------------- CCNet-style perplexity buckets
 
-@query("text_perplexity_buckets", oracle="""
+@query("text_perplexity_buckets", oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents
     ),
     bge AS (
         SELECT doc_id, lang, b.w1 AS w1, b.w2 AS w2 FROM (
             SELECT doc_id, lang,
-                   unnest([{'w1': t[i], 'w2': t[i+1]}
+                   unnest([{{'w1': t[i], 'w2': t[i+1]}}
                            for i in range(1, len(t))]) AS b
             FROM toks)
     ),
@@ -1158,8 +1157,7 @@ def bm25_scores(d):
     ds AS (
         SELECT doc_id, any_value(lang) AS lang,
                CAST(count(*) AS BIGINT) AS n_bigrams,
-               CAST(sum(CAST(round(log2(c2 * 1.0 / c1) * 1000000)
-                             AS BIGINT)) AS BIGINT) AS s_micro
+               {units_sum_sql('log2(c2 * 1.0 / c1)', 1000000)} AS s_micro
         FROM bge JOIN c2 USING (w1, w2) JOIN c1 USING (w1)
         GROUP BY doc_id
     ),
@@ -1219,8 +1217,8 @@ def text_perplexity_buckets(spark, sf_dir):
           .join(F.broadcast(c1), ["w1"])
           .groupBy("doc_id", "lang")
           .agg(F.count("*").alias("n_bigrams"),
-               F.sum(F.round(F.log2(F.col("c2") * 1.0 / F.col("c1"))
-                             * 1000000).cast("bigint")).alias("s_micro")))
+               units_sum(F.log2(F.col("c2") * 1.0 / F.col("c1")), 1000000)
+               .alias("s_micro")))
     val = ds.select("doc_id", "lang", "n_bigrams",
                     F.expr("(s_micro * 1000) DIV n_bigrams").alias("v"))
     rnk = distributed_rank(val, "v", "doc_id", "rr")

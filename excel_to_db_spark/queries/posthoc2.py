@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -160,7 +160,7 @@ def stats_cochran_armitage(spark, sf_dir):
 
 # ------------------------------------------------ Tukey HSD panel
 
-@query("stats_tukey_hsd", oracle="""
+@query("stats_tukey_hsd", oracle=f"""
     WITH v AS (
         SELECT event_type AS grp,
                CAST(round(value * 100) AS BIGINT) AS c
@@ -176,9 +176,9 @@ def stats_cochran_armitage(spark, sf_dir):
         -- pooled MSW = sum_g SS_g / (N - k); each group's
         -- SS_g = (n*q - s^2)/n snaps to 1e-2 cents^2 units before
         -- the 5-term sum
-        SELECT sum(CAST(round(CAST(CAST(n AS HUGEINT) * q
-                                   - CAST(s AS HUGEINT) * s AS DOUBLE)
-                              / n * 1e2) AS BIGINT)) / 1e2
+        SELECT {units_sum_sql(
+                   'CAST(CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT)'
+                   ' * s AS DOUBLE) / n', 1e2)} / 1e2
                / CAST(sum(n) - count(*) AS DOUBLE) AS s2w,
                CAST(sum(n) - count(*) AS BIGINT) AS df_w
         FROM st
@@ -223,10 +223,9 @@ def stats_tukey_hsd(spark, sf_dir):
         F.count("*").alias("n"), F.sum("c").alias("s"),
         F.sum(F.col("c").cast(d38) * F.col("c")).alias("q"))
     mse = st.agg(
-        (F.sum(F.round((F.col("n").cast(d38) * F.col("q")
+        (units_sum((F.col("n").cast(d38) * F.col("q")
                         - F.col("s").cast(d38) * F.col("s"))
-                       .cast("double") / F.col("n") * 1e2)
-               .cast("bigint")) / 1e2
+                       .cast("double") / F.col("n"), 1e2) / 1e2
          / (F.sum("n") - F.count("*")).cast("double")).alias("s2w"),
         (F.sum("n") - F.count("*")).alias("df_w"))
     a = st.select(F.col("grp").alias("grp_a"),
@@ -356,7 +355,7 @@ def ml_cost_threshold(spark, sf_dir):
 
 # ------------------------------------------------- design effect
 
-@query("stats_design_effect", oracle="""
+@query("stats_design_effect", oracle=f"""
     WITH per AS (
         SELECT user_id,
                CAST(round(value * 100) AS BIGINT) AS c
@@ -373,8 +372,7 @@ def ml_cost_threshold(spark, sf_dir):
                CAST(sum(m) AS BIGINT) AS n,
                CAST(sum(sg) AS HUGEINT) AS t,
                CAST(sum(qg) AS HUGEINT) AS q,
-               sum(CAST(round(CAST(sg AS DOUBLE) * sg / m * 1e2)
-                        AS BIGINT)) AS ssg_u
+               {units_sum_sql('CAST(sg AS DOUBLE) * sg / m', 1e2)} AS ssg_u
         FROM grp
     ),
     anova AS (
@@ -424,8 +422,8 @@ def stats_design_effect(spark, sf_dir):
     st = grp.agg(
         F.count("*").alias("g"), F.sum("m").alias("n"),
         F.sum("sg").alias("t"), F.sum("qg").alias("q"),
-        F.sum(F.round(F.col("sg").cast("double") * F.col("sg")
-                      / F.col("m") * 1e2).cast("bigint"))
+        units_sum(F.col("sg").cast("double") * F.col("sg")
+                      / F.col("m"), 1e2)
         .alias("ssg_u"))
     msb = ((F.col("ssg_u").cast("double") / 1e2
             - F.col("t").cast("double") * F.col("t") / F.col("n"))

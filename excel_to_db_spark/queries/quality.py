@@ -18,7 +18,8 @@ from pyspark.sql.window import Window as W
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import cents_sum as _cents_sum, h32, h32_sql
+from ..numerics import (
+    cents_sum, cents_sum_sql, h32, h32_sql, units_sum, units_sum_sql)
 from .registry import query
 from .relational import T
 
@@ -586,7 +587,7 @@ def distinct_salted(spark, sf_dir):
 
 # ------------------------------------------------- winsorization
 
-@query("winsorize_group", oracle="""
+@query("winsorize_group", oracle=f"""
     WITH q AS (
         SELECT o_orderpriority,
                quantile_cont(o_totalprice, 0.05) AS lo,
@@ -596,8 +597,7 @@ def distinct_salted(spark, sf_dir):
     SELECT o.o_orderpriority,
            count(CASE WHEN o_totalprice < lo THEN 1 END) AS n_clip_lo,
            count(CASE WHEN o_totalprice > hi THEN 1 END) AS n_clip_hi,
-           round(sum(CAST(round(greatest(least(o_totalprice, hi), lo)
-                                * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('greatest(least(o_totalprice, hi), lo)')}
                AS winsorized_sum
     FROM orders o JOIN q USING (o_orderpriority)
     GROUP BY 1
@@ -625,16 +625,16 @@ def winsorize_group(spark, sf_dir):
                  .alias("n_clip_lo"),
                  F.count(F.when(F.col("o_totalprice") > F.col("hi"), 1))
                  .alias("n_clip_hi"),
-                 _cents_sum(clipped).alias("winsorized_sum")))
+                 cents_sum(clipped).alias("winsorized_sum")))
 
 
 # ----------------------------------------------- observed metrics
 
-@query("observed_metrics", oracle="""
+@query("observed_metrics", oracle=f"""
     SELECT count(*) AS n_rows,
            CAST(count(CASE WHEN o_totalprice > 400000 THEN 1 END)
                 AS BIGINT) AS n_big,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
                AS sum_price
     FROM orders
 """)
@@ -658,8 +658,7 @@ def observed_metrics(spark, sf_dir):
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.count(F.when(F.col("o_totalprice") > 400000, 1)).alias("n_big"),
-        F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-                / 100.0, 2).alias("sum_price"))
+        cents_sum(F.col("o_totalprice")).alias("sum_price"))
     # the action that drives rows past the observation point
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
@@ -717,11 +716,10 @@ def text_compression_quality(spark, sf_dir):
                     F.round(ratio, 5).alias("compression_ratio")))
 
 
-@query("graph_assortativity", oracle="""
+@query("graph_assortativity", oracle=f"""
     WITH w AS (
         SELECT c_nationkey AS u, s_nationkey AS v,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('l_extendedprice', 100)} AS cents
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -800,8 +798,7 @@ def graph_assortativity(spark, sf_dir):
          .filter(F.col("c_nationkey") != F.col("s_nationkey"))
          .groupBy(F.col("c_nationkey").alias("u"),
                   F.col("s_nationkey").alias("v"))
-         .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                    .cast("bigint")).alias("cents")))
+         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
     wrk = _W.partitionBy("u").orderBy(F.col("cents").desc(), F.col("v"))
     top = (w.withColumn("rk", F.row_number().over(wrk))
            .filter(F.col("rk") <= 2).select("u", "v"))

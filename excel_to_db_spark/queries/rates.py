@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -204,11 +204,10 @@ def stats_two_prop_z(spark, sf_dir):
 
 # ------------------------------------------- jackknife SE of a ratio
 
-@query("stats_jackknife_se", oracle="""
+@query("stats_jackknife_se", oracle=f"""
     WITH grp AS (
         SELECT c.c_nationkey AS g,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS s_g,
+               {units_sum_sql('o.o_totalprice', 100)} AS s_g,
                CAST(count(*) AS BIGINT) AS c_g
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1
@@ -261,8 +260,7 @@ def stats_jackknife_se(spark, sf_dir):
     c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     grp = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
            .groupBy(F.col("c_nationkey").alias("g"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("s_g"),
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("s_g"),
                 F.count("*").alias("c_g")))
     tot = grp.agg(F.sum("s_g").alias("s"), F.sum("c_g").alias("c"),
                   F.count("*").alias("g"))

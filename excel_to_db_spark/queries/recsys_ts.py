@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # --------------------------------------- item-item covisitation top-k
@@ -191,7 +192,7 @@ def eval_krippendorff_alpha(spark, sf_dir):
 
 # ----------------------------- PACF via unrolled Durbin-Levinson (lag 3)
 
-@query("ts_pacf", oracle="""
+@query("ts_pacf", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                CAST(count(*) AS BIGINT) AS x
@@ -204,8 +205,7 @@ def eval_krippendorff_alpha(spark, sf_dir):
     ),
     gam AS (
         SELECT k.k,
-               CAST(sum(CAST(round((d.x - mu) * (d2.x - mu) * 1e4)
-                             AS BIGINT)) AS BIGINT) AS g_u
+               {units_sum_sql('(d.x - mu) * (d2.x - mu)', 1e4)} AS g_u
         FROM daily d
         CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k) k
         JOIN daily d2 ON d2.day = d.day + INTERVAL (k.k) DAY
@@ -273,9 +273,8 @@ def ts_pacf(spark, sf_dir):
                  == F.col("day_k").cast("date"))
            .crossJoin(F.broadcast(mean))
            .groupBy("k")
-           .agg(F.sum(F.round((F.col("x") - F.col("mu"))
-                              * (F.col("xk") - F.col("mu")) * 1e4)
-                      .cast("bigint")).alias("g_u")))
+           .agg(units_sum((F.col("x") - F.col("mu"))
+                              * (F.col("xk") - F.col("mu")), 1e4).alias("g_u")))
     g0 = gam.filter(F.col("k") == 0).select(
         F.col("g_u").alias("g0"))
     r = (gam.filter(F.col("k") > 0)
@@ -306,10 +305,10 @@ def ts_pacf(spark, sf_dir):
 
 # --------------------------------------------- compounded growth index
 
-@query("ts_compound_index", oracle="""
+@query("ts_compound_index", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS cents
         FROM events GROUP BY 1
     ),
@@ -347,7 +346,7 @@ def ts_compound_index(spark, sf_dir):
     window exemption)."""
     e = T(spark, sf_dir, "events")
     daily = (e.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+             .agg(units_sum(F.col("value"), 100)
                   .alias("cents")))
     w = Window.orderBy("day")
     ret = daily.withColumn(

@@ -32,20 +32,19 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
 
 # Daily order revenue (cents) with a 0-based day index off the
 # calendar-bounded spine — the shared base for the OLS diagnostics.
-_DAYSER_SQL = """
+_DAYSER_SQL = f"""
     SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) - 1 AS t,
            d, y
     FROM (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
+               {units_sum_sql('o_totalprice', 100)} AS y
         FROM orders GROUP BY 1
     )
 """
@@ -55,8 +54,7 @@ def _dayser(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("y")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("y")))
     return day.select(
         (F.row_number().over(Window.orderBy("d")).cast("bigint") - 1)
         .alias("t"), "d", "y")
@@ -64,10 +62,9 @@ def _dayser(spark, sf_dir):
 
 # ----------------------------------------------- Huber M location
 
-@query("stats_huber_m_estimate", oracle="""
+@query("stats_huber_m_estimate", oracle=f"""
     WITH day AS (
-        SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
+        SELECT {units_sum_sql('o_totalprice', 100)} AS x
         FROM orders GROUP BY date_trunc('day', o_orderdate)
     ),
     m0 AS (
@@ -84,10 +81,9 @@ def _dayser(spark, sf_dir):
     ),
     it1 AS (
         SELECT n, k,
-               CAST(sum(CAST(round(least(1.0, k / abs(x - mu0)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS sw_u,
-               CAST(sum(CAST(round(least(1.0, k / abs(x - mu0)) * x)
-                             AS BIGINT)) AS HUGEINT) AS swx
+               {units_sum_sql('least(1.0, k / abs(x - mu0))', 1e6)} AS sw_u,
+               CAST({units_sum_sql(
+                        'least(1.0, k / abs(x - mu0)) * x')} AS HUGEINT) AS swx
         FROM day, base GROUP BY n, k
     ),
     mu1t AS (
@@ -96,10 +92,9 @@ def _dayser(spark, sf_dir):
     it2 AS (
         SELECT n,
                round(mu1 / 100.0, 4) AS huber_mu_step1,
-               CAST(sum(CAST(round(least(1.0, k / abs(x - mu1)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS sw_u,
-               CAST(sum(CAST(round(least(1.0, k / abs(x - mu1)) * x)
-                             AS BIGINT)) AS HUGEINT) AS swx
+               {units_sum_sql('least(1.0, k / abs(x - mu1))', 1e6)} AS sw_u,
+               CAST({units_sum_sql(
+                        'least(1.0, k / abs(x - mu1)) * x')} AS HUGEINT) AS swx
         FROM day, mu1t GROUP BY n, mu1
     )
     SELECT n, huber_mu_step1,
@@ -129,8 +124,7 @@ def stats_huber_m_estimate(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("x")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("x")))
     d38 = "decimal(38,0)"
     m0 = day.agg(F.count("*").alias("n"), F.sum("x").alias("s"),
                  F.sum(F.col("x").cast(d38) * F.col("x")).alias("q"))
@@ -143,7 +137,7 @@ def stats_huber_m_estimate(spark, sf_dir):
 
     def step(mu_col):
         w = F.least(F.lit(1.0), F.col("k") / F.abs(F.col("x") - mu_col))
-        return (F.sum(F.round(w * 1e6).cast("bigint")).alias("sw_u"),
+        return (units_sum(w, 1e6).alias("sw_u"),
                 F.sum(F.round(w * F.col("x")).cast(d38)).alias("swx"))
 
     sw1, swx1 = step(F.col("mu0"))

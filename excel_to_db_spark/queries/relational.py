@@ -227,12 +227,12 @@ def join_anti(spark, sf_dir):
 
 # Exact money sum in integer cents — order-independent (numerics.py is
 # the single definition; see it for the SQL twin and rationale).
-from ..numerics import cents_sum as _cents_sum  # noqa: E402
+from ..numerics import cents_sum, cents_sum_sql, units_sum_sql  # noqa: E402
 
 
-@query("agg_basic", oracle="""
+@query("agg_basic", oracle=f"""
     SELECT count(*) AS n_rows,
-           round(sum(CAST(round((l_quantity) * 100) AS BIGINT)) / 100.0, 2) AS sum_qty,
+           {cents_sum_sql('l_quantity')} AS sum_qty,
            round(avg(l_extendedprice), 4) AS avg_price,
            min(l_extendedprice) AS min_price,
            max(l_extendedprice) AS max_price
@@ -243,21 +243,23 @@ def agg_basic(spark, sf_dir):
     le = T(spark, sf_dir, "lineitem")
     return le.agg(
         F.count("*").alias("n_rows"),
-        _cents_sum(F.col("l_quantity")).alias("sum_qty"),
+        cents_sum(F.col("l_quantity")).alias("sum_qty"),
         F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
         F.min("l_extendedprice").alias("min_price"),
         F.max("l_extendedprice").alias("max_price"))
 
 
-@query("agg_groupby", oracle="""
+@query("agg_groupby", oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           round(sum(CAST(round((l_quantity) * 100) AS BIGINT)) / 100.0, 2) AS sum_qty,
-           round(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / 100.0, 2) AS sum_base_price,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS sum_disc_price,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 100) AS BIGINT)) / 100.0, 2) AS sum_charge,
+           {cents_sum_sql('l_quantity')} AS sum_qty,
+           {cents_sum_sql('l_extendedprice')} AS sum_base_price,
+           {cents_sum_sql(
+               'l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {cents_sum_sql(
+               'l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
            round(avg(l_quantity), 4) AS avg_qty,
-           round(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / 100.0, 2) / count(*) AS avg_price,
-           round(sum(CAST(round((l_discount) * 100) AS BIGINT)) / 100.0, 2) / count(*) AS avg_disc,
+           {cents_sum_sql('l_extendedprice')} / count(*) AS avg_price,
+           {cents_sum_sql('l_discount')} / count(*) AS avg_disc,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
@@ -271,19 +273,19 @@ def agg_groupby(spark, sf_dir):
     disc = le.l_extendedprice * (1 - le.l_discount)
     return (le.filter(le.l_shipdate <= F.lit("2001-06-01 00:00:00").cast("timestamp"))
             .groupBy("l_returnflag", "l_linestatus")
-            .agg(_cents_sum(F.col("l_quantity")).alias("sum_qty"),
-                 _cents_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-                 _cents_sum(disc).alias("sum_disc_price"),
-                 _cents_sum(disc * (1 + le.l_tax)).alias("sum_charge"),
+            .agg(cents_sum(F.col("l_quantity")).alias("sum_qty"),
+                 cents_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+                 cents_sum(disc).alias("sum_disc_price"),
+                 cents_sum(disc * (1 + le.l_tax)).alias("sum_charge"),
                  F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
                  # avg of exact-2dp values: snap the SUM to cents, then
                  # divide — both engines then hold bit-identical doubles,
                  # immune to the midpoint flake that round(avg(x), k)
                  # has when the true average lands on a k-dp boundary
                  # (avg_qty is exempt: integer quantities sum exactly).
-                 (_cents_sum(F.col("l_extendedprice")) / F.count("*"))
+                 (cents_sum(F.col("l_extendedprice")) / F.count("*"))
                  .alias("avg_price"),
-                 (_cents_sum(F.col("l_discount")) / F.count("*"))
+                 (cents_sum(F.col("l_discount")) / F.count("*"))
                  .alias("avg_disc"),
                  F.count("*").alias("count_order")))
 
@@ -313,11 +315,11 @@ def agg_having(spark, sf_dir):
             .filter(F.col("n_orders") >= 15))
 
 
-@query("agg_filter", oracle="""
+@query("agg_filter", oracle=f"""
     SELECT l_returnflag,
            count(*) FILTER (WHERE l_quantity > 25) AS n_big,
-           round(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                     FILTER (WHERE l_discount > 0.05) / 100.0, 2) AS sum_hidisc
+           {cents_sum_sql('l_extendedprice', where='l_discount > 0.05')}
+               AS sum_hidisc
     FROM lineitem GROUP BY l_returnflag
 """)
 def agg_filter(spark, sf_dir):
@@ -497,10 +499,10 @@ def distinct_rows(spark, sf_dir):
 
 # ------------------------------------------------------- subqueries / CTEs
 
-@query("cte_query", oracle="""
+@query("cte_query", oracle=f"""
     WITH cust_orders AS (
         SELECT o_custkey, count(*) AS n_orders,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS spent_cents
+               {units_sum_sql('o_totalprice', 100)} AS spent_cents
         FROM orders GROUP BY o_custkey
     )
     SELECT c.c_mktsegment, count(*) AS n_cust,
@@ -514,15 +516,15 @@ def cte_query(spark, sf_dir):
     pipeline as integer cents end to end (SURVEY §4.3): the per-customer
     totals AND the segment average are exact until the final 4dp round,
     so no summation order on either engine can flip the hash."""
-    return spark.sql("""
+    return spark.sql(f"""
         WITH cust_orders AS (
             SELECT o_custkey, count(*) AS n_orders,
-                   sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS spent_cents
-            FROM {orders} GROUP BY o_custkey
+                   {units_sum_sql('o_totalprice', 100)} AS spent_cents
+            FROM {{orders}} GROUP BY o_custkey
         )
         SELECT c.c_mktsegment, count(*) AS n_cust,
                round(sum(co.spent_cents) / count(*) / 100.0, 4) AS avg_spent
-        FROM {customer} c JOIN cust_orders co ON c.c_custkey = co.o_custkey
+        FROM {{customer}} c JOIN cust_orders co ON c.c_custkey = co.o_custkey
         GROUP BY c.c_mktsegment
     """, orders=T(spark, sf_dir, "orders"),
         customer=T(spark, sf_dir, "customer"))

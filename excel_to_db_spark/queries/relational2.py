@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum, cents_sum_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -124,7 +124,7 @@ def agg_bool_bit(spark, sf_dir):
 
 # ------------------------------------------------------------ calendar spine
 
-@query("date_spine", oracle="""
+@query("date_spine", oracle=f"""
     WITH spine AS (
         SELECT CAST(d AS DATE) AS day
         FROM generate_series(DATE '1995-06-01', DATE '1995-06-30',
@@ -133,7 +133,7 @@ def agg_bool_bit(spark, sf_dir):
     daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                count(*)                  AS n_orders,
-               round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2) AS revenue
+               {cents_sum_sql('o_totalprice')} AS revenue
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1995-06-01'
           AND o_orderdate <  TIMESTAMP '1995-07-01'
@@ -158,7 +158,7 @@ def date_spine(spark, sf_dir):
                       & (F.col("o_orderdate") < "1995-07-01"))
              .groupBy(F.col("o_orderdate").cast("date").alias("day"))
              .agg(F.count("*").alias("n_orders"),
-                  _cents_sum(F.col("o_totalprice")).alias("revenue")))
+                  cents_sum(F.col("o_totalprice")).alias("revenue")))
     return (spine.join(daily, "day", "left")
             .select("day",
                     F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
@@ -279,13 +279,13 @@ def regexp_pack(spark, sf_dir):
         F.col("p_name").rlike(r"^(red|blue)").alias("is_primary"))
 
 
-@query("customer_rfm", oracle="""
+@query("customer_rfm", oracle=f"""
     WITH rfm AS (
         SELECT o_custkey,
                date_diff('day', CAST(max(o_orderdate) AS DATE),
                          DATE '2001-09-01')       AS recency_days,
                count(*)                            AS frequency,
-               round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+               {cents_sum_sql('o_totalprice')}
                                                    AS monetary
         FROM orders GROUP BY o_custkey
     ),
@@ -298,7 +298,7 @@ def regexp_pack(spark, sf_dir):
     )
     SELECT r, f, m,
            CAST(count(*) AS BIGINT)        AS n_customers,
-           round(sum(CAST(round(monetary * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('monetary')}
                                            AS segment_value
     FROM scored GROUP BY r, f, m
 """)
@@ -314,7 +314,7 @@ def customer_rfm(spark, sf_dir):
            .agg(F.datediff(F.lit("2001-09-01").cast("date"),
                            F.max("o_orderdate").cast("date")).alias("recency_days"),
                 F.count("*").alias("frequency"),
-                _cents_sum(F.col("o_totalprice")).alias("monetary")))
+                cents_sum(F.col("o_totalprice")).alias("monetary")))
     scored = rfm.select(
         "*",
         F.ntile(4).over(Window.orderBy("recency_days", "o_custkey")).alias("r"),
@@ -324,7 +324,7 @@ def customer_rfm(spark, sf_dir):
                                        "o_custkey")).alias("m"))
     return (scored.groupBy("r", "f", "m")
             .agg(F.count("*").alias("n_customers"),
-                 _cents_sum(F.col("monetary")).alias("segment_value")))
+                 cents_sum(F.col("monetary")).alias("segment_value")))
 
 
 @query("set_bag_ops", oracle="""
@@ -387,14 +387,14 @@ def window_ignore_nulls(spark, sf_dir):
                      .alias("running_last_big")))
 
 
-@query("customer_rfm_scaled", oracle="""
+@query("customer_rfm_scaled", oracle=f"""
     WITH rfm AS (
         SELECT o_custkey,
                CAST(date_diff('day', CAST(max(o_orderdate) AS DATE),
                               DATE '2001-09-01') AS BIGINT) AS rec,
                CAST(count(*) AS BIGINT)                     AS freq,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT)                              AS mon
+               {units_sum_sql(
+                   'o_totalprice', 100)}                              AS mon
         FROM orders GROUP BY o_custkey
     ),
     b AS (
@@ -439,7 +439,7 @@ def customer_rfm_scaled(spark, sf_dir):
                    F.max("o_orderdate").cast("date")).cast("bigint")
         .alias("rec"),
         F.count("*").alias("freq"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        units_sum(F.col("o_totalprice"), 100)
         .alias("mon"))
     b = rfm.agg(*[F.percentile(c, q).alias(f"{c[0]}{i}")
                   for c in ("rec", "freq", "mon")

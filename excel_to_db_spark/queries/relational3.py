@@ -24,6 +24,7 @@ from pyspark.sql.window import Window
 from ..operators import physical
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 _CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
 
@@ -667,12 +668,11 @@ def agg_weighted_median(spark, sf_dir):
                  F.min("tw").alias("total_weight")))
 
 
-@query("window_range_trailing7d", oracle="""
+@query("window_range_trailing7d", oracle=f"""
     WITH daily AS (
         SELECT l_returnflag AS flag,
                CAST(date_trunc('day', l_shipdate) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('l_extendedprice', 100)} AS cents
         FROM lineitem
         WHERE l_shipdate < TIMESTAMP '1995-04-01'
         GROUP BY 1, 2
@@ -706,8 +706,7 @@ def window_range_trailing7d(spark, sf_dir):
     daily = (le.groupBy(F.col("l_returnflag").alias("flag"),
                         F.date_trunc("day", F.col("l_shipdate"))
                         .alias("day"))
-             .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                        .cast("bigint")).alias("cents")))
+             .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
     w = (Window.partitionBy("flag")
          .orderBy(F.unix_timestamp(F.col("day")))
          .rangeBetween(-518400, 0))

@@ -30,16 +30,16 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ------------------------------------------ Kendall's W concordance
 
-@query("stats_kendall_w", oracle="""
+@query("stats_kendall_w", oracle=f"""
     WITH rev AS (
         SELECT CAST(year(o.o_orderdate) AS INTEGER) AS judge,
                c.c_nationkey AS item,
-               CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('o.o_totalprice', 100)} AS cents
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1, 2
     ),
@@ -101,8 +101,7 @@ def stats_kendall_w(spark, sf_dir):
     rev = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
            .groupBy(F.year("o_orderdate").cast("int").alias("judge"),
                     F.col("c_nationkey").alias("item"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("cents")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("cents")))
     m_judges = rev.agg(F.countDistinct("judge").alias("mm"))
     common = (rev.groupBy("item").agg(F.count("*").alias("nj"))
               .crossJoin(F.broadcast(m_judges))

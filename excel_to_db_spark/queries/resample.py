@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import erfc, erfc_sql, h32, h32_sql
+from ..numerics import erfc, erfc_sql, h32, h32_sql, units_sum, units_sum_sql
 
 
 _BB_L = 30          # block length (days)
@@ -50,8 +50,7 @@ _BB_DRAW = 80       # blocks drawn per replicate (~n/L)
                    AS t, y
         FROM (
             SELECT date_trunc('day', o_orderdate) AS d,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS y
+                   {units_sum_sql('o_totalprice', 100)} AS y
             FROM orders GROUP BY 1
         )
     ),
@@ -127,8 +126,7 @@ def ts_block_bootstrap(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("y")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("y")))
     ser = day.select(
         (F.row_number().over(Window.orderBy("d")).cast("bigint") - 1)
         .alias("t"), "y")
@@ -316,8 +314,7 @@ def stats_fisher_z_test(spark, sf_dir):
     SELECT CAST(sum(n_smp) AS BIGINT) AS n_sample,
            round(CAST(sum(s_smp) AS DOUBLE) / sum(n_smp) / 100.0, 4)
                AS naive_mean,
-           round(sum(CAST(round(CAST(n_pop AS DOUBLE)
-                                * s_smp / n_smp) AS BIGINT))
+           round({units_sum_sql('CAST(n_pop AS DOUBLE) * s_smp / n_smp')}
                  / CAST(sum(n_pop) AS DOUBLE) / 100.0, 4)
                AS poststrat_mean,
            round(CAST(sum(s_pop) AS DOUBLE) / sum(n_pop) / 100.0, 4)
@@ -355,9 +352,8 @@ def sample_poststratify(spark, sf_dir):
         F.sum("n_smp").alias("n_sample"),
         F.round(F.sum("s_smp").cast("double") / F.sum("n_smp") / 100.0,
                 4).alias("naive_mean"),
-        F.round(F.sum(F.round(F.col("n_pop").cast("double")
+        F.round(units_sum(F.col("n_pop").cast("double")
                               * F.col("s_smp") / F.col("n_smp"))
-                      .cast("bigint"))
                 / F.sum("n_pop").cast("double") / 100.0, 4)
         .alias("poststrat_mean"),
         F.round(F.sum("s_pop").cast("double") / F.sum("n_pop") / 100.0,

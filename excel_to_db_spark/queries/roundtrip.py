@@ -27,11 +27,12 @@ from pyspark.sql import types as Ty
 
 from .registry import query, scratch_dir
 from .relational import T
+from ..numerics import cents_sum_sql
 
 
-@query("sqlite_roundtrip", oracle="""
+@query("sqlite_roundtrip", oracle=f"""
     SELECT o_orderpriority, count(*) AS n,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
              AS revenue
     FROM orders GROUP BY o_orderpriority
 """)
@@ -99,9 +100,9 @@ def csv_roundtrip(spark, sf_dir):
     return spark.read.schema(schema).option("header", True).csv(out)
 
 
-@query("jsonl_roundtrip", oracle="""
+@query("jsonl_roundtrip", oracle=f"""
     SELECT event_type, count(*) AS n,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
              AS sum_value,
            CAST(sum(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS sum_k
     FROM events GROUP BY event_type

@@ -32,7 +32,10 @@ from .registry import query
 from .relational import T
 
 # speed test: meters^2 = d2(microdeg^2) * 0.012364 ; impossible when
-# meters > 250 * dt  <=>  (d2 // 1000) * 12364 > 62500 * dt*dt * 1000
+# meters > 250 * dt  <=>  (d2 // 1000) * 12364 > 62500 * dt*dt * 1000.
+# The product reads dt capped at _DT_CAP (at most 1.296e16): neither
+# engine promises to skip it once `dt <= _DT_CAP` is false, and an
+# uncapped day-long hop overflows BIGINT.
 _DT_CAP = 14400
 
 
@@ -61,7 +64,8 @@ _DT_CAP = 14400
                CAST(count(*) AS BIGINT) AS n_checked,
                CAST(sum(CASE WHEN dt <= {_DT_CAP}
                          AND (d2 // 1000) * 12364
-                             > 62500 * dt * dt * 1000
+                             > 62500 * least(dt, {_DT_CAP})
+                                 * least(dt, {_DT_CAP}) * 1000
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_impossible
         FROM hops GROUP BY user_id
     )
@@ -74,9 +78,9 @@ def sec_impossible_travel(spark, sf_dir):
     hash-synthesized coordinates; the speed test runs entirely in
     cross-multiplied integers ((d2/1000) * 12364 > 62500 * dt^2 *
     1000 encodes meters > 250 m/s * dt with the 0.111195 m/microdeg
-    constant squared and pre-scaled — no sqrt, no division, no
-    overflow inside the 4-hour horizon). Per-user windows; only
-    flagged users reported."""
+    constant squared and pre-scaled — no sqrt, no division; dt is
+    capped at the 4-hour horizon inside the product, so no hop
+    overflows). Per-user windows; only flagged users reported."""
     ev = T(spark, sf_dir, "events")
 
     def h(p):
@@ -95,12 +99,13 @@ def sec_impossible_travel(spark, sf_dir):
          + (F.col("lonp") - F.lag("lonp").over(w))
          * (F.col("lonp") - F.lag("lonp").over(w))).alias("d2"))
         .where(F.col("dt").isNotNull()))
+    capped = F.least(F.col("dt"), F.lit(_DT_CAP))
     flagged = (hops.groupBy("user_id")
                .agg(F.count("*").alias("n_checked"),
                     F.sum(F.when(
                         (F.col("dt") <= _DT_CAP)
                         & (F.expr("(d2 div 1000) * 12364")
-                           > F.expr("62500 * dt * dt * 1000")), 1)
+                           > F.lit(62500) * capped * capped * 1000), 1)
                         .otherwise(0)).cast("bigint")
                     .alias("n_impossible")))
     return (flagged.where(F.col("n_impossible") > 0)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
@@ -337,10 +337,10 @@ def ml_adaboost(spark, sf_dir):
 
 # ------------------------------------------------- Bollinger bands
 
-@query("ts_bollinger", oracle="""
+@query("ts_bollinger", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS cents
         FROM events GROUP BY 1
     ),
@@ -365,8 +365,7 @@ def ml_adaboost(spark, sf_dir):
                     END) AS BIGINT) AS n_breakout_up,
            CAST(sum(CASE WHEN cents < mid - 2 * sigma THEN 1 ELSE 0
                     END) AS BIGINT) AS n_breakout_down,
-           round(CAST(sum(CAST(round(sigma * 100) AS BIGINT))
-                      AS BIGINT) * 1.0 / count(*) / 100, 4)
+           round({units_sum_sql('sigma', 100)} * 1.0 / count(*) / 100, 4)
                AS avg_sigma
     FROM bands
 """)
@@ -387,7 +386,7 @@ def ts_bollinger(spark, sf_dir):
     one reduce."""
     ev = T(spark, sf_dir, "events").select("ts", "value")
     daily = (ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+             .agg(units_sum(F.col("value"), 100)
                   .alias("cents")))
     w = Window.orderBy("day").rowsBetween(-6, 0)
     roll = daily.select(
@@ -411,7 +410,7 @@ def ts_bollinger(spark, sf_dir):
         F.sum(F.when(F.col("cents")
                      < F.col("mid") - 2 * F.col("sigma"), 1)
               .otherwise(0)).alias("n_breakout_down"),
-        F.round(F.sum(F.round(F.col("sigma") * 100).cast("bigint"))
+        F.round(units_sum(F.col("sigma"), 100)
                 * 1.0 / F.count("*") / 100, 4).alias("avg_sigma"))
 
 

@@ -32,15 +32,14 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql
+from ..numerics import h32, h32_sql, units_sum, units_sum_sql
 
 
 # ------------------------------------------------ Lorenz deciles
 
-@query("stats_lorenz_deciles", oracle="""
+@query("stats_lorenz_deciles", oracle=f"""
     WITH spend AS (
-        SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x
+        SELECT {units_sum_sql('o_totalprice', 100)} AS x
         FROM orders GROUP BY o_custkey
     ),
     ranked AS (
@@ -82,8 +81,7 @@ def stats_lorenz_deciles(spark, sf_dir):
     + a 9-row decile spine."""
     spend = (T(spark, sf_dir, "orders")
              .groupBy("o_custkey")
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("x"))
+             .agg(units_sum(F.col("o_totalprice"), 100).alias("x"))
              .select("x"))
     w = Window.orderBy("x")
     wall = Window.partitionBy(F.lit(1)).rowsBetween(

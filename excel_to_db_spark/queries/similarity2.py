@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import h32, h32_sql
+from ..numerics import h32, h32_sql, units_sum_sql
 from ..operators import physical
 from .registry import query
 from .relational import T
@@ -423,7 +423,7 @@ def similarity_ivfpq(spark, sf_dir):
         .select(F.col("vec_id").alias("n_id"), "cell", "adc", "rk"))
 
 
-@query("similarity_ndcg_eval", oracle="""
+@query("similarity_ndcg_eval", oracle=f"""
     WITH iv AS (
         SELECT vec_id, label,
                [CAST(floor(x * 1000 + 0.5) AS BIGINT)
@@ -443,14 +443,12 @@ def similarity_ivfpq(spark, sf_dir):
         FROM d ORDER BY d2, vec_id LIMIT 10
     ),
     dcg AS (
-        SELECT CAST(sum(CAST(round(rel * 1000000 / log2(rk + 1))
-                             AS BIGINT)) AS BIGINT) AS dcg_micro,
+        SELECT {units_sum_sql('rel * 1000000 / log2(rk + 1)')} AS dcg_micro,
                CAST(sum(rel) AS BIGINT) AS n_rel_top
         FROM top
     ),
     ideal AS (
-        SELECT CAST(sum(CAST(round(1000000 / log2(rk + 1)) AS BIGINT))
-                    AS BIGINT) AS idcg_micro
+        SELECT {units_sum_sql('1000000 / log2(rk + 1)')} AS idcg_micro
         FROM (SELECT row_number() OVER (ORDER BY rel DESC) AS rk, rel
               FROM top) WHERE rel = 1
     ),

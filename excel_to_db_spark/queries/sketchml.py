@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql
+from ..numerics import h32, h32_sql, units_sum, units_sum_sql
 
 
 # Trigram sets of the even/odd document halves (the corpus-diff pair
@@ -285,7 +285,7 @@ def sketch_linear_counting(spark, sf_dir):
 
 # ------------------------------------- logistic regression, 2 Newton steps
 
-@query("ml_logistic_newton", oracle="""
+@query("ml_logistic_newton", oracle=f"""
     WITH rows_ AS (
         SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                    AS y,
@@ -324,15 +324,15 @@ def sketch_linear_counting(spark, sf_dir):
     ),
     terms AS (
         SELECT n, b0, b1,
-               sum(CAST(round((y - p) * 1e6) AS BIGINT)) AS g0_u,
-               sum(CAST(round((y - p) * x * 1e6) AS BIGINT)) AS g1_u,
-               sum(CAST(round(p * (1.0 - p) * 1e6) AS BIGINT)) AS w0_u,
-               sum(CAST(round(p * (1.0 - p) * x * 1e6) AS BIGINT))
+               {units_sum_sql('y - p', 1e6)} AS g0_u,
+               {units_sum_sql('(y - p) * x', 1e6)} AS g1_u,
+               {units_sum_sql('p * (1.0 - p)', 1e6)} AS w0_u,
+               {units_sum_sql('p * (1.0 - p) * x', 1e6)}
                    AS w1_u,
-               sum(CAST(round(p * (1.0 - p) * x * x * 1e6) AS BIGINT))
+               {units_sum_sql('p * (1.0 - p) * x * x', 1e6)}
                    AS w2_u,
-               sum(CAST(round(-(y * ln(p) + (1 - y) * ln(1.0 - p))
-                              * 1e6) AS BIGINT)) AS ll_u
+               {units_sum_sql(
+                   '-(y * ln(p) + (1 - y) * ln(1.0 - p))', 1e6)} AS ll_u
         FROM (
             SELECT n, b0, b1, y,
                    CAST(c AS DOUBLE) / 1e4 AS x,
@@ -403,19 +403,17 @@ def ml_logistic_newton(spark, sf_dir):
     terms = (rows_.crossJoin(F.broadcast(step1))
              .agg(F.max("n").alias("n"),
                   F.max("b0").alias("b0"), F.max("b1").alias("b1"),
-                  F.sum(F.round((F.col("y") - p) * 1e6).cast("bigint"))
+                  units_sum(F.col("y") - p, 1e6)
                   .alias("g0_u"),
-                  F.sum(F.round((F.col("y") - p) * x * 1e6)
-                        .cast("bigint")).alias("g1_u"),
-                  F.sum(F.round(w * 1e6).cast("bigint")).alias("w0_u"),
-                  F.sum(F.round(w * x * 1e6).cast("bigint"))
+                  units_sum((F.col("y") - p) * x, 1e6).alias("g1_u"),
+                  units_sum(w, 1e6).alias("w0_u"),
+                  units_sum(w * x, 1e6)
                   .alias("w1_u"),
-                  F.sum(F.round(w * x * x * 1e6).cast("bigint"))
+                  units_sum(w * x * x, 1e6)
                   .alias("w2_u"),
-                  F.sum(F.round(-(F.col("y") * F.log(p)
+                  units_sum(-(F.col("y") * F.log(p)
                                   + (1 - F.col("y"))
-                                  * F.log(1.0 - p)) * 1e6)
-                        .cast("bigint")).alias("ll_u")))
+                                  * F.log(1.0 - p)), 1e6).alias("ll_u")))
     w0 = F.col("w0_u") / 1e6
     w1 = F.col("w1_u") / 1e6
     w2 = F.col("w2_u") / 1e6

@@ -30,7 +30,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum, cents_sum_sql, units_sum, units_sum_sql
 from .registry import query, scratch_dir
 from .relational import T
 
@@ -152,9 +152,9 @@ def variant_json(spark, sf_dir):
                  F.max(k).alias("max_k")))
 
 
-@query("stream_state_inspect", oracle="""
+@query("stream_state_inspect", oracle=f"""
     SELECT event_type, count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
              AS sum_value
     FROM events GROUP BY event_type
 """)
@@ -172,7 +172,7 @@ def stream_state_inspect(spark, sf_dir):
     counts = (replay.events_stream_reader(spark, sf_dir)
               .groupBy("event_type")
               .agg(F.count("*").alias("n_events"),
-                   F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                   units_sum(F.col("value"), 100)
                    .alias("cents")))
     replay.drain(spark, counts, "complete", checkpoint=ckpt)
     # State rows carry the AGGREGATION BUFFER per key (internal field
@@ -186,11 +186,10 @@ def stream_state_inspect(spark, sf_dir):
         F.round(F.col("value.sum") / 100.0, 2).alias("sum_value"))
 
 
-@query("json_malformed_handling", oracle="""
+@query("json_malformed_handling", oracle=f"""
     SELECT count(*) FILTER (WHERE event_id % 10 <> 0) AS n_good,
            count(*) FILTER (WHERE event_id % 10 = 0)  AS n_corrupt,
-           round(sum(CAST(round(value * 100) AS BIGINT))
-                 FILTER (WHERE event_id % 10 <> 0) / 100.0, 2)
+           {cents_sum_sql('value', where='event_id % 10 <> 0')}
              AS sum_value_good
     FROM events
 """)
@@ -224,12 +223,12 @@ def json_malformed_handling(spark, sf_dir):
          .alias("n_good"),
         F.count(F.when(F.col("_corrupt_record").isNotNull(), 1))
          .alias("n_corrupt"),
-        _cents_sum(F.col("value")).alias("sum_value_good"))
+        cents_sum(F.col("value")).alias("sum_value_good"))
 
 
-@query("stream_foreachbatch", oracle="""
+@query("stream_foreachbatch", oracle=f"""
     SELECT event_type, count(*) AS n_events,
-           round(sum(CAST(round(value * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('value')}
              AS sum_value
     FROM events WHERE value > 2.0 GROUP BY event_type
 """)
@@ -259,14 +258,13 @@ def stream_foreachbatch(spark, sf_dir):
     back = spark.read.parquet(out)  # partition discovery over epoch=N
     return (back.groupBy("event_type")
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value")))
+                 cents_sum(F.col("value")).alias("sum_value")))
 
 
-@query("csv_malformed_handling", oracle="""
+@query("csv_malformed_handling", oracle=f"""
     SELECT count(*) FILTER (WHERE event_id % 10 <> 0) AS n_good,
            count(*) FILTER (WHERE event_id % 10 = 0)  AS n_corrupt,
-           round(sum(CAST(round(value * 100) AS BIGINT))
-                 FILTER (WHERE event_id % 10 <> 0) / 100.0, 2)
+           {cents_sum_sql('value', where='event_id % 10 <> 0')}
              AS sum_value_good
     FROM events
 """)
@@ -302,13 +300,13 @@ def csv_malformed_handling(spark, sf_dir):
          .alias("n_good"),
         F.count(F.when(F.col("_corrupt_record").isNotNull(), 1))
          .alias("n_corrupt"),
-        _cents_sum(F.col("value")).alias("sum_value_good"))
+        cents_sum(F.col("value")).alias("sum_value_good"))
 
 
-@query("xml_function_parse", oracle="""
+@query("xml_function_parse", oracle=f"""
     SELECT o_orderpriority,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {units_sum_sql('o_totalprice', 100)}
                AS cents
     FROM orders WHERE o_orderkey % 50 = 0
     GROUP BY o_orderpriority

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # --------------------------------------- embedding variance spectrum
@@ -269,11 +270,10 @@ def ml_tree_depth2(spark, sf_dir):
 
 # ------------------------------------------------- AR(1) half-life
 
-@query("ts_halflife", oracle="""
+@query("ts_halflife", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
+               {units_sum_sql('o_totalprice', 100)} AS y
         FROM orders GROUP BY 1
     ),
     pairs AS (
@@ -317,8 +317,7 @@ def ts_halflife(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("y")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("y")))
     pairs = (day.select(F.lag("y").over(W.orderBy("d")).alias("x"),
                         "y")
              .filter(F.col("x").isNotNull()))
@@ -345,14 +344,13 @@ def ts_halflife(spark, sf_dir):
 
 # --------------------------------------------------- rich club
 
-@query("graph_rich_club", oracle="""
+@query("graph_rich_club", oracle=f"""
     -- AS MATERIALIZED: DuckDB inlines (re-executes) multi-referenced
     -- CTEs; without it the 6-way weighted-edge join runs ~12x through
     -- the rich/e reference chains (measured 204s -> ~18s at sf0.1).
     WITH w AS MATERIALIZED (
         SELECT c.c_nationkey AS u, s.s_nationkey AS v,
-               CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('l.l_extendedprice', 100)} AS cents
         FROM lineitem l
         JOIN orders o   ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey  = c.c_custkey
@@ -432,8 +430,7 @@ def graph_rich_club(spark, sf_dir):
          .filter(F.col("c_nationkey") != F.col("s_nationkey"))
          .groupBy(F.col("c_nationkey").alias("u"),
                   F.col("s_nationkey").alias("v"))
-         .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                    .cast("bigint")).alias("cents")))
+         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
     top = (w.select("u", "v", F.row_number().over(
         W.partitionBy("u").orderBy(F.col("cents").desc(), "v"))
         .alias("rk")).filter(F.col("rk") <= 3).select("u", "v"))

@@ -20,11 +20,12 @@ from pyspark.sql import functions as F
 
 from .registry import query, scratch_dir
 from .relational import T
+from ..numerics import cents_sum, cents_sum_sql, units_sum_sql
 
 
-@query("sql_parameterized", oracle="""
+@query("sql_parameterized", oracle=f"""
     SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
                AS sum_price
     FROM orders WHERE o_totalprice > 200000.0 AND o_orderpriority = '1-URGENT'
     GROUP BY o_orderstatus
@@ -37,14 +38,13 @@ def sql_parameterized(spark, sf_dir):
     VALUE (the pushed filter is identical to a hand-inlined literal);
     the plan is cacheable by parameter shape."""
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, count(*) AS n,
                -- 100.0 parses as DECIMAL(3,1) in Spark SQL, so the
                -- division result is DECIMAL; CAST back to the DOUBLE
                -- type class the driver's DuckDB fetch produces.
-               CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                          / 100.0, 2) AS DOUBLE) AS sum_price
-        FROM {orders} WHERE o_totalprice > :thr AND o_orderpriority = :pri
+               CAST({cents_sum_sql('o_totalprice')} AS DOUBLE) AS sum_price
+        FROM {{orders}} WHERE o_totalprice > :thr AND o_orderpriority = :pri
         GROUP BY o_orderstatus
         """,
         args={"thr": 200000.0, "pri": "1-URGENT"},
@@ -109,10 +109,10 @@ def sql_scripting(spark, sf_dir):
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c")))
 
 
-@query("pandas_on_spark_agg", oracle="""
+@query("pandas_on_spark_agg", oracle=f"""
     SELECT c_mktsegment,
            CAST(count(*) AS BIGINT) AS n,
-           round(sum(CAST(round(c_acctbal * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('c_acctbal')}
                AS sum_balance
     FROM customer GROUP BY c_mktsegment
 """)
@@ -143,9 +143,9 @@ def pandas_on_spark_agg(spark, sf_dir):
                     F.round(F.col("s") / 100.0, 2).alias("sum_balance")))
 
 
-@query("join_dpp_pruned", oracle="""
+@query("join_dpp_pruned", oracle=f"""
     SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
                AS sum_price
     FROM orders WHERE o_orderstatus = 'F'
     GROUP BY o_orderstatus
@@ -171,14 +171,12 @@ def join_dpp_pruned(spark, sf_dir):
                       fact.o_orderstatus == dim.status)
             .groupBy("o_orderstatus")
             .agg(F.count("*").alias("n"),
-                 F.round(F.sum(F.round(F.col("o_totalprice") * 100)
-                               .cast("bigint")) / 100.0, 2)
-                 .alias("sum_price")))
+                 cents_sum(F.col("o_totalprice")).alias("sum_price")))
 
 
-@query("join_hint_shuffle_hash", oracle="""
+@query("join_hint_shuffle_hash", oracle=f"""
     SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
                AS sum_price
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
@@ -201,9 +199,7 @@ def join_hint_shuffle_hash(spark, sf_dir):
     return (o.join(c, o.o_custkey == c.c_custkey)
             .groupBy("c_mktsegment")
             .agg(F.count("*").alias("n_orders"),
-                 F.round(F.sum(F.round(F.col("o_totalprice") * 100)
-                               .cast("bigint")) / 100.0, 2)
-                 .alias("sum_price")))
+                 cents_sum(F.col("o_totalprice")).alias("sum_price")))
 
 
 @query("sql_declared_udf", oracle="""
@@ -348,9 +344,9 @@ def ansi_try_funcs(spark, sf_dir):
                          F.col("id").cast("int")).alias("elem_e"))
 
 
-@query("sql_pipe_syntax", oracle="""
+@query("sql_pipe_syntax", oracle=f"""
     SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {units_sum_sql('o_totalprice', 100)}
                AS cents
     FROM orders
     WHERE o_orderdate >= '1995-01-01'
@@ -403,10 +399,10 @@ def sql_session_variables(spark, sf_dir):
     return df
 
 
-@query("sql_group_by_all", oracle="""
+@query("sql_group_by_all", oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {units_sum_sql('o_totalprice', 100)}
                AS cents
     FROM orders WHERE o_orderdate < '1994-01-01'
     GROUP BY ALL
@@ -419,19 +415,19 @@ def sql_group_by_all(spark, sf_dir):
     byte-identical to the explicit GROUP BY, so partial aggregation
     and pushdown are unaffected. The oracle runs the same GROUP BY ALL
     on DuckDB — both dialects must infer the same keys."""
-    return spark.sql("""
+    return spark.sql(f"""
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
-        FROM {orders} WHERE o_orderdate < '1994-01-01'
+               {units_sum_sql('o_totalprice', 100)} AS cents
+        FROM {{orders}} WHERE o_orderdate < '1994-01-01'
         GROUP BY ALL
     """, orders=T(spark, sf_dir, "orders"))
 
 
-@query("sql_group_order_all", oracle="""
+@query("sql_group_order_all", oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            CAST(count(*) AS BIGINT) AS n,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('o_totalprice')}
                AS sum_price
     FROM orders
     GROUP BY ALL
@@ -450,11 +446,10 @@ def sql_group_order_all(spark, sf_dir):
     unique. Money stays in integer cents (SURVEY §4.3); the division
     result is CAST back to DOUBLE because Spark types 100.0 as
     DECIMAL(4,1) (same note as sql_parameterized)."""
-    return spark.sql("""
+    return spark.sql(f"""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-               CAST(round(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                          / 100.0, 2) AS DOUBLE) AS sum_price
-        FROM {orders}
+               CAST({cents_sum_sql('o_totalprice')} AS DOUBLE) AS sum_price
+        FROM {{orders}}
         GROUP BY ALL
         ORDER BY ALL
     """, orders=T(spark, sf_dir, "orders"))

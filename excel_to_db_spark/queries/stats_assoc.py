@@ -30,14 +30,15 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, fixed_sum, h32, h32_sql
+from ..numerics import (
+    chi2_sf, chi2_sf_sql, fixed_sum, h32, h32_sql, units_sum_sql)
 from .registry import query
 from .relational import T
 
 
 # ------------------------------------------------------- Cramér's V
 
-@query("stats_cramers_v", oracle="""
+@query("stats_cramers_v", oracle=f"""
     WITH obs AS (
         SELECT o_orderstatus AS r, o_orderpriority AS c,
                CAST(count(*) AS BIGINT) AS o
@@ -52,9 +53,9 @@ from .relational import T
         FROM obs
     ),
     chi AS (
-        SELECT round(CAST(sum(CAST(round(
-                   (o - nr * nc * 1.0 / n) * (o - nr * nc * 1.0 / n)
-                   / (nr * nc * 1.0 / n) * 1e8) AS BIGINT)) AS BIGINT)
+        SELECT round({units_sum_sql(
+                         '(o - nr * nc * 1.0 / n) * (o - nr * nc * 1.0 / n)'
+                         ' / (nr * nc * 1.0 / n)', 1e8)}
                    / 1e8, 4) AS chi2
         FROM obs JOIN rt USING (r) JOIN ct USING (c) CROSS JOIN tot
     )
@@ -262,7 +263,7 @@ def privacy_randomized_response(spark, sf_dir):
 @query("stats_friedman", oracle=f"""
     WITH cell AS (
         SELECT date_trunc('day', ts) AS d, event_type AS trt,
-               CAST(round(sum(CAST(round(value * 100) AS BIGINT)) * 10.0
+               CAST(round({units_sum_sql('value', 100)} * 10.0
                           / count(*)) AS BIGINT) AS mean_milli
         FROM events GROUP BY 1, 2
     ),

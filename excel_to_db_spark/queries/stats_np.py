@@ -28,7 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, erfc, erfc_sql
+from ..numerics import (
+    chi2_sf, chi2_sf_sql, erfc, erfc_sql, units_sum, units_sum_sql)
 from .registry import REGISTRY, query
 from .relational import T
 
@@ -66,10 +67,9 @@ from .relational import T
     ),
     terms AS (
         SELECT CAST(count(*) AS BIGINT) AS k,
-               CAST(sum(CAST(round(n_g
-                   * (r2 * 0.5 / n_g - (n + 1) * 0.5)
-                   * (r2 * 0.5 / n_g - (n + 1) * 0.5) * 100)
-                   AS BIGINT)) AS BIGINT) AS dev_u
+               {units_sum_sql(
+                   'n_g * (r2 * 0.5 / n_g - (n + 1) * 0.5) * (r2 * 0.5 / n_g'
+                   ' - (n + 1) * 0.5)', 100)} AS dev_u
         FROM rsum, dims GROUP BY n
     ),
     stat AS (
@@ -131,8 +131,7 @@ def stats_kruskal_wallis(spark, sf_dir):
     terms = (rsum.crossJoin(F.broadcast(dims))
              .groupBy("n")
              .agg(F.count("*").alias("k"),
-                  F.sum(F.round(F.col("n_g") * dev * dev * 100)
-                        .cast("bigint")).alias("dev_u")))
+                  units_sum(F.col("n_g") * dev * dev, 100).alias("dev_u")))
     stat = (terms.crossJoin(F.broadcast(dims.select("tsum")))
             .select(
                 "k", "n", "tsum",

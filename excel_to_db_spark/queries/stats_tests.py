@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators import physical
-from ..numerics import fixed_sum, h32, h32_sql
+from ..numerics import (
+    fixed_sum, fixed_sum_sql, h32, h32_sql, units_sum, units_sum_sql)
 from .registry import query
 from .relational import T
 
@@ -70,7 +71,7 @@ def stats_welch_t(spark, sf_dir):
                 2).alias("welch_df"))
 
 
-@query("stats_chi_square", oracle="""
+@query("stats_chi_square", oracle=f"""
     WITH obs AS (
         SELECT c_mktsegment AS seg, o_orderpriority AS pri,
                count(*) AS o
@@ -85,9 +86,9 @@ def stats_welch_t(spark, sf_dir):
         FROM obs
     )
     SELECT CAST(count(*) AS BIGINT) AS n_cells,
-           round(sum(CAST(round(pow(o - row_tot * col_tot / CAST(n AS DOUBLE), 2)
-                              / (row_tot * col_tot / CAST(n AS DOUBLE))
-                              * 1e8) AS BIGINT)) / 1e8, 4)
+           {fixed_sum_sql(
+               'pow(o - row_tot * col_tot / CAST(n AS DOUBLE), 2) / (row_tot'
+               ' * col_tot / CAST(n AS DOUBLE))', 1e8, 4)}
                AS chi2
     FROM tot
 """)
@@ -266,14 +267,15 @@ def stats_mannwhitney(spark, sf_dir):
 
 # --------------------------------------------------------------- CUPED
 
-@query("stats_cuped", oracle="""
+@query("stats_cuped", oracle=f"""
     WITH per AS (
         SELECT o_custkey,
                CAST(count(*) FILTER (WHERE o_orderdate < TIMESTAMP '1998-01-01')
                     AS BIGINT) AS x,
-               CAST(coalesce(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                             FILTER (WHERE o_orderdate >= TIMESTAMP '1998-01-01'),
-                             0) AS BIGINT) AS y
+               CAST(coalesce({units_sum_sql(
+                   'o_totalprice', 100,
+                   where="o_orderdate >= TIMESTAMP '1998-01-01'")}, 0)
+                    AS BIGINT) AS y
         FROM orders GROUP BY 1
     ),
     g AS (
@@ -344,12 +346,12 @@ def stats_cuped(spark, sf_dir):
                      .alias("mean_adjusted")))
 
 
-@query("window_rolling_corr", oracle="""
+@query("window_rolling_corr", oracle=f"""
     WITH daily AS (
         SELECT l_returnflag AS flag,
                CAST(date_trunc('day', l_shipdate) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS x,
-               CAST(sum(CAST(round(l_extendedprice) AS BIGINT)) AS BIGINT) AS y
+               {units_sum_sql('l_quantity')} AS x,
+               {units_sum_sql('l_extendedprice')} AS y
         FROM lineitem GROUP BY 1, 2
     ),
     framed AS (
@@ -395,9 +397,9 @@ def window_rolling_corr(spark, sf_dir):
     le = T(spark, sf_dir, "lineitem")
     daily = (le.groupBy(F.col("l_returnflag").alias("flag"),
                         F.date_trunc("day", F.col("l_shipdate")).alias("day"))
-             .agg(F.sum(F.round(F.col("l_quantity")).cast("bigint"))
+             .agg(units_sum(F.col("l_quantity"))
                   .alias("x"),
-                  F.sum(F.round(F.col("l_extendedprice")).cast("bigint"))
+                  units_sum(F.col("l_extendedprice"))
                   .alias("y")))
     w = (W.partitionBy("flag").orderBy("day").rowsBetween(-6, 0))
     framed = daily.select(
@@ -456,11 +458,10 @@ def agg_corr_matrix(spark, sf_dir):
 
 # ---------------------------------------------- seasonal decomposition
 
-@query("ts_seasonal_decompose", oracle="""
+@query("ts_seasonal_decompose", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS cents
+               {units_sum_sql('o_totalprice', 100)} AS cents
         FROM orders GROUP BY 1
     ),
     tr AS (
@@ -479,7 +480,7 @@ def agg_corr_matrix(spark, sf_dir):
         FROM tr WHERE n7 = 7
     )
     SELECT dow, CAST(count(*) AS BIGINT) AS n_days,
-           round(sum(CAST(round(d * 1e8) AS BIGINT)) / 1e8
+           round({units_sum_sql('d', 1e8)} / 1e8
                  / count(*), 4) AS seasonal
     FROM detr GROUP BY dow
 """)
@@ -504,8 +505,7 @@ def ts_seasonal_decompose(spark, sf_dir):
     o = T(spark, sf_dir, "orders")
     daily = (o.groupBy(F.date_trunc("day", F.col("o_orderdate"))
                        .alias("day"))
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("cents")))
+             .agg(units_sum(F.col("o_totalprice"), 100).alias("cents")))
     w = W.orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
         "day", "cents",
@@ -521,7 +521,7 @@ def ts_seasonal_decompose(spark, sf_dir):
                     .alias("d")))
     return (detr.groupBy("dow")
             .agg(F.count("*").alias("n_days"),
-                 F.round(F.sum(F.round(F.col("d") * 1e8).cast("bigint"))
+                 F.round(units_sum(F.col("d"), 1e8)
                          / 1e8 / F.count("*"), 4).alias("seasonal")))
 
 
@@ -1081,11 +1081,10 @@ def stats_levene(spark, sf_dir):
 
 # ------------------------------------------------- Kendall rank correlation
 
-@query("stats_kendall", oracle="""
+@query("stats_kendall", oracle=f"""
     WITH d AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS x,
+               {units_sum_sql('o_totalprice', 100)} AS x,
                CAST(count(*) AS BIGINT) AS y
         FROM orders GROUP BY 1
     ),
@@ -1159,7 +1158,7 @@ def stats_kendall(spark, sf_dir):
 
 # --------------------------------------------------- Hill tail-index
 
-@query("stats_hill_tail_index", oracle="""
+@query("stats_hill_tail_index", oracle=f"""
     WITH x AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c, o_orderkey
         FROM orders
@@ -1170,8 +1169,7 @@ def stats_kendall(spark, sf_dir):
     ),
     xmin AS (SELECT c AS cmin FROM top WHERE rk = 101),
     s AS (
-        SELECT CAST(sum(CAST(round(ln(top.c * 1.0 / cmin) * 1000000)
-                             AS BIGINT)) AS BIGINT) AS lsum
+        SELECT {units_sum_sql('ln(top.c * 1.0 / cmin)', 1000000)} AS lsum
         FROM top, xmin WHERE rk <= 100
     )
     SELECT CAST(100 AS BIGINT) AS n_tail,

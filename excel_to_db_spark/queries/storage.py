@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
 from .registry import query, scratch_dir
-from .relational import T, _cents_sum
+from .relational import T
+from ..numerics import cents_sum, cents_sum_sql, units_sum_sql
 
 
 def write_bucketed(df: DataFrame, name: str, key: str, buckets: int = 8,
@@ -65,9 +66,9 @@ def bucketed_join_pair(spark: SparkSession, sf_dir: str, buckets: int = 8
                   F.col("o_custkey") == F.col("c_custkey")))
 
 
-@query("join_bucketed", oracle="""
+@query("join_bucketed", oracle=f"""
     SELECT c_mktsegment, count(*) AS n_orders,
-           round(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+           {cents_sum_sql('o_totalprice')} AS revenue
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
 """)
@@ -80,13 +81,13 @@ def join_bucketed(spark, sf_dir):
     return (bucketed_join_pair(spark, sf_dir)
             .groupBy("c_mktsegment")
             .agg(F.count("*").alias("n_orders"),
-                 _cents_sum(F.col("o_totalprice")).alias("revenue")))
+                 cents_sum(F.col("o_totalprice")).alias("revenue")))
 
 
-@query("orc_roundtrip", oracle="""
+@query("orc_roundtrip", oracle=f"""
     SELECT l_returnflag, count(*) AS n,
-           round(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / 100.0, 2) AS sum_price,
-           round(sum(CAST(round((l_quantity) * 100) AS BIGINT)) / 100.0, 2) AS sum_qty
+           {cents_sum_sql('l_extendedprice')} AS sum_price,
+           {cents_sum_sql('l_quantity')} AS sum_qty
     FROM lineitem WHERE l_discount > 0.05
     GROUP BY l_returnflag
 """)
@@ -104,13 +105,13 @@ def orc_roundtrip(spark, sf_dir):
     back = spark.read.orc(out).filter(F.col("l_discount") > 0.05)
     return (back.groupBy("l_returnflag")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("l_extendedprice")).alias("sum_price"),
-                 _cents_sum(F.col("l_quantity")).alias("sum_qty")))
+                 cents_sum(F.col("l_extendedprice")).alias("sum_price"),
+                 cents_sum(F.col("l_quantity")).alias("sum_qty")))
 
 
-@query("excel_sink_partitioned", oracle="""
+@query("excel_sink_partitioned", oracle=f"""
     SELECT o_orderstatus, count(*) AS n,
-           round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0, 2) AS sum_price
+           {cents_sum_sql('o_totalprice')} AS sum_price
     FROM orders WHERE o_orderkey % 100 = 0
     GROUP BY o_orderstatus
 """)
@@ -140,7 +141,7 @@ def excel_sink_partitioned(spark, sf_dir):
             .option("path", out).load())
     return (back.groupBy("o_orderstatus")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("price"))
+                 cents_sum(F.col("price"))
                  .alias("sum_price")))
 
 
@@ -177,11 +178,10 @@ def excel_roundtrip(spark, sf_dir):
     return spark.createDataFrame(typed, schema)
 
 
-@query("dynamic_partition_overwrite", oracle="""
+@query("dynamic_partition_overwrite", oracle=f"""
     SELECT event_type, count(*) AS n,
-           round(sum(CAST(round((CASE WHEN event_type = 'click'
-                                      THEN value * 2 ELSE value END) * 100)
-                          AS BIGINT)) / 100.0, 2) AS sum_value
+           {cents_sum_sql(
+               "CASE WHEN event_type = 'click' THEN value * 2 ELSE value END")} AS sum_value
     FROM events GROUP BY event_type
 """)
 def dynamic_partition_overwrite(spark, sf_dir):
@@ -213,13 +213,12 @@ def dynamic_partition_overwrite(spark, sf_dir):
     back = spark.read.parquet(out)
     return (back.groupBy("event_type")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("value")).alias("sum_value")))
+                 cents_sum(F.col("value")).alias("sum_value")))
 
 
-@query("federated_union", oracle="""
+@query("federated_union", oracle=f"""
     SELECT o_orderstatus, count(*) AS n,
-           round(sum(CAST(round(round(o_totalprice, 2) * 100) AS BIGINT))
-                 / 100.0, 2) AS sum_price
+           {cents_sum_sql('round(o_totalprice, 2)')} AS sum_price
     FROM orders GROUP BY o_orderstatus
 """)
 def federated_union(spark, sf_dir):
@@ -257,7 +256,7 @@ def federated_union(spark, sf_dir):
     fed = pq.unionByName(orc).unionByName(csv)
     return (fed.groupBy("o_orderstatus")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("o_totalprice")).alias("sum_price")))
+                 cents_sum(F.col("o_totalprice")).alias("sum_price")))
 
 
 @query("range_partition_histogram", oracle="""
@@ -311,12 +310,12 @@ def range_partition_histogram(spark, sf_dir):
                  F.round(F.max("cents") / 100.0, 2).alias("max_price")))
 
 
-@query("parquet_schema_evolution", oracle="""
+@query("parquet_schema_evolution", oracle=f"""
     SELECT CAST(1 + (o_orderkey % 2) AS INTEGER) AS epoch,
            CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_null_priority,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           {units_sum_sql('o_totalprice', 100)}
                AS sum_cents
     FROM orders
     GROUP BY 1

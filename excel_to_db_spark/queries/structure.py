@@ -34,12 +34,12 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql
+from ..numerics import h32, h32_sql, units_sum, units_sum_sql
 
 
 # ----------------------------------------------- embedding isotropy
 
-@query("embedding_isotropy", oracle="""
+@query("embedding_isotropy", oracle=f"""
     WITH comp AS (
         SELECT vec_id, u.i AS dim,
                CAST(embedding[u.i] AS DOUBLE) AS v
@@ -48,7 +48,7 @@ from ..numerics import h32, h32_sql
     ),
     norms AS (
         SELECT vec_id,
-               sqrt(CAST(sum(CAST(round(v * v * 1e12) AS BIGINT))
+               sqrt(CAST({units_sum_sql('v * v', 1e12)}
                          AS DOUBLE) / 1e12) AS nrm
         FROM comp GROUP BY vec_id
     ),
@@ -100,8 +100,8 @@ def embedding_isotropy(spark, sf_dir):
             .select("vec_id", "dim",
                     F.col("val").cast("double").alias("v")))
     norms = (comp.groupBy("vec_id")
-             .agg(F.sqrt(F.sum(F.round(F.col("v") * F.col("v") * 1e12)
-                               .cast("bigint")).cast("double") / 1e12)
+             .agg(F.sqrt(units_sum(F.col("v") * F.col("v"), 1e12)
+                         .cast("double") / 1e12)
                   .alias("nrm")))
     unitc = (comp.join(norms, "vec_id")
              .select("dim",
@@ -136,9 +136,8 @@ _PL_DMIN = 5
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n_tail,
-               CAST(sum(CAST(round(ln(CAST(d AS DOUBLE)
-                                      / ({_PL_DMIN} - 0.5)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS l_u
+               {units_sum_sql(
+                   f'ln(CAST(d AS DOUBLE) / ({_PL_DMIN} - 0.5))', 1e6)} AS l_u
         FROM tail
     )
     SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
@@ -169,9 +168,8 @@ def graph_powerlaw_alpha(spark, sf_dir):
     n_nodes = deg.agg(F.count("*").alias("n_nodes"))
     st = (deg.filter(F.col("d") >= _PL_DMIN)
           .agg(F.count("*").alias("n_tail"),
-               F.sum(F.round(F.log(F.col("d").cast("double")
-                                   / (_PL_DMIN - 0.5)) * 1e6)
-                     .cast("bigint")).alias("l_u")))
+               units_sum(F.log(F.col("d").cast("double")
+                                   / (_PL_DMIN - 0.5)), 1e6).alias("l_u")))
     return (st.crossJoin(F.broadcast(n_nodes))
             .select("n_nodes", "n_tail",
                     F.lit(_PL_DMIN).cast("bigint").alias("dmin"),
@@ -186,13 +184,11 @@ _TWO_PI = "6.283185307179586"
 
 
 def _pg_oracle() -> str:
+    dev = "(y - CAST(sy AS DOUBLE) / n)"
     arms = ",\n               ".join(
-        f"CAST(sum(CAST(round((y - CAST(sy AS DOUBLE) / n)"
-        f" * cos({_TWO_PI} * t / {p}.0)) AS BIGINT)) AS HUGEINT)"
-        f" AS c{p},\n               "
-        f"CAST(sum(CAST(round((y - CAST(sy AS DOUBLE) / n)"
-        f" * sin({_TWO_PI} * t / {p}.0)) AS BIGINT)) AS HUGEINT)"
-        f" AS s{p}" for p in _PERIODS)
+        f"CAST({units_sum_sql(f'{dev} * {fn}({_TWO_PI} * t / {p}.0)')}"
+        f" AS HUGEINT) AS {fn[0]}{p}"
+        for p in _PERIODS for fn in ("cos", "sin"))
     rows = "\n        UNION ALL\n".join(
         f"        SELECT CAST({p} AS BIGINT) AS period,"
         f" CAST(c{p} AS DOUBLE) AS cc, CAST(s{p} AS DOUBLE) AS ss,"
@@ -203,8 +199,7 @@ def _pg_oracle() -> str:
                    AS t, y
         FROM (
             SELECT date_trunc('day', o_orderdate) AS d,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                        AS BIGINT) AS y
+                   {units_sum_sql('o_totalprice', 100)} AS y
             FROM orders GROUP BY 1
         )
     ),
@@ -261,9 +256,9 @@ def ts_periodogram(spark, sf_dir):
     aggs = []
     for p in _PERIODS:
         ang = F.lit(two_pi) * F.col("t") / float(p)
-        aggs += [F.sum(F.round(dem * F.cos(ang)).cast("bigint"))
+        aggs += [units_sum(dem * F.cos(ang))
                  .cast(d38).alias(f"c{p}"),
-                 F.sum(F.round(dem * F.sin(ang)).cast("bigint"))
+                 units_sum(dem * F.sin(ang))
                  .cast(d38).alias(f"s{p}")]
     syyc = ((F.col("n").cast(d38) * F.col("syy")
              - F.col("sy").cast(d38) * F.col("sy")).cast("double")

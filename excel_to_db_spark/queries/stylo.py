@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum_sql
 
 
 # ------------------------------------------------ Burrows' Delta
@@ -243,7 +244,7 @@ def stats_page_trend(spark, sf_dir):
 
 # ---------------------------------------------- Weibull Menon fit
 
-@query("stats_weibull_fit", oracle="""
+@query("stats_weibull_fit", oracle=f"""
     WITH gaps AS (
         SELECT CAST(floor(epoch(ts)) AS BIGINT)
                - lag(CAST(floor(epoch(ts)) AS BIGINT))
@@ -253,8 +254,7 @@ def stats_page_trend(spark, sf_dir):
     ),
     lm AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6)
-                             AS BIGINT)) AS BIGINT) AS sl,
+               {units_sum_sql('ln(CAST(gap AS DOUBLE))', 1e6)} AS sl,
                sum(CAST(CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6)
                              AS BIGINT) AS HUGEINT)
                    * CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 _TWO_PI = "6.283185307179586"
 
@@ -48,10 +49,8 @@ _TWO_PI = "6.283185307179586"
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(cos(th) * 1e6) AS BIGINT))
-                    AS BIGINT) AS c_u,
-               CAST(sum(CAST(round(sin(th) * 1e6) AS BIGINT))
-                    AS BIGINT) AS s_u
+               {units_sum_sql('cos(th)', 1e6)} AS c_u,
+               {units_sum_sql('sin(th)', 1e6)} AS s_u
         FROM ang
     ),
     rr AS (
@@ -96,9 +95,9 @@ def stats_circular_rayleigh(spark, sf_dir):
                    .alias("th")))
     st = ang.agg(
         F.count("*").alias("n"),
-        F.sum(F.round(F.cos(F.col("th")) * 1e6).cast("bigint"))
+        units_sum(F.cos(F.col("th")), 1e6)
         .alias("c_u"),
-        F.sum(F.round(F.sin(F.col("th")) * 1e6).cast("bigint"))
+        units_sum(F.sin(F.col("th")), 1e6)
         .alias("s_u"))
     at = F.atan2(F.col("s_u").cast("double"), F.col("c_u").cast("double"))
     two_pi = float(_TWO_PI)
@@ -212,11 +211,10 @@ def text_keyness_llr(spark, sf_dir):
 
 # --------------------------------------------- turning-point test
 
-@query("ts_turning_points", oracle="""
+@query("ts_turning_points", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
-               CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                    AS BIGINT) AS y
+               {units_sum_sql('o_totalprice', 100)} AS y
         FROM orders GROUP BY 1
     ),
     tp AS (
@@ -256,8 +254,7 @@ def ts_turning_points(spark, sf_dir):
     day = (T(spark, sf_dir, "orders")
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
-           .agg(F.sum(F.round(F.col("o_totalprice") * 100)
-                      .cast("bigint")).alias("y")))
+           .agg(units_sum(F.col("o_totalprice"), 100).alias("y")))
     w = Window.orderBy("d")
     tp = day.select(
         F.when((F.col("y") > F.lag("y").over(w))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 # Spark-side n-gram builders (1-based element_at; the i-th bigram is
 # tokens[i] + ' ' + tokens[i+1]).
@@ -154,10 +155,10 @@ def eval_rouge_n(spark, sf_dir):
 
 # ------------------------------------------------ VaR / CVaR (tail)
 
-@query("ts_var_cvar", oracle="""
+@query("ts_var_cvar", oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               {units_sum_sql('value', 100)}
                    AS cents
         FROM events GROUP BY 1
     ),
@@ -211,7 +212,7 @@ def ts_var_cvar(spark, sf_dir):
     over the bounded calendar series; k scalars summed."""
     ev = T(spark, sf_dir, "events").select("ts", "value")
     daily = (ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+             .agg(units_sum(F.col("value"), 100)
                   .alias("cents")))
     w = Window.orderBy("day")
     rr = (daily.withColumn(

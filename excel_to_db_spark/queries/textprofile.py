@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from ..numerics import units_sum, units_sum_sql
 
 
 # ----------------------------------------- syllable complexity census
@@ -223,7 +224,7 @@ def text_lexical_profile(spark, sf_dir):
 
 # -------------------------------------- rank-turbulence divergence
 
-@query("text_rank_turbulence", oracle="""
+@query("text_rank_turbulence", oracle=f"""
     WITH words AS (
         SELECT doc_id % 2 AS half,
                unnest(string_split(text, ' ')) AS w
@@ -254,10 +255,9 @@ def text_lexical_profile(spark, sf_dir):
     ),
     terms AS (
         SELECT n_union,
-               CAST(sum(CAST(round(abs(
-                   1.0 / coalesce(r1, m1 + 1)
-                   - 1.0 / coalesce(r2, m2 + 1)) * 1e9) AS BIGINT))
-                   AS BIGINT) AS d_u,
+               {units_sum_sql(
+                   'abs( 1.0 / coalesce(r1, m1 + 1) - 1.0 / coalesce(r2, m2'
+                   ' + 1))', 1e9)} AS d_u,
                CAST(sum(CASE WHEN r1 IS NULL OR r2 IS NULL THEN 1
                         ELSE 0 END) AS BIGINT) AS n_exclusive
         FROM joined, dims GROUP BY n_union
@@ -303,10 +303,10 @@ def text_rank_turbulence(spark, sf_dir):
         F.count("*").alias("n_union"))
     terms = (joined.crossJoin(F.broadcast(dims))
              .groupBy("n_union")
-             .agg(F.sum(F.round(F.abs(
+             .agg(units_sum(F.abs(
                  1.0 / F.coalesce(F.col("r1"), F.col("m1") + 1)
-                 - 1.0 / F.coalesce(F.col("r2"), F.col("m2") + 1))
-                 * 1e9).cast("bigint")).alias("d_u"),
+                 - 1.0 / F.coalesce(F.col("r2"), F.col("m2") + 1)), 1e9)
+                  .alias("d_u"),
                  F.sum(F.when(F.col("r1").isNull()
                               | F.col("r2").isNull(), 1).otherwise(0))
                  .alias("n_exclusive")))

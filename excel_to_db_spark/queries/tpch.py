@@ -23,8 +23,8 @@ Scale posture (the reason this suite matters at 100 TB):
   the wire are group keys × partial states).
 
 Oracle discipline: every money aggregate sums in exact integer CENTS
-(`_cents_sum` + its SQL twin) so summation order can never flip a
-rounding boundary (see _cents_sum); ratio aggregates divide cents sums
+(`cents_sum` + its SQL twin) so summation order can never flip a
+rounding boundary (see cents_sum); ratio aggregates divide cents sums
 and round 4/6 dp; top-k queries pin a total order with a unique
 tie-break key so LIMIT is deterministic on both engines.
 """
@@ -43,15 +43,16 @@ def _revenue(le):
 
 # Exact money sum in integer cents (single definition: numerics.py;
 # observed order-dependent flip it prevents: tpch_q9 at sf0.001).
-from ..numerics import cents_sum as _cents_sum  # noqa: E402
+from ..numerics import (  # noqa: E402
+    cents_sum, cents_sum_sql, units_sum, units_sum_sql)
 
 
 # --------------------------------------------------------------- Q3/Q10
 
 
-@query("tpch_q3", oracle="""
+@query("tpch_q3", oracle=f"""
     SELECT l_orderkey,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue,
+           {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue,
            o_orderdate
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -76,15 +77,15 @@ def tpch_q3(spark, sf_dir):
     return (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
             .join(le, le.l_orderkey == o.o_orderkey)
             .groupBy("l_orderkey", "o_orderdate")
-            .agg(_cents_sum(_revenue(le)).alias("revenue"))
+            .agg(cents_sum(_revenue(le)).alias("revenue"))
             .select("l_orderkey", "revenue", "o_orderdate")
             .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
             .limit(10))
 
 
-@query("tpch_q10", oracle="""
+@query("tpch_q10", oracle=f"""
     SELECT c_custkey, c_name,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue,
+           {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue,
            c_acctbal, n_name
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
@@ -112,7 +113,7 @@ def tpch_q10(spark, sf_dir):
             .join(F.broadcast(c), o.o_custkey == c.c_custkey)
             .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
             .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-            .agg(_cents_sum(_revenue(le)).alias("revenue"))
+            .agg(cents_sum(_revenue(le)).alias("revenue"))
             .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
             .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
             .limit(20))
@@ -181,9 +182,9 @@ def tpch_q12(spark, sf_dir):
 # ------------------------------------------------------------ Q5/Q7/Q8
 
 
-@query("tpch_q5", oracle="""
+@query("tpch_q5", oracle=f"""
     SELECT n_name,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+           {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -216,12 +217,12 @@ def tpch_q5(spark, sf_dir):
             .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
             .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
             .groupBy("n_name")
-            .agg(_cents_sum(_revenue(le)).alias("revenue")))
+            .agg(cents_sum(_revenue(le)).alias("revenue")))
 
 
-@query("tpch_q7", oracle="""
+@query("tpch_q7", oracle=f"""
     SELECT supp_nation, cust_nation, l_year,
-           round(sum(CAST(round((volume) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+           {cents_sum_sql('volume')} AS revenue
     FROM (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              year(l_shipdate) AS l_year,
@@ -265,14 +266,14 @@ def tpch_q7(spark, sf_dir):
             .filter(pair)
             .groupBy("supp_nation", "cust_nation",
                      F.year("l_shipdate").alias("l_year"))
-            .agg(_cents_sum(_revenue(le)).alias("revenue")))
+            .agg(cents_sum(_revenue(le)).alias("revenue")))
 
 
-@query("tpch_q8", oracle="""
+@query("tpch_q8", oracle=f"""
     SELECT o_year,
-           round(sum(CAST(round((CASE WHEN nation = 'NATION_5'
-                               THEN volume ELSE 0 END) * 100) AS BIGINT))
-                 / sum(CAST(round(volume * 100) AS BIGINT)), 6) AS mkt_share
+           round({units_sum_sql(
+                     "CASE WHEN nation = 'NATION_5' THEN volume ELSE 0 END", 100)}
+                 / {units_sum_sql('volume', 100)}, 6) AS mkt_share
     FROM (
       SELECT year(o_orderdate) AS o_year,
              l_extendedprice * (1 - l_discount) AS volume,
@@ -330,8 +331,8 @@ def tpch_q8(spark, sf_dir):
 # ---------------------------------------------------------------- Q6/Q14
 
 
-@query("tpch_q6", oracle="""
-    SELECT round(sum(CAST(round((l_extendedprice * l_discount) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+@query("tpch_q6", oracle=f"""
+    SELECT {cents_sum_sql('l_extendedprice * l_discount')} AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
@@ -348,16 +349,16 @@ def tpch_q6(spark, sf_dir):
     return (le.filter((le.l_shipdate >= lo) & (le.l_shipdate < hi)
                       & le.l_discount.between(0.05, 0.07)
                       & (le.l_quantity < 24))
-            .agg(_cents_sum(le.l_extendedprice * le.l_discount)
+            .agg(cents_sum(le.l_extendedprice * le.l_discount)
                  .alias("revenue")))
 
 
-@query("tpch_q14", oracle="""
-    SELECT round(100.0 * sum(CAST(round((CASE WHEN p_type = 'PROMO'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0 END) * 100) AS BIGINT))
-                 / sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100)
-                            AS BIGINT)), 4) AS promo_revenue
+@query("tpch_q14", oracle=f"""
+    SELECT round(100.0 * {units_sum_sql(
+                             "CASE WHEN p_type = 'PROMO' THEN"
+                             " l_extendedprice * (1 - l_discount) ELSE 0 END", 100)}
+                 / {units_sum_sql(
+                       'l_extendedprice * (1 - l_discount)', 100)}, 4) AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
@@ -381,9 +382,9 @@ def tpch_q14(spark, sf_dir):
 # ---------------------------------------------------------------- Q9/Q15
 
 
-@query("tpch_q9", oracle="""
+@query("tpch_q9", oracle=f"""
     SELECT nation, o_year,
-           round(sum(CAST(round(amount * 100) AS BIGINT)) / 100.0, 2)
+           {cents_sum_sql('amount')}
              AS sum_profit
     FROM (
       SELECT n_name AS nation, year(o_orderdate) AS o_year,
@@ -426,10 +427,11 @@ def tpch_q9(spark, sf_dir):
             .agg(F.round(F.sum("cents") / 100.0, 2).alias("sum_profit")))
 
 
-@query("tpch_q15", oracle="""
+@query("tpch_q15", oracle=f"""
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
-             round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS total_revenue
+             {cents_sum_sql(
+                 'l_extendedprice * (1 - l_discount)')} AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
@@ -454,7 +456,7 @@ def tpch_q15(spark, sf_dir):
     le = T(spark, sf_dir, "lineitem")
     rev = (le.filter((le.l_shipdate >= lo) & (le.l_shipdate < hi))
            .groupBy(F.col("l_suppkey").alias("supplier_no"))
-           .agg(_cents_sum(_revenue(le)).alias("total_revenue")))
+           .agg(cents_sum(_revenue(le)).alias("total_revenue")))
     s = T(spark, sf_dir, "supplier")
     return (rev.withColumn("mx", F.max("total_revenue").over(Window.partitionBy()))
             .filter(F.col("total_revenue") == F.col("mx"))
@@ -512,8 +514,9 @@ def tpch_q16(spark, sf_dir):
 # ------------------------------------------------------------- Q17/Q18/Q19
 
 
-@query("tpch_q17", oracle="""
-    SELECT round(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 / 7.0, 2) AS avg_yearly
+@query("tpch_q17", oracle=f"""
+    SELECT round({units_sum_sql(
+                     'l_extendedprice', 100)} / 100.0 / 7.0, 2) AS avg_yearly
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
     JOIN (SELECT l_partkey AS agg_partkey,
@@ -535,9 +538,9 @@ def tpch_q17(spark, sf_dir):
     return (le.join(F.broadcast(p), le.l_partkey == p.p_partkey)
             .join(thresholds, le.l_partkey == F.col("agg_partkey"))
             .filter(le.l_quantity < F.col("avg_qty_threshold"))
-            .agg(F.round(F.sum(F.round(F.col("l_extendedprice") * 100)
-                          .cast("bigint")) / 100.0 / 7.0, 2)
-                 .alias("avg_yearly")))  # /7 before rounding: not plain cents_sum
+            .agg(F.round(units_sum(F.col("l_extendedprice"), 100)
+                         / 100.0 / 7.0, 2)
+                 .alias("avg_yearly")))  # /7 before rounding: not cents_sum
 
 
 @query("tpch_q18", oracle="""
@@ -574,8 +577,8 @@ def tpch_q18(spark, sf_dir):
             .limit(100))
 
 
-@query("tpch_q19", oracle="""
-    SELECT round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+@query("tpch_q19", oracle=f"""
+    SELECT {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
            AND l_quantity >= 1 AND l_quantity <= 21)
@@ -601,16 +604,16 @@ def tpch_q19(spark, sf_dir):
            & le.l_quantity.between(20, 40)))
     return (le.join(F.broadcast(p), le.l_partkey == p.p_partkey)
             .filter(clause)
-            .agg(_cents_sum(_revenue(le)).alias("revenue")))
+            .agg(cents_sum(_revenue(le)).alias("revenue")))
 
 
 # ------------------------------------------------------------------ Q22
 
 
-@query("tpch_q22", oracle="""
+@query("tpch_q22", oracle=f"""
     SELECT n_name,
            count(*) AS numcust,
-           round(sum(CAST(round((c_acctbal) * 100) AS BIGINT)) / 100.0, 2) AS totacctbal
+           {cents_sum_sql('c_acctbal')} AS totacctbal
     FROM customer JOIN nation ON c_nationkey = n_nationkey
     WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer
                        WHERE c_acctbal > 0.0)
@@ -636,7 +639,7 @@ def tpch_q22(spark, sf_dir):
             .join(F.broadcast(n), F.col("c_nationkey") == n.n_nationkey)
             .groupBy("n_name")
             .agg(F.count("*").alias("numcust"),
-                 _cents_sum(F.col("c_acctbal")).alias("totacctbal")))
+                 cents_sum(F.col("c_acctbal")).alias("totacctbal")))
 
 
 # ------------------------------------------------- Q1/Q2/Q11/Q20/Q21
@@ -649,12 +652,14 @@ def tpch_q22(spark, sf_dir):
 # names, is what exercises the planner.
 
 
-@query("tpch_q1", oracle="""
+@query("tpch_q1", oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           round(sum(CAST(round((l_quantity) * 100) AS BIGINT)) / 100.0, 2) AS sum_qty,
-           round(sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / 100.0, 2) AS sum_base_price,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS sum_disc_price,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount) * (1 + l_tax)) * 100) AS BIGINT)) / 100.0, 2) AS sum_charge,
+           {cents_sum_sql('l_quantity')} AS sum_qty,
+           {cents_sum_sql('l_extendedprice')} AS sum_base_price,
+           {cents_sum_sql(
+               'l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+           {cents_sum_sql(
+               'l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
            round(avg(l_quantity), 6)                                   AS avg_qty,
            round(avg(l_extendedprice), 6)                              AS avg_price,
            round(avg(l_discount), 6)                                   AS avg_disc,
@@ -674,10 +679,10 @@ def tpch_q1(spark, sf_dir):
                   <= F.lit("2001-06-01 00:00:00").cast("timestamp")))
     disc = le.l_extendedprice * (1 - le.l_discount)
     return (le.groupBy("l_returnflag", "l_linestatus")
-            .agg(_cents_sum(F.col("l_quantity")).alias("sum_qty"),
-                 _cents_sum(F.col("l_extendedprice")).alias("sum_base_price"),
-                 _cents_sum(disc).alias("sum_disc_price"),
-                 _cents_sum(disc * (1 + le.l_tax)).alias("sum_charge"),
+            .agg(cents_sum(F.col("l_quantity")).alias("sum_qty"),
+                 cents_sum(F.col("l_extendedprice")).alias("sum_base_price"),
+                 cents_sum(disc).alias("sum_disc_price"),
+                 cents_sum(disc * (1 + le.l_tax)).alias("sum_charge"),
                  F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
                  F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
                  F.round(F.avg("l_discount"), 6).alias("avg_disc"),
@@ -746,11 +751,11 @@ def tpch_q2(spark, sf_dir):
             .limit(100))
 
 
-@query("tpch_q11", oracle="""
+@query("tpch_q11", oracle=f"""
     WITH value AS (
         SELECT l_partkey AS partkey,
-               sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                        AS BIGINT)) AS val_cents
+               {units_sum_sql(
+                   'l_extendedprice * (1 - l_discount)', 100)} AS val_cents
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation   ON s_nationkey = n_nationkey
@@ -784,7 +789,7 @@ def tpch_q11(spark, sf_dir):
             .select("s_suppkey"))
     value = (le.join(F.broadcast(dims), le.l_suppkey == F.col("s_suppkey"))
              .groupBy(le.l_partkey.alias("partkey"))
-             .agg(F.sum(F.round(_revenue(le) * 100).cast("bigint"))
+             .agg(units_sum(_revenue(le), 100)
                   .alias("val_cents")))
     threshold = value.agg((F.sum("val_cents") * 0.001).alias("thr"))
     return (value.join(F.broadcast(threshold), F.col("val_cents") > F.col("thr"))

@@ -35,16 +35,16 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql
+from ..numerics import chi2_sf, chi2_sf_sql, units_sum, units_sum_sql
 from .registry import query
 from .relational import T
 
 # Day-collapsed event revenue in exact integer cents: the shared base
 # series for the two autocorrelation diagnostics (the ts_bollinger /
 # stats_sprt day-spine convention).
-_DAY_SQL = """
+_DAY_SQL = f"""
     SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+           {units_sum_sql('value', 100)} AS x
     FROM events GROUP BY 1
 """
 
@@ -52,7 +52,7 @@ _DAY_SQL = """
 def _daily(spark, sf_dir):
     return (T(spark, sf_dir, "events")
             .groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-            .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            .agg(units_sum(F.col("value"), 100)
                  .alias("x")))
 
 
@@ -355,10 +355,10 @@ def ts_ljung_box(spark, sf_dir):
         SELECT CAST(max(n) AS BIGINT) AS n,
                CAST((count(DISTINCT et) - 1)
                     * (count(DISTINCT dow) - 1) AS BIGINT) AS df,
-               round(2.0 * sum(CAST(round(
-                   o * ln((CAST(o AS DOUBLE) * CAST(n AS DOUBLE))
-                          / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)))
-                   * 1e6) AS BIGINT)) / 1e6, 5) AS g_stat
+               round(2.0 * {units_sum_sql(
+                               'o * ln((CAST(o AS DOUBLE)'
+                               ' * CAST(n AS DOUBLE)) / (CAST(r AS DOUBLE)'
+                               ' * CAST(c AS DOUBLE)))', 1e6)} / 1e6, 5) AS g_stat
         FROM marg
     )
     SELECT n, df, g_stat,

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .registry import query
-from .relational import T, _cents_sum
+from .relational import T
+from ..numerics import cents_sum, cents_sum_sql
 
 
 # ------------------------------------------------------- market basket
@@ -125,10 +126,10 @@ def events_markov(spark, sf_dir):
 
 # ----------------------------------------------- linear interpolation
 
-@query("ts_interpolate", oracle="""
+@query("ts_interpolate", oracle=f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
-               round(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) / 100.0, 2) AS rev
+               {cents_sum_sql('o_totalprice')} AS rev
         FROM orders WHERE o_orderpriority = '1-URGENT'
         GROUP BY 1
     ),
@@ -174,7 +175,7 @@ def ts_interpolate(spark, sf_dir):
     o = T(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT")
     daily = (o.groupBy(F.to_date("o_orderdate").alias("day"))
-             .agg(_cents_sum(F.col("o_totalprice")).alias("rev")))
+             .agg(cents_sum(F.col("o_totalprice")).alias("rev")))
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi")).alias("day"))
@@ -203,10 +204,10 @@ def ts_interpolate(spark, sf_dir):
 
 # -------------------------------------------------------- pareto share
 
-@query("pareto_share", oracle="""
+@query("pareto_share", oracle=f"""
     WITH sup AS (
         SELECT l_suppkey AS s_suppkey,
-               round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+               {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
         FROM lineitem GROUP BY 1
     )
     SELECT s_suppkey, revenue,
@@ -234,7 +235,7 @@ def pareto_share(spark, sf_dir):
     engines accumulate identical sequences."""
     le = T(spark, sf_dir, "lineitem")
     sup = (le.groupBy(F.col("l_suppkey").alias("s_suppkey"))
-           .agg(_cents_sum(le.l_extendedprice * (1 - le.l_discount))
+           .agg(cents_sum(le.l_extendedprice * (1 - le.l_discount))
                 .alias("revenue")))
     wcum = (W.orderBy(F.col("revenue").desc(), F.col("s_suppkey").asc())
             .rowsBetween(W.unboundedPreceding, W.currentRow))

@@ -13,17 +13,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .registry import query
-from .relational import T, _cents_sum
+from .relational import T
 from ..streaming import session_agg
+from ..numerics import (
+    cents_sum, cents_sum_sql, fixed_sum, fixed_sum_sql, units_sum,
+    units_sum_sql)
 
 
 # ------------------------------------------------------ period growth
 
-@query("mom_growth", oracle="""
+@query("mom_growth", oracle=f"""
     WITH monthly AS (
         SELECT c_mktsegment AS segment,
                CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-               round(sum(CAST(round((o_totalprice) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+               {cents_sum_sql('o_totalprice')} AS revenue
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1, 2
     )
@@ -47,7 +50,7 @@ def mom_growth(spark, sf_dir):
     monthly = (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
                .groupBy(F.col("c_mktsegment").alias("segment"),
                         F.to_date(F.date_trunc("month", "o_orderdate")).alias("month"))
-               .agg(_cents_sum(F.col("o_totalprice")).alias("revenue")))
+               .agg(cents_sum(F.col("o_totalprice")).alias("revenue")))
     w = W.partitionBy("segment").orderBy("month")
     prev = F.lag("revenue").over(w)
     return monthly.select(
@@ -230,12 +233,11 @@ def ts_autocorrelation(spark, sf_dir):
                     .alias("acf"))
 
 
-@query("supplier_herfindahl", oracle="""
+@query("supplier_herfindahl", oracle=f"""
     WITH rev AS (
         SELECT n_name,
                s_suppkey,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS c
+               {units_sum_sql('l_extendedprice', 100)} AS c
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation ON s_nationkey = n_nationkey
@@ -245,8 +247,7 @@ def ts_autocorrelation(spark, sf_dir):
             FROM rev GROUP BY 1)
     SELECT rev.n_name AS nation,
            CAST(count(*) AS BIGINT) AS n_suppliers,
-           round(sum(CAST(round(pow(c / CAST(t AS DOUBLE), 2) * 1e9)
-                          AS BIGINT)) / 1e9, 5) AS hhi
+           {fixed_sum_sql('pow(c / CAST(t AS DOUBLE), 2)', 1e9, 5)} AS hhi
     FROM rev JOIN tot ON rev.n_name = tot.n_name
     GROUP BY rev.n_name
 """)
@@ -267,15 +268,13 @@ def supplier_herfindahl(spark, sf_dir):
     rev = (le.join(F.broadcast(su), le.l_suppkey == su.s_suppkey)
            .join(F.broadcast(na), su.s_nationkey == na.n_nationkey)
            .groupBy("n_name", "s_suppkey")
-           .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                      .cast("bigint")).alias("c")))
+           .agg(units_sum(F.col("l_extendedprice"), 100).alias("c")))
     tot = rev.groupBy("n_name").agg(F.sum("c").alias("t"))
     share2 = F.pow(F.col("c") / F.col("t").cast("double"), 2)
     return (rev.join(tot, "n_name")
             .groupBy(F.col("n_name").alias("nation"))
             .agg(F.count("*").alias("n_suppliers"),
-                 F.round(F.sum(F.round(share2 * 1e9).cast("bigint"))
-                         / 1e9, 5).alias("hhi")))
+                 fixed_sum(share2, 1e9, 5).alias("hhi")))
 
 
 @query("ts_forecast_baseline_eval", oracle="""

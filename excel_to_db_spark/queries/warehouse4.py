@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .registry import query, scratch_dir
-from .relational import T, _cents_sum
+from .relational import T
 from .operational import cdc_merge_upsert
+from ..numerics import cents_sum, cents_sum_sql, units_sum, units_sum_sql
 
 
 # ------------------------------------------------------- profiling
@@ -228,11 +229,11 @@ def keyset_pagination(spark, sf_dir):
 
 # -------------------------------------------------- rank movement
 
-@query("rank_movement", oracle="""
+@query("rank_movement", oracle=f"""
     WITH rev AS (
         SELECT l_suppkey AS s_suppkey,
                CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-               round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+               {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1995-05-01'
           AND l_shipdate <  TIMESTAMP '1995-07-01'
@@ -269,7 +270,7 @@ def rank_movement(spark, sf_dir):
            .groupBy(F.col("l_suppkey").alias("s_suppkey"),
                     F.to_date(F.date_trunc("month", "l_shipdate"))
                      .alias("month"))
-           .agg(_cents_sum(le.l_extendedprice * (1 - le.l_discount))
+           .agg(cents_sum(le.l_extendedprice * (1 - le.l_discount))
                 .alias("revenue")))
     wr = W.partitionBy("month").orderBy(
         F.col("revenue").desc(), F.col("s_suppkey").asc())
@@ -288,14 +289,14 @@ def rank_movement(spark, sf_dir):
 
 # ---------------------------------------------------- time rollup
 
-@query("time_rollup", oracle="""
+@query("time_rollup", oracle=f"""
     SELECT coalesce(CAST(yr AS VARCHAR), '(all)') AS yr,
            coalesce(CAST(qtr AS VARCHAR), '(all)') AS qtr,
            coalesce(CAST(mon AS VARCHAR), '(all)') AS mon,
            CAST(GROUPING(yr) + GROUPING(qtr) + GROUPING(mon) AS INTEGER)
                AS lvl,
            count(*) AS n,
-           round(sum(CAST(round((l_extendedprice * (1 - l_discount)) * 100) AS BIGINT)) / 100.0, 2) AS revenue
+           {cents_sum_sql('l_extendedprice * (1 - l_discount)')} AS revenue
     FROM (
         SELECT year(l_shipdate) AS yr, quarter(l_shipdate) AS qtr,
                month(l_shipdate) AS mon,
@@ -326,7 +327,7 @@ def time_rollup(spark, sf_dir):
                     "l_extendedprice", "l_discount"))
     return (base.rollup("yr", "qtr", "mon")
             .agg(F.count("*").alias("n"),
-                 _cents_sum(F.col("l_extendedprice")
+                 cents_sum(F.col("l_extendedprice")
                             * (1 - F.col("l_discount")))
                   .alias("revenue"),
                  (F.grouping("yr") + F.grouping("qtr") + F.grouping("mon"))
@@ -372,25 +373,19 @@ def schema_evolution_read(spark, sf_dir):
     return back.select("r_regionkey", "r_name", "ingest_batch")
 
 
-@query("price_index_laspeyres", oracle="""
+_IN_1996 = ("l_shipdate >= TIMESTAMP '1996-01-01'"
+            " AND l_shipdate <  TIMESTAMP '1997-01-01'")
+_IN_1998 = ("l_shipdate >= TIMESTAMP '1998-01-01'"
+            " AND l_shipdate <  TIMESTAMP '1999-01-01'")
+
+
+@query("price_index_laspeyres", oracle=f"""
     WITH per AS (
         SELECT l_partkey,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                              AND l_shipdate <  TIMESTAMP '1997-01-01')
-                    AS BIGINT) AS c0,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                              AND l_shipdate <  TIMESTAMP '1997-01-01')
-                    AS BIGINT) AS q0,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-                              AND l_shipdate <  TIMESTAMP '1999-01-01')
-                    AS BIGINT) AS c1,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT))
-                    FILTER (WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-                              AND l_shipdate <  TIMESTAMP '1999-01-01')
-                    AS BIGINT) AS q1
+               {units_sum_sql('l_extendedprice', 100, where=_IN_1996)} AS c0,
+               {units_sum_sql('l_quantity', where=_IN_1996)} AS q0,
+               {units_sum_sql('l_extendedprice', 100, where=_IN_1998)} AS c1,
+               {units_sum_sql('l_quantity', where=_IN_1998)} AS q1
         FROM lineitem GROUP BY 1
     ),
     basket AS (
@@ -400,8 +395,8 @@ def schema_evolution_read(spark, sf_dir):
         FROM per WHERE q0 > 0 AND q1 > 0
     )
     SELECT CAST(count(*) AS BIGINT) AS n_parts,
-           round(sum(CAST(round(q0 * p1 * 1e4) AS BIGINT)) / 1e4
-                 / (sum(CAST(round(q0 * p0 * 1e4) AS BIGINT)) / 1e4),
+           round({units_sum_sql('q0 * p1', 1e4)} / 1e4
+                 / ({units_sum_sql('q0 * p0', 1e4)} / 1e4),
                  6) AS laspeyres
     FROM basket
 """)
@@ -437,18 +432,17 @@ def price_index_laspeyres(spark, sf_dir):
               .select("q0",
                       (F.col("c0") / F.col("q0").cast("double")).alias("p0"),
                       (F.col("c1") / F.col("q1").cast("double")).alias("p1")))
-    num = F.sum(F.round(F.col("q0") * F.col("p1") * 1e4).cast("bigint")) / 1e4
-    den = F.sum(F.round(F.col("q0") * F.col("p0") * 1e4).cast("bigint")) / 1e4
+    num = units_sum(F.col("q0") * F.col("p1"), 1e4) / 1e4
+    den = units_sum(F.col("q0") * F.col("p0"), 1e4) / 1e4
     return basket.agg(F.count("*").alias("n_parts"),
                       F.round(num / den, 6).alias("laspeyres"))
 
 
-@query("inventory_abc_xyz", oracle="""
+@query("inventory_abc_xyz", oracle=f"""
     WITH monthly AS (
         SELECT l_partkey, date_trunc('month', l_shipdate) AS mon,
-               CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                    AS BIGINT) AS c
+               {units_sum_sql('l_quantity')} AS q,
+               {units_sum_sql('l_extendedprice', 100)} AS c
         FROM lineitem GROUP BY 1, 2
     ),
     per AS (
@@ -503,10 +497,9 @@ def inventory_abc_xyz(spark, sf_dir):
     monthly = (le.groupBy("l_partkey",
                           F.date_trunc("month", F.col("l_shipdate"))
                           .alias("mon"))
-               .agg(F.sum(F.round(F.col("l_quantity")).cast("bigint"))
+               .agg(units_sum(F.col("l_quantity"))
                     .alias("q"),
-                    F.sum(F.round(F.col("l_extendedprice") * 100)
-                          .cast("bigint")).alias("c")))
+                    units_sum(F.col("l_extendedprice"), 100).alias("c")))
     per = monthly.groupBy("l_partkey").agg(
         F.count("*").alias("nm"),
         F.sum("q").alias("sq"),

@@ -12,16 +12,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .registry import query
-from .relational import T, _cents_sum
+from .relational import T
+from ..numerics import cents_sum, cents_sum_sql, units_sum, units_sum_sql
 
 
 # ------------------------------------------------- re-aggregation
 
-@query("agg_reaggregation", oracle="""
+@query("agg_reaggregation", oracle=f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
                count(*) AS n,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS s
+               {units_sum_sql('o_totalprice', 100)} AS s
         FROM orders GROUP BY 1
     )
     SELECT CAST(date_trunc('month', day) AS DATE) AS month,
@@ -45,8 +46,7 @@ def agg_reaggregation(spark, sf_dir):
     o = T(spark, sf_dir, "orders")
     daily = (o.groupBy(F.to_date("o_orderdate").alias("day"))
              .agg(F.count("*").alias("n"),
-                  F.sum(F.round(F.col("o_totalprice") * 100)
-                        .cast("bigint")).alias("s")))
+                  units_sum(F.col("o_totalprice"), 100).alias("s")))
     return (daily.groupBy(F.to_date(F.date_trunc("month", "day"))
                           .alias("month"))
             .agg(F.sum("n").cast("bigint").alias("n_orders"),
@@ -57,7 +57,7 @@ def agg_reaggregation(spark, sf_dir):
 
 # ----------------------------------------------------- SCD2 join
 
-@query("join_scd2", oracle="""
+@query("join_scd2", oracle=f"""
     WITH dim AS (
         SELECT c_custkey, c_mktsegment,
                round(c_acctbal, 2) AS acctbal,
@@ -74,7 +74,7 @@ def agg_reaggregation(spark, sf_dir):
     SELECT c_mktsegment AS segment,
            CAST(ver AS INTEGER) AS ver,
            count(*) AS n_orders,
-           round(sum(CAST(round((acctbal) * 100) AS BIGINT)) / 100.0, 2) AS sum_balance_at_order
+           {cents_sum_sql('acctbal')} AS sum_balance_at_order
     FROM orders
     JOIN dim ON o_custkey = c_custkey
             AND o_orderdate >= valid_from AND o_orderdate < valid_to
@@ -103,7 +103,7 @@ def join_scd2(spark, sf_dir):
             .groupBy(F.col("c_mktsegment").alias("segment"),
                      F.col("ver").cast("int").alias("ver"))
             .agg(F.count("*").alias("n_orders"),
-                 _cents_sum(F.col("acctbal")).alias("sum_balance_at_order")))
+                 cents_sum(F.col("acctbal")).alias("sum_balance_at_order")))
 
 
 # -------------------------------------------- cumulative distinct

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 
-from ..numerics import cents_sum as _cents_sum
+from ..numerics import cents_sum
 from ..operators import physical
 
 EVENTS_DDL = ("event_id bigint, ts timestamp_ntz, user_id bigint, "
@@ -137,7 +137,7 @@ def run_replay_source_agg(spark, sf_dir: str, batch_rows: int | None = None,
               .load())
     agg = (stream.groupBy("event_type")
            .agg(F.count("*").alias("n_events"),
-                _cents_sum(F.col("value")).alias("sum_value")))
+                cents_sum(F.col("value")).alias("sum_value")))
     q = (agg.writeStream.outputMode("complete")
          .format("memory").queryName(name)
          .trigger(processingTime="0 seconds")

@@ -25,7 +25,7 @@ from .replay import events_stream_reader, table_stream_reader
 
 # Exact money sum in integer cents, batch or micro-batch (single
 # definition: numerics.py).
-from ..numerics import cents_sum as _cents_sum  # noqa: E402
+from ..numerics import cents_sum  # noqa: E402
 
 
 def tumbling_agg(events: DataFrame, width: str = "10 minutes") -> DataFrame:
@@ -34,7 +34,7 @@ def tumbling_agg(events: DataFrame, width: str = "10 minutes") -> DataFrame:
     return (events
             .groupBy(F.window("ts", width).alias("win"))
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value"))
+                 cents_sum(F.col("value")).alias("sum_value"))
             .select(F.col("win.start").alias("win_start"),
                     F.col("win.end").alias("win_end"),
                     "n_events", "sum_value"))
@@ -48,7 +48,7 @@ def hopping_agg(events: DataFrame, width: str = "10 minutes",
     return (events
             .groupBy(F.window("ts", width, slide).alias("win"))
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value"))
+                 cents_sum(F.col("value")).alias("sum_value"))
             .select(F.col("win.start").alias("win_start"),
                     F.col("win.end").alias("win_end"),
                     "n_events", "sum_value"))
@@ -61,7 +61,7 @@ def session_agg(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
     return (events
             .groupBy("user_id", F.session_window("ts", gap).alias("sess"))
             .agg(F.count("*").alias("n_events"),
-                 _cents_sum(F.col("value")).alias("sum_value"))
+                 cents_sum(F.col("value")).alias("sum_value"))
             .select("user_id",
                     F.col("sess.start").alias("sess_start"),
                     F.col("sess.end").alias("sess_end"),
@@ -242,7 +242,7 @@ def run_stream_dedup_watermark(spark: SparkSession, sf_dir: str,
                   .dropDuplicatesWithinWatermark(["event_id"])
                   .groupBy("event_type")
                   .agg(F.count("*").alias("n_events"),
-                       _cents_sum(F.col("value")).alias("sum_value")))
+                       cents_sum(F.col("value")).alias("sum_value")))
         return replay.drain(spark, counts, "complete")[0]
 
 
@@ -311,7 +311,7 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str,
                          stream.user_id == customers.c_custkey, "inner")
     agg = (joined.groupBy("c_mktsegment")
            .agg(F.count("*").alias("n_events"),
-                _cents_sum(F.col("value")).alias("sum_value")))
+                cents_sum(F.col("value")).alias("sum_value")))
     return replay.drain(spark, agg, "complete")[0]
 
 
@@ -357,7 +357,6 @@ def run_stream_scd2_enrich(spark: SparkSession, sf_dir: str,
     streaming execution value-for-value."""
     from pyspark.sql import functions as F
 
-    from ..numerics import cents_sum
     from ..tables import load_table
 
     from ..operators.temporal import scd2_customer_versions
@@ -535,7 +534,7 @@ def run_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     def agg(stream: DataFrame) -> DataFrame:
         return (stream.groupBy("event_type")
                 .agg(F.count("*").alias("n_events"),
-                     _cents_sum(F.col("value")).alias("sum_value")))
+                     cents_sum(F.col("value")).alias("sum_value")))
 
     return replay.staged_checkpoint_replay(spark, sf_dir, agg)[0]
 

@@ -19,17 +19,19 @@ sys.path.insert(0, os.path.join(
 
 from check import TABLES, _row_multiset  # noqa: E402
 
-from excel_to_db_spark.numerics import h32_sql  # noqa: E402
+from excel_to_db_spark.numerics import h32_sql, units_sum_sql  # noqa: E402
 
 PAPER_SURFACE = ("excel_scan", "load_rowcount", "display_format",
                  "csv_export", "excel_datasource")
 
 # Text a numerics twin writes into an oracle (the md5 prefix of
-# `h32_sql`, which `u01_sql` wraps, and the A-S constant of `erfc_sql`,
-# which `chi2_sf_sql` wraps): a key whose oracle holds one must agree
-# with Spark through that twin, so a new caller is checked here
-# without a list edit.
-_TWIN_TEXT = (h32_sql("x").split("md5(")[0], "0.3275911")
+# `h32_sql`, which `u01_sql` wraps, the A-S constant of `erfc_sql`,
+# which `chi2_sf_sql` wraps, and the unit-sum head of `units_sum_sql`,
+# which `fixed_sum_sql` and `cents_sum_sql` wrap): a key whose oracle
+# holds one must agree with Spark through that twin, so a new caller
+# is checked here without a list edit.
+_TWIN_TEXT = (h32_sql("x").split("md5(")[0], "0.3275911",
+              units_sum_sql("x").split("x")[0])
 NUMERICS_CALLERS = sorted(k for k, sql in E.oracle_sql().items()
                           if any(t in sql for t in _TWIN_TEXT))
 
@@ -71,9 +73,10 @@ def test_paper_surface_key_matches_oracle(spark, duck, sf_dir, key):
 
 
 def test_numerics_callers_are_found():
-    assert len(NUMERICS_CALLERS) >= 78
+    assert len(NUMERICS_CALLERS) >= 225
     assert {"geo_knn_topk", "stats_sign_test", "privacy_dp_median",
-            "text_winnowing"} <= set(NUMERICS_CALLERS)
+            "text_winnowing", "cte_query", "agg_groupby"} \
+        <= set(NUMERICS_CALLERS)
 
 
 @pytest.mark.parametrize("key", NUMERICS_CALLERS)

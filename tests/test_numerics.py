@@ -1,19 +1,22 @@
-"""numerics.py: the one place that turns a test statistic into a
-p-value and hashes a value to 32 bits or to a uniform, on Spark and in
-the DuckDB oracles alike."""
+"""numerics.py: the one place that sums in integer units, turns a test
+statistic into a p-value and hashes a value to 32 bits or to a
+uniform, on Spark and in the DuckDB oracles alike."""
 
 from __future__ import annotations
 
 import math
 import pathlib
 import re
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pytest
 
 from conftest import SF_DIR, h32 as md5_h32
 from excel_to_db_spark.numerics import (
-    chi2_sf, chi2_sf_sql, erfc, erfc_sql, h32, h32_sql, u01, u01_sql)
+    cents_sum, cents_sum_sql, chi2_sf, chi2_sf_sql, erfc, erfc_sql,
+    fixed_sum, fixed_sum_sql, h32, h32_sql, u01, u01_sql, units_sum,
+    units_sum_sql)
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_db_spark"
 
@@ -22,8 +25,29 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_db_spark"
 # half (9, 8) are other hashes and do not match.
 _FIRST_8 = r"(?:(?!md5\().){0,200}?,[\s\"']*1,\s*8\)"
 
+
+class _SparkUnitSum:
+    """F.sum(F.round(<arg>).cast("bigint")), the argument balanced
+    across lines; a DECIMAL(38) accumulator (`.cast(d38)`) is another
+    sum and does not match."""
+    head = re.compile(r"F\.sum\(\s*F\.round\(")
+    tail = re.compile(r"\s*\.cast\(\s*[\"'](?:bigint|long)[\"']\s*\)\s*\)")
+
+    def finditer(self, text):
+        for m in self.head.finditer(text):
+            depth = 1
+            for i in range(m.end(), len(text)):
+                depth += {"(": 1, ")": -1}.get(text[i], 0)
+                if depth == 0:
+                    if self.tail.match(text, i + 1):
+                        yield m
+                    break
+
+
 # Each of these outside numerics.py is a hand copy of a shared formula.
 _OUTSIDE_NUMERICS = {
+    "unit sum (SQL)": re.compile(r"sum\(\s*CAST\(\s*round\(", re.I),
+    "unit sum (Spark Column)": _SparkUnitSum(),
     "A-S 7.1.26 erfc": re.compile(r"0\.3275911|0\.254829592"),
     "Wilson-Hilferty": re.compile(r"2\.0 / \(9\.0 \*"),
     "h32 (Spark Column)": re.compile(
@@ -136,3 +160,107 @@ def test_u01_twins_agree_on_both_engines(spark):
             continue
         assert got == duck == (md5_h32(s) + 0.5) / 2 ** 32, s
         assert 0.0 < got < 1.0, s
+
+
+# Rounding boundaries of both signs, values under one unit, a large
+# cent amount, and an all-NULL group; the sums of every group.
+_SUM_GRID = [1.005, 2.675, 0.125, -0.125, 2.5, -2.5, 1e-9, -1e-9,
+             99999.995]
+_SUM_ROWS = ([(i, x) for i, x in enumerate(_SUM_GRID)]
+             + [(100, x) for x in _SUM_GRID] + [(101, None), (101, None)])
+
+
+def _half_away_sum(xs, scale):
+    """The BIGINT units both engines sum: each x * scale rounded half
+    away from zero on its exact binary value; None if every x is."""
+    xs = [x for x in xs if x is not None]
+    if not xs:
+        return None
+    return sum(int(Decimal(x * scale).to_integral_value(ROUND_HALF_UP))
+               for x in xs)
+
+
+def _sum_twins(spark, col_fn, sql_fn):
+    """{group: (Spark Column value, Spark SQL value, DuckDB value)} of
+    one sum over `_SUM_ROWS`, and the two SQL result types."""
+    df = spark.createDataFrame(_SUM_ROWS, "k int, x double")
+    got = dict(df.groupBy("k").agg(col_fn(df.x).alias("s")).collect())
+    ssql = spark.sql(f"SELECT k, {sql_fn('x')} AS s FROM {{v}} GROUP BY k",
+                     v=df)
+    via_sql = dict(ssql.collect())
+    values = ", ".join(f"({k}, {'NULL' if x is None else repr(x)}::DOUBLE)"
+                       for k, x in _SUM_ROWS)
+    rel = duckdb.sql(f"SELECT k, {sql_fn('x')} AS s"
+                     f" FROM (VALUES {values}) v(k, x) GROUP BY k")
+    duck = dict(rel.fetchall())
+    types = (ssql.schema["s"].dataType.simpleString(), str(rel.types[1]))
+    return {k: (got[k], via_sql[k], duck[k]) for k in got}, types
+
+
+@pytest.mark.parametrize("scale", [1, 100, 1e6, 1e9])
+def test_units_sum_twins_agree_on_both_engines(spark, scale):
+    sums, types = _sum_twins(spark, lambda c: units_sum(c, scale),
+                             lambda x: units_sum_sql(x, scale))
+    assert types == ("bigint", "BIGINT")
+    want = {k: _half_away_sum([x for kk, x in _SUM_ROWS if kk == k],
+                              scale) for k in sums}
+    for k, (got, via_sql, duck) in sums.items():
+        assert got == via_sql == duck == want[k], (k, got, via_sql, duck)
+
+
+def test_units_sum_overflow_raises_on_both_engines(spark):
+    """Two rows of 9.2e16 at scale 100 sum past 2^63: Spark's ANSI sum
+    raises, and the SQL twin's outer cast makes DuckDB (whose sum of
+    BIGINT is HUGEINT) and Spark SQL raise too."""
+    rows = [(9.2e16,), (9.2e16,)]
+    df = spark.createDataFrame(rows, "x double")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        df.agg(units_sum(df.x, 100)).collect()
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
+        spark.sql(f"SELECT {units_sum_sql('x', 100)} FROM {{v}}",
+                  v=df).collect()
+    with pytest.raises(duckdb.Error, match="[Oo]ut of [Rr]ange"):
+        duckdb.sql(f"SELECT {units_sum_sql('x', 100)}"
+                   " FROM (VALUES (9.2e16::DOUBLE), (9.2e16)) v(x)"
+                   ).fetchall()
+
+
+@pytest.mark.parametrize("scale,digits", [(100, 2), (1e6, 6), (1e9, 6)])
+def test_fixed_sum_twins_agree_on_both_engines(spark, scale, digits):
+    sums, types = _sum_twins(
+        spark, lambda c: fixed_sum(c, float(scale), digits),
+        lambda x: fixed_sum_sql(x, scale, digits))
+    for k, (got, via_sql, duck) in sums.items():
+        assert got == duck, (k, got, duck)
+        assert (via_sql is None) == (got is None), k
+        assert via_sql is None or float(via_sql) == got, (k, via_sql)
+    # An int scale divides by its DECIMAL literal (`100.0`): Spark SQL
+    # keeps decimal, DuckDB divides in DOUBLE; a float scale is DOUBLE.
+    assert types == (("decimal(24,2)", "DOUBLE") if scale == 100
+                     else ("double", "DOUBLE"))
+
+
+def test_cents_sum_twins_agree_on_both_engines(spark):
+    sums, types = _sum_twins(spark, cents_sum, cents_sum_sql)
+    assert types == ("decimal(24,2)", "DOUBLE")
+    assert sums[100][0] == round(_half_away_sum(_SUM_GRID, 100) / 100.0, 2)
+    for k, (got, via_sql, duck) in sums.items():
+        assert got == duck and (via_sql is None or float(via_sql) == got)
+
+
+def test_sql_twins_keep_the_literal_type():
+    """An int scale renders as an integer literal with a `100.0`
+    divisor, a float in exponent form; at scale 1 the argument is
+    rounded as written."""
+    assert units_sum_sql("q") \
+        == "CAST(sum(CAST(round(q) AS BIGINT)) AS BIGINT)"
+    assert units_sum_sql("a - b", 100) \
+        == "CAST(sum(CAST(round((a - b) * 100) AS BIGINT)) AS BIGINT)"
+    assert "round((v) * 1e6) AS BIGINT" in units_sum_sql("v", 1e6)
+    assert fixed_sum_sql("v", 1e9, 6).endswith(" / 1e9, 6)")
+    assert cents_sum_sql("v").endswith(" / 100.0, 2)")
+    assert units_sum_sql("v", 100, "k > 0").endswith(
+        " FILTER (WHERE k > 0) AS BIGINT)")
+    con = duckdb.connect()
+    assert [str(t) for t in con.sql(
+        "SELECT 3 * 1e6, 3 * 1000000.0").types] == ["DOUBLE", "DECIMAL(18,1)"]

@@ -50,6 +50,24 @@ def test_impossible_travel(spark, sf_dir):
     assert 0 < total_imp < total_checked
 
 
+def test_impossible_travel_oracle_survives_long_hops():
+    """100k hops 30 days apart: the speed product reads dt capped at the
+    4-hour horizon, so DuckDB cannot overflow BIGINT. Uncapped, DuckDB
+    1.0 on one thread reorders the CASE's AND once it has sampled a few
+    vectors and evaluates 62500 * dt * dt * 1000 on these hops."""
+    import duckdb
+    from excel_to_db_spark.queries import REGISTRY
+
+    con = duckdb.connect(config={"threads": 1})
+    con.execute("""
+        CREATE VIEW events AS
+        SELECT CAST(0 AS BIGINT) AS user_id, CAST(i AS BIGINT) AS event_id,
+               TIMESTAMP '2024-01-01' + to_seconds(i * 2592000) AS ts
+        FROM range(100000) t(i)""")
+    assert con.execute(REGISTRY["sec_impossible_travel"].oracle
+                       ).fetchall() == []
+
+
 def test_bruteforce_window(spark, sf_dir):
     from excel_to_db_spark.queries.security import sec_bruteforce_window
     r = sec_bruteforce_window(spark, sf_dir).collect()[0]
