@@ -48,6 +48,27 @@ NULL out). `u01`/`u01_sql` map it to the open interval,
 No other module spells out either one in any engine's syntax; Spark
 SQL text that needs the hash is written as a Column with a Python
 lambda (`F.transform(words, h32)`), not as `conv(substring(md5(...`.
+
+Wide integers. An exact moment (a sum of products, n*Sab - Sa*Sb, a
+squared sum over n) outgrows BIGINT long before its inputs do, so it
+is carried in a 38-digit integer: DECIMAL(38,0) on Spark, HUGEINT in
+the oracles. Six functions spell it, three per engine:
+- `wide(col)` / `wide_sql(x)`: the cast itself. A sum stays a plain
+  `F.sum(wide(x) * y)` / `sum({wide_sql('x')} * y)`;
+- `comoment(n, sab, sa, sb)` / `comoment_sql(...)`: the exact
+  co-moment n*Sab - Sa*Sb, both products taken wide;
+- `wide_quot(num, den)` / `wide_quot_sql(num, den)`: the integer
+  quotient of a wide numerator as BIGINT, truncated toward zero on
+  both engines (-7 div 2 = -3).
+The oracle side is HUGEINT, never DECIMAL(38,0): DuckDB 1.0's `//`
+over a DECIMAL divides in DOUBLE, so
+`CAST(25010798920885000001 AS DECIMAL(38,0)) // 1` reads
+2.5010798920885002e+19; over HUGEINT it is exact. A product past
+10^38 raises on both engines. Spark's `div` of a decimal(38,0)
+quotient past 2^63 wraps silently where DuckDB raises; no corpus
+value comes near it. No other module spells the wide type in either
+engine's syntax; Spark SQL text that needs it (an `aggregate` fold,
+a `DIV`) is written as Columns with a Python lambda.
 """
 
 from __future__ import annotations
@@ -112,6 +133,44 @@ def fixed_sum_sql(x: str, scale: float = 100, digits: int = 2,
 def cents_sum_sql(x: str, where: str | None = None) -> str:
     """SQL twin of `cents_sum`."""
     return fixed_sum_sql(x, where=where)
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def wide(col: Column | str) -> Column:
+    """`col` as a 38-digit integer, DECIMAL(38,0). SQL twin: `wide_sql`."""
+    return _col(col).cast("decimal(38,0)")
+
+
+def wide_sql(x: str) -> str:
+    """DuckDB twin of `wide`: HUGEINT, whose `//` stays integral."""
+    return f"CAST({x} AS HUGEINT)"
+
+
+def comoment(n: Column | str, sab: Column | str, sa: Column | str,
+             sb: Column | str) -> Column:
+    """The exact co-moment n*Sab - Sa*Sb, both products wide. SQL
+    twin: `comoment_sql`."""
+    return wide(n) * _col(sab) - wide(sa) * _col(sb)
+
+
+def comoment_sql(n: str, sab: str, sa: str, sb: str) -> str:
+    """DuckDB twin of `comoment`; the arguments are SQL expressions."""
+    return f"({wide_sql(n)} * {sab} - {wide_sql(sa)} * {sb})"
+
+
+def wide_quot(num: Column | str, den: Column | str) -> Column:
+    """num div den as BIGINT, truncated toward zero; `num` is already
+    wide (`wide(s) * s`). SQL twin: `wide_quot_sql`."""
+    return F.call_function("div", num, den)
+
+
+def wide_quot_sql(num: str, den: str) -> str:
+    """DuckDB twin of `wide_quot`: `//` over HUGEINT, never over a
+    DECIMAL (which divides in DOUBLE)."""
+    return f"CAST({wide_sql(num)} // ({den}) AS BIGINT)"
 
 
 def h32(col: Column) -> Column:

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..numerics import h32
+from ..numerics import h32, wide
 from . import physical
 
 def norm_tokens(text: Column) -> Column:
@@ -545,7 +545,7 @@ def dedup_clusters(pairs: DataFrame, ids: DataFrame) -> DataFrame:
              .union(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
              .transform(physical.cut))
     labels = ids.select(F.col("did"), F.col("did").alias("lbl"))
-    lblsum = F.sum(F.col("lbl").cast("decimal(38,0)"))
+    lblsum = F.sum(wide("lbl"))
     prev_sum = labels.agg(lblsum).collect()[0][0]
     while True:
         neighbor_min = (edges.join(labels, edges.b == labels.did)

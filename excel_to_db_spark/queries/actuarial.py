@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import units_sum, units_sum_sql, wide, wide_quot
 
 _MAX_DEV = 4          # TPC-H ships within ~121 days => dev 0..4
 
@@ -134,8 +134,7 @@ def _dev_triangle(spark, sf_dir):
                # 1.9-2.1s end to end. DuckDB oracle unchanged: its
                # sum() returns HUGEINT, so the naive text is exact.
                .select("dev", "sum_prev", "sum_next",
-                       F.expr("CAST((CAST(sum_next AS DECIMAL(38,0))"
-                              " * 1000000) div sum_prev AS BIGINT)")
+                       wide_quot(wide("sum_next") * 1000000, "sum_prev")
                        .alias("f_micro"))
                .transform(physical.cut))
     return cumt, factors, m
@@ -214,14 +213,12 @@ def act_chain_ladder_ultimate(spark, sf_dir):
     # across aggregate() steps (the lambda must return the zero's
     # type). Value-identical to r7's staged integer form at the $92T
     # test point (tests/test_scale_robustness.py).
-    _FOLD = ("(acc, x) -> CAST((CAST(acc AS DECIMAL(38,0)) * x)"
-             " div 1000000 AS BIGINT)")
+    ultimate = F.aggregate(
+        "fs", F.col("latest_cents"),
+        lambda acc, x: wide_quot(wide(acc) * x, F.lit(1000000)))
     return rem.select(
-        "om", "latest_cents",
-        F.expr(f"aggregate(fs, latest_cents, {_FOLD})")
-        .alias("ultimate_cents"),
-        F.expr(f"aggregate(fs, latest_cents, {_FOLD}) - latest_cents")
-        .alias("reserve_cents"))
+        "om", "latest_cents", ultimate.alias("ultimate_cents"),
+        (ultimate - F.col("latest_cents")).alias("reserve_cents"))
 
 
 @query("act_frequency_severity", oracle=f"""

@@ -31,8 +31,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..numerics import (
-    chi2_sf, chi2_sf_sql, erfc, erfc_sql, fixed_sum_sql, units_sum,
-    units_sum_sql)
+    chi2_sf, chi2_sf_sql, comoment, comoment_sql, erfc, erfc_sql,
+    fixed_sum_sql, units_sum, units_sum_sql, wide, wide_sql)
 from .registry import query
 from .relational import T
 
@@ -50,11 +50,11 @@ from .relational import T
     ),
     grp AS (
         SELECT g, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS sx,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(x AS HUGEINT) * y) AS sxy,
-               sum(CAST(y AS HUGEINT) * y) AS syy
+               {wide_sql('sum(x)')} AS sx,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('x')} * y) AS sxy,
+               sum({wide_sql('y')} * y) AS syy
         FROM rows_ GROUP BY g
     ),
     pooled AS (
@@ -63,37 +63,40 @@ from .relational import T
         SELECT CAST(count(*) AS BIGINT) AS k,
                CAST(sum(n) AS BIGINT) AS nt,
                {units_sum_sql(
-                   'CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE) / n')}
+                   f'CAST({comoment_sql("n", "sxx", "sx", "sx")}'
+                   ' AS DOUBLE) / n')}
                    * 1.0 AS wxx,
                {units_sum_sql(
-                   'CAST(CAST(n AS HUGEINT) * sxy - sx * sy AS DOUBLE) / n')}
+                   f'CAST({comoment_sql("n", "sxy", "sx", "sy")}'
+                   ' AS DOUBLE) / n')}
                    * 1.0 AS wxy,
                {units_sum_sql(
-                   'CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DOUBLE) / n')}
+                   f'CAST({comoment_sql("n", "syy", "sy", "sy")}'
+                   ' AS DOUBLE) / n')}
                    * 1.0 AS wyy
         FROM grp
     ),
     tot AS (
         SELECT CAST(sum(n) AS BIGINT) AS n,
-               CAST(sum(sx) AS HUGEINT) AS sx,
-               CAST(sum(sy) AS HUGEINT) AS sy,
-               CAST(sum(sxx) AS HUGEINT) AS sxx,
-               CAST(sum(sxy) AS HUGEINT) AS sxy,
-               CAST(sum(syy) AS HUGEINT) AS syy
+               {wide_sql('sum(sx)')} AS sx,
+               {wide_sql('sum(sy)')} AS sy,
+               {wide_sql('sum(sxx)')} AS sxx,
+               {wide_sql('sum(sxy)')} AS sxy,
+               {wide_sql('sum(syy)')} AS syy
         FROM grp
     ),
     ss AS (
         SELECT pooled.k, pooled.nt,
                pooled.wyy - pooled.wxy * pooled.wxy / pooled.wxx
                    AS sse_w,
-               (CAST(CAST(tot.n AS HUGEINT) * tot.syy - tot.sy * tot.sy
+               (CAST({comoment_sql('tot.n', 'tot.syy', 'tot.sy', 'tot.sy')}
                      AS DOUBLE) / tot.n)
-               - (CAST(CAST(tot.n AS HUGEINT) * tot.sxy
-                       - tot.sx * tot.sy AS DOUBLE) / tot.n)
-                 * (CAST(CAST(tot.n AS HUGEINT) * tot.sxy
-                         - tot.sx * tot.sy AS DOUBLE) / tot.n)
-                 / (CAST(CAST(tot.n AS HUGEINT) * tot.sxx
-                         - tot.sx * tot.sx AS DOUBLE) / tot.n)
+               - (CAST({comoment_sql('tot.n', 'tot.sxy', 'tot.sx', 'tot.sy')}
+                       AS DOUBLE) / tot.n)
+                 * (CAST({comoment_sql('tot.n', 'tot.sxy', 'tot.sx', 'tot.sy')}
+                         AS DOUBLE) / tot.n)
+                 / (CAST({comoment_sql('tot.n', 'tot.sxx', 'tot.sx', 'tot.sx')}
+                         AS DOUBLE) / tot.n)
                    AS sse_t
         FROM pooled, tot
     )
@@ -129,22 +132,18 @@ def stats_ancova(spark, sf_dir):
         F.round(F.col("l_quantity")).cast("bigint").alias("x"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint")
         .alias("y"))
-    d38 = "decimal(38,0)"
     grp = rows_.groupBy("g").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"))
-    nn = F.col("n").cast(d38)
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
+        F.sum(wide("x") * F.col("y")).alias("sxy"),
+        F.sum(wide("y") * F.col("y")).alias("syy"))
 
     def cw(q, sa, sb):
         # whole cents^2 units: a 1e2 scale overflows BIGINT on the
         # y-quadratic at corpus magnitudes; unit granularity on ~1e17
         # sums is 1e-17 relative -- far beyond the 4dp F round
-        return F.round((nn * F.col(q)
-                        - F.col(sa).cast(d38) * F.col(sb))
-                       .cast("double") / F.col("n")) \
+        return F.round(comoment("n", q, sa, sb).cast("double") / F.col("n")) \
             .cast("bigint")
 
     pooled = grp.agg(
@@ -156,13 +155,9 @@ def stats_ancova(spark, sf_dir):
                   F.sum("sx").alias("sx"), F.sum("sy").alias("sy"),
                   F.sum("sxx").alias("sxx"), F.sum("sxy").alias("sxy"),
                   F.sum("syy").alias("syy"))
-    tn = F.col("n").cast(d38)
-    cyy = (tn * F.col("syy") - F.col("sy").cast(d38) * F.col("sy")) \
-        .cast("double") / F.col("n")
-    cxy = (tn * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy")) \
-        .cast("double") / F.col("n")
-    cxx = (tn * F.col("sxx") - F.col("sx").cast(d38) * F.col("sx")) \
-        .cast("double") / F.col("n")
+    cyy = comoment("n", "syy", "sy", "sy").cast("double") / F.col("n")
+    cxy = comoment("n", "sxy", "sx", "sy").cast("double") / F.col("n")
+    cxx = comoment("n", "sxx", "sx", "sx").cast("double") / F.col("n")
     tt = tot.select((cyy - cxy * cxy / cxx).alias("sse_t"))
     ss = pooled.crossJoin(F.broadcast(tt))
     sse_w = F.col("wyy") - F.col("wxy") * F.col("wxy") / F.col("wxx")
@@ -190,14 +185,14 @@ def stats_ancova(spark, sf_dir):
         FROM day
     ),
     sq AS (
-        SELECT d, CAST(r AS HUGEINT) * r AS r2,
-               lag(CAST(r AS HUGEINT) * r) OVER (ORDER BY d) AS r2l
+        SELECT d, {wide_sql('r')} * r AS r2,
+               lag({wide_sql('r')} * r) OVER (ORDER BY d) AS r2l
         FROM lr WHERE r IS NOT NULL
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(r2) AS HUGEINT) AS sy,
-               CAST(sum(r2l) AS HUGEINT) AS sx,
+               {wide_sql('sum(r2)')} AS sy,
+               {wide_sql('sum(r2l)')} AS sx,
                sum(r2 * r2) AS syy,
                sum(r2l * r2l) AS sxx,
                sum(r2 * r2l) AS sxy
@@ -245,10 +240,9 @@ def ts_arch_lm(spark, sf_dir):
                       / F.lag("y").over(w)) * 1e6).cast("bigint")
         .alias("r"))
         .filter(F.col("r").isNotNull()))
-    d38 = "decimal(38,0)"
     sq = (lr.select(
         "d",
-        (F.col("r").cast(d38) * F.col("r")).alias("r2"))
+        (wide("r") * F.col("r")).alias("r2"))
         .select("d", "r2",
                 F.lag("r2").over(Window.orderBy("d")).alias("r2l"))
         .filter(F.col("r2l").isNotNull()))
@@ -258,15 +252,12 @@ def ts_arch_lm(spark, sf_dir):
         F.sum(F.col("r2") * F.col("r2")).alias("syy"),
         F.sum(F.col("r2l") * F.col("r2l")).alias("sxx"),
         F.sum(F.col("r2") * F.col("r2l")).alias("sxy"))
-    nn = F.col("n").cast(d38)
-    num = (nn * F.col("sxy") - F.col("sx") * F.col("sy")) \
-        .cast("double")
+    num = comoment("n", "sxy", "sx", "sy").cast("double")
     lm = st.select(
         "n",
         F.round(F.col("n") * (num * num)
-                / ((nn * F.col("sxx") - F.col("sx") * F.col("sx"))
-                   .cast("double")
-                   * (nn * F.col("syy") - F.col("sy") * F.col("sy"))
+                / (comoment("n", "sxx", "sx", "sx").cast("double")
+                   * comoment("n", "syy", "sy", "sy")
                    .cast("double")), 4).alias("lm_stat"))
     return lm.select(
         "n", "lm_stat",
@@ -276,7 +267,7 @@ def ts_arch_lm(spark, sf_dir):
 
 # ----------------------------------- Spearman-Brown split-half
 
-@query("stats_split_half_reliability", oracle="""
+@query("stats_split_half_reliability", oracle=f"""
     WITH per AS (
         SELECT user_id,
                CAST(sum(CASE WHEN event_type IN ('click', 'view')
@@ -287,11 +278,11 @@ def ts_arch_lm(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(h1) AS HUGEINT) AS s1,
-               CAST(sum(h2) AS HUGEINT) AS s2,
-               sum(CAST(h1 AS HUGEINT) * h1) AS q1,
-               sum(CAST(h2 AS HUGEINT) * h2) AS q2,
-               sum(CAST(h1 AS HUGEINT) * h2) AS q12
+               {wide_sql('sum(h1)')} AS s1,
+               {wide_sql('sum(h2)')} AS s2,
+               sum({wide_sql('h1')} * h1) AS q1,
+               sum({wide_sql('h2')} * h2) AS q2,
+               sum({wide_sql('h1')} * h2) AS q12
         FROM per
     ),
     rr AS (
@@ -331,20 +322,16 @@ def stats_split_half_reliability(spark, sf_dir):
                 F.sum(F.when(F.col("event_type")
                              .isin("purchase", "signup"), 1)
                       .otherwise(0)).alias("h2")))
-    d38 = "decimal(38,0)"
     st = per.agg(
         F.count("*").alias("n"),
         F.sum("h1").alias("s1"), F.sum("h2").alias("s2"),
-        F.sum(F.col("h1").cast(d38) * F.col("h1")).alias("q1"),
-        F.sum(F.col("h2").cast(d38) * F.col("h2")).alias("q2"),
-        F.sum(F.col("h1").cast(d38) * F.col("h2")).alias("q12"))
-    nn = F.col("n").cast(d38)
+        F.sum(wide("h1") * F.col("h1")).alias("q1"),
+        F.sum(wide("h2") * F.col("h2")).alias("q2"),
+        F.sum(wide("h1") * F.col("h2")).alias("q12"))
     r = F.round(
-        (nn * F.col("q12") - F.col("s1") * F.col("s2")).cast("double")
-        / (F.sqrt((nn * F.col("q1") - F.col("s1") * F.col("s1"))
-                  .cast("double"))
-           * F.sqrt((nn * F.col("q2") - F.col("s2") * F.col("s2"))
-                    .cast("double"))), 6)
+        comoment("n", "q12", "s1", "s2").cast("double")
+        / (F.sqrt(comoment("n", "q1", "s1", "s1").cast("double"))
+           * F.sqrt(comoment("n", "q2", "s2", "s2").cast("double"))), 6)
     rr = st.select("n", r.alias("r_half"))
     return rr.select(
         "n", "r_half",

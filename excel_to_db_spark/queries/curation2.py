@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..numerics import (
-    cents_sum_sql, h32, h32_sql, u01, u01_sql, units_sum, units_sum_sql)
+    cents_sum_sql, h32, h32_sql, u01, u01_sql, units_sum, units_sum_sql,
+    wide, wide_quot, wide_quot_sql, wide_sql)
 from ..operators import physical
 from .registry import query
 from .relational import T
@@ -282,7 +283,7 @@ def text_cdc_chunks(spark, sf_dir):
         FROM w GROUP BY b
     ),
     m AS (
-        SELECT b, CAST((CAST(swx AS HUGEINT) * 1000000) // sw AS BIGINT)
+        SELECT b, {wide_quot_sql(f'{wide_sql("swx")} * 1000000', 'sw')}
                       AS mean_q6
         FROM r
     ),
@@ -324,13 +325,11 @@ def stats_bootstrap_ci(spark, sf_dir):
          .groupBy("b")
          .agg(F.sum(F.col("w") * F.col("cents")).alias("swx"),
               F.sum("w").alias("sw")))
-    m = r.select(F.expr(
-        "CAST((CAST(swx AS DECIMAL(38,0)) * 1000000) DIV sw AS BIGINT)")
-        .alias("mean_q6"))
+    m = r.select(wide_quot(wide("swx") * 1000000, "sw").alias("mean_q6"))
     return (m.agg(F.sort_array(F.collect_list("mean_q6")).alias("ms"))
             .select(F.size("ms").cast("bigint").alias("n_resamples"),
-                    F.expr("CAST(aggregate(ms, CAST(0 AS DECIMAL(38,0)), "
-                           "(a, x) -> a + x) DIV 32 AS BIGINT)")
+                    wide_quot(F.aggregate("ms", wide(F.lit(0)),
+                                          lambda a, x: a + x), F.lit(32))
                     .alias("mean_of_means_q6"),
                     F.element_at("ms", 2).alias("ci_lo_q6"),
                     F.element_at("ms", 31).alias("ci_hi_q6")))

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators import physical
 from ..operators import text as X
-from ..numerics import h32, h32_sql, u01, u01_sql
+from ..numerics import h32, h32_sql, u01, u01_sql, wide, wide_sql
 from .registry import query
 from .relational import T
 
@@ -328,7 +328,7 @@ def graph_jaccard_neighbors(spark, sf_dir):
 
 # ------------------------------------ corpus drift via MMD (moment trick)
 
-@query("embedding_drift_mmd", oracle="""
+@query("embedding_drift_mmd", oracle=f"""
     WITH q AS MATERIALIZED (
         SELECT vec_id, CASE WHEN label < 5 THEN 0 ELSE 1 END AS grp,
                k.k AS k,
@@ -350,9 +350,9 @@ def graph_jaccard_neighbors(spark, sf_dir):
         FROM embeddings
     ),
     t AS (
-        SELECT sum(CAST(ga.gv AS HUGEINT) * ga.gv) AS tr_aa,
-               sum(CAST(gb.gv AS HUGEINT) * gb.gv) AS tr_bb,
-               sum(CAST(ga.gv AS HUGEINT) * gb.gv) AS tr_ab
+        SELECT sum({wide_sql('ga.gv')} * ga.gv) AS tr_aa,
+               sum({wide_sql('gb.gv')} * gb.gv) AS tr_bb,
+               sum({wide_sql('ga.gv')} * gb.gv) AS tr_ab
         FROM (SELECT i, j, gv FROM g WHERE grp = 0) ga
         JOIN (SELECT i, j, gv FROM g WHERE grp = 1) gb USING (i, j)
     )
@@ -399,12 +399,11 @@ def embedding_drift_mmd(spark, sf_dir):
         .alias("na"),
         F.sum(F.when(F.col("label") >= 5, 1).otherwise(0)).cast("bigint")
         .alias("nb"))
-    d38 = "decimal(38,0)"
     t = (ga.alias("ga")
          .join(gb.alias("gb"), ["i", "j"])
-         .agg(F.sum(F.col("ga.g").cast(d38) * F.col("ga.g")).alias("tr_aa"),
-              F.sum(F.col("gb.g").cast(d38) * F.col("gb.g")).alias("tr_bb"),
-              F.sum(F.col("ga.g").cast(d38) * F.col("gb.g")).alias("tr_ab")))
+         .agg(F.sum(wide("ga.g") * F.col("ga.g")).alias("tr_aa"),
+              F.sum(wide("gb.g") * F.col("gb.g")).alias("tr_bb"),
+              F.sum(wide("ga.g") * F.col("gb.g")).alias("tr_ab")))
     return (t.crossJoin(F.broadcast(n))
             .select("na", "nb",
                     F.round((F.col("tr_aa") * F.col("nb") * F.col("nb")

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import comoment, units_sum, units_sum_sql, wide, wide_sql
 
 
 # ------------------------------------------------ source novelty
@@ -197,14 +197,14 @@ def _ccf_oracle() -> str:
         f"{pair} AS x_{tag}" for tag, pair in lag_aggs)
     sums = ",\n               ".join(
         f"CAST(count(x_{tag}) AS BIGINT) AS n_{tag},\n               "
-        f"CAST(sum(CASE WHEN x_{tag} IS NOT NULL THEN y END)"
-        f" AS HUGEINT) AS sy_{tag},\n               "
-        f"CAST(sum(x_{tag}) AS HUGEINT) AS sx_{tag},\n               "
-        f"sum(CAST(x_{tag} AS HUGEINT) * y) AS sxy_{tag},\n"
-        f"               sum(CAST(x_{tag} AS HUGEINT) * x_{tag})"
+        f"{wide_sql(f'sum(CASE WHEN x_{tag} IS NOT NULL THEN y END)')}"
+        f" AS sy_{tag},\n               "
+        f"{wide_sql(f'sum(x_{tag})')} AS sx_{tag},\n               "
+        f"sum({wide_sql(f'x_{tag}')} * y) AS sxy_{tag},\n"
+        f"               sum({wide_sql(f'x_{tag}')} * x_{tag})"
         f" AS sxx_{tag},\n               "
         f"sum(CASE WHEN x_{tag} IS NOT NULL THEN"
-        f" CAST(y AS HUGEINT) * y END) AS syy_{tag}"
+        f" {wide_sql('y')} * y END) AS syy_{tag}"
         for tag, _ in lag_aggs)
     rows = "\n        UNION ALL\n".join(
         f"        SELECT CAST({lg} AS BIGINT) AS lag_days,"
@@ -277,7 +277,6 @@ def ts_cross_correlation(spark, sf_dir):
                    else F.lead("x", abs(lg)).over(w))
         cols.append(shifted.alias(f"x_{tag}"))
     lagged = day.select("d", "x", "y", *cols)
-    d38 = "decimal(38,0)"
     aggs = []
     for _, tag in tags:
         xc = F.col(f"x_{tag}")
@@ -285,24 +284,19 @@ def ts_cross_correlation(spark, sf_dir):
             F.count(xc).alias(f"n_{tag}"),
             F.sum(F.when(xc.isNotNull(), F.col("y"))).alias(f"sy_{tag}"),
             F.sum(xc).alias(f"sx_{tag}"),
-            F.sum(xc.cast(d38) * F.col("y")).alias(f"sxy_{tag}"),
-            F.sum(xc.cast(d38) * xc).alias(f"sxx_{tag}"),
+            F.sum(wide(xc) * F.col("y")).alias(f"sxy_{tag}"),
+            F.sum(wide(xc) * xc).alias(f"sxx_{tag}"),
             F.sum(F.when(xc.isNotNull(),
-                         F.col("y").cast(d38) * F.col("y")))
+                         wide("y") * F.col("y")))
             .alias(f"syy_{tag}")]
     st = lagged.agg(*aggs)
     rows = None
     for lg, tag in tags:
-        n = F.col(f"n_{tag}").cast(d38)
-        num = (n * F.col(f"sxy_{tag}")
-               - F.col(f"sx_{tag}").cast(d38) * F.col(f"sy_{tag}")) \
+        n = f"n_{tag}"
+        num = comoment(n, f"sxy_{tag}", f"sx_{tag}", f"sy_{tag}") \
             .cast("double")
-        dx = (n * F.col(f"sxx_{tag}")
-              - F.col(f"sx_{tag}").cast(d38) * F.col(f"sx_{tag}")) \
-            .cast("double")
-        dy = (n * F.col(f"syy_{tag}")
-              - F.col(f"sy_{tag}").cast(d38) * F.col(f"sy_{tag}")) \
-            .cast("double")
+        dx = comoment(n, f"sxx_{tag}", f"sx_{tag}", f"sx_{tag}").cast("double")
+        dy = comoment(n, f"syy_{tag}", f"sy_{tag}", f"sy_{tag}").cast("double")
         r = st.select(
             F.lit(lg).cast("bigint").alias("lag_days"),
             F.col(f"n_{tag}").alias("n"),

@@ -28,8 +28,9 @@ from pyspark.sql import functions as F
 
 from ..operators import physical
 from ..numerics import (
-    cents_sum, cents_sum_sql, erfc, erfc_sql, h32, h32_sql, u01, u01_sql,
-    units_sum_sql)
+    cents_sum, cents_sum_sql, comoment, comoment_sql, erfc, erfc_sql, h32,
+    h32_sql, u01, u01_sql, units_sum_sql, wide, wide_quot, wide_quot_sql,
+    wide_sql)
 from .registry import REGISTRY, query
 from .relational import T
 
@@ -680,12 +681,10 @@ _PERM_B = 99
         SELECT CAST(count(*) AS BIGINT) AS n_exceed
         FROM perm, obs o
         WHERE perm.na = 0 OR perm.nb = 0
-           OR abs(CAST(perm.sa AS DECIMAL(38,0)) * perm.nb
-                  - CAST(perm.sb AS DECIMAL(38,0)) * perm.na)
-              * (CAST(o.na AS DECIMAL(38,0)) * o.nb)
-              >= abs(CAST(o.sa AS DECIMAL(38,0)) * o.nb
-                     - CAST(o.sb AS DECIMAL(38,0)) * o.na)
-                 * (CAST(perm.na AS DECIMAL(38,0)) * perm.nb)
+           OR abs({comoment_sql('perm.sa', 'perm.nb', 'perm.sb', 'perm.na')})
+              * ({wide_sql('o.na')} * o.nb)
+              >= abs({comoment_sql('o.sa', 'o.nb', 'o.sb', 'o.na')})
+                 * ({wide_sql('perm.na')} * perm.nb)
     )
     SELECT o.na AS n_a, o.nb AS n_b,
            round((CAST(o.sa AS DOUBLE) / o.na
@@ -745,17 +744,14 @@ def stats_permutation_test(spark, sf_dir):
              F.sum(F.when(F.col("lab") == 1, F.col("v")).otherwise(0))
              .alias("sb")))
 
-    d38 = "decimal(38,0)"
     po = perm.crossJoin(F.broadcast(
         obs.select(F.col("na").alias("ona"), F.col("nb").alias("onb"),
                    F.col("sa").alias("osa"), F.col("sb").alias("osb"))))
     exceed = ((F.col("na") == 0) | (F.col("nb") == 0)
-              | (F.abs(F.col("sa").cast(d38) * F.col("nb")
-                       - F.col("sb").cast(d38) * F.col("na"))
-                 * (F.col("ona").cast(d38) * F.col("onb"))
-                 >= F.abs(F.col("osa").cast(d38) * F.col("onb")
-                          - F.col("osb").cast(d38) * F.col("ona"))
-                 * (F.col("na").cast(d38) * F.col("nb"))))
+              | (F.abs(comoment("sa", "nb", "sb", "na"))
+                 * (wide("ona") * F.col("onb"))
+                 >= F.abs(comoment("osa", "onb", "osb", "ona"))
+                 * (wide("na") * F.col("nb"))))
     cmp = po.agg(
         F.sum(F.when(exceed, 1).otherwise(0)).alias("n_exceed"))
 
@@ -877,7 +873,7 @@ _NEYMAN_N = 1000
     m AS (
         SELECT stratum, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(v) AS BIGINT) AS s,
-               sum(CAST(v AS HUGEINT) * v) AS ss
+               sum({wide_sql('v')} * v) AS ss
         FROM v GROUP BY stratum
     ),
     w AS (
@@ -939,7 +935,7 @@ def sample_neyman_allocation(spark, sf_dir):
                  .alias("v")))
     m = (v.groupBy("stratum")
          .agg(F.count("*").alias("n"), F.sum("v").alias("s"),
-              F.sum(F.col("v").cast("decimal(38,0)") * F.col("v"))
+              F.sum(wide("v") * F.col("v"))
               .alias("ss")))
     sh = F.sqrt((F.col("n").cast("double") * F.col("ss").cast("double")
                  - F.col("s").cast("double") * F.col("s").cast("double"))
@@ -1226,7 +1222,7 @@ def stream_drift_psi(spark, sf_dir):
 
 # --------------------------------------------------- Zipf law fit
 
-@query("text_zipf_fit", oracle="""
+@query("text_zipf_fit", oracle=f"""
     WITH tok AS (
         SELECT unnest(string_split(text, ' ')) AS tok FROM documents
     ),
@@ -1249,16 +1245,19 @@ def stream_drift_psi(spark, sf_dir):
     m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(x AS HUGEINT) * y) AS sxy,
-               sum(CAST(y AS HUGEINT) * y) AS syy
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('x')} * y) AS sxy,
+               sum({wide_sql('y')} * y) AS syy
         FROM pts
     ),
     fit AS (
         SELECT n,
-               CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE) AS cov_n,
-               CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS varx_n,
-               CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE) AS vary_n
+               CAST({comoment_sql('n', 'sxy', 'sx', 'sy')} AS DOUBLE)
+                   AS cov_n,
+               CAST({comoment_sql('n', 'sxx', 'sx', 'sx')} AS DOUBLE)
+                   AS varx_n,
+               CAST({comoment_sql('n', 'syy', 'sy', 'sy')} AS DOUBLE)
+                   AS vary_n
         FROM m
     ),
     best AS (SELECT tok AS top_token, f AS top_freq FROM top WHERE rk = 1)
@@ -1298,23 +1297,19 @@ def text_zipf_fit(spark, sf_dir):
         "rk", "tok", "f",
         F.round(F.log(F.col("rk")) * 1000000).cast("bigint").alias("x"),
         F.round(F.log(F.col("f")) * 1000000).cast("bigint").alias("y"))
-    d38 = "decimal(38,0)"
     m = pts.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"))
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
+        F.sum(wide("x") * F.col("y")).alias("sxy"),
+        F.sum(wide("y") * F.col("y")).alias("syy"))
     fit = m.select(
         "n",
-        (F.col("n") * F.col("sxy")
-         - F.col("sx").cast(d38) * F.col("sy")).cast("double")
+        comoment("n", "sxy", "sx", "sy").cast("double")
         .alias("cov_n"),
-        (F.col("n") * F.col("sxx")
-         - F.col("sx").cast(d38) * F.col("sx")).cast("double")
+        comoment("n", "sxx", "sx", "sx").cast("double")
         .alias("varx_n"),
-        (F.col("n") * F.col("syy")
-         - F.col("sy").cast(d38) * F.col("sy")).cast("double")
+        comoment("n", "syy", "sy", "sy").cast("double")
         .alias("vary_n"))
     best = (top.filter(F.col("rk") == 1)
             .select(F.col("tok").alias("top_token"),
@@ -1654,7 +1649,7 @@ def ts_cusum_detection(spark, sf_dir):
 
 # ------------------------------------------------ IPW treatment effect
 
-@query("stats_ipw_ate", oracle="""
+@query("stats_ipw_ate", oracle=f"""
     WITH j AS (
         SELECT c_nationkey AS stratum,
                CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
@@ -1679,11 +1674,11 @@ def ts_cusum_detection(spark, sf_dir):
         SELECT CAST(sum(CASE WHEN treat = 1 THEN w_micro END) AS BIGINT)
                    AS wt1,
                sum(CASE WHEN treat = 1
-                        THEN CAST(v AS HUGEINT) * w_micro END) AS s1,
+                        THEN {wide_sql('v')} * w_micro END) AS s1,
                CAST(sum(CASE WHEN treat = 0 THEN w_micro END) AS BIGINT)
                    AS wt0,
                sum(CASE WHEN treat = 0
-                        THEN CAST(v AS HUGEINT) * w_micro END) AS s0,
+                        THEN {wide_sql('v')} * w_micro END) AS s0,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(treat) AS BIGINT) AS n_treat
         FROM wtd
@@ -1736,17 +1731,16 @@ def stats_ipw_ate(spark, sf_dir):
            .withColumn("w_micro", F.expr(
                "CASE WHEN treat = 1 THEN (n_s * 1000000) DIV n_t "
                "ELSE (n_s * 1000000) DIV (n_s - n_t) END")))
-    d38 = "decimal(38,0)"
     agg = wtd.agg(
         F.sum(F.when(F.col("treat") == 1, F.col("w_micro"))).cast("bigint")
         .alias("wt1"),
         F.sum(F.when(F.col("treat") == 1,
-                     F.col("v").cast(d38) * F.col("w_micro")))
+                     wide("v") * F.col("w_micro")))
         .alias("s1"),
         F.sum(F.when(F.col("treat") == 0, F.col("w_micro"))).cast("bigint")
         .alias("wt0"),
         F.sum(F.when(F.col("treat") == 0,
-                     F.col("v").cast(d38) * F.col("w_micro")))
+                     wide("v") * F.col("w_micro")))
         .alias("s0"),
         F.count("*").alias("n"), F.sum("treat").alias("n_treat"))
     m1 = F.round(F.col("s1").cast("double") / F.col("wt1").cast("double")
@@ -1761,7 +1755,7 @@ def stats_ipw_ate(spark, sf_dir):
 
 # ------------------------------------- doubly-robust (AIPW) estimator
 
-@query("stats_aipw_ate", oracle="""
+@query("stats_aipw_ate", oracle=f"""
     WITH j AS (
         SELECT c_nationkey AS stratum,
                CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END
@@ -1791,10 +1785,10 @@ def stats_ipw_ate(spark, sf_dir):
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(m1 - m0) AS BIGINT) AS reg_sum,
                sum(CASE WHEN treat = 1
-                        THEN CAST(v - m1 AS HUGEINT) * w1 ELSE 0 END)
+                        THEN {wide_sql('v - m1')} * w1 ELSE 0 END)
                    AS aug1,
                sum(CASE WHEN treat = 0
-                        THEN CAST(v - m0 AS HUGEINT) * w0 ELSE 0 END)
+                        THEN {wide_sql('v - m0')} * w0 ELSE 0 END)
                    AS aug0
         FROM scored
     )
@@ -1851,15 +1845,14 @@ def stats_aipw_ate(spark, sf_dir):
                       F.expr("(n_s * 1000000) DIV n_t").alias("w1"),
                       F.expr("(n_s * 1000000) DIV (n_s - n_t)")
                       .alias("w0")))
-    d38 = "decimal(38,0)"
     terms = scored.agg(
         F.count("*").alias("n"),
         F.sum(F.col("m1") - F.col("m0")).alias("reg_sum"),
         F.sum(F.when(F.col("treat") == 1,
-                     (F.col("v") - F.col("m1")).cast(d38) * F.col("w1"))
+                     wide(F.col("v") - F.col("m1")) * F.col("w1"))
               .otherwise(0)).alias("aug1"),
         F.sum(F.when(F.col("treat") == 0,
-                     (F.col("v") - F.col("m0")).cast(d38) * F.col("w0"))
+                     wide(F.col("v") - F.col("m0")) * F.col("w0"))
               .otherwise(0)).alias("aug0"))
     return terms.select(
         "n",
@@ -1873,7 +1866,7 @@ def stats_aipw_ate(spark, sf_dir):
 
 # ------------------------------------- delta-method ratio-metric SE
 
-@query("stats_delta_method_ratio", oracle="""
+@query("stats_delta_method_ratio", oracle=f"""
     WITH j AS (
         SELECT CASE WHEN c_mktsegment = 'BUILDING' THEN 'treat'
                     ELSE 'control' END AS arm,
@@ -1890,9 +1883,9 @@ def stats_aipw_ate(spark, sf_dir):
         SELECT arm, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS sx,
                CAST(sum(y) AS BIGINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(y AS HUGEINT) * y) AS syy,
-               sum(CAST(x AS HUGEINT) * y) AS sxy
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('y')} * y) AS syy,
+               sum({wide_sql('x')} * y) AS sxy
         FROM u GROUP BY arm
     )
     SELECT arm, n, sy AS n_orders,
@@ -1939,13 +1932,12 @@ def stats_delta_method_ratio(spark, sf_dir):
                  .alias("x")))
     u = (j.groupBy("arm", "unit")
          .agg(F.count("*").alias("y"), F.sum("x").alias("x")))
-    d38 = "decimal(38,0)"
     m = (u.groupBy("arm")
          .agg(F.count("*").alias("n"), F.sum("x").alias("sx"),
               F.sum("y").alias("sy"),
-              F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-              F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"),
-              F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy")))
+              F.sum(wide("x") * F.col("x")).alias("sxx"),
+              F.sum(wide("y") * F.col("y")).alias("syy"),
+              F.sum(wide("x") * F.col("y")).alias("sxy")))
     dx = F.col("sx").cast("double")
     dy = F.col("sy").cast("double")
     dn = F.col("n").cast("double")
@@ -1965,6 +1957,7 @@ def stats_delta_method_ratio(spark, sf_dir):
 # ------------------------------------------ seasonality period scan
 
 _SEASON_PERIODS = (5, 6, 7, 8, 9)
+_SQ_OVER_N = wide_quot_sql(f"{wide_sql('s')} * s", "n")   # (sum^2) div n
 
 
 @query("ts_seasonality_strength", oracle=f"""
@@ -1977,7 +1970,7 @@ _SEASON_PERIODS = (5, 6, 7, 8, 9)
     tot AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(c) AS BIGINT) AS s,
-               CAST(sum(CAST(c AS HUGEINT) * c) AS BIGINT) AS ss
+               CAST(sum({wide_sql('c')} * c) AS BIGINT) AS ss
         FROM daily
     ),
     folds AS (
@@ -1989,20 +1982,17 @@ _SEASON_PERIODS = (5, 6, 7, 8, 9)
         GROUP BY 1, 2
     ),
     between_ AS (
-        SELECT p, CAST(sum(CAST(CAST(s_ph AS HUGEINT) * s_ph // n_ph
-                                AS BIGINT)) AS BIGINT) AS b_int
+        SELECT p,
+               CAST(sum({wide_quot_sql(f'{wide_sql("s_ph")} * s_ph', 'n_ph')})
+                    AS BIGINT) AS b_int
         FROM folds GROUP BY p
     )
     SELECT CAST(p AS INTEGER) AS period,
-           round((b_int - CAST(CAST(s AS HUGEINT) * s // n AS BIGINT))
-                 * 1.0
-                 / (ss - CAST(CAST(s AS HUGEINT) * s // n AS BIGINT)),
-                 6) AS strength,
+           round((b_int - {_SQ_OVER_N}) * 1.0 / (ss - {_SQ_OVER_N}), 6)
+               AS strength,
            CAST(row_number() OVER (
-               ORDER BY round((b_int - CAST(CAST(s AS HUGEINT) * s // n
-                                            AS BIGINT)) * 1.0
-                              / (ss - CAST(CAST(s AS HUGEINT) * s // n
-                                           AS BIGINT)), 6) DESC, p)
+               ORDER BY round((b_int - {_SQ_OVER_N}) * 1.0
+                              / (ss - {_SQ_OVER_N}), 6) DESC, p)
                 AS BIGINT) = 1 AS is_dominant
     FROM between_, tot
 """)
@@ -2030,21 +2020,19 @@ def ts_seasonality_strength(spark, sf_dir):
     daily = (o.groupBy("day").agg(F.count("*").alias("c"))
              .withColumn("di", F.datediff(
                  F.col("day"), F.lit("1992-01-01").cast("date"))))
-    d38 = "decimal(38,0)"
     tot = daily.agg(
         F.count("*").alias("n"), F.sum("c").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).cast("bigint")
+        F.sum(wide("c") * F.col("c")).cast("bigint")
         .alias("ss"))
     periods = F.array(*[F.lit(p) for p in _SEASON_PERIODS])
     folds = (daily.withColumn("p", F.explode(periods))
              .groupBy("p", (F.col("di") % F.col("p")).alias("phase"))
              .agg(F.count("*").alias("n_ph"), F.sum("c").alias("s_ph")))
     between = (folds.select(
-        "p", F.expr(f"CAST((CAST(s_ph AS {d38}) * s_ph) DIV n_ph "
-                    "AS BIGINT)").alias("t"))
+        "p", wide_quot(wide("s_ph") * F.col("s_ph"), "n_ph").alias("t"))
         .groupBy("p").agg(F.sum("t").alias("b_int")))
     g = between.crossJoin(F.broadcast(tot)).withColumn(
-        "grand", F.expr(f"CAST((CAST(s AS {d38}) * s) DIV n AS BIGINT)"))
+        "grand", wide_quot(wide("s") * F.col("s"), "n"))
     strength = F.round(
         (F.col("b_int") - F.col("grand")) * 1.0
         / (F.col("ss") - F.col("grand")), 6)

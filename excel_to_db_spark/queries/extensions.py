@@ -25,7 +25,7 @@ from ..operators import physical
 from ..operators import similarity as S
 from ..operators import text as X
 from ..streaming import run_tumbling_stream, session_agg, tumbling_agg
-from ..numerics import cents_sum, cents_sum_sql, h32_sql
+from ..numerics import cents_sum, cents_sum_sql, h32_sql, wide_sql
 from .registry import REGISTRY, query, scratch_dir
 from .relational import T
 
@@ -1357,7 +1357,7 @@ def stream_scd2_enrich(spark, sf_dir):
 _PCA_SQ_STEPS = "\n".join(f"""
     p{k} AS MATERIALIZED (
         SELECT a.i AS i, b.j AS j,
-               CAST(sum(CAST(a.v AS HUGEINT) * b.v) AS HUGEINT) AS p
+               {wide_sql(f'sum({wide_sql("a.v")} * b.v)')} AS p
         FROM m{k - 1} a JOIN m{k - 1} b ON a.j = b.i GROUP BY 1, 2
     ),
     n{k} AS (SELECT max(abs(p)) AS m FROM p{k}),
@@ -1382,12 +1382,12 @@ _PCA_SQ_STEPS = "\n".join(f"""
         FROM q a JOIN q b USING (vec_id)
         GROUP BY 1, 2
     ),
-    n0 AS (SELECT max(abs(CAST(gv AS HUGEINT))) AS m FROM g),
+    n0 AS (SELECT max(abs({wide_sql('gv')})) AS m FROM g),
     m0 AS MATERIALIZED (
         SELECT i, j,
                CAST(CASE WHEN gv < 0
-                         THEN -((-CAST(gv AS HUGEINT) * 1000000) // m)
-                         ELSE (CAST(gv AS HUGEINT) * 1000000) // m
+                         THEN -((-{wide_sql('gv')} * 1000000) // m)
+                         ELSE ({wide_sql('gv')} * 1000000) // m
                     END AS BIGINT) AS v
         FROM g, n0
     ),{_PCA_SQ_STEPS}
@@ -1398,10 +1398,10 @@ _PCA_SQ_STEPS = "\n".join(f"""
     sgn AS (SELECT CASE WHEN (SELECT v FROM vcol
                               ORDER BY abs(v) DESC, d LIMIT 1) < 0
                         THEN -1.0 ELSE 1.0 END AS s),
-    nrm AS (SELECT sum(CAST(v AS HUGEINT) * v) AS n2 FROM vcol),
-    num AS (SELECT sum(CAST(g.gv AS HUGEINT) * a.v * b.v) AS nm
+    nrm AS (SELECT sum({wide_sql('v')} * v) AS n2 FROM vcol),
+    num AS (SELECT sum({wide_sql('g.gv')} * a.v * b.v) AS nm
             FROM g JOIN vcol a ON g.i = a.d JOIN vcol b ON g.j = b.d),
-    tr AS (SELECT sum(CAST(gv AS HUGEINT)) AS t FROM g WHERE i = j)
+    tr AS (SELECT sum({wide_sql('gv')}) AS t FROM g WHERE i = j)
     SELECT vcol.d AS dim,
            round(sgn.s * vcol.v / sqrt(CAST(nrm.n2 AS DOUBLE)), 6)
                AS loading,

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
 _HOUR_SQL = f"""
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hr,
@@ -80,13 +81,12 @@ _PI = "3.141592653589793"
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(m) AS BIGINT) AS s,
-               sum(CAST(m AS HUGEINT) * m) AS q
+               sum({wide_sql('m')} * m) AS q
         FROM bmax
     ),
     fit AS (
         SELECT n,
-               (sqrt(CAST(CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT)
-                          * s AS DOUBLE)) / n)
+               (sqrt(CAST({comoment_sql('n', 'q', 's', 's')} AS DOUBLE)) / n)
                    * (sqrt(6.0) / {_PI}) AS beta,
                CAST(s AS DOUBLE) / n AS mean_m
         FROM st
@@ -120,13 +120,11 @@ def stats_gumbel_maxima(spark, sf_dir):
     bmax = (_hourly(spark, sf_dir)
             .groupBy(F.date_trunc("day", F.col("hr")).alias("blk"))
             .agg(F.max("x").alias("m")))
-    d38 = "decimal(38,0)"
     st = bmax.agg(F.count("*").alias("n"), F.sum("m").alias("s"),
-                  F.sum(F.col("m").cast(d38) * F.col("m")).alias("q"))
+                  F.sum(wide("m") * F.col("m")).alias("q"))
     euler = float(_EULER)
     pi = float(_PI)
-    beta = (F.sqrt((F.col("n").cast(d38) * F.col("q")
-                    - F.col("s").cast(d38) * F.col("s")).cast("double"))
+    beta = (F.sqrt(comoment("n", "q", "s", "s").cast("double"))
             / F.col("n")) * (F.sqrt(F.lit(6.0)) / F.lit(pi))
     mean_m = F.col("s").cast("double") / F.col("n")
     fit = st.select(F.col("n").alias("n_blocks"),
@@ -164,7 +162,7 @@ def _rs_oracle(b: int) -> str:
                     SELECT rn, x, rn // {b} AS blk,
                            CAST(sum(x) OVER (PARTITION BY rn // {b})
                                 AS BIGINT) AS sb,
-                           sum(CAST(x AS HUGEINT) * x)
+                           sum({wide_sql('x')} * x)
                                OVER (PARTITION BY rn // {b}) AS qb,
                            CAST(count(*) OVER (PARTITION BY rn // {b})
                                 AS BIGINT) AS cb
@@ -216,7 +214,6 @@ def ts_hurst_exponent(spark, sf_dir):
     ser = hour.select(
         "x", (F.row_number().over(Window.orderBy("hr")).cast("bigint")
               - 1).alias("rn"))
-    d38 = "decimal(38,0)"
 
     def rs(b: int):
         wb = Window.partitionBy("blk")
@@ -225,7 +222,7 @@ def ts_hurst_exponent(spark, sf_dir):
         blk = blk.select(
             "rn", "x", "blk",
             F.sum("x").over(wb).alias("sb"),
-            F.sum(F.col("x").cast(d38) * F.col("x")).over(wb)
+            F.sum(wide("x") * F.col("x")).over(wb)
             .alias("qb"),
             F.count("*").over(wb).alias("cb")).filter(F.col("cb") == b)
         z = blk.select(
@@ -237,9 +234,8 @@ def ts_hurst_exponent(spark, sf_dir):
             .alias("zb"))
         per = (z.groupBy("blk", "sb", "qb")
                .agg(F.round((F.max("zb") - F.min("zb")).cast("double")
-                            / F.sqrt((b * F.col("qb")
-                                      - F.col("sb").cast(d38)
-                                      * F.col("sb")).cast("double"))
+                            / F.sqrt(comoment(F.lit(b), "qb", "sb", "sb")
+                                     .cast("double"))
                             * 1e6).cast("bigint").alias("rs_u")))
         return per.agg(F.count("*").alias("n_blocks"),
                        F.sum("rs_u").alias("rs_sum"))
@@ -266,7 +262,7 @@ def ts_hurst_exponent(spark, sf_dir):
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS s,
-               sum(CAST(x AS HUGEINT) * x) AS q
+               sum({wide_sql('x')} * x) AS q
         FROM day
     ),
     dev AS (
@@ -276,8 +272,7 @@ def ts_hurst_exponent(spark, sf_dir):
     )
     SELECT n, day AS extreme_day,
            round(CAST(adev AS DOUBLE) / n
-                 / sqrt(CAST(CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT)
-                             * s AS DOUBLE)
+                 / sqrt(CAST({comoment_sql('n', 'q', 's', 's')} AS DOUBLE)
                         / (CAST(n AS DOUBLE) * (n - 1))), 4) AS g_stat
     FROM dev
 """)
@@ -295,9 +290,8 @@ def stats_grubbs_outlier(spark, sf_dir):
     expression. At a 100 TB corpus the day spine is still calendar-
     bounded; nothing here grows with row count."""
     day = _daily(spark, sf_dir)
-    d38 = "decimal(38,0)"
     st = day.agg(F.count("*").alias("n"), F.sum("x").alias("s"),
-                 F.sum(F.col("x").cast(d38) * F.col("x")).alias("q"))
+                 F.sum(wide("x") * F.col("x")).alias("q"))
     dev = (day.crossJoin(F.broadcast(st))
            .select("day", "n", "s", "q",
                    F.abs(F.col("n") * F.col("x") - F.col("s"))
@@ -305,8 +299,7 @@ def stats_grubbs_outlier(spark, sf_dir):
            .orderBy(F.col("adev").desc(), F.col("day").asc())
            .limit(1))
     g = (F.col("adev").cast("double") / F.col("n")
-         / F.sqrt((F.col("n").cast(d38) * F.col("q")
-                   - F.col("s").cast(d38) * F.col("s")).cast("double")
+         / F.sqrt(comoment("n", "q", "s", "s").cast("double")
                   / (F.col("n").cast("double") * (F.col("n") - 1))))
     return dev.select("n", F.col("day").alias("extreme_day"),
                       F.round(g, 4).alias("g_stat"))
@@ -339,12 +332,11 @@ def stats_grubbs_outlier(spark, sf_dir):
         SELECT CAST(count(*) AS BIGINT) AS n FROM ser
     ),
     sd AS (
-        SELECT sqrt(CAST(CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT)
-                         * s AS DOUBLE))
+        SELECT sqrt(CAST({comoment_sql('n', 'q', 's', 's')} AS DOUBLE))
                / CAST(n AS DOUBLE) AS sigma
         FROM (SELECT CAST(count(*) AS BIGINT) AS n,
                      CAST(sum(x) AS BIGINT) AS s,
-                     sum(CAST(x AS HUGEINT) * x) AS q FROM hour)
+                     sum({wide_sql('x')} * x) AS q FROM hour)
     ),
     best AS (
         SELECT hr, ph_t FROM ph
@@ -390,12 +382,10 @@ def ts_page_hinkley(spark, sf_dir):
         "hr", "mt",
         (F.col("mt") - F.min("mt").over(w)).alias("ph_t"))
     st = ser.agg(F.count("*").alias("n"))
-    d38 = "decimal(38,0)"
     sd = hour.agg(
         F.count("*").alias("nn"), F.sum("x").alias("s"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("q")).select(
-        (F.sqrt((F.col("nn").cast(d38) * F.col("q")
-                 - F.col("s").cast(d38) * F.col("s")).cast("double"))
+        F.sum(wide("x") * F.col("x")).alias("q")).select(
+        (F.sqrt(comoment("nn", "q", "s", "s").cast("double"))
          / F.col("nn").cast("double")).alias("sigma"))
     best = ph.orderBy(F.col("ph_t").desc(), F.col("hr").asc()).limit(1)
     return (best.crossJoin(F.broadcast(st))

@@ -31,7 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, erfc, erfc_sql, units_sum, units_sum_sql, wide,
+    wide_sql)
 from .registry import query
 from .relational import T
 
@@ -155,15 +157,14 @@ def stats_e_process(spark, sf_dir):
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(r) AS BIGINT) AS s,
-               sum(CAST(r AS HUGEINT) * r) AS q,
-               sum(CASE WHEN r < 0 THEN CAST(r AS HUGEINT) * r
+               sum({wide_sql('r')} * r) AS q,
+               sum(CASE WHEN r < 0 THEN {wide_sql('r')} * r
                    ELSE 0 END) AS qd
         FROM cum
     )
     SELECT n,
            round((CAST(s AS DOUBLE) / n)
-                 / sqrt(CAST(CAST(n AS HUGEINT) * q - CAST(s AS
-                             HUGEINT) * s AS DOUBLE))
+                 / sqrt(CAST({comoment_sql('n', 'q', 's', 's')} AS DOUBLE))
                  * CAST(n AS DOUBLE), 6) AS sharpe_daily,
            round((CAST(s AS DOUBLE) / n)
                  / sqrt(CAST(qd AS DOUBLE) / n) / 1e6 * 1e6, 6)
@@ -206,22 +207,19 @@ def ts_risk_adjusted_returns(spark, sf_dir):
     cum = lr.select("d", "r", F.sum("r").over(wrun).alias("c"))
     dd = (cum.select((F.max("c").over(wrun) - F.col("c")).alias("ddv"))
           .agg(F.max("ddv").alias("maxdd_u")))
-    d38 = "decimal(38,0)"
     st = cum.agg(
         F.count("*").alias("n"),
         F.sum("r").alias("s"),
-        F.sum(F.col("r").cast(d38) * F.col("r")).alias("q"),
+        F.sum(wide("r") * F.col("r")).alias("q"),
         F.sum(F.when(F.col("r") < 0,
-                     F.col("r").cast(d38) * F.col("r"))
-              .otherwise(F.lit(0).cast(d38))).alias("qd"))
-    nn = F.col("n").cast(d38)
+                     wide("r") * F.col("r"))
+              .otherwise(wide(F.lit(0)))).alias("qd"))
     mean = F.col("s").cast("double") / F.col("n")
     return (st.crossJoin(F.broadcast(dd))
             .select(
                 "n",
                 F.round(mean / F.sqrt(
-                    (nn * F.col("q") - F.col("s").cast(d38)
-                     * F.col("s")).cast("double"))
+                    comoment("n", "q", "s", "s").cast("double"))
                     * F.col("n").cast("double"), 6)
                 .alias("sharpe_daily"),
                 F.round(mean / F.sqrt(F.col("qd").cast("double")
@@ -341,7 +339,7 @@ def _yuen_side_sql(grp: str) -> str:
     return f"""
         SELECT CAST(max(n) AS BIGINT) AS n,
                CAST(max(n) - 2 * (max(n) // 10) AS BIGINT) AS h,
-               CAST(sum(c * greatest(keep, 0)) AS HUGEINT) AS tsum,
+               {wide_sql('sum(c * greatest(keep, 0))')} AS tsum,
                CAST(max(CASE WHEN cm - cnt < (n // 10) + 1
                              AND cm >= (n // 10) + 1 THEN c END)
                     AS BIGINT) AS lo_c,
@@ -375,15 +373,13 @@ def _yuen_side_sql(grp: str) -> str:
         SELECT a.n, a.h,
                round((CAST(a.tsum AS DOUBLE) / a.h) / 100.0, 6)
                    AS tmean,
-               (SELECT sum(CAST(least(greatest(c, a.lo_c), a.hi_c)
-                                AS HUGEINT)
+               (SELECT sum({wide_sql('least(greatest(c, a.lo_c), a.hi_c)')}
                            * cnt) FROM (
                     SELECT CAST(round(value * 100) AS BIGINT) AS c,
                            CAST(count(*) AS BIGINT) AS cnt
                     FROM events WHERE event_type = 'click' GROUP BY 1))
                    AS wsum,
-               (SELECT sum(CAST(least(greatest(c, a.lo_c), a.hi_c)
-                                AS HUGEINT)
+               (SELECT sum({wide_sql('least(greatest(c, a.lo_c), a.hi_c)')}
                            * least(greatest(c, a.lo_c), a.hi_c) * cnt)
                 FROM (
                     SELECT CAST(round(value * 100) AS BIGINT) AS c,
@@ -396,15 +392,13 @@ def _yuen_side_sql(grp: str) -> str:
         SELECT b.n, b.h,
                round((CAST(b.tsum AS DOUBLE) / b.h) / 100.0, 6)
                    AS tmean,
-               (SELECT sum(CAST(least(greatest(c, b.lo_c), b.hi_c)
-                                AS HUGEINT)
+               (SELECT sum({wide_sql('least(greatest(c, b.lo_c), b.hi_c)')}
                            * cnt) FROM (
                     SELECT CAST(round(value * 100) AS BIGINT) AS c,
                            CAST(count(*) AS BIGINT) AS cnt
                     FROM events WHERE event_type = 'view' GROUP BY 1))
                    AS wsum,
-               (SELECT sum(CAST(least(greatest(c, b.lo_c), b.hi_c)
-                                AS HUGEINT)
+               (SELECT sum({wide_sql('least(greatest(c, b.lo_c), b.hi_c)')}
                            * least(greatest(c, b.lo_c), b.hi_c) * cnt)
                 FROM (
                     SELECT CAST(round(value * 100) AS BIGINT) AS c,
@@ -449,7 +443,6 @@ def stats_yuen_t(spark, sf_dir):
 
     Scale shape: per-group value histograms + ordered prefix passes +
     1-row reduces — no global row sort, no row leaves the cluster."""
-    d38 = "decimal(38,0)"
 
     def side(grp):
         v = (T(spark, sf_dir, "events")
@@ -473,7 +466,7 @@ def stats_yuen_t(spark, sf_dir):
         st = kept.agg(
             F.max("n").alias("n"),
             (F.max("n") - 2 * F.expr("max(n) DIV 10")).alias("h"),
-            F.sum(F.col("c").cast(d38)
+            F.sum(wide("c")
                   * F.greatest(F.col("keep"), F.lit(0))).alias("tsum"),
             F.max(F.when((F.col("cm") - F.col("cnt")
                           < g + 1) & (F.col("cm") >= g + 1),
@@ -487,8 +480,8 @@ def stats_yuen_t(spark, sf_dir):
                                 F.col("hi_c")).alias("wc"),
                         "cnt", "n", "h", "tsum"))
         return wins.groupBy("n", "h", "tsum").agg(
-            F.sum(F.col("wc").cast(d38) * F.col("cnt")).alias("wsum"),
-            F.sum(F.col("wc").cast(d38) * F.col("wc") * F.col("cnt"))
+            F.sum(wide("wc") * F.col("cnt")).alias("wsum"),
+            F.sum(wide("wc") * F.col("wc") * F.col("cnt"))
             .alias("wss"))
 
     a = side("click").select(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import comoment, wide, wide_sql
 from .registry import query
 from .relational import T
 
@@ -151,7 +152,7 @@ def events_heartbeat_gaps(spark, sf_dir):
 
 # ------------------------------------------------- rolling beta
 
-@query("window_rolling_beta", oracle="""
+@query("window_rolling_beta", oracle=f"""
     WITH day AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
                CAST(sum(CASE WHEN event_type = 'click'
@@ -165,10 +166,10 @@ def events_heartbeat_gaps(spark, sf_dir):
     rolled AS (
         SELECT d,
                CAST(count(*) OVER w AS BIGINT) AS k,
-               CAST(sum(x) OVER w AS HUGEINT) AS sx,
-               CAST(sum(y) OVER w AS HUGEINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) OVER w AS sxx,
-               sum(CAST(x AS HUGEINT) * y) OVER w AS sxy
+               {wide_sql('sum(x) OVER w')} AS sx,
+               {wide_sql('sum(y) OVER w')} AS sy,
+               sum({wide_sql('x')} * x) OVER w AS sxx,
+               sum({wide_sql('x')} * y) OVER w AS sxy
         FROM day
         WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING
                      AND CURRENT ROW)
@@ -203,22 +204,19 @@ def window_rolling_beta(spark, sf_dir):
                              F.round(F.col("value") * 100)
                              .cast("bigint")).otherwise(0))
                 .alias("y")))
-    d38 = "decimal(38,0)"
     w = Window.orderBy("d").rowsBetween(-6, 0)
     rolled = day.select(
         "d",
         F.count("*").over(w).alias("k"),
         F.sum("x").over(w).alias("sx"),
         F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).over(w).alias("sxx"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).over(w).alias("sxy"))
+        F.sum(wide("x") * F.col("x")).over(w).alias("sxx"),
+        F.sum(wide("x") * F.col("y")).over(w).alias("sxy"))
     return (rolled.filter(F.col("k") == 7)
             .select(F.col("d").alias("day"),
-                    F.round((7 * F.col("sxy")
-                             - F.col("sx").cast(d38) * F.col("sy"))
+                    F.round(comoment(F.lit(7), "sxy", "sx", "sy")
                             .cast("double")
-                            / (7 * F.col("sxx")
-                               - F.col("sx").cast(d38) * F.col("sx"))
+                            / comoment(F.lit(7), "sxx", "sx", "sx")
                             .cast("double"), 6).alias("beta7")))
 
 

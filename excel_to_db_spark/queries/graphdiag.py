@@ -29,19 +29,20 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import comoment, units_sum, units_sum_sql, wide, wide_sql
 
 # Directed nation trade edge: customer nation -> supplier nation.
-_RAW_EDGES_SQL = """
-    SELECT DISTINCT cn AS u, sn AS v FROM (
-        SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
+# The distinct nation pairs first, the u <> v filter after: with the
+# inequality inside the join DuckDB 1.0 nested-loops customer x
+# supplier and runs out of memory at sf0.1.
+_RAW_EDGES_SQL = """pairs AS MATERIALIZED (
+        SELECT DISTINCT c.c_nationkey AS u, s.s_nationkey AS v
         FROM lineitem l
         JOIN orders o   ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey  = c.c_custkey
         JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-    )
-"""
+    ),
+    raw AS (SELECT u, v FROM pairs WHERE u <> v)"""
 
 
 def _raw_edges(spark, sf_dir):
@@ -61,7 +62,7 @@ def _raw_edges(spark, sf_dir):
 # ------------------------------------------- local clustering coeff
 
 @query("graph_local_clustering", oracle=f"""
-    WITH raw AS ({_RAW_EDGES_SQL}),
+    WITH {_RAW_EDGES_SQL},
     e AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b
           FROM raw),
     deg AS (
@@ -159,7 +160,7 @@ def graph_local_clustering(spark, sf_dir):
 # --------------------------------------------- reciprocity / dyads
 
 @query("graph_reciprocity", oracle=f"""
-    WITH raw AS ({_RAW_EDGES_SQL}),
+    WITH {_RAW_EDGES_SQL},
     rec AS (
         SELECT CAST(count(*) AS BIGINT) AS n_directed,
                CAST(sum(CASE WHEN r.u IS NOT NULL THEN 1 ELSE 0 END)
@@ -223,11 +224,11 @@ def graph_reciprocity(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS sx,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(x AS HUGEINT) * y) AS sxy,
-               sum(CAST(y AS HUGEINT) * y) AS syy
+               {wide_sql('sum(x)')} AS sx,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('x')} * y) AS sxy,
+               sum({wide_sql('y')} * y) AS syy
         FROM pairs WHERE x IS NOT NULL
     ),
     fit AS (
@@ -274,23 +275,19 @@ def ts_adf_test(spark, sf_dir):
     pairs = (day.select(F.lag("v").over(w).alias("x"),
                         (F.col("v") - F.lag("v").over(w)).alias("y"))
              .filter(F.col("x").isNotNull()))
-    d38 = "decimal(38,0)"
     st = pairs.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"))
-    nn = F.col("n").cast(d38)
-    beta = ((nn * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy"))
-            .cast("double")
-            / (nn * F.col("sxx") - F.col("sx").cast(d38) * F.col("sx"))
-            .cast("double"))
-    sxx_c = ((nn * F.col("sxx") - F.col("sx").cast(d38) * F.col("sx"))
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
+        F.sum(wide("x") * F.col("y")).alias("sxy"),
+        F.sum(wide("y") * F.col("y")).alias("syy"))
+    beta = (comoment("n", "sxy", "sx", "sy").cast("double")
+            / comoment("n", "sxx", "sx", "sx").cast("double"))
+    sxx_c = (comoment("n", "sxx", "sx", "sx")
              .cast("double") / F.col("n").cast("double"))
-    syy_c = ((nn * F.col("syy") - F.col("sy").cast(d38) * F.col("sy"))
+    syy_c = (comoment("n", "syy", "sy", "sy")
              .cast("double") / F.col("n").cast("double"))
-    sxy_c = ((nn * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy"))
+    sxy_c = (comoment("n", "sxy", "sx", "sy")
              .cast("double") / F.col("n").cast("double"))
     fit = st.select("n", beta.alias("beta"), sxx_c.alias("sxx_c"),
                     syy_c.alias("syy_c"), sxy_c.alias("sxy_c"))

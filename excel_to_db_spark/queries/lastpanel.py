@@ -34,19 +34,20 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
 
 # --------------------------------------------- process capability
 
-@query("ops_process_capability", oracle="""
+@query("ops_process_capability", oracle=f"""
     WITH v AS (
         SELECT CAST(round(value * 100) AS BIGINT) AS c FROM events
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(c) AS HUGEINT) AS s,
-               sum(CAST(c AS HUGEINT) * c) AS q,
+               {wide_sql('sum(c)')} AS s,
+               sum({wide_sql('c')} * c) AS q,
                CAST(sum(CASE WHEN c < 100 OR c > 20000 THEN 1 ELSE 0
                         END) AS BIGINT) AS n_out
         FROM v
@@ -54,7 +55,7 @@ from ..numerics import units_sum, units_sum_sql
     fit AS (
         SELECT n, n_out,
                CAST(s AS DOUBLE) / n AS mu,
-               sqrt(CAST(CAST(n AS HUGEINT) * q - s * s AS DOUBLE))
+               sqrt(CAST({comoment_sql('n', 'q', 's', 's')} AS DOUBLE))
                / n AS sigma
         FROM st
     )
@@ -84,16 +85,13 @@ def ops_process_capability(spark, sf_dir):
     Scale shape: ONE conditional moment aggregate."""
     v = T(spark, sf_dir, "events").select(
         F.round(F.col("value") * 100).cast("bigint").alias("c"))
-    d38 = "decimal(38,0)"
     st = v.agg(
         F.count("*").alias("n"), F.sum("c").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).alias("q"),
+        F.sum(wide("c") * F.col("c")).alias("q"),
         F.sum(F.when((F.col("c") < 100) | (F.col("c") > 20000), 1)
               .otherwise(0)).alias("n_out"))
     mu = F.col("s").cast("double") / F.col("n")
-    sigma = (F.sqrt((F.col("n").cast(d38) * F.col("q")
-                     - F.col("s").cast(d38) * F.col("s"))
-                    .cast("double")) / F.col("n"))
+    sigma = (F.sqrt(comoment("n", "q", "s", "s").cast("double")) / F.col("n"))
     fit = st.select("n", "n_out", mu.alias("mu"), sigma.alias("sigma"))
     return fit.select(
         "n",
@@ -261,16 +259,18 @@ def events_return_gap_profile(spark, sf_dir):
 # --------------------------------------------- weight disparity
 
 @query("graph_weight_disparity", oracle=f"""
-    WITH w AS (
+    WITH pairs AS MATERIALIZED (
+        -- the u <> v filter after the grouping, not in the join (see
+        -- graph_assortativity)
         SELECT c.c_nationkey AS u, s.s_nationkey AS v,
                {units_sum_sql('l.l_extendedprice', 100)} AS cents
         FROM lineitem l
         JOIN orders o   ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey  = c.c_custkey
         JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
         GROUP BY 1, 2
     ),
+    w AS (SELECT u, v, cents FROM pairs WHERE u <> v),
     node AS (
         SELECT u, CAST(count(*) AS BIGINT) AS k,
                CAST(sum(cents) AS BIGINT) AS strength

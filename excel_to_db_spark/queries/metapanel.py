@@ -31,12 +31,13 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
 
 # ---------------------------------------------- DL meta-analysis
 
-@query("stats_meta_analysis", oracle="""
+@query("stats_meta_analysis", oracle=f"""
     WITH site AS (
         SELECT c.c_nationkey AS g,
                CAST(sum(CASE WHEN o.o_orderpriority
@@ -59,10 +60,10 @@ from ..numerics import units_sum, units_sum_sql
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS k,
-               CAST(sum(w_u) AS HUGEINT) AS sw,
-               sum(CAST(w_u AS HUGEINT) * d_u) AS swd,
-               sum(CAST(w_u AS HUGEINT) * d_u * d_u) AS swdd,
-               sum(CAST(w_u AS HUGEINT) * w_u) AS sww
+               {wide_sql('sum(w_u)')} AS sw,
+               sum({wide_sql('w_u')} * d_u) AS swd,
+               sum({wide_sql('w_u')} * d_u * d_u) AS swdd,
+               sum({wide_sql('w_u')} * w_u) AS sww
         FROM eff
     ),
     fixed AS (
@@ -119,14 +120,13 @@ def stats_meta_analysis(spark, sf_dir):
                    F.round(F.col("n").cast("double")
                            / (p * (1.0 - p)) * 1e4).cast("bigint")
                    .alias("w_u")))
-    d38 = "decimal(38,0)"
     st = eff.agg(
         F.count("*").alias("k"),
         F.sum("w_u").alias("sw"),
-        F.sum(F.col("w_u").cast(d38) * F.col("d_u")).alias("swd"),
-        F.sum(F.col("w_u").cast(d38) * F.col("d_u") * F.col("d_u"))
+        F.sum(wide("w_u") * F.col("d_u")).alias("swd"),
+        F.sum(wide("w_u") * F.col("d_u") * F.col("d_u"))
         .alias("swdd"),
-        F.sum(F.col("w_u").cast(d38) * F.col("w_u")).alias("sww"))
+        F.sum(wide("w_u") * F.col("w_u")).alias("sww"))
     mu = (F.col("swd").cast("double") / F.col("sw").cast("double")
           / 1e8)
     q = ((F.col("swdd").cast("double")
@@ -238,7 +238,7 @@ def stats_theil_decomposition(spark, sf_dir):
 
 # ------------------------------------------------ Fano-factor curve
 
-@query("events_fano_curve", oracle="""
+@query("events_fano_curve", oracle=f"""
     WITH widths AS (SELECT unnest([60, 600, 3600]) AS w_s),
     cells AS (
         SELECT widths.w_s,
@@ -251,13 +251,12 @@ def stats_theil_decomposition(spark, sf_dir):
         SELECT w_s,
                CAST(count(*) AS BIGINT) AS n_windows,
                CAST(sum(c) AS BIGINT) AS s,
-               sum(CAST(c AS HUGEINT) * c) AS q
+               sum({wide_sql('c')} * c) AS q
         FROM cells GROUP BY w_s
     )
     SELECT CAST(w_s AS BIGINT) AS window_seconds, n_windows,
            round(CAST(s AS DOUBLE) / n_windows, 4) AS mean_count,
-           round(CAST(CAST(n_windows AS HUGEINT) * q
-                      - CAST(s AS HUGEINT) * s AS DOUBLE)
+           round(CAST({comoment_sql('n_windows', 'q', 's', 's')} AS DOUBLE)
                  / (CAST(n_windows AS DOUBLE) * n_windows)
                  / (CAST(s AS DOUBLE) / n_windows), 4) AS fano
     FROM st ORDER BY window_seconds
@@ -288,19 +287,16 @@ def events_fano_curve(spark, sf_dir):
              .crossJoin(F.broadcast(widths))
              .groupBy("w_s", F.expr("s DIV w_s").alias("win"))
              .agg(F.count("*").alias("c")))
-    d38 = "decimal(38,0)"
     st = cells.groupBy("w_s").agg(
         F.count("*").alias("n_windows"),
         F.sum("c").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).alias("q"))
-    nn = F.col("n_windows").cast(d38)
+        F.sum(wide("c") * F.col("c")).alias("q"))
     return (st.select(
         F.col("w_s").cast("bigint").alias("window_seconds"),
         "n_windows",
         F.round(F.col("s").cast("double") / F.col("n_windows"), 4)
         .alias("mean_count"),
-        F.round((nn * F.col("q") - F.col("s").cast(d38) * F.col("s"))
-                .cast("double")
+        F.round(comoment("n_windows", "q", "s", "s").cast("double")
                 / (F.col("n_windows").cast("double")
                    * F.col("n_windows"))
                 / (F.col("s").cast("double") / F.col("n_windows")), 4)

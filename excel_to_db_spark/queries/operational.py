@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..numerics import (
+    comoment, comoment_sql, wide, wide_quot, wide_quot_sql, wide_sql)
 from .registry import query
 from .relational import T
 
@@ -154,7 +156,7 @@ def attribution_last_touch(spark, sf_dir):
 
 # ---------------------------------------------- bot-regularity heuristics
 
-@query("events_bot_heuristics", oracle="""
+@query("events_bot_heuristics", oracle=f"""
     WITH g AS (
         SELECT user_id,
                CAST(epoch_us(ts) AS BIGINT)
@@ -166,14 +168,15 @@ def attribution_last_touch(spark, sf_dir):
         SELECT user_id,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(gap) AS BIGINT) AS s,
-               sum(CAST(gap AS HUGEINT) * gap) AS ss
+               sum({wide_sql('gap')} * gap) AS ss
         FROM g WHERE gap IS NOT NULL GROUP BY user_id
     ),
     sc AS (
         SELECT user_id, n,
                CASE WHEN s = 0 THEN CAST(0 AS BIGINT)
-                    ELSE CAST((1000000 * (n * ss - CAST(s AS HUGEINT) * s))
-                              // (CAST(s AS HUGEINT) * s) AS BIGINT)
+                    ELSE {wide_quot_sql(
+                        f"1000000 * {comoment_sql('n', 'ss', 's', 's')}",
+                        f"{wide_sql('s')} * s")}
                END AS cv2_micro
         FROM u WHERE n >= 20
     )
@@ -213,18 +216,18 @@ def events_bot_heuristics(spark, sf_dir):
     g = e.select("user_id",
                  (F.unix_micros(F.col("ts"))
                   - F.lag(F.unix_micros(F.col("ts"))).over(w)).alias("gap"))
-    d38 = "decimal(38,0)"
     u = (g.filter(F.col("gap").isNotNull())
          .groupBy("user_id")
          .agg(F.count("*").alias("n"),
               F.sum("gap").alias("s"),
-              F.sum(F.col("gap").cast(d38) * F.col("gap")).alias("ss")))
+              F.sum(wide("gap") * F.col("gap")).alias("ss")))
     sc = (u.filter(F.col("n") >= 20)
-          .select("user_id", "n", F.expr(
-              "CASE WHEN s = 0 THEN CAST(0 AS BIGINT) "
-              "ELSE CAST((1000000 * (n * ss - CAST(s AS DECIMAL(38,0)) * s)) "
-              "DIV (CAST(s AS DECIMAL(38,0)) * s) AS BIGINT) END")
-              .alias("cv2_micro")))
+          .select("user_id", "n",
+                  F.when(F.col("s") == 0, F.lit(0).cast("bigint"))
+                  .otherwise(wide_quot(
+                      F.lit(1000000) * comoment("n", "ss", "s", "s"),
+                      wide("s") * F.col("s")))
+                  .alias("cv2_micro")))
     n_users = u.agg(F.count("*").alias("n_users"))
     return (sc.agg(F.count("*").alias("n_scored"),
                    F.sum(F.when(F.col("cv2_micro") < 10000, 1).otherwise(0))

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql
+from ..numerics import comoment, comoment_sql, h32, h32_sql, wide, wide_sql
 
 
 # --------------------------------------------------- learning curve
@@ -160,7 +160,10 @@ def ml_learning_curve(spark, sf_dir):
 
 # ------------------------------------------- Goh-Barabasi burstiness
 
-@query("events_burstiness_gb", oracle="""
+_VAR_N2 = comoment_sql("n", "q", "s", "s")     # n^2 * variance, exact
+
+
+@query("events_burstiness_gb", oracle=f"""
     WITH seq AS (
         SELECT event_type AS stream,
                CAST(floor(epoch(ts)) AS BIGINT)
@@ -173,16 +176,13 @@ def ml_learning_curve(spark, sf_dir):
         SELECT stream,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(gap) AS BIGINT) AS s,
-               sum(CAST(gap AS HUGEINT) * gap) AS q
+               sum({wide_sql('gap')} * gap) AS q
         FROM seq WHERE gap IS NOT NULL GROUP BY stream
     )
     SELECT stream, n,
            round(CAST(s AS DOUBLE) / n, 2) AS mean_gap_s,
-           round((sqrt(CAST(CAST(n AS HUGEINT) * q
-                            - CAST(s AS HUGEINT) * s AS DOUBLE)) / n
-                  - CAST(s AS DOUBLE) / n)
-                 / (sqrt(CAST(CAST(n AS HUGEINT) * q
-                              - CAST(s AS HUGEINT) * s AS DOUBLE)) / n
+           round((sqrt(CAST({_VAR_N2} AS DOUBLE)) / n - CAST(s AS DOUBLE) / n)
+                 / (sqrt(CAST({_VAR_N2} AS DOUBLE)) / n
                     + CAST(s AS DOUBLE) / n), 6) AS burstiness_b
     FROM st ORDER BY stream
 """)
@@ -208,13 +208,11 @@ def events_burstiness_gb(spark, sf_dir):
     gaps = (seq.select("stream",
                        (F.col("s0") - F.lag("s0").over(w)).alias("gap"))
             .filter(F.col("gap").isNotNull()))
-    d38 = "decimal(38,0)"
     st = gaps.groupBy("stream").agg(
         F.count("*").alias("n"),
         F.sum("gap").alias("s"),
-        F.sum(F.col("gap").cast(d38) * F.col("gap")).alias("q"))
-    sig = (F.sqrt((F.col("n").cast(d38) * F.col("q")
-                   - F.col("s").cast(d38) * F.col("s")).cast("double"))
+        F.sum(wide("gap") * F.col("gap")).alias("q"))
+    sig = (F.sqrt(comoment("n", "q", "s", "s").cast("double"))
            / F.col("n"))
     mu = F.col("s").cast("double") / F.col("n")
     return (st.select("stream", "n",

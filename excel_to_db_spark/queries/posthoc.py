@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql
+from ..numerics import comoment, erfc, erfc_sql, wide, wide_sql
 from .registry import query
 from .relational import T
 
@@ -261,15 +261,15 @@ def stats_nelson_aalen(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               CAST(sum(z1) AS HUGEINT) AS s1,
-               CAST(sum(z2) AS HUGEINT) AS s2,
-               sum(CAST(y AS HUGEINT) * y) AS syy,
-               sum(CAST(z1 AS HUGEINT) * z1) AS s11,
-               sum(CAST(z2 AS HUGEINT) * z2) AS s22,
-               sum(CAST(z1 AS HUGEINT) * z2) AS s12,
-               sum(CAST(z1 AS HUGEINT) * y) AS s1y,
-               sum(CAST(z2 AS HUGEINT) * y) AS s2y
+               {wide_sql('sum(y)')} AS sy,
+               {wide_sql('sum(z1)')} AS s1,
+               {wide_sql('sum(z2)')} AS s2,
+               sum({wide_sql('y')} * y) AS syy,
+               sum({wide_sql('z1')} * z1) AS s11,
+               sum({wide_sql('z2')} * z2) AS s22,
+               sum({wide_sql('z1')} * z2) AS s12,
+               sum({wide_sql('z1')} * y) AS s1y,
+               sum({wide_sql('z2')} * y) AS s2y
         FROM lagged WHERE z1 IS NOT NULL
     ),
     cen AS (
@@ -331,22 +331,19 @@ def ts_granger_causality(spark, sf_dir):
                          F.lag("y").over(w).alias("z1"),
                          F.lag("x").over(w).alias("z2"))
               .filter(F.col("z1").isNotNull()))
-    d38 = "decimal(38,0)"
     st = lagged.agg(
         F.count("*").alias("n"),
         F.sum("y").alias("sy"), F.sum("z1").alias("s1"),
         F.sum("z2").alias("s2"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"),
-        F.sum(F.col("z1").cast(d38) * F.col("z1")).alias("s11"),
-        F.sum(F.col("z2").cast(d38) * F.col("z2")).alias("s22"),
-        F.sum(F.col("z1").cast(d38) * F.col("z2")).alias("s12"),
-        F.sum(F.col("z1").cast(d38) * F.col("y")).alias("s1y"),
-        F.sum(F.col("z2").cast(d38) * F.col("y")).alias("s2y"))
-    nn = F.col("n").cast(d38)
+        F.sum(wide("y") * F.col("y")).alias("syy"),
+        F.sum(wide("z1") * F.col("z1")).alias("s11"),
+        F.sum(wide("z2") * F.col("z2")).alias("s22"),
+        F.sum(wide("z1") * F.col("z2")).alias("s12"),
+        F.sum(wide("z1") * F.col("y")).alias("s1y"),
+        F.sum(wide("z2") * F.col("y")).alias("s2y"))
 
     def cen(qq, sa, sb):
-        return (nn * F.col(qq) - F.col(sa).cast(d38) * F.col(sb)) \
-            .cast("double")
+        return comoment("n", qq, sa, sb).cast("double")
 
     c = st.select(
         "n",
@@ -380,7 +377,7 @@ def ts_granger_causality(spark, sf_dir):
 
 # ------------------------------------------- sharp RD at a cutoff
 
-@query("stats_reg_discontinuity", oracle="""
+@query("stats_reg_discontinuity", oracle=f"""
     WITH side AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) - 15000000
                    AS xc,
@@ -393,18 +390,18 @@ def ts_granger_causality(spark, sf_dir):
     st AS (
         SELECT CASE WHEN xc >= 0 THEN 1 ELSE 0 END AS treated,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(xc) AS HUGEINT) AS sx,
+               {wide_sql('sum(xc)')} AS sx,
                CAST(sum(y) AS BIGINT) AS sy,
-               sum(CAST(xc AS HUGEINT) * xc) AS sxx,
-               CAST(sum(xc * y) AS HUGEINT) AS sxy
+               sum({wide_sql('xc')} * xc) AS sxx,
+               {wide_sql('sum(xc * y)')} AS sxy
         FROM side GROUP BY 1
     ),
     fits AS (
         SELECT treated, n,
-               (CAST(n * sxy - sx * CAST(sy AS HUGEINT) AS DOUBLE))
+               (CAST(n * sxy - sx * {wide_sql('sy')} AS DOUBLE))
                    / CAST(n * sxx - sx * sx AS DOUBLE) AS slope,
                CAST(sy AS DOUBLE) / n
-               - ((CAST(n * sxy - sx * CAST(sy AS HUGEINT) AS DOUBLE))
+               - ((CAST(n * sxy - sx * {wide_sql('sy')} AS DOUBLE))
                   / CAST(n * sxx - sx * sx AS DOUBLE))
                  * (CAST(sx AS DOUBLE) / n) AS icpt
         FROM st
@@ -444,18 +441,14 @@ def stats_reg_discontinuity(spark, sf_dir):
                            .isin("1-URGENT", "2-HIGH"), 1)
                     .otherwise(0).alias("y"))
             .filter(F.abs(F.col("xc")) <= 5000000))
-    d38 = "decimal(38,0)"
     st = (side.groupBy(F.when(F.col("xc") >= 0, 1).otherwise(0)
                        .alias("treated"))
           .agg(F.count("*").alias("n"),
                F.sum("xc").alias("sx"), F.sum("y").alias("sy"),
-               F.sum(F.col("xc").cast(d38) * F.col("xc")).alias("sxx"),
+               F.sum(wide("xc") * F.col("xc")).alias("sxx"),
                F.sum(F.col("xc") * F.col("y")).alias("sxy")))
-    nn = F.col("n").cast(d38)
-    slope = ((nn * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy"))
-             .cast("double")
-             / (nn * F.col("sxx") - F.col("sx").cast(d38) * F.col("sx"))
-             .cast("double"))
+    slope = (comoment("n", "sxy", "sx", "sy").cast("double")
+             / comoment("n", "sxx", "sx", "sx").cast("double"))
     icpt = (F.col("sy").cast("double") / F.col("n")
             - slope * (F.col("sx").cast("double") / F.col("n")))
     fits = st.select("treated", "n", icpt.alias("icpt"))

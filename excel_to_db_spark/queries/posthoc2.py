@@ -30,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, erfc, erfc_sql, units_sum, units_sum_sql, wide,
+    wide_sql)
 from .registry import query
 from .relational import T
 
@@ -72,7 +74,7 @@ from .relational import T
                CAST(sum(r) AS BIGINT) AS rr,
                CAST(sum(grp * r) AS BIGINT) AS sgr,
                CAST(sum(grp * n) AS BIGINT) AS sgn,
-               sum(CAST(grp AS HUGEINT) * grp * n) AS sggn
+               sum({wide_sql('grp')} * grp * n) AS sggn
         FROM cells
     ),
     zz AS (
@@ -136,12 +138,11 @@ def stats_cochran_armitage(spark, sf_dir):
                       .otherwise(4)).alias("grp"))
              .groupBy("grp")
              .agg(F.count("*").alias("n"), F.sum("y").alias("r")))
-    d38 = "decimal(38,0)"
     st = cells.agg(
         F.sum("n").alias("nn"), F.sum("r").alias("rr"),
         F.sum(F.col("grp") * F.col("r")).alias("sgr"),
         F.sum(F.col("grp") * F.col("n")).alias("sgn"),
-        F.sum(F.col("grp").cast(d38) * F.col("grp") * F.col("n"))
+        F.sum(wide("grp") * F.col("grp") * F.col("n"))
         .alias("sggn"))
     z = F.round(
         (F.col("sgr").cast("double")
@@ -169,7 +170,7 @@ def stats_cochran_armitage(spark, sf_dir):
     st AS (
         SELECT grp, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(c) AS BIGINT) AS s,
-               sum(CAST(c AS HUGEINT) * c) AS q
+               sum({wide_sql('c')} * c) AS q
         FROM v GROUP BY grp
     ),
     mse AS (
@@ -177,8 +178,8 @@ def stats_cochran_armitage(spark, sf_dir):
         -- SS_g = (n*q - s^2)/n snaps to 1e-2 cents^2 units before
         -- the 5-term sum
         SELECT {units_sum_sql(
-                   'CAST(CAST(n AS HUGEINT) * q - CAST(s AS HUGEINT)'
-                   ' * s AS DOUBLE) / n', 1e2)} / 1e2
+                   f'CAST({comoment_sql("n", "q", "s", "s")} AS DOUBLE) / n',
+                   1e2)} / 1e2
                / CAST(sum(n) - count(*) AS DOUBLE) AS s2w,
                CAST(sum(n) - count(*) AS BIGINT) AS df_w
         FROM st
@@ -218,13 +219,11 @@ def stats_tukey_hsd(spark, sf_dir):
     v = T(spark, sf_dir, "events").select(
         F.col("event_type").alias("grp"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"))
-    d38 = "decimal(38,0)"
     st = v.groupBy("grp").agg(
         F.count("*").alias("n"), F.sum("c").alias("s"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).alias("q"))
+        F.sum(wide("c") * F.col("c")).alias("q"))
     mse = st.agg(
-        (units_sum((F.col("n").cast(d38) * F.col("q")
-                        - F.col("s").cast(d38) * F.col("s"))
+        (units_sum(comoment("n", "q", "s", "s")
                        .cast("double") / F.col("n"), 1e2) / 1e2
          / (F.sum("n") - F.count("*")).cast("double")).alias("s2w"),
         (F.sum("n") - F.count("*")).alias("df_w"))
@@ -364,14 +363,14 @@ def ml_cost_threshold(spark, sf_dir):
     grp AS (
         SELECT user_id, CAST(count(*) AS BIGINT) AS m,
                CAST(sum(c) AS BIGINT) AS sg,
-               sum(CAST(c AS HUGEINT) * c) AS qg
+               sum({wide_sql('c')} * c) AS qg
         FROM per GROUP BY user_id
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS g,
                CAST(sum(m) AS BIGINT) AS n,
-               CAST(sum(sg) AS HUGEINT) AS t,
-               CAST(sum(qg) AS HUGEINT) AS q,
+               {wide_sql('sum(sg)')} AS t,
+               {wide_sql('sum(qg)')} AS q,
                {units_sum_sql('CAST(sg AS DOUBLE) * sg / m', 1e2)} AS ssg_u
         FROM grp
     ),
@@ -415,10 +414,9 @@ def stats_design_effect(spark, sf_dir):
     per = T(spark, sf_dir, "events").select(
         "user_id",
         F.round(F.col("value") * 100).cast("bigint").alias("c"))
-    d38 = "decimal(38,0)"
     grp = per.groupBy("user_id").agg(
         F.count("*").alias("m"), F.sum("c").alias("sg"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).alias("qg"))
+        F.sum(wide("c") * F.col("c")).alias("qg"))
     st = grp.agg(
         F.count("*").alias("g"), F.sum("m").alias("n"),
         F.sum("sg").alias("t"), F.sum("qg").alias("q"),

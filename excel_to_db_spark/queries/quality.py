@@ -717,16 +717,19 @@ def text_compression_quality(spark, sf_dir):
 
 
 @query("graph_assortativity", oracle=f"""
-    WITH w AS (
+    WITH pairs AS MATERIALIZED (
+        -- every nation pair first, the u <> v filter after: with the
+        -- inequality inside the join DuckDB 1.0 nested-loops
+        -- customer x supplier and runs out of memory at sf0.1
         SELECT c_nationkey AS u, s_nationkey AS v,
                {units_sum_sql('l_extendedprice', 100)} AS cents
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
         JOIN supplier ON l_suppkey = s_suppkey
-        WHERE c_nationkey <> s_nationkey
         GROUP BY 1, 2
     ),
+    w AS (SELECT u, v, cents FROM pairs WHERE u <> v),
     top AS (
         -- per-source top-2 by trade value: the same sparsification as
         -- graph_bfs_levels (the raw nation graph is near-complete, so

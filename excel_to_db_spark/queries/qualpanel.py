@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..numerics import wide, wide_sql
 from .registry import query
 from .relational import T
 
@@ -284,7 +285,7 @@ def stats_qq_deciles(spark, sf_dir):
 
 # ------------------------------------------------ trimmed mean
 
-@query("agg_trimmed_mean", oracle="""
+@query("agg_trimmed_mean", oracle=f"""
     WITH v AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c
         FROM orders
@@ -307,10 +308,10 @@ def stats_qq_deciles(spark, sf_dir):
     )
     SELECT max(n) AS n,
            max(n) // 10 AS n_trimmed_each,
-           round(CAST(sum(c * keep) AS HUGEINT)
+           round({wide_sql('sum(c * keep)')}
                  / (CAST(max(n) - 2 * (max(n) // 10) AS DOUBLE))
                  / 100.0, 4) AS trimmed_mean,
-           round((SELECT CAST(sum(CAST(c AS HUGEINT) * cnt) AS HUGEINT)
+           round((SELECT {wide_sql(f'sum({wide_sql("c")} * cnt)')}
                   FROM vh) / (CAST(max(n) AS DOUBLE)) / 100.0, 4)
                AS raw_mean
     FROM kept
@@ -351,11 +352,10 @@ def agg_trimmed_mean(spark, sf_dir):
         (F.least(F.col("cm"), F.col("n") - lo)
          - F.greatest(F.col("cm") - F.col("cnt"), lo)).alias("keep"))
         .filter(F.col("keep") > 0))
-    d38 = "decimal(38,0)"
-    raw = vh.agg(F.sum(F.col("c").cast(d38) * F.col("cnt"))
+    raw = vh.agg(F.sum(wide("c") * F.col("cnt"))
                  .alias("rawsum"))
     st = (kept.agg(F.max("n").alias("n"),
-                   F.sum(F.col("c").cast(d38) * F.col("keep"))
+                   F.sum(wide("c") * F.col("keep"))
                    .alias("ksum"))
           .crossJoin(F.broadcast(raw)))
     return st.select(

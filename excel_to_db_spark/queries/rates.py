@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, erfc, erfc_sql, units_sum, units_sum_sql, wide, wide_sql)
 from .registry import query
 from .relational import T
 
@@ -225,8 +226,8 @@ def stats_two_prop_z(spark, sf_dir):
     ),
     jk AS (
         SELECT CAST(count(*) AS BIGINT) AS g,
-               CAST(sum(th_u) AS HUGEINT) AS s1,
-               sum(CAST(th_u AS HUGEINT) * th_u) AS s2
+               {wide_sql('sum(th_u)')} AS s1,
+               sum({wide_sql('th_u')} * th_u) AS s2
         FROM loo
     )
     SELECT tot.g AS n_groups,
@@ -264,14 +265,13 @@ def stats_jackknife_se(spark, sf_dir):
                 F.count("*").alias("c_g")))
     tot = grp.agg(F.sum("s_g").alias("s"), F.sum("c_g").alias("c"),
                   F.count("*").alias("g"))
-    d38 = "decimal(38,0)"
     loo = (grp.crossJoin(F.broadcast(tot))
            .select(F.round((F.col("s") - F.col("s_g")).cast("double")
                            / (F.col("c") - F.col("c_g")) * 1e6)
                    .cast("bigint").alias("th_u")))
     jk = loo.agg(F.count("*").alias("gj"),
                  F.sum("th_u").alias("s1"),
-                 F.sum(F.col("th_u").cast(d38) * F.col("th_u"))
+                 F.sum(wide("th_u") * F.col("th_u"))
                  .alias("s2"))
     return (jk.crossJoin(F.broadcast(tot))
             .select(
@@ -280,9 +280,7 @@ def stats_jackknife_se(spark, sf_dir):
                         4).alias("theta"),
                 F.round(F.sqrt(
                     ((F.col("gj") - 1).cast("double") / F.col("gj"))
-                    * ((F.col("gj").cast(d38) * F.col("s2")
-                        - F.col("s1").cast(d38) * F.col("s1"))
-                       .cast("double")
+                    * (comoment("gj", "s2", "s1", "s1").cast("double")
                        / F.col("gj").cast("double")))
                     / 1e6 / 100.0, 6).alias("jackknife_se")))
 

@@ -32,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import erfc, erfc_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, erfc, erfc_sql, units_sum, units_sum_sql, wide,
+    wide_sql)
 from .registry import query
 from .relational import T
 
@@ -69,21 +71,21 @@ def _dayser(spark, sf_dir):
     ),
     m0 AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS s,
-               sum(CAST(x AS HUGEINT) * x) AS q
+               {wide_sql('sum(x)')} AS s,
+               sum({wide_sql('x')} * x) AS q
         FROM day
     ),
     base AS (
         SELECT n, CAST(s AS DOUBLE) / n AS mu0,
-               1.345 * (sqrt(CAST(CAST(n AS HUGEINT) * q - s * s
+               1.345 * (sqrt(CAST({comoment_sql('n', 'q', 's', 's')}
                                   AS DOUBLE)) / n) AS k
         FROM m0
     ),
     it1 AS (
         SELECT n, k,
                {units_sum_sql('least(1.0, k / abs(x - mu0))', 1e6)} AS sw_u,
-               CAST({units_sum_sql(
-                        'least(1.0, k / abs(x - mu0)) * x')} AS HUGEINT) AS swx
+               {wide_sql(units_sum_sql(
+                        'least(1.0, k / abs(x - mu0)) * x'))} AS swx
         FROM day, base GROUP BY n, k
     ),
     mu1t AS (
@@ -93,8 +95,8 @@ def _dayser(spark, sf_dir):
         SELECT n,
                round(mu1 / 100.0, 4) AS huber_mu_step1,
                {units_sum_sql('least(1.0, k / abs(x - mu1))', 1e6)} AS sw_u,
-               CAST({units_sum_sql(
-                        'least(1.0, k / abs(x - mu1)) * x')} AS HUGEINT) AS swx
+               {wide_sql(units_sum_sql(
+                        'least(1.0, k / abs(x - mu1)) * x'))} AS swx
         FROM day, mu1t GROUP BY n, mu1
     )
     SELECT n, huber_mu_step1,
@@ -125,20 +127,18 @@ def stats_huber_m_estimate(spark, sf_dir):
            .groupBy(F.date_trunc("day", F.col("o_orderdate"))
                     .alias("d"))
            .agg(units_sum(F.col("o_totalprice"), 100).alias("x")))
-    d38 = "decimal(38,0)"
     m0 = day.agg(F.count("*").alias("n"), F.sum("x").alias("s"),
-                 F.sum(F.col("x").cast(d38) * F.col("x")).alias("q"))
+                 F.sum(wide("x") * F.col("x")).alias("q"))
     base = m0.select(
         "n",
         (F.col("s").cast("double") / F.col("n")).alias("mu0"),
-        (1.345 * (F.sqrt((F.col("n").cast(d38) * F.col("q")
-                          - F.col("s").cast(d38) * F.col("s"))
+        (1.345 * (F.sqrt(comoment("n", "q", "s", "s")
                          .cast("double")) / F.col("n"))).alias("k"))
 
     def step(mu_col):
         w = F.least(F.lit(1.0), F.col("k") / F.abs(F.col("x") - mu_col))
         return (units_sum(w, 1e6).alias("sw_u"),
-                F.sum(F.round(w * F.col("x")).cast(d38)).alias("swx"))
+                F.sum(wide(F.round(w * F.col("x")))).alias("swx"))
 
     sw1, swx1 = step(F.col("mu0"))
     it1 = (day.crossJoin(F.broadcast(base))
@@ -168,11 +168,11 @@ def stats_huber_m_estimate(spark, sf_dir):
     WITH ser AS ({_DAYSER_SQL}),
     m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(t) AS HUGEINT) AS st,
-               sum(CAST(t AS HUGEINT) * t) AS stt,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(t AS HUGEINT) * y) AS sty,
-               sum(CAST(y AS HUGEINT) * y) AS syy
+               {wide_sql('sum(t)')} AS st,
+               sum({wide_sql('t')} * t) AS stt,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('t')} * y) AS sty,
+               sum({wide_sql('y')} * y) AS syy
         FROM ser
     ),
     fit AS (
@@ -228,19 +228,15 @@ def stats_cooks_distance(spark, sf_dir):
     Scale shape: day-spine collapse + 1-row fit + broadcast-scalar
     join + TakeOrdered(5)."""
     ser = _dayser(spark, sf_dir)
-    d38 = "decimal(38,0)"
     m = ser.agg(
         F.count("*").alias("n"),
         F.sum("t").alias("st"),
-        F.sum(F.col("t").cast(d38) * F.col("t")).alias("stt"),
+        F.sum(wide("t") * F.col("t")).alias("stt"),
         F.sum("y").alias("sy"),
-        F.sum(F.col("t").cast(d38) * F.col("y")).alias("sty"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"))
-    nn = F.col("n").cast(d38)
-    bnum = (nn * F.col("sty") - F.col("st").cast(d38) * F.col("sy")) \
-        .cast("double")
-    bden = (nn * F.col("stt") - F.col("st").cast(d38) * F.col("st")) \
-        .cast("double")
+        F.sum(wide("t") * F.col("y")).alias("sty"),
+        F.sum(wide("y") * F.col("y")).alias("syy"))
+    bnum = comoment("n", "sty", "st", "sy").cast("double")
+    bden = comoment("n", "stt", "st", "st").cast("double")
     b = bnum / bden
     fit = m.select(
         "n", b.alias("b"),
@@ -248,7 +244,7 @@ def stats_cooks_distance(spark, sf_dir):
          - b * (F.col("st").cast("double") / F.col("n"))).alias("a"),
         (F.col("st").cast("double") / F.col("n")).alias("tbar"),
         (bden / F.col("n")).alias("sttc"),
-        (((nn * F.col("syy") - F.col("sy").cast(d38) * F.col("sy"))
+        ((comoment("n", "syy", "sy", "sy")
           .cast("double") / F.col("n") - b * (bnum / F.col("n")))
          / (F.col("n") - 2)).alias("s2"))
     per = (ser.crossJoin(F.broadcast(fit))
@@ -279,13 +275,13 @@ def stats_cooks_distance(spark, sf_dir):
     WITH ser AS ({_DAYSER_SQL}),
     m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(t) AS HUGEINT) AS s1,
-               sum(CAST(t AS HUGEINT) * t) AS s2_,
-               sum(CAST(t AS HUGEINT) * t * t) AS s3,
-               sum(CAST(t AS HUGEINT) * t * t * t) AS s4,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(t AS HUGEINT) * y) AS s1y,
-               sum(CAST(t AS HUGEINT) * t * y) AS s2y
+               {wide_sql('sum(t)')} AS s1,
+               sum({wide_sql('t')} * t) AS s2_,
+               sum({wide_sql('t')} * t * t) AS s3,
+               sum({wide_sql('t')} * t * t * t) AS s4,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('t')} * y) AS s1y,
+               sum({wide_sql('t')} * t * y) AS s2y
         FROM ser
     ),
     cen AS (
@@ -332,8 +328,7 @@ def ml_ridge_path(spark, sf_dir):
     Scale shape: day-spine collapse + ONE moment aggregate + a
     constant 4-row grid join."""
     ser = _dayser(spark, sf_dir)
-    d38 = "decimal(38,0)"
-    t = F.col("t").cast(d38)
+    t = wide("t")
     m = ser.agg(
         F.count("*").alias("n"),
         F.sum("t").alias("s1"),
@@ -343,11 +338,9 @@ def ml_ridge_path(spark, sf_dir):
         F.sum("y").alias("sy"),
         F.sum(t * F.col("y")).alias("s1y"),
         F.sum(t * F.col("t") * F.col("y")).alias("s2y"))
-    nn = F.col("n").cast(d38)
 
     def cen(q, sa, sb):
-        return ((nn * F.col(q) - F.col(sa).cast(d38) * F.col(sb))
-                .cast("double") / F.col("n"))
+        return (comoment("n", q, sa, sb).cast("double") / F.col("n"))
 
     cenf = m.select(
         "n",
@@ -380,10 +373,10 @@ def ml_ridge_path(spark, sf_dir):
     WITH ser AS ({_DAYSER_SQL}),
     m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(t) AS HUGEINT) AS st,
-               sum(CAST(t AS HUGEINT) * t) AS stt,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(t AS HUGEINT) * y) AS sty
+               {wide_sql('sum(t)')} AS st,
+               sum({wide_sql('t')} * t) AS stt,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('t')} * y) AS sty
         FROM ser
     ),
     fit AS (
@@ -404,11 +397,11 @@ def ml_ridge_path(spark, sf_dir):
     ),
     am AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(t) AS HUGEINT) AS st,
-               sum(CAST(t AS HUGEINT) * t) AS stt,
-               CAST(sum(v) AS HUGEINT) AS sv,
-               sum(CAST(t AS HUGEINT) * v) AS stv,
-               sum(CAST(v AS HUGEINT) * v) AS svv
+               {wide_sql('sum(t)')} AS st,
+               sum({wide_sql('t')} * t) AS stt,
+               {wide_sql('sum(v)')} AS sv,
+               sum({wide_sql('t')} * v) AS stv,
+               sum({wide_sql('v')} * v) AS svv
         FROM aux
     ),
     lm AS (
@@ -445,17 +438,13 @@ def stats_breusch_pagan(spark, sf_dir):
     Scale shape: day-spine collapse + two 1-row aggregates with a
     broadcast-scalar join between them."""
     ser = _dayser(spark, sf_dir)
-    d38 = "decimal(38,0)"
     m = ser.agg(
         F.count("*").alias("n"), F.sum("t").alias("st"),
-        F.sum(F.col("t").cast(d38) * F.col("t")).alias("stt"),
+        F.sum(wide("t") * F.col("t")).alias("stt"),
         F.sum("y").alias("sy"),
-        F.sum(F.col("t").cast(d38) * F.col("y")).alias("sty"))
-    nn = F.col("n").cast(d38)
-    b = ((nn * F.col("sty") - F.col("st").cast(d38) * F.col("sy"))
-         .cast("double")
-         / (nn * F.col("stt") - F.col("st").cast(d38) * F.col("st"))
-         .cast("double"))
+        F.sum(wide("t") * F.col("y")).alias("sty"))
+    b = (comoment("n", "sty", "st", "sy").cast("double")
+         / comoment("n", "stt", "st", "st").cast("double"))
     fit = m.select(
         "n", b.alias("b"),
         (F.col("sy").cast("double") / F.col("n")
@@ -466,20 +455,16 @@ def stats_breusch_pagan(spark, sf_dir):
                    .alias("v")))
     am = aux.agg(
         F.count("*").alias("n"), F.sum("t").alias("st"),
-        F.sum(F.col("t").cast(d38) * F.col("t")).alias("stt"),
+        F.sum(wide("t") * F.col("t")).alias("stt"),
         F.sum("v").alias("sv"),
-        F.sum(F.col("t").cast(d38) * F.col("v")).alias("stv"),
-        F.sum(F.col("v").cast(d38) * F.col("v")).alias("svv"))
-    num = (nn * F.col("stv") - F.col("st").cast(d38) * F.col("sv")) \
-        .cast("double")
+        F.sum(wide("t") * F.col("v")).alias("stv"),
+        F.sum(wide("v") * F.col("v")).alias("svv"))
+    num = comoment("n", "stv", "st", "sv").cast("double")
     lm = am.select(
         "n",
         F.round(F.col("n") * (num * num)
-                / ((nn * F.col("stt")
-                    - F.col("st").cast(d38) * F.col("st"))
-                   .cast("double")
-                   * (nn * F.col("svv")
-                      - F.col("sv").cast(d38) * F.col("sv"))
+                / (comoment("n", "stt", "st", "st").cast("double")
+                   * comoment("n", "svv", "sv", "sv")
                    .cast("double")), 4).alias("lm_stat"))
     z = F.sqrt(F.col("lm_stat") / 2.0)
     return lm.select("n", "lm_stat",

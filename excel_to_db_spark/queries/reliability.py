@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import comoment, units_sum, units_sum_sql, wide, wide_sql
 
 
 # ------------------------------------------ Kendall's W concordance
@@ -135,7 +135,7 @@ def stats_kendall_w(spark, sf_dir):
 
 # ------------------------------------------------ Cronbach's alpha
 
-@query("stats_cronbach_alpha", oracle="""
+@query("stats_cronbach_alpha", oracle=f"""
     WITH per_user AS (
         SELECT user_id,
                CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
@@ -153,18 +153,18 @@ def stats_kendall_w(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x1) AS HUGEINT) AS s1,
-               sum(CAST(x1 AS HUGEINT) * x1) AS q1,
-               CAST(sum(x2) AS HUGEINT) AS s2,
-               sum(CAST(x2 AS HUGEINT) * x2) AS q2,
-               CAST(sum(x3) AS HUGEINT) AS s3,
-               sum(CAST(x3 AS HUGEINT) * x3) AS q3,
-               CAST(sum(x4) AS HUGEINT) AS s4,
-               sum(CAST(x4 AS HUGEINT) * x4) AS q4,
-               CAST(sum(x5) AS HUGEINT) AS s5,
-               sum(CAST(x5 AS HUGEINT) * x5) AS q5,
-               CAST(sum(xt) AS HUGEINT) AS st_,
-               sum(CAST(xt AS HUGEINT) * xt) AS qt
+               {wide_sql('sum(x1)')} AS s1,
+               sum({wide_sql('x1')} * x1) AS q1,
+               {wide_sql('sum(x2)')} AS s2,
+               sum({wide_sql('x2')} * x2) AS q2,
+               {wide_sql('sum(x3)')} AS s3,
+               sum({wide_sql('x3')} * x3) AS q3,
+               {wide_sql('sum(x4)')} AS s4,
+               sum({wide_sql('x4')} * x4) AS q4,
+               {wide_sql('sum(x5)')} AS s5,
+               sum({wide_sql('x5')} * x5) AS q5,
+               {wide_sql('sum(xt)')} AS st_,
+               sum({wide_sql('xt')} * xt) AS qt
         FROM per_user
     )
     SELECT n, CAST(5 AS BIGINT) AS k_items,
@@ -199,15 +199,14 @@ def stats_cronbach_alpha(spark, sf_dir):
                              .otherwise(0)).alias(f"x{i+1}")
                        for i, t in enumerate(types)],
                      F.count("*").alias("xt")))
-    d38 = "decimal(38,0)"
     aggs = [F.count("*").alias("n")]
     for col in [f"x{i+1}" for i in range(5)] + ["xt"]:
         tag = col[1:] if col != "xt" else "t_"
         aggs += [F.sum(col).alias(f"s{tag}"),
-                 F.sum(F.col(col).cast(d38) * F.col(col))
+                 F.sum(wide(F.col(col)) * F.col(col))
                  .alias(f"q{tag}")]
     st = per_user.agg(*aggs)
-    nn = F.col("n").cast(d38)
+    nn = wide("n")
     item_var = None
     for i in range(1, 6):
         v = nn * F.col(f"q{i}") - F.col(f"s{i}") * F.col(f"s{i}")
@@ -222,7 +221,7 @@ def stats_cronbach_alpha(spark, sf_dir):
 
 # --------------------------------------------------------- ICC(1,1)
 
-@query("stats_icc", oracle="""
+@query("stats_icc", oracle=f"""
     WITH seq AS (
         SELECT user_id,
                CAST(round(value * 100) AS BIGINT) AS c,
@@ -233,16 +232,16 @@ def stats_cronbach_alpha(spark, sf_dir):
     grp AS (
         SELECT user_id,
                CAST(sum(c) AS BIGINT) AS sg,
-               sum(CAST(c AS HUGEINT) * c) AS qg,
+               sum({wide_sql('c')} * c) AS qg,
                CAST(count(*) AS BIGINT) AS kk
         FROM seq WHERE rn <= 4 GROUP BY user_id
         HAVING count(*) = 4
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS g,
-               CAST(sum(sg) AS HUGEINT) AS t,
-               sum(CAST(sg AS HUGEINT) * sg) AS ssg,
-               CAST(sum(qg) AS HUGEINT) AS q
+               {wide_sql('sum(sg)')} AS t,
+               sum({wide_sql('sg')} * sg) AS ssg,
+               {wide_sql('sum(qg)')} AS q
         FROM grp
     )
     SELECT g AS n_groups, CAST(4 AS BIGINT) AS k_reps,
@@ -277,20 +276,18 @@ def stats_icc(spark, sf_dir):
         F.row_number().over(
             Window.partitionBy("user_id").orderBy("ts", "event_id"))
         .alias("rn"))
-    d38 = "decimal(38,0)"
     grp = (seq.filter(F.col("rn") <= 4)
            .groupBy("user_id")
            .agg(F.sum("c").alias("sg"),
-                F.sum(F.col("c").cast(d38) * F.col("c")).alias("qg"),
+                F.sum(wide("c") * F.col("c")).alias("qg"),
                 F.count("*").alias("kk"))
            .filter(F.col("kk") == 4))
     st = grp.agg(F.count("*").alias("g"),
                  F.sum("sg").alias("t"),
-                 F.sum(F.col("sg").cast(d38) * F.col("sg")).alias("ssg"),
+                 F.sum(wide("sg") * F.col("sg")).alias("ssg"),
                  F.sum("qg").alias("q"))
     g = F.col("g")
-    msb = ((g.cast(d38) * F.col("ssg")
-            - F.col("t").cast(d38) * F.col("t")).cast("double")
+    msb = (comoment(g, "ssg", "t", "t").cast("double")
            / (4.0 * g) / (g - 1))
     msw = ((4 * F.col("q") - F.col("ssg")).cast("double")
            / 4.0 / (g * 3.0))

@@ -36,7 +36,9 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import erfc, erfc_sql, h32, h32_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, erfc, erfc_sql, h32, h32_sql, units_sum,
+    units_sum_sql, wide, wide_sql)
 
 
 _BB_L = 30          # block length (days)
@@ -85,8 +87,8 @@ _BB_DRAW = 80       # blocks drawn per replicate (~n/L)
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS b,
-               CAST(sum(m_c) AS HUGEINT) AS s,
-               sum(CAST(m_c AS HUGEINT) * m_c) AS q
+               {wide_sql('sum(m_c)')} AS s,
+               sum({wide_sql('m_c')} * m_c) AS q
         FROM reps
     ),
     ranked AS (
@@ -96,7 +98,7 @@ _BB_DRAW = 80       # blocks drawn per replicate (~n/L)
     )
     SELECT (SELECT CAST(max(n) AS BIGINT) FROM bsum) AS n_days,
            b AS n_replicates,
-           round(sqrt(CAST(CAST(b AS HUGEINT) * q - s * s AS DOUBLE)
+           round(sqrt(CAST({comoment_sql('b', 'q', 's', 's')} AS DOUBLE)
                       / (CAST(b AS DOUBLE) * b)) / 100.0, 2)
                AS block_boot_se,
            (SELECT round(m_c / 100.0, 2) FROM ranked WHERE rk = 3)
@@ -154,10 +156,9 @@ def ts_block_bootstrap(spark, sf_dir):
             .agg(F.round(F.sum("bs").cast("double")
                          / (_BB_DRAW * _BB_L)).cast("bigint")
                  .alias("m_c")))
-    d38 = "decimal(38,0)"
     st = reps.agg(F.count("*").alias("b"),
                   F.sum("m_c").alias("s"),
-                  F.sum(F.col("m_c").cast(d38) * F.col("m_c"))
+                  F.sum(wide("m_c") * F.col("m_c"))
                   .alias("q"))
     ranked = reps.select(
         "m_c", F.row_number().over(Window.orderBy("m_c"))
@@ -171,9 +172,7 @@ def ts_block_bootstrap(spark, sf_dir):
             .crossJoin(F.broadcast(ndays))
             .select("n_days", F.col("b").alias("n_replicates"),
                     F.round(F.sqrt(
-                        (F.col("b").cast(d38) * F.col("q")
-                         - F.col("s").cast(d38) * F.col("s"))
-                        .cast("double")
+                        comoment("b", "q", "s", "s").cast("double")
                         / (F.col("b").cast("double") * F.col("b")))
                         / 100.0, 2).alias("block_boot_se"),
                     "ci_lo", "ci_hi"))
@@ -196,11 +195,11 @@ def ts_block_bootstrap(spark, sf_dir):
     ),
     st AS (
         SELECT half, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS sx,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(y AS HUGEINT) * y) AS syy,
-               sum(CAST(x AS HUGEINT) * y) AS sxy
+               {wide_sql('sum(x)')} AS sx,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('y')} * y) AS syy,
+               sum({wide_sql('x')} * y) AS sxy
         FROM day GROUP BY half
     ),
     rr AS (
@@ -256,23 +255,16 @@ def stats_fisher_z_test(spark, sf_dir):
            .select(F.when(F.col("d").cast("date")
                           < F.lit("2024-01-16").cast("date"), 0)
                    .otherwise(1).alias("half"), "x", "y"))
-    d38 = "decimal(38,0)"
     st = day.groupBy("half").agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-        F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy"))
-    nn = F.col("n").cast(d38)
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
+        F.sum(wide("y") * F.col("y")).alias("syy"),
+        F.sum(wide("x") * F.col("y")).alias("sxy"))
     r = F.round(
-        (nn * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy"))
-        .cast("double")
-        / (F.sqrt((nn * F.col("sxx")
-                   - F.col("sx").cast(d38) * F.col("sx"))
-                  .cast("double"))
-           * F.sqrt((nn * F.col("syy")
-                     - F.col("sy").cast(d38) * F.col("sy"))
-                    .cast("double"))), 6)
+        comoment("n", "sxy", "sx", "sy").cast("double")
+        / (F.sqrt(comoment("n", "sxx", "sx", "sx").cast("double"))
+           * F.sqrt(comoment("n", "syy", "sy", "sy").cast("double"))), 6)
     rr = st.select("half", "n", r.alias("r"))
     zz = rr.agg(
         F.max(F.when(F.col("half") == 0, F.col("r"))).alias("r1"),

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql, units_sum, units_sum_sql
+from ..numerics import h32, h32_sql, units_sum, units_sum_sql, wide, wide_sql
 
 
 # Trigram sets of the even/odd document halves (the corpus-diff pair
@@ -294,10 +294,10 @@ def sketch_linear_counting(spark, sf_dir):
     ),
     m0 AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(c) AS HUGEINT) AS sc,
-               sum(CAST(c AS HUGEINT) * c) AS scc,
+               {wide_sql('sum(c)')} AS sc,
+               sum({wide_sql('c')} * c) AS scc,
                CAST(sum(y) AS BIGINT) AS sy,
-               CAST(sum(c * y) AS HUGEINT) AS scy
+               {wide_sql('sum(c * y)')} AS scy
         FROM rows_
     ),
     step1 AS (
@@ -381,10 +381,9 @@ def ml_logistic_newton(spark, sf_dir):
                      .otherwise(0).alias("y"),
                      F.round(F.col("value") * 100).cast("bigint")
                      .alias("c")))
-    d38 = "decimal(38,0)"
     m0 = rows_.agg(
         F.count("*").alias("n"), F.sum("c").alias("sc"),
-        F.sum(F.col("c").cast(d38) * F.col("c")).alias("scc"),
+        F.sum(wide("c") * F.col("c")).alias("scc"),
         F.sum("y").alias("sy"),
         F.sum(F.col("c") * F.col("y")).alias("scy"))
     sx = F.col("sc").cast("double") / 1e4

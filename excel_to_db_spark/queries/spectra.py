@@ -33,12 +33,13 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
 
 # --------------------------------------- embedding variance spectrum
 
-@query("embedding_variance_spectrum", oracle="""
+@query("embedding_variance_spectrum", oracle=f"""
     WITH comp AS (
         SELECT vec_id, u.i AS dim,
                CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1e6)
@@ -48,21 +49,21 @@ from ..numerics import units_sum, units_sum_sql
     ),
     dims AS (
         SELECT dim, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(v6) AS HUGEINT) AS s,
-               sum(CAST(v6 AS HUGEINT) * v6) AS q
+               {wide_sql('sum(v6)')} AS s,
+               sum({wide_sql('v6')} * v6) AS q
         FROM comp GROUP BY dim
     ),
     lam AS (
         SELECT dim,
-               CAST(round(CAST(CAST(n AS HUGEINT) * q - s * s
+               CAST(round(CAST({comoment_sql('n', 'q', 's', 's')}
                                AS DOUBLE)
                           / (CAST(n AS DOUBLE) * n)) AS BIGINT) AS l_u
         FROM dims
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS d,
-               CAST(sum(l_u) AS HUGEINT) AS tot_u,
-               sum(CAST(l_u AS HUGEINT) * l_u) AS sq_u,
+               {wide_sql('sum(l_u)')} AS tot_u,
+               sum({wide_sql('l_u')} * l_u) AS sq_u,
                CAST(max(l_u) AS BIGINT) AS max_u
         FROM lam
     )
@@ -98,18 +99,16 @@ def embedding_variance_spectrum(spark, sf_dir):
             .select("dim",
                     F.round(F.col("val").cast("double") * 1e6)
                     .cast("bigint").alias("v6")))
-    d38 = "decimal(38,0)"
     dims = comp.groupBy("dim").agg(
         F.count("*").alias("n"), F.sum("v6").alias("s"),
-        F.sum(F.col("v6").cast(d38) * F.col("v6")).alias("q"))
+        F.sum(wide("v6") * F.col("v6")).alias("q"))
     lam = dims.select(
-        F.round((F.col("n").cast(d38) * F.col("q")
-                 - F.col("s").cast(d38) * F.col("s")).cast("double")
+        F.round(comoment("n", "q", "s", "s").cast("double")
                 / (F.col("n").cast("double") * F.col("n")))
         .cast("bigint").alias("l_u"))
     st = lam.agg(F.count("*").alias("d"),
                  F.sum("l_u").alias("tot_u"),
-                 F.sum(F.col("l_u").cast(d38) * F.col("l_u"))
+                 F.sum(wide("l_u") * F.col("l_u"))
                  .alias("sq_u"),
                  F.max("l_u").alias("max_u"))
     n = T(spark, sf_dir, "embeddings").agg(F.count("*").alias("n"))
@@ -281,10 +280,10 @@ def ml_tree_depth2(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS sx,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
-               sum(CAST(x AS HUGEINT) * y) AS sxy
+               {wide_sql('sum(x)')} AS sx,
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('x')} * x) AS sxx,
+               sum({wide_sql('x')} * y) AS sxy
         FROM pairs WHERE x IS NOT NULL
     ),
     fit AS (
@@ -321,19 +320,15 @@ def ts_halflife(spark, sf_dir):
     pairs = (day.select(F.lag("y").over(W.orderBy("d")).alias("x"),
                         "y")
              .filter(F.col("x").isNotNull()))
-    d38 = "decimal(38,0)"
     st = pairs.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
-        F.sum(F.col("x").cast(d38) * F.col("y")).alias("sxy"))
-    nn = F.col("n").cast(d38)
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
+        F.sum(wide("x") * F.col("y")).alias("sxy"))
     fit = st.select(
         "n",
-        F.round((nn * F.col("sxy")
-                 - F.col("sx").cast(d38) * F.col("sy")).cast("double")
-                / (nn * F.col("sxx")
-                   - F.col("sx").cast(d38) * F.col("sx"))
+        F.round(comoment("n", "sxy", "sx", "sy").cast("double")
+                / comoment("n", "sxx", "sx", "sx")
                 .cast("double"), 6).alias("rho"))
     return fit.select(
         "n", "rho",

@@ -15,7 +15,8 @@ from pyspark.sql.window import Window as W
 
 from ..operators import physical
 from ..numerics import (
-    fixed_sum, fixed_sum_sql, h32, h32_sql, units_sum, units_sum_sql)
+    comoment, comoment_sql, fixed_sum, fixed_sum_sql, h32, h32_sql,
+    units_sum, units_sum_sql, wide, wide_quot, wide_quot_sql, wide_sql)
 from .registry import query
 from .relational import T
 
@@ -814,7 +815,7 @@ def agg_gini(spark, sf_dir):
          .select(F.round(F.col("o_totalprice")).cast("bigint").alias("x")))
     r = distributed_rank(t, "x", "x", "i")
     tot = t.agg(F.count("*").alias("n"), F.sum("x").alias("s"))
-    six = F.sum((F.col("i") * F.col("x")).cast("decimal(38,0)"))
+    six = F.sum(wide(F.col("i") * F.col("x")))
     return (r.crossJoin(F.broadcast(tot))
             .groupBy("n", "s")
             .agg(F.round((2.0 * six.cast("double"))
@@ -914,7 +915,7 @@ def stats_ols_multi(spark, sf_dir):
 
 # --------------------------------------------------------- one-way ANOVA
 
-@query("stats_anova_f", oracle="""
+@query("stats_anova_f", oracle=f"""
     WITH t AS (
         SELECT CAST(((date_diff('day', DATE '1995-01-02',
                                 CAST(o_orderdate AS DATE)) % 7) + 7) % 7
@@ -933,13 +934,13 @@ def stats_ols_multi(spark, sf_dir):
                CAST(sum(n) AS BIGINT) AS nt,
                CAST(sum(s) AS BIGINT) AS st,
                CAST(sum(ss) AS BIGINT) AS sst,
-               CAST(sum(CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT))
+               CAST(sum({wide_quot_sql(f'{wide_sql("s")} * s', 'n')})
                     AS BIGINT) AS between_int
         FROM g
     )
     SELECT k, nt,
            round((between_int
-                  - CAST((CAST(st AS HUGEINT) * st) // nt AS BIGINT))
+                  - {wide_quot_sql(f'{wide_sql("st")} * st', 'nt')})
                  / CAST(k - 1 AS DOUBLE)
                  / ((sst - between_int) / CAST(nt - k AS DOUBLE)),
                  5) AS f_stat
@@ -971,14 +972,13 @@ def stats_anova_f(spark, sf_dir):
     g = (t.groupBy("dow").agg(F.count("*").alias("n"),
                               F.sum("x").alias("s"),
                               F.sum(F.col("x") * F.col("x")).alias("ss"))
-         .withColumn("t", F.expr(
-             "CAST((CAST(s AS DECIMAL(38,0)) * s) DIV n AS BIGINT)")))
+         .withColumn("t", wide_quot(wide("s") * F.col("s"), "n")))
     m = g.agg(F.count("*").alias("k"),
               F.sum("n").alias("nt"),
               F.sum("s").alias("st"),
               F.sum("ss").alias("sst"),
               F.sum("t").alias("between_int"))
-    grand = F.expr("CAST((CAST(st AS DECIMAL(38,0)) * st) DIV nt AS BIGINT)")
+    grand = wide_quot(wide("st") * F.col("st"), "nt")
     ss_between = (F.col("between_int") - grand).cast("double")
     ss_within = (F.col("sst") - F.col("between_int")).cast("double")
     return m.select(
@@ -990,7 +990,7 @@ def stats_anova_f(spark, sf_dir):
 
 # ------------------------------------- Brown-Forsythe (robust Levene) test
 
-@query("stats_levene", oracle="""
+@query("stats_levene", oracle=f"""
     WITH t AS (
         SELECT CAST(((date_diff('day', DATE '1995-01-02',
                                 CAST(o_orderdate AS DATE)) % 7) + 7) % 7
@@ -1017,13 +1017,13 @@ def stats_anova_f(spark, sf_dir):
                CAST(sum(n) AS BIGINT) AS nt,
                CAST(sum(s) AS BIGINT) AS st,
                CAST(sum(ss) AS BIGINT) AS sst,
-               CAST(sum(CAST((CAST(s AS HUGEINT) * s) // n AS BIGINT))
+               CAST(sum({wide_quot_sql(f'{wide_sql("s")} * s', 'n')})
                     AS BIGINT) AS between_int
         FROM g
     )
     SELECT k, nt,
            round((between_int
-                  - CAST((CAST(st AS HUGEINT) * st) // nt AS BIGINT))
+                  - {wide_quot_sql(f'{wide_sql("st")} * st', 'nt')})
                  / CAST(k - 1 AS DOUBLE)
                  / ((sst - between_int) / CAST(nt - k AS DOUBLE)),
                  5) AS w_stat
@@ -1062,14 +1062,13 @@ def stats_levene(spark, sf_dir):
     g = (dv.groupBy("dow").agg(F.count("*").alias("n"),
                                F.sum("dev").alias("s"),
                                F.sum(F.col("dev") * F.col("dev")).alias("ss"))
-         .withColumn("t", F.expr(
-             "CAST((CAST(s AS DECIMAL(38,0)) * s) DIV n AS BIGINT)")))
+         .withColumn("t", wide_quot(wide("s") * F.col("s"), "n")))
     m = g.agg(F.count("*").alias("k"),
               F.sum("n").alias("nt"),
               F.sum("s").alias("st"),
               F.sum("ss").alias("sst"),
               F.sum("t").alias("between_int"))
-    grand = F.expr("CAST((CAST(st AS DECIMAL(38,0)) * st) DIV nt AS BIGINT)")
+    grand = wide_quot(wide("st") * F.col("st"), "nt")
     ss_between = (F.col("between_int") - grand).cast("double")
     ss_within = (F.col("sst") - F.col("between_int")).cast("double")
     return m.select(
@@ -1237,9 +1236,9 @@ def stats_hill_tail_index(spark, sf_dir):
         FROM li WHERE sp <= 5
     ),
     beta AS (
-        SELECT CAST(CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy
+        SELECT CAST({comoment_sql('n', 'sxy', 'sx', 'sy')}
                     AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx
+               / CAST({comoment_sql('n', 'sxx', 'sx', 'sx')}
                       AS DOUBLE) AS b1,
                n, sx, sy
         FROM m
@@ -1313,12 +1312,9 @@ def stats_conformal_coverage(spark, sf_dir):
               F.sum("y").alias("sy"),
               F.sum(F.col("x") * F.col("y")).alias("sxy"),
               F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    d38 = "CAST({0} AS DECIMAL(38,0))"
     beta = m.select(
-        (F.expr(d38.format("n") + " * sxy - " + d38.format("sx") + " * sy")
-         .cast("double")
-         / F.expr(d38.format("n") + " * sxx - " + d38.format("sx") + " * sx")
-         .cast("double")).alias("b1"),
+        (comoment("n", "sxy", "sx", "sy").cast("double")
+         / comoment("n", "sxx", "sx", "sx").cast("double")).alias("b1"),
         "n", "sx", "sy")
     b0 = beta.select("b1", ((F.col("sy") - F.col("b1") * F.col("sx"))
                             / F.col("n")).alias("b0"))
@@ -1618,7 +1614,7 @@ def stats_power_mde(spark, sf_dir):
 
 # ---------------------------------------- two-way ANOVA w/ interaction
 
-@query("stats_anova_twoway", oracle="""
+@query("stats_anova_twoway", oracle=f"""
     WITH t AS (
         SELECT CAST((((CAST(o_orderdate AS DATE)
                        - DATE '1995-01-02') % 7) + 7) % 7 AS INTEGER)
@@ -1630,11 +1626,11 @@ def stats_power_mde(spark, sf_dir):
     cells AS (
         SELECT dow, st, CAST(count(*) AS BIGINT) AS n,
                CAST(sum(x) AS BIGINT) AS s,
-               CAST(sum(CAST(x AS HUGEINT) * x) AS BIGINT) AS q
+               CAST(sum({wide_sql('x')} * x) AS BIGINT) AS q
         FROM t GROUP BY dow, st
     ),
     ca AS (
-        SELECT CAST(sum(CAST(CAST(s AS HUGEINT) * s // n AS BIGINT))
+        SELECT CAST(sum({wide_quot_sql(f'{wide_sql("s")} * s', 'n')})
                     AS BIGINT) AS a_int,
                CAST(count(*) AS BIGINT) AS k_dow
         FROM (SELECT dow, CAST(sum(n) AS BIGINT) AS n,
@@ -1642,7 +1638,7 @@ def stats_power_mde(spark, sf_dir):
               FROM cells GROUP BY dow)
     ),
     cb AS (
-        SELECT CAST(sum(CAST(CAST(s AS HUGEINT) * s // n AS BIGINT))
+        SELECT CAST(sum({wide_quot_sql(f'{wide_sql("s")} * s', 'n')})
                     AS BIGINT) AS b_int,
                CAST(count(*) AS BIGINT) AS k_st
         FROM (SELECT st, CAST(sum(n) AS BIGINT) AS n,
@@ -1650,7 +1646,7 @@ def stats_power_mde(spark, sf_dir):
               FROM cells GROUP BY st)
     ),
     cc AS (
-        SELECT CAST(sum(CAST(CAST(s AS HUGEINT) * s // n AS BIGINT))
+        SELECT CAST(sum({wide_quot_sql(f'{wide_sql("s")} * s', 'n')})
                     AS BIGINT) AS c_int,
                CAST(count(*) AS BIGINT) AS m_cells,
                CAST(sum(n) AS BIGINT) AS nt,
@@ -1659,7 +1655,7 @@ def stats_power_mde(spark, sf_dir):
         FROM cells
     ),
     g AS (
-        SELECT *, CAST(CAST(st_sum AS HUGEINT) * st_sum // nt AS BIGINT)
+        SELECT *, {wide_quot_sql(f'{wide_sql("st_sum")} * st_sum', 'nt')}
                       AS grand_int
         FROM cc, ca, cb
     )
@@ -1704,25 +1700,24 @@ def stats_anova_twoway(spark, sf_dir):
         F.round(F.col("o_totalprice")).cast("bigint").alias("x"))
     cells = (t.groupBy("dow", "st")
              .agg(F.count("*").alias("n"), F.sum("x").alias("s"),
-                  F.sum(F.col("x").cast("decimal(38,0)") * F.col("x"))
+                  F.sum(wide("x") * F.col("x"))
                   .cast("bigint").alias("q")))
-    term = "CAST((CAST(s AS DECIMAL(38,0)) * s) DIV n AS BIGINT)"
+    term = wide_quot(wide("s") * F.col("s"), "n")
     ca = (cells.groupBy("dow")
           .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-          .select(F.expr(term).alias("ta"))
+          .select(term.alias("ta"))
           .agg(F.sum("ta").alias("a_int"), F.count("*").alias("k_dow")))
     cb = (cells.groupBy("st")
           .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-          .select(F.expr(term).alias("tb"))
+          .select(term.alias("tb"))
           .agg(F.sum("tb").alias("b_int"), F.count("*").alias("k_st")))
-    cc = (cells.select(F.expr(term).alias("tc"), "n", "s", "q")
+    cc = (cells.select(term.alias("tc"), "n", "s", "q")
           .agg(F.sum("tc").alias("c_int"), F.count("*").alias("m_cells"),
                F.sum("n").alias("nt"), F.sum("s").alias("st_sum"),
                F.sum("q").alias("q_tot")))
     g = (cc.crossJoin(F.broadcast(ca)).crossJoin(F.broadcast(cb))
-         .withColumn("grand_int", F.expr(
-             "CAST((CAST(st_sum AS DECIMAL(38,0)) * st_sum) DIV nt "
-             "AS BIGINT)")))
+         .withColumn("grand_int",
+                     wide_quot(wide("st_sum") * F.col("st_sum"), "nt")))
     mse = (F.col("q_tot") - F.col("c_int")) * 1.0 \
         / (F.col("nt") - F.col("m_cells"))
     return g.select(

@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import h32, h32_sql, units_sum, units_sum_sql
+from ..numerics import (
+    comoment, comoment_sql, h32, h32_sql, units_sum, units_sum_sql, wide,
+    wide_sql)
 
 
 # ----------------------------------------------- embedding isotropy
@@ -58,11 +60,11 @@ from ..numerics import h32, h32_sql, units_sum, units_sum_sql
         FROM comp JOIN norms ON comp.vec_id = norms.vec_id
     ),
     dims AS (
-        SELECT dim, CAST(sum(u9) AS HUGEINT) AS s9
+        SELECT dim, {wide_sql('sum(u9)')} AS s9
         FROM unitc GROUP BY dim
     ),
     st AS (
-        SELECT CAST(sum(s9 * s9) AS HUGEINT) AS ss,
+        SELECT {wide_sql('sum(s9 * s9)')} AS ss,
                (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n,
                CAST(count(*) AS BIGINT) AS d
         FROM dims
@@ -107,10 +109,9 @@ def embedding_isotropy(spark, sf_dir):
              .select("dim",
                      F.round(F.col("v") / F.col("nrm") * 1e9)
                      .cast("bigint").alias("u9")))
-    d38 = "decimal(38,0)"
     dims = unitc.groupBy("dim").agg(F.sum("u9").alias("s9"))
     n = T(spark, sf_dir, "embeddings").agg(F.count("*").alias("n"))
-    st = (dims.agg(F.sum(F.col("s9").cast(d38) * F.col("s9"))
+    st = (dims.agg(F.sum(wide("s9") * F.col("s9"))
                    .alias("ss"),
                    F.count("*").alias("d"))
           .crossJoin(F.broadcast(n)))
@@ -186,8 +187,8 @@ _TWO_PI = "6.283185307179586"
 def _pg_oracle() -> str:
     dev = "(y - CAST(sy AS DOUBLE) / n)"
     arms = ",\n               ".join(
-        f"CAST({units_sum_sql(f'{dev} * {fn}({_TWO_PI} * t / {p}.0)')}"
-        f" AS HUGEINT) AS {fn[0]}{p}"
+        f"{wide_sql(units_sum_sql(f'{dev} * {fn}({_TWO_PI} * t / {p}.0)'))}"
+        f" AS {fn[0]}{p}"
         for p in _PERIODS for fn in ("cos", "sin"))
     rows = "\n        UNION ALL\n".join(
         f"        SELECT CAST({p} AS BIGINT) AS period,"
@@ -205,13 +206,13 @@ def _pg_oracle() -> str:
     ),
     m AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(y) AS HUGEINT) AS sy,
-               sum(CAST(y AS HUGEINT) * y) AS syy
+               {wide_sql('sum(y)')} AS sy,
+               sum({wide_sql('y')} * y) AS syy
         FROM ser
     ),
     terms AS (
         SELECT n,
-               CAST(CAST(n AS HUGEINT) * syy - sy * sy AS DOUBLE) / n
+               CAST({comoment_sql('n', 'syy', 'sy', 'sy')} AS DOUBLE) / n
                    AS syyc,
                {arms}
         FROM ser, m GROUP BY n, syyc
@@ -248,20 +249,16 @@ def ts_periodogram(spark, sf_dir):
     constant 4-row unpivot."""
     from .regdiag import _dayser
     ser = _dayser(spark, sf_dir).select("t", "y")
-    d38 = "decimal(38,0)"
     m = ser.agg(F.count("*").alias("n"), F.sum("y").alias("sy"),
-                F.sum(F.col("y").cast(d38) * F.col("y")).alias("syy"))
+                F.sum(wide("y") * F.col("y")).alias("syy"))
     two_pi = float(_TWO_PI)
     dem = F.col("y") - F.col("sy").cast("double") / F.col("n")
     aggs = []
     for p in _PERIODS:
         ang = F.lit(two_pi) * F.col("t") / float(p)
-        aggs += [units_sum(dem * F.cos(ang))
-                 .cast(d38).alias(f"c{p}"),
-                 units_sum(dem * F.sin(ang))
-                 .cast(d38).alias(f"s{p}")]
-    syyc = ((F.col("n").cast(d38) * F.col("syy")
-             - F.col("sy").cast(d38) * F.col("sy")).cast("double")
+        aggs += [wide(units_sum(dem * F.cos(ang))).alias(f"c{p}"),
+                 wide(units_sum(dem * F.sin(ang))).alias(f"s{p}")]
+    syyc = (comoment("n", "syy", "sy", "sy").cast("double")
             / F.col("n"))
     terms = (ser.crossJoin(F.broadcast(m))
              .groupBy("n", syyc.alias("syyc")).agg(*aggs))
@@ -309,21 +306,21 @@ def ts_periodogram(spark, sf_dir):
     pk AS (SELECT yhat, CAST(count(*) AS BIGINT) AS p FROM labeled
            GROUP BY yhat),
     cross_ AS (
-        SELECT CAST(sum(CAST(tk.t AS HUGEINT) * pk.p) AS HUGEINT)
+        SELECT {wide_sql(f'sum({wide_sql("tk.t")} * pk.p)')}
                    AS tp_sum
         FROM tk JOIN pk ON tk.y = pk.yhat
     ),
     sq AS (
-        SELECT (SELECT CAST(sum(CAST(t AS HUGEINT) * t) AS HUGEINT)
+        SELECT (SELECT {wide_sql(f'sum({wide_sql("t")} * t)')}
                 FROM tk) AS t2,
-               (SELECT CAST(sum(CAST(p AS HUGEINT) * p) AS HUGEINT)
+               (SELECT {wide_sql(f'sum({wide_sql("p")} * p)')}
                 FROM pk) AS p2
     )
     SELECT s, c,
            round(CAST(c AS DOUBLE) / s, 6) AS accuracy,
-           round(CAST(CAST(c AS HUGEINT) * s - tp_sum AS DOUBLE)
-                 / (sqrt(CAST(CAST(s AS HUGEINT) * s - p2 AS DOUBLE))
-                    * sqrt(CAST(CAST(s AS HUGEINT) * s - t2
+           round(CAST({wide_sql('c')} * s - tp_sum AS DOUBLE)
+                 / (sqrt(CAST({wide_sql('s')} * s - p2 AS DOUBLE))
+                    * sqrt(CAST({wide_sql('s')} * s - t2
                                 AS DOUBLE))), 6) AS mcc
     FROM st, cross_, sq
 """)
@@ -363,21 +360,20 @@ def eval_mcc_multiclass(spark, sf_dir):
         .alias("c"))
     tk = labeled.groupBy("y").agg(F.count("*").alias("t"))
     pk = labeled.groupBy("yhat").agg(F.count("*").alias("p"))
-    d38 = "decimal(38,0)"
     cross_ = (tk.join(pk, tk.y == pk.yhat)
-              .agg(F.sum(F.col("t").cast(d38) * F.col("p"))
+              .agg(F.sum(wide("t") * F.col("p"))
                    .alias("tp_sum")))
-    t2 = tk.agg(F.sum(F.col("t").cast(d38) * F.col("t")).alias("t2"))
-    p2 = pk.agg(F.sum(F.col("p").cast(d38) * F.col("p")).alias("p2"))
+    t2 = tk.agg(F.sum(wide("t") * F.col("t")).alias("t2"))
+    p2 = pk.agg(F.sum(wide("p") * F.col("p")).alias("p2"))
     j = (st.crossJoin(F.broadcast(cross_))
          .crossJoin(F.broadcast(t2))
          .crossJoin(F.broadcast(p2)))
-    ss = F.col("s").cast(d38)
+    ss = wide("s")
     return j.select(
         "s", "c",
         F.round(F.col("c").cast("double") / F.col("s"), 6)
         .alias("accuracy"),
-        F.round((F.col("c").cast(d38) * F.col("s") - F.col("tp_sum"))
+        F.round((wide("c") * F.col("s") - F.col("tp_sum"))
                 .cast("double")
                 / (F.sqrt((ss * F.col("s") - F.col("p2"))
                           .cast("double"))

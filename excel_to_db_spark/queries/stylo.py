@@ -36,12 +36,12 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum_sql
+from ..numerics import comoment, comoment_sql, units_sum_sql, wide, wide_sql
 
 
 # ------------------------------------------------ Burrows' Delta
 
-@query("text_burrows_delta", oracle="""
+@query("text_burrows_delta", oracle=f"""
     WITH tok AS (
         SELECT source, unnest(string_split(text, ' ')) AS w
         FROM documents
@@ -70,14 +70,14 @@ from ..numerics import units_sum_sql
         SELECT w,
                CAST(count(*) AS BIGINT) AS k,
                CAST(sum(f_ppm) AS BIGINT) AS s,
-               sum(CAST(f_ppm AS HUGEINT) * f_ppm) AS q
+               sum({wide_sql('f_ppm')} * f_ppm) AS q
         FROM freq GROUP BY w
     ),
     z AS (
         SELECT freq.source, freq.w,
                CAST(round((freq.f_ppm - CAST(ws.s AS DOUBLE) / ws.k)
-                    / (sqrt(CAST(CAST(ws.k AS HUGEINT) * ws.q
-                                 - ws.s * ws.s AS DOUBLE)) / ws.k)
+                    / (sqrt(CAST({comoment_sql('ws.k', 'ws.q', 'ws.s', 'ws.s')}
+                                 AS DOUBLE)) / ws.k)
                     * 1e6) AS BIGINT) AS z_u
         FROM freq JOIN wstats ws ON freq.w = ws.w
     ),
@@ -129,18 +129,15 @@ def text_burrows_delta(spark, sf_dir):
                     F.round(F.col("c").cast("double") * 1e6
                             / F.col("n_tok")).cast("bigint")
                     .alias("f_ppm")))
-    d38 = "decimal(38,0)"
     wstats = freq.groupBy("w").agg(
         F.count("*").alias("k"),
         F.sum("f_ppm").alias("s"),
-        F.sum(F.col("f_ppm").cast(d38) * F.col("f_ppm")).alias("q"))
+        F.sum(wide("f_ppm") * F.col("f_ppm")).alias("q"))
     z = (freq.join(wstats, "w")
          .select("source", "w",
                  F.round((F.col("f_ppm")
                           - F.col("s").cast("double") / F.col("k"))
-                         / (F.sqrt((F.col("k").cast(d38) * F.col("q")
-                                    - F.col("s").cast(d38)
-                                    * F.col("s")).cast("double"))
+                         / (F.sqrt(comoment("k", "q", "s", "s").cast("double"))
                             / F.col("k")) * 1e6).cast("bigint")
                  .alias("z_u")))
     a = (z.filter(F.col("source") == "src0")
@@ -244,6 +241,9 @@ def stats_page_trend(spark, sf_dir):
 
 # ---------------------------------------------- Weibull Menon fit
 
+_LN_GAP_U = "CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6) AS BIGINT)"
+
+
 @query("stats_weibull_fit", oracle=f"""
     WITH gaps AS (
         SELECT CAST(floor(epoch(ts)) AS BIGINT)
@@ -255,17 +255,14 @@ def stats_page_trend(spark, sf_dir):
     lm AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                {units_sum_sql('ln(CAST(gap AS DOUBLE))', 1e6)} AS sl,
-               sum(CAST(CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6)
-                             AS BIGINT) AS HUGEINT)
-                   * CAST(round(ln(CAST(gap AS DOUBLE)) * 1e6)
-                          AS BIGINT)) AS ql
+               sum({wide_sql(_LN_GAP_U)} * {_LN_GAP_U}) AS ql
         FROM gaps WHERE gap IS NOT NULL AND gap > 0
     ),
     fit AS (
         SELECT n,
                3.141592653589793
-               / (sqrt(CAST(CAST(n AS HUGEINT) * ql - CAST(sl AS
-                            HUGEINT) * sl AS DOUBLE)) / n / 1e6
+               / (sqrt(CAST({comoment_sql('n', 'ql', 'sl', 'sl')} AS DOUBLE))
+                  / n / 1e6
                   * sqrt(6.0)) AS k_shape,
                CAST(sl AS DOUBLE) / n / 1e6 AS mean_ln
         FROM lm
@@ -307,13 +304,11 @@ def stats_weibull_fit(spark, sf_dir):
          .filter(F.col("gap").isNotNull() & (F.col("gap") > 0)))
     lnl = F.round(F.log(F.col("gap").cast("double")) * 1e6) \
         .cast("bigint")
-    d38 = "decimal(38,0)"
     lm = g.select(lnl.alias("l")).agg(
         F.count("*").alias("n"),
         F.sum("l").alias("sl"),
-        F.sum(F.col("l").cast(d38) * F.col("l")).alias("ql"))
-    sigma = (F.sqrt((F.col("n").cast(d38) * F.col("ql")
-                     - F.col("sl").cast(d38) * F.col("sl"))
+        F.sum(wide("l") * F.col("l")).alias("ql"))
+    sigma = (F.sqrt(comoment("n", "ql", "sl", "sl")
                     .cast("double")) / F.col("n") / 1e6)
     k = 3.141592653589793 / (sigma * F.sqrt(F.lit(6.0)))
     fit = lm.select(
@@ -332,7 +327,7 @@ def stats_weibull_fit(spark, sf_dir):
 
 # ------------------------------------------------------ Heaps' law
 
-@query("text_heaps_law", oracle="""
+@query("text_heaps_law", oracle=f"""
     WITH d AS (
         SELECT doc_id, string_split(text, ' ') AS t,
                CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT)
@@ -375,10 +370,10 @@ def stats_weibull_fit(spark, sf_dir):
     ),
     ols AS (
         SELECT CAST(count(*) AS BIGINT) AS m,
-               CAST(sum(lx) AS HUGEINT) AS sx,
-               CAST(sum(ly) AS HUGEINT) AS sy,
-               sum(CAST(lx AS HUGEINT) * lx) AS sxx,
-               sum(CAST(lx AS HUGEINT) * ly) AS sxy
+               {wide_sql('sum(lx)')} AS sx,
+               {wide_sql('sum(ly)')} AS sy,
+               sum({wide_sql('lx')} * lx) AS sxx,
+               sum({wide_sql('lx')} * ly) AS sxy
         FROM logs
     )
     SELECT (SELECT CAST(max(v) AS BIGINT) FROM points) AS vocab_full,
@@ -448,17 +443,13 @@ def text_heaps_law(spark, sf_dir):
         .cast("bigint").alias("lx"),
         F.round(F.log(F.col("v").cast("double")) * 1e6)
         .cast("bigint").alias("ly"))
-    d38 = "decimal(38,0)"
     ols = logs.agg(
         F.count("*").alias("m"),
         F.sum("lx").alias("sx"), F.sum("ly").alias("sy"),
-        F.sum(F.col("lx").cast(d38) * F.col("lx")).alias("sxx"),
-        F.sum(F.col("lx").cast(d38) * F.col("ly")).alias("sxy"))
-    mm = F.col("m").cast(d38)
-    beta = ((mm * F.col("sxy") - F.col("sx").cast(d38) * F.col("sy"))
-            .cast("double")
-            / (mm * F.col("sxx") - F.col("sx").cast(d38) * F.col("sx"))
-            .cast("double"))
+        F.sum(wide("lx") * F.col("lx")).alias("sxx"),
+        F.sum(wide("lx") * F.col("ly")).alias("sxy"))
+    beta = (comoment("m", "sxy", "sx", "sy").cast("double")
+            / comoment("m", "sxx", "sx", "sx").cast("double"))
     vfull = points.agg(F.max("v").alias("vocab_full"))
     return (ols.crossJoin(F.broadcast(vfull))
             .select("vocab_full",

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
+from ..numerics import units_sum, units_sum_sql, wide, wide_sql
 
 
 # ----------------------------------------- syllable complexity census
@@ -106,7 +106,7 @@ def text_syllable_complexity(spark, sf_dir):
 
 # ------------------------------------------------------- Yule's K
 
-@query("text_yule_k", oracle="""
+@query("text_yule_k", oracle=f"""
     WITH d AS (
         SELECT string_split(text, ' ') AS t FROM documents
         WHERE len(string_split(text, ' ')) >= 3
@@ -121,7 +121,7 @@ def text_syllable_complexity(spark, sf_dir):
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS v,
                CAST(sum(r) AS BIGINT) AS n,
-               sum(CAST(r AS HUGEINT) * r) AS r2
+               sum({wide_sql('r')} * r) AS r2
         FROM tf
     )
     SELECT v, n,
@@ -146,11 +146,10 @@ def text_yule_k(spark, sf_dir):
     Scale shape: in-array trigram HOF + one frequency aggregate + a
     1-row reduce."""
     from .inequality import _trigrams
-    d38 = "decimal(38,0)"
     tf = (_trigrams(spark, sf_dir)
           .groupBy("w").agg(F.count("*").alias("r")))
     st = tf.agg(F.count("*").alias("v"), F.sum("r").alias("n"),
-                F.sum(F.col("r").cast(d38) * F.col("r")).alias("r2"))
+                F.sum(wide("r") * F.col("r")).alias("r2"))
     return st.select(
         "v", "n",
         F.round(1e4 * (F.col("r2") - F.col("n")).cast("double")

@@ -35,7 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..numerics import chi2_sf, chi2_sf_sql, units_sum, units_sum_sql
+from ..numerics import (
+    chi2_sf, chi2_sf_sql, comoment, comoment_sql, units_sum, units_sum_sql,
+    wide, wide_sql)
 from .registry import query
 from .relational import T
 
@@ -58,21 +60,21 @@ def _daily(spark, sf_dir):
 
 # --------------------------------------------- Jarque-Bera normality
 
-@query("stats_jarque_bera", oracle="""
+@query("stats_jarque_bera", oracle=f"""
     WITH v AS (
         SELECT CAST(round(o_totalprice) AS BIGINT) AS x FROM orders
     ),
     piv AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS s1,
+               {wide_sql('sum(x)')} AS s1,
                CAST(sum(x) // count(*) AS BIGINT) AS a
         FROM v
     ),
     cm AS (
-        SELECT CAST(sum(x - a) AS HUGEINT) AS sd,
-               sum(CAST((x - a) * (x - a) AS HUGEINT)) AS d2,
-               sum(CAST((x - a) * (x - a) AS HUGEINT) * (x - a)) AS d3,
-               sum(CAST((x - a) * (x - a) AS HUGEINT)
+        SELECT {wide_sql('sum(x - a)')} AS sd,
+               sum({wide_sql('(x - a) * (x - a)')}) AS d2,
+               sum({wide_sql('(x - a) * (x - a)')} * (x - a)) AS d3,
+               sum({wide_sql('(x - a) * (x - a)')}
                    * ((x - a) * (x - a))) AS d4
         FROM v, piv
     )
@@ -137,9 +139,9 @@ def stats_jarque_bera(spark, sf_dir):
     cm = (v.crossJoin(F.broadcast(piv))
           .agg(F.max("n").alias("n"),
                F.sum(d).alias("sd"),
-               F.sum(d2.cast("decimal(38,0)")).alias("d2"),
-               F.sum(d2.cast("decimal(38,0)") * d).alias("d3"),
-               F.sum(d2.cast("decimal(38,0)") * d2).alias("d4")))
+               F.sum(wide(d2)).alias("d2"),
+               F.sum(wide(d2) * d).alias("d3"),
+               F.sum(wide(d2) * d2).alias("d4")))
     n = F.col("n").cast("double")
     mu = F.col("sd").cast("double") / n
     m2 = F.col("d2").cast("double") / n - mu * mu
@@ -165,18 +167,18 @@ def stats_jarque_bera(spark, sf_dir):
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS s,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
+               {wide_sql('sum(x)')} AS s,
+               sum({wide_sql('x')} * x) AS sxx,
                sum(CASE WHEN xp IS NOT NULL THEN
-                        CAST((x - xp) AS HUGEINT) * (x - xp) END) AS sdd
+                        {wide_sql('(x - xp)')} * (x - xp) END) AS sdd
         FROM lagged
     )
     SELECT n,
-           round(CAST(CAST(n AS HUGEINT) * sdd AS DOUBLE)
-                 / CAST(CAST(n AS HUGEINT) * sxx - s * s AS DOUBLE), 5)
+           round(CAST({wide_sql('n')} * sdd AS DOUBLE)
+                 / CAST({comoment_sql('n', 'sxx', 's', 's')} AS DOUBLE), 5)
                AS dw,
-           round(1.0 - round(CAST(CAST(n AS HUGEINT) * sdd AS DOUBLE)
-                 / CAST(CAST(n AS HUGEINT) * sxx - s * s AS DOUBLE), 5)
+           round(1.0 - round(CAST({wide_sql('n')} * sdd AS DOUBLE)
+                 / CAST({comoment_sql('n', 'sxx', 's', 's')} AS DOUBLE), 5)
                  / 2.0, 5) AS rho1_approx
     FROM st
 """)
@@ -201,18 +203,16 @@ def ts_durbin_watson(spark, sf_dir):
     day = _daily(spark, sf_dir)
     lagged = day.select(
         "x", F.lag("x").over(Window.orderBy("day")).alias("xp"))
-    d38 = "decimal(38,0)"
     st = lagged.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("s"),
-        F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx"),
+        F.sum(wide("x") * F.col("x")).alias("sxx"),
         F.sum(F.when(F.col("xp").isNotNull(),
-                     (F.col("x") - F.col("xp")).cast(d38)
+                     wide(F.col("x") - F.col("xp"))
                      * (F.col("x") - F.col("xp")))).alias("sdd"))
     dw = F.round(
-        (F.col("n").cast(d38) * F.col("sdd")).cast("double")
-        / (F.col("n").cast(d38) * F.col("sxx")
-           - F.col("s").cast(d38) * F.col("s")).cast("double"), 5)
+        (wide("n") * F.col("sdd")).cast("double")
+        / comoment("n", "sxx", "s", "s").cast("double"), 5)
     return (st.select("n", dw.alias("dw"))
             .select("n", "dw",
                     F.round(1.0 - F.col("dw") / 2.0, 5)
@@ -229,17 +229,17 @@ def _lb_oracle() -> str:
         f"lag(x, {k}) OVER (ORDER BY day) AS l{k}"
         for k in range(1, _LB_LAGS + 1))
     aggs = ",\n               ".join(
-        f"sum(CAST(x AS HUGEINT) * l{k}) AS sxy{k},\n               "
-        f"CAST(sum(l{k}) AS HUGEINT) AS h{k},\n               "
-        f"CAST(sum(CASE WHEN l{k} IS NOT NULL THEN x END) AS HUGEINT)"
+        f"sum({wide_sql('x')} * l{k}) AS sxy{k},\n               "
+        f"{wide_sql(f'sum(l{k})')} AS h{k},\n               "
+        f"{wide_sql(f'sum(CASE WHEN l{k} IS NOT NULL THEN x END)')}"
         f" AS t{k}" for k in range(1, _LB_LAGS + 1))
     gk = " + ".join(
-        f"(CAST(CAST(n AS HUGEINT) * n * sxy{k}"
-        f" - CAST(n AS HUGEINT) * s * (h{k} + t{k})"
-        f" + (n - {k}) * (CAST(s AS HUGEINT) * s) AS DOUBLE) / g0)"
-        f" * (CAST(CAST(n AS HUGEINT) * n * sxy{k}"
-        f" - CAST(n AS HUGEINT) * s * (h{k} + t{k})"
-        f" + (n - {k}) * (CAST(s AS HUGEINT) * s) AS DOUBLE) / g0)"
+        f"(CAST({wide_sql('n')} * n * sxy{k}"
+        f" - {wide_sql('n')} * s * (h{k} + t{k})"
+        f" + (n - {k}) * ({wide_sql('s')} * s) AS DOUBLE) / g0)"
+        f" * (CAST({wide_sql('n')} * n * sxy{k}"
+        f" - {wide_sql('n')} * s * (h{k} + t{k})"
+        f" + (n - {k}) * ({wide_sql('s')} * s) AS DOUBLE) / g0)"
         f" / (n - {k})" for k in range(1, _LB_LAGS + 1))
     return f"""
     WITH day AS ({_DAY_SQL}),
@@ -250,21 +250,21 @@ def _lb_oracle() -> str:
     ),
     st AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS HUGEINT) AS s,
-               sum(CAST(x AS HUGEINT) * x) AS sxx,
+               {wide_sql('sum(x)')} AS s,
+               sum({wide_sql('x')} * x) AS sxx,
                {aggs}
         FROM lagged
     ),
     base AS (
         SELECT *,
-               CAST(CAST(n AS HUGEINT) * n * sxx
-                    - CAST(n AS HUGEINT) * (s * s) AS DOUBLE) AS g0
+               CAST({wide_sql('n')} * n * sxx
+                    - {wide_sql('n')} * (s * s) AS DOUBLE) AS g0
         FROM st
     )
     SELECT n, CAST({_LB_LAGS} AS BIGINT) AS df,
-           round((CAST(CAST(n AS HUGEINT) * n * sxy1
-                       - CAST(n AS HUGEINT) * s * (h1 + t1)
-                       + (n - 1) * (CAST(s AS HUGEINT) * s) AS DOUBLE)
+           round((CAST({wide_sql('n')} * n * sxy1
+                       - {wide_sql('n')} * s * (h1 + t1)
+                       + (n - 1) * ({wide_sql('s')} * s) AS DOUBLE)
                   / g0), 6) AS rho1,
            round((CAST(n AS DOUBLE) * (n + 2)) * ({gk}), 4) AS q_stat
     FROM base
@@ -297,26 +297,24 @@ def ts_ljung_box(spark, sf_dir):
     lagged = day.select(
         "x", *[F.lag("x", k).over(w).alias(f"l{k}")
                for k in range(1, _LB_LAGS + 1)])
-    d38 = "decimal(38,0)"
     aggs = [F.count("*").alias("n"), F.sum("x").alias("s"),
-            F.sum(F.col("x").cast(d38) * F.col("x")).alias("sxx")]
+            F.sum(wide("x") * F.col("x")).alias("sxx")]
     for k in range(1, _LB_LAGS + 1):
         aggs += [
-            F.sum(F.col("x").cast(d38) * F.col(f"l{k}")).alias(f"sxy{k}"),
+            F.sum(wide("x") * F.col(f"l{k}")).alias(f"sxy{k}"),
             F.sum(f"l{k}").alias(f"h{k}"),
             F.sum(F.when(F.col(f"l{k}").isNotNull(), F.col("x")))
              .alias(f"t{k}")]
     st = lagged.agg(*aggs)
+    n, s = F.col("n"), F.col("s")
     base = st.withColumn(
-        "g0", F.expr("CAST(CAST(n AS DECIMAL(38,0)) * n * sxx"
-                     " - CAST(n AS DECIMAL(38,0)) * (CAST(s AS"
-                     " DECIMAL(38,0)) * s) AS DOUBLE)"))
+        "g0", (wide(n) * n * F.col("sxx")
+               - wide(n) * (wide(s) * s)).cast("double"))
 
     def g(k: int):
-        return F.expr(
-            f"CAST(CAST(n AS DECIMAL(38,0)) * n * sxy{k}"
-            f" - CAST(n AS DECIMAL(38,0)) * s * (h{k} + t{k})"
-            f" + (n - {k}) * (CAST(s AS DECIMAL(38,0)) * s) AS DOUBLE)")
+        return (wide(n) * n * F.col(f"sxy{k}")
+                - wide(n) * s * (F.col(f"h{k}") + F.col(f"t{k}"))
+                + (n - k) * (wide(s) * s)).cast("double")
 
     qsum = None
     for k in range(1, _LB_LAGS + 1):

@@ -19,19 +19,21 @@ sys.path.insert(0, os.path.join(
 
 from check import TABLES, _row_multiset  # noqa: E402
 
-from excel_to_db_spark.numerics import h32_sql, units_sum_sql  # noqa: E402
+from excel_to_db_spark.numerics import (  # noqa: E402
+    h32_sql, units_sum_sql, wide_sql)
 
 PAPER_SURFACE = ("excel_scan", "load_rowcount", "display_format",
                  "csv_export", "excel_datasource")
 
 # Text a numerics twin writes into an oracle (the md5 prefix of
 # `h32_sql`, which `u01_sql` wraps, the A-S constant of `erfc_sql`,
-# which `chi2_sf_sql` wraps, and the unit-sum head of `units_sum_sql`,
-# which `fixed_sum_sql` and `cents_sum_sql` wrap): a key whose oracle
-# holds one must agree with Spark through that twin, so a new caller
-# is checked here without a list edit.
+# which `chi2_sf_sql` wraps, the unit-sum head of `units_sum_sql`,
+# which `fixed_sum_sql` and `cents_sum_sql` wrap, and the HUGEINT cast
+# of `wide_sql`, which `comoment_sql` and `wide_quot_sql` wrap): a key
+# whose oracle holds one must agree with Spark through that twin, so a
+# new caller is checked here without a list edit.
 _TWIN_TEXT = (h32_sql("x").split("md5(")[0], "0.3275911",
-              units_sum_sql("x").split("x")[0])
+              units_sum_sql("x").split("x")[0], wide_sql("x").split("x")[1])
 NUMERICS_CALLERS = sorted(k for k, sql in E.oracle_sql().items()
                           if any(t in sql for t in _TWIN_TEXT))
 
@@ -73,9 +75,10 @@ def test_paper_surface_key_matches_oracle(spark, duck, sf_dir, key):
 
 
 def test_numerics_callers_are_found():
-    assert len(NUMERICS_CALLERS) >= 225
+    assert len(NUMERICS_CALLERS) >= 253
     assert {"geo_knn_topk", "stats_sign_test", "privacy_dp_median",
-            "text_winnowing", "cte_query", "agg_groupby"} \
+            "text_winnowing", "cte_query", "agg_groupby", "stats_anova_f",
+            "text_zipf_fit"} \
         <= set(NUMERICS_CALLERS)
 
 

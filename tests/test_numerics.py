@@ -1,6 +1,7 @@
-"""numerics.py: the one place that sums in integer units, turns a test
-statistic into a p-value and hashes a value to 32 bits or to a
-uniform, on Spark and in the DuckDB oracles alike."""
+"""numerics.py: the one place that sums in integer units, carries an
+exact moment in a wide integer, turns a test statistic into a p-value
+and hashes a value to 32 bits or to a uniform, on Spark and in the
+DuckDB oracles alike."""
 
 from __future__ import annotations
 
@@ -11,12 +12,13 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import SF_DIR, h32 as md5_h32
 from excel_to_db_spark.numerics import (
-    cents_sum, cents_sum_sql, chi2_sf, chi2_sf_sql, erfc, erfc_sql,
-    fixed_sum, fixed_sum_sql, h32, h32_sql, u01, u01_sql, units_sum,
-    units_sum_sql)
+    cents_sum, cents_sum_sql, chi2_sf, chi2_sf_sql, comoment, comoment_sql,
+    erfc, erfc_sql, fixed_sum, fixed_sum_sql, h32, h32_sql, u01, u01_sql,
+    units_sum, units_sum_sql, wide, wide_quot, wide_quot_sql, wide_sql)
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "excel_to_db_spark"
 
@@ -58,6 +60,9 @@ _OUTSIDE_NUMERICS = {
     "h32 (DuckDB concat)": re.compile(
         r"concat\(\s*'0x'\s*,\s*substring\(\s*md5\("),
     "u01": re.compile(r"/\s*4294967296\.0"),
+    "wide integer (SQL)": re.compile(
+        r"\bAS\s+HUGEINT\b|::\s*HUGEINT|AS\s+DECIMAL\(38,\s*0\)", re.I),
+    "wide integer (Spark)": re.compile(r"\"decimal\(38,\s*0\)\"", re.I),
 }
 
 # z from -4 to 4: the reflection branch, zero, and both tails.
@@ -264,3 +269,59 @@ def test_sql_twins_keep_the_literal_type():
     con = duckdb.connect()
     assert [str(t) for t in con.sql(
         "SELECT 3 * 1e6, 3 * 1000000.0").types] == ["DOUBLE", "DECIMAL(18,1)"]
+
+
+# Each case: (n, Sab, Sa, Sb) for the comoment and (a, b, d) for the
+# quotient (a * b) div d. The comoment's n*Sab is past 2^63; the
+# quotient's numerator is negative, or past 2^63 where DuckDB's `//`
+# over DECIMAL(38,0) would divide in DOUBLE.
+_COMOMENTS = [(10**10, 10**10, 3 * 10**9, 7 * 10**9),
+              (7, 12, -5, 9), (2**62, 4, 2**62, 3)]
+_QUOTIENTS = [(-7, 1, 2), (7, -1, 2), (25010798920885, 10**6, 1000003),
+              (0, 5, 3)]
+
+
+def test_wide_twins_agree_on_both_engines(spark):
+    co = spark.createDataFrame(
+        _COMOMENTS, "n bigint, sab bigint, sa bigint, sb bigint")
+    got = [int(r.c) for r in co.select(
+        comoment("n", "sab", "sa", "sb").alias("c")).collect()]
+    rows = ", ".join(f"({n}, {ab}, {a}, {b})" for n, ab, a, b in _COMOMENTS)
+    duck = [r[0] for r in duckdb.sql(
+        f"SELECT {comoment_sql('n', 'sab', 'sa', 'sb')} FROM (VALUES {rows})"
+        " v(n, sab, sa, sb)").fetchall()]
+    exact = [n * ab - a * b for n, ab, a, b in _COMOMENTS]
+    assert got == duck == exact
+    assert max(n * ab for n, ab, _, _ in _COMOMENTS) > 2**63
+
+    qs = spark.createDataFrame(_QUOTIENTS, "a bigint, b bigint, d bigint")
+    got = [r.q for r in qs.select(
+        wide_quot(wide("a") * F.col("b"), "d").alias("q")).collect()]
+    rows = ", ".join(f"({a}, {b}, {d})" for a, b, d in _QUOTIENTS)
+    cur = duckdb.sql(
+        f"SELECT {wide_quot_sql(wide_sql('a') + ' * b', 'd')} AS q"
+        f" FROM (VALUES {rows}) v(a, b, d)")
+    duck = [r[0] for r in cur.fetchall()]
+    # truncated toward zero, not floored
+    exact = [int(Decimal(a * b) / d) for a, b, d in _QUOTIENTS]
+    assert got == duck == exact == [-3, -3, 25010723888713, 0]
+    assert [str(t) for t in cur.types] == ["BIGINT"]
+    assert qs.select(wide_quot(wide("a") * F.col("b"), "d")) \
+        .schema[0].dataType.simpleString() == "bigint"
+    # the trap the HUGEINT twin avoids: `//` over a DECIMAL is DOUBLE
+    trap = duckdb.sql("SELECT CAST(25010798920885000001 AS DECIMAL(38, 0))"
+                      " // 1").fetchall()[0][0]
+    assert isinstance(trap, float) and trap != 25010798920885000001
+
+
+def test_wide_product_past_1e38_raises_on_both_engines(spark):
+    n, sab = 10**9, 10**30
+    df = spark.createDataFrame([(n, Decimal(sab), 1, 1)],
+                               "n bigint, sab decimal(38,0), sa bigint,"
+                               " sb bigint")
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        df.select(comoment("n", "sab", "sa", "sb")).collect()
+    with pytest.raises(duckdb.OutOfRangeException, match="Overflow"):
+        duckdb.sql(f"SELECT {comoment_sql('n', 'sab', 'sa', 'sb')} FROM"
+                   f" (VALUES ({n}, {wide_sql(str(sab))}, 1, 1))"
+                   " v(n, sab, sa, sb)").fetchall()

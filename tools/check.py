@@ -11,9 +11,12 @@ Usage:  python tools/check.py [key ...]     # no args = all keys
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 from collections import Counter
 from datetime import date, datetime
@@ -26,6 +29,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
+
+
+def duck_connect() -> duckdb.DuckDBPyConnection:
+    """DuckDB capped at half the host memory beyond the 8 GB Spark
+    driver (at least 1 GiB), spilling to a temp dir removed at exit.
+    DuckDB's own default, 80% of RAM, and the driver in one process
+    outgrow a 15 GB host at sf0.1; with the cap an oracle that
+    outgrows it raises, which fails its own key and not the sweep."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    cap_mb = max(1 << 30, (phys - (8 << 30)) // 2) >> 20
+    spill = tempfile.mkdtemp(prefix="check_duck_")
+    atexit.register(shutil.rmtree, spill, True)
+    return duckdb.connect(config={"memory_limit": f"{cap_mb}MB",
+                                  "temp_directory": spill})
 
 
 def _norm(v):
@@ -90,7 +107,7 @@ def main(keys: list[str]) -> int:
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
+    con = duck_connect()
     for t in TABLES:
         path = os.path.join(SF_DIR, f"{t}.parquet")
         if os.path.exists(path):
