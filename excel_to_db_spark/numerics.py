@@ -64,11 +64,10 @@ The oracle side is HUGEINT, never DECIMAL(38,0): DuckDB 1.0's `//`
 over a DECIMAL divides in DOUBLE, so
 `CAST(25010798920885000001 AS DECIMAL(38,0)) // 1` reads
 2.5010798920885002e+19; over HUGEINT it is exact. A product past
-10^38 raises on both engines. Spark's `div` of a decimal(38,0)
-quotient past 2^63 wraps silently where DuckDB raises; no corpus
-value comes near it. No other module spells the wide type in either
-engine's syntax; Spark SQL text that needs it (an `aggregate` fold,
-a `DIV`) is written as Columns with a Python lambda.
+10^38 raises on both engines, and so does a quotient past 2^63. No
+other module spells the wide type in either engine's syntax; Spark
+SQL text that needs it (an `aggregate` fold, a `DIV`) is written as
+Columns with a Python lambda.
 """
 
 from __future__ import annotations
@@ -163,8 +162,12 @@ def comoment_sql(n: str, sab: str, sa: str, sb: str) -> str:
 
 def wide_quot(num: Column | str, den: Column | str) -> Column:
     """num div den as BIGINT, truncated toward zero; `num` is already
-    wide (`wide(s) * s`). SQL twin: `wide_quot_sql`."""
-    return F.call_function("div", num, den)
+    wide (`wide(s) * s`). The exact decimal quotient of num minus its
+    remainder is cast with a checked cast, so a quotient past 2^63
+    raises as the SQL twin does; Spark's `div` over decimal(38,0)
+    wraps there. SQL twin: `wide_quot_sql`."""
+    num, den = _col(num), _col(den)
+    return ((num - num % den) / den).cast("bigint")
 
 
 def wide_quot_sql(num: str, den: str) -> str:

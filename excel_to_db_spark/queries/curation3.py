@@ -25,6 +25,7 @@ from ..operators import text as X
 from ..numerics import h32, h32_sql, u01, u01_sql, wide, wide_sql
 from .registry import query
 from .relational import T
+from .tradegraph import SUPP_PART_SQL, capped_edges, supp_part
 
 
 
@@ -248,13 +249,8 @@ def pipeline_dsir_weights(spark, sf_dir):
 
 # -------------------------------- neighbor-Jaccard link prediction
 
-@query("graph_jaccard_neighbors", oracle="""
-    WITH sp AS (
-        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
-    ),
-    pc AS (
-        SELECT p, count(*) AS c FROM sp GROUP BY p
-    ),
+@query("graph_jaccard_neighbors", oracle=f"""
+    WITH {SUPP_PART_SQL},
     spc AS (
         SELECT sp.s, sp.p FROM sp JOIN pc USING (p) WHERE pc.c <= 64
     ),
@@ -262,9 +258,6 @@ def pipeline_dsir_weights(spark, sf_dir):
         SELECT a.s AS s1, b.s AS s2, CAST(count(*) AS BIGINT) AS co
         FROM spc a JOIN spc b ON a.p = b.p AND a.s < b.s
         GROUP BY a.s, b.s
-    ),
-    deg AS (
-        SELECT s, CAST(count(*) AS BIGINT) AS d FROM sp GROUP BY s
     )
     SELECT w.s1, w.s2, w.co,
            d1.d AS deg1, d2.d AS deg2,
@@ -305,10 +298,8 @@ def graph_jaccard_neighbors(spark, sf_dir):
     The c >= 2 bound added to the cap filter is semantics-free: a
     single-supplier part emits no wedge. One (s1,s2) wedge-count
     aggregate, two broadcast joins against the tiny degree table."""
-    from ..queries.graphlp import _bipartite, _capped_edges
-
-    sp, pc, deg = _bipartite(spark, sf_dir)
-    spc = _capped_edges(sp, pc, sf_dir).select("s", "p")
+    sp, pc, deg = supp_part(spark, sf_dir)
+    spc = capped_edges(sp, pc, sf_dir).select("s", "p")
     a, b = spc.alias("a"), spc.alias("b")
     wedge = (a.join(b, (F.col("a.p") == F.col("b.p"))
                     & (F.col("a.s") < F.col("b.s")))

@@ -33,6 +33,7 @@ from ..numerics import (
     wide_sql)
 from .registry import REGISTRY, query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 
 
 # ------------------------------------------- KMV distinct sketch (merge)
@@ -1327,19 +1328,9 @@ def text_zipf_fit(spark, sf_dir):
 
 _SSSP_ROUNDS = 4
 
-_SSSP_ORACLE_HEAD = """
-    WITH raw AS (
-        SELECT cn.n_nationkey AS u, sn.n_nationkey AS v,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey  = c_custkey
-        JOIN supplier ON l_suppkey  = s_suppkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        WHERE cn.n_nationkey <> sn.n_nationkey
-        GROUP BY 1, 2
-    ),
+_SSSP_ORACLE_HEAD = f"""
+    WITH {nation_pairs_sql("CAST(count(*) AS BIGINT) AS cnt")},
+    raw AS (SELECT u, v, cnt FROM pairs WHERE u <> v),
     und AS (
         SELECT least(u, v) AS a, greatest(u, v) AS b,
                CAST(sum(cnt) AS BIGINT) AS cnt
@@ -1395,17 +1386,8 @@ def graph_sssp_bellman(spark, sf_dir):
     4 hops; on this dense 25-node trade graph that reaches every
     node, which the convergence test asserts (round 4 == round 3).
     The oracle unrolls the identical rounds as MATERIALIZED CTEs."""
-    li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    sup = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    raw = (li.join(o, li.l_orderkey == o.o_orderkey)
-           .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-           .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-           .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-           .groupBy(F.col("c_nationkey").alias("u"),
-                    F.col("s_nationkey").alias("v"))
-           .agg(F.count("*").alias("cnt")))
+    raw = (nation_pairs(spark, sf_dir, F.count("*").alias("cnt"))
+           .filter(F.col("u") != F.col("v")))
     und = (raw.groupBy(F.least("u", "v").alias("a"),
                        F.greatest("u", "v").alias("b"))
            .agg(F.sum("cnt").alias("cnt")))

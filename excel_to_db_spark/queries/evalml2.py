@@ -28,12 +28,12 @@ is a single snapped expression over exact integers.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import physical
 from .registry import query
 from .relational import T
+from .tradegraph import cust_supp_edges, cust_supp_edges_sql
 from ..numerics import units_sum, units_sum_sql
 
 
@@ -138,15 +138,12 @@ def eval_silhouette(spark, sf_dir):
 
 # --------------------------------------------- HITS hubs & authorities
 
-@query("graph_hits", oracle="""
-    WITH edges AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    ),
+@query("graph_hits", oracle=f"""
+    WITH {cust_supp_edges_sql()},
     -- round 1: authorities from unit hubs, then hubs back
     a1 AS (
         SELECT s, CAST(count(*) AS BIGINT) * 1000000 AS a_raw
-        FROM edges GROUP BY s
+        FROM cs GROUP BY s
     ),
     a1n AS (
         SELECT s, a_raw * 1000000 // (SELECT max(a_raw) FROM a1) AS a
@@ -154,7 +151,7 @@ def eval_silhouette(spark, sf_dir):
     ),
     h1 AS (
         SELECT c, CAST(sum(a) AS BIGINT) AS h_raw
-        FROM edges JOIN a1n USING (s) GROUP BY c
+        FROM cs JOIN a1n USING (s) GROUP BY c
     ),
     h1n AS (
         SELECT c, h_raw * 1000000 // (SELECT max(h_raw) FROM h1) AS h
@@ -163,7 +160,7 @@ def eval_silhouette(spark, sf_dir):
     -- round 2
     a2 AS (
         SELECT s, CAST(sum(h) AS BIGINT) AS a_raw
-        FROM edges JOIN h1n USING (c) GROUP BY s
+        FROM cs JOIN h1n USING (c) GROUP BY s
     ),
     a2n AS (
         SELECT s, a_raw * 1000000 // (SELECT max(a_raw) FROM a2) AS a
@@ -171,14 +168,14 @@ def eval_silhouette(spark, sf_dir):
     ),
     h2 AS (
         SELECT c, CAST(sum(a) AS BIGINT) AS h_raw
-        FROM edges JOIN a2n USING (s) GROUP BY c
+        FROM cs JOIN a2n USING (s) GROUP BY c
     ),
     h2n AS (
         SELECT c, h_raw * 1000000 // (SELECT max(h_raw) FROM h2) AS h
         FROM h2
     ),
     deg AS (
-        SELECT s, CAST(count(*) AS BIGINT) AS in_deg FROM edges GROUP BY s
+        SELECT s, CAST(count(*) AS BIGINT) AS in_deg FROM cs GROUP BY s
     )
     SELECT a2n.s AS s_suppkey, a2n.a AS authority_micro, deg.in_deg
     FROM a2n JOIN deg USING (s)
@@ -203,13 +200,7 @@ def graph_hits(spark, sf_dir):
     join (bounded by |customers| x avg distinct suppliers, not order
     volume); each half-round is one equi-join + groupBy on the edge
     list; normalizers are 1-row broadcasts. Top-20 is TakeOrdered."""
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select(F.col("o_custkey").alias("c"),
-                     F.col("l_suppkey").alias("s"))
-             .distinct()
-             .transform(physical.cut))
+    edges = cust_supp_edges(spark, sf_dir).transform(physical.cut)
 
     def norm(df, key, raw):
         mx = df.agg(F.max(raw).alias("mx"))

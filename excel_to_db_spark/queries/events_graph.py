@@ -15,7 +15,9 @@ from pyspark.sql.window import Window as W
 
 from .registry import query
 from .relational import T
-from ..numerics import cents_sum_sql, units_sum, units_sum_sql
+from .tradegraph import (nation_pairs, nation_pairs_sql, top2_partners,
+                         top2_partners_sql)
+from ..numerics import cents_sum_sql
 
 
 # ---------------------------------------------------- rolling anomaly
@@ -111,22 +113,12 @@ def events_inter_arrival(spark, sf_dir):
 
 # -------------------------------------------------- unrolled pagerank
 
-_PR_ORACLE = """
-    WITH edges AS (
-        SELECT cn.n_nationkey AS src, sn.n_nationkey AS dst,
-               sum(l_extendedprice * (1 - l_discount)) AS w
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey  = c_custkey
-        JOIN supplier ON l_suppkey  = s_suppkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        GROUP BY 1, 2
-    ),
+_PR_ORACLE = f"""
+    WITH {nation_pairs_sql("sum(l_extendedprice * (1 - l_discount)) AS w")},
     norm AS (
-        SELECT src, dst,
-               w / sum(w) OVER (PARTITION BY src) AS p
-        FROM edges
+        SELECT u AS src, v AS dst,
+               w / sum(w) OVER (PARTITION BY u) AS p
+        FROM pairs
     ),
     sz AS (SELECT count(*) AS n FROM nation),
     r0 AS (SELECT n_nationkey AS node, 1.0 / n AS rank FROM nation, sz),
@@ -176,20 +168,13 @@ def graph_pagerank3(spark, sf_dir):
     At 100 TB the edge aggregation dominates; iterations cost
     |edges| * k regardless of fact size. Dangling nodes keep the
     0.15/N floor (sink mass is dropped, identically on both engines)."""
-    le = T(spark, sf_dir, "lineitem")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = T(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("node"))
 
-    edges = (le.join(o, le.l_orderkey == o.o_orderkey)
-             .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-             .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-             .groupBy(F.col("c_nationkey").alias("src"),
-                      F.col("s_nationkey").alias("dst"))
-             .agg(F.sum(le.l_extendedprice * (1 - le.l_discount))
-                  .alias("w")))
+    edges = (nation_pairs(spark, sf_dir,
+                          F.sum(F.expr("l_extendedprice * (1 - l_discount)"))
+                          .alias("w"))
+             .select(F.col("u").alias("src"), F.col("v").alias("dst"), "w"))
     norm = edges.select(
         "src", "dst",
         (F.col("w") / F.sum("w").over(W.partitionBy("src"))).alias("p"))
@@ -326,26 +311,7 @@ def agg_decimal_exact(spark, sf_dir):
 # ----------------------------------------------------- BFS shortest hops
 
 _BFS_ORACLE = f"""
-    WITH RECURSIVE edges AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT cn.n_nationkey AS src, sn.n_nationkey AS dst,
-                       {units_sum_sql(
-                           'l_extendedprice * (1 - l_discount)', 100)} AS w
-                FROM lineitem
-                JOIN orders   ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey  = c_custkey
-                JOIN supplier ON l_suppkey  = s_suppkey
-                JOIN nation cn ON c_nationkey = cn.n_nationkey
-                JOIN nation sn ON s_nationkey = sn.n_nationkey
-                WHERE cn.n_nationkey <> sn.n_nationkey
-                GROUP BY 1, 2
-            )
-        ) WHERE rn <= 2
-    ),
+    WITH RECURSIVE {top2_partners_sql()},
     walk(node, level) AS (
         SELECT n_nationkey, 0 FROM nation WHERE n_nationkey = 0
         UNION
@@ -372,26 +338,7 @@ def graph_bfs_levels(spark, sf_dir):
     Both sides pin max depth 12, so "unreached within 12 hops" is
     excluded identically (the DuckDB oracle walks a depth-bounded
     recursive CTE whose UNION-dedup keeps it polynomial)."""
-    le = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = T(spark, sf_dir, "nation")
-
-    w = (le.join(o, le.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-         .groupBy(F.col("c_nationkey").alias("src"),
-                  F.col("s_nationkey").alias("dst"))
-         .agg(units_sum(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")), 100).alias("w")))
-    rn = F.row_number().over(
-        W.partitionBy("src").orderBy(F.col("w").desc(), "dst"))
-    edges = (w.withColumn("rn", rn).filter(F.col("rn") <= 2)
-             .select("src", "dst").persist())
-
     # r11 (guide §5, the markov/components precedent): the sparsified
     # digraph is MODEL-sized by construction — 25 nations x top-2
     # outbound edges, bounded by the nation schema at any corpus
@@ -402,8 +349,7 @@ def graph_bfs_levels(spark, sf_dir):
     # At a genuinely data-sized graph the distributed frontier loop
     # (graph_components pre-r11 shape) remains the right budget; here
     # the model bound makes the collect exact and O(1).
-    erows = [(r[0], r[1]) for r in edges.collect()]
-    edges.unpersist()
+    erows = [(r[0], r[1]) for r in top2_partners(spark, sf_dir).collect()]
     seeds = [r[0] for r in nation
              .filter(F.col("n_nationkey") == 0)
              .select("n_nationkey").collect()]
@@ -512,17 +458,14 @@ def attribution_position(spark, sf_dir):
 
 # ------------------------------------------- connected components
 
-@query("graph_components", oracle="""
-    WITH RECURSIVE e0 AS (
-        SELECT DISTINCT cn.n_nationkey AS src, sn.n_nationkey AS dst
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey  = c_custkey
-        JOIN supplier ON l_suppkey  = s_suppkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        WHERE cn.n_regionkey = sn.n_regionkey
-          AND cn.n_nationkey <> sn.n_nationkey
+@query("graph_components", oracle=f"""
+    WITH RECURSIVE {nation_pairs_sql()},
+    e0 AS (
+        SELECT u AS src, v AS dst
+        FROM pairs
+        JOIN nation cn ON u = cn.n_nationkey
+        JOIN nation sn ON v = sn.n_nationkey
+        WHERE cn.n_regionkey = sn.n_regionkey AND u <> v
     ),
     edges AS (
         SELECT src, dst FROM e0 UNION SELECT dst AS src, src AS dst FROM e0
@@ -552,27 +495,21 @@ def graph_components(spark, sf_dir):
     collect. The DuckDB oracle computes full reachability with a
     recursive CTE and takes min per root: both sides yield the
     canonical min-id labeling."""
-    le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = T(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
 
     cn = nation.select(F.col("n_nationkey").alias("src"),
                        F.col("n_regionkey").alias("src_rk"))
     sn = nation.select(F.col("n_nationkey").alias("dst"),
                        F.col("n_regionkey").alias("dst_rk"))
-    half = (le.join(o, le.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-            .join(F.broadcast(cn), F.col("c_nationkey") == F.col("src"))
-            .join(F.broadcast(sn), F.col("s_nationkey") == F.col("dst"))
+    half = (nation_pairs(spark, sf_dir)
+            .join(F.broadcast(cn), F.col("u") == F.col("src"))
+            .join(F.broadcast(sn), F.col("v") == F.col("dst"))
             .filter((F.col("src_rk") == F.col("dst_rk"))
                     & (F.col("src") != F.col("dst")))
-            .select("src", "dst").distinct())
+            .select("src", "dst"))
     edges = (half.union(half.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst")))
-             .distinct().persist())
+             .distinct())
 
     # r11 (guide §5): the propagation state is NATION-sized (25 nodes,
     # <=600 directed edges after the one fact aggregate) — a MODEL, not
@@ -593,6 +530,5 @@ def graph_components(spark, sf_dir):
             if lbl[src] < lbl[dst]:
                 lbl[dst] = lbl[src]
                 changed = True
-    edges.unpersist()
     out = [(int(n), int(lbl[n])) for n in nodes]
     return spark.createDataFrame(out, "node int, component int")

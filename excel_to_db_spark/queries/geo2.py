@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators import physical
 from .registry import query
-from .relational import T
+from .tradegraph import cust_supp_edges, cust_supp_edges_sql
 from .geo import _LAT_SPAN, _LON_SPAN, _TX8, _TY8, _pts, _pts_sql
 
 _CUST_SQL = _pts_sql("customer", "c_custkey", "c_nationkey", "")
@@ -158,19 +158,16 @@ def _nearest(spark, sf_dir, _g_override=None):
 @query("geo_od_matrix", oracle=f"""
     WITH cust AS MATERIALIZED ({_CUST_SQL}),
     supp AS MATERIALIZED ({_SUPP_SQL}),
-    edges AS (
-        SELECT DISTINCT o_custkey AS ck, l_suppkey AS sk
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    ),
+    {cust_supp_edges_sql()},
     flows AS (
         SELECT (c.lonp + 170000000) // {_TX8} // 16 AS o_tx,
                (60000000 - c.latp) // {_TY8} // 16 AS o_ty,
                (s.lonp + 170000000) // {_TX8} // 16 AS d_tx,
                (60000000 - s.latp) // {_TY8} // 16 AS d_ty,
                CAST(count(*) AS BIGINT) AS flow
-        FROM edges e
-        JOIN cust c ON c.id = e.ck
-        JOIN supp s ON s.id = e.sk
+        FROM cs e
+        JOIN cust c ON c.id = e.c
+        JOIN supp s ON s.id = e.s
         GROUP BY 1, 2, 3, 4
     )
     SELECT o_tx, o_ty, d_tx, d_ty, flow,
@@ -189,26 +186,21 @@ def geo_od_matrix(spark, sf_dir):
     by tiles^2."""
     cust = (_pts(spark, sf_dir, "customer", "c_custkey", "c_nationkey",
                  "")
-            .select(F.col("id").alias("ck"),
+            .select(F.col("id").alias("c"),
                     F.expr(f"(lonp + 170000000) div {_TX8} div 16")
                     .alias("o_tx"),
                     F.expr(f"(60000000 - latp) div {_TY8} div 16")
                     .alias("o_ty")))
     supp = (_pts(spark, sf_dir, "supplier", "s_suppkey", "s_nationkey",
                  "s")
-            .select(F.col("id").alias("sk"),
+            .select(F.col("id").alias("s"),
                     F.expr(f"(lonp + 170000000) div {_TX8} div 16")
                     .alias("d_tx"),
                     F.expr(f"(60000000 - latp) div {_TY8} div 16")
                     .alias("d_ty")))
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-             .select(F.col("o_custkey").alias("ck"),
-                     F.col("l_suppkey").alias("sk"))
-             .distinct())
-    flows = (edges.join(F.broadcast(cust), "ck")
-             .join(F.broadcast(supp), "sk")
+    flows = (cust_supp_edges(spark, sf_dir)
+             .join(F.broadcast(cust), "c")
+             .join(F.broadcast(supp), "s")
              .groupBy("o_tx", "o_ty", "d_tx", "d_ty")
              .agg(F.count("*").alias("flow")))
     w = Window.orderBy(F.col("flow").desc(), "o_tx", "o_ty",

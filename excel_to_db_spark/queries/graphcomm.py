@@ -36,12 +36,11 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from .tradegraph import cust_supp_edges, cust_supp_edges_sql
 
-_EDGES_SQL = """
-    edges AS MATERIALIZED (
-        SELECT DISTINCT o_custkey * 2 AS u, l_suppkey * 2 + 1 AS v
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    ),
+_EDGES_SQL = f"""
+    {cust_supp_edges_sql()},
+    edges AS MATERIALIZED (SELECT c * 2 AS u, s * 2 + 1 AS v FROM cs),
     bi AS MATERIALIZED (
         SELECT u, v FROM edges
         UNION ALL
@@ -52,12 +51,8 @@ _EDGES_SQL = """
 
 def _edges(spark, sf_dir):
     """Distinct trade edges (u = 2*custkey, v = 2*suppkey+1)."""
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    return (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-            .select((F.col("o_custkey") * 2).alias("u"),
-                    (F.col("l_suppkey") * 2 + 1).alias("v"))
-            .distinct())
+    return cust_supp_edges(spark, sf_dir).select(
+        (F.col("c") * 2).alias("u"), (F.col("s") * 2 + 1).alias("v"))
 
 
 def _bi(edges):
@@ -100,10 +95,10 @@ def graph_label_propagation(spark, sf_dir):
 
     Round shape (r11 optimization, guide §2/§3): the per-round label
     frame is NODE-sized (the customer+supplier dimension, the same
-    bound that lets `_nation_edges` broadcast both dim tables), so it
-    is explicitly broadcast — as a checkpointed RDD its stats are
-    unknown and AQE would otherwise sort-merge, shuffling the full
-    edge list every round (measured 3 Exchanges/round at sf0.1). The
+    bound that lets `tradegraph.nation_pairs` broadcast both dim
+    tables), so it is explicitly broadcast — as a checkpointed RDD its
+    stats are unknown and AQE would otherwise sort-merge, shuffling the
+    full edge list every round (measured 3 Exchanges/round at sf0.1). The
     per-node top-1 is `max(struct(cnt, -lbl))` — an argmax the window
     cannot express without a sort: struct ordering compares cnt first,
     then -lbl, so the max is the highest count with the SMALLEST label

@@ -29,34 +29,16 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 from ..numerics import comoment, units_sum, units_sum_sql, wide, wide_sql
 
 # Directed nation trade edge: customer nation -> supplier nation.
-# The distinct nation pairs first, the u <> v filter after: with the
-# inequality inside the join DuckDB 1.0 nested-loops customer x
-# supplier and runs out of memory at sf0.1.
-_RAW_EDGES_SQL = """pairs AS MATERIALIZED (
-        SELECT DISTINCT c.c_nationkey AS u, s.s_nationkey AS v
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey  = c.c_custkey
-        JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-    ),
+_RAW_EDGES_SQL = f"""{nation_pairs_sql()},
     raw AS (SELECT u, v FROM pairs WHERE u <> v)"""
 
 
 def _raw_edges(spark, sf_dir):
-    le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    return (le.join(o, le.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-            .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-            .select(F.col("c_nationkey").alias("u"),
-                    F.col("s_nationkey").alias("v"))
-            .distinct())
+    return nation_pairs(spark, sf_dir).filter(F.col("u") != F.col("v"))
 
 
 # ------------------------------------------- local clustering coeff

@@ -34,103 +34,18 @@ fact-table aggregate — frontier BFS shuffles node-sized state only.
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators import physical
 from .registry import query
 from .relational import T
-from ..numerics import units_sum, units_sum_sql
-
-
-def _bipartite(spark, sf_dir):
-    """Distinct supplier-part edges (ONE distinct projection of
-    lineitem), per-part supplier degree, per-supplier part degree.
-
-    r12 (guide §2.4): the edge set is cut (physical.cut) —
-    every wedge key derives at least three subtrees from it (per-part
-    count, capped wedge input, supplier degree) and without the cut
-    each subtree re-scanned lineitem and re-ran the distinct exchange
-    (measured: SIX lineitem scans in graph_jaccard_neighbors' r11
-    plan)."""
-    li = T(spark, sf_dir, "lineitem")
-    sp = (li.select(F.col("l_suppkey").alias("s"),
-                    F.col("l_partkey").alias("p")).distinct()
-          .transform(physical.cut))
-    pc = sp.groupBy("p").agg(F.count("*").alias("c"))
-    deg = sp.groupBy("s").agg(F.count("*").alias("d"))
-    return sp, pc, deg
-
-
-def _capped_edges(sp, pc, sf_dir):
-    """Edges routed through 2..64-supplier parts: the wedge skew cap
-    every wedge key applies (a single-supplier part emits no wedge, so
-    the c >= 2 bound is semantics-free where a key's oracle only caps
-    at 64). The per-part count prefilter joins map-side
-    (bounded_broadcast on the part dimension), so a hub part never
-    reaches the downstream per-part supplier list."""
-    keep = pc.filter((F.col("c") >= 2) & (F.col("c") <= 64))
-    return sp.join(physical.bounded_broadcast(keep, sf_dir, ("part",)), "p")
-
-
-_SP_SQL = """
-    sp AS MATERIALIZED (
-        SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
-    ),
-    pc AS (SELECT p, CAST(count(*) AS BIGINT) AS c FROM sp GROUP BY p),
-    deg AS (SELECT s, CAST(count(*) AS BIGINT) AS d FROM sp GROUP BY s)
-"""
-
-
-def _nation_edges(spark, sf_dir):
-    """Top-2-outbound-partner sparsified nation trade digraph (the
-    `graph_bfs_levels` construction: integer-cents revenue ranking,
-    dst ASC tie-break). ONE fact aggregate; 25-node edge list out."""
-    le = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    w = (le.join(o, le.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-         .groupBy(F.col("c_nationkey").alias("src"),
-                  F.col("s_nationkey").alias("dst"))
-         .agg(units_sum(F.col("l_extendedprice")
-                            * (1 - F.col("l_discount")), 100).alias("w")))
-    rn = F.row_number().over(
-        W.partitionBy("src").orderBy(F.col("w").desc(), "dst"))
-    return (w.withColumn("rn", rn).filter(F.col("rn") <= 2)
-            .select("src", "dst"))
-
-
-_NATION_EDGES_SQL = f"""
-    edges AS MATERIALIZED (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src
-                                      ORDER BY w DESC, dst) AS rn
-            FROM (
-                SELECT c_nationkey AS src, s_nationkey AS dst,
-                       {units_sum_sql(
-                           'l_extendedprice * (1 - l_discount)', 100)} AS w
-                FROM lineitem
-                JOIN orders   ON l_orderkey = o_orderkey
-                JOIN customer ON o_custkey  = c_custkey
-                JOIN supplier ON l_suppkey  = s_suppkey
-                WHERE c_nationkey <> s_nationkey
-                GROUP BY 1, 2
-            )
-        ) WHERE rn <= 2
-    )
-"""
+from .tradegraph import (SUPP_PART_SQL, capped_edges, supp_part,
+                         top2_partners, top2_partners_sql)
 
 
 # ------------------------------------- link-prediction score panel
 
 @query("graph_link_prediction_panel", oracle=f"""
-    WITH {_SP_SQL},
+    WITH {SUPP_PART_SQL},
     spc AS (
         SELECT sp.s, sp.p, pc.c,
                CAST(round(1000000 / ln(pc.c)) AS BIGINT) AS aa_term,
@@ -188,8 +103,8 @@ def graph_link_prediction_panel(spark, sf_dir):
     wedge stage: the nested transform/slice/struct HOF runs
     interpreted per part, the join runs in codegen) and kept out.
     One pair aggregate, two broadcast degree joins, TakeOrdered 20."""
-    sp, pc, deg = _bipartite(spark, sf_dir)
-    spc = (_capped_edges(sp, pc, sf_dir)
+    sp, pc, deg = supp_part(spark, sf_dir)
+    spc = (capped_edges(sp, pc, sf_dir)
            .select("s", "p",
                    F.round(1000000 / F.log(F.col("c"))).cast("bigint")
                    .alias("aa_term"),
@@ -220,7 +135,7 @@ def graph_link_prediction_panel(spark, sf_dir):
 # ----------------------------------- harmonic closeness centrality
 
 @query("graph_harmonic_closeness", oracle=f"""
-    WITH RECURSIVE {_NATION_EDGES_SQL},
+    WITH RECURSIVE {top2_partners_sql()},
     walk(src, node, level) AS (
         SELECT n_nationkey, n_nationkey, 0 FROM nation
         UNION
@@ -261,7 +176,7 @@ def graph_harmonic_closeness(spark, sf_dir):
     # per replay; the same BFS over the collected edge list computes
     # identical levels (depth cap 12 kept), and the per-distance
     # 1e6 // d terms are the same exact integers.
-    erows = [(r[0], r[1]) for r in _nation_edges(spark, sf_dir).collect()]
+    erows = [(r[0], r[1]) for r in top2_partners(spark, sf_dir).collect()]
     nodes = [r[0] for r in T(spark, sf_dir, "nation")
              .select("n_nationkey").collect()]
     adj: dict[int, list[int]] = {}
@@ -289,7 +204,7 @@ def graph_harmonic_closeness(spark, sf_dir):
 # ---------------------------------------------- truncated Katz
 
 @query("graph_katz3", oracle=f"""
-    WITH {_NATION_EDGES_SQL},
+    WITH {top2_partners_sql()},
     p1 AS (
         SELECT src AS u, dst AS v, CAST(1 AS BIGINT) AS n
         FROM edges
@@ -348,7 +263,7 @@ def graph_katz3(spark, sf_dir):
     # Spark jobs; the identical integer walk counts come from the
     # collected edge list in Python (exact ints, same top-20 under
     # the same (katz DESC, u, v) total order).
-    erows = [(r[0], r[1]) for r in _nation_edges(spark, sf_dir).collect()]
+    erows = [(r[0], r[1]) for r in top2_partners(spark, sf_dir).collect()]
     from collections import Counter
 
     w1 = Counter((u, v) for u, v in erows)          # 0/1 by construction
@@ -379,7 +294,7 @@ def graph_katz3(spark, sf_dir):
 # ------------------------------------------- holdout evaluation
 
 @query("graph_lp_holdout_eval", oracle=f"""
-    WITH {_SP_SQL},
+    WITH {SUPP_PART_SQL},
     capped AS (
         SELECT sp.s, sp.p FROM sp JOIN pc ON sp.p = pc.p
         WHERE pc.c BETWEEN 2 AND 64
@@ -443,12 +358,12 @@ def graph_lp_holdout_eval(spark, sf_dir):
     SUM in the full-wedge aggregate; the former INNER join to
     cn_train kept exactly the pairs with cn_train >= 1 (train wedges
     are a subset of full wedges), which is the score >= 1 filter."""
-    sp, pc, _deg = _bipartite(spark, sf_dir)
+    sp, pc, _deg = supp_part(spark, sf_dir)
     # r12: the checkpointed edge set + map-side cap prefilter (see
-    # _bipartite/_capped_edges) replace the r11 shape's repeated
+    # supp_part/capped_edges) replace the r11 shape's repeated
     # lineitem scans; the single wedge pass over both counts (r11) is
     # unchanged.
-    cf = (_capped_edges(sp, pc, sf_dir)
+    cf = (capped_edges(sp, pc, sf_dir)
           .select("s", "p",
                   ((F.col("s") * 31 + F.col("p") * 17) % 5 != 0)
                   .cast("bigint").alias("t")))

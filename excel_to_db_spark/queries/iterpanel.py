@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..operators import physical
 from .registry import query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 
 
 @query("survey_raking_ipf", oracle="""
@@ -196,19 +197,9 @@ def anomaly_gesd_rounds(spark, sf_dir):
     return out[0].unionAll(out[1]).unionAll(out[2])
 
 
-_TRUSS_EDGES_SQL = """
-    raw AS (
-        SELECT cn AS u, sn AS v, CAST(count(*) AS BIGINT) AS n_links
-        FROM (
-            SELECT DISTINCT o_orderkey AS ok,
-                   c_nationkey AS cn, s_nationkey AS sn
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey  = c_custkey
-            JOIN supplier ON l_suppkey  = s_suppkey
-            WHERE c_nationkey <> s_nationkey
-        ) GROUP BY 1, 2
-    ),
+_TRUSS_EDGES_SQL = f"""
+    {nation_pairs_sql("CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_links")},
+    raw AS (SELECT u, v, n_links FROM pairs WHERE u <> v),
     und AS (
         SELECT least(u, v) AS a, greatest(u, v) AS b,
                CAST(sum(n_links) AS BIGINT) AS w
@@ -271,21 +262,11 @@ def graph_ktruss_peel(spark, sf_dir):
     endpoints — at real graph scale the degree-ordering refinement
     (see graph_triangles) bounds fanout by arboricity, and peeling
     runs until fixpoint with a lineage cut per round."""
-    le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    raw = (le.join(o, le["l_orderkey"] == o["o_orderkey"])
-           .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-           .join(F.broadcast(s), le["l_suppkey"] == s["s_suppkey"])
-           .where(F.col("c_nationkey") != F.col("s_nationkey"))
-           .select(F.col("o_orderkey").alias("ok"),
-                   F.col("c_nationkey").alias("cn"),
-                   F.col("s_nationkey").alias("sn"))
-           .distinct()
-           .groupBy("cn", "sn").agg(F.count("*").alias("n_links")))
-    und = (raw.groupBy(F.least("cn", "sn").alias("a"),
-                       F.greatest("cn", "sn").alias("b"))
+    raw = (nation_pairs(spark, sf_dir,
+                        F.countDistinct("o_orderkey").alias("n_links"))
+           .where(F.col("u") != F.col("v")))
+    und = (raw.groupBy(F.least("u", "v").alias("a"),
+                       F.greatest("u", "v").alias("b"))
            .agg(F.sum("n_links").alias("w")))
     wr = Window.orderBy("w", "a", "b")
     wall = Window.partitionBy(F.lit(1)).rowsBetween(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 from ..numerics import (
     comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
@@ -259,17 +260,7 @@ def events_return_gap_profile(spark, sf_dir):
 # --------------------------------------------- weight disparity
 
 @query("graph_weight_disparity", oracle=f"""
-    WITH pairs AS MATERIALIZED (
-        -- the u <> v filter after the grouping, not in the join (see
-        -- graph_assortativity)
-        SELECT c.c_nationkey AS u, s.s_nationkey AS v,
-               {units_sum_sql('l.l_extendedprice', 100)} AS cents
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey  = c.c_custkey
-        JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        GROUP BY 1, 2
-    ),
+    WITH {nation_pairs_sql(f"{units_sum_sql('l_extendedprice', 100)} AS cents")},
     w AS (SELECT u, v, cents FROM pairs WHERE u <> v),
     node AS (
         SELECT u, CAST(count(*) AS BIGINT) AS k,
@@ -306,18 +297,9 @@ def graph_weight_disparity(spark, sf_dir):
 
     Scale shape: one weighted-edge aggregate + one node aggregate +
     one share join — all partitioned on the source-nation key."""
-    le = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    w = (le.join(o, le.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-         .groupBy(F.col("c_nationkey").alias("u"),
-                  F.col("s_nationkey").alias("v"))
-         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
+    w = (nation_pairs(spark, sf_dir,
+                      units_sum(F.col("l_extendedprice"), 100).alias("cents"))
+         .filter(F.col("u") != F.col("v")))
     node = w.groupBy("u").agg(F.count("*").alias("k"),
                               F.sum("cents").alias("strength"))
     share = F.col("cents").cast("double") / F.col("strength")

@@ -22,6 +22,7 @@ from ..numerics import (
     cents_sum, cents_sum_sql, h32, h32_sql, units_sum, units_sum_sql)
 from .registry import query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 
 
 # --------------------------------------------------------------- dq
@@ -102,17 +103,9 @@ def dq_expectations(spark, sf_dir):
 
 # -------------------------------------------------------- triangles
 
-@query("graph_triangles", oracle="""
-    WITH raw AS (
-        SELECT DISTINCT cn.n_nationkey AS u, sn.n_nationkey AS v
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey  = c_custkey
-        JOIN supplier ON l_suppkey  = s_suppkey
-        JOIN nation cn ON c_nationkey = cn.n_nationkey
-        JOIN nation sn ON s_nationkey = sn.n_nationkey
-        WHERE cn.n_nationkey <> sn.n_nationkey
-    ),
+@query("graph_triangles", oracle=f"""
+    WITH {nation_pairs_sql()},
+    raw AS (SELECT u, v FROM pairs WHERE u <> v),
     e AS (
         SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM raw
     ),
@@ -141,18 +134,7 @@ def graph_triangles(spark, sf_dir):
     is degree ordering (orient edges low-degree → high-degree before the
     wedge join) which bounds the join fanout by arboricity; the trade
     graph is dense-small so the canonical form suffices here."""
-    le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-
-    raw = (le.join(o, le.l_orderkey == o.o_orderkey)
-           .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-           .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-           .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-           .select(F.col("c_nationkey").alias("u"),
-                   F.col("s_nationkey").alias("v"))
-           .distinct())
+    raw = nation_pairs(spark, sf_dir).filter(F.col("u") != F.col("v"))
     e = (raw.select(F.least("u", "v").alias("a"),
                     F.greatest("u", "v").alias("b"))
          .distinct())
@@ -717,18 +699,7 @@ def text_compression_quality(spark, sf_dir):
 
 
 @query("graph_assortativity", oracle=f"""
-    WITH pairs AS MATERIALIZED (
-        -- every nation pair first, the u <> v filter after: with the
-        -- inequality inside the join DuckDB 1.0 nested-loops
-        -- customer x supplier and runs out of memory at sf0.1
-        SELECT c_nationkey AS u, s_nationkey AS v,
-               {units_sum_sql('l_extendedprice', 100)} AS cents
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        GROUP BY 1, 2
-    ),
+    WITH {nation_pairs_sql(f"{units_sum_sql('l_extendedprice', 100)} AS cents")},
     w AS (SELECT u, v, cents FROM pairs WHERE u <> v),
     top AS (
         -- per-source top-2 by trade value: the same sparsification as
@@ -788,20 +759,11 @@ def graph_assortativity(spark, sf_dir):
     union (the symmetric formulation) and ALL Pearson moments are exact
     bigints from one pass — the correlation is a fixed float expression
     rounded at 5 dp."""
-    le = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey",
-                                              "l_extendedprice")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     from pyspark.sql.window import Window as _W
 
-    w = (le.join(o, le.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-         .groupBy(F.col("c_nationkey").alias("u"),
-                  F.col("s_nationkey").alias("v"))
-         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
+    w = (nation_pairs(spark, sf_dir,
+                      units_sum(F.col("l_extendedprice"), 100).alias("cents"))
+         .filter(F.col("u") != F.col("v")))
     wrk = _W.partitionBy("u").orderBy(F.col("cents").desc(), F.col("v"))
     top = (w.withColumn("rk", F.row_number().over(wrk))
            .filter(F.col("rk") <= 2).select("u", "v"))

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .relational import T
+from .tradegraph import nation_pairs, nation_pairs_sql
 from ..numerics import (
     comoment, comoment_sql, units_sum, units_sum_sql, wide, wide_sql)
 
@@ -341,18 +342,10 @@ def ts_halflife(spark, sf_dir):
 
 @query("graph_rich_club", oracle=f"""
     -- AS MATERIALIZED: DuckDB inlines (re-executes) multi-referenced
-    -- CTEs; without it the 6-way weighted-edge join runs ~12x through
+    -- CTEs; without it the weighted-edge join runs ~12x through
     -- the rich/e reference chains (measured 204s -> ~18s at sf0.1).
-    WITH w AS MATERIALIZED (
-        SELECT c.c_nationkey AS u, s.s_nationkey AS v,
-               {units_sum_sql('l.l_extendedprice', 100)} AS cents
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey  = c.c_custkey
-        JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY 1, 2
-    ),
+    WITH {nation_pairs_sql(f"{units_sum_sql('l_extendedprice', 100)} AS cents")},
+    w AS (SELECT u, v, cents FROM pairs WHERE u <> v),
     top AS (
         SELECT u, v FROM (
             SELECT u, v, row_number() OVER (PARTITION BY u
@@ -414,18 +407,9 @@ def graph_rich_club(spark, sf_dir):
     Scale shape: weighted edge aggregate + per-source top-k window +
     degree aggregate + a 3-k membership grid + broadcast equi-joins."""
     from pyspark.sql import Window as W
-    le = T(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice")
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    w = (le.join(o, le.l_orderkey == o.o_orderkey)
-         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-         .join(F.broadcast(s), le.l_suppkey == s.s_suppkey)
-         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-         .groupBy(F.col("c_nationkey").alias("u"),
-                  F.col("s_nationkey").alias("v"))
-         .agg(units_sum(F.col("l_extendedprice"), 100).alias("cents")))
+    w = (nation_pairs(spark, sf_dir,
+                      units_sum(F.col("l_extendedprice"), 100).alias("cents"))
+         .filter(F.col("u") != F.col("v")))
     top = (w.select("u", "v", F.row_number().over(
         W.partitionBy("u").orderBy(F.col("cents").desc(), "v"))
         .alias("rk")).filter(F.col("rk") <= 3).select("u", "v"))

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..numerics import erfc, erfc_sql, h32, h32_sql
 from .registry import query
 from .relational import T
+from .tradegraph import cust_supp_edges, cust_supp_edges_sql
 
 
 # ------------------------------------------------- hourly OHLC candles
@@ -191,16 +192,13 @@ def stats_runs_test(spark, sf_dir):
 
 # ------------------------------------------------ Newman modularity
 
-@query("graph_modularity", oracle="""
-    WITH edges AS (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    ),
+@query("graph_modularity", oracle=f"""
+    WITH {cust_supp_edges_sql()},
     labeled AS (
         SELECT cu.c_nationkey AS comm_c, su.s_nationkey AS comm_s
-        FROM edges
-        JOIN customer cu ON cu.c_custkey = edges.c
-        JOIN supplier su ON su.s_suppkey = edges.s
+        FROM cs
+        JOIN customer cu ON cu.c_custkey = cs.c
+        JOIN supplier su ON su.s_suppkey = cs.s
     ),
     m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM labeled),
     intra AS (
@@ -246,14 +244,9 @@ def graph_modularity(spark, sf_dir):
     Scale shape: one DISTINCT-pair edge aggregate (the only
     corpus-sized shuffle), two broadcast label joins, then aggregates
     over the #communities-row table."""
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     cu = T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     su = T(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    edges = (o.join(li, o.o_orderkey == li.l_orderkey)
-             .select(F.col("o_custkey").alias("c"),
-                     F.col("l_suppkey").alias("s"))
-             .distinct())
+    edges = cust_supp_edges(spark, sf_dir)
     labeled = (edges
                .join(F.broadcast(cu), edges.c == cu.c_custkey)
                .join(F.broadcast(su), edges.s == su.s_suppkey)

@@ -13,7 +13,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+import __spark_entry__ as E
 from conftest import SF_DIR
+from excel_to_db_spark.queries.tradegraph import nation_pairs_sql
 
 
 def _r(x, d):
@@ -117,24 +119,23 @@ def test_erlang_c_textbook_recursion(spark, sf_dir):
     assert len(rows) == 5
 
 
-@pytest.mark.parametrize("key", ["graph_assortativity",
-                                 "graph_weight_disparity",
-                                 "graph_reciprocity",
-                                 "graph_local_clustering"])
+@pytest.mark.parametrize("key", sorted(
+    k for k, sql in E.oracle_sql().items()
+    if nation_pairs_sql().split(" AS v")[0] in sql))
 def test_nation_pair_oracle_runs_at_sf01_in_1gb(key):
-    """With `c_nationkey <> s_nationkey` inside the lineitem join,
-    DuckDB 1.0 nested-loops customer x supplier and these oracles ran
-    out of memory at sf0.1; grouping the pairs first and filtering
-    u <> v after keeps them under 1 GB. No spill directory, so a
-    regression fails at once instead of filling the disk."""
-    import __spark_entry__ as E
-
+    """Every oracle built on `nation_pairs_sql`: with
+    `c_nationkey <> s_nationkey` inside the lineitem join, DuckDB 1.0
+    nested-loops customer x supplier and such an oracle ran out of
+    memory at sf0.1; the twin groups the pairs first and its callers
+    filter u <> v after, which keeps them under 1 GB. No spill
+    directory, so a regression fails at once instead of filling the
+    disk."""
     sf = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
     if not os.path.isdir(sf):
         pytest.skip(f"sf0.1 fixture not present at {sf}")
     con = duckdb.connect(config={"memory_limit": "1GB", "threads": 2,
                                  "temp_directory": ""})
-    for t in ("orders", "lineitem", "customer", "supplier"):
+    for t in ("orders", "lineitem", "customer", "supplier", "nation"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"'{os.path.join(sf, t + '.parquet')}'")
     assert con.execute(E.oracle_sql()[key]).fetchall()

@@ -60,8 +60,8 @@ def test_panel_vs_pandas_wedges(spark, sf_dir):
 
 
 def _edges_from_spark(spark, sf_dir):
-    from excel_to_db_spark.queries.graphlp import _nation_edges
-    return [(r.src, r.dst) for r in _nation_edges(spark, sf_dir).collect()]
+    from excel_to_db_spark.queries.tradegraph import top2_partners
+    return [(r.src, r.dst) for r in top2_partners(spark, sf_dir).collect()]
 
 
 def test_harmonic_closeness_python_bfs(spark, sf_dir):

@@ -314,6 +314,18 @@ def test_wide_twins_agree_on_both_engines(spark):
     assert isinstance(trap, float) and trap != 25010798920885000001
 
 
+def test_wide_quotient_past_2_63_raises_on_both_engines(spark):
+    # a*a div d is 625538186046384141336; `div` over decimal(38,0)
+    # wrapped it to -1651112459740613608
+    a, d = 25010798920885, 1000003
+    df = spark.createDataFrame([(a, d)], "a bigint, d bigint")
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        df.select(wide_quot(wide("a") * F.col("a"), "d")).collect()
+    with pytest.raises(duckdb.ConversionException):
+        duckdb.sql(f"SELECT {wide_quot_sql(wide_sql('a') + ' * a', 'd')}"
+                   f" FROM (VALUES ({a}, {d})) v(a, d)").fetchall()
+
+
 def test_wide_product_past_1e38_raises_on_both_engines(spark):
     n, sab = 10**9, 10**30
     df = spark.createDataFrame([(n, Decimal(sab), 1, 1)],

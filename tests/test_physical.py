@@ -20,6 +20,7 @@ _OUTSIDE_PHYSICAL = {
     "lineage cut": re.compile(r"localCheckpoint"),
     "footer read": re.compile(r"read_metadata|ParquetFile\("),
     "broadcast bound": re.compile(r"BROADCAST_ROW_LIMIT"),
+    "cache": re.compile(r"\.(persist|cache)\("),
     "shuffle width read with a default": re.compile(
         r"conf\.get\(\s*[\"']spark\.sql\.shuffle\.partitions[\"']\s*,"),
     # A bound name escapes the swap tests and tools rely on.

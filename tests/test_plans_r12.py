@@ -1,12 +1,8 @@
 """Round-12 plan guards: the shapes the optimization rounds bought stay
 bought. Pins (VERDICT r11 #6 + the r12 rewrites):
 
-- the wedge keys (jaccard / LP panel / holdout) read ONE checkpointed
-  edge set (no parquet re-scan subtrees) and never nested-loop;
 - graph_kcore's unrolled rounds are delta-degree updates — no per-round
   LeftSemi edge rewrites;
-- LPA rounds keep the broadcast label side (no sort-merge of the edge
-  list per round);
 - linkage_fellegi_sunter's pair stage stays regex-split-free
   (substring_index only);
 - the dq census keys build their whole answer as ONE plan (no eager
@@ -27,25 +23,6 @@ def _no_checkpoint(monkeypatch):
     monkeypatch.setattr(physical, "cut", lambda df: df)
 
 
-def test_wedge_keys_share_one_checkpointed_edge_set(spark):
-    from excel_to_db_spark.queries.curation3 import graph_jaccard_neighbors
-    from excel_to_db_spark.queries.graphlp import (
-        graph_link_prediction_panel, graph_lp_holdout_eval)
-
-    for fn in (graph_jaccard_neighbors, graph_link_prediction_panel,
-               graph_lp_holdout_eval):
-        plan = plan_text(fn(spark, SF_DIR))
-        assert "Scan parquet" not in plan, \
-            f"{fn.__name__}: every subtree must read the ONE " \
-            "checkpointed edge projection (r11 re-scanned lineitem 6x)"
-        # the only nested-loop allowed is the holdout's deliberate
-        # 1-row scalar cross join — never an Inner pair join
-        import re
-
-        assert not re.search(r"BroadcastNestedLoopJoin .*Inner", plan)
-        assert plan.count("Scan ExistingRDD") >= 4
-
-
 def test_kcore_rounds_are_delta_degree_updates(spark, monkeypatch):
     _no_checkpoint(monkeypatch)
     from excel_to_db_spark.queries.estimation import graph_kcore
@@ -54,15 +31,6 @@ def test_kcore_rounds_are_delta_degree_updates(spark, monkeypatch):
     assert "LeftSemi" not in plan, \
         "r11 re-materialized the edge set per round via two LeftSemi " \
         "joins; r12 rounds update the degree vector only"
-
-
-def test_lpa_rounds_broadcast_the_label_side(spark, monkeypatch):
-    _no_checkpoint(monkeypatch)
-    from excel_to_db_spark.queries.graphcomm import graph_label_propagation
-
-    plan = plan_text(graph_label_propagation(spark, SF_DIR))
-    assert "SortMergeJoin" not in plan, \
-        "each LPA round must broadcast the node-sized label frame"
 
 
 def test_fellegi_pair_stage_is_regex_split_free(spark):

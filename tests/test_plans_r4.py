@@ -71,19 +71,6 @@ def test_inter_arrival_two_shuffles_exact_micros(spark, registry):
         "deltas must subtract integer microseconds, not float seconds"
 
 
-def test_pagerank_scans_fact_once_at_runtime(spark, registry):
-    df = registry["graph_pagerank3"].fn(spark, SF_DIR)
-    df.collect()  # finalize the adaptive plan
-    plan = plan_text(df)
-    # the three unrolled iterations inline the edge subtree statically,
-    # but AQE must collapse them: the edge shuffle executes once and the
-    # later iterations read it back as ReusedExchange.
-    assert plan.count("ReusedExchange") >= 2, \
-        "iterations 2 and 3 must reuse the materialized edge shuffle"
-    assert "BroadcastHashJoin" in plan, \
-        "the |nations|-row rank vector must broadcast into each iteration"
-
-
 def test_window_ewma_one_shuffle_no_python(spark, registry):
     plan = plan_text(registry["window_ewma"].fn(spark, SF_DIR))
     assert plan.count("Exchange hashpartitioning(user_id") == 1, \

@@ -63,7 +63,7 @@ def _norm(v):
         # Duck-side only: the driver fetches DuckDB DECIMAL via pandas
         # (-> float64), proven by `excel_scan` passing the r3 driver
         # hash with a DECIMAL oracle column. Spark-side Decimals never
-        # reach here — the main loop hard-fails any DecimalType in a
+        # reach here — `compare` hard-fails any DecimalType in a
         # Spark result schema (that class IS a driver hash-fail).
         v = float(v)
     if isinstance(v, float):
@@ -92,6 +92,43 @@ def _row_multiset(cols, rows):
     (mirrors the driver's column-name sort before hashing)."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return Counter(tuple(_norm(r[i]) for i in order) for r in rows)
+
+
+def compare(df, s_rows, rel=None, d_rows=()) -> list[str]:
+    """Every way one key fails the driver's gate, in the gate's order:
+    a DecimalType in the Spark schema or a HUGEINT oracle column (the
+    driver fetches both through pandas and hashes them as another type,
+    whatever the values), then the sorted column names, the row count
+    and the normalized value multiset. `df` is the key's frame and
+    `s_rows` its collected rows; `rel` is the DuckDB relation of its
+    oracle (`con.sql`; None for a key without one) and `d_rows` the
+    fetched rows. A cursor will not do: DuckDB 1.0 describes every
+    numeric column of one as NUMBER. Empty when the key passes."""
+    if "DecimalType" in str(df.schema):
+        return [f"Spark result contains DecimalType (driver hash-fail "
+                f"class) — cast the projection to DOUBLE/BIGINT/STRING: "
+                f"{df.schema.simpleString()}"]
+    if rel is None:
+        return []
+    huge = [c for c, t in zip(rel.columns, rel.types)
+            if "HUGEINT" in str(t).upper()]
+    if huge:
+        return [f"oracle column(s) {huge} are HUGEINT (driver pandas-fetch "
+                f"-> float64 hash-fail class) — CAST the aggregate to "
+                f"BIGINT in the oracle"]
+    s_cols, d_cols = df.columns, rel.columns
+    problems = []
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
+    if not problems:
+        sm, dm = _row_multiset(s_cols, s_rows), _row_multiset(d_cols, d_rows)
+        if sm != dm:
+            only_s = list((sm - dm).items())[:3]
+            only_d = list((dm - sm).items())[:3]
+            problems.append(f"values: spark-only={only_s} duck-only={only_d}")
+    return problems
 
 
 def main(keys: list[str]) -> int:
@@ -125,14 +162,6 @@ def main(keys: list[str]) -> int:
         t0 = time.perf_counter()
         try:
             df = qs[name](spark, SF_DIR)
-            s_cols = df.columns
-            if "DecimalType" in str(df.schema):
-                n_fail += 1
-                failures.append(name)
-                print(f"FAIL {name}: Spark result contains DecimalType "
-                      f"(driver hash-fail class) — cast the projection "
-                      f"to DOUBLE/BIGINT/STRING: {df.schema.simpleString()}")
-                continue
             s_rows = [tuple(r) for r in df.collect()]
         except Exception as exc:
             n_fail += 1
@@ -156,51 +185,25 @@ def main(keys: list[str]) -> int:
                       f"(missing={sorted(exp - got)[:3]} "
                       f"extra={sorted(got - exp)[:3]})")
                 continue
-        if name not in oracles:
-            n_rows_only += 1
-            print(f"ro   {name}: rows-only ({len(s_rows)} rows, "
-                  f"{time.perf_counter()-t0:.1f}s)")
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            d_cols = [d[0] for d in cur.description]
-            # HUGEINT guard (ADVICE r5): cursor.fetchall() yields Python
-            # int for HUGEINT, but the DRIVER fetches via pandas where
-            # HUGEINT -> float64 and the type-faithful hash fails (the
-            # variant_json r5 blind spot). Mirror the Spark-side
-            # DecimalType hard-fail: any HUGEINT oracle column is a
-            # gate failure here regardless of values — cast the oracle
-            # aggregate (e.g. sum(BIGINT)) to BIGINT.
-            huge = [d[0] for d in cur.description
-                    if "HUGEINT" in str(d[1]).upper()]
-            if huge:
+        rel, d_rows = None, ()
+        if name in oracles:
+            try:
+                rel = con.sql(oracles[name])
+                d_rows = rel.fetchall()
+            except Exception as exc:
                 n_fail += 1
                 failures.append(name)
-                print(f"FAIL {name}: oracle column(s) {huge} are HUGEINT "
-                      f"(driver pandas-fetch -> float64 hash-fail class) "
-                      f"— CAST the aggregate to BIGINT in the oracle")
+                print(f"FAIL {name}: duckdb raised {type(exc).__name__}: {exc}")
                 continue
-            d_rows = cur.fetchall()
-        except Exception as exc:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL {name}: duckdb raised {type(exc).__name__}: {exc}")
-            continue
-        problems = []
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
-        if not problems:
-            sm, dm = _row_multiset(s_cols, s_rows), _row_multiset(d_cols, d_rows)
-            if sm != dm:
-                only_s = list((sm - dm).items())[:3]
-                only_d = list((dm - sm).items())[:3]
-                problems.append(f"values: spark-only={only_s} duck-only={only_d}")
+        problems = compare(df, s_rows, rel, d_rows)
         if problems:
             n_fail += 1
             failures.append(name)
             print(f"FAIL {name}: " + "; ".join(problems))
+        elif rel is None:
+            n_rows_only += 1
+            print(f"ro   {name}: rows-only ({len(s_rows)} rows, "
+                  f"{time.perf_counter()-t0:.1f}s)")
         else:
             n_pass += 1
             print(f"ok   {name} ({len(s_rows)} rows, {time.perf_counter()-t0:.1f}s)")
